@@ -1,7 +1,7 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Driver-run benchmark: one JSON line with per-query seconds.
@@ -25,31 +25,8 @@ import org.apache.spark.sql.functions._
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      // text/parquet splits sized so a single big file still fans out
-      // across all cores (the corpus is few large .log files)
-      .config("spark.sql.files.maxPartitionBytes", s"${16 * 1024 * 1024}")
-      // One sorted spill file per map task instead of the bypass
-      // writer's R files per map task (guide §2.3 "shuffle fewer
-      // bytes"/file churn): CommitProbe measured the bypass writer at
-      // ~220 ms/map task for a 32-reduce control-plane shuffle (32
-      // file creates + concat per map) vs ~20 ms with the sort
-      // writer — a 10× task-time cut on every small-R shuffle. At
-      // production scale (R in the thousands) the bypass path never
-      // fires (R > 200), so this only changes the low-R regime where
-      // per-reduce payload is too small to amortise one file per
-      // reduce. Env-overridable for deployments whose low-R shuffles
-      // carry fat rows (the one case bypass wins).
-      .config("spark.shuffle.sort.bypassMergeThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_BYPASS_THRESHOLD", "1"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = GraftSession.cores
+    val spark = GraftSession.create(cpus)
 
     def time[A](f: => A): Double = {
       val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
@@ -134,6 +111,27 @@ object Bench {
     // log, not just in correctness gates
     val guards = GuardMetrics.register(spark)
     GuardMetrics.excludeEmptyRelationRule(spark)
+    // the headline of a run list: its fastest successful run, -1 if none
+    def best(rs: Seq[Double]): Double =
+      rs.filter(_ > 0).minOption.getOrElse(-1.0)
+    // one timed noop write, caches cleared after. A FAILED run records
+    // its time-to-failure NEGATED: the sign is the failure sentinel (a
+    // positive elapsed from a crashed run would masquerade as a
+    // legitimate fast run in `queries`/`runs` and poison the min), and
+    // the magnitude keeps the diagnostic
+    def timedRun(tag: String,
+                 fn: (SparkSession, String) => DataFrame): Double = {
+      val t0 = System.nanoTime()
+      val ok =
+        try { fn(spark, sfDir).write.mode("overwrite").format("noop").save()
+              true }
+        catch { case e: Throwable =>
+          System.err.println(s"[bench] $tag FAILED: ${e.getMessage}")
+          false }
+      val s = (System.nanoTime() - t0) / 1e9
+      spark.catalog.clearCache()
+      if (ok) s else -s
+    }
     val results = SparkEntry.queries.toSeq.sortBy(_._1)
         .filter { case (name, _) => wanted(name) }
         .map { case (name, fn) =>
@@ -165,26 +163,10 @@ object Bench {
       // (gram/signature/label tables) must not leak cache pressure
       // into the next measurement either
       val gc0 = gcMs()
-      // a FAILED run records its time-to-failure NEGATED: the sign is
-      // the failure sentinel (a positive elapsed from a crashed run
-      // would masquerade as a legitimate fast run in `queries`/`runs`
-      // and poison the min), and the magnitude keeps the diagnostic
-      val runs = Seq.fill(2) {
-        val t0 = System.nanoTime()
-        val ok =
-          try { fn(spark, sfDir).write.mode("overwrite").format("noop").save()
-                true }
-          catch { case e: Throwable =>
-            System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
-            false }
-        val s = (System.nanoTime() - t0) / 1e9
-        spark.catalog.clearCache()
-        if (ok) s else -s
-      }
+      val runs = Seq.fill(2)(timedRun(name, fn))
       rawRuns(name) = runs
       gcDeltas(name) = gcMs() - gc0
-      val valid = runs.filter(_ > 0)
-      val sec = if (valid.nonEmpty) valid.min else -1.0
+      val sec = best(runs)
       System.err.println(f"[bench] $name $sec%.1f s")
       val drained = guards.drain(settleMs = 50L)
       if (drained.nonEmpty) GuardMetrics.report("bench", name, drained)
@@ -224,50 +206,39 @@ object Bench {
       // query's gc_ms or the artifact misattributes GC pressure for
       // exactly the flagged queries
       val gcR0 = gcMs()
-      val t0 = System.nanoTime()
-      val ok =
-        try { fnByName(name)(spark, sfDir)
-                .write.mode("overwrite").format("noop").save()
-              true }
-        catch { case e: Throwable =>
-          System.err.println(s"[bench] retry $name FAILED: ${e.getMessage}")
-          false }
-      val sec = (System.nanoTime() - t0) / 1e9
-      spark.catalog.clearCache()
-      // failed retries record negative (see the main loop) so they can
+      // failed retries record negative (see timedRun) so they can
       // never become the headline min
-      rawRuns(name) = rawRuns(name) :+ (if (ok) sec else -sec)
+      val run = timedRun(s"retry $name", fnByName(name))
+      rawRuns(name) = rawRuns(name) :+ run
       gcDeltas(name) = gcDeltas.getOrElse(name, 0L) + (gcMs() - gcR0)
-      System.err.println(f"[bench] retry $name $sec%.1f s")
+      System.err.println(f"[bench] retry $name ${math.abs(run)}%.1f s")
       val drained = guards.drain(settleMs = 50L)
       if (drained.nonEmpty) GuardMetrics.report("bench", s"retry_$name", drained)
     }
     spark.sparkContext.setJobDescription(null)
     val finalResults = results.map { case (n, v) =>
-      val valid = rawRuns.get(n).map(_.filter(_ > 0)).getOrElse(Nil)
-      n -> (if (valid.nonEmpty) valid.min else v) }
+      n -> rawRuns.get(n).map(best).getOrElse(v) }
     val spreads = flagged.map { n =>
       val best2 = rawRuns(n).filter(_ > 0).sorted.take(2)
       n -> (if (best2.size == 2 && best2.head > 0) best2(1) / best2.head
             else -1.0)
     }
 
-    val qs = finalResults.map { case (k, v) => "\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
+    def jobj(kv: Iterable[(String, Any)]): String =
+      kv.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
+    val qs = jobj(finalResults)
     val unstableJson = flagged.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val spreadJson = spreads.map { case (k, v) => "\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
-    val runsJson = rawRuns.map { case (k, rs) =>
-      "\"" + k + "\":[" + rs.mkString(",") + "]" }.mkString("{", ",", "}")
-    val gcJson = gcDeltas.map { case (k, ms) => "\"" + k + "\":" + ms }
-      .mkString("{", ",", "}")
+    val spreadJson = jobj(spreads)
+    val runsJson = jobj(rawRuns.map { case (k, rs) =>
+      k -> rs.mkString("[", ",", "]") })
+    val gcJson = jobj(gcDeltas)
     val total = finalResults.map(_._2).sum
     val msPerLine =
       if (nLines > 0) parseSec * 1000.0 / nLines else -1.0
     // the contract's cpus is the parallelism the bench actually ran at
-    // (local[$SPARK_GRAFT_CPUS]) — availableProcessors() reports the
-    // host's core count, which made the round-16 c8 artifact claim
-    // "cpus":32 and poisoned the driver's scaling comparison
+    // (local[cpus], validated as a positive integer by GraftSession) —
+    // not the host's core count, which made the round-16 c8 artifact
+    // claim "cpus":32 and poisoned the driver's scaling comparison
     val loadEnd = loadAvg()
     val json =
       s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,""" +

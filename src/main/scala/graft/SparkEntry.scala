@@ -4398,22 +4398,22 @@ object SparkEntry {
       // the LIVE member arrays are the PRE arrays minus the tombstoned
       // ids (a takedown only removes rows; centroids pass through
       // unchanged — readIvfIndexLive's contract), so reuse the already
-      // persisted pre arrays with a higher-order filter instead of
-      // paying a second O(corpus) cellMembers groupBy (guide §2.4).
+      // persisted pre arrays instead of re-reading the index through a
+      // second cellMembers (guide §2.4): they explode, anti-join the
+      // ledger frame (broadcast — the bounded takedown set, the same
+      // rows readIvfIndexLive broadcasts for its anti-join; no driver
+      // collect, no per-id plan literals) and regroup by cell.
       // Value-identical: the stream's per-cell fold is array_max over
       // (sim, −id) structs — member ORDER is irrelevant — and a cell
-      // whose members all died is dropped, matching the groupBy-after-
-      // anti-join shape (an absent cell and an empty array both fold
-      // to null → admit). The ledger is the bounded takedown set (the
-      // same rows readIvfIndexLive broadcasts for its anti-join).
-      val tombIds = operators.Similarity.readIvfTombstones(s, "q144_idx")
-        .collect().map(_.getLong(0)).sorted
-      def tombstoned(id: Column): Column =
-        if (tombIds.isEmpty) lit(false) else id.isin(tombIds: _*)
-      val members1 = members0.select(col("cell"),
-          filter(col("members"),
-            m => !tombstoned(m.getField("neighbor_id"))).as("members"))
-        .filter(size(col("members")) > 0)
+      // whose members all died yields no row, matching the groupBy-
+      // after-anti-join shape (an absent cell folds to null → admit).
+      val tombs = operators.Similarity.readIvfTombstones(s, "q144_idx")
+      val members1 = members0
+        .select(col("cell"), explode(col("members")).as("m"))
+        .join(broadcast(tombs),
+          col("m.neighbor_id") === tombs("neighbor_id"), "left_anti")
+        .groupBy(col("cell"))
+        .agg(collect_list(col("m")).as("members"))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       members1.count()
       members0.unpersist()

@@ -93,9 +93,10 @@ object CanDecode {
     * whole-stage codegen), and the first fix candidate (materialize
     * the CASE once in a prep Project behind an extra barrier)
     * measured 2.3x SLOWER than even the broken path, because the
-    * extra pipeline stage re-materializes every row (Mab20Sweep over
-    * 2 M lines: 5.13 s prep-stage vs 2.26 s broken vs this shape) —
-    * per-branch specialization is codegen-clean AND stage-free. */
+    * extra pipeline stage re-materializes every row (2 M lines:
+    * 5.13 s prep-stage vs 2.26 s broken vs this shape,
+    * BENCH_NOTES_r15.md) — per-branch specialization is
+    * codegen-clean AND stage-free. */
   private def effectiveForTopic(topicId: Int,
                                 mab20Workaround: Boolean): (Column, Column) = {
     val p0 = col("payload_hex")

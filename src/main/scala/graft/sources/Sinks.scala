@@ -165,10 +165,10 @@ object Sinks {
     * jobs at once inside one application — actions are only sequential
     * because caller code invokes them sequentially, so each unit's
     * driver-side latency (job submit, commit protocol, catalog DDL)
-    * overlaps the others' instead of adding up. CommitProbe measured
-    * 4 concurrent 1-row managed-table writes at the wall cost of ONE
-    * (~165 ms vs ~150 ms each sequential). ONLY for units with no
-    * ordering between them — an index's data tables, never the
+    * overlaps the others' instead of adding up. 4 concurrent 1-row
+    * managed-table writes measured at the wall cost of ONE (~165 ms
+    * vs ~150 ms each sequential; OPTIMIZATION_r16.md). ONLY for units
+    * with no ordering between them — an index's data tables, never the
     * epoch-stamp/meta-commit steps, whose write-order IS the crash
     * discipline. Exceptions propagate (first failure rethrown);
     * callers must treat any throw as "the whole write failed", which
@@ -340,7 +340,15 @@ object Sinks {
     *     commit leaves the old generation serving (the takedown call
     *     FAILED and re-runs); a generation that loses its epoch token
     *     (torn same-name rebuild) makes [[readLedger]] refuse
-    *     loudly instead of serving a mixed or empty set. */
+    *     loudly instead of serving a mixed or empty set.
+    *
+    * ONE FILE per generation (`coalesce(1)`, no extra shuffle): a
+    * ledger is a bounded takedown set in every serving path and each
+    * lifecycle reopen re-lists its files, so one file beats one per
+    * shuffle partition (guide §6, output file sizing); the price is a
+    * single-task distinct. A ledger past control-plane size would need
+    * a partitioned or bucketed generation table written by many tasks,
+    * and readers that no longer broadcast it whole. */
   def appendLedger(spark: org.apache.spark.sql.SparkSession,
                    ledger: String, incoming: DataFrame): Unit = {
     val live = readLedger(spark, ledger)
@@ -348,22 +356,8 @@ object Sinks {
       case Some("a") => "b"
       case _ => "a"
     }
-    // coalesce the merged generation to few partitions BEFORE the
-    // write (guide §2.4 — removing the fan-out beats making it
-    // cheaper, §6 — output file sizing): the distinct otherwise
-    // leaves one shuffle-partition-count write (32 tasks, 32 files)
-    // for a frame that is a bounded takedown set in every serving
-    // path, and every later ledger READ (each lifecycle reopen)
-    // re-lists and re-opens those files. coalesce folds the final
-    // distinct stage to N tasks without an extra shuffle; the default
-    // 1 is right for control-plane-sized ledgers and conf-overridable
-    // for deployments whose ledgers genuinely outgrow one task
-    // (spark.graft.sinks.ledgerWritePartitions).
-    val ledgerParts = spark.conf
-      .getOption("spark.graft.sinks.ledgerWritePartitions")
-      .map(_.toInt).getOrElse(1)
     val merged = live.map(_._2.unionByName(incoming)).getOrElse(incoming)
-      .distinct().coalesce(ledgerParts)
+      .distinct().coalesce(1)
     writeTable(merged, s"${ledger}_$nextGen")
     val epoch = stampEpoch(spark, Seq(s"${ledger}_$nextGen"))
     writeTable(spark.createDataFrame(
@@ -420,9 +414,9 @@ object Sinks {
     * index's 1-row meta table plus, when present, its sibling takedown
     * ledger's 1-row meta — a union job with two parallel 1-file scan
     * tasks instead of two sequential collect jobs. Each collect is
-    * ~100 ms of fixed driver floor (CommitProbe), and every composed
-    * lifecycle gate reopens its index 3-6 times, so the halved job
-    * count is real wall time (optimization-guide §5: the driver should
+    * ~100 ms of fixed driver floor (OPTIMIZATION_r16.md), and every
+    * composed lifecycle gate reopens its index 3-6 times, so the
+    * halved job count is real wall time (optimization-guide §5: the driver should
     * do almost no data work — including queueing sequential 1-row
     * jobs). Values ride as strings (every meta column here is a
     * string; numeric meta columns round-trip losslessly through
