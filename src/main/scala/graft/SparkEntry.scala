@@ -2905,7 +2905,7 @@ object SparkEntry {
       // gate hygiene: the ledger survives re-runs (the index tables
       // rewrite below but appendLedger accumulates) — reset so the
       // PRE pass always sees a clean slate
-      sources.Sinks.clearLedger(s, "q156_idx_tombstones")
+      sources.Generations.clearLedger(s, "q156_idx_tombstones")
       operators.Similarity.writeIvfIndexBucketed(
         operators.Similarity.buildIvf(emb, "doc_id", "embedding",
           nCells = 2, lloydIters = 1), "q156_idx", numBuckets = 2)
@@ -2988,7 +2988,7 @@ object SparkEntry {
         .select(($"vec_id" + 10000L).as("vec_id"), $"embedding")
       // gate hygiene: the ledger survives re-runs — reset so the PRE
       // pass always sees a clean slate
-      sources.Sinks.clearLedger(s, "q157_idx_tombstones")
+      sources.Generations.clearLedger(s, "q157_idx_tombstones")
       operators.Similarity.writeLshIndexBucketed(
         operators.Similarity.buildLsh(full, "vec_id", "embedding",
           planes = 10), "q157_idx", numBuckets = 2)
@@ -3069,7 +3069,7 @@ object SparkEntry {
       val batch = corpus.filter($"vec_id" < 10)
       val queries = corpus.filter($"vec_id" < 10)
         .select(($"vec_id" + 10000L).as("vec_id"), $"embedding")
-      sources.Sinks.clearLedger(s, "q162_idx_tombstones")
+      sources.Generations.clearLedger(s, "q162_idx_tombstones")
       operators.Similarity.writeLshIndexBucketed(
         operators.Similarity.buildLsh(base, "vec_id", "embedding",
           planes = 10), "q162_idx", numBuckets = 2)
@@ -3121,8 +3121,8 @@ object SparkEntry {
       val docs = t(s, d, "documents").select($"doc_id", $"text")
         .filter(length(trim($"text")) > 0 && $"doc_id" < 150)
       val accepted = docs.filter($"doc_id" % 2 === 0)
-      sources.Sinks.clearLedger(s, "q158_ng_tombstones")
-      sources.Sinks.clearLedger(s, "q158_idx_tombstones")
+      sources.Generations.clearLedger(s, "q158_ng_tombstones")
+      sources.Generations.clearLedger(s, "q158_idx_tombstones")
       val emb = operators.TextAnalysis.hashEmbed(accepted, "text",
           dim = 64)
         .select($"doc_id", $"embedding")
@@ -3469,9 +3469,9 @@ object SparkEntry {
       val docs = t(s, d, "documents").select($"doc_id", $"text")
         .filter(length(trim($"text")) > 0 && $"doc_id" < 150)
       val accepted = docs.filter($"doc_id" % 2 === 0)
-      sources.Sinks.clearLedger(s, "q166_xidx_tombstones")
-      sources.Sinks.clearLedger(s, "q166_ng_tombstones")
-      sources.Sinks.clearLedger(s, "q166_idx_tombstones")
+      sources.Generations.clearLedger(s, "q166_xidx_tombstones")
+      sources.Generations.clearLedger(s, "q166_ng_tombstones")
+      sources.Generations.clearLedger(s, "q166_idx_tombstones")
       val idxRoot = java.nio.file.Files.createTempDirectory("q166_xidx")
       idxRoot.toFile.deleteOnExit()
       val emb = operators.TextAnalysis.hashEmbed(accepted, "text",
@@ -3596,8 +3596,8 @@ object SparkEntry {
           (i, enc((x, y) => vRef(i, x, y, 0), "png"))))
         .toDF("media_id", "payload")
       val refPrep = prep(refs)
-      sources.Sinks.clearLedger(s, "q167_ham_tombstones")
-      sources.Sinks.clearLedger(s, "q167_ivf_tombstones")
+      sources.Generations.clearLedger(s, "q167_ham_tombstones")
+      sources.Generations.clearLedger(s, "q167_ivf_tombstones")
       // independent faces: build concurrently (guide §2.6)
       sources.Sinks.inParallel(
         () => operators.Dedup.writeHammingMembers(s,
@@ -3704,8 +3704,8 @@ object SparkEntry {
           (i, enc((x, y) => vRef(i, x, y, 0), "png"))))
         .toDF("media_id", "payload")
       val refPrep = prep(refs)
-      sources.Sinks.clearLedger(s, "q168_band_tombstones")
-      sources.Sinks.clearLedger(s, "q168_ivf_tombstones")
+      sources.Generations.clearLedger(s, "q168_band_tombstones")
+      sources.Generations.clearLedger(s, "q168_ivf_tombstones")
       // independent faces: build concurrently (guide §2.6)
       sources.Sinks.inParallel(
         () => operators.Dedup.writeHammingBandIndexRooted(s, "q168_band",
@@ -3786,7 +3786,7 @@ object SparkEntry {
       val docs = t(s, d, "documents")
       val benchA = benchSliceFixture(docs)
       val benchB = benchSliceFixtureB(docs)
-      sources.Sinks.clearLedger(s, "q169_widx_tombstones")
+      sources.Generations.clearLedger(s, "q169_widx_tombstones")
       operators.TextAnalysis.writeWinnowIndexRooted(s, "q169_widx",
         benchA, "doc_id", "text", k = 4, w = 4, hashName = "md5",
         numBuckets = 4)
@@ -3829,7 +3829,7 @@ object SparkEntry {
         .select($"doc_id", $"text")
       val benchA = benchSliceFixture(docs)
       val benchB = benchSliceFixtureB(docs)
-      sources.Sinks.clearLedger(s, "q170_widx_tombstones")
+      sources.Generations.clearLedger(s, "q170_widx_tombstones")
       operators.TextAnalysis.writeWinnowIndexRooted(s, "q170_widx",
         benchA, "doc_id", "text", k = 4, w = 4, hashName = "md5",
         numBuckets = 4)
@@ -3880,10 +3880,10 @@ object SparkEntry {
       val docs = t(s, d, "documents").select($"doc_id", $"text")
         .filter(length(trim($"text")) > 0 && $"doc_id" < 150)
       val accepted = docs.filter($"doc_id" % 2 === 0)
-      sources.Sinks.clearLedger(s, "q171_xidx_tombstones")
-      sources.Sinks.clearLedger(s, "q171_ng_tombstones")
-      sources.Sinks.clearLedger(s, "q171_idx_tombstones")
-      sources.Sinks.clearLedger(s, "q171_widx_tombstones")
+      sources.Generations.clearLedger(s, "q171_xidx_tombstones")
+      sources.Generations.clearLedger(s, "q171_ng_tombstones")
+      sources.Generations.clearLedger(s, "q171_idx_tombstones")
+      sources.Generations.clearLedger(s, "q171_widx_tombstones")
       val idxRoot = java.nio.file.Files.createTempDirectory("q171_xidx")
       idxRoot.toFile.deleteOnExit()
       val emb = operators.TextAnalysis.hashEmbed(accepted, "text",

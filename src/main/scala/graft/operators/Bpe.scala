@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.sources.Generations
 
 /** Byte-pair-encoding vocabulary induction and application (Sennrich,
   * Haddow, Birch 2016, "Neural machine translation of rare words with
@@ -320,112 +321,56 @@ object Bpe {
   /** Persist a fitted vocabulary durably, so tokenizer training state
     * outlives the driver JVM (every other build-once artifact already
     * does — the reference's analogue is the can_ids schema registry
-    * persisted as JSON, lib/canparser.py:36-50). Crash-consistency is
-    * the [[Dedup.writeExactIndexBucketed]] epoch-token discipline:
+    * persisted as JSON, lib/canparser.py:36-50) — a directory-backed
+    * generation ([[graft.sources.Generations.writeExternal]] +
+    * [[graft.sources.Generations.commitManifest]]) under `dir`:
     *
-    *   - `dir/word_pieces` — the symbolized word table's parquet,
-    *     registered as EXTERNAL table `table` bucketed+sorted on `w`
-    *     (the [[tokenCount]] join key: a reopened vocab joins
-    *     co-located, no index-side shuffle), then a fresh
-    *     `_graft_epoch_<uuid>` token lands inside it;
+    *   - `dir/word_pieces` — the symbolized word table, EXTERNAL table
+    *     `table` bucketed+sorted on `w` (the [[tokenCount]] join key:
+    *     a reopened vocab joins co-located, no index-side shuffle);
     *   - `dir/meta` — the ORDERED merge list as parquet plus a
-    *     MANIFEST (numBuckets, merge count, epoch) — staged into
-    *     `meta.tmp` and atomically RENAMED into place.
+    *     MANIFEST (numBuckets, merge count, epoch).
     *
-    * A crash anywhere leaves either the old consistent state or a
-    * manifest whose epoch token the table lacks; [[readBpeVocab]]
-    * refuses both rather than pairing word pieces with a different
-    * generation's merge list (token counts would silently mix
-    * vocabularies). Rebuilds should go to a fresh dir + table name —
-    * overwriting three artifacts in place is not atomic. */
+    * [[readBpeVocab]] refuses every torn state rather than pairing
+    * word pieces with a different generation's merge list (token
+    * counts would silently mix vocabularies). Rebuilds go to a fresh
+    * dir + table name ([[writeBpeVocabRooted]]). */
   def writeBpeVocab(vocab: BpeVocab, table: String, dir: String,
                     numBuckets: Int = 64): Unit = {
     val spark = vocab.wordPieces.sparkSession
     import spark.implicits._
-    val root = new org.apache.hadoop.fs.Path(dir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.mkdirs(root)
-    // 1. the word-pieces table, external + bucketed on the join key
-    vocab.wordPieces
-      .select(col("w"), col("n"), col("s"), col("n_pieces"))
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .option("path", s"$dir/word_pieces")
-      .bucketBy(numBuckets, "w").sortBy("w")
-      .format("parquet")
-      .saveAsTable(table)
-    // 2. the epoch token, after the table committed
-    val epoch = java.util.UUID.randomUUID().toString
-    fs.create(new org.apache.hadoop.fs.Path(
-      s"$dir/word_pieces", s"_graft_epoch_$epoch"), true).close()
-    // 3. merges + manifest, staged then atomically renamed
-    val meta = new org.apache.hadoop.fs.Path(root, "meta")
-    val tmp = new org.apache.hadoop.fs.Path(root, "meta.tmp")
-    if (fs.exists(tmp)) fs.delete(tmp, true)
-    vocab.merges.zipWithIndex
-      .map { case ((a, b), i) => (i, a, b) }
-      .toDF("ord", "a", "b")
-      .coalesce(1)
-      .write.parquet(s"$dir/meta.tmp/merges")
-    val os = fs.create(new org.apache.hadoop.fs.Path(tmp, "MANIFEST"), true)
-    try os.write(s"$numBuckets ${vocab.merges.size} $epoch".getBytes("UTF-8"))
-    finally os.close()
-    if (fs.exists(meta)) fs.delete(meta, true)
-    require(fs.rename(tmp, meta), s"rename $tmp -> $meta failed")
+    val epoch = Generations.writeExternal(
+      vocab.wordPieces.select(col("w"), col("n"), col("s"), col("n_pieces")),
+      table, s"$dir/word_pieces", "w", numBuckets)
+    Generations.commitManifest(spark, dir, "meta",
+      Seq(numBuckets, vocab.merges.size), epoch) { tmp =>
+      vocab.merges.zipWithIndex
+        .map { case ((a, b), i) => (i, a, b) }
+        .toDF("ord", "a", "b")
+        .coalesce(1)
+        .write.parquet(s"$tmp/merges")
+    }
   }
 
   /** Reopen a vocabulary written by [[writeBpeVocab]]. Works in a
-    * fresh session: a catalog that forgot `table` gets it
-    * re-registered EXTERNAL over `dir/word_pieces` with the manifest's
-    * bucket spec; an EXISTING entry must point at this dir with this
-    * bucket count (the cross-epoch mixup guard). Refuses loudly on
-    * every torn state: missing/short manifest, merge-count mismatch,
-    * or a manifest epoch whose token is absent from the table dir. */
+    * fresh session ([[graft.sources.Generations.attachExternal]]).
+    * Refuses loudly on every torn state: missing/short manifest,
+    * merge-count mismatch, or a manifest epoch whose token is absent
+    * from the table dir. */
   def readBpeVocab(spark: org.apache.spark.sql.SparkSession, table: String,
                    dir: String): BpeVocab = {
-    val metaDir = new org.apache.hadoop.fs.Path(s"$dir/meta")
-    val fs = metaDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val manifest = new org.apache.hadoop.fs.Path(metaDir, "MANIFEST")
-    require(fs.exists(manifest),
-      s"no MANIFEST under $metaDir — torn or missing vocab write " +
-        "(meta commits by atomic rename; re-run writeBpeVocab)")
-    val in = fs.open(manifest)
-    val bos = new java.io.ByteArrayOutputStream()
-    try org.apache.hadoop.io.IOUtils.copyBytes(in, bos, 65536, false)
-    finally in.close()
-    val parts = new String(bos.toByteArray, "UTF-8").trim.split("\\s+")
-    require(parts.length == 3 && parts.take(2).forall(_.forall(_.isDigit)),
-      s"torn MANIFEST under $metaDir (${parts.length} tokens, expected 3: " +
-        "numBuckets numMerges epoch) — re-run writeBpeVocab")
-    val Array(buckets, nMerges, epoch) = parts
-    require(fs.exists(new org.apache.hadoop.fs.Path(
-        s"$dir/word_pieces", s"_graft_epoch_$epoch")),
-      s"epoch token _graft_epoch_$epoch missing from $dir/word_pieces — " +
-        "the merge list and the word-pieces table are from different " +
-        "write attempts (torn rewrite); re-run writeBpeVocab")
+    val Seq(buckets, nMerges) = Generations.readManifest(spark,
+      s"$dir/meta", Seq("numBuckets", "numMerges"), s"$dir/word_pieces",
+      "writeBpeVocab")
     val mergeRows = spark.read.parquet(s"$dir/meta/merges")
       .orderBy(col("ord")).collect()
     require(mergeRows.length == nMerges.toInt,
       s"merge table holds ${mergeRows.length} rows, manifest says " +
         s"$nMerges — torn meta write; re-run writeBpeVocab")
     val merges = mergeRows.toSeq.map(r => (r.getString(1), r.getString(2)))
-    if (!spark.catalog.tableExists(table))
-      spark.sql(s"CREATE TABLE $table " +
-        "(w STRING, n BIGINT, s ARRAY<STRING>, n_pieces INT) " +
-        s"USING parquet CLUSTERED BY (w) SORTED BY (w) " +
-        s"INTO ${buckets.toInt} BUCKETS LOCATION '$dir/word_pieces'")
-    else {
-      val meta = spark.sessionState.catalog.getTableMetadata(
-        org.apache.spark.sql.catalyst.TableIdentifier(table))
-      val want = new org.apache.hadoop.fs.Path(s"$dir/word_pieces")
-        .makeQualified(fs.getUri, fs.getWorkingDirectory).toUri.getPath
-      val got = new org.apache.hadoop.fs.Path(meta.location).toUri.getPath
-      require(got == want,
-        s"catalog table '$table' points at $got, not $want — drop it or " +
-          "use a per-generation table name alongside per-generation dirs")
-      require(meta.bucketSpec.exists(_.numBuckets == buckets.toInt),
-        s"catalog table '$table' bucket spec ${meta.bucketSpec} does not " +
-          s"match the manifest's $buckets buckets")
-    }
+    Generations.attachExternal(spark, table,
+      "w STRING, n BIGINT, s ARRAY<STRING>, n_pieces INT", "w",
+      buckets.toInt, s"$dir/word_pieces")
     BpeVocab(merges, spark.table(table))
   }
 
@@ -435,53 +380,40 @@ object Bpe {
     * `${prefix}_wp_<a|b>` tables over `$dir/gen_<a|b>` directories
     * (each written through [[writeBpeVocab]]'s own epoch+manifest
     * discipline), and the one-row `${prefix}_meta` (gen, table_name,
-    * dir) written LAST is the meta-LAST pointer flip. Crash
-    * semantics, stated precisely: the meta rewrite is an Overwrite
-    * saveAsTable (drop + rewrite), so a crash BEFORE it starts leaves
-    * the old generation serving, a crash MID-rewrite leaves no
-    * resolvable meta — readers fail with a loud missing-table error
-    * (recovery: re-run the write; both generations' artifacts are
-    * intact on disk), and in no interleaving do readers see a MIXED
-    * generation. The superseded generation's table and directory drop
-    * after the flip, best-effort. */
+    * dir) is the pointer flip ([[graft.sources.Generations]]). */
   def writeBpeVocabRooted(spark: org.apache.spark.sql.SparkSession,
                           prefix: String, dir: String, vocab: BpeVocab,
-                          numBuckets: Int = 64): Unit = {
-    import spark.implicits._
-    val metaTable = s"${prefix}_meta"
-    val cur: Option[String] =
-      if (!spark.catalog.tableExists(metaTable)) None
-      else Some(spark.table(metaTable).collect()(0).getAs[String]("gen"))
-    val next = if (cur.contains("a")) "b" else "a"
-    val genTable = s"${prefix}_wp_$next"
-    val genDir = s"$dir/gen_$next"
+                          numBuckets: Int = 64): Unit =
+    writeBpeGen(spark, prefix, dir, Generations.liveGen(spark, prefix),
+      vocab, numBuckets)
+
+  private def writeBpeGen(spark: org.apache.spark.sql.SparkSession,
+                          prefix: String, dir: String, cur: Option[String],
+                          vocab: BpeVocab,
+                          numBuckets: Int): Map[String, String] = {
+    val next = Generations.nextGen(cur)
+    val (genTable, genDir) = (s"${prefix}_wp_$next", s"$dir/gen_$next")
     // clear any debris of a prior crashed write to this generation —
     // the live generation is the OTHER slot, never touched here
-    val fs = new org.apache.hadoop.fs.Path(genDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val gp = new org.apache.hadoop.fs.Path(genDir)
-    if (fs.exists(gp)) fs.delete(gp, true)
-    spark.sql(s"DROP TABLE IF EXISTS $genTable")
+    Generations.drop(spark, Seq(genTable), Seq(genDir))
     writeBpeVocab(vocab, genTable, genDir, numBuckets)
-    graft.sources.Sinks.writeTable(
-      Seq((next, genTable, genDir)).toDF("gen", "table_name", "dir"),
-      metaTable)
-    cur.filter(_ != next).foreach { old =>
-      spark.sql(s"DROP TABLE IF EXISTS ${prefix}_wp_$old")
-      val op = new org.apache.hadoop.fs.Path(s"$dir/gen_$old")
-      if (fs.exists(op)) fs.delete(op, true)
-    }
+    val meta = Generations.commit(spark, prefix, Nil,
+      cur.map(g => s"${prefix}_wp_$g").toSeq)(_ =>
+      Seq("gen" -> next, "table_name" -> genTable, "dir" -> genDir))
+    Generations.drop(spark, Nil, cur.map(g => s"$dir/gen_$g").toSeq)
+    meta
   }
+
+  private def bpeFrom(spark: org.apache.spark.sql.SparkSession,
+                      live: Generations.Live): BpeVocab =
+    readBpeVocab(spark, live("table_name"), live("dir"))
 
   /** Reopen the live generation of a [[writeBpeVocabRooted]] vocab —
     * resolves the meta pointer, then rides [[readBpeVocab]]'s torn-
     * state refusals unchanged. */
   def readBpeVocabRooted(spark: org.apache.spark.sql.SparkSession,
-                         prefix: String): BpeVocab = {
-    val m = spark.table(s"${prefix}_meta").collect()(0)
-    readBpeVocab(spark, m.getAs[String]("table_name"),
-      m.getAs[String]("dir"))
-  }
+                         prefix: String): BpeVocab =
+    bpeFrom(spark, Generations.open(spark, prefix, _ => Nil, ledger = false))
 
   /** ONE-CALL maintenance window for a durable BPE vocabulary — the
     * tokenizer face of [[graft.operators.TextAnalysis.maintainTrigramLm]]:
@@ -495,47 +427,33 @@ object Bpe {
     * these misses); fire iff oov_words > maxOovRate × n_words; the
     * refit is [[fitBatched]] over the caller-supplied live `corpus`,
     * swapped in atomically via [[writeBpeVocabRooted]]; the re-probe
-    * pins recovery. A quiet window is a no-op by construction — no
-    * generation write, meta untouched bit-for-bit, post ≡ pre without
-    * a second probe. Returns one bounded INTEGER report row
+    * pins recovery. Returns one bounded INTEGER report row
     * (`n_sample_words`, `pre_oov_words`, `refit_fired`,
-    * `post_oov_words`, `gen_changed`). */
+    * `post_oov_words`, `gen_changed`). Window rules:
+    * [[graft.sources.Generations.window]]. */
   def maintainBpeVocab(spark: org.apache.spark.sql.SparkSession,
                        prefix: String, dir: String, sample: DataFrame,
                        textCol: String, corpus: DataFrame,
                        maxOovRate: Double, numMerges: Int,
                        numBuckets: Int = 64): DataFrame = {
     import spark.implicits._
-    def metaRow() = spark.table(s"${prefix}_meta").collect()(0)
-    // meta-row reuse per probe + quiet-path skip of the closing meta
-    // re-read (single-writer window) — was 4 sequential 1-row collects
-    // per quiet tick (optimization-guide §5)
-    def probe(m: org.apache.spark.sql.Row): (Long, Long) = {
-      val vocab = readBpeVocab(spark, m.getAs[String]("table_name"),
-        m.getAs[String]("dir"))
+    def probe(live: Generations.Live): (Long, Long) = {
       val words = sample
         .select(explode(split(lower(trim(col(textCol))), "\\s+")).as("w"))
         .filter(col("w") =!= "")
-      val r = words.join(broadcast(vocab.wordPieces
+      val r = words.join(broadcast(bpeFrom(spark, live).wordPieces
           .select(col("w"), lit(true).as("__in"))), Seq("w"), "left")
         .agg(count(lit(1)).as("n"),
           sum(when(col("__in").isNull, 1L).otherwise(0L)).as("oov"))
         .collect()(0)
       (r.getLong(0), r.getLong(1))
     }
-    val m0 = metaRow()
-    val genBefore = m0.getAs[String]("gen")
-    val (n, preOov) = probe(m0)
-    val fired = n > 0 && preOov.toDouble > maxOovRate * n
-    if (fired)
-      writeBpeVocabRooted(spark, prefix, dir,
-        fitBatched(corpus, textCol, numMerges), numBuckets)
-    val (postOov, genAfter) =
-      if (fired) {
-        val m2 = metaRow()
-        (probe(m2)._2, m2.getAs[String]("gen"))
-      } else (preOov, genBefore)
-    Seq((n, preOov, fired, postOov, genAfter != genBefore))
+    val w = Generations.window(
+        Generations.open(spark, prefix, _ => Nil, ledger = false))(probe)(
+        p => p._1 > 0 && p._2.toDouble > maxOovRate * p._1)((live, _) =>
+      writeBpeGen(spark, prefix, dir, Some(live("gen")),
+        fitBatched(corpus, textCol, numMerges), numBuckets))
+    Seq((w.pre._1, w.pre._2, w.fired, w.post._2, w.changed))
       .toDF("n_sample_words", "pre_oov_words", "refit_fired",
         "post_oov_words", "gen_changed")
   }

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.sources.{Generations, Sinks}
 
 /** Corpus-curation operators beyond per-document analysis: sequence
   * packing, PII redaction, stratified sampling, intra-document
@@ -1276,11 +1277,6 @@ object Curation {
   // algebra) and remediation one call.
   // ──────────────────────────────────────────────────────────────────
 
-  private def lrGenTables(p: String): Seq[String] =
-    Seq(s"${p}_w", s"${p}_known")
-  private def dsirGenTables(p: String): Seq[String] =
-    Seq(s"${p}_w", s"${p}_known")
-
   /** The fit-time feature-space coverage of a corpus: the DISTINCT
     * hashed feature buckets its texts touch under the shared
     * [[featsCol]] unigram+bigram space. ≤ `buckets` rows by
@@ -1312,65 +1308,96 @@ object Curation {
     (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
   }
 
+  /** A fitted artifact's generation tables `${prefix}_<a|b>_w` (its
+    * weights) and `${prefix}_<a|b>_known` (the fit-time feature
+    * coverage — the staleness probe's ground truth). */
+  private def fittedTables(prefix: String)(gen: String): Seq[String] =
+    Seq(s"${prefix}_${gen}_w", s"${prefix}_${gen}_known")
+
+  private def openFitted(spark: org.apache.spark.sql.SparkSession,
+                         prefix: String): Generations.Live =
+    Generations.open(spark, prefix, m => fittedTables(prefix)(m("gen")),
+      ledger = false)
+
+  private def writeFittedGen(spark: org.apache.spark.sql.SparkSession,
+                             prefix: String, cur: Option[String],
+                             weights: DataFrame, known: DataFrame)(
+      row: (String, String) => Seq[(String, Any)]): Map[String, String] =
+    Generations.rebuild(spark, prefix, cur, fittedTables(prefix)) { g =>
+      Sinks.writeTable(weights, s"${prefix}_${g}_w")
+      Sinks.writeTable(known, s"${prefix}_${g}_known")
+    }(row)
+
+  /** A fitted artifact's dense bucket table from its `_w` generation
+    * (a bounded `buckets`-row collect — the same driver-side bound
+    * [[fitDsir]] and [[fitQualityLr]] already accept, because the
+    * model IS a plan literal downstream). */
+  private def fittedTable(spark: org.apache.spark.sql.SparkSession,
+                          prefix: String, live: Generations.Live,
+                          valueCol: String): Array[Double] = {
+    val table = Array.fill(live("buckets").toInt)(0.0)
+    spark.table(s"${prefix}_${live("gen")}_w").collect().foreach { r =>
+      table(r.getAs[Long]("bucket").toInt) = r.getAs[Double](valueCol)
+    }
+    table
+  }
+
+  /** The window both artifacts share: probe the occurrence-weighted
+    * blind-feature rate of `sample` against the live generation's
+    * coverage, fire iff blind > maxBlindRate × n, `refit` into the
+    * other slot, re-probe. One bounded row of integer counts. Window
+    * rules: [[graft.sources.Generations.window]]. */
+  private def blindWindow(spark: org.apache.spark.sql.SparkSession,
+                          prefix: String, sample: DataFrame,
+                          textCol: String, maxBlindRate: Double,
+                          hashFn: Column => Column)(
+      refit: Generations.Live => Map[String, String]): DataFrame = {
+    import spark.implicits._
+    val w = Generations.window(openFitted(spark, prefix))(live =>
+        blindProbe(spark, s"${prefix}_${live("gen")}", sample, textCol,
+          live("buckets").toInt, hashFn))(p =>
+        p._1 > 0 && p._2.toDouble > maxBlindRate * p._1)((live, _) =>
+      refit(live))
+    Seq((w.pre._1, w.pre._2, w.fired, w.post._2, w.changed))
+      .toDF("n_sample_feats", "pre_blind_feats", "refit_fired",
+        "post_blind_feats", "epoch_changed")
+  }
+
   /** Pointer-rooted durable face of a fitted [[LrModel]] — the
     * [[TextAnalysis.writeTrigramLmRooted]] discipline for the quality
-    * classifier: generation tables `${prefix}_<a|b>_w` (the NONZERO
-    * weights — untouched buckets are exactly 0.0 in [[fitQualityLr]]
-    * by construction, so the sparse table reconstructs the dense
-    * model losslessly) and `${prefix}_<a|b>_known` (the fit-time
-    * feature coverage of `train` — the staleness probe's ground
-    * truth; pass the SAME frame the model was fitted on, or a
-    * superset), stamped together with one epoch token; the one-row
-    * meta (gen, bias, buckets, epoch) writes LAST. Crash semantics
-    * are [[TextAnalysis.writeTrigramLmRooted]]'s: a crash before the
-    * meta rewrite leaves the old generation serving, a crash
-    * mid-rewrite a loud missing-meta refusal, never a mixed
-    * generation; a generation torn after its commit refuses at
-    * [[readQualityLr]]'s epoch validation. */
+    * classifier: `_w` holds the NONZERO weights (untouched buckets are
+    * exactly 0.0 in [[fitQualityLr]] by construction, so the sparse
+    * table reconstructs the dense model losslessly) and `_known` the
+    * fit-time feature coverage of `train` (pass the SAME frame the
+    * model was fitted on, or a superset); meta (gen, bias, buckets,
+    * epoch). */
   def writeQualityLrRooted(spark: org.apache.spark.sql.SparkSession,
                            prefix: String, model: LrModel,
                            train: DataFrame, textCol: String,
-                           hashFn: Column => Column = xxhash64(_)): Unit = {
+                           hashFn: Column => Column = xxhash64(_)): Unit =
+    writeLrGen(spark, prefix, Generations.liveGen(spark, prefix), model,
+      train, textCol, hashFn)
+
+  private def writeLrGen(spark: org.apache.spark.sql.SparkSession,
+                         prefix: String, cur: Option[String],
+                         model: LrModel, train: DataFrame, textCol: String,
+                         hashFn: Column => Column): Map[String, String] = {
     import spark.implicits._
-    val metaTable = s"${prefix}_meta"
-    val cur: Option[String] =
-      if (!spark.catalog.tableExists(metaTable)) None
-      else Some(spark.table(metaTable).collect()(0).getAs[String]("gen"))
-    val next = if (cur.contains("a")) "b" else "a"
-    val p = s"${prefix}_$next"
     val sparse = model.table.iterator.zipWithIndex.collect {
       case (w, b) if w != 0.0 => (b.toLong, w)
     }.toSeq
-    graft.sources.Sinks.writeTable(sparse.toDF("bucket", "weight"),
-      s"${p}_w")
-    graft.sources.Sinks.writeTable(
-      knownBuckets(train, textCol, model.buckets, hashFn), s"${p}_known")
-    val epoch = graft.sources.Sinks.stampEpoch(spark, lrGenTables(p))
-    graft.sources.Sinks.writeTable(
-      Seq((next, model.bias, model.buckets, epoch))
-        .toDF("gen", "bias", "buckets", "epoch"), metaTable)
-    cur.filter(_ != next).foreach { g =>
-      lrGenTables(s"${prefix}_$g")
-        .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
-    }
+    writeFittedGen(spark, prefix, cur, sparse.toDF("bucket", "weight"),
+      knownBuckets(train, textCol, model.buckets, hashFn))((g, e) =>
+      Seq("gen" -> g, "bias" -> model.bias, "buckets" -> model.buckets,
+        "epoch" -> e))
   }
 
   /** Reopen a model written by [[writeQualityLrRooted]]; refuses a
-    * torn same-prefix rebuild (epoch-token mismatch). The collect is
-    * bounded by `buckets` rows — the same driver-side bound
-    * [[fitDsir]] and [[fitQualityLr]] already accept, because the
-    * model IS a plan literal downstream. */
+    * torn same-prefix rebuild (epoch-token mismatch). */
   def readQualityLr(spark: org.apache.spark.sql.SparkSession,
                     prefix: String): LrModel = {
-    val meta = spark.table(s"${prefix}_meta").collect()(0)
-    val p = s"${prefix}_${meta.getAs[String]("gen")}"
-    graft.sources.Sinks.requireEpoch(spark, lrGenTables(p),
-      meta.getAs[String]("epoch"))
-    val table = Array.fill(meta.getAs[Int]("buckets"))(0.0)
-    spark.table(s"${p}_w").collect().foreach { r =>
-      table(r.getAs[Long]("bucket").toInt) = r.getAs[Double]("weight")
-    }
-    LrModel(meta.getAs[Double]("bias"), table)
+    val live = openFitted(spark, prefix)
+    LrModel(live("bias").toDouble, fittedTable(spark, prefix, live, "weight"))
   }
 
   /** ONE-CALL maintenance window for a durable LR quality classifier
@@ -1393,12 +1420,10 @@ object Curation {
     *   re-probe — recovers iff the refit corpus actually covers the
     *            drifted feature space.
     *
-    * A quiet window (no drift) is a no-op by construction: no table
-    * write, meta untouched bit-for-bit. The probe is feature
-    * IDENTITY, not weight arithmetic — so an external engine replays
-    * the full decision as set algebra over hashed buckets (the score
-    * arithmetic itself stays pinned by q84/q90). Returns one bounded
-    * row of integer counts. */
+    * The probe is feature IDENTITY, not weight arithmetic — so an
+    * external engine replays the full decision as set algebra over
+    * hashed buckets (the score arithmetic itself stays pinned by
+    * q84/q90). Window rules: [[graft.sources.Generations.window]]. */
   def maintainQualityLr(spark: org.apache.spark.sql.SparkSession,
                         prefix: String, sample: DataFrame,
                         textCol: String, corpus: DataFrame,
@@ -1406,92 +1431,48 @@ object Curation {
                         maxBlindRate: Double, iters: Int = 2,
                         stepSize: Double = 2.0,
                         hashFn: Column => Column = xxhash64(_),
-                        exactFold: Boolean = true): DataFrame = {
-    import spark.implicits._
-    def meta() = spark.table(s"${prefix}_meta").collect()(0)
-    // each probe reuses the meta row its caller already holds, and the
-    // quiet window skips the closing meta re-read (nothing fired,
-    // nothing moved under this single-writer window) — the 1-row meta
-    // was collected 3x per quiet tick before (optimization-guide §5)
-    def probe(m: org.apache.spark.sql.Row): (Long, Long) = {
-      val p = s"${prefix}_${m.getAs[String]("gen")}"
-      graft.sources.Sinks.requireEpoch(spark, lrGenTables(p),
-        m.getAs[String]("epoch"))
-      blindProbe(spark, p, sample, textCol, m.getAs[Int]("buckets"),
-        hashFn)
-    }
-    val m0 = meta()
-    val epochBefore = m0.getAs[String]("epoch")
-    val bucketsFit = m0.getAs[Int]("buckets")
-    val (n, pre) = probe(m0)
-    val fired = n > 0 && pre.toDouble > maxBlindRate * n
-    if (fired)
-      writeQualityLrRooted(spark, prefix,
-        fitQualityLr(corpus, idCol, textCol, labelCol, bucketsFit,
-          iters, stepSize, hashFn, exactFold),
-        corpus, textCol, hashFn)
-    val (post, epochAfter) =
-      if (fired) {
-        val m2 = meta()
-        (probe(m2)._2, m2.getAs[String]("epoch"))
-      } else (pre, epochBefore)
-    Seq((n, pre, fired, post, epochAfter != epochBefore))
-      .toDF("n_sample_feats", "pre_blind_feats", "refit_fired",
-        "post_blind_feats", "epoch_changed")
-  }
+                        exactFold: Boolean = true): DataFrame =
+    blindWindow(spark, prefix, sample, textCol, maxBlindRate, hashFn)(live =>
+      writeLrGen(spark, prefix, Some(live("gen")),
+        fitQualityLr(corpus, idCol, textCol, labelCol,
+          live("buckets").toInt, iters, stepSize, hashFn, exactFold),
+        corpus, textCol, hashFn))
 
   /** Pointer-rooted durable face of a fitted [[DsirModel]] — same
-    * discipline as [[writeQualityLrRooted]]: `${prefix}_<a|b>_w`
-    * persists the ratio table DENSE (every bucket has a meaningful
-    * value — untouched buckets carry the smoothing default, not
-    * zero; ≤ `buckets` rows ≈ 1 MB at 2¹⁶, trivially bounded) and
-    * `${prefix}_<a|b>_known` the fit-time coverage of source ∪
-    * target; meta (gen, buckets, epoch) writes LAST. */
+    * discipline as [[writeQualityLrRooted]]: `_w` persists the ratio
+    * table DENSE (every bucket has a meaningful value — untouched
+    * buckets carry the smoothing default, not zero; ≤ `buckets` rows
+    * ≈ 1 MB at 2¹⁶, trivially bounded) and `_known` the fit-time
+    * coverage of source ∪ target; meta (gen, buckets, epoch). */
   def writeDsirRooted(spark: org.apache.spark.sql.SparkSession,
                       prefix: String, model: DsirModel,
                       source: DataFrame, target: DataFrame,
                       textCol: String,
-                      hashFn: Column => Column = xxhash64(_)): Unit = {
+                      hashFn: Column => Column = xxhash64(_)): Unit =
+    writeDsirGen(spark, prefix, Generations.liveGen(spark, prefix), model,
+      source, target, textCol, hashFn)
+
+  private def writeDsirGen(spark: org.apache.spark.sql.SparkSession,
+                           prefix: String, cur: Option[String],
+                           model: DsirModel, source: DataFrame,
+                           target: DataFrame, textCol: String,
+                           hashFn: Column => Column): Map[String, String] = {
     import spark.implicits._
-    val metaTable = s"${prefix}_meta"
-    val cur: Option[String] =
-      if (!spark.catalog.tableExists(metaTable)) None
-      else Some(spark.table(metaTable).collect()(0).getAs[String]("gen"))
-    val next = if (cur.contains("a")) "b" else "a"
-    val p = s"${prefix}_$next"
     val dense = model.table.iterator.zipWithIndex
       .map { case (v, b) => (b.toLong, v) }.toSeq
-    graft.sources.Sinks.writeTable(dense.toDF("bucket", "ratio"),
-      s"${p}_w")
     val fitted = source.select(col(textCol))
       .unionByName(target.select(col(textCol)))
-    graft.sources.Sinks.writeTable(
-      knownBuckets(fitted, textCol, model.buckets, hashFn),
-      s"${p}_known")
-    val epoch = graft.sources.Sinks.stampEpoch(spark, dsirGenTables(p))
-    graft.sources.Sinks.writeTable(
-      Seq((next, model.buckets, epoch)).toDF("gen", "buckets", "epoch"),
-      metaTable)
-    cur.filter(_ != next).foreach { g =>
-      dsirGenTables(s"${prefix}_$g")
-        .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
-    }
+    writeFittedGen(spark, prefix, cur, dense.toDF("bucket", "ratio"),
+      knownBuckets(fitted, textCol, model.buckets, hashFn))((g, e) =>
+      Seq("gen" -> g, "buckets" -> model.buckets, "epoch" -> e))
   }
 
   /** Reopen a model written by [[writeDsirRooted]]; torn rebuilds
-    * refuse via the epoch tokens. Bounded `buckets`-row collect. */
+    * refuse via the epoch tokens. */
   def readDsir(spark: org.apache.spark.sql.SparkSession,
-               prefix: String): DsirModel = {
-    val meta = spark.table(s"${prefix}_meta").collect()(0)
-    val p = s"${prefix}_${meta.getAs[String]("gen")}"
-    graft.sources.Sinks.requireEpoch(spark, dsirGenTables(p),
-      meta.getAs[String]("epoch"))
-    val table = Array.fill(meta.getAs[Int]("buckets"))(0.0)
-    spark.table(s"${p}_w").collect().foreach { r =>
-      table(r.getAs[Long]("bucket").toInt) = r.getAs[Double]("ratio")
-    }
-    DsirModel(table)
-  }
+               prefix: String): DsirModel =
+    DsirModel(fittedTable(spark, prefix, openFitted(spark, prefix),
+      "ratio"))
 
   /** ONE-CALL maintenance window for durable DSIR importance ratios
     * — [[maintainQualityLr]]'s twin for the generative artifact. The
@@ -1500,39 +1481,16 @@ object Curation {
     * smoothing-default ratio, so a sample that drifts off the fitted
     * feature space is importance-weighted by noise. Probe O(sample),
     * refit = [[fitDsir]] over the caller-supplied (source, target)
-    * at the persisted bucket count, rooted A/B swap, re-probe. */
+    * at the persisted bucket count, re-probe. Window rules:
+    * [[graft.sources.Generations.window]]. */
   def maintainDsirRatios(spark: org.apache.spark.sql.SparkSession,
                          prefix: String, sample: DataFrame,
                          textCol: String, source: DataFrame,
                          target: DataFrame, maxBlindRate: Double,
                          smoothing: Double = 1.0,
-                         hashFn: Column => Column = xxhash64(_)): DataFrame = {
-    import spark.implicits._
-    def meta() = spark.table(s"${prefix}_meta").collect()(0)
-    // meta-row reuse + quiet-path skip, as [[maintainQualityLr]]
-    def probe(m: org.apache.spark.sql.Row): (Long, Long) = {
-      val p = s"${prefix}_${m.getAs[String]("gen")}"
-      graft.sources.Sinks.requireEpoch(spark, dsirGenTables(p),
-        m.getAs[String]("epoch"))
-      blindProbe(spark, p, sample, textCol, m.getAs[Int]("buckets"),
-        hashFn)
-    }
-    val m0 = meta()
-    val epochBefore = m0.getAs[String]("epoch")
-    val bucketsFit = m0.getAs[Int]("buckets")
-    val (n, pre) = probe(m0)
-    val fired = n > 0 && pre.toDouble > maxBlindRate * n
-    if (fired)
-      writeDsirRooted(spark, prefix,
-        fitDsir(source, target, textCol, bucketsFit, smoothing, hashFn),
-        source, target, textCol, hashFn)
-    val (post, epochAfter) =
-      if (fired) {
-        val m2 = meta()
-        (probe(m2)._2, m2.getAs[String]("epoch"))
-      } else (pre, epochBefore)
-    Seq((n, pre, fired, post, epochAfter != epochBefore))
-      .toDF("n_sample_feats", "pre_blind_feats", "refit_fired",
-        "post_blind_feats", "epoch_changed")
-  }
+                         hashFn: Column => Column = xxhash64(_)): DataFrame =
+    blindWindow(spark, prefix, sample, textCol, maxBlindRate, hashFn)(live =>
+      writeDsirGen(spark, prefix, Some(live("gen")),
+        fitDsir(source, target, textCol, live("buckets").toInt, smoothing,
+          hashFn), source, target, textCol, hashFn))
 }

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.sources.{Generations, Sinks}
 
 /** Deduplication suite for large-scale training-data pipelines —
   * exact, MinHash+LSH, SimHash, n-gram Jaccard. All deterministic
@@ -491,46 +492,36 @@ object Dedup {
   }
 
   /** Persist a [[hammingBandMembers]] reference table DURABLY — the
-    * build-once/serve-many face of the perceptual admission tier,
-    * with the family crash discipline: the members write to an A/B
-    * generation table, a fresh epoch token stamps it, and the one-row
-    * `${table}_meta` (epoch + generation pointer) written LAST is the
-    * atomic commit — a torn same-name rebuild refuses at
-    * [[readHammingMembers]] instead of serving one generation's
-    * buckets as another's. Reference sets are bounded (the
-    * cellMembers regime), so a plain table suffices — the serving
-    * side broadcasts it whole. */
+    * build-once/serve-many face of the perceptual admission tier, one
+    * generation under the durable-generation protocol
+    * ([[graft.sources.Generations]]; pointer column `members_table`).
+    * Reference sets are bounded (the cellMembers regime), so a plain
+    * table suffices — the serving side broadcasts it whole. */
   def writeHammingMembers(spark: org.apache.spark.sql.SparkSession,
                           members: DataFrame, table: String): Unit = {
-    import spark.implicits._
     val gen = s"${table}_members"
-    graft.sources.Sinks.writeTable(members, gen)
-    val epoch = graft.sources.Sinks.stampEpoch(spark, Seq(gen))
-    graft.sources.Sinks.writeTable(
-      Seq((epoch, gen)).toDF("epoch", "members_table"), s"${table}_meta")
+    Sinks.writeTable(members, gen)
+    Generations.commit(spark, table, Seq(gen))(e =>
+      Seq("epoch" -> e, "members_table" -> gen))
   }
 
-  /** Reopen a durable members table (epoch-validated — mixed or torn
-    * generations refuse loudly). */
+  private def membersTables(m: Map[String, String]): Seq[String] =
+    Seq(m("members_table"))
+
+  /** Reopen a durable members table (raw — takedowns not applied). */
   def readHammingMembers(spark: org.apache.spark.sql.SparkSession,
-                         table: String): DataFrame = {
-    val meta = spark.table(s"${table}_meta").collect()(0)
-    val gen = meta.getAs[String]("members_table")
-    graft.sources.Sinks.requireEpoch(spark, Seq(gen),
-      meta.getAs[String]("epoch"))
-    spark.table(gen)
-  }
+                         table: String): DataFrame =
+    membersLive(spark,
+      Generations.open(spark, table, membersTables, ledger = false))
 
   /** File media takedowns against a durable members table — the
-    * ledger face of [[tombstoneFromHammingMembers]], riding
-    * [[graft.sources.Sinks.appendLedger]] (frame-path distinct-union,
-    * A/B + meta-last commit: a crash can never leave a missing ledger
-    * that reads as "no takedowns"). Serve through
+    * ledger face of [[tombstoneFromHammingMembers]]
+    * ([[graft.sources.Generations.appendLedger]]). Serve through
     * [[readHammingMembersLive]]; purge physically with
     * [[compactHammingMembers]]. */
   def tombstoneHammingMembers(spark: org.apache.spark.sql.SparkSession,
                               table: String, ids: DataFrame): Unit =
-    graft.sources.Sinks.appendLedger(spark, s"${table}_tombstones",
+    Generations.appendLedger(spark, s"${table}_tombstones",
       ids.select(col(ids.columns.head).cast("long").as("media_id")))
 
   /** Reopen a durable members table with its takedown ledger applied
@@ -538,18 +529,13 @@ object Dedup {
     * removed ids leave every member array via the one-broadcast-row
     * array filter before the table ever reaches a stream. */
   def readHammingMembersLive(spark: org.apache.spark.sql.SparkSession,
-                             table: String): DataFrame = {
-    // members meta + ledger meta in ONE driver action (the
-    // reopen-floor merge — see [[readExactIndexRootedLive]])
-    val (meta, ledMeta) = graft.sources.Sinks.metaWithLedgerMeta(spark,
-      s"${table}_meta", s"${table}_tombstones")
-    val gen = meta("members_table")
-    graft.sources.Sinks.requireEpoch(spark, Seq(gen), meta("epoch"))
-    val members = spark.table(gen)
-    ledMeta.map { case (lgen, lepoch) =>
-      tombstoneFromHammingMembers(members,
-        graft.sources.Sinks.resolveLedgerGen(spark,
-          s"${table}_tombstones", lgen, lepoch)) }
+                             table: String): DataFrame =
+    membersLive(spark, Generations.open(spark, table, membersTables))
+
+  private def membersLive(spark: org.apache.spark.sql.SparkSession,
+                          live: Generations.Live): DataFrame = {
+    val members = spark.table(live("members_table"))
+    live.ledger.map(tombstoneFromHammingMembers(members, _))
       .getOrElse(members)
   }
 
@@ -558,93 +544,50 @@ object Dedup {
     * [[compactExactIndex]] analogue): the live (ledger-applied)
     * members table IS the reference set — its distinct
     * (neighbor_id, sig) pairs reconstruct every surviving signature —
-    * so the rebuild needs no external corpus re-read. The fresh
-    * banding writes to the OTHER A/B generation, gets a fresh epoch,
-    * the meta pointer flips atomically, the superseded generation
-    * drops and the ledger clears (both best-effort — a crash there
-    * leaves dead files / already-purged tombstones that re-filter
-    * harmlessly, never a wrong read). Also the remediation for a
-    * changed `maxHamming`/`maxBucket` policy. */
+    * so the rebuild needs no external corpus re-read. Also the
+    * remediation for a changed `maxHamming`/`maxBucket` policy. */
   def compactHammingMembers(spark: org.apache.spark.sql.SparkSession,
                             table: String, maxHamming: Int,
                             maxBucket: Int = 1000): Unit = {
-    import spark.implicits._
-    // meta + ledger meta in ONE driver action (was three sequential
-    // 1-row collects: the meta here, then readHammingMembersLive's
-    // meta + ledger pair, then the hadLedger re-read —
-    // optimization-guide §5)
-    val (meta, ledMeta) = graft.sources.Sinks.metaWithLedgerMeta(spark,
-      s"${table}_meta", s"${table}_tombstones")
-    val liveGen = meta("members_table")
-    graft.sources.Sinks.requireEpoch(spark, Seq(liveGen), meta("epoch"))
-    val otherGen =
-      if (liveGen == s"${table}_members") s"${table}_members_b"
-      else s"${table}_members"
-    val members0 = spark.table(liveGen)
-    val membersLive = ledMeta.map { case (lgen, lepoch) =>
-        tombstoneFromHammingMembers(members0,
-          graft.sources.Sinks.resolveLedgerGen(spark,
-            s"${table}_tombstones", lgen, lepoch)) }
-      .getOrElse(members0)
-    val sigs = membersLive
+    val live = Generations.open(spark, table, membersTables)
+    rebandMembers(spark, table, live, maxHamming, maxBucket)
+    if (live.ledger.nonEmpty)
+      Generations.clearLedger(spark, s"${table}_tombstones")
+  }
+
+  private def rebandMembers(spark: org.apache.spark.sql.SparkSession,
+                            table: String, live: Generations.Live,
+                            maxHamming: Int,
+                            maxBucket: Int): Map[String, String] = {
+    val other = Generations.otherSlot(live("members_table"),
+      s"${table}_members")
+    val sigs = membersLive(spark, live)
       .select(explode(col("members")).as("m"))
       .select(col("m.neighbor_id").as("media_id"), col("m.sig").as("sig"))
       .distinct()
-    val hadLedger = ledMeta.nonEmpty
-    graft.sources.Sinks.writeTable(
+    Sinks.writeTable(
       hammingBandMembers(sigs, "media_id", "sig", maxHamming, maxBucket),
-      otherGen)
-    val epoch = graft.sources.Sinks.stampEpoch(spark, Seq(otherGen))
-    graft.sources.Sinks.writeTable(
-      Seq((epoch, otherGen)).toDF("epoch", "members_table"),
-      s"${table}_meta")
-    spark.sql(s"DROP TABLE IF EXISTS $liveGen")
-    if (hadLedger)
-      graft.sources.Sinks.clearLedger(spark, s"${table}_tombstones")
+      other)
+    Generations.commit(spark, table, Seq(other),
+      Seq(live("members_table")))(e =>
+      Seq("epoch" -> e, "members_table" -> other))
   }
 
   /** ONE-CALL maintenance window for a durable members table — the
     * perceptual face of [[maintainExactIndex]] /
-    * [[maintainNgramIndex]], completing the matrix (every durable
-    * family now has a single cron-shaped call: measure → decide →
-    * conditional compaction → report). Fires on purge debt (pending
+    * [[maintainNgramIndex]]. Fires on purge debt (pending
     * `${table}_tombstones` rows): logical deletes already serve
     * correctly through [[readHammingMembersLive]]'s broadcast array
     * filter; the window is where the filter leaves the serving plan
     * and emptied buckets drop physically. `maxHamming`/`maxBucket`
     * are the rebuild policy [[compactHammingMembers]] re-bands under
-    * — pass the serving tier's values (a changed policy is also a
-    * valid reason to force a compaction, but that path is the direct
-    * compact call, not this window). A quiet window leaves the meta
-    * row, generation and ledger untouched bit-for-bit. */
+    * — pass the serving tier's values. Window rules:
+    * [[graft.sources.Generations.window]]. */
   def maintainHammingMembers(spark: org.apache.spark.sql.SparkSession,
                              table: String, maxHamming: Int,
-                             maxBucket: Int = 1000): DataFrame = {
-    import spark.implicits._
-    def pendingCount(): Long =
-      graft.sources.Sinks.readLedger(spark, s"${table}_tombstones")
-        .map(_._2.count()).getOrElse(0L)
-    // epoch + ledger meta in ONE driver action; quiet windows pay one
-    // count action and zero further round-trips (was 4 sequential
-    // collects — optimization-guide §5)
-    val (meta, ledMeta) = graft.sources.Sinks.metaWithLedgerMeta(spark,
-      s"${table}_meta", s"${table}_tombstones")
-    val epochBefore = meta("epoch")
-    val pending = ledMeta.map { case (lgen, lepoch) =>
-      graft.sources.Sinks.resolveLedgerGen(spark,
-        s"${table}_tombstones", lgen, lepoch).count() }.getOrElse(0L)
-    val fired = pending > 0L
-    if (fired) compactHammingMembers(spark, table, maxHamming, maxBucket)
-    // a quiet window left meta and ledger untouched bit-for-bit — no
-    // re-read; a fired one re-measures (the cleared ledger's count is
-    // collect-free) and re-reads the flipped epoch
-    val (postPending, epochAfter) =
-      if (fired) (pendingCount(),
-        spark.table(s"${table}_meta").collect()(0).getAs[String]("epoch"))
-      else (pending, epochBefore)
-    Seq((pending, fired, postPending, epochAfter != epochBefore))
-      .toDF("pending_tombstones", "fired", "post_pending", "gen_changed")
-  }
+                             maxBucket: Int = 1000): DataFrame =
+    Generations.purgeWindow(spark, table, membersTables)(
+      rebandMembers(spark, table, _, maxHamming, maxBucket))
 
   // ──────────────────────────────────────────────────────────────────
   // UNBOUNDED perceptual reference face: the banded-signature index.
@@ -673,60 +616,46 @@ object Dedup {
         posexplode(array(hammingBands(col("sig"), maxHamming): _*))
           .as(Seq("band", "bh")))
 
+  private def bandsTables(prefix: String)(gen: String): Seq[String] =
+    Seq(s"${prefix}_bands_$gen")
+
+  private def bandsRow(gen: String, maxHamming: Int)(
+      epoch: String): Seq[(String, Any)] =
+    Seq("gen" -> gen, "max_hamming" -> maxHamming, "epoch" -> epoch)
+
   /** Pointer-rooted durable face of the banded-signature index:
     * generations alternate between `${prefix}_bands_<a|b>` tables
     * bucketed on BOTH probe keys (band, bh) — the join below keys on
     * exactly the bucket columns, which is what lets the planner keep
     * the bucketed scan (a subset- or superset-keyed join disables it;
-    * the q166 lesson) — with the family crash discipline: epoch token
-    * after the table commit, one-row meta (gen, max_hamming, epoch)
-    * written LAST, superseded generation dropped best-effort. The
-    * banding threshold is persisted IN the meta: the artifact defines
-    * its own probe geometry (the q164 discipline), so a caller can
-    * never probe with a different `maxHamming` than the index was
-    * banded for (pigeonhole exactness only holds at the banded
-    * threshold). */
+    * the q166 lesson). The banding threshold is persisted IN the meta:
+    * the artifact defines its own probe geometry (the q164
+    * discipline), so a caller can never probe with a different
+    * `maxHamming` than the index was banded for (pigeonhole exactness
+    * only holds at the banded threshold). */
   def writeHammingBandIndexRooted(spark: org.apache.spark.sql.SparkSession,
                                   prefix: String, reference: DataFrame,
                                   idCol: String, sigCol: String,
                                   maxHamming: Int,
-                                  numBuckets: Int = 64): Unit = {
-    import spark.implicits._
-    val metaTable = s"${prefix}_meta"
-    val cur: Option[String] =
-      if (!spark.catalog.tableExists(metaTable)) None
-      else Some(spark.table(metaTable).collect()(0).getAs[String]("gen"))
-    val next = if (cur.contains("a")) "b" else "a"
-    val gen = s"${prefix}_bands_$next"
-    graft.sources.Sinks.writeBucketed(
-      bandedSigRows(reference, idCol, sigCol, maxHamming), gen,
-      Seq("band", "bh"), numBuckets)
-    val epoch = graft.sources.Sinks.stampEpoch(spark, Seq(gen))
-    graft.sources.Sinks.writeTable(
-      Seq((next, maxHamming, epoch)).toDF("gen", "max_hamming", "epoch"),
-      metaTable)
-    cur.filter(_ != next).foreach(g =>
-      spark.sql(s"DROP TABLE IF EXISTS ${prefix}_bands_$g"))
-  }
+                                  numBuckets: Int = 64): Unit =
+    Generations.rebuild(spark, prefix, Generations.liveGen(spark, prefix),
+      bandsTables(prefix))(g => Sinks.writeBucketed(
+        bandedSigRows(reference, idCol, sigCol, maxHamming),
+        s"${prefix}_bands_$g", Seq("band", "bh"), numBuckets))(
+      bandsRow(_, maxHamming)(_))
 
   /** Reopen a rooted banded index (raw — takedowns not applied):
-    * returns the banded threshold and the band rows, epoch-validated
-    * (a torn same-prefix rebuild refuses loudly). */
+    * returns the banded threshold and the band rows. */
   def readHammingBandIndexRooted(spark: org.apache.spark.sql.SparkSession,
-                                 prefix: String): (Int, DataFrame) = {
-    val meta = spark.table(s"${prefix}_meta").collect()(0)
-    val gen = s"${prefix}_bands_${meta.getAs[String]("gen")}"
-    graft.sources.Sinks.requireEpoch(spark, Seq(gen),
-      meta.getAs[String]("epoch"))
-    (meta.getAs[Int]("max_hamming"), spark.table(gen))
-  }
+                                 prefix: String): (Int, DataFrame) =
+    bandsLive(spark, prefix, Generations.open(spark, prefix,
+      m => bandsTables(prefix)(m("gen")), ledger = false))
 
   /** File takedowns against a banded index — the
-    * [[tombstoneHammingMembers]] ledger shape (idempotent
-    * distinct-union of media ids, A/B + meta-last commit). */
+    * [[tombstoneHammingMembers]] ledger shape. */
   def tombstoneHammingBandIndex(spark: org.apache.spark.sql.SparkSession,
                                 prefix: String, ids: DataFrame): Unit =
-    graft.sources.Sinks.appendLedger(spark, s"${prefix}_tombstones",
+    Generations.appendLedger(spark, s"${prefix}_tombstones",
       ids.select(col(ids.columns.head).cast("long").as("media_id")))
 
   /** The serving entry point: rooted read with the
@@ -737,24 +666,18 @@ object Dedup {
     * survives through it into the downstream probe join). */
   def readHammingBandIndexRootedLive(
       spark: org.apache.spark.sql.SparkSession,
-      prefix: String): (Int, DataFrame) = {
-    // index meta + ledger meta in ONE driver action (the reopen-floor
-    // merge — see [[readExactIndexRootedLive]])
-    val (meta, ledMeta) = graft.sources.Sinks.metaWithLedgerMeta(spark,
-      s"${prefix}_meta", s"${prefix}_tombstones")
-    val gen = s"${prefix}_bands_${meta("gen")}"
-    graft.sources.Sinks.requireEpoch(spark, Seq(gen), meta("epoch"))
-    val rows = spark.table(gen)
-    val live = ledMeta
-      .map { case (lgen, lepoch) =>
-        val ids = graft.sources.Sinks.resolveLedgerGen(spark,
-          s"${prefix}_tombstones", lgen, lepoch)
+      prefix: String): (Int, DataFrame) =
+    bandsLive(spark, prefix, Generations.open(spark, prefix,
+      m => bandsTables(prefix)(m("gen"))))
+
+  private def bandsLive(spark: org.apache.spark.sql.SparkSession,
+                        prefix: String,
+                        live: Generations.Live): (Int, DataFrame) = {
+    val rows = spark.table(s"${prefix}_bands_${live("gen")}")
+    (live("max_hamming").toInt, live.ledger.map(ids =>
         rows.join(broadcast(ids.select(col("media_id")
-          .as("neighbor_id")).distinct()), Seq("neighbor_id"),
-          "left_anti")
-      }
-      .getOrElse(rows)
-    (meta("max_hamming").toInt, live)
+          .as("neighbor_id")).distinct()), Seq("neighbor_id"), "left_anti"))
+      .getOrElse(rows))
   }
 
   /** Relational batch probe of a banded index — the admission
@@ -801,106 +724,44 @@ object Dedup {
     * batch's band rows bucket exactly as a full rebuild would —
     * appending bucket-for-bucket into the live table is
     * decision-identical to rebuilding from the union (spec-pinned).
-    * Crash discipline is epoch-poison-FIRST: the generation's epoch
-    * tokens clear before any row lands, so a crash mid-append leaves
-    * a table that REFUSES at the rooted read (loud, re-runnable via a
-    * fresh [[writeHammingBandIndexRooted]]) rather than serving a
-    * half-appended batch; the meta re-stamp commits LAST. Cost is one
-    * bucketed write of the NEW rows only — the corpus is never
-    * re-banded, never rewritten. */
+    * Cost is one bucketed write of the NEW rows only
+    * ([[graft.sources.Generations.appendBucketed]]). */
   def appendToHammingBandIndexRooted(
       spark: org.apache.spark.sql.SparkSession, prefix: String,
       reference: DataFrame, idCol: String, sigCol: String): Unit = {
-    import spark.implicits._
-    val meta = spark.table(s"${prefix}_meta").collect()(0)
-    val gen = s"${prefix}_bands_${meta.getAs[String]("gen")}"
-    graft.sources.Sinks.requireEpoch(spark, Seq(gen),
-      meta.getAs[String]("epoch"))
-    val maxHamming = meta.getAs[Int]("max_hamming")
-    val numBuckets = spark.sessionState.catalog.getTableMetadata(
-        org.apache.spark.sql.catalyst.TableIdentifier(gen))
-      .bucketSpec.getOrElse(sys.error(s"$gen is not bucketed"))
-      .numBuckets
-    graft.sources.Sinks.clearEpochTokens(spark, gen)
-    bandedSigRows(reference, idCol, sigCol, maxHamming)
-      .select(spark.table(gen).columns.map(col): _*)
-      .write.mode(org.apache.spark.sql.SaveMode.Append)
-      .bucketBy(numBuckets, "band", "bh").sortBy("band", "bh")
-      .format("parquet")
-      .saveAsTable(gen)
-    val epoch = graft.sources.Sinks.stampEpoch(spark, Seq(gen))
-    graft.sources.Sinks.writeTable(
-      Seq((meta.getAs[String]("gen"), maxHamming, epoch))
-        .toDF("gen", "max_hamming", "epoch"), s"${prefix}_meta")
+    val live = Generations.open(spark, prefix,
+      m => bandsTables(prefix)(m("gen")), ledger = false)
+    val gen = s"${prefix}_bands_${live("gen")}"
+    val maxHamming = live("max_hamming").toInt
+    Generations.appendBucketed(spark, gen,
+      bandedSigRows(reference, idCol, sigCol, maxHamming), "band", "bh")
+    Generations.commit(spark, prefix, Seq(gen))(
+      bandsRow(live("gen"), maxHamming))
   }
 
   /** Purge-only maintenance window for a banded index — the q157 LSH
     * argument transfers verbatim: the pigeonhole banding of a 64-bit
     * signature is a FIXED decomposition (no fitted state, nothing to
     * drift), so the only maintenance a banded index ever needs is
-    * making logical deletes physical. Fires on purge debt; the
-    * rewrite is one bucketed shuffle over the SURVIVING band rows
-    * (never a re-band of the source corpus — the band rows are the
-    * reference set), generation flip + ledger clear; a quiet window
-    * leaves meta, generation and ledger untouched bit-for-bit. */
+    * making logical deletes physical. The rewrite is one bucketed
+    * shuffle over the SURVIVING band rows (never a re-band of the
+    * source corpus), inheriting the live generation's bucket count (a
+    * purge must never silently re-layout the index because a caller
+    * took the default). Window rules:
+    * [[graft.sources.Generations.window]]. */
   def purgeHammingBandIndex(spark: org.apache.spark.sql.SparkSession,
                             prefix: String,
-                            numBuckets: Int = 64): DataFrame = {
-    import spark.implicits._
-    def pendingCount(): Long =
-      graft.sources.Sinks.readLedger(spark, s"${prefix}_tombstones")
-        .map(_._2.count()).getOrElse(0L)
-    // meta + ledger meta in ONE driver action; the quiet window pays
-    // one count action and zero further round-trips (was 4 sequential
-    // collects — optimization-guide §5)
-    val (m0, ledMeta) = graft.sources.Sinks.metaWithLedgerMeta(spark,
-      s"${prefix}_meta", s"${prefix}_tombstones")
-    val epochBefore = m0("epoch")
-    val ledgerRows = ledMeta.map { case (lgen, lepoch) =>
-      graft.sources.Sinks.resolveLedgerGen(spark,
-        s"${prefix}_tombstones", lgen, lepoch) }
-    val pending = ledgerRows.map(_.count()).getOrElse(0L)
-    val fired = pending > 0L
-    if (fired) {
-      // the live view reuses the meta/ledger already resolved above
-      // (single-writer window)
-      val maxHamming = m0("max_hamming").toInt
-      val gen0 = s"${prefix}_bands_${m0("gen")}"
-      graft.sources.Sinks.requireEpoch(spark, Seq(gen0), m0("epoch"))
-      val rows0 = spark.table(gen0)
-      val live = ledgerRows.map(ids =>
-          rows0.join(broadcast(ids.select(col("media_id")
-            .as("neighbor_id")).distinct()), Seq("neighbor_id"),
-            "left_anti"))
-        .getOrElse(rows0)
-      val cur = m0("gen")
-      val next = if (cur == "a") "b" else "a"
-      val gen = s"${prefix}_bands_$next"
-      // inherit the LIVE generation's bucket count (the purgeLshIndex
-      // discipline): a purge must never silently re-layout the index
-      // because a caller took the default
-      val buckets = spark.sessionState.catalog.getTableMetadata(
-          org.apache.spark.sql.catalyst.TableIdentifier(
-            s"${prefix}_bands_$cur"))
-        .bucketSpec.map(_.numBuckets).getOrElse(numBuckets)
-      graft.sources.Sinks.writeBucketed(live, gen, Seq("band", "bh"),
-        buckets)
-      val epoch = graft.sources.Sinks.stampEpoch(spark, Seq(gen))
-      graft.sources.Sinks.writeTable(
-        Seq((next, maxHamming, epoch))
-          .toDF("gen", "max_hamming", "epoch"), s"${prefix}_meta")
-      spark.sql(s"DROP TABLE IF EXISTS ${prefix}_bands_$cur")
-      graft.sources.Sinks.clearLedger(spark, s"${prefix}_tombstones")
+                            numBuckets: Int = 64): DataFrame =
+    Generations.purgeWindow(spark, prefix,
+        m => bandsTables(prefix)(m("gen"))) { live =>
+      val (maxHamming, rows) = bandsLive(spark, prefix, live)
+      val buckets = Generations.bucketCount(spark,
+        s"${prefix}_bands_${live("gen")}").getOrElse(numBuckets)
+      Generations.rebuild(spark, prefix, Some(live("gen")),
+        bandsTables(prefix))(g => Sinks.writeBucketed(rows,
+          s"${prefix}_bands_$g", Seq("band", "bh"), buckets))(
+        bandsRow(_, maxHamming)(_))
     }
-    // quiet window: meta and ledger untouched bit-for-bit — no re-read
-    val (postPending, epochAfter) =
-      if (fired) (pendingCount(),
-        spark.table(s"${prefix}_meta").collect()(0).getAs[String]("epoch"))
-      else (pending, epochBefore)
-    Seq((pending, fired, postPending, epochAfter != epochBefore))
-      .toDF("pending_tombstones", "fired", "post_pending",
-        "gen_changed")
-  }
 
   def hammingNearDups(df: DataFrame, idCol: String, sigCol: String,
                       maxHamming: Int = 3,
@@ -1391,7 +1252,7 @@ object Dedup {
     * index bucketed on gram..."). */
   def writeNgramIndexBucketed(index: NgramIndex, table: String,
                               numBuckets: Int = 64): Unit =
-    graft.sources.Sinks.writeBucketed(index.grams, table, Seq("gram"),
+    Sinks.writeBucketed(index.grams, table, Seq("gram"),
       numBuckets)
 
   /** Reopen a bucketed index table written by
@@ -1417,9 +1278,9 @@ object Dedup {
     * become admissible again. Logical delete = one lazy anti join
     * dropping the doc's gram rows from the index side of the
     * candidate bucket join (O(tombstones) build side, the index is
-    * never re-shingled); physical purge = the next bucketed rewrite
-    * of the live frame ([[writeNgramIndexBucketed]] to a fresh epoch,
-    * the family discipline), after which the ledger drops. */
+    * never re-shingled); physical purge = the next generation of the
+    * live frame ([[maintainNgramIndex]]), after which the ledger
+    * drops. */
   def tombstoneFromNgramIndex(index: NgramIndex,
                               ids: DataFrame): NgramIndex =
     NgramIndex(
@@ -1430,64 +1291,57 @@ object Dedup {
 
   /** Durable takedown ledger beside a [[writeNgramIndexBucketed]]
     * table — idempotent distinct-union of removed doc ids into the
-    * `${table}_tombstones` ledger via
-    * [[graft.sources.Sinks.appendLedger]]: no driver collect (the
-    * merge runs as a frame) and an A/B-generation + meta-last commit,
-    * so a crash mid-append can never leave a MISSING ledger that
-    * reads as "no tombstones" and lets removed docs keep tainting
-    * batches. Serve through [[readNgramIndexLive]]. */
+    * `${table}_tombstones` ledger
+    * ([[graft.sources.Generations.appendLedger]]), so a crash can
+    * never leave a missing ledger that lets removed docs keep
+    * tainting batches. Serve through [[readNgramIndexLive]]. */
   def tombstoneNgramIndex(spark: org.apache.spark.sql.SparkSession,
                           table: String, ids: DataFrame): Unit =
-    graft.sources.Sinks.appendLedger(spark, s"${table}_tombstones",
+    Generations.appendLedger(spark, s"${table}_tombstones",
       ids.select(col(ids.columns.head).cast("long").as("doc_id")))
 
   /** Reopen a durable n-gram index with its takedown ledger applied —
-    * the serving entry point after [[tombstoneNgramIndex]] calls. A
-    * torn ledger (committed meta whose generation is missing or
-    * epoch-mismatched) refuses loudly instead of serving the index
-    * untombstoned. */
+    * the serving entry point after [[tombstoneNgramIndex]] calls. */
   def readNgramIndexLive(spark: org.apache.spark.sql.SparkSession,
                          table: String, idCol: String,
                          n: Int): NgramIndex = {
     val index = readNgramIndex(spark, table, idCol, n)
-    graft.sources.Sinks.readLedger(spark, s"${table}_tombstones")
+    Generations.readLedger(spark, s"${table}_tombstones")
       .map { case (_, ids) => tombstoneFromNgramIndex(index, ids) }
       .getOrElse(index)
   }
 
-  /** Pointer-rooted durable face of the n-gram index — the
-    * "fresh epoch, the family discipline" that
-    * [[tombstoneFromNgramIndex]]'s physical-purge contract points at,
-    * made concrete: generations alternate between
-    * `${prefix}_grams_a` / `_b` (both bucketed on `gram`, so the
-    * build-once/search-many shuffle shape survives the flip), each
-    * stamped with a fresh epoch token, and the one-row
-    * `${prefix}_meta` (gen, grams_table, epoch) written LAST is the
-    * atomic commit. A crash before the meta rewrite leaves the old
-    * generation serving; a generation torn after its commit refuses
-    * at [[readNgramIndexRooted]]'s epoch validation. The superseded
-    * generation drops after the flip, best-effort. */
+  private def gramsTables(prefix: String)(gen: String): Seq[String] =
+    Seq(s"${prefix}_grams_$gen")
+
+  /** Pointer-rooted durable face of the n-gram index — the "fresh
+    * epoch" that [[tombstoneFromNgramIndex]]'s physical-purge contract
+    * points at, made concrete: generations alternate between
+    * `${prefix}_grams_a` / `_b`, both bucketed on `gram`, so the
+    * build-once/search-many shuffle shape survives the flip; meta
+    * (gen, grams_table, epoch). */
   def writeNgramIndexRooted(spark: org.apache.spark.sql.SparkSession,
                             prefix: String, index: NgramIndex,
-                            numBuckets: Int = 64): Unit = {
-    import spark.implicits._
-    val metaTable = s"${prefix}_meta"
-    val cur =
-      if (spark.catalog.tableExists(metaTable))
-        Some(spark.table(metaTable).collect()(0).getAs[String]("gen"))
-      else None
-    val next = if (cur.contains("a")) "b" else "a"
-    val genTable = s"${prefix}_grams_$next"
+                            numBuckets: Int = 64): Unit =
+    writeNgramGen(spark, prefix, Generations.liveGen(spark, prefix), index,
+      numBuckets)
+
+  private def writeNgramGen(spark: org.apache.spark.sql.SparkSession,
+                            prefix: String, cur: Option[String],
+                            index: NgramIndex,
+                            numBuckets: Int): Map[String, String] =
     // a compaction's grams frame lazily READS the current generation
     // (minus the ledger) — the alternate table name makes that legal
-    writeNgramIndexBucketed(index, genTable, numBuckets)
-    val epoch = graft.sources.Sinks.stampEpoch(spark, Seq(genTable))
-    graft.sources.Sinks.writeTable(
-      Seq((next, genTable, epoch)).toDF("gen", "grams_table", "epoch"),
-      metaTable)
-    cur.filter(_ != next).foreach { old =>
-      spark.sql(s"DROP TABLE IF EXISTS ${prefix}_grams_$old")
-    }
+    Generations.rebuild(spark, prefix, cur, gramsTables(prefix))(g =>
+      writeNgramIndexBucketed(index, s"${prefix}_grams_$g", numBuckets))(
+      (g, e) => Seq("gen" -> g, "grams_table" -> s"${prefix}_grams_$g",
+        "epoch" -> e))
+
+  private def ngramLive(spark: org.apache.spark.sql.SparkSession,
+                        live: Generations.Live, idCol: String,
+                        n: Int): NgramIndex = {
+    val index = NgramIndex(spark.table(live("grams_table")), idCol, n)
+    live.ledger.map(tombstoneFromNgramIndex(index, _)).getOrElse(index)
   }
 
   /** Reopen the live generation of a [[writeNgramIndexRooted]] index
@@ -1495,13 +1349,9 @@ object Dedup {
     * as with [[readNgramIndex]]. */
   def readNgramIndexRooted(spark: org.apache.spark.sql.SparkSession,
                            prefix: String, idCol: String,
-                           n: Int): NgramIndex = {
-    val meta = spark.table(s"${prefix}_meta").collect()(0)
-    val genTable = meta.getAs[String]("grams_table")
-    graft.sources.Sinks.requireEpoch(spark, Seq(genTable),
-      meta.getAs[String]("epoch"))
-    NgramIndex(spark.table(genTable), idCol, n)
-  }
+                           n: Int): NgramIndex =
+    ngramLive(spark, Generations.open(spark, prefix,
+      m => Seq(m("grams_table")), ledger = false), idCol, n)
 
   /** [[readNgramIndexRooted]] with the `${prefix}_tombstones` ledger
     * applied — the serving entry point of the rooted face (file
@@ -1510,19 +1360,9 @@ object Dedup {
     * purges physically). */
   def readNgramIndexRootedLive(spark: org.apache.spark.sql.SparkSession,
                                prefix: String, idCol: String,
-                               n: Int): NgramIndex = {
-    // index meta + ledger meta in ONE driver action (the reopen-floor
-    // merge — see [[readExactIndexRootedLive]])
-    val (meta, ledMeta) = graft.sources.Sinks.metaWithLedgerMeta(spark,
-      s"${prefix}_meta", s"${prefix}_tombstones")
-    val genTable = meta("grams_table")
-    graft.sources.Sinks.requireEpoch(spark, Seq(genTable), meta("epoch"))
-    val index = NgramIndex(spark.table(genTable), idCol, n)
-    ledMeta.map { case (lgen, lepoch) =>
-      tombstoneFromNgramIndex(index, graft.sources.Sinks.resolveLedgerGen(
-        spark, s"${prefix}_tombstones", lgen, lepoch)) }
-      .getOrElse(index)
-  }
+                               n: Int): NgramIndex =
+    ngramLive(spark, Generations.open(spark, prefix,
+      m => Seq(m("grams_table"))), idCol, n)
 
   /** ONE-CALL maintenance window for a rooted n-gram index — the
     * near-dup face of [[maintainExactIndex]]: pending takedowns are
@@ -1533,49 +1373,15 @@ object Dedup {
     * is handled by [[appendToIndex]] at admission time. When fired:
     * rewrite the live (ledger-applied) gram frame to the alternate
     * bucketed generation — one shuffle over the SURVIVING grams,
-    * never a corpus re-shingle — flip the meta pointer, clear the
-    * ledger. A quiet window leaves meta, generation and ledger
-    * untouched bit-for-bit. */
+    * never a corpus re-shingle. Window rules:
+    * [[graft.sources.Generations.window]]. */
   def maintainNgramIndex(spark: org.apache.spark.sql.SparkSession,
                          prefix: String, idCol: String, n: Int,
-                         numBuckets: Int = 64): DataFrame = {
-    import spark.implicits._
-    def pendingCount(): Long =
-      graft.sources.Sinks.readLedger(spark, s"${prefix}_tombstones")
-        .map(_._2.count()).getOrElse(0L)
-    // gen + ledger meta in ONE driver action; the quiet (every-cron-
-    // tick) window then pays exactly one count action when a ledger
-    // exists and zero further round-trips — it was 4 sequential
-    // collects (optimization-guide §5)
-    val (meta, ledMeta) = graft.sources.Sinks.metaWithLedgerMeta(spark,
-      s"${prefix}_meta", s"${prefix}_tombstones")
-    val genBefore = meta("gen")
-    val ledgerRows = ledMeta.map { case (lgen, lepoch) =>
-      graft.sources.Sinks.resolveLedgerGen(spark,
-        s"${prefix}_tombstones", lgen, lepoch) }
-    val pending = ledgerRows.map(_.count()).getOrElse(0L)
-    val fired = pending > 0L
-    if (fired) {
-      // the live view reuses the meta/ledger already resolved above
-      // (single-writer window — nothing moved since the merged read)
-      val genTable = meta("grams_table")
-      graft.sources.Sinks.requireEpoch(spark, Seq(genTable), meta("epoch"))
-      val index = NgramIndex(spark.table(genTable), idCol, n)
-      val live = ledgerRows.map(ids => tombstoneFromNgramIndex(index, ids))
-        .getOrElse(index)
-      writeNgramIndexRooted(spark, prefix, live, numBuckets)
-      graft.sources.Sinks.clearLedger(spark, s"${prefix}_tombstones")
+                         numBuckets: Int = 64): DataFrame =
+    Generations.purgeWindow(spark, prefix, m => Seq(m("grams_table"))) {
+      live => writeNgramGen(spark, prefix, Some(live("gen")),
+        ngramLive(spark, live, idCol, n), numBuckets)
     }
-    // post state: a fired window cleared the ledger (post_pending
-    // re-measures — collect-free, the meta is gone) and flipped gen
-    // (one re-read); a quiet window left both untouched bit-for-bit
-    val (postPending, genAfter) =
-      if (fired) (pendingCount(),
-        spark.table(s"${prefix}_meta").collect()(0).getAs[String]("gen"))
-      else (pending, genBefore)
-    Seq((pending, fired, postPending, genAfter != genBefore))
-      .toDF("pending_tombstones", "fired", "post_pending", "gen_changed")
-  }
 
   /** Incremental near-dup dedup of a NEW batch against an indexed
     * corpus: a batch doc survives iff (a) its within-batch component —
@@ -1649,7 +1455,7 @@ object Dedup {
     * construction, so decisions are EXACTLY those of the plain
     * anti-join. The `hashes` table follows the [[NgramIndex]]
     * build-once/search-many discipline: persist it, or write it
-    * bucketed on `__h` ([[graft.sources.Sinks.writeBucketed]]) so the
+    * bucketed on `__h` ([[Sinks.writeBucketed]]) so the
     * verification join is co-located shuffle-free on the index side.
     *
     * Sizing: `numBits` defaults to 2^23 (1 MiB — fpp ≈ 1% at 2^20
@@ -1853,94 +1659,78 @@ object Dedup {
 
   /** Durable takedown ledger beside a [[writeExactIndexBucketed]]
     * index: idempotent distinct-union of (hash, text) rows into the
-    * `${table}_tombstones` ledger via
-    * [[graft.sources.Sinks.appendLedger]] — the merge runs as a
-    * frame (no driver collect: a compliance ledger accumulates past
-    * any driver Set) and the A/B + meta-last commit means a crash
-    * mid-append can never leave a missing ledger that reads as "no
-    * tombstones" (which would silently re-DROP copies of taken-down
-    * texts as if they were still accepted). Serve through
-    * [[readExactIndexLive]]; the next compact-and-rewrite cycle (to
-    * a fresh epoch dir, the family discipline) purges physically —
-    * rewrite from `readExactIndexLive(...)` via [[compactExactIndex]]
-    * + [[writeExactIndexBucketed]], then
-    * [[graft.sources.Sinks.clearLedger]]. */
+    * `${table}_tombstones` ledger
+    * ([[graft.sources.Generations.appendLedger]]) — a missing ledger
+    * would silently re-DROP copies of taken-down texts as if they were
+    * still accepted. Serve through [[readExactIndexLive]]; the next
+    * compact-and-rewrite cycle purges physically — rewrite from
+    * `readExactIndexLive(...)` via [[compactExactIndex]] +
+    * [[writeExactIndexBucketed]], then
+    * [[graft.sources.Generations.clearLedger]]. */
   def tombstoneExactIndex(spark: org.apache.spark.sql.SparkSession,
                           table: String, docs: DataFrame,
                           textCol: String): Unit =
-    graft.sources.Sinks.appendLedger(spark, s"${table}_tombstones",
+    Generations.appendLedger(spark, s"${table}_tombstones",
       docs.select(xxhash64(col(textCol)).as("__h"),
         col(textCol).as("__t")))
 
   /** Reopen a durable exact index with its takedown ledger applied —
-    * the serving entry point after [[tombstoneExactIndex]] calls. A
-    * torn ledger (committed meta whose generation is missing or
-    * epoch-mismatched) refuses loudly instead of serving the index
-    * untombstoned. */
+    * the serving entry point after [[tombstoneExactIndex]] calls. */
   def readExactIndexLive(spark: org.apache.spark.sql.SparkSession,
-                         table: String, indexDir: String): ExactIndex = {
-    val index = readExactIndex(spark, table, indexDir)
-    graft.sources.Sinks.readLedger(spark, s"${table}_tombstones")
-      .map { case (_, rows) =>
-        tombstoneFromExactIndex(index, rows.select(col("__t")), "__t") }
-      .getOrElse(index)
-  }
+                         table: String, indexDir: String): ExactIndex =
+    exactLive(readExactIndex(spark, table, indexDir),
+      Generations.readLedger(spark, s"${table}_tombstones").map(_._2))
 
-  /** Pointer-rooted durable face of the exact index — the missing
-    * half of [[writeExactIndexBucketed]]'s own epoch advice ("a
-    * LOADED index's append union lazily READS `table`; alternate
-    * epochs and flip a pointer"): generations alternate between
-    * `${prefix}_a` / `${prefix}_b` (tables) rooted at
-    * `indexRoot/gen_a` / `gen_b` (dirs), and the one-row
-    * `${prefix}_meta` (gen, index_dir) written LAST is the atomic
-    * commit — the
-    * [[graft.operators.Similarity.retrainIvfPqIndexBucketed]]
-    * discipline. A crash anywhere before the meta rewrite leaves the
-    * old generation serving untouched (the new one writes to the
-    * OTHER name/dir); a generation torn AFTER its commit refuses at
-    * [[readExactIndex]]'s manifest/epoch validation rather than
-    * serving mixed halves. The superseded generation drops after the
-    * flip, best-effort (a crash there leaves dead files, never a
-    * wrong read). */
+  private def exactLive(index: ExactIndex,
+                        ledger: Option[DataFrame]): ExactIndex =
+    ledger.map(rows =>
+        tombstoneFromExactIndex(index, rows.select(col("__t")), "__t"))
+      .getOrElse(index)
+
+  /** Pointer-rooted durable face of the exact index — the alternate
+    * epochs [[writeExactIndexBucketed]]'s growth-loop advice asks for:
+    * generations alternate between `${prefix}_a` / `${prefix}_b`
+    * tables rooted at `indexRoot/gen_a` / `gen_b` dirs, meta
+    * (gen, index_dir). The generation's own epoch token and MANIFEST
+    * ([[writeExactIndexBucketed]]) commit each generation; the meta
+    * is the pointer flip. */
   def writeExactIndexRooted(spark: org.apache.spark.sql.SparkSession,
                             prefix: String, indexRoot: String,
                             index: ExactIndex,
-                            numBuckets: Int = 64): Unit = {
-    import spark.implicits._
-    val metaTable = s"${prefix}_meta"
-    val cur =
-      if (spark.catalog.tableExists(metaTable))
-        Some(spark.table(metaTable).collect()(0).getAs[String]("gen"))
-      else None
-    val next = if (cur.contains("a")) "b" else "a"
+                            numBuckets: Int = 64): Unit =
+    writeExactGen(spark, prefix, indexRoot,
+      Generations.liveGen(spark, prefix), index, numBuckets)
+
+  private def writeExactGen(spark: org.apache.spark.sql.SparkSession,
+                            prefix: String, indexRoot: String,
+                            cur: Option[String], index: ExactIndex,
+                            numBuckets: Int): Map[String, String] = {
+    val next = Generations.nextGen(cur)
     // the write plan may lazily READ the current generation (a
     // compaction's hashes frame is the old gen's table minus the
     // ledger) — writing to the alternate name/dir is what makes that
     // legal
     writeExactIndexBucketed(index, s"${prefix}_$next",
       s"$indexRoot/gen_$next", numBuckets)
-    graft.sources.Sinks.writeTable(
-      Seq((next, s"$indexRoot/gen_$next")).toDF("gen", "index_dir"),
-      metaTable)
-    cur.filter(_ != next).foreach { old =>
-      spark.sql(s"DROP TABLE IF EXISTS ${prefix}_$old")
-      val p = new org.apache.hadoop.fs.Path(s"$indexRoot/gen_$old")
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(p)) fs.delete(p, true)
-    }
+    val meta = Generations.commit(spark, prefix, Nil,
+      cur.map(g => s"${prefix}_$g").toSeq)(_ =>
+      Seq("gen" -> next, "index_dir" -> s"$indexRoot/gen_$next"))
+    Generations.drop(spark, Nil, cur.map(g => s"$indexRoot/gen_$g").toSeq)
+    meta
   }
+
+  private def exactGen(spark: org.apache.spark.sql.SparkSession,
+                       prefix: String, live: Generations.Live): ExactIndex =
+    readExactIndex(spark, s"${prefix}_${live("gen")}", live("index_dir"))
 
   /** Reopen the live generation of a [[writeExactIndexRooted]] index
     * (raw — the serving sketches and the full hash table; takedowns
     * NOT applied). Refusal semantics ride [[readExactIndex]]'s
     * manifest/epoch validation of the generation the meta names. */
   def readExactIndexRooted(spark: org.apache.spark.sql.SparkSession,
-                           prefix: String): ExactIndex = {
-    val meta = spark.table(s"${prefix}_meta").collect()(0)
-    val gen = meta.getAs[String]("gen")
-    readExactIndex(spark, s"${prefix}_$gen",
-      meta.getAs[String]("index_dir"))
-  }
+                           prefix: String): ExactIndex =
+    exactGen(spark, prefix,
+      Generations.open(spark, prefix, _ => Nil, ledger = false))
 
   /** [[readExactIndexRooted]] with the `${prefix}_tombstones` ledger
     * applied — the serving entry point of the rooted face. The ledger
@@ -1949,19 +1739,8 @@ object Dedup {
     * [[maintainExactIndex]]'s physical purge clears them. */
   def readExactIndexRootedLive(spark: org.apache.spark.sql.SparkSession,
                                prefix: String): ExactIndex = {
-    // index meta + ledger meta fetched in ONE driver action (they are
-    // two sequential 1-row collects otherwise — the reopen floor every
-    // lifecycle step pays); refusal semantics identical to the
-    // readExactIndexRooted + readLedger composition
-    val (meta, ledMeta) = graft.sources.Sinks.metaWithLedgerMeta(spark,
-      s"${prefix}_meta", s"${prefix}_tombstones")
-    val index = readExactIndex(spark, s"${prefix}_${meta("gen")}",
-      meta("index_dir"))
-    ledMeta.map { case (lgen, lepoch) =>
-      val rows = graft.sources.Sinks.resolveLedgerGen(spark,
-        s"${prefix}_tombstones", lgen, lepoch)
-      tombstoneFromExactIndex(index, rows.select(col("__t")), "__t") }
-      .getOrElse(index)
+    val live = Generations.open(spark, prefix, _ => Nil)
+    exactLive(exactGen(spark, prefix, live), live.ledger)
   }
 
   /** ONE-CALL maintenance window for a rooted exact index — the
@@ -1986,77 +1765,43 @@ object Dedup {
     * `expectedItems = ceil(n × headroom)`, `numBits =`
     * `BloomFilter.optimalNumOfBits(expectedItems, targetFpp)` (the
     * published `-n·ln p / ln²2` optimum, shard count unchanged) —
-    * write it to the alternate generation, flip the meta pointer, and
-    * clear the ledger. Cost is one grouped aggregate over the durable
-    * hash table (never a corpus re-read). A quiet window is a true
-    * no-op: the meta row, generation and ledger are untouched
-    * bit-for-bit. */
+    * write it to the alternate generation and clear the ledger. Cost
+    * is one grouped aggregate over the durable hash table (never a
+    * corpus re-read). Window rules:
+    * [[graft.sources.Generations.window]]. */
   def maintainExactIndex(spark: org.apache.spark.sql.SparkSession,
                          prefix: String, indexRoot: String,
                          maxFpp: Double, targetFpp: Double = 0.01,
                          headroom: Double = 2.0,
                          numBuckets: Int = 64): DataFrame = {
     import spark.implicits._
-    def worstFpp(index: ExactIndex): Double =
-      estimatedFpp(index)
-        .agg(coalesce(max(col("est_fpp")), lit(0.0))).collect()(0)
-        .getDouble(0)
-    def pendingCount(): Long =
-      graft.sources.Sinks.readLedger(spark, s"${prefix}_tombstones")
-        .map(_._2.count()).getOrElse(0L)
-    // ONE meta action resolves gen + ledger state; the fpp aggregate
-    // and the pending count fold in ONE further action (a crossJoin of
-    // two 1-row aggregates) — the window's measure phase was 5
-    // sequential driver round-trips, each ~100 ms of fixed floor
-    // (optimization-guide §5)
-    val (meta, ledMeta) = graft.sources.Sinks.metaWithLedgerMeta(spark,
-      s"${prefix}_meta", s"${prefix}_tombstones")
-    val genBefore = meta("gen")
-    val index = readExactIndex(spark, s"${prefix}_$genBefore",
-      meta("index_dir"))
-    val ledgerRows = ledMeta.map { case (lgen, lepoch) =>
-      graft.sources.Sinks.resolveLedgerGen(spark,
-        s"${prefix}_tombstones", lgen, lepoch) }
-    val fppAgg = estimatedFpp(index)
-      .agg(coalesce(max(col("est_fpp")), lit(0.0)).as("__fpp"))
-    val measured = ledgerRows
-      .map(rows => fppAgg.crossJoin(rows.agg(count(lit(1)).as("__p"))))
-      .getOrElse(fppAgg.withColumn("__p", lit(0L)))
-      .collect()(0)
-    val preFpp = measured.getDouble(0)
-    val pending = measured.getLong(1)
-    val fppFired = preFpp > maxFpp
-    val purgeFired = pending > 0L
-    val fired = fppFired || purgeFired
-    if (fired) {
-      // the live view reuses the rows already resolved above — the
-      // tables cannot have moved under a single-writer window
-      val live = ledgerRows
-        .map(rows => tombstoneFromExactIndex(index,
-          rows.select(col("__t")), "__t"))
-        .getOrElse(index)
-      val n = live.hashes.count()
+    // the fpp aggregate and the pending count fold into ONE action (a
+    // crossJoin of two 1-row aggregates); the reopen is one more
+    def measure(live: Generations.Live): (ExactIndex, Double, Long) = {
+      val index = exactGen(spark, prefix, live)
+      val fppAgg = estimatedFpp(index)
+        .agg(coalesce(max(col("est_fpp")), lit(0.0)).as("__fpp"))
+      val r = live.ledger
+        .map(rows => fppAgg.crossJoin(rows.agg(count(lit(1)).as("__p"))))
+        .getOrElse(fppAgg.withColumn("__p", lit(0L)))
+        .collect()(0)
+      (index, r.getDouble(0), r.getLong(1))
+    }
+    val w = Generations.window(Generations.open(spark, prefix, _ => Nil))(
+        measure)(m => m._2 > maxFpp || m._3 > 0L) { case (live, (index, _, _)) =>
+      val kept = exactLive(index, live.ledger)
+      val n = kept.hashes.count()
       val expected = math.max(1L, math.ceil(n * headroom).toLong)
       val bits = math.max(64L, org.apache.spark.util.sketch.BloomFilter
         .optimalNumOfBits(expected, targetFpp))
-      writeExactIndexRooted(spark, prefix, indexRoot,
-        compactExactIndex(live, expected, bits, live.shards), numBuckets)
-      graft.sources.Sinks.clearLedger(spark, s"${prefix}_tombstones")
+      val meta = writeExactGen(spark, prefix, indexRoot, Some(live("gen")),
+        compactExactIndex(kept, expected, bits, kept.shards), numBuckets)
+      Generations.clearLedger(spark, s"${prefix}_tombstones")
+      meta
     }
-    // a quiet window pays no second measure: nothing moved, so
-    // post ≡ pre by construction (and the sketch bytes aren't
-    // re-pulled to the driver on the common every-cron-tick no-op);
-    // the same argument skips the re-read of gen on the no-op path
-    val (postFpp, postPending, genAfter) =
-      if (fired) {
-        val m2 = spark.table(s"${prefix}_meta").collect()(0)
-        val g2 = m2.getAs[String]("gen")
-        (worstFpp(readExactIndex(spark, s"${prefix}_$g2",
-            m2.getAs[String]("index_dir"))),
-          pendingCount(), g2)
-      } else (preFpp, pending, genBefore)
-    Seq((pending, preFpp, fppFired, purgeFired, postFpp, postPending,
-        genAfter != genBefore))
+    val (_, preFpp, pending) = w.pre
+    Seq((pending, preFpp, preFpp > maxFpp, pending > 0L, w.post._2,
+        w.post._3, w.changed))
       .toDF("pending_tombstones", "pre_worst_fpp", "fpp_fired",
         "purge_fired", "post_worst_fpp", "post_pending", "gen_changed")
   }
@@ -2156,148 +1901,61 @@ object Dedup {
   /** Persist an [[ExactIndex]] durably, so the production admission
     * loop (build → admit → append → admit …, q101's gate) survives
     * driver restarts instead of re-hashing the accepted corpus per
-    * session. Layout under `indexDir`:
-    *   - `hashes/`   — the verification table's parquet data; the
-    *     catalog entry `table` is EXTERNAL, bucketed+sorted on `__h`
-    *     at this location (anti join co-located shuffle-free on the
-    *     index side — the [[writeNgramIndexBucketed]] discipline).
-    *     External, not managed: the data outlives the default
-    *     in-memory catalog, and [[readExactIndex]] re-registers the
-    *     table (same bucket spec, LOCATION here) in a fresh session.
+    * session — a directory-backed generation
+    * ([[graft.sources.Generations.writeExternal]] +
+    * [[graft.sources.Generations.commitManifest]]) under `indexDir`:
+    *   - `hashes/`   — the verification table, EXTERNAL, bucketed+
+    *     sorted on `__h` (anti join co-located shuffle-free on the
+    *     index side — the [[writeNgramIndexBucketed]] discipline);
+    *     external, not managed, so the data outlives the default
+    *     in-memory catalog and [[readExactIndex]] re-registers it in
+    *     a fresh session.
     *   - `sketches/` — one binary file per Bloom shard plus a
-    *     MANIFEST recording geometry (expectedItems numBits shards
-    *     numBuckets). Staged into `sketches.tmp` and RENAMED into
-    *     place, manifest included — a crash mid-write leaves either
-    *     the old consistent dir or the tmp (ignored), never a
-    *     half-visible sketch set; [[readExactIndex]] additionally
-    *     validates the manifest token count, so a torn manifest
-    *     refuses rather than mis-parsing.
+    *     MANIFEST (expectedItems numBits shards numBuckets epoch):
+    *     sketches and table are either the SAME epoch or the read
+    *     refuses, so stale sketches over a newer table (Bloom false
+    *     negatives silently admitting duplicates) are never served.
     *
-    * CRASH CONSISTENCY is epoch-token based, and every torn state
-    * REFUSES to load rather than degrading: (1) the table data
-    * commits; (2) a fresh epoch token file lands INSIDE `hashes/`
-    * (`_graft_epoch_<uuid>` — underscore-prefixed, invisible to the
-    * parquet reader); (3) the sketches + MANIFEST (which records the
-    * same uuid) stage into a tmp dir and atomically RENAME into
-    * place. A crash mid-table leaves the old manifest pointing at a
-    * token the Overwrite already wiped → refusal; a crash before the
-    * rename leaves the old (or no) manifest → old consistent state or
-    * refusal; only the full sequence yields a manifest whose token
-    * exists. This is strictly stronger than ordering arguments about
-    * which half may be stale: sketches and table are either the SAME
-    * epoch or the read fails loudly — stale sketches over a newer
-    * table (Bloom false negatives silently admitting duplicates) can
-    * never be served.
-    *
-    * Epoch discipline for the growth loop: a LOADED index's
-    * [[appendToExactIndex]] union lazily READS `table`; writing it
-    * back to the same `table`/`indexDir` would overwrite its own
-    * input mid-scan. Alternate epochs (…`_a`/…`_b`, or versioned
-    * dirs) and flip a pointer, as with any Spark table rebuilt from
-    * itself. */
+    * Growth loop: a LOADED index's [[appendToExactIndex]] union
+    * lazily READS `table`, so writing it back to the same
+    * `table`/`indexDir` would overwrite its own input mid-scan —
+    * alternate generations with [[writeExactIndexRooted]]. */
   def writeExactIndexBucketed(index: ExactIndex, table: String,
                               indexDir: String,
                               numBuckets: Int = 64): Unit = {
     val spark = index.hashes.sparkSession
-    val root = new org.apache.hadoop.fs.Path(indexDir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.mkdirs(root)
-    // 1. the hash table, external at indexDir/hashes
-    index.hashes.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .option("path", s"$indexDir/hashes")
-      .bucketBy(numBuckets, "__h").sortBy("__h")
-      .format("parquet")
-      .saveAsTable(table)
-    // 2. the epoch token, after the table committed
-    val epoch = java.util.UUID.randomUUID().toString
-    val tok = fs.create(new org.apache.hadoop.fs.Path(
-      s"$indexDir/hashes", s"_graft_epoch_$epoch"), true)
-    tok.close()
-    // 3. sketches + manifest (recording the epoch), staged then
-    // atomically renamed
-    val sk = new org.apache.hadoop.fs.Path(root, "sketches")
-    val tmp = new org.apache.hadoop.fs.Path(root, "sketches.tmp")
-    if (fs.exists(tmp)) fs.delete(tmp, true)
-    fs.mkdirs(tmp)
-    index.blooms.zipWithIndex.foreach { case (b, i) =>
-      val os = fs.create(
-        new org.apache.hadoop.fs.Path(tmp, f"shard_$i%05d.bloom"), true)
-      try os.write(b) finally os.close()
+    val epoch = Generations.writeExternal(index.hashes, table,
+      s"$indexDir/hashes", "__h", numBuckets)
+    Generations.commitManifest(spark, indexDir, "sketches",
+      Seq(index.expectedItems, index.numBits, index.shards, numBuckets),
+      epoch) { tmp =>
+      val fs = tmp.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      index.blooms.zipWithIndex.foreach { case (b, i) =>
+        val os = fs.create(
+          new org.apache.hadoop.fs.Path(tmp, f"shard_$i%05d.bloom"), true)
+        try os.write(b) finally os.close()
+      }
     }
-    val os = fs.create(new org.apache.hadoop.fs.Path(tmp, "MANIFEST"), true)
-    try os.write(
-      (s"${index.expectedItems} ${index.numBits} ${index.shards} " +
-        s"$numBuckets $epoch").getBytes("UTF-8"))
-    finally os.close()
-    if (fs.exists(sk)) fs.delete(sk, true)
-    require(fs.rename(tmp, sk), s"rename $tmp -> $sk failed")
   }
 
-  /** Reopen a durable index written by [[writeExactIndexBucketed]].
-    * Works in a FRESH session: if the default in-memory catalog has
-    * forgotten `table`, it is re-registered as the same external
-    * bucketed table over `indexDir/hashes` (schema is fixed by
-    * construction: `__h BIGINT, __t STRING`). Refuses loudly on every
-    * torn or mismatched state: missing/truncated manifest, a manifest
-    * whose epoch token is absent from the hashes dir (sketches and
-    * table from DIFFERENT write attempts — serving them together
-    * could silently admit duplicates), or a pre-existing catalog
-    * table pointing at a different location or bucket count than this
-    * indexDir (the cross-epoch mixup of reusing one table name across
-    * epoch dirs). */
+  /** Reopen a durable index written by [[writeExactIndexBucketed]],
+    * in a fresh session too ([[graft.sources.Generations.attachExternal]]).
+    * Every torn or mismatched state refuses loudly — serving one
+    * write's sketches over another's table could silently admit
+    * duplicates. */
   def readExactIndex(spark: org.apache.spark.sql.SparkSession, table: String,
                      indexDir: String): ExactIndex = {
     val dir = new org.apache.hadoop.fs.Path(s"$indexDir/sketches")
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val manifest = new org.apache.hadoop.fs.Path(dir, "MANIFEST")
-    require(fs.exists(manifest),
-      s"no MANIFEST under $dir — torn or missing sketch write " +
-        "(sketches commit by atomic rename; re-run writeExactIndexBucketed)")
-    def readAll(p: org.apache.hadoop.fs.Path): Array[Byte] = {
-      val in = fs.open(p)
-      val bos = new java.io.ByteArrayOutputStream()
-      try org.apache.hadoop.io.IOUtils.copyBytes(in, bos, 65536, false)
-      finally in.close()
-      bos.toByteArray
-    }
-    val parts = new String(readAll(manifest), "UTF-8").trim.split("\\s+")
-    require(parts.length == 5 && parts.take(4).forall(_.forall(_.isDigit)),
-      s"torn MANIFEST under $dir (${parts.length} tokens, expected 5: " +
-        "expectedItems numBits shards numBuckets epoch) — re-run " +
-        "writeExactIndexBucketed")
-    val Array(items, bits, k, buckets, epoch) = parts
-    // epoch cross-check: the sketches must describe THIS table write —
-    // a crash mid-rewrite wipes the old token with the old table data,
-    // so a manifest/token mismatch means torn state, never serve it
-    require(fs.exists(new org.apache.hadoop.fs.Path(
-        s"$indexDir/hashes", s"_graft_epoch_$epoch")),
-      s"epoch token _graft_epoch_$epoch missing from $indexDir/hashes — " +
-        "the sketch set and the hash table are from different write " +
-        "attempts (torn rewrite); re-run writeExactIndexBucketed")
+    val Seq(items, bits, k, buckets) = Generations.readManifest(spark,
+      dir.toString, Seq("expectedItems", "numBits", "shards", "numBuckets"),
+      s"$indexDir/hashes", "writeExactIndexBucketed")
     val blooms = IndexedSeq.tabulate(k.toInt) { i =>
-      readAll(new org.apache.hadoop.fs.Path(dir, f"shard_$i%05d.bloom"))
+      val in = fs.open(new org.apache.hadoop.fs.Path(dir, f"shard_$i%05d.bloom"))
+      try in.readAllBytes() finally in.close()
     }
-    if (!spark.catalog.tableExists(table))
-      spark.sql(s"CREATE TABLE $table (__h BIGINT, __t STRING) " +
-        s"USING parquet CLUSTERED BY (__h) SORTED BY (__h) " +
-        s"INTO ${buckets.toInt} BUCKETS LOCATION '$indexDir/hashes'")
-    else {
-      // an EXISTING catalog entry must actually be this index: pairing
-      // this dir's sketches with a table registered over some OTHER
-      // epoch's location would Bloom-hit on docs the verification
-      // table lacks → silent duplicate admission
-      val meta = spark.sessionState.catalog.getTableMetadata(
-        org.apache.spark.sql.catalyst.TableIdentifier(table))
-      val want = new org.apache.hadoop.fs.Path(s"$indexDir/hashes")
-        .makeQualified(fs.getUri, fs.getWorkingDirectory).toUri.getPath
-      val got = new org.apache.hadoop.fs.Path(meta.location).toUri.getPath
-      require(got == want,
-        s"catalog table '$table' points at $got, not $want — drop it or " +
-          "use a per-epoch table name alongside per-epoch index dirs")
-      require(meta.bucketSpec.exists(_.numBuckets == buckets.toInt),
-        s"catalog table '$table' bucket spec ${meta.bucketSpec} does not " +
-          s"match the manifest's $buckets buckets")
-    }
+    Generations.attachExternal(spark, table, "__h BIGINT, __t STRING", "__h",
+      buckets.toInt, s"$indexDir/hashes")
     ExactIndex(spark.table(table), blooms, items.toLong, bits.toLong)
   }
 

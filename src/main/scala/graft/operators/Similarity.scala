@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.sources.{Generations, Sinks}
 
 /** Approximate-nearest-neighbor search over an embedding column
   * (`array<float>`). Baseline: brute-force cosine top-k — one scan of
@@ -186,7 +187,7 @@ object Similarity {
 
   /** A built hyperplane-LSH index: the hashed corpus, ready to persist
     * (or write bucketed on `bucket` via
-    * [[graft.sources.Sinks.writeBucketed]]) and search many times —
+    * [[Sinks.writeBucketed]]) and search many times —
     * the build-once/search-many split a production ANN service needs;
     * the corpus is never re-hashed per query batch. */
   final case class LshIndex(hashedCorpus: DataFrame, planes: Int)
@@ -213,52 +214,39 @@ object Similarity {
     * (the probe-join key: [[searchLsh]]'s multi-probe explode then
     * joins the index without re-shuffling it — the
     * [[writeIvfPqIndexBucketed]] build-once/search-many shape) plus a
-    * one-row `_meta` table carrying `planes` and the write EPOCH,
-    * written LAST as the commit marker: a torn FIRST write leaves no
-    * resolvable meta, and a torn same-prefix REBUILD (crash after the
-    * hashed-table overwrite, before the meta) leaves the OLD meta
-    * pointing at a NEW table whose epoch token it lacks — so
-    * [[readLshIndex]] refuses ([[graft.sources.Sinks.stampEpoch]])
+    * one-row `_meta` (planes, epoch, hashed_table) committed through
+    * [[graft.sources.Generations]]: a torn same-prefix rebuild refuses
     * instead of probing with the wrong plane count, whose buckets
-    * would simply never match: silent zero recall. Rebuilds with
+    * would simply never match — silent zero recall. Rebuilds with
     * different planes should still go to a fresh prefix. */
   def writeLshIndexBucketed(index: LshIndex, prefix: String,
                             numBuckets: Int = 64): Unit = {
-    val spark = index.hashedCorpus.sparkSession
-    import spark.implicits._
-    graft.sources.Sinks.writeBucketed(index.hashedCorpus,
-      s"${prefix}_hashed", Seq("bucket"), numBuckets)
-    val epoch = graft.sources.Sinks.stampEpoch(spark, Seq(s"${prefix}_hashed"))
-    graft.sources.Sinks.writeTable(
-      Seq((index.planes, epoch)).toDF("planes", "epoch"),
-      s"${prefix}_meta")
+    val hashed = s"${prefix}_hashed"
+    Sinks.writeBucketed(index.hashedCorpus, hashed, Seq("bucket"),
+      numBuckets)
+    Generations.commit(index.hashedCorpus.sparkSession, prefix,
+      Seq(hashed))(lshRow(index.planes, hashed))
   }
 
-  /** Reopen an index written by [[writeLshIndexBucketed]] (or swapped
-    * in place by [[purgeLshIndex]] — the meta's pointer column
-    * resolves the live A/B generation); refuses a torn same-prefix
-    * rebuild (epoch-token mismatch). */
+  private def lshRow(planes: Int, hashed: String)(
+      epoch: String): Seq[(String, Any)] =
+    Seq("planes" -> planes, "epoch" -> epoch, "hashed_table" -> hashed)
+
+  private def lshTables(m: Map[String, String]): Seq[String] =
+    Seq(m("hashed_table"))
+
+  /** The index a reopen names, with its ledger (if read) applied. */
+  private def lshFrom(spark: org.apache.spark.sql.SparkSession,
+                      live: Generations.Live): LshIndex =
+    LshIndex(withoutIds(spark.table(live("hashed_table")), live.ledger),
+      live("planes").toInt)
+
+  /** Reopen the live generation of a durable LSH index (raw —
+    * takedowns not applied). */
   def readLshIndex(spark: org.apache.spark.sql.SparkSession,
                    prefix: String): LshIndex =
-    readLshIndexResolved(spark, prefix)._1
-
-  /** [[readLshIndex]] plus the resolved live hashed-table name (meta
-    * rows written by [[writeLshIndexBucketed]] predate the A/B purge
-    * and carry no pointer column — those resolve to the original
-    * `_hashed` name). */
-  private def readLshIndexResolved(
-      spark: org.apache.spark.sql.SparkSession,
-      prefix: String): (LshIndex, String) = {
-    val meta = spark.table(s"${prefix}_meta").collect()(0)
-    val hashedTable =
-      if (meta.schema.fieldNames.contains("hashed_table"))
-        meta.getAs[String]("hashed_table")
-      else s"${prefix}_hashed"
-    graft.sources.Sinks.requireEpoch(spark, Seq(hashedTable),
-      meta.getAs[String]("epoch"))
-    (LshIndex(spark.table(hashedTable), meta.getAs[Int]("planes")),
-      hashedTable)
-  }
+    lshFrom(spark, Generations.open(spark, prefix, lshTables,
+      ledger = false))
 
   /** Grow a DURABLE LSH index O(new) — the last cell of the durable
     * append matrix ([[appendToIvfIndexBucketed]] /
@@ -267,40 +255,22 @@ object Similarity {
     * (data-oblivious — an appended batch buckets exactly as a full
     * rebuild would, so unlike the IVF families there is no drift to
     * watch) and APPENDS into the live hashed table's existing bucket
-    * layout — the corpus-scale side never rewrites. Crash discipline
-    * as the siblings: the epoch token clears FIRST (a crash
-    * mid-append refuses loudly at read — a half-appended generation
-    * must never serve), the fresh stamp + meta rewrite commit at the
-    * end (pointer preserved for rooted metas). */
+    * layout ([[graft.sources.Generations.appendBucketed]]). */
   def appendToLshIndexBucketed(spark: org.apache.spark.sql.SparkSession,
                                prefix: String, newVecs: DataFrame,
                                idCol: String, vecCol: String): Unit = {
-    import spark.implicits._
-    val (index, hashedTable) = readLshIndexResolved(spark, prefix)
-    val newRows = buildLsh(newVecs, idCol, vecCol, index.planes)
-      .hashedCorpus
-    val tableMeta = spark.sessionState.catalog.getTableMetadata(
-      org.apache.spark.sql.catalyst.TableIdentifier(hashedTable))
-    val numBuckets = tableMeta.bucketSpec
-      .getOrElse(sys.error(s"$hashedTable is not bucketed")).numBuckets
-    graft.sources.Sinks.clearEpochTokens(spark, hashedTable)
-    newRows.select(spark.table(hashedTable).columns.map(col): _*)
-      .write.mode(org.apache.spark.sql.SaveMode.Append)
-      .bucketBy(numBuckets, "bucket").sortBy("bucket")
-      .format("parquet")
-      .saveAsTable(hashedTable)
-    val epoch = graft.sources.Sinks.stampEpoch(spark, Seq(hashedTable))
-    graft.sources.Sinks.writeTable(
-      Seq((index.planes, epoch, hashedTable))
-        .toDF("planes", "epoch", "hashed_table"),
-      s"${prefix}_meta")
+    val live = Generations.open(spark, prefix, lshTables, ledger = false)
+    val (hashed, planes) = (live("hashed_table"), live("planes").toInt)
+    Generations.appendBucketed(spark, hashed,
+      buildLsh(newVecs, idCol, vecCol, planes).hashedCorpus, "bucket")
+    Generations.commit(spark, prefix, Seq(hashed))(lshRow(planes, hashed))
   }
 
   /** TAKEDOWN support for a durable LSH index — closing the compliance
     * matrix across ALL four durable vector families ([[tombstoneIvf]]
-    * / [[tombstoneIvfSq]] / [[tombstoneIvfPq]] / this, all riding the
-    * crash-safe [[graft.sources.Sinks.appendLedger]] discipline):
-    * O(new) ledger filing, logical exclusion at every live read
+    * / [[tombstoneIvfSq]] / [[tombstoneIvfPq]] / this, all riding
+    * [[graft.sources.Generations.appendLedger]]): O(new) ledger
+    * filing, logical exclusion at every live read
     * ([[readLshIndexLive]] / [[searchLshLive]]), and physical purge +
     * ledger clear at the next [[purgeLshIndex]]. Unlike the IVF
     * families there is NO drift dimension here — hyperplanes are
@@ -310,18 +280,14 @@ object Similarity {
   def tombstoneLsh(spark: org.apache.spark.sql.SparkSession,
                    prefix: String, ids: DataFrame,
                    idCol: String): Unit =
-    graft.sources.Sinks.appendLedger(spark, s"${prefix}_tombstones",
+    Generations.appendLedger(spark, s"${prefix}_tombstones",
       tombstoneIds(ids, idCol))
 
   /** The live tombstone set of a durable LSH index (empty frame if
-    * none were ever COMMITTED; a torn ledger refuses loudly — see
-    * [[graft.sources.Sinks.readLedger]]). */
+    * none were ever COMMITTED; a torn ledger refuses loudly). */
   def readLshTombstones(spark: org.apache.spark.sql.SparkSession,
-                        prefix: String): DataFrame = {
-    import spark.implicits._
-    graft.sources.Sinks.readLedger(spark, s"${prefix}_tombstones")
-      .map(_._2).getOrElse(Seq.empty[Long].toDF("neighbor_id"))
-  }
+                        prefix: String): DataFrame =
+    committedTombstones(spark, prefix)
 
   /** Reopen a durable LSH index with tombstones applied LOGICALLY:
     * the hashed-corpus side anti-joins the (broadcast, bounded)
@@ -330,13 +296,8 @@ object Similarity {
     * reveals the live runner-up. The plane count passes through
     * unchanged (geometry is data-oblivious). */
   def readLshIndexLive(spark: org.apache.spark.sql.SparkSession,
-                       prefix: String): LshIndex = {
-    val idx = readLshIndex(spark, prefix)
-    LshIndex(idx.hashedCorpus.join(
-        broadcast(readLshTombstones(spark, prefix)),
-        Seq("neighbor_id"), "left_anti"),
-      idx.planes)
-  }
+                       prefix: String): LshIndex =
+    lshFrom(spark, Generations.open(spark, prefix, lshTables))
 
   /** Search a DURABLE LSH index with its tombstones applied — the
     * serving entry point after takedowns ([[searchIvfLive]]'s
@@ -350,50 +311,26 @@ object Similarity {
     * only, because frozen hyperplanes cannot drift (no recall probe,
     * no refit: an appended batch buckets exactly as a full rebuild
     * would, so the only state that rots is UNDELETED tombstoned rows).
-    * If the ledger is empty the call is a quiet no-op — no table
-    * write, meta bit-identical. Otherwise the surviving hashed rows
-    * rewrite ONCE, bucketed, into the ALTERNATE table of the A/B pair
-    * (a bucketed table cannot be overwritten from a plan still
-    * serving readers), the fresh epoch stamps, the one-row meta
-    * rewrite is the atomic pointer+epoch flip, the superseded
-    * generation drops last and the ledger clears — the
-    * [[retrainIvfSqIndexBucketed]] crash discipline. Cost is one
-    * bucketed shuffle over the SURVIVING signature rows — never a
-    * re-hash of the corpus (signatures are already materialized).
-    * Returns one bounded report row
-    * `(pending_tombstones, purged, epoch_changed)`. */
+    * A firing window rewrites the surviving hashed rows ONCE, bucketed
+    * (inheriting the live bucket count), into the ALTERNATE table of
+    * the A/B pair — a bucketed table cannot be overwritten from a plan
+    * still serving readers. Cost is one bucketed shuffle over the
+    * SURVIVING signature rows — never a re-hash of the corpus. Returns
+    * one bounded report row `(pending_tombstones, purged,
+    * epoch_changed)`; window rules:
+    * [[graft.sources.Generations.window]]. */
   def purgeLshIndex(spark: org.apache.spark.sql.SparkSession,
-                    prefix: String, numBuckets: Int = 64): DataFrame = {
-    import spark.implicits._
-    val (index, liveHashed) = readLshIndexResolved(spark, prefix)
-    val tombstones = readLshTombstones(spark, prefix).localCheckpoint()
-    val pending = tombstones.count()
-    if (pending == 0L)
-      return Seq((0L, false, false))
-        .toDF("pending_tombstones", "purged", "epoch_changed")
-    val otherHashed =
-      if (liveHashed == s"${prefix}_hashed") s"${prefix}_hashed_b"
-      else s"${prefix}_hashed"
-    // inherit the LIVE generation's bucket count (the
-    // appendToIvfSqIndexBucketed discipline): a purge must never
-    // silently re-layout the index because a caller took the default
-    val buckets = spark.sessionState.catalog.getTableMetadata(
-        org.apache.spark.sql.catalyst.TableIdentifier(liveHashed))
-      .bucketSpec.map(_.numBuckets).getOrElse(numBuckets)
-    val survivors = index.hashedCorpus.join(broadcast(tombstones),
-      Seq("neighbor_id"), "left_anti")
-    graft.sources.Sinks.writeBucketed(survivors, otherHashed,
-      Seq("bucket"), buckets)
-    val epoch = graft.sources.Sinks.stampEpoch(spark, Seq(otherHashed))
-    graft.sources.Sinks.writeTable(
-      Seq((index.planes, epoch, otherHashed))
-        .toDF("planes", "epoch", "hashed_table"),
-      s"${prefix}_meta")
-    spark.sql(s"DROP TABLE IF EXISTS $liveHashed")
-    graft.sources.Sinks.clearLedger(spark, s"${prefix}_tombstones")
-    Seq((pending, true, true))
-      .toDF("pending_tombstones", "purged", "epoch_changed")
-  }
+                    prefix: String, numBuckets: Int = 64): DataFrame =
+    Generations.purgeWindow(spark, prefix, lshTables) { live =>
+      val hashed = live("hashed_table")
+      val other = Generations.otherSlot(hashed, s"${prefix}_hashed")
+      val index = lshFrom(spark, live)
+      Sinks.writeBucketed(index.hashedCorpus, other, Seq("bucket"),
+        Generations.bucketCount(spark, hashed).getOrElse(numBuckets))
+      Generations.commit(spark, prefix, Seq(other), Seq(hashed))(
+        lshRow(index.planes, other))
+    }.select(col("pending_tombstones"), col("fired").as("purged"),
+      col("gen_changed").as("epoch_changed"))
 
   /** Search a built LSH index: each query probes its own bucket plus
     * all 1-bit-flip neighbor buckets (multi-probe), then exact cosine
@@ -587,33 +524,19 @@ object Similarity {
         assignCells(vecs, "__rid", "__rvec", newCents)))
   }
 
-  /** The A/B generation pair for a durable IVF cells table: retrain
-    * writes the NEW generation beside the live one (a bucketed table
-    * cannot be overwritten from a plan that reads it, and doing so
-    * would yank files under live readers), then flips the meta
-    * pointer — the one-row write that is already this family's commit
-    * point. */
-  private def ivfOtherCells(prefix: String, live: String): String =
-    if (live == s"${prefix}_cells") s"${prefix}_cells_b"
-    else s"${prefix}_cells"
+  private def ivfTables(prefix: String)(m: Map[String, String])
+      : Seq[String] =
+    Seq(m("cells_table"), s"${prefix}_centroids")
 
-  /** [[readIvfIndex]] plus the resolved live cells-table name (meta
-    * generations written before the retrain API carried no pointer
-    * column — those resolve to the original `_cells` name). */
-  private def readIvfIndexResolved(
-      spark: org.apache.spark.sql.SparkSession,
-      prefix: String): (IvfIndex, String) = {
-    val meta = spark.table(s"${prefix}_meta").collect()(0)
-    val cellsTable =
-      if (meta.schema.fieldNames.contains("cells_table"))
-        meta.getAs[String]("cells_table")
-      else s"${prefix}_cells"
-    graft.sources.Sinks.requireEpoch(spark,
-      Seq(cellsTable, s"${prefix}_centroids"),
-      meta.getAs[String]("epoch"))
-    (IvfIndex(spark.table(s"${prefix}_centroids"),
-      spark.table(cellsTable)), cellsTable)
-  }
+  private def ivfRow(cells: String)(epoch: String): Seq[(String, Any)] =
+    Seq("epoch" -> epoch, "cells_table" -> cells)
+
+  /** The index a reopen names, with its ledger (if read) applied to
+    * the cells side. */
+  private def ivfFrom(spark: org.apache.spark.sql.SparkSession,
+                      prefix: String, live: Generations.Live): IvfIndex =
+    IvfIndex(spark.table(s"${prefix}_centroids"),
+      withoutIds(spark.table(live("cells_table")), live.ledger))
 
   /** Retrain a DURABLE IVF index in place after its [[driftDecision]]
     * fires — the remediation the drift gate was missing: everything
@@ -623,62 +546,43 @@ object Similarity {
     * durable cells rows re-shaped as (`__rid`, `__rvec`) and must
     * return the bounded fit sample (a hash-mod or per-cell-capped
     * slice; the retrain scans ONLY what it returns during the Lloyd
-    * steps).
-    *
-    * GENERATION SWAP, crash-stated: (1) the re-assigned cells write
-    * to the ALTERNATE table of the A/B pair — live readers and a
-    * crash here see the old generation untouched; (2) the centroids
-    * table rewrites from the driver-local fitted frame (its Overwrite
-    * wipes the old epoch token, so a crash from here on refuses
-    * loudly at [[readIvfIndex]] — the append path's poison-window
-    * semantics); (3) a FRESH epoch stamps the new pair; (4) the meta
-    * rewrite commits, flipping the cells pointer atomically with the
-    * epoch; (5) the superseded generation drops (best-effort — a
-    * crash between 4 and 5 leaves dead files, never a wrong or
-    * refused read). */
+    * steps). The re-assigned cells write to the ALTERNATE table of
+    * the A/B pair; the centroids table rewrites in place from the
+    * driver-local fitted frame (its Overwrite wipes the old token, so
+    * a crash from there until the commit refuses loudly). */
   def retrainIvfIndexBucketed(spark: org.apache.spark.sql.SparkSession,
                               prefix: String,
                               sampleFilter: DataFrame => DataFrame,
                               lloydIters: Int = 1,
-                              numBuckets: Int = 64): Unit = {
-    import spark.implicits._
-    // merged one-action reopen: index meta + tombstone-ledger meta
-    // (was two sequential 1-row collects — optimization-guide §5)
-    val (meta, ledMeta) = graft.sources.Sinks.metaWithLedgerMeta(spark,
-      s"${prefix}_meta", s"${prefix}_tombstones")
-    val liveCells = meta.getOrElse("cells_table", s"${prefix}_cells")
-    graft.sources.Sinks.requireEpoch(spark,
-      Seq(liveCells, s"${prefix}_centroids"), meta("epoch"))
-    val index = IvfIndex(spark.table(s"${prefix}_centroids"),
-      spark.table(liveCells))
+                              numBuckets: Int = 64): Unit =
+    retrainIvfGen(spark, prefix,
+      Generations.open(spark, prefix, ivfTables(prefix)), sampleFilter,
+      lloydIters, numBuckets)
+
+  private def retrainIvfGen(spark: org.apache.spark.sql.SparkSession,
+                            prefix: String, live: Generations.Live,
+                            sampleFilter: DataFrame => DataFrame,
+                            lloydIters: Int,
+                            numBuckets: Int): Map[String, String] = {
     // PHYSICAL PURGE of filed takedowns ([[tombstoneIvf]]): the
     // re-assignment pass skips tombstoned rows, so the new generation
-    // never contains them — an empty ledger is a no-op anti-join
-    val tombstones = ledMeta.map { case (lgen, lepoch) =>
-        graft.sources.Sinks.resolveLedgerGen(spark,
-          s"${prefix}_tombstones", lgen, lepoch) }
-      .getOrElse(Seq.empty[Long].toDF("neighbor_id"))
+    // never contains them
+    val index = ivfFrom(spark, prefix, live)
     val vecs = index.corpusCells
-      .join(broadcast(tombstones), Seq("neighbor_id"), "left_anti")
       .select(col("neighbor_id").as("__rid"), col("__cv").as("__rvec"))
     val newCents = retrainIvfCentroids(index.centroids,
       sampleFilter(vecs), "__rid", "__rvec", lloydIters)
-    val other = ivfOtherCells(prefix, liveCells)
-    val newCells = cellRows(vecs, "__rid", "__rvec",
-      assignCells(vecs, "__rid", "__rvec", newCents))
-    graft.sources.Sinks.writeBucketed(newCells, other, Seq("cell"),
+    val cells = live("cells_table")
+    val other = Generations.otherSlot(cells, s"${prefix}_cells")
+    Sinks.writeBucketed(cellRows(vecs, "__rid", "__rvec",
+      assignCells(vecs, "__rid", "__rvec", newCents)), other, Seq("cell"),
       numBuckets)
-    graft.sources.Sinks.writeTable(newCents, s"${prefix}_centroids")
-    val epoch = graft.sources.Sinks.stampEpoch(spark,
-      Seq(other, s"${prefix}_centroids"))
-    graft.sources.Sinks.writeTable(
-      Seq((epoch, other)).toDF("epoch", "cells_table"),
-      s"${prefix}_meta")
-    spark.sql(s"DROP TABLE IF EXISTS $liveCells")
-    // the purge is in the committed generation — clear the ledger
-    // (crash between commit and clear re-purges harmlessly: the
-    // anti-join finds nothing to drop)
-    graft.sources.Sinks.clearLedger(spark, s"${prefix}_tombstones")
+    Sinks.writeTable(newCents, s"${prefix}_centroids")
+    val meta = Generations.commit(spark, prefix,
+      Seq(other, s"${prefix}_centroids"), Seq(cells))(ivfRow(other))
+    // a crash between commit and clear re-purges harmlessly
+    Generations.clearLedger(spark, s"${prefix}_tombstones")
+    meta
   }
 
   /** The ONE-CALL maintenance window for a durable IVF index —
@@ -690,9 +594,8 @@ object Similarity {
     * sample and the fit-sample policy. Probe → [[driftDecision]] →
     * (conditional) [[retrainIvfIndexBucketed]] → re-probe; one
     * bounded report row `(n_queries, pre_mean_recall, retrain_fired,
-    * post_mean_recall, post_retrain, epoch_changed)`. An undrifted
-    * index is a no-op — no generation write, meta row untouched,
-    * `post ≡ pre` without a second probe. */
+    * post_mean_recall, post_retrain, epoch_changed)`. Window rules:
+    * [[graft.sources.Generations.window]]. */
   def maintainIvfIndex(spark: org.apache.spark.sql.SparkSession,
                        prefix: String, queries: DataFrame,
                        idCol: String, vecCol: String, k: Int,
@@ -700,34 +603,36 @@ object Similarity {
                        sampleFilter: DataFrame => DataFrame,
                        lloydIters: Int = 1, nProbe: Int = 2,
                        numBuckets: Int = 64): DataFrame = {
-    import spark.implicits._
-    def decide(): (Long, Double, Boolean, String) = {
-      // the LIVE view on both sides (tombstones applied): the served
-      // search can't return a taken-down id, and the brute-force
-      // truth never counts one as a miss — an empty ledger reads as
-      // an empty broadcast anti-join, a no-op. The reopen is the
-      // merged one-action read, and the epoch for the change flag
-      // rides it (the window paid 3 sequential 1-row collects per
-      // decision point before; the no-op path also skips the closing
-      // epoch re-read — nothing fired, nothing moved under this
-      // single-writer window)
-      val (index, epoch) = readIvfIndexLiveWithEpoch(spark, prefix)
+    // the LIVE view on both sides (tombstones applied): the served
+    // search can't return a taken-down id, and the brute-force truth
+    // never counts one as a miss
+    def decide(live: Generations.Live): (Long, Double, Boolean) = {
+      val index = ivfFrom(spark, prefix, live)
       val corpus = index.corpusCells
         .select(col("neighbor_id").as(idCol), col("__cv").as(vecCol))
       val ann = searchIvf(index, queries, idCol, vecCol, k, nProbe)
-      val d = driftDecision(
-        recallProbe(ann, corpus, queries, idCol, vecCol, k), minRecall)
-        .collect()(0)
-      (d.getLong(0), d.getDouble(1), d.getBoolean(2), epoch)
+      decision(recallProbe(ann, corpus, queries, idCol, vecCol, k),
+        minRecall)
     }
-    val (nQ, preMean, fired, epochBefore) = decide()
-    if (fired)
-      retrainIvfIndexBucketed(spark, prefix, sampleFilter, lloydIters,
-        numBuckets)
-    val (_, postMean, postRetrain, epochAfter) = if (fired) decide()
-      else (nQ, preMean, fired, epochBefore)
-    Seq((nQ, preMean, fired, postMean, postRetrain,
-        epochAfter != epochBefore))
+    driftReport(spark, Generations.window(
+        Generations.open(spark, prefix, ivfTables(prefix)))(decide)(_._3)(
+      (live, _) => retrainIvfGen(spark, prefix, live, sampleFilter,
+        lloydIters, numBuckets)))
+  }
+
+  /** [[driftDecision]] collected: (n_queries, mean_recall, fired). */
+  private def decision(probe: DataFrame,
+                       minRecall: Double): (Long, Double, Boolean) = {
+    val d = driftDecision(probe, minRecall).collect()(0)
+    (d.getLong(0), d.getDouble(1), d.getBoolean(2))
+  }
+
+  /** The vector families' one report row. */
+  private def driftReport(spark: org.apache.spark.sql.SparkSession,
+                          w: Generations.Window[(Long, Double, Boolean)])
+      : DataFrame = {
+    import spark.implicits._
+    Seq((w.pre._1, w.pre._2, w.fired, w.post._2, w.post._3, w.changed))
       .toDF("n_queries", "pre_mean_recall", "retrain_fired",
         "post_mean_recall", "post_retrain", "epoch_changed")
   }
@@ -738,69 +643,48 @@ object Similarity {
     * siblings): the batch assigns to the FROZEN centroids (the
     * [[appendToIvf]] contract — recall drift under distribution shift
     * is the [[maintainIvfIndex]] window's job) and APPENDS into the
-    * live cells table's existing bucket layout. Crash discipline
-    * shared with the siblings: epoch token clears FIRST (a
-    * half-appended generation refuses loudly at read), fresh stamp +
-    * meta rewrite commit last. `newVecs`' vector column must carry
-    * the same element type the index was built from (same source,
-    * same type — the bucketed table's schema is the contract). */
+    * live cells table's existing bucket layout
+    * ([[graft.sources.Generations.appendBucketed]]). `newVecs`' vector
+    * column must carry the same element type the index was built from
+    * (same source, same type — the bucketed table's schema is the
+    * contract). */
   def appendToIvfIndexBucketed(spark: org.apache.spark.sql.SparkSession,
                                prefix: String, newVecs: DataFrame,
                                idCol: String, vecCol: String): Unit = {
-    import spark.implicits._
-    val (index, cellsTable) = readIvfIndexResolved(spark, prefix)
-    val newRows = cellRows(newVecs, idCol, vecCol,
-      assignCells(newVecs, idCol, vecCol, index.centroids))
-    val tableMeta = spark.sessionState.catalog.getTableMetadata(
-      org.apache.spark.sql.catalyst.TableIdentifier(cellsTable))
-    val numBuckets = tableMeta.bucketSpec
-      .getOrElse(sys.error(s"$cellsTable is not bucketed")).numBuckets
-    graft.sources.Sinks.clearEpochTokens(spark, cellsTable)
-    newRows.select(spark.table(cellsTable).columns.map(col): _*)
-      .write.mode(org.apache.spark.sql.SaveMode.Append)
-      .bucketBy(numBuckets, "cell").sortBy("cell")
-      .format("parquet")
-      .saveAsTable(cellsTable)
-    val epoch = graft.sources.Sinks.stampEpoch(spark,
-      Seq(cellsTable, s"${prefix}_centroids"))
-    graft.sources.Sinks.writeTable(
-      Seq((epoch, cellsTable)).toDF("epoch", "cells_table"),
-      s"${prefix}_meta")
+    val live = Generations.open(spark, prefix, ivfTables(prefix),
+      ledger = false)
+    val index = ivfFrom(spark, prefix, live)
+    val cells = live("cells_table")
+    Generations.appendBucketed(spark, cells, cellRows(newVecs, idCol,
+      vecCol, assignCells(newVecs, idCol, vecCol, index.centroids)), "cell")
+    Generations.commit(spark, prefix, ivfTables(prefix)(live.meta))(
+      ivfRow(cells))
   }
 
   /** Persist an [[IvfIndex]] — `corpusCells` BUCKETED on `cell` (the
     * probe-join key; [[searchIvf]] over a reopened index leaves the
     * corpus side unshuffled), the small `centroids` as a plain table,
-    * and a one-row `_meta` carrying the write EPOCH written LAST as
-    * the commit marker: a torn same-prefix rebuild leaves cells and
-    * centroids from different generations (queries would rank real
-    * cells against centroids those cells were never assigned to —
-    * silently wrong probes, not an error), which the epoch-token
-    * check ([[graft.sources.Sinks.stampEpoch]]) turns into a loud
-    * refusal at [[readIvfIndex]]. */
+    * and a one-row `_meta` (epoch, cells_table): a torn same-prefix
+    * rebuild would otherwise rank real cells against centroids those
+    * cells were never assigned to — silently wrong probes — and
+    * refuses at [[readIvfIndex]] instead. */
   def writeIvfIndexBucketed(index: IvfIndex, prefix: String,
                             numBuckets: Int = 64): Unit = {
-    val spark = index.centroids.sparkSession
-    import spark.implicits._
-    graft.sources.Sinks.inParallel(
-      () => graft.sources.Sinks.writeBucketed(index.corpusCells,
-        s"${prefix}_cells", Seq("cell"), numBuckets),
-      () => graft.sources.Sinks.writeTable(index.centroids,
-        s"${prefix}_centroids"))
-    val epoch = graft.sources.Sinks.stampEpoch(spark,
-      Seq(s"${prefix}_cells", s"${prefix}_centroids"))
-    graft.sources.Sinks.writeTable(
-      Seq((epoch, s"${prefix}_cells")).toDF("epoch", "cells_table"),
-      s"${prefix}_meta")
+    val cells = s"${prefix}_cells"
+    Sinks.inParallel(
+      () => Sinks.writeBucketed(index.corpusCells, cells, Seq("cell"),
+        numBuckets),
+      () => Sinks.writeTable(index.centroids, s"${prefix}_centroids"))
+    Generations.commit(index.centroids.sparkSession, prefix,
+      Seq(cells, s"${prefix}_centroids"))(ivfRow(cells))
   }
 
-  /** Reopen an index written by [[writeIvfIndexBucketed]] (or swapped
-    * in place by [[retrainIvfIndexBucketed]] — the meta's pointer
-    * column resolves the live A/B generation); refuses a torn
-    * same-prefix rebuild (epoch-token mismatch). */
+  /** Reopen the live generation of a durable IVF index (raw —
+    * takedowns not applied). */
   def readIvfIndex(spark: org.apache.spark.sql.SparkSession,
                    prefix: String): IvfIndex =
-    readIvfIndexResolved(spark, prefix)._1
+    ivfFrom(spark, prefix, Generations.open(spark, prefix,
+      ivfTables(prefix), ledger = false))
 
   /** Search a built IVF index: queries rank the (broadcast) centroid
     * table, probe only their `nProbe` nearest cells, and exact cosine
@@ -859,21 +743,18 @@ object Similarity {
 
   /** TAKEDOWN support for a durable IVF index — [[tombstoneIvfPq]]'s
     * coarse-family sibling, the same O(new)-never-O(corpus) contract:
-    * ids file into a `${prefix}_tombstones` ledger (crash-safe
-    * distinct-union via [[graft.sources.Sinks.appendLedger]] — A/B
-    * generation + meta-last commit, no driver collect), every LIVE
-    * read path drops them logically ([[readIvfIndexLive]] /
+    * ids file into a `${prefix}_tombstones` ledger
+    * ([[graft.sources.Generations.appendLedger]]), every LIVE read
+    * path drops them logically ([[readIvfIndexLive]] /
     * [[cellMembersLive]] / [[searchIvfLive]]), and the next
-    * [[retrainIvfIndexBucketed]] purges them PHYSICALLY (the
-    * re-assignment pass skips tombstoned rows and the ledger clears
-    * after the generation swap). Centroids are NOT retouched by a
-    * takedown — geometry fitted over since-deleted rows is a model
-    * artifact, not retained content; the rows themselves leave the
-    * serving tables. Idempotent and re-runnable. */
+    * [[retrainIvfIndexBucketed]] purges them PHYSICALLY. Centroids are
+    * NOT retouched by a takedown — geometry fitted over since-deleted
+    * rows is a model artifact, not retained content; the rows
+    * themselves leave the serving tables. Idempotent and re-runnable. */
   def tombstoneIvf(spark: org.apache.spark.sql.SparkSession,
                    prefix: String, ids: DataFrame,
                    idCol: String): Unit =
-    graft.sources.Sinks.appendLedger(spark, s"${prefix}_tombstones",
+    Generations.appendLedger(spark, s"${prefix}_tombstones",
       tombstoneIds(ids, idCol))
 
   /** Canonicalize takedown ids to the ledger's long key, REFUSING
@@ -892,15 +773,49 @@ object Similarity {
     cast
   }
 
-  /** The live tombstone set of a durable IVF index (empty frame if
-    * none were ever COMMITTED; a torn ledger refuses loudly — see
-    * [[graft.sources.Sinks.readLedger]]). */
-  def readIvfTombstones(spark: org.apache.spark.sql.SparkSession,
-                        prefix: String): DataFrame = {
+  /** A vector index's resolved ledger rows, or the empty id set. */
+  private def idsOrEmpty(spark: org.apache.spark.sql.SparkSession,
+                         ledger: Option[DataFrame]): DataFrame = {
     import spark.implicits._
-    graft.sources.Sinks.readLedger(spark, s"${prefix}_tombstones")
-      .map(_._2).getOrElse(Seq.empty[Long].toDF("neighbor_id"))
+    ledger.getOrElse(Seq.empty[Long].toDF("neighbor_id"))
   }
+
+  /** The committed takedown set of a vector index (empty frame if
+    * none were ever COMMITTED; a torn ledger refuses loudly). */
+  private def committedTombstones(spark: org.apache.spark.sql.SparkSession,
+                                  prefix: String): DataFrame =
+    idsOrEmpty(spark, Generations.readLedger(spark,
+      s"${prefix}_tombstones").map(_._2))
+
+  /** `rows` minus a resolved ledger's ids (one broadcast anti-join —
+    * takedown sets are bounded). */
+  private def withoutIds(rows: DataFrame,
+                         ledger: Option[DataFrame]): DataFrame =
+    ledger.fold(rows)(ids =>
+      rows.join(broadcast(ids), Seq("neighbor_id"), "left_anti"))
+
+  /** A retrain's PHYSICAL purge of the reopened ledger: a function
+    * dropping the tombstoned ids from a frame keyed on `idCol` — the
+    * corpus re-encode AND the fit sample (a deleted vector must not
+    * even shape the new geometry) — and whether there were any, which
+    * gates the ledger clear after the swap. The purge is a broadcast
+    * anti-join against the ledger FRAME (never a driver collect — the
+    * ledger can outgrow any driver Set); the one bounded action is the
+    * isEmpty probe. */
+  private def ledgerPurge(spark: org.apache.spark.sql.SparkSession,
+                          live: Generations.Live,
+                          idCol: String): (DataFrame => DataFrame, Boolean) = {
+    val ids = idsOrEmpty(spark, live.ledger)
+      .select(col("neighbor_id").as(idCol)).localCheckpoint()
+    val any = !ids.isEmpty
+    (df => if (any) df.join(broadcast(ids), Seq(idCol), "left_anti") else df,
+      any)
+  }
+
+  /** The live tombstone set of a durable IVF index. */
+  def readIvfTombstones(spark: org.apache.spark.sql.SparkSession,
+                        prefix: String): DataFrame =
+    committedTombstones(spark, prefix)
 
   /** Reopen a durable IVF index with its tombstones applied
     * LOGICALLY: the cells side anti-joins the (broadcast, bounded)
@@ -912,31 +827,8 @@ object Similarity {
     * at the next retrain, where the purge also becomes physical). */
   def readIvfIndexLive(spark: org.apache.spark.sql.SparkSession,
                        prefix: String): IvfIndex =
-    readIvfIndexLiveWithEpoch(spark, prefix)._1
-
-  /** [[readIvfIndexLive]] with the index meta + tombstone-ledger meta
-    * fetched in ONE driver action (two sequential 1-row collects
-    * otherwise — the reopen floor; optimization-guide §5), also
-    * returning the serving epoch for callers that would re-collect the
-    * meta just to read it. Refusal semantics identical to the
-    * readIvfIndex + readLedger composition. */
-  private def readIvfIndexLiveWithEpoch(
-      spark: org.apache.spark.sql.SparkSession,
-      prefix: String): (IvfIndex, String) = {
-    import spark.implicits._
-    val (meta, ledMeta) = graft.sources.Sinks.metaWithLedgerMeta(spark,
-      s"${prefix}_meta", s"${prefix}_tombstones")
-    val cellsTable = meta.getOrElse("cells_table", s"${prefix}_cells")
-    graft.sources.Sinks.requireEpoch(spark,
-      Seq(cellsTable, s"${prefix}_centroids"), meta("epoch"))
-    val tombstones = ledMeta.map { case (lgen, lepoch) =>
-        graft.sources.Sinks.resolveLedgerGen(spark,
-          s"${prefix}_tombstones", lgen, lepoch) }
-      .getOrElse(Seq.empty[Long].toDF("neighbor_id"))
-    (IvfIndex(spark.table(s"${prefix}_centroids"),
-      spark.table(cellsTable).join(broadcast(tombstones),
-        Seq("neighbor_id"), "left_anti")), meta("epoch"))
-  }
+    ivfFrom(spark, prefix,
+      Generations.open(spark, prefix, ivfTables(prefix)))
 
   /** Search a DURABLE IVF index with its tombstones applied — the
     * serving entry point after takedowns ([[searchIvfPqLive]]'s
@@ -1118,28 +1010,23 @@ object Similarity {
     * per-query constants from an in-memory `stats` frame a restarted
     * driver couldn't reopen). `codes` is the scan side (no probe join
     * key — [[searchSq]] scans all codes by design), so a plain table
-    * suffices; the one-row `stats` rides alongside; the `_meta` epoch
-    * row is the commit marker (the shared
-    * [[graft.sources.Sinks.stampEpoch]] torn-rebuild discipline). */
+    * suffices; the one-row `stats` rides alongside; the one-slot
+    * `_meta` (epoch) commits both ([[graft.sources.Generations]]). */
   def writeSqIndex(index: SqIndex, prefix: String): Unit = {
-    val spark = index.stats.sparkSession
-    import spark.implicits._
-    graft.sources.Sinks.inParallel(
-      () => graft.sources.Sinks.writeTable(index.stats, s"${prefix}_stats"),
-      () => graft.sources.Sinks.writeTable(index.codes, s"${prefix}_codes"))
-    val epoch = graft.sources.Sinks.stampEpoch(spark,
-      Seq(s"${prefix}_stats", s"${prefix}_codes"))
-    graft.sources.Sinks.writeTable(Seq(epoch).toDF("epoch"),
-      s"${prefix}_meta")
+    Sinks.inParallel(
+      () => Sinks.writeTable(index.stats, s"${prefix}_stats"),
+      () => Sinks.writeTable(index.codes, s"${prefix}_codes"))
+    Generations.commit(index.stats.sparkSession, prefix, sqTables(prefix))(
+      e => Seq("epoch" -> e))
   }
 
-  /** Reopen an index written by [[writeSqIndex]]; refuses a torn
-    * same-prefix rebuild (epoch-token mismatch). */
+  private def sqTables(prefix: String): Seq[String] =
+    Seq(s"${prefix}_stats", s"${prefix}_codes")
+
+  /** Reopen an index written by [[writeSqIndex]]. */
   def readSqIndex(spark: org.apache.spark.sql.SparkSession,
                   prefix: String): SqIndex = {
-    val epoch = spark.table(s"${prefix}_meta").collect()(0).getString(0)
-    graft.sources.Sinks.requireEpoch(spark,
-      Seq(s"${prefix}_stats", s"${prefix}_codes"), epoch)
+    Generations.open(spark, prefix, _ => sqTables(prefix), ledger = false)
     SqIndex(spark.table(s"${prefix}_stats"),
       spark.table(s"${prefix}_codes"))
   }
@@ -1271,55 +1158,48 @@ object Similarity {
   /** Persist an [[IvfSqIndex]] as tables — `cellCodes` BUCKETED on
     * `cell` (the probe-join key: a big query batch then sort-merge
     * joins the index WITHOUT shuffling it — pinned by PlanSpec), the
-    * one-row `stats` and nCells-row `centroids` as plain tables. The
-    * build-once/search-many shape: the cell shuffle is paid at write
-    * time, every future search pays only its own query-side work. */
+    * one-row `stats` and nCells-row `centroids` as plain tables, and
+    * the `_meta` (epoch, codes_table). The build-once/search-many
+    * shape: the cell shuffle is paid at write time, every future
+    * search pays only its own query-side work. */
   def writeIvfSqIndexBucketed(index: IvfSqIndex, prefix: String,
                               numBuckets: Int = 64): Unit = {
-    val spark = index.centroids.sparkSession
-    import spark.implicits._
-    graft.sources.Sinks.inParallel(
-      () => graft.sources.Sinks.writeTable(index.centroids,
-        s"${prefix}_centroids"),
-      () => graft.sources.Sinks.writeTable(index.stats, s"${prefix}_stats"),
-      () => graft.sources.Sinks.writeBucketed(index.cellCodes,
-        s"${prefix}_cell_codes", Seq("cell"), numBuckets))
-    // epoch meta LAST — the torn-rebuild refusal shared by every index
-    // writer here (see writeLshIndexBucketed / Sinks.stampEpoch)
-    val epoch = graft.sources.Sinks.stampEpoch(spark,
-      Seq(s"${prefix}_centroids", s"${prefix}_stats",
-        s"${prefix}_cell_codes"))
-    graft.sources.Sinks.writeTable(Seq(epoch).toDF("epoch"),
-      s"${prefix}_meta")
+    val codes = s"${prefix}_cell_codes"
+    Sinks.inParallel(
+      () => Sinks.writeTable(index.centroids, s"${prefix}_centroids"),
+      () => Sinks.writeTable(index.stats, s"${prefix}_stats"),
+      () => Sinks.writeBucketed(index.cellCodes, codes, Seq("cell"),
+        numBuckets))
+    Generations.commit(index.centroids.sparkSession, prefix,
+      ivfSqTables(prefix, codes))(ivfSqRow(codes))
   }
 
-  /** [[readIvfSqIndex]] plus the resolved live codes-table name (meta
-    * rows written by [[writeIvfSqIndexBucketed]] predate the A/B
-    * retrain and carry no pointer column — those resolve to the
-    * original `_cell_codes` name). */
-  private def readIvfSqIndexResolved(
-      spark: org.apache.spark.sql.SparkSession,
-      prefix: String): (IvfSqIndex, String) = {
-    val meta = spark.table(s"${prefix}_meta").collect()(0)
-    val codesTable =
-      if (meta.schema.fieldNames.contains("codes_table"))
-        meta.getAs[String]("codes_table")
-      else s"${prefix}_cell_codes"
-    graft.sources.Sinks.requireEpoch(spark,
-      Seq(s"${prefix}_centroids", s"${prefix}_stats", codesTable),
-      meta.getAs[String]("epoch"))
-    (IvfSqIndex(spark.table(s"${prefix}_centroids"),
+  private def ivfSqTables(prefix: String, codes: String): Seq[String] =
+    Seq(s"${prefix}_centroids", s"${prefix}_stats", codes)
+
+  private def ivfSqRow(codes: String)(epoch: String): Seq[(String, Any)] =
+    Seq("epoch" -> epoch, "codes_table" -> codes)
+
+  private def openIvfSq(spark: org.apache.spark.sql.SparkSession,
+                        prefix: String,
+                        ledger: Boolean = true): Generations.Live =
+    Generations.open(spark, prefix, m => ivfSqTables(prefix,
+      m("codes_table")), ledger)
+
+  /** The index a reopen names, with its ledger (if read) applied to
+    * the codes side. */
+  private def ivfSqFrom(spark: org.apache.spark.sql.SparkSession,
+                        prefix: String,
+                        live: Generations.Live): IvfSqIndex =
+    IvfSqIndex(spark.table(s"${prefix}_centroids"),
       spark.table(s"${prefix}_stats"),
-      spark.table(codesTable)), codesTable)
-  }
+      withoutIds(spark.table(live("codes_table")), live.ledger))
 
-  /** Reopen an index written by [[writeIvfSqIndexBucketed]] (or
-    * swapped in place by [[retrainIvfSqIndexBucketed]] — the meta's
-    * pointer column resolves the live A/B generation); refuses a torn
-    * same-prefix rebuild (epoch-token mismatch). */
+  /** Reopen the live generation of a durable IVF×SQ index (raw —
+    * takedowns not applied). */
   def readIvfSqIndex(spark: org.apache.spark.sql.SparkSession,
                      prefix: String): IvfSqIndex =
-    readIvfSqIndexResolved(spark, prefix)._1
+    ivfSqFrom(spark, prefix, openIvfSq(spark, prefix, ledger = false))
 
   /** Retrain a DURABLE IVF×SQ index in place — the SQ rung of the
     * durable drift-remediation matrix ([[retrainIvfIndexBucketed]] /
@@ -1329,86 +1209,58 @@ object Similarity {
     * re-encode pass every retrain already pays (min/max stats are a
     * scan, not an iterative fit — see [[retrainIvfSq]]). The corpus
     * is EXTERNAL by necessity: the durable index stores int8 codes
-    * only, and re-quantizing needs the floats.
-    *
-    * GENERATION SWAP, crash-stated (the [[retrainIvfIndexBucketed]]
-    * discipline): the re-encoded cell codes write to the ALTERNATE
-    * table of the A/B pair (a bucketed table cannot be overwritten
-    * from a plan still serving readers); the centroids/stats
-    * Overwrites wipe the old epoch tokens, so a crash from there
-    * until the meta commit refuses loudly at [[readIvfSqIndex]];
-    * the one-row meta rewrite is the atomic pointer+epoch flip; the
-    * superseded generation drops last, best-effort. */
+    * only, and re-quantizing needs the floats. The re-encoded codes
+    * write to the ALTERNATE table of the A/B pair; the
+    * centroids/stats Overwrites wipe the old tokens, so a crash from
+    * there until the commit refuses loudly at [[readIvfSqIndex]]. */
   def retrainIvfSqIndexBucketed(spark: org.apache.spark.sql.SparkSession,
                                 prefix: String, corpus: DataFrame,
                                 idCol: String, vecCol: String,
                                 sample: DataFrame, lloydIters: Int = 1,
-                                numBuckets: Int = 64): Unit = {
-    import spark.implicits._
-    // merged one-action reopen: index meta + tombstone-ledger meta
-    // (was two sequential 1-row collects — optimization-guide §5)
-    val (meta, ledMeta) = graft.sources.Sinks.metaWithLedgerMeta(spark,
-      s"${prefix}_meta", s"${prefix}_tombstones")
-    val liveCodes = meta.getOrElse("codes_table", s"${prefix}_cell_codes")
-    graft.sources.Sinks.requireEpoch(spark,
-      Seq(s"${prefix}_centroids", s"${prefix}_stats", liveCodes),
-      meta("epoch"))
-    val index = IvfSqIndex(spark.table(s"${prefix}_centroids"),
-      spark.table(s"${prefix}_stats"), spark.table(liveCodes))
-    val otherCodes =
-      if (liveCodes == s"${prefix}_cell_codes") s"${prefix}_cell_codes_b"
-      else s"${prefix}_cell_codes"
-    // PHYSICAL PURGE of filed takedowns ([[tombstoneIvfSq]]): the
-    // re-encode pass skips tombstoned corpus rows, the fit sample
-    // purges too (a deleted vector must not even shape the new
-    // geometry), and the ledger clears after the swap
-    val tombstones = ledMeta.map { case (lgen, lepoch) =>
-        graft.sources.Sinks.resolveLedgerGen(spark,
-          s"${prefix}_tombstones", lgen, lepoch) }
-      .getOrElse(Seq.empty[Long].toDF("neighbor_id"))
-      .select(col("neighbor_id").as(idCol)).localCheckpoint()
-    val hasTombstones = !tombstones.isEmpty
-    def purge(df: DataFrame): DataFrame =
-      if (!hasTombstones) df
-      else df.join(broadcast(tombstones), Seq(idCol), "left_anti")
+                                numBuckets: Int = 64): Unit =
+    retrainIvfSqGen(spark, prefix, openIvfSq(spark, prefix), corpus, idCol,
+      vecCol, sample, lloydIters, numBuckets)
+
+  private def retrainIvfSqGen(spark: org.apache.spark.sql.SparkSession,
+                              prefix: String, live: Generations.Live,
+                              corpus: DataFrame, idCol: String,
+                              vecCol: String, sample: DataFrame,
+                              lloydIters: Int,
+                              numBuckets: Int): Map[String, String] = {
+    val liveCodes = live("codes_table")
+    val index = ivfSqFrom(spark, prefix, live.copy(ledger = None))
+    val otherCodes = Generations.otherSlot(liveCodes, s"${prefix}_cell_codes")
+    val (purge, hasTombstones) = ledgerPurge(spark, live, idCol)
     val retrained = retrainIvfSq(index, purge(corpus), idCol, vecCol,
       purge(sample), lloydIters)
-    graft.sources.Sinks.writeBucketed(retrained.cellCodes, otherCodes,
-      Seq("cell"), numBuckets)
-    graft.sources.Sinks.writeTable(retrained.centroids,
-      s"${prefix}_centroids")
-    graft.sources.Sinks.writeTable(retrained.stats, s"${prefix}_stats")
-    val epoch = graft.sources.Sinks.stampEpoch(spark,
-      Seq(s"${prefix}_centroids", s"${prefix}_stats", otherCodes))
-    graft.sources.Sinks.writeTable(
-      Seq((epoch, otherCodes)).toDF("epoch", "codes_table"),
-      s"${prefix}_meta")
-    spark.sql(s"DROP TABLE IF EXISTS $liveCodes")
+    Sinks.writeBucketed(retrained.cellCodes, otherCodes, Seq("cell"),
+      numBuckets)
+    Sinks.writeTable(retrained.centroids, s"${prefix}_centroids")
+    Sinks.writeTable(retrained.stats, s"${prefix}_stats")
+    val meta = Generations.commit(spark, prefix,
+      ivfSqTables(prefix, otherCodes), Seq(liveCodes))(ivfSqRow(otherCodes))
     if (hasTombstones)
-      graft.sources.Sinks.clearLedger(spark, s"${prefix}_tombstones")
+      Generations.clearLedger(spark, s"${prefix}_tombstones")
+    meta
   }
 
   /** TAKEDOWN support for a durable IVF×SQ index — completing the
     * compliance matrix across all three durable vector families
-    * ([[tombstoneIvf]] / this / [[tombstoneIvfPq]], all riding the
-    * crash-safe [[graft.sources.Sinks.appendLedger]] discipline):
-    * O(new) ledger filing, logical exclusion at every live read, and
-    * physical purge + ledger clear at the next
-    * [[retrainIvfSqIndexBucketed]]. */
+    * ([[tombstoneIvf]] / this / [[tombstoneIvfPq]], all riding
+    * [[graft.sources.Generations.appendLedger]]): O(new) ledger
+    * filing, logical exclusion at every live read, and physical
+    * purge + ledger clear at the next [[retrainIvfSqIndexBucketed]]. */
   def tombstoneIvfSq(spark: org.apache.spark.sql.SparkSession,
                      prefix: String, ids: DataFrame,
                      idCol: String): Unit =
-    graft.sources.Sinks.appendLedger(spark, s"${prefix}_tombstones",
+    Generations.appendLedger(spark, s"${prefix}_tombstones",
       tombstoneIds(ids, idCol))
 
   /** The live tombstone set of a durable IVF×SQ index (empty frame if
     * none were ever committed; a torn ledger refuses loudly). */
   def readIvfSqTombstones(spark: org.apache.spark.sql.SparkSession,
-                          prefix: String): DataFrame = {
-    import spark.implicits._
-    graft.sources.Sinks.readLedger(spark, s"${prefix}_tombstones")
-      .map(_._2).getOrElse(Seq.empty[Long].toDF("neighbor_id"))
-  }
+                          prefix: String): DataFrame =
+    committedTombstones(spark, prefix)
 
   /** Reopen a durable IVF×SQ index with tombstones applied LOGICALLY:
     * the codes side anti-joins the (broadcast, bounded) ledger, so a
@@ -1419,31 +1271,7 @@ object Similarity {
     * next retrain, where the purge becomes physical. */
   def readIvfSqIndexLive(spark: org.apache.spark.sql.SparkSession,
                          prefix: String): IvfSqIndex =
-    readIvfSqIndexLiveWithEpoch(spark, prefix)._1
-
-  /** [[readIvfSqIndexLive]] with the index meta + tombstone-ledger
-    * meta fetched in ONE driver action (the reopen-floor merge — see
-    * [[readIvfIndexLiveWithEpoch]]), also returning the serving epoch
-    * for callers that would re-collect the meta just to read it. */
-  private def readIvfSqIndexLiveWithEpoch(
-      spark: org.apache.spark.sql.SparkSession,
-      prefix: String): (IvfSqIndex, String) = {
-    import spark.implicits._
-    val (meta, ledMeta) = graft.sources.Sinks.metaWithLedgerMeta(spark,
-      s"${prefix}_meta", s"${prefix}_tombstones")
-    val codesTable = meta.getOrElse("codes_table", s"${prefix}_cell_codes")
-    graft.sources.Sinks.requireEpoch(spark,
-      Seq(s"${prefix}_centroids", s"${prefix}_stats", codesTable),
-      meta("epoch"))
-    val tombstones = ledMeta.map { case (lgen, lepoch) =>
-        graft.sources.Sinks.resolveLedgerGen(spark,
-          s"${prefix}_tombstones", lgen, lepoch) }
-      .getOrElse(Seq.empty[Long].toDF("neighbor_id"))
-    (IvfSqIndex(spark.table(s"${prefix}_centroids"),
-      spark.table(s"${prefix}_stats"),
-      spark.table(codesTable).join(broadcast(tombstones),
-        Seq("neighbor_id"), "left_anti")), meta("epoch"))
-  }
+    ivfSqFrom(spark, prefix, openIvfSq(spark, prefix))
 
   /** Search a DURABLE IVF×SQ index with its tombstones applied — the
     * serving entry point after takedowns. */
@@ -1462,35 +1290,21 @@ object Similarity {
     * [[appendToIvfSq]] contract; [[recallProbe]]/[[driftDecision]]
     * and the [[maintainIvfSqIndex]] window are the remedy when
     * saturation accumulates) and APPENDS into the live codes table's
-    * existing bucket layout — the corpus-scale side never rewrites.
-    * Crash discipline as the PQ sibling: the epoch token clears
-    * FIRST (any crash mid-append refuses loudly at read — a
-    * half-appended generation must never serve), the fresh stamp +
-    * meta rewrite commit at the end. */
+    * existing bucket layout
+    * ([[graft.sources.Generations.appendBucketed]]). */
   def appendToIvfSqIndexBucketed(spark: org.apache.spark.sql.SparkSession,
                                  prefix: String, newVecs: DataFrame,
                                  idCol: String, vecCol: String): Unit = {
-    import spark.implicits._
-    val (index, codesTable) = readIvfSqIndexResolved(spark, prefix)
+    val live = openIvfSq(spark, prefix, ledger = false)
+    val index = ivfSqFrom(spark, prefix, live)
+    val codes = live("codes_table")
     val cells = assignCells(newVecs, idCol, vecCol, index.centroids)
       .select(col(idCol).as("neighbor_id"), col("cell"))
-    val newCodes = sqEncode(newVecs, idCol, vecCol, index.stats)
-      .join(cells, Seq("neighbor_id"))
-    val tableMeta = spark.sessionState.catalog.getTableMetadata(
-      org.apache.spark.sql.catalyst.TableIdentifier(codesTable))
-    val numBuckets = tableMeta.bucketSpec
-      .getOrElse(sys.error(s"$codesTable is not bucketed")).numBuckets
-    graft.sources.Sinks.clearEpochTokens(spark, codesTable)
-    newCodes.select(spark.table(codesTable).columns.map(col): _*)
-      .write.mode(org.apache.spark.sql.SaveMode.Append)
-      .bucketBy(numBuckets, "cell").sortBy("cell")
-      .format("parquet")
-      .saveAsTable(codesTable)
-    val epoch = graft.sources.Sinks.stampEpoch(spark,
-      Seq(s"${prefix}_centroids", s"${prefix}_stats", codesTable))
-    graft.sources.Sinks.writeTable(
-      Seq((epoch, codesTable)).toDF("epoch", "codes_table"),
-      s"${prefix}_meta")
+    Generations.appendBucketed(spark, codes,
+      sqEncode(newVecs, idCol, vecCol, index.stats)
+        .join(cells, Seq("neighbor_id")), "cell")
+    Generations.commit(spark, prefix, ivfSqTables(prefix, codes))(
+      ivfSqRow(codes))
   }
 
   /** The ONE-CALL maintenance window for a durable IVF×SQ index —
@@ -1501,9 +1315,8 @@ object Similarity {
     * fires run the warm A/B retrain ([[retrainIvfSqIndexBucketed]])
     * and re-probe. One bounded report row `(n_queries,
     * pre_mean_recall, retrain_fired, post_mean_recall, post_retrain,
-    * epoch_changed)`; an undrifted index is a no-op by construction —
-    * no generation write, meta untouched, `post ≡ pre` without a
-    * second probe. */
+    * epoch_changed)`. Window rules:
+    * [[graft.sources.Generations.window]]. */
   def maintainIvfSqIndex(spark: org.apache.spark.sql.SparkSession,
                          prefix: String, corpus: DataFrame,
                          idCol: String, vecCol: String,
@@ -1511,7 +1324,6 @@ object Similarity {
                          sample: DataFrame, lloydIters: Int = 1,
                          nProbe: Int = 4, oversample: Int = 4,
                          numBuckets: Int = 64): DataFrame = {
-    import spark.implicits._
     // Capture the tombstone set ONCE, before any retrain, and PIN it:
     // the retrain purges tombstoned rows physically and CLEARS the
     // ledger, so a post-retrain re-read would return empty and the
@@ -1521,39 +1333,26 @@ object Similarity {
     // returned again, by design). persist + count materializes the
     // bounded compliance ledger so the lazy plan cannot re-read the
     // cleared tables.
-    val tombs = readIvfSqTombstones(spark, prefix)
+    val opened = openIvfSq(spark, prefix)
+    val tombs = idsOrEmpty(spark, opened.ledger)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     tombs.count()
     try {
-      def decide(): (Long, Double, Boolean, String) = {
-        // LIVE view on both sides (the maintainIvfPqIndex discipline):
-        // the served search can't return a taken-down id and the
-        // brute-force truth never counts one as a miss. The reopen is
-        // the merged one-action read and the epoch for the change flag
-        // rides it; the no-op path skips the closing epoch re-read
-        // (nothing fired, nothing moved under this single-writer
-        // window) — see [[maintainIvfPqIndex]].
-        val live = corpus.join(broadcast(
-            tombs.select(col("neighbor_id").as(idCol))),
-          Seq(idCol), "left_anti")
-        val (index, epoch) = readIvfSqIndexLiveWithEpoch(spark, prefix)
-        val ann = searchIvfSq(index, corpus,
+      // LIVE view on both sides (the maintainIvfPqIndex discipline):
+      // the served search can't return a taken-down id and the
+      // brute-force truth never counts one as a miss
+      val truth = corpus.join(broadcast(
+          tombs.select(col("neighbor_id").as(idCol))),
+        Seq(idCol), "left_anti")
+      def decide(live: Generations.Live): (Long, Double, Boolean) = {
+        val ann = searchIvfSq(ivfSqFrom(spark, prefix, live), corpus,
           queries, idCol, vecCol, k, nProbe, oversample)
-        val d = driftDecision(
-          recallProbe(ann, live, queries, idCol, vecCol, k), minRecall)
-          .collect()(0)
-        (d.getLong(0), d.getDouble(1), d.getBoolean(2), epoch)
+        decision(recallProbe(ann, truth, queries, idCol, vecCol, k),
+          minRecall)
       }
-      val (nQ, preMean, fired, epochBefore) = decide()
-      if (fired)
-        retrainIvfSqIndexBucketed(spark, prefix, corpus, idCol, vecCol,
-          sample, lloydIters, numBuckets)
-      val (_, postMean, postRetrain, epochAfter) = if (fired) decide()
-        else (nQ, preMean, fired, epochBefore)
-      Seq((nQ, preMean, fired, postMean, postRetrain,
-          epochAfter != epochBefore))
-        .toDF("n_queries", "pre_mean_recall", "retrain_fired",
-          "post_mean_recall", "post_retrain", "epoch_changed")
+      driftReport(spark, Generations.window(opened)(decide)(_._3)(
+        (live, _) => retrainIvfSqGen(spark, prefix, live, corpus, idCol,
+          vecCol, sample, lloydIters, numBuckets)))
     } finally tombs.unpersist()
   }
 
@@ -1782,30 +1581,26 @@ object Similarity {
   /** Persist a plain [[PqIndex]] — the [[writeSqIndex]] sibling
     * completing the persistence matrix. `codes` is the flat scan side
     * (plain table); `codebooks` is the broadcastable grid; geometry
-    * (nSub, nCentroids) + the commit epoch ride the one-row `_meta`
-    * written LAST. The in-plan geometry guards ([[pqQueryLut]],
-    * [[adcCosine]]) still back up the epoch check on first use. */
+    * rides the one-slot `_meta` (n_sub, n_centroids, epoch). The
+    * in-plan geometry guards ([[pqQueryLut]], [[adcCosine]]) still
+    * back up the epoch check on first use. */
   def writePqIndex(index: PqIndex, prefix: String): Unit = {
-    val spark = index.codebooks.sparkSession
-    import spark.implicits._
-    graft.sources.Sinks.writeTable(index.codebooks, s"${prefix}_codebooks")
-    graft.sources.Sinks.writeTable(index.codes, s"${prefix}_codes")
-    val epoch = graft.sources.Sinks.stampEpoch(spark,
-      Seq(s"${prefix}_codebooks", s"${prefix}_codes"))
-    graft.sources.Sinks.writeTable(
-      Seq((index.nSub, index.nCentroids, epoch))
-        .toDF("n_sub", "n_centroids", "epoch"),
-      s"${prefix}_meta")
+    Sinks.writeTable(index.codebooks, s"${prefix}_codebooks")
+    Sinks.writeTable(index.codes, s"${prefix}_codes")
+    Generations.commit(index.codebooks.sparkSession, prefix,
+      pqTables(prefix))(e => Seq("n_sub" -> index.nSub,
+        "n_centroids" -> index.nCentroids, "epoch" -> e))
   }
 
-  /** Reopen an index written by [[writePqIndex]]; refuses a torn
-    * same-prefix rebuild (epoch-token mismatch). */
+  private def pqTables(prefix: String): Seq[String] =
+    Seq(s"${prefix}_codebooks", s"${prefix}_codes")
+
+  /** Reopen an index written by [[writePqIndex]]. */
   def readPqIndex(spark: org.apache.spark.sql.SparkSession,
                   prefix: String): PqIndex = {
-    val meta = spark.table(s"${prefix}_meta").collect()(0)
-    graft.sources.Sinks.requireEpoch(spark,
-      Seq(s"${prefix}_codebooks", s"${prefix}_codes"), meta.getString(2))
-    PqIndex(meta.getInt(0), meta.getInt(1),
+    val live = Generations.open(spark, prefix, _ => pqTables(prefix),
+      ledger = false)
+    PqIndex(live("n_sub").toInt, live("n_centroids").toInt,
       spark.table(s"${prefix}_codebooks"),
       spark.table(s"${prefix}_codes"))
   }
@@ -1913,124 +1708,72 @@ object Similarity {
   /** Persist an [[IvfPqIndex]] as tables — `cellCodes` BUCKETED on
     * `cell` (the probe-join key, same build-once/search-many shape as
     * [[writeIvfSqIndexBucketed]]), the small `centroids` and
-    * `codebooks` as plain tables. nSub/nCentroids ride along as a
-    * one-row `_meta` table written LAST — the commit marker: a write
-    * torn before completion leaves no (or a stale-generation) meta,
-    * so [[readIvfPqIndex]] either fails to resolve the table or the
-    * in-plan geometry guards ([[pqQueryLut]] codebook-size check,
-    * [[adcCosine]] code-word-length check) raise on first use instead
-    * of ranking garbage. A torn SAME-geometry same-prefix rebuild —
-    * which those guards cannot see — is caught by the shared
-    * epoch-token discipline ([[graft.sources.Sinks.stampEpoch]]): the
-    * meta's epoch must be stamped in all three data tables'
-    * directories, so mixed generations refuse at [[readIvfPqIndex]]
-    * instead of ranking one generation's codes against another's
-    * codebooks. */
+    * `codebooks` as plain tables, and the `_meta` (n_sub,
+    * n_centroids, epoch, codes_table). A torn write that changes
+    * geometry trips the in-plan guards ([[pqQueryLut]] codebook-size
+    * check, [[adcCosine]] code-word-length check); a torn SAME-geometry
+    * rebuild — which those guards cannot see — refuses at
+    * [[readIvfPqIndex]] through the epoch tokens instead of ranking
+    * one generation's codes against another's codebooks. */
+  def writeIvfPqIndexBucketed(index: IvfPqIndex, prefix: String,
+                              numBuckets: Int = 64): Unit = {
+    val codes = s"${prefix}_cell_codes"
+    Sinks.inParallel(
+      () => Sinks.writeBucketed(index.cellCodes, codes, Seq("cell"),
+        numBuckets),
+      () => Sinks.writeTable(index.codebooks, s"${prefix}_codebooks"),
+      () => Sinks.writeTable(index.centroids, s"${prefix}_centroids"),
+      () => Sinks.writeTable(builtCellStats(index.cellCodes),
+        s"${prefix}_cell_stats"))
+    Generations.commit(index.centroids.sparkSession, prefix,
+      ivfPqTables(prefix, codes))(ivfPqRow(index, codes))
+  }
+
+  /** A fresh per-cell growth ledger: how many vectors the build (or a
+    * retrain) assigned per cell, and how many in-place appends added
+    * since ([[appendToIvfPqIndexBucketed]]) — the drift signal a served
+    * index exposes without a probe: a cell whose appended count dwarfs
+    * its build count is absorbing a distribution the codebook never
+    * saw, the cue to run [[recallProbe]] and re-train. nCells rows, so
+    * the final aggregate stage coalesces to one task/file (guide
+    * §2.4/§6 — a 32-file write for a handful of rows that every
+    * reopen re-lists). */
+  private def builtCellStats(cellCodes: DataFrame): DataFrame =
+    cellCodes.groupBy(col("cell")).agg(count(lit(1)).as("n_built"))
+      .withColumn("n_appended", lit(0L)).coalesce(1)
+
   /** The four data tables of a durable IVF×PQ index (epoch-validated
-    * together on read). `codesTable` is the live A/B generation of
-    * the scan side — the original `_cell_codes` until a
-    * [[retrainIvfPqIndexBucketed]] swap. */
+    * together on read); `codesTable` is the live A/B generation of
+    * the scan side. */
   private def ivfPqTables(prefix: String, codesTable: String): Seq[String] =
     Seq(codesTable, s"${prefix}_codebooks",
       s"${prefix}_centroids", s"${prefix}_cell_stats")
 
-  /** Resolve the live cell-codes table of a durable IVF×PQ index from
-    * its meta (pre-retrain-API generations carried no pointer column
-    * and resolve to the original name). */
-  private def ivfPqCodesTable(meta: org.apache.spark.sql.Row,
-                              prefix: String): String =
-    if (meta.schema.fieldNames.contains("codes_table"))
-      meta.getAs[String]("codes_table")
-    else s"${prefix}_cell_codes"
+  private def ivfPqRow(index: IvfPqIndex, codes: String)(
+      epoch: String): Seq[(String, Any)] =
+    Seq("n_sub" -> index.nSub, "n_centroids" -> index.nCentroids,
+      "epoch" -> epoch, "codes_table" -> codes)
 
-  def writeIvfPqIndexBucketed(index: IvfPqIndex, prefix: String,
-                              numBuckets: Int = 64): Unit = {
-    val spark = index.centroids.sparkSession
-    import spark.implicits._
-    graft.sources.Sinks.inParallel(
-      () => graft.sources.Sinks.writeBucketed(index.cellCodes,
-        s"${prefix}_cell_codes", Seq("cell"), numBuckets),
-      () => graft.sources.Sinks.writeTable(index.codebooks,
-        s"${prefix}_codebooks"),
-      () => graft.sources.Sinks.writeTable(index.centroids,
-        s"${prefix}_centroids"),
-      // per-cell growth ledger: how many vectors the BUILD assigned per
-      // cell, and how many in-place appends added since ([[
-      // appendToIvfPqIndexBucketed]]). One nCells-row aggregate at write
-      // time; the drift signal a served index exposes without a probe —
-      // a cell whose appended count dwarfs its build count is absorbing
-      // a distribution the codebook never saw, the cue to run
-      // [[recallProbe]] and re-train before recall quietly sags.
-      // nCells-row frame: coalesce the final aggregate stage to one
-      // task/file (guide §2.4/§6 — a 32-task, 32-file write for a
-      // handful of rows that every reopen re-lists)
-      () => graft.sources.Sinks.writeTable(
-        index.cellCodes.groupBy(col("cell"))
-          .agg(count(lit(1)).as("n_built"))
-          .withColumn("n_appended", lit(0L)).coalesce(1),
-        s"${prefix}_cell_stats"))
-    val epoch = graft.sources.Sinks.stampEpoch(spark,
-      ivfPqTables(prefix, s"${prefix}_cell_codes"))
-    graft.sources.Sinks.writeTable(
-      Seq((index.nSub, index.nCentroids, epoch, s"${prefix}_cell_codes"))
-        .toDF("n_sub", "n_centroids", "epoch", "codes_table"),
-      s"${prefix}_meta")
-  }
+  private def openIvfPq(spark: org.apache.spark.sql.SparkSession,
+                        prefix: String,
+                        ledger: Boolean = true): Generations.Live =
+    Generations.open(spark, prefix,
+      m => ivfPqTables(prefix, m("codes_table")), ledger)
 
-  /** Reopen an index written by [[writeIvfPqIndexBucketed]] (the
-    * meta's pointer column resolves the live A/B codes generation
-    * after a [[retrainIvfPqIndexBucketed]] swap); refuses a torn
-    * same-prefix rebuild or a torn in-place append (epoch-token
-    * mismatch). */
-  def readIvfPqIndex(spark: org.apache.spark.sql.SparkSession,
-                     prefix: String): IvfPqIndex = {
-    val meta = spark.table(s"${prefix}_meta").collect()(0)
-    val codesTable = ivfPqCodesTable(meta, prefix)
-    ivfPqIndexValidated(spark, prefix, codesTable,
-      meta.getAs[String]("epoch"), meta.getAs[Int]("n_sub"),
-      meta.getAs[Int]("n_centroids"))
-  }
-
-  /** Assemble + epoch-validate an [[IvfPqIndex]] from already-fetched
-    * meta values — the shared tail of [[readIvfPqIndex]] and the
-    * merged one-action reopen below. */
-  private def ivfPqIndexValidated(spark: org.apache.spark.sql.SparkSession,
-                                  prefix: String, codesTable: String,
-                                  epoch: String, nSub: Int,
-                                  nCentroids: Int): IvfPqIndex = {
-    graft.sources.Sinks.requireEpoch(spark, ivfPqTables(prefix, codesTable),
-      epoch)
-    IvfPqIndex(nSub, nCentroids,
+  /** The raw index a reopen names (takedowns ride `exclude`). */
+  private def ivfPqFrom(spark: org.apache.spark.sql.SparkSession,
+                        prefix: String,
+                        live: Generations.Live): IvfPqIndex =
+    IvfPqIndex(live("n_sub").toInt, live("n_centroids").toInt,
       spark.table(s"${prefix}_centroids"),
       spark.table(s"${prefix}_codebooks"),
-      spark.table(codesTable))
-  }
+      spark.table(live("codes_table")))
 
-  /** Reopen a durable IVF×PQ index AND its tombstone ledger with ONE
-    * driver action (index meta + ledger meta union-collected — each
-    * 1-row collect is ~100 ms of fixed floor and the serving/maintain
-    * paths reopen 3-6 times per lifecycle; optimization-guide §5).
-    * Identical refusal semantics to readIvfPqIndex + readLedger; the
-    * n_sub/n_centroids ints round-trip losslessly through their
-    * string cast. */
-  private case class IvfPqReopen(index: IvfPqIndex, tombstones: DataFrame,
-                                 epoch: String, codesTable: String)
-
-  private def readIvfPqIndexAndTombstones(
-      spark: org.apache.spark.sql.SparkSession,
-      prefix: String): IvfPqReopen = {
-    import spark.implicits._
-    val (meta, ledMeta) = graft.sources.Sinks.metaWithLedgerMeta(spark,
-      s"${prefix}_meta", s"${prefix}_tombstones")
-    val codesTable = meta.getOrElse("codes_table", s"${prefix}_cell_codes")
-    val idx = ivfPqIndexValidated(spark, prefix, codesTable, meta("epoch"),
-      meta("n_sub").toInt, meta("n_centroids").toInt)
-    val tombs = ledMeta.map { case (lgen, lepoch) =>
-        graft.sources.Sinks.resolveLedgerGen(spark,
-          s"${prefix}_tombstones", lgen, lepoch) }
-      .getOrElse(Seq.empty[Long].toDF("neighbor_id"))
-    IvfPqReopen(idx, tombs, meta("epoch"), codesTable)
-  }
+  /** Reopen the live generation of a durable IVF×PQ index (raw —
+    * takedowns ride `exclude`). */
+  def readIvfPqIndex(spark: org.apache.spark.sql.SparkSession,
+                     prefix: String): IvfPqIndex =
+    ivfPqFrom(spark, prefix, openIvfPq(spark, prefix, ledger = false))
 
   /** The per-cell growth ledger of a durable index (`cell`, `n_built`,
     * `n_appended`) — written by [[writeIvfPqIndexBucketed]], advanced
@@ -2043,36 +1786,21 @@ object Similarity {
     * O(new) I/O per batch: the new vectors are encoded against the
     * reopened frozen geometry ([[appendToIvfPq]]'s plan, reading only
     * the tiny centroid/codebook tables) and their rows APPEND to the
-    * bucketed `cell_codes` table (each append writes its own bucket
-    * files; the probe join's co-location is per-file, so reopened
-    * searches stay shuffle-free on the index side). The existing
-    * index is never rewritten — the whole-table rewrite per admission
-    * batch is exactly the O(corpus) cost this API removes (q101's
-    * discipline for the exact index).
-    *
-    * CRASH CONSISTENCY — the poison-token window
-    * ([[graft.sources.Sinks.clearEpochTokens]]): (1) every epoch
-    * token is deleted from `cell_codes`; (2) the batch appends;
-    * (3) the cell-stats ledger rewrites (n_appended += batch counts);
-    * (4) a FRESH epoch stamps all four tables; (5) the meta rewrites
-    * with the new epoch. A crash anywhere in (1)–(4) leaves a meta
-    * whose epoch `cell_codes` lacks → [[readIvfPqIndex]] refuses the
-    * half-appended generation loudly; a crash inside (5) leaves no
-    * resolvable meta → same refusal. Only the full sequence serves.
-    * Recovery from a refused state is a re-run of the append from the
-    * batch source (appends are not idempotent — re-appending a
-    * half-written batch would duplicate rows; rebuild to a fresh
-    * prefix if the batch source is gone). */
+    * bucketed `cell_codes` table
+    * ([[graft.sources.Generations.appendBucketed]]; each append writes
+    * its own bucket files, and the probe join's co-location is
+    * per-file, so reopened searches stay shuffle-free on the index
+    * side). The cell-stats ledger advances (n_appended += batch
+    * counts) before the commit, inside the poisoned window. The
+    * existing index is never rewritten — the whole-table rewrite per
+    * admission batch is exactly the O(corpus) cost this API removes
+    * (q101's discipline for the exact index). */
   def appendToIvfPqIndexBucketed(spark: org.apache.spark.sql.SparkSession,
                                  prefix: String, newVecs: DataFrame,
                                  idCol: String, vecCol: String): Unit = {
-    import spark.implicits._
-    // the merged reopen validates the current epoch AND resolves the
-    // live codes-table name — this path re-collected the 1-row meta a
-    // second time just for the name (optimization-guide §5)
-    val reopen = readIvfPqIndexAndTombstones(spark, prefix)
-    val index = reopen.index
-    val codesTable = reopen.codesTable
+    val live = openIvfPq(spark, prefix, ledger = false)
+    val index = ivfPqFrom(spark, prefix, live)
+    val codesTable = live("codes_table")
     val cells = assignCells(newVecs, idCol, vecCol, index.centroids)
       .select(col(idCol).as("neighbor_id"), col("cell"))
     val newCodes = pqEncode(newVecs, idCol, vecCol, index.codebooks,
@@ -2095,76 +1823,47 @@ object Similarity {
       .map(r => r.get(1) -> r.getLong(2)).toMap
     val oldStats = statsRows.filter(_.getString(0) == "o")
       .map(r => (r.get(1), r.getLong(2), r.getLong(3)))
-    val tableMeta = spark.sessionState.catalog.getTableMetadata(
-      org.apache.spark.sql.catalyst.TableIdentifier(codesTable))
-    val numBuckets = tableMeta.bucketSpec
-      .getOrElse(sys.error(s"$codesTable is not bucketed")).numBuckets
-    // 1. poison: any crash from here refuses at read
-    graft.sources.Sinks.clearEpochTokens(spark, codesTable)
-    // 2. the batch appends in the existing bucket layout
-    newCodes.select(spark.table(codesTable).columns.map(col): _*)
-      .write.mode(org.apache.spark.sql.SaveMode.Append)
-      .bucketBy(numBuckets, "cell").sortBy("cell")
-      .format("parquet")
-      .saveAsTable(codesTable)
-    // 3. the growth ledger advances (cells the build never saw —
+    Generations.appendBucketed(spark, codesTable, newCodes, "cell")
+    // the growth ledger advances (cells the build never saw —
     // impossible under frozen centroids, kept total by the fallback —
     // enter with n_built = 0)
     val grown = (oldStats.map { case (c, b, a) =>
       (c, b, a + batchCounts.getOrElse(c, 0L)) } ++
       batchCounts.keys.filterNot(oldStats.map(_._1).toSet)
         .map(c => (c, 0L, batchCounts(c)))).toSeq
-    graft.sources.Sinks.writeTable(
+    Sinks.writeTable(
       spark.createDataFrame(java.util.Arrays.asList(
         grown.map { case (c, b, a) =>
           org.apache.spark.sql.Row(c, b, a) }: _*),
         spark.table(s"${prefix}_cell_stats").schema),
       s"${prefix}_cell_stats")
-    // 4–5. fresh epoch everywhere, then the meta commit
-    val epoch = graft.sources.Sinks.stampEpoch(spark,
-      ivfPqTables(prefix, codesTable))
-    graft.sources.Sinks.writeTable(
-      Seq((index.nSub, index.nCentroids, epoch, codesTable))
-        .toDF("n_sub", "n_centroids", "epoch", "codes_table"),
-      s"${prefix}_meta")
+    Generations.commit(spark, prefix, ivfPqTables(prefix, codesTable))(
+      ivfPqRow(index, codesTable))
   }
 
   /** TAKEDOWN support for a durable IVF×PQ index — O(new) deletes,
-    * never an O(corpus) rewrite: the ids append to a
-    * `${prefix}_tombstones` side table ([[readIvfPqTombstones]]), a
-    * served search drops them BEFORE ranking
-    * ([[searchIvfPq]]'s `exclude` — so a deleted top-1 reveals the
-    * live runner-up, never a shortened result), and the next
-    * [[retrainIvfPqIndexBucketed]] purges them PHYSICALLY (the
-    * re-encode pass skips tombstoned corpus rows and the table
-    * clears) — the compliance lifecycle a 100 TB training-data index
-    * actually needs: a takedown must be effective immediately
+    * never an O(corpus) rewrite: the ids file into the
+    * `${prefix}_tombstones` ledger
+    * ([[graft.sources.Generations.appendLedger]]), a served search
+    * drops them BEFORE ranking ([[searchIvfPq]]'s `exclude` — so a
+    * deleted top-1 reveals the live runner-up, never a shortened
+    * result), and the next [[retrainIvfPqIndexBucketed]] purges them
+    * PHYSICALLY — the compliance lifecycle a 100 TB training-data
+    * index actually needs: a takedown must be effective immediately
     * (logical, this call) and eventually irreversible (physical, at
     * the next maintenance window), without rewriting the scan side
-    * per request. Idempotent and re-runnable: the union is DISTINCT,
-    * so a crashed half-applied batch just re-runs. The ledger rides
-    * [[graft.sources.Sinks.appendLedger]] — no driver collect (a
-    * multi-year compliance ledger accumulates past any driver Set)
-    * and an A/B-generation + meta-last commit, so a crash mid-append
-    * leaves the PREVIOUS committed ledger serving, never a missing
-    * table that reads as "no tombstones" and silently re-admits
-    * taken-down content. */
+    * per request. Idempotent and re-runnable. */
   def tombstoneIvfPq(spark: org.apache.spark.sql.SparkSession,
                      prefix: String, ids: DataFrame,
                      idCol: String): Unit =
-    graft.sources.Sinks.appendLedger(spark, s"${prefix}_tombstones",
+    Generations.appendLedger(spark, s"${prefix}_tombstones",
       tombstoneIds(ids, idCol))
 
   /** The live tombstone set of a durable IVF×PQ index (empty frame if
-    * none were ever COMMITTED; a torn ledger — meta present but its
-    * generation missing or epoch-mismatched — refuses loudly, see
-    * [[graft.sources.Sinks.readLedger]]). */
+    * none were ever COMMITTED; a torn ledger refuses loudly). */
   def readIvfPqTombstones(spark: org.apache.spark.sql.SparkSession,
-                          prefix: String): DataFrame = {
-    import spark.implicits._
-    graft.sources.Sinks.readLedger(spark, s"${prefix}_tombstones")
-      .map(_._2).getOrElse(Seq.empty[Long].toDF("neighbor_id"))
-  }
+                          prefix: String): DataFrame =
+    committedTombstones(spark, prefix)
 
   /** Search a DURABLE IVF×PQ index with its tombstones applied — the
     * serving entry point after takedowns: reopen (epoch-validated),
@@ -2173,9 +1872,10 @@ object Similarity {
                       prefix: String, corpus: DataFrame, queries: DataFrame,
                       idCol: String, vecCol: String, k: Int,
                       nProbe: Int = 4, oversample: Int = 4): DataFrame = {
-    val r = readIvfPqIndexAndTombstones(spark, prefix)
-    searchIvfPq(r.index, corpus, queries, idCol, vecCol, k, nProbe,
-      oversample, exclude = Some(r.tombstones))
+    val live = openIvfPq(spark, prefix)
+    searchIvfPq(ivfPqFrom(spark, prefix, live), corpus, queries, idCol,
+      vecCol, k, nProbe, oversample,
+      exclude = Some(idsOrEmpty(spark, live.ledger)))
   }
 
   /** The ONE-CALL maintenance window for a durable IVF×PQ index — the
@@ -2192,17 +1892,14 @@ object Similarity {
     *   `(n_queries, pre_mean_recall, retrain_fired, post_mean_recall,
     *     post_retrain, epoch_changed)`
     *
-    * An undrifted index is a NO-OP by construction: no generation
-    * write, no swap — `epoch_changed` is false and the meta pointer
-    * is untouched (the q131 gate pins both paths) — and
-    * `post_* ≡ pre_*` without paying a second probe (nothing moved).
     * Cost discipline: the probe is bounded by the caller's QUERY
     * SAMPLE (the [[recallProbe]] contract — tens to hundreds of
     * queries, broadcast against one corpus scan), the fit by
     * `sample`, and the one irreducible O(corpus) pass (re-assign +
     * re-encode) happens only when the decision fires. The driver
     * sees exactly two bounded rows (the decision folds), never
-    * probe-scale data. */
+    * probe-scale data. Window rules (the q131 gate pins both paths):
+    * [[graft.sources.Generations.window]]. */
   def maintainIvfPqIndex(spark: org.apache.spark.sql.SparkSession,
                          prefix: String, corpus: DataFrame,
                          idCol: String, vecCol: String,
@@ -2210,35 +1907,21 @@ object Similarity {
                          sample: DataFrame, lloydIters: Int = 1,
                          nProbe: Int = 4, oversample: Int = 4,
                          numBuckets: Int = 64): DataFrame = {
-    import spark.implicits._
-    // one merged reopen (index meta + ledger meta, a single driver
-    // action) feeds BOTH the probe's exclude side and the truth side's
-    // anti-join per decision point — the window paid 5 sequential
-    // 1-row collects per decide before (optimization-guide §5); the
-    // epoch for the change flag rides the same fetch. The no-op path
-    // skips the closing epoch re-read outright: nothing fired, so the
-    // meta row is untouched by this (single-writer) window.
-    def decide(): (Long, Double, Boolean, String) = {
-      val r = readIvfPqIndexAndTombstones(spark, prefix)
-      val live = corpus.join(broadcast(r.tombstones
+    // one reopen feeds BOTH the probe's exclude side and the truth
+    // side's anti-join
+    def decide(live: Generations.Live): (Long, Double, Boolean) = {
+      val tombs = idsOrEmpty(spark, live.ledger)
+      val truth = corpus.join(broadcast(tombs
           .select(col("neighbor_id").as(idCol))), Seq(idCol), "left_anti")
-      val ann = searchIvfPq(r.index, corpus, queries, idCol, vecCol, k,
-        nProbe, oversample, exclude = Some(r.tombstones))
-      val d = driftDecision(
-        recallProbe(ann, live, queries, idCol, vecCol, k), minRecall)
-        .collect()(0)
-      (d.getLong(0), d.getDouble(1), d.getBoolean(2), r.epoch)
+      val ann = searchIvfPq(ivfPqFrom(spark, prefix, live), corpus,
+        queries, idCol, vecCol, k, nProbe, oversample,
+        exclude = Some(tombs))
+      decision(recallProbe(ann, truth, queries, idCol, vecCol, k),
+        minRecall)
     }
-    val (nQ, preMean, fired, epochBefore) = decide()
-    if (fired)
-      retrainIvfPqIndexBucketed(spark, prefix, corpus, idCol, vecCol,
-        sample, lloydIters, numBuckets)
-    val (_, postMean, postRetrain, epochAfter) = if (fired) decide()
-      else (nQ, preMean, fired, epochBefore)
-    Seq((nQ, preMean, fired, postMean, postRetrain,
-        epochAfter != epochBefore))
-      .toDF("n_queries", "pre_mean_recall", "retrain_fired",
-        "post_mean_recall", "post_retrain", "epoch_changed")
+    driftReport(spark, Generations.window(openIvfPq(spark, prefix))(
+        decide)(_._3)((live, _) => retrainIvfPqGen(spark, prefix, live,
+      corpus, idCol, vecCol, sample, lloydIters, numBuckets)))
   }
 
   /** Warm-start Lloyd refinement of an EXISTING PQ codebook over a
@@ -2311,79 +1994,48 @@ object Similarity {
     * [[recallProbe]] recovers. Fit cost is O(`sample`); the one full
     * re-encode pass over `corpus` writes the new generation BESIDE
     * the live one (the A/B pair — a bucketed table can't be
-    * overwritten from a plan still serving readers), and the one-row
-    * meta rewrite is the atomic pointer+epoch flip. The growth ledger
-    * resets (n_built = the retrain assignment, n_appended = 0): a
-    * retrain absorbs every prior append into the new geometry, so the
-    * drift cue starts clean.
-    *
-    * Crash windows, stated: before the codebooks rewrite → the old
-    * generation serves untouched; from the codebooks/centroids/stats
-    * rewrites (driver-local sources, their Overwrites wipe the old
-    * epoch tokens) until the meta commit → [[readIvfPqIndex]] refuses
-    * loudly (the append path's poison semantics); after the meta
-    * commit → the new generation serves; the superseded codes table
-    * drops last, best-effort (a crash before the drop leaves dead
-    * files, never a wrong read). */
+    * overwritten from a plan still serving readers). The growth
+    * ledger resets (n_built = the retrain assignment, n_appended = 0):
+    * a retrain absorbs every prior append into the new geometry, so
+    * the drift cue starts clean. The codebooks/centroids/stats
+    * rewrites (driver-local sources) wipe the old tokens, so a crash
+    * from there until the commit refuses loudly at [[readIvfPqIndex]]. */
   def retrainIvfPqIndexBucketed(spark: org.apache.spark.sql.SparkSession,
                                 prefix: String, corpus: DataFrame,
                                 idCol: String, vecCol: String,
                                 sample: DataFrame, lloydIters: Int = 1,
-                                numBuckets: Int = 64): Unit = {
-    import spark.implicits._
-    // one merged reopen (validates the current epoch) supplies the
-    // index, the live codes-table name AND the tombstone ledger — this
-    // was three sequential 1-row collects (optimization-guide §5)
-    val reopen = readIvfPqIndexAndTombstones(spark, prefix)
-    val index = reopen.index
-    val liveCodes = reopen.codesTable
-    val otherCodes =
-      if (liveCodes == s"${prefix}_cell_codes") s"${prefix}_cell_codes_b"
-      else s"${prefix}_cell_codes"
-    // the retrain is the PHYSICAL purge point for filed takedowns
-    // ([[tombstoneIvfPq]]): tombstoned rows never enter the new
-    // generation's re-encode, and the tombstone ledger clears after
-    // the swap — logical deletes become irreversible here. The purge
-    // is a broadcast anti-join against the ledger FRAME (never a
-    // driver collect — the ledger can outgrow any driver Set); the
-    // one bounded action is the isEmpty probe gating the clear.
-    val tombstones = reopen.tombstones
-      .select(col("neighbor_id").as(idCol)).localCheckpoint()
-    val hasTombstones = !tombstones.isEmpty
-    def purge(df: DataFrame): DataFrame =
-      if (!hasTombstones) df
-      else df.join(broadcast(tombstones), Seq(idCol), "left_anti")
-    // the fit sample purges too: a deleted vector must not even shape
-    // the new geometry
+                                numBuckets: Int = 64): Unit =
+    retrainIvfPqGen(spark, prefix, openIvfPq(spark, prefix), corpus, idCol,
+      vecCol, sample, lloydIters, numBuckets)
+
+  private def retrainIvfPqGen(spark: org.apache.spark.sql.SparkSession,
+                              prefix: String, live: Generations.Live,
+                              corpus: DataFrame, idCol: String,
+                              vecCol: String, sample: DataFrame,
+                              lloydIters: Int,
+                              numBuckets: Int): Map[String, String] = {
+    val index = ivfPqFrom(spark, prefix, live)
+    val liveCodes = live("codes_table")
+    val otherCodes = Generations.otherSlot(liveCodes, s"${prefix}_cell_codes")
+    val (purge, hasTombstones) = ledgerPurge(spark, live, idCol)
     val retrained = retrainIvfPq(index, purge(corpus), idCol, vecCol,
       purge(sample), lloydIters)
-    // 1. new scan-side generation writes beside the live one
-    graft.sources.Sinks.writeBucketed(retrained.cellCodes, otherCodes,
-      Seq("cell"), numBuckets)
-    // 2. geometry + ledger rewrite from driver-local fitted frames
-    graft.sources.Sinks.writeTable(retrained.codebooks,
-      s"${prefix}_codebooks")
-    graft.sources.Sinks.writeTable(retrained.centroids,
-      s"${prefix}_centroids")
-    graft.sources.Sinks.writeTable(
-      spark.table(otherCodes).groupBy(col("cell"))
-        .agg(count(lit(1)).as("n_built"))
-        .withColumn("n_appended", lit(0L)).coalesce(1),
+    // new scan-side generation beside the live one, then geometry +
+    // ledger from driver-local fitted frames
+    Sinks.writeBucketed(retrained.cellCodes, otherCodes, Seq("cell"),
+      numBuckets)
+    Sinks.writeTable(retrained.codebooks, s"${prefix}_codebooks")
+    Sinks.writeTable(retrained.centroids, s"${prefix}_centroids")
+    Sinks.writeTable(builtCellStats(spark.table(otherCodes)),
       s"${prefix}_cell_stats")
-    // 3–4. fresh epoch on the new generation, then the pointer flip
-    val epoch = graft.sources.Sinks.stampEpoch(spark,
-      ivfPqTables(prefix, otherCodes))
-    graft.sources.Sinks.writeTable(
-      Seq((index.nSub, index.nCentroids, epoch, otherCodes))
-        .toDF("n_sub", "n_centroids", "epoch", "codes_table"),
-      s"${prefix}_meta")
-    // 5. the superseded generation drops; the purged tombstone ledger
-    // clears (both best-effort — a crash here leaves dead files /
-    // already-purged tombstones that re-filter harmlessly, never a
-    // wrong read)
-    spark.sql(s"DROP TABLE IF EXISTS $liveCodes")
+    val meta = Generations.commit(spark, prefix,
+      ivfPqTables(prefix, otherCodes), Seq(liveCodes))(
+      ivfPqRow(index, otherCodes))
+    // a crash before the clear leaves already-purged tombstones that
+    // re-filter harmlessly, never a wrong read
     if (hasTombstones)
-      graft.sources.Sinks.clearLedger(spark, s"${prefix}_tombstones")
+      Generations.clearLedger(spark, s"${prefix}_tombstones")
+    meta
   }
 
   /** Embedding-cosine near-duplicate pairs above a threshold, via the

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.sources.{Generations, Sinks}
 
 /** Text-analysis operators for training-data curation: language ID,
   * quality scoring, token counting, document fingerprinting. All
@@ -449,86 +450,75 @@ object TextAnalysis {
       .select(col(idCol).cast("long").as("bench_id"), col("fingerprint"))
       .distinct()
 
+  private def fpsTables(prefix: String)(gen: String): Seq[String] =
+    Seq(s"${prefix}_fps_$gen")
+
+  private def winnowRow(gen: String, k: Int, w: Int, hashName: String)(
+      epoch: String): Seq[(String, Any)] =
+    Seq("gen" -> gen, "k" -> k, "w" -> w, "hash" -> hashName,
+      "epoch" -> epoch)
+
+  private def openWinnow(spark: org.apache.spark.sql.SparkSession,
+                         prefix: String,
+                         ledger: Boolean = true): Generations.Live =
+    Generations.open(spark, prefix, m => fpsTables(prefix)(m("gen")), ledger)
+
+  /** The face a reopen names, with its ledger (if read) applied: one
+    * broadcast anti-join on `bench_id` (the ledger is bounded, and a
+    * broadcast join preserves the streamed side's partitioning, so the
+    * index's bucket layout survives through it into the probe join). */
+  private def winnowFrom(spark: org.apache.spark.sql.SparkSession,
+                         prefix: String,
+                         live: Generations.Live): WinnowIndexFace = {
+    val rows = spark.table(s"${prefix}_fps_${live("gen")}")
+    WinnowIndexFace(live("k").toInt, live("w").toInt, live("hash"),
+      live.ledger.map(ids => rows.join(
+          broadcast(ids.select(col("bench_id")).distinct()),
+          Seq("bench_id"), "left_anti"))
+        .getOrElse(rows))
+  }
+
   /** Pointer-rooted durable face of the benchmark winnowing index:
     * generations alternate between `${prefix}_fps_<a|b>` tables
     * bucketed on `fingerprint` — the ONE probe key, which is what
     * lets the planner keep the bucketed scan under the probe join
     * (the q166 lesson: a join keyed on a subset or superset of the
-    * bucket columns disables it) — with the family crash discipline:
-    * epoch token after the table commit, one-row meta
-    * (gen, k, w, hash, epoch) written LAST, superseded generation
-    * dropped best-effort. */
+    * bucket columns disables it); meta (gen, k, w, hash, epoch). */
   def writeWinnowIndexRooted(spark: org.apache.spark.sql.SparkSession,
                              prefix: String, benchmark: DataFrame,
                              idCol: String, textCol: String,
                              k: Int = 4, w: Int = 4,
                              hashName: String = "native",
                              numBuckets: Int = 64): Unit = {
-    import spark.implicits._
     require(WinnowHashers.contains(hashName),
       s"unknown winnow hash '$hashName' (have: ${WinnowHashers.keys.mkString(", ")})")
-    val metaTable = s"${prefix}_meta"
-    val cur: Option[String] =
-      if (!spark.catalog.tableExists(metaTable)) None
-      else Some(spark.table(metaTable).collect()(0).getAs[String]("gen"))
-    val next = if (cur.contains("a")) "b" else "a"
-    val gen = s"${prefix}_fps_$next"
-    graft.sources.Sinks.writeBucketed(
-      winnowIndexRows(benchmark, idCol, textCol, k, w, hashName), gen,
-      Seq("fingerprint"), numBuckets)
-    val epoch = graft.sources.Sinks.stampEpoch(spark, Seq(gen))
-    graft.sources.Sinks.writeTable(
-      Seq((next, k, w, hashName, epoch))
-        .toDF("gen", "k", "w", "hash", "epoch"), metaTable)
-    cur.filter(_ != next).foreach(g =>
-      spark.sql(s"DROP TABLE IF EXISTS ${prefix}_fps_$g"))
+    Generations.rebuild(spark, prefix, Generations.liveGen(spark, prefix),
+      fpsTables(prefix))(g => Sinks.writeBucketed(
+        winnowIndexRows(benchmark, idCol, textCol, k, w, hashName),
+        s"${prefix}_fps_$g", Seq("fingerprint"), numBuckets))(
+      winnowRow(_, k, w, hashName)(_))
   }
 
   /** Reopen a rooted winnowing index (raw — takedowns not applied),
     * epoch-validated: a torn same-prefix rebuild refuses loudly. */
   def readWinnowIndexRooted(spark: org.apache.spark.sql.SparkSession,
-                            prefix: String): WinnowIndexFace = {
-    val meta = spark.table(s"${prefix}_meta").collect()(0)
-    val gen = s"${prefix}_fps_${meta.getAs[String]("gen")}"
-    graft.sources.Sinks.requireEpoch(spark, Seq(gen),
-      meta.getAs[String]("epoch"))
-    WinnowIndexFace(meta.getAs[Int]("k"), meta.getAs[Int]("w"),
-      meta.getAs[String]("hash"), spark.table(gen))
-  }
+                            prefix: String): WinnowIndexFace =
+    winnowFrom(spark, prefix, openWinnow(spark, prefix, ledger = false))
 
   /** Retire benchmark docs (a deprecated suite, a leaked eval) — the
-    * family ledger shape: idempotent distinct-union of bench ids,
-    * A/B + meta-last commit, applied at the live read. */
+    * family ledger shape ([[graft.sources.Generations.appendLedger]]),
+    * applied at the live read. */
   def tombstoneWinnowIndex(spark: org.apache.spark.sql.SparkSession,
                            prefix: String, ids: DataFrame): Unit =
-    graft.sources.Sinks.appendLedger(spark, s"${prefix}_tombstones",
+    Generations.appendLedger(spark, s"${prefix}_tombstones",
       ids.select(col(ids.columns.head).cast("long").as("bench_id")))
 
   /** The serving entry point: rooted read with the
     * `${prefix}_tombstones` ledger applied — retired suites leave the
-    * fingerprint space via ONE broadcast anti-join on `bench_id` (the
-    * ledger is bounded, and a broadcast join preserves the streamed
-    * side's partitioning, so the index's bucket layout survives
-    * through it into the probe join). */
+    * fingerprint space before the probe join. */
   def readWinnowIndexRootedLive(spark: org.apache.spark.sql.SparkSession,
-                                prefix: String): WinnowIndexFace = {
-    // index meta + ledger meta in ONE driver action (the reopen-floor
-    // merge — see [[graft.operators.Dedup.readExactIndexRootedLive]])
-    val (meta, ledMeta) = graft.sources.Sinks.metaWithLedgerMeta(spark,
-      s"${prefix}_meta", s"${prefix}_tombstones")
-    val gen = s"${prefix}_fps_${meta("gen")}"
-    graft.sources.Sinks.requireEpoch(spark, Seq(gen), meta("epoch"))
-    val face = WinnowIndexFace(meta("k").toInt, meta("w").toInt,
-      meta("hash"), spark.table(gen))
-    ledMeta.map { case (lgen, lepoch) =>
-        val ids = graft.sources.Sinks.resolveLedgerGen(spark,
-          s"${prefix}_tombstones", lgen, lepoch)
-        face.copy(rows = face.rows.join(
-          broadcast(ids.select(col("bench_id")).distinct()),
-          Seq("bench_id"), "left_anti"))
-      }
-      .getOrElse(face)
-  }
+                                prefix: String): WinnowIndexFace =
+    winnowFrom(spark, prefix, openWinnow(spark, prefix))
 
   /** [[winnowContainment]] computed against a durable face — the
     * decision is bit-identical (spec-pinned: every (n_fp, n_hits)
@@ -560,103 +550,44 @@ object TextAnalysis {
     * text (nothing fitted, nothing drifts), so a new suite's
     * (bench_id, fingerprint) rows bucket exactly as a full rebuild
     * from the union would (spec-pinned decision- and set-identical).
-    * Crash discipline is epoch-poison-FIRST: the generation's epoch
-    * tokens clear before any row lands, so a crash mid-append refuses
-    * loudly at the rooted read instead of serving half a suite; the
-    * meta re-stamp commits LAST. Cost is one bucketed write of the
-    * NEW suite's fingerprints only. Within-suite duplicates collapse
-    * here; a (bench_id, fingerprint) pair re-appended across calls is
-    * harmless probe fan-out, never a decision change. */
+    * Cost is one bucketed write of the NEW suite's fingerprints only
+    * ([[graft.sources.Generations.appendBucketed]]). Within-suite
+    * duplicates collapse here; a (bench_id, fingerprint) pair
+    * re-appended across calls is harmless probe fan-out, never a
+    * decision change. */
   def appendToWinnowIndexRooted(spark: org.apache.spark.sql.SparkSession,
                                 prefix: String, benchmark: DataFrame,
                                 idCol: String, textCol: String): Unit = {
-    import spark.implicits._
-    val meta = spark.table(s"${prefix}_meta").collect()(0)
-    val gen = s"${prefix}_fps_${meta.getAs[String]("gen")}"
-    graft.sources.Sinks.requireEpoch(spark, Seq(gen),
-      meta.getAs[String]("epoch"))
-    val (k, w, hashName) = (meta.getAs[Int]("k"), meta.getAs[Int]("w"),
-      meta.getAs[String]("hash"))
-    val numBuckets = spark.sessionState.catalog.getTableMetadata(
-        org.apache.spark.sql.catalyst.TableIdentifier(gen))
-      .bucketSpec.getOrElse(sys.error(s"$gen is not bucketed"))
-      .numBuckets
-    graft.sources.Sinks.clearEpochTokens(spark, gen)
-    winnowIndexRows(benchmark, idCol, textCol, k, w, hashName)
-      .select(spark.table(gen).columns.map(col): _*)
-      .write.mode(org.apache.spark.sql.SaveMode.Append)
-      .bucketBy(numBuckets, "fingerprint").sortBy("fingerprint")
-      .format("parquet")
-      .saveAsTable(gen)
-    val epoch = graft.sources.Sinks.stampEpoch(spark, Seq(gen))
-    graft.sources.Sinks.writeTable(
-      Seq((meta.getAs[String]("gen"), k, w, hashName, epoch))
-        .toDF("gen", "k", "w", "hash", "epoch"), s"${prefix}_meta")
+    val live = openWinnow(spark, prefix, ledger = false)
+    val gen = s"${prefix}_fps_${live("gen")}"
+    val (k, w, hashName) = (live("k").toInt, live("w").toInt, live("hash"))
+    Generations.appendBucketed(spark, gen,
+      winnowIndexRows(benchmark, idCol, textCol, k, w, hashName),
+      "fingerprint")
+    Generations.commit(spark, prefix, Seq(gen))(
+      winnowRow(live("gen"), k, w, hashName))
   }
 
   /** Purge-only maintenance window for a winnowing index — the q157
     * argument transfers: winnowing geometry is a fixed decomposition
     * (no fitted state, no drift dimension), so the only maintenance
-    * this face ever needs is making logical deletes physical. Fires
-    * on purge debt; the rewrite is one bucketed shuffle over the
-    * SURVIVING fingerprint rows (never a re-winnow of any corpus),
-    * generation flip + ledger clear; a quiet window leaves meta,
-    * generation and ledger untouched bit-for-bit. */
+    * this face ever needs is making logical deletes physical. The
+    * rewrite is one bucketed shuffle over the SURVIVING fingerprint
+    * rows (never a re-winnow of any corpus), inheriting the live
+    * generation's bucket count. Window rules:
+    * [[graft.sources.Generations.window]]. */
   def purgeWinnowIndex(spark: org.apache.spark.sql.SparkSession,
-                       prefix: String, numBuckets: Int = 64): DataFrame = {
-    import spark.implicits._
-    def pendingCount(): Long =
-      graft.sources.Sinks.readLedger(spark, s"${prefix}_tombstones")
-        .map(_._2.count()).getOrElse(0L)
-    // meta + ledger meta in ONE driver action; the quiet window pays
-    // one count action and zero further round-trips (was 4 sequential
-    // collects — optimization-guide §5)
-    val (m0, ledMeta) = graft.sources.Sinks.metaWithLedgerMeta(spark,
-      s"${prefix}_meta", s"${prefix}_tombstones")
-    val epochBefore = m0("epoch")
-    val ledgerRows = ledMeta.map { case (lgen, lepoch) =>
-      graft.sources.Sinks.resolveLedgerGen(spark,
-        s"${prefix}_tombstones", lgen, lepoch) }
-    val pending = ledgerRows.map(_.count()).getOrElse(0L)
-    val fired = pending > 0L
-    if (fired) {
-      // the live view reuses the meta/ledger already resolved above
-      // (single-writer window)
-      val gen0 = s"${prefix}_fps_${m0("gen")}"
-      graft.sources.Sinks.requireEpoch(spark, Seq(gen0), m0("epoch"))
-      val face0 = WinnowIndexFace(m0("k").toInt, m0("w").toInt,
-        m0("hash"), spark.table(gen0))
-      val live = ledgerRows.map(ids => face0.copy(rows = face0.rows.join(
-          broadcast(ids.select(col("bench_id")).distinct()),
-          Seq("bench_id"), "left_anti")))
-        .getOrElse(face0)
-      val cur = m0("gen")
-      val next = if (cur == "a") "b" else "a"
-      val gen = s"${prefix}_fps_$next"
-      // inherit the LIVE generation's bucket count (the purgeLshIndex
-      // discipline): a purge must never silently re-layout the index
-      // because a caller took the default
-      val buckets = spark.sessionState.catalog.getTableMetadata(
-          org.apache.spark.sql.catalyst.TableIdentifier(
-            s"${prefix}_fps_$cur"))
-        .bucketSpec.map(_.numBuckets).getOrElse(numBuckets)
-      graft.sources.Sinks.writeBucketed(live.rows, gen,
-        Seq("fingerprint"), buckets)
-      val epoch = graft.sources.Sinks.stampEpoch(spark, Seq(gen))
-      graft.sources.Sinks.writeTable(
-        Seq((next, live.k, live.w, live.hashName, epoch))
-          .toDF("gen", "k", "w", "hash", "epoch"), s"${prefix}_meta")
-      spark.sql(s"DROP TABLE IF EXISTS ${prefix}_fps_$cur")
-      graft.sources.Sinks.clearLedger(spark, s"${prefix}_tombstones")
+                       prefix: String, numBuckets: Int = 64): DataFrame =
+    Generations.purgeWindow(spark, prefix,
+        m => fpsTables(prefix)(m("gen"))) { live =>
+      val face = winnowFrom(spark, prefix, live)
+      val buckets = Generations.bucketCount(spark,
+        s"${prefix}_fps_${live("gen")}").getOrElse(numBuckets)
+      Generations.rebuild(spark, prefix, Some(live("gen")),
+        fpsTables(prefix))(g => Sinks.writeBucketed(face.rows,
+          s"${prefix}_fps_$g", Seq("fingerprint"), buckets))(
+        winnowRow(_, face.k, face.w, face.hashName)(_))
     }
-    // quiet window: meta and ledger untouched bit-for-bit — no re-read
-    val (postPending, epochAfter) =
-      if (fired) (pendingCount(),
-        spark.table(s"${prefix}_meta").collect()(0).getAs[String]("epoch"))
-      else (pending, epochBefore)
-    Seq((pending, fired, postPending, epochAfter != epochBefore))
-      .toDF("pending_tombstones", "fired", "post_pending", "gen_changed")
-  }
 
   /** One-call corpus datasheet: the corpus-level summary a
     * training-data release documents (Gebru et al.'s "Datasheets for
@@ -1390,124 +1321,80 @@ object TextAnalysis {
     TrigramLm(c3, c12, cb, cw, uni, total, minTrigramCount)
   }
 
-  /** The five data tables of a durable trigram LM (epoch-validated
-    * together on read). */
-  private def trigramLmTables(prefix: String): Seq[String] =
-    Seq(s"${prefix}_c3", s"${prefix}_c12", s"${prefix}_cb",
-      s"${prefix}_cw", s"${prefix}_uni")
+  /** The five data tables of a durable trigram LM generation
+    * (epoch-validated together on read). Generation `""` is the flat
+    * face [[writeTrigramLm]] writes under `prefix` itself. */
+  private def trigramLmTables(prefix: String)(gen: String): Seq[String] = {
+    val p = if (gen.isEmpty) prefix else s"${prefix}_$gen"
+    Seq("c3", "c12", "cb", "cw", "uni").map(t => s"${p}_$t")
+  }
+
+  private def lmRow(gen: String, model: TrigramLm)(
+      epoch: String): Seq[(String, Any)] =
+    Seq("gen" -> gen, "total" -> model.total,
+      "min_trigram_count" -> model.minTrigramCount, "epoch" -> epoch)
+
+  /** The five independent count tables, written concurrently (guide
+    * §2.6); the commit stays strictly after. */
+  private def writeLmTables(model: TrigramLm, tables: Seq[String]): Unit =
+    Sinks.inParallel(Seq(model.c3, model.c12, model.cb, model.cw, model.uni)
+      .zip(tables).map { case (df, t) => () => Sinks.writeTable(df, t) }: _*)
 
   /** Persist a fitted [[TrigramLm]] as tables — fit once, serve every
     * later scorer run (batch or streaming) from a table read instead
     * of a corpus refit: the fit's count aggregates over every corpus
     * trigram are the model's dominant cost, and a gate or a
     * production scorer that re-fits per run times the FIT, not the
-    * scorer. Same crash discipline as every index family here
-    * ([[graft.operators.Similarity.writeIvfIndexBucketed]]): the
-    * one-row meta (total, minTrigramCount, epoch) writes LAST, and a
-    * torn same-prefix rebuild refuses at [[readTrigramLm]] via the
-    * epoch tokens instead of pairing one generation's trigram counts
-    * with another's context totals — which would be silently shifted
-    * scores, not an error. */
+    * scorer. One generation `""` (flat table names) with meta
+    * (gen, total, min_trigram_count, epoch): a torn same-prefix
+    * rebuild refuses at [[readTrigramLm]] instead of pairing one
+    * generation's trigram counts with another's context totals —
+    * silently shifted scores, not an error. */
   def writeTrigramLm(model: TrigramLm, prefix: String): Unit = {
-    val spark = model.c3.sparkSession
-    import spark.implicits._
-    // five independent count tables — write concurrently (guide §2.6)
-    graft.sources.Sinks.inParallel(
-      () => graft.sources.Sinks.writeTable(model.c3, s"${prefix}_c3"),
-      () => graft.sources.Sinks.writeTable(model.c12, s"${prefix}_c12"),
-      () => graft.sources.Sinks.writeTable(model.cb, s"${prefix}_cb"),
-      () => graft.sources.Sinks.writeTable(model.cw, s"${prefix}_cw"),
-      () => graft.sources.Sinks.writeTable(model.uni, s"${prefix}_uni"))
-    val epoch = graft.sources.Sinks.stampEpoch(spark,
-      trigramLmTables(prefix))
-    graft.sources.Sinks.writeTable(
-      Seq((model.total, model.minTrigramCount, epoch))
-        .toDF("total", "min_trigram_count", "epoch"),
-      s"${prefix}_meta")
+    val tables = trigramLmTables(prefix)("")
+    writeLmTables(model, tables)
+    Generations.commit(model.c3.sparkSession, prefix, tables)(
+      lmRow("", model))
   }
 
-  /** Reopen a model written by [[writeTrigramLm]] (or swapped in
-    * place by [[writeTrigramLmRooted]] — the meta's `gen` column
-    * resolves the live A/B generation; legacy metas resolve to the
-    * flat table names); refuses a torn same-prefix rebuild
-    * (epoch-token mismatch). The returned tables broadcast into
+  private def openLm(spark: org.apache.spark.sql.SparkSession,
+                     prefix: String): Generations.Live =
+    Generations.open(spark, prefix, m => trigramLmTables(prefix)(m("gen")),
+      ledger = false)
+
+  private def lmFrom(spark: org.apache.spark.sql.SparkSession,
+                     prefix: String, live: Generations.Live): TrigramLm = {
+    val Seq(c3, c12, cb, cw, uni) =
+      trigramLmTables(prefix)(live("gen")).map(spark.table)
+    TrigramLm(c3, c12, cb, cw, uni, live("total").toLong,
+      live("min_trigram_count").toLong)
+  }
+
+  /** Reopen a model written by [[writeTrigramLm]] or
+    * [[writeTrigramLmRooted]] — the meta's `gen` column resolves the
+    * live generation; refuses a torn same-prefix rebuild (epoch-token
+    * mismatch). The returned tables broadcast into
     * [[trigramLmScore]]'s joins exactly like the freshly fitted
     * frames. */
   def readTrigramLm(spark: org.apache.spark.sql.SparkSession,
                     prefix: String): TrigramLm =
-    trigramLmFromMeta(spark, prefix,
-      spark.table(s"${prefix}_meta").collect()(0))
-
-  /** Assemble + epoch-validate a [[TrigramLm]] from an
-    * already-collected meta row — lets [[maintainTrigramLm]] reuse the
-    * row it fetched for the epoch flag instead of re-collecting the
-    * 1-row meta per probe (optimization-guide §5). */
-  private def trigramLmFromMeta(spark: org.apache.spark.sql.SparkSession,
-                                prefix: String,
-                                meta: org.apache.spark.sql.Row): TrigramLm = {
-    val p =
-      if (meta.schema.fieldNames.contains("gen"))
-        s"${prefix}_${meta.getAs[String]("gen")}"
-      else prefix
-    graft.sources.Sinks.requireEpoch(spark, trigramLmTables(p),
-      meta.getAs[String]("epoch"))
-    TrigramLm(spark.table(s"${p}_c3"), spark.table(s"${p}_c12"),
-      spark.table(s"${p}_cb"), spark.table(s"${p}_cw"),
-      spark.table(s"${p}_uni"), meta.getAs[Long]("total"),
-      meta.getAs[Long]("min_trigram_count"))
-  }
+    lmFrom(spark, prefix, openLm(spark, prefix))
 
   /** Pointer-rooted durable face of the trigram LM — the
     * [[graft.operators.Dedup.writeNgramIndexRooted]] discipline for a
     * FITTED artifact: the five count tables write to the ALTERNATE
     * `${prefix}_<a|b>_*` generation (a refit must never overwrite
-    * tables a reader may be serving from), the fresh epoch stamps
-    * them together, the one-row meta rewrite (gen, total,
-    * min_trigram_count, epoch) is the meta-LAST pointer+epoch flip,
-    * and the superseded generation (or the legacy flat tables) drops
-    * last, best-effort. Crash semantics, stated precisely: the meta
-    * rewrite itself is an Overwrite saveAsTable (drop + rewrite), so
-    * a crash BEFORE it starts leaves the old generation serving, a
-    * crash MID-rewrite leaves no resolvable meta — readers fail with
-    * a loud missing-table error (recovery: re-run the write; both
-    * generations' data tables are intact), and in no interleaving do
-    * readers see a MIXED generation; a generation torn after its
-    * commit refuses at [[readTrigramLm]]'s epoch validation. */
+    * tables a reader may be serving from), and the superseded
+    * generation (or the flat one) drops after the commit. */
   def writeTrigramLmRooted(spark: org.apache.spark.sql.SparkSession,
-                           prefix: String, model: TrigramLm): Unit = {
-    import spark.implicits._
-    val metaTable = s"${prefix}_meta"
-    val cur: Option[String] =
-      if (!spark.catalog.tableExists(metaTable)) None
-      else {
-        val m = spark.table(metaTable).collect()(0)
-        if (m.schema.fieldNames.contains("gen"))
-          Some(m.getAs[String]("gen"))
-        else None
-      }
-    val next = if (cur.contains("a")) "b" else "a"
-    val p = s"${prefix}_$next"
-    // five independent count tables of the non-serving generation —
-    // write concurrently (guide §2.6); epoch + meta stay strictly after
-    graft.sources.Sinks.inParallel(
-      () => graft.sources.Sinks.writeTable(model.c3, s"${p}_c3"),
-      () => graft.sources.Sinks.writeTable(model.c12, s"${p}_c12"),
-      () => graft.sources.Sinks.writeTable(model.cb, s"${p}_cb"),
-      () => graft.sources.Sinks.writeTable(model.cw, s"${p}_cw"),
-      () => graft.sources.Sinks.writeTable(model.uni, s"${p}_uni"))
-    val epoch = graft.sources.Sinks.stampEpoch(spark,
-      trigramLmTables(p))
-    graft.sources.Sinks.writeTable(
-      Seq((next, model.total, model.minTrigramCount, epoch))
-        .toDF("gen", "total", "min_trigram_count", "epoch"),
-      metaTable)
-    val old = cur match {
-      case Some(g) if g != next => trigramLmTables(s"${prefix}_$g")
-      case None => trigramLmTables(prefix) // legacy flat generation
-      case _ => Nil
-    }
-    old.foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
-  }
+                           prefix: String, model: TrigramLm): Unit =
+    writeLmGen(spark, prefix, Generations.liveGen(spark, prefix), model)
+
+  private def writeLmGen(spark: org.apache.spark.sql.SparkSession,
+                         prefix: String, cur: Option[String],
+                         model: TrigramLm): Map[String, String] =
+    Generations.rebuild(spark, prefix, cur, trigramLmTables(prefix))(g =>
+      writeLmTables(model, trigramLmTables(prefix)(g)))(lmRow(_, model)(_))
 
   /** ONE-CALL maintenance window for a durable trigram LM — the
     * q139/q131 cron shape reaching the FITTED-artifact families: an
@@ -1529,24 +1416,19 @@ object TextAnalysis {
     *   re-probe — the post-refit OOV rate, which recovers iff the
     *            refit corpus actually covers the drifted vocabulary.
     *
-    * A quiet window (no drift) is a no-op by construction: no table
-    * write, meta untouched bit-for-bit, `post ≡ pre` without a second
-    * probe. Returns one bounded report row of INTEGER counts
+    * Returns one bounded report row of INTEGER counts
     * (`n_sample_tokens`, `pre_oov_tokens`, `refit_fired`,
     * `post_oov_tokens`, `epoch_changed`) — rates stay ratios of
-    * longs, engine-replayable exactly. */
+    * longs, engine-replayable exactly. Window rules:
+    * [[graft.sources.Generations.window]]. */
   def maintainTrigramLm(spark: org.apache.spark.sql.SparkSession,
                         prefix: String, sample: DataFrame,
                         textCol: String, corpus: DataFrame,
                         maxOovRate: Double,
                         minTrigramCount: Long = 2): DataFrame = {
     import spark.implicits._
-    def metaRow() = spark.table(s"${prefix}_meta").collect()(0)
-    // meta-row reuse per probe + quiet-path skip of the closing meta
-    // re-read (single-writer window) — was 4 sequential 1-row collects
-    // per quiet tick (optimization-guide §5)
-    def probe(m: org.apache.spark.sql.Row): (Long, Long) = {
-      val model = trigramLmFromMeta(spark, prefix, m)
+    def probe(live: Generations.Live): (Long, Long) = {
+      val model = lmFrom(spark, prefix, live)
       val toks = sample
         .select(split(lower(trim(col(textCol))), "\\s+").as("__tk0"))
         .select(explode(expr("filter(__tk0, t -> t != '')")).as("w3"))
@@ -1557,19 +1439,11 @@ object TextAnalysis {
         .collect()(0)
       (r.getLong(0), r.getLong(1))
     }
-    val m0 = metaRow()
-    val epochBefore = m0.getAs[String]("epoch")
-    val (n, preOov) = probe(m0)
-    val fired = n > 0 && preOov.toDouble > maxOovRate * n
-    if (fired)
-      writeTrigramLmRooted(spark, prefix,
-        fitTrigramLm(corpus, textCol, minTrigramCount))
-    val (postOov, epochAfter) =
-      if (fired) {
-        val m2 = metaRow()
-        (probe(m2)._2, m2.getAs[String]("epoch"))
-      } else (preOov, epochBefore)
-    Seq((n, preOov, fired, postOov, epochAfter != epochBefore))
+    val w = Generations.window(openLm(spark, prefix))(probe)(p =>
+        p._1 > 0 && p._2.toDouble > maxOovRate * p._1)((live, _) =>
+      writeLmGen(spark, prefix, Some(live("gen")),
+        fitTrigramLm(corpus, textCol, minTrigramCount)))
+    Seq((w.pre._1, w.pre._2, w.fired, w.post._2, w.changed))
       .toDF("n_sample_tokens", "pre_oov_tokens", "refit_fired",
         "post_oov_tokens", "epoch_changed")
   }

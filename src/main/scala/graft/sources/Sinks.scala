@@ -195,66 +195,6 @@ object Sinks {
       finally pool.shutdown()
     }
 
-  /** Resolve a table's data location through the session catalog. */
-  private def tableLocation(spark: org.apache.spark.sql.SparkSession,
-                            table: String): Path =
-    new Path(spark.sessionState.catalog.getTableMetadata(
-      org.apache.spark.sql.catalyst.TableIdentifier(table)).location)
-
-  /** Stamp one fresh `_graft_epoch_<uuid>` token file into the data
-    * directory of each (already committed) table of a multi-table
-    * index write, and return the epoch for the writer to record in
-    * its meta table — the [[graft.operators.Bpe.writeBpeVocab]]
-    * crash-consistency discipline generalized: the meta is written
-    * LAST, so a crash anywhere leaves either the old consistent state
-    * or a meta whose epoch token some data table lacks (a same-prefix
-    * rebuild's Overwrite wiped the old token with the old files), and
-    * [[requireEpoch]] refuses the mixed generation loudly instead of
-    * letting a reader pair one generation's data with another's
-    * geometry — which for an LSH index would be silent zero recall,
-    * not an error. Underscore-prefixed files are invisible to Spark's
-    * parquet reads, so the token never pollutes the table's rows. */
-  private[graft] def stampEpoch(spark: org.apache.spark.sql.SparkSession,
-                                tables: Seq[String]): String = {
-    val epoch = java.util.UUID.randomUUID().toString
-    tables.foreach { t =>
-      val loc = tableLocation(spark, t)
-      val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      fs.create(new Path(loc, s"_graft_epoch_$epoch"), true).close()
-    }
-    epoch
-  }
-
-  /** Delete every epoch token from a table's data directory — the
-    * POISON step opening an in-place index APPEND: tokens go first,
-    * then the appended files, then a fresh [[stampEpoch]] + meta
-    * rewrite. A crash anywhere inside that window leaves the old meta
-    * pointing at an epoch no longer present → [[requireEpoch]]
-    * refuses, so a half-appended batch can never be served as
-    * complete. */
-  private[graft] def clearEpochTokens(
-      spark: org.apache.spark.sql.SparkSession, table: String): Unit = {
-    val loc = tableLocation(spark, table)
-    val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    Option(fs.globStatus(new Path(loc, "_graft_epoch_*")))
-      .getOrElse(Array.empty)
-      .foreach(st => fs.delete(st.getPath, false))
-  }
-
-  /** Refuse to reopen an index whose meta epoch is missing from any
-    * data table's directory — see [[stampEpoch]]. */
-  private[graft] def requireEpoch(spark: org.apache.spark.sql.SparkSession,
-                                  tables: Seq[String], epoch: String): Unit =
-    tables.foreach { t =>
-      val loc = tableLocation(spark, t)
-      val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      require(fs.exists(new Path(loc, s"_graft_epoch_$epoch")),
-        s"epoch token _graft_epoch_$epoch missing from table '$t' ($loc) — " +
-          "the index meta and this data table are from different write " +
-          "attempts (torn same-prefix rebuild); re-run the index write, " +
-          "or write rebuilds to a fresh prefix")
-    }
-
   /** Commit a new live epoch for a DIRECTORY-backed table rooted at
     * `root` (z-ordered layouts and any other epoch-per-directory
     * store): `root/_graft_live` names the serving epoch subdirectory,
@@ -312,153 +252,6 @@ object Sinks {
         "or incomplete — the epoch was deleted out from under the " +
         "pointer; re-write and re-swap")
     target.toString
-  }
-
-  /** Crash-safe DISTINCT-UNION ledger append — the durable-set
-    * primitive behind every takedown ledger
-    * ([[graft.operators.Similarity.tombstoneIvfPq]],
-    * [[graft.operators.Dedup.tombstoneExactIndex]],
-    * [[graft.operators.Dedup.tombstoneNgramIndex]]). Two properties
-    * the naive read-then-Overwrite rewrite lacks:
-    *
-    *   - NO DRIVER COLLECT: the merge is
-    *     `live.unionByName(incoming).distinct()` executed as a frame —
-    *     a multi-year compliance ledger at 100 TB scale accumulates
-    *     past any driver Set, and idempotence (a crashed half-applied
-    *     batch just re-runs) comes from the distinct, not from
-    *     driver-side dedup.
-    *   - NO WINDOW WHERE THE LEDGER DOESN'T EXIST: Overwrite on the
-    *     serving table drops it before rewriting, so a crash
-    *     mid-rewrite leaves NO table — and a reader treating a
-    *     missing ledger as "no tombstones" silently re-admits
-    *     taken-down content. Here the merge writes to the A/B
-    *     generation table that is NOT serving, gets an epoch token,
-    *     and the one-row `${ledger}_meta` (generation + epoch)
-    *     written LAST is the atomic commit — the
-    *     [[graft.operators.Similarity.retrainIvfIndexBucketed]]
-    *     discipline applied to ledgers. A crash before the meta
-    *     commit leaves the old generation serving (the takedown call
-    *     FAILED and re-runs); a generation that loses its epoch token
-    *     (torn same-name rebuild) makes [[readLedger]] refuse
-    *     loudly instead of serving a mixed or empty set.
-    *
-    * ONE FILE per generation (`coalesce(1)`, no extra shuffle): a
-    * ledger is a bounded takedown set in every serving path and each
-    * lifecycle reopen re-lists its files, so one file beats one per
-    * shuffle partition (guide §6, output file sizing); the price is a
-    * single-task distinct. A ledger past control-plane size would need
-    * a partitioned or bucketed generation table written by many tasks,
-    * and readers that no longer broadcast it whole. */
-  def appendLedger(spark: org.apache.spark.sql.SparkSession,
-                   ledger: String, incoming: DataFrame): Unit = {
-    val live = readLedger(spark, ledger)
-    val nextGen = live.map(_._1) match {
-      case Some("a") => "b"
-      case _ => "a"
-    }
-    val merged = live.map(_._2.unionByName(incoming)).getOrElse(incoming)
-      .distinct().coalesce(1)
-    writeTable(merged, s"${ledger}_$nextGen")
-    val epoch = stampEpoch(spark, Seq(s"${ledger}_$nextGen"))
-    writeTable(spark.createDataFrame(
-        java.util.Arrays.asList(org.apache.spark.sql.Row(nextGen, epoch)),
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("gen",
-            org.apache.spark.sql.types.StringType),
-          org.apache.spark.sql.types.StructField("epoch",
-            org.apache.spark.sql.types.StringType)))),
-      s"${ledger}_meta")
-  }
-
-  /** The committed state of an [[appendLedger]] ledger:
-    * `None` = never created (readers treat as the empty set — by
-    * meta-written-last, "no meta" can only mean no append ever
-    * COMMITTED); `Some((gen, rows))` = the serving generation,
-    * epoch-validated — a meta whose generation table is missing or
-    * carries a different epoch token refuses loudly
-    * ([[requireEpoch]]) rather than silently re-admitting taken-down
-    * content. */
-  def readLedger(spark: org.apache.spark.sql.SparkSession,
-                 ledger: String): Option[(String, DataFrame)] = {
-    val metaTable = s"${ledger}_meta"
-    if (!spark.catalog.tableExists(metaTable)) None
-    else {
-      val meta = spark.table(metaTable).collect()
-      require(meta.length == 1, s"$metaTable must hold exactly one row")
-      val gen = meta(0).getString(0)
-      Some((gen,
-        resolveLedgerGen(spark, ledger, gen, meta(0).getString(1))))
-    }
-  }
-
-  /** The validation/resolution half of [[readLedger]] given an
-    * already-collected meta row — lets a caller that fetched the
-    * ledger meta alongside another 1-row meta in ONE driver action
-    * (the lifecycle gates' collect-floor merge, optimization-guide §5)
-    * reuse the exact same torn-ledger refusal semantics. */
-  private[graft] def resolveLedgerGen(spark: org.apache.spark.sql.SparkSession,
-                                      ledger: String, gen: String,
-                                      epoch: String): DataFrame = {
-    val genTable = s"${ledger}_$gen"
-    require(spark.catalog.tableExists(genTable),
-      s"ledger meta ${ledger}_meta names generation '$gen' but $genTable " +
-        "does not exist — the ledger was torn out from under its " +
-        "commit record; restore the table or re-file the takedowns " +
-        "(serving an empty ledger would silently re-admit " +
-        "taken-down content)")
-    requireEpoch(spark, Seq(genTable), epoch)
-    spark.table(genTable)
-  }
-
-  /** ONE driver action for the "reopen an index live" read shape: the
-    * index's 1-row meta table plus, when present, its sibling takedown
-    * ledger's 1-row meta — a union job with two parallel 1-file scan
-    * tasks instead of two sequential collect jobs. Each collect is
-    * ~100 ms of fixed driver floor (OPTIMIZATION_r16.md), and every
-    * composed lifecycle gate reopens its index 3-6 times, so the
-    * halved job count is real wall time (optimization-guide §5: the driver should
-    * do almost no data work — including queueing sequential 1-row
-    * jobs). Values ride as strings (every meta column here is a
-    * string; numeric meta columns round-trip losslessly through
-    * Double/Long.toString semantics). Returns the meta's first row as
-    * column-name→value, plus the ledger meta's (gen, epoch) when the
-    * ledger exists. */
-  private[graft] def metaWithLedgerMeta(
-      spark: org.apache.spark.sql.SparkSession, metaTable: String,
-      ledger: String): (Map[String, String], Option[(String, String)]) = {
-    import org.apache.spark.sql.functions.{array, col, lit}
-    val meta = spark.table(metaTable)
-    val metaCols = array(meta.columns.map(c => col(c).cast("string")): _*)
-    if (!spark.catalog.tableExists(s"${ledger}_meta")) {
-      val r = meta.select(metaCols.as("__v")).collect()
-      (meta.columns.zip(r(0).getSeq[String](0)).toMap, None)
-    } else {
-      val rows = meta.select(lit("m").as("__src"), metaCols.as("__v"))
-        .unionAll(spark.table(s"${ledger}_meta")
-          .select(lit("l").as("__src"),
-            array(col("gen").cast("string"),
-              col("epoch").cast("string")).as("__v")))
-        .collect()
-      val l = rows.filter(_.getString(0) == "l")
-      require(l.length == 1, s"${ledger}_meta must hold exactly one row")
-      val mv = rows.find(_.getString(0) == "m")
-        .getOrElse(sys.error(s"$metaTable holds no rows"))
-        .getSeq[String](1)
-      val lv = l(0).getSeq[String](1)
-      (meta.columns.zip(mv).toMap, Some((lv(0), lv(1))))
-    }
-  }
-
-  /** Drop a committed ledger — the physical-purge endpoint (after a
-    * retrain/compaction has applied the tombstones to the data
-    * itself). Meta drops FIRST so a crash mid-clear leaves "never
-    * created" (correct — the purge already happened), never a meta
-    * pointing at a dropped generation. */
-  def clearLedger(spark: org.apache.spark.sql.SparkSession,
-                  ledger: String): Unit = {
-    spark.sql(s"DROP TABLE IF EXISTS ${ledger}_meta")
-    spark.sql(s"DROP TABLE IF EXISTS ${ledger}_a")
-    spark.sql(s"DROP TABLE IF EXISTS ${ledger}_b")
   }
 
   /** saveAsTable refuses a managed-table name whose warehouse

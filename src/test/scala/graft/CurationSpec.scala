@@ -852,7 +852,7 @@ class CurationSpec extends SparkSpec {
       !noop.getBoolean(4), s"undrifted sample must be a no-op: $noop")
     assert(spark.table("lr_mw_meta").collect().toSeq == metaBefore,
       "a quiet window must not touch the commit record")
-    graft.sources.Sinks.clearEpochTokens(spark, "lr_mw_b_w")
+    graft.sources.Generations.clearEpochTokens(spark, "lr_mw_b_w")
     assert(intercept[IllegalArgumentException] {
       Curation.readQualityLr(spark, "lr_mw")
     }.getMessage.contains("epoch token"))
@@ -887,7 +887,7 @@ class CurationSpec extends SparkSpec {
       !noop.getBoolean(4), s"undrifted sample must be a no-op: $noop")
     assert(spark.table("dsir_mw_meta").collect().toSeq == metaBefore,
       "a quiet window must not touch the commit record")
-    graft.sources.Sinks.clearEpochTokens(spark, "dsir_mw_b_w")
+    graft.sources.Generations.clearEpochTokens(spark, "dsir_mw_b_w")
     assert(intercept[IllegalArgumentException] {
       Curation.readDsir(spark, "dsir_mw")
     }.getMessage.contains("epoch token"))

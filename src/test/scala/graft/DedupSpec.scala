@@ -973,7 +973,7 @@ class DedupSpec extends SparkSpec {
       Seq(Tuple1("takedown corpus doc 7")).toDF("text"), "text")
     Dedup.tombstoneExactIndex(spark, "exact_td_spec",
       Seq(Tuple1("takedown corpus doc 7")).toDF("text"), "text")
-    assert(graft.sources.Sinks.readLedger(spark, "exact_td_spec_tombstones")
+    assert(graft.sources.Generations.readLedger(spark, "exact_td_spec_tombstones")
       .get._2.count() == 1L)
     val live = Dedup.readExactIndexLive(spark, "exact_td_spec", s"$dir/idx")
     assert(kept(live) == Seq(9000L, 9002L),
@@ -1018,7 +1018,7 @@ class DedupSpec extends SparkSpec {
       Seq(2L).toDF("doc_id"))
     Dedup.tombstoneNgramIndex(spark, "ngram_td_spec",
       Seq(2L).toDF("doc_id")) // idempotent re-run
-    assert(graft.sources.Sinks.readLedger(spark, "ngram_td_spec_tombstones")
+    assert(graft.sources.Generations.readLedger(spark, "ngram_td_spec_tombstones")
       .get._2.count() == 1L)
     val live = Dedup.readNgramIndexLive(spark, "ngram_td_spec",
       "doc_id", 4)
@@ -1085,7 +1085,7 @@ class DedupSpec extends SparkSpec {
       "the generation pointer must flip")
     assert(!spark.catalog.tableExists("hm_spec_members"),
       "the superseded generation drops")
-    assert(graft.sources.Sinks.readLedger(spark, "hm_spec_tombstones")
+    assert(graft.sources.Generations.readLedger(spark, "hm_spec_tombstones")
       .isEmpty, "the ledger clears once deletes are physical")
     val compacted = Dedup.readHammingMembers(spark, "hm_spec")
     assert(idsIn(compacted) == Set(10L, 20L),
@@ -1096,7 +1096,7 @@ class DedupSpec extends SparkSpec {
           "ref_id", "sig", maxHamming = 3).collect().toSet,
       "compacted table ≡ a fresh build on the purged reference set")
     // torn window: wiping the live generation's epoch token refuses
-    graft.sources.Sinks.clearEpochTokens(spark, "hm_spec_members_b")
+    graft.sources.Generations.clearEpochTokens(spark, "hm_spec_members_b")
     assert(intercept[IllegalArgumentException] {
       Dedup.readHammingMembers(spark, "hm_spec")
     }.getMessage.contains("epoch token"))
@@ -1188,7 +1188,7 @@ class DedupSpec extends SparkSpec {
       == "a", "generation b -> a")
     assert(kept() == Seq(9000L, 9001L),
       "physical purge must not move any decision")
-    assert(graft.sources.Sinks.readLedger(spark,
+    assert(graft.sources.Generations.readLedger(spark,
       "exact_maint_tombstones").isEmpty, "ledger clears after the purge")
     val stale = Seq(Tuple1("maintain corpus doc 7")).toDF("text")
       .select(Dedup.mightContainIndexCol(
@@ -1241,7 +1241,7 @@ class DedupSpec extends SparkSpec {
       "the purged generation carries no grams of the removed doc")
     assert(!spark.catalog.tableExists("ngram_maint_grams_a"),
       "the superseded generation drops")
-    assert(graft.sources.Sinks.readLedger(spark,
+    assert(graft.sources.Generations.readLedger(spark,
       "ngram_maint_tombstones").isEmpty)
   }
 
@@ -1271,7 +1271,7 @@ class DedupSpec extends SparkSpec {
       && r1.getAs[Boolean]("gen_changed"))
     assert(idsIn(Dedup.readHammingMembers(spark, "hm_maint"))
       == Set(10L, 20L), "the purged id must not re-band")
-    assert(graft.sources.Sinks.readLedger(spark,
+    assert(graft.sources.Generations.readLedger(spark,
       "hm_maint_tombstones").isEmpty)
   }
 
@@ -1281,7 +1281,7 @@ class DedupSpec extends SparkSpec {
     val refs = Seq(
       (1L, base), (2L, base ^ 0xFFL), (3L, 0x0123456789ABCDEFL))
       .toDF("media_id", "sig")
-    graft.sources.Sinks.clearLedger(spark, "bsi_tombstones")
+    graft.sources.Generations.clearLedger(spark, "bsi_tombstones")
     Dedup.writeHammingBandIndexRooted(spark, "bsi", refs, "media_id",
       "sig", maxHamming = 2, numBuckets = 4)
     val (mh, rows) = Dedup.readHammingBandIndexRootedLive(spark, "bsi")
@@ -1342,7 +1342,7 @@ class DedupSpec extends SparkSpec {
     assert(spark.table("bsi_meta").collect().toSeq == metaBefore,
       "a quiet window must not touch the commit record")
     // torn generation refuses at the rooted read
-    graft.sources.Sinks.clearEpochTokens(spark, "bsi_bands_b")
+    graft.sources.Generations.clearEpochTokens(spark, "bsi_bands_b")
     assert(intercept[IllegalArgumentException] {
       Dedup.readHammingBandIndexRooted(spark, "bsi")
     }.getMessage.contains("epoch token"))
@@ -1355,8 +1355,8 @@ class DedupSpec extends SparkSpec {
       .toDF("media_id", "sig")
     val extra = (61L to 90L).map(i => (i, rnd.nextLong()))
       .toDF("media_id", "sig")
-    graft.sources.Sinks.clearLedger(spark, "bsa_tombstones")
-    graft.sources.Sinks.clearLedger(spark, "bsa_rb_tombstones")
+    graft.sources.Generations.clearLedger(spark, "bsa_tombstones")
+    graft.sources.Generations.clearLedger(spark, "bsa_rb_tombstones")
     Dedup.writeHammingBandIndexRooted(spark, "bsa", base, "media_id",
       "sig", maxHamming = 3, numBuckets = 4)
     Dedup.appendToHammingBandIndexRooted(spark, "bsa", extra,
@@ -1390,7 +1390,7 @@ class DedupSpec extends SparkSpec {
         "members must serve)")
     // crash mid-append = poisoned epoch → loud refusal, never a
     // half-appended serve
-    graft.sources.Sinks.clearEpochTokens(spark, "bsa_bands_a")
+    graft.sources.Generations.clearEpochTokens(spark, "bsa_bands_a")
     assert(intercept[IllegalArgumentException] {
       Dedup.readHammingBandIndexRooted(spark, "bsa")
     }.getMessage.contains("epoch token"))
@@ -1401,31 +1401,31 @@ class DedupSpec extends SparkSpec {
     // fixture: a 1-row index-style meta + a committed ledger
     graft.sources.Sinks.writeTable(
       Seq(("a", "mlm_idx_dir")).toDF("gen", "index_dir"), "mlm_meta")
-    graft.sources.Sinks.appendLedger(spark, "mlm_tombstones",
+    graft.sources.Generations.appendLedger(spark, "mlm_tombstones",
       spark.range(1, 10).select($"id".as("neighbor_id")))
     // values equal the sequential composition's
-    val (meta, ledMeta) = graft.sources.Sinks.metaWithLedgerMeta(spark,
+    val (meta, ledMeta) = graft.sources.Generations.metaWithLedgerMeta(spark,
       "mlm_meta", "mlm_tombstones")
     assert(meta == Map("gen" -> "a", "index_dir" -> "mlm_idx_dir"))
     val Some((gen, rows)) =
-      graft.sources.Sinks.readLedger(spark, "mlm_tombstones")
+      graft.sources.Generations.readLedger(spark, "mlm_tombstones")
     assert(ledMeta.map(_._1).contains(gen),
       "merged read must resolve the same serving generation")
-    val resolved = graft.sources.Sinks.resolveLedgerGen(spark,
+    val resolved = graft.sources.Generations.resolveLedgerGen(spark,
       "mlm_tombstones", ledMeta.get._1, ledMeta.get._2)
     assert(resolved.collect().map(_.getLong(0)).sorted.toSeq ==
       rows.collect().map(_.getLong(0)).sorted.toSeq)
     // absent ledger → None, one action, meta values intact
-    val (meta2, led2) = graft.sources.Sinks.metaWithLedgerMeta(spark,
+    val (meta2, led2) = graft.sources.Generations.metaWithLedgerMeta(spark,
       "mlm_meta", "mlm_nosuch")
     assert(meta2("gen") == "a" && led2.isEmpty)
     // torn ledger (generation table dropped under the meta) must
     // refuse exactly as readLedger does
     spark.sql(s"DROP TABLE mlm_tombstones_$gen")
-    val (_, led3) = graft.sources.Sinks.metaWithLedgerMeta(spark,
+    val (_, led3) = graft.sources.Generations.metaWithLedgerMeta(spark,
       "mlm_meta", "mlm_tombstones")
     assert(intercept[IllegalArgumentException] {
-      graft.sources.Sinks.resolveLedgerGen(spark, "mlm_tombstones",
+      graft.sources.Generations.resolveLedgerGen(spark, "mlm_tombstones",
         led3.get._1, led3.get._2)
     }.getMessage.contains("torn"))
   }

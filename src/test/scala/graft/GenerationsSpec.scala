@@ -1,0 +1,67 @@
+package graft
+
+import java.nio.file.{Files, Path, Paths}
+import scala.jdk.CollectionConverters._
+
+import graft.sources.{Generations, Sinks}
+
+class GenerationsSpec extends SparkSpec {
+
+  test("commit stamps the generation, writes a typed meta row, and open validates it") {
+    import spark.implicits._
+    Sinks.writeTable(Seq(1L, 2L).toDF("id"), "gs_rt_x_a")
+    val committed = Generations.commit(spark, "gs_rt", Seq("gs_rt_x_a"))(e =>
+      Seq("gen" -> "a", "k" -> 3, "n" -> 7L, "bias" -> 0.125, "epoch" -> e))
+    val row = spark.table("gs_rt_meta").collect()(0)
+    assert(row.getString(0) == "a" && row.getInt(1) == 3 &&
+      row.getLong(2) == 7L && row.getDouble(3) == 0.125)
+    val live = Generations.open(spark, "gs_rt", m => Seq(s"gs_rt_x_${m("gen")}"),
+      ledger = false)
+    assert(live.meta == committed && live.ledger.isEmpty)
+    Generations.clearEpochTokens(spark, "gs_rt_x_a")
+    assert(intercept[IllegalArgumentException] {
+      Generations.open(spark, "gs_rt", m => Seq(s"gs_rt_x_${m("gen")}"))
+    }.getMessage.contains("epoch token"))
+  }
+
+  test("rebuild writes the other slot, flips the pointer and drops the superseded slot") {
+    import spark.implicits._
+    def write(rows: Seq[Long], cur: Option[String]) =
+      Generations.rebuild(spark, "gs_rb", cur, g => Seq(s"gs_rb_x_$g"))(g =>
+        Sinks.writeTable(rows.toDF("id"), s"gs_rb_x_$g"))((g, e) =>
+        Seq("gen" -> g, "epoch" -> e))
+    assert(write(Seq(1L), Generations.liveGen(spark, "gs_rb"))("gen") == "a")
+    assert(Generations.liveGen(spark, "gs_rb").contains("a"))
+    assert(write(Seq(2L, 3L), Some("a"))("gen") == "b")
+    assert(!spark.catalog.tableExists("gs_rb_x_a"))
+    assert(spark.table("gs_rb_x_b").count() == 2L)
+  }
+
+  test("a quiet window never repairs and re-measures nothing; a fired one re-measures the commit") {
+    val live = Generations.Live(Map("gen" -> "a", "epoch" -> "e0"), None)
+    var measured = 0
+    val quiet = Generations.window(live)(l => { measured += 1; l("gen") })(
+      _ => false)((_, _) => sys.error("a quiet window must not repair"))
+    assert(measured == 1 && !quiet.fired && !quiet.changed &&
+      quiet.post == quiet.pre)
+    val fired = Generations.window(live)(_("gen"))(_ == "a")((_, _) =>
+      Map("gen" -> "b", "epoch" -> "e1"))
+    assert(fired.fired && fired.changed && fired.pre == "a" &&
+      fired.post == "b")
+  }
+
+  test("the commit protocol lives only in the generation store") {
+    val protocol = """stampEpoch|requireEpoch|clearEpochTokens|_graft_epoch_""".r
+    val s = Files.walk(Paths.get("src/main/scala"))
+    val files: Seq[Path] =
+      try s.iterator.asScala.filter(_.toString.endsWith(".scala")).toList
+      finally s.close()
+    assert(files.exists(_.getFileName.toString == "Generations.scala"))
+    val offenders = files
+      .filter(_.getFileName.toString != "Generations.scala")
+      .filter(f => protocol.findFirstIn(Files.readString(f)).isDefined)
+    assert(offenders.isEmpty,
+      "epoch stamps, checks and token names belong in " +
+        "graft.sources.Generations, not in: " + offenders.mkString(", "))
+  }
+}

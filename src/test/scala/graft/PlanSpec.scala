@@ -547,7 +547,7 @@ class PlanSpec extends SparkSpec {
     assert(stats.map(_._1).sum == 120L && stats.map(_._2).sum == 80L,
       s"ledger must split built/appended: ${stats.mkString(",")}")
     // torn append (crash inside the poison window): refuse loudly
-    graft.sources.Sinks.clearEpochTokens(spark, "ivfpq_grow_cell_codes")
+    graft.sources.Generations.clearEpochTokens(spark, "ivfpq_grow_cell_codes")
     assert(intercept[IllegalArgumentException] {
       Similarity.readIvfPqIndex(spark, "ivfpq_grow")
     }.getMessage.contains("epoch token"))
@@ -1080,7 +1080,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("takedown ledger: frame-path append (no driver collect), torn generations refuse loudly") {
-    import graft.sources.Sinks
+    import graft.sources.{Generations, Sinks}
     import spark.implicits._
     // -- plan probe: the FIRST append must execute no `collect` at
     // all, and the generation write's plan must SCAN the incoming
@@ -1102,7 +1102,7 @@ class PlanSpec extends SparkSpec {
     val incoming = spark.read.parquet(s"$dir/incoming")
     spark.listenerManager.register(listener)
     try {
-      Sinks.appendLedger(spark, "ledger_spec_td", incoming)
+      Generations.appendLedger(spark, "ledger_spec_td", incoming)
       // QueryExecutionListener rides the async listener bus
       val deadline = System.nanoTime() + 10_000_000_000L
       while (events.isEmpty && System.nanoTime() < deadline)
@@ -1120,25 +1120,25 @@ class PlanSpec extends SparkSpec {
     assert(writeOfGen.nonEmpty,
       "the generation write must scan the incoming parquet directly " +
         s"(frame path): ${evs.map(_._1)}")
-    assert(Sinks.readLedger(spark, "ledger_spec_td").get._2.count() == 5L)
+    assert(Generations.readLedger(spark, "ledger_spec_td").get._2.count() == 5L)
     // -- idempotent distinct-union through the frame path
-    Sinks.appendLedger(spark, "ledger_spec_td",
+    Generations.appendLedger(spark, "ledger_spec_td",
       Seq(5L, 6L).toDF("doc_id"))
-    val (gen2, rows2) = Sinks.readLedger(spark, "ledger_spec_td").get
+    val (gen2, rows2) = Generations.readLedger(spark, "ledger_spec_td").get
     assert(rows2.count() == 6L, "distinct-union: 1..6")
     // -- crash window 1: a generation written but meta NOT committed
     // (simulated by writing garbage into the non-live table) leaves
     // the committed ledger serving
     val otherGen = if (gen2 == "a") "b" else "a"
     Sinks.writeTable(Seq(999L).toDF("doc_id"), s"ledger_spec_td_$otherGen")
-    assert(Sinks.readLedger(spark, "ledger_spec_td").get._2.count() == 6L,
+    assert(Generations.readLedger(spark, "ledger_spec_td").get._2.count() == 6L,
       "an uncommitted generation must be invisible")
     // -- crash window 2: the COMMITTED generation's epoch token wiped
     // (torn same-name rebuild) → refuse loudly, never serve a ledger
     // that might be missing takedowns
-    Sinks.clearEpochTokens(spark, s"ledger_spec_td_$gen2")
+    Generations.clearEpochTokens(spark, s"ledger_spec_td_$gen2")
     val tornEpoch = intercept[IllegalArgumentException] {
-      Sinks.readLedger(spark, "ledger_spec_td")
+      Generations.readLedger(spark, "ledger_spec_td")
     }
     assert(tornEpoch.getMessage.contains("epoch token"),
       s"got: ${tornEpoch.getMessage}")
@@ -1147,13 +1147,13 @@ class PlanSpec extends SparkSpec {
     // re-admission scenario)
     spark.sql(s"DROP TABLE ledger_spec_td_$gen2")
     val tornTable = intercept[IllegalArgumentException] {
-      Sinks.readLedger(spark, "ledger_spec_td")
+      Generations.readLedger(spark, "ledger_spec_td")
     }
     assert(tornTable.getMessage.contains("torn out from under"),
       s"got: ${tornTable.getMessage}")
     // -- clearLedger returns to "never created" (empty set, no refusal)
-    Sinks.clearLedger(spark, "ledger_spec_td")
-    assert(Sinks.readLedger(spark, "ledger_spec_td").isEmpty)
+    Generations.clearLedger(spark, "ledger_spec_td")
+    assert(Generations.readLedger(spark, "ledger_spec_td").isEmpty)
   }
 
   test("cascade durable exact tier: decisions ≡ caller-frame path, dup caller rows don't fan out, index never broadcast/shuffled") {
@@ -1165,9 +1165,9 @@ class PlanSpec extends SparkSpec {
       (i, s"spec doc $i body w${i % 9} w${i % 7} w${i % 5} filler tail token block"))
       .toDF("doc_id", "text")
     val accepted = docs.filter($"doc_id" % 2 === 0)
-    graft.sources.Sinks.clearLedger(spark, "pin_xidx_tombstones")
-    graft.sources.Sinks.clearLedger(spark, "pin_ng_tombstones")
-    graft.sources.Sinks.clearLedger(spark, "pin_ivf_tombstones")
+    graft.sources.Generations.clearLedger(spark, "pin_xidx_tombstones")
+    graft.sources.Generations.clearLedger(spark, "pin_ng_tombstones")
+    graft.sources.Generations.clearLedger(spark, "pin_ivf_tombstones")
     val root = java.nio.file.Files.createTempDirectory("pin_xidx").toString
     Dedup.writeExactIndexRooted(spark, "pin_xidx", root,
       Dedup.buildExactIndex(accepted, "text", expectedItems = 1024,
@@ -1308,7 +1308,7 @@ class PlanSpec extends SparkSpec {
     val rnd = new scala.util.Random(11)
     val refs = (1L to 400L).map(i => (i, rnd.nextLong()))
       .toDF("media_id", "sig")
-    graft.sources.Sinks.clearLedger(spark, "bsi_plan_tombstones")
+    graft.sources.Generations.clearLedger(spark, "bsi_plan_tombstones")
     Dedup.writeHammingBandIndexRooted(spark, "bsi_plan", refs,
       "media_id", "sig", maxHamming = 3, numBuckets = 4)
     val (mh, rows) = Dedup.readHammingBandIndexRootedLive(spark,
@@ -1341,7 +1341,7 @@ class PlanSpec extends SparkSpec {
     def doc(): String =
       (1 to 12).map(_ => words(rnd.nextInt(words.size))).mkString(" ")
     val bench = (1L to 120L).map(i => (i, doc())).toDF("doc_id", "text")
-    graft.sources.Sinks.clearLedger(spark, "widx_plan_tombstones")
+    graft.sources.Generations.clearLedger(spark, "widx_plan_tombstones")
     TextAnalysis.writeWinnowIndexRooted(spark, "widx_plan", bench,
       "doc_id", "text", k = 4, w = 4, numBuckets = 4)
     val face = TextAnalysis.readWinnowIndexRootedLive(spark, "widx_plan")

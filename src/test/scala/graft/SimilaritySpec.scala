@@ -625,7 +625,7 @@ class SimilaritySpec extends SparkSpec {
       top(Similarity.searchPq(pq, corpus, queries, "vec_id",
         "embedding", k = 3)))
     // torn same-prefix rebuild: the data table lost the meta's epoch
-    graft.sources.Sinks.clearEpochTokens(spark, "pq_rt_codes")
+    graft.sources.Generations.clearEpochTokens(spark, "pq_rt_codes")
     assert(intercept[IllegalArgumentException] {
       Similarity.readPqIndex(spark, "pq_rt")
     }.getMessage.contains("epoch token"))
@@ -738,7 +738,7 @@ class SimilaritySpec extends SparkSpec {
     assert(!spark.catalog.tableExists("ivf_retrain_cells_b"))
     // crash inside the swap window (centroids rewritten, meta not yet
     // flipped ≡ old epoch token wiped): reopen refuses loudly
-    graft.sources.Sinks.clearEpochTokens(spark, "ivf_retrain_centroids")
+    graft.sources.Generations.clearEpochTokens(spark, "ivf_retrain_centroids")
     assert(intercept[IllegalArgumentException] {
       Similarity.readIvfIndex(spark, "ivf_retrain")
     }.getMessage.contains("epoch token"))
@@ -777,7 +777,7 @@ class SimilaritySpec extends SparkSpec {
     assert(stats.map(_._1).sum == 30L && stats.forall(_._2 == 0L),
       s"retrain must absorb appends into n_built: ${stats.mkString(",")}")
     // torn swap window: a wiped epoch on the new generation refuses
-    graft.sources.Sinks.clearEpochTokens(spark, "ivfpq_retrain_cell_codes_b")
+    graft.sources.Generations.clearEpochTokens(spark, "ivfpq_retrain_cell_codes_b")
     assert(intercept[IllegalArgumentException] {
       Similarity.readIvfPqIndex(spark, "ivfpq_retrain")
     }.getMessage.contains("epoch token"))
@@ -985,7 +985,7 @@ class SimilaritySpec extends SparkSpec {
     val d2 = Similarity.searchIvf(mem, queries, "vec_id",
       "embedding", k = 1, nProbe = 2).collect().toSet
     assert(d1 == d2)
-    graft.sources.Sinks.clearEpochTokens(spark, "ivf_app_cells")
+    graft.sources.Generations.clearEpochTokens(spark, "ivf_app_cells")
     assert(intercept[IllegalArgumentException] {
       Similarity.readIvfIndex(spark, "ivf_app")
     }.getMessage.contains("epoch token"))
@@ -1027,7 +1027,7 @@ class SimilaritySpec extends SparkSpec {
     assert(!spark.catalog.tableExists("ivfsq_retrain_cell_codes_b"))
     // crash inside the swap window: stats rewritten, meta not flipped
     // ≡ old epoch wiped → reopen refuses loudly
-    graft.sources.Sinks.clearEpochTokens(spark, "ivfsq_retrain_stats")
+    graft.sources.Generations.clearEpochTokens(spark, "ivfsq_retrain_stats")
     assert(intercept[IllegalArgumentException] {
       Similarity.readIvfSqIndex(spark, "ivfsq_retrain")
     }.getMessage.contains("epoch token"))
@@ -1059,7 +1059,7 @@ class SimilaritySpec extends SparkSpec {
       "embedding", k = 1, nProbe = 2, oversample = 32).collect().toSet
     assert(d1 == d2)
     // crash mid-append ≡ cleared epoch on the codes table → refuse
-    graft.sources.Sinks.clearEpochTokens(spark, "ivfsq_app_cell_codes")
+    graft.sources.Generations.clearEpochTokens(spark, "ivfsq_app_cell_codes")
     assert(intercept[IllegalArgumentException] {
       Similarity.readIvfSqIndex(spark, "ivfsq_app")
     }.getMessage.contains("epoch token"))
@@ -1190,7 +1190,7 @@ class SimilaritySpec extends SparkSpec {
     // torn purge (crash after the swap wipes the old epoch, before
     // the meta flip): simulated by clearing the live epoch token —
     // the read face must refuse, never serve the wrong generation
-    graft.sources.Sinks.clearEpochTokens(spark, "lsh_td_hashed_b")
+    graft.sources.Generations.clearEpochTokens(spark, "lsh_td_hashed_b")
     assert(intercept[IllegalArgumentException] {
       Similarity.readLshIndex(spark, "lsh_td")
     }.getMessage.contains("epoch token"))
@@ -1224,7 +1224,7 @@ class SimilaritySpec extends SparkSpec {
     val d2 = Similarity.searchLsh(mem, queries, "vec_id",
       "embedding", k = 1).collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(d1 == d2)
-    graft.sources.Sinks.clearEpochTokens(spark, "lsh_app_hashed")
+    graft.sources.Generations.clearEpochTokens(spark, "lsh_app_hashed")
     assert(intercept[IllegalArgumentException] {
       Similarity.readLshIndex(spark, "lsh_app")
     }.getMessage.contains("epoch token"))

@@ -1272,8 +1272,8 @@ class StreamingSeasonSpec extends SparkSpec {
       (2L, "kilo lima mike november oscar papa quebec romeo sierra tango"),
       (3L, "uniform victor whiskey xray yankee zulu apple banana cherry dates"))
       .toDF("doc_id", "text")
-    graft.sources.Sinks.clearLedger(spark, "casc_ng_tombstones")
-    graft.sources.Sinks.clearLedger(spark, "casc_idx_tombstones")
+    graft.sources.Generations.clearLedger(spark, "casc_ng_tombstones")
+    graft.sources.Generations.clearLedger(spark, "casc_idx_tombstones")
     Dedup.writeNgramIndexRooted(spark, "casc_ng",
       Dedup.buildNgramIndex(accepted, "doc_id", "text", n = 4),
       numBuckets = 2)
@@ -1357,8 +1357,8 @@ class StreamingSeasonSpec extends SparkSpec {
       (2L, 0x00FFL, Seq(0.0, 1.0, 0.0, 0.0)),
       (3L, 0x0F0F0F0F0F0F0F0FL, Seq(0.0, 0.0, 1.0, 0.0)))
       .toDF("media_id", "sig", "vec")
-    graft.sources.Sinks.clearLedger(spark, "mcasc_ham_tombstones")
-    graft.sources.Sinks.clearLedger(spark, "mcasc_ivf_tombstones")
+    graft.sources.Generations.clearLedger(spark, "mcasc_ham_tombstones")
+    graft.sources.Generations.clearLedger(spark, "mcasc_ivf_tombstones")
     // perceptual window = refs 1-2 only; vector corpus = refs 1-3
     Dedup.writeHammingMembers(spark,
       Dedup.hammingBandMembers(refs.filter($"media_id" <= 2)

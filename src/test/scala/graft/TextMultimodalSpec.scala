@@ -357,7 +357,7 @@ class TextMultimodalSpec extends SparkSpec {
       .collect().map(r => r.getLong(0) -> r.getDouble(2)).toMap
     assert(viaDisk == viaModel,
       "reopened model must score bit-identically to the fitted one")
-    graft.sources.Sinks.clearEpochTokens(spark, "tlm_rt_c3")
+    graft.sources.Generations.clearEpochTokens(spark, "tlm_rt_c3")
     assert(intercept[IllegalArgumentException] {
       TextAnalysis.readTrigramLm(spark, "tlm_rt")
     }.getMessage.contains("epoch token"))
@@ -398,7 +398,7 @@ class TextMultimodalSpec extends SparkSpec {
     assert(spark.table("tlm_mw_meta").collect().toSeq == metaBefore,
       "a quiet window must not touch the commit record")
     // torn generation refuses at the rooted read
-    graft.sources.Sinks.clearEpochTokens(spark, "tlm_mw_b_c3")
+    graft.sources.Generations.clearEpochTokens(spark, "tlm_mw_b_c3")
     assert(intercept[IllegalArgumentException] {
       TextAnalysis.readTrigramLm(spark, "tlm_mw")
     }.getMessage.contains("epoch token"))
@@ -645,7 +645,7 @@ class TextMultimodalSpec extends SparkSpec {
         : Map[Long, (Long, Long)] =
       df.select("doc_id", "n_fp", "n_hits").collect()
         .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2)))).toMap
-    graft.sources.Sinks.clearLedger(spark, "widx_spec_tombstones")
+    graft.sources.Generations.clearLedger(spark, "widx_spec_tombstones")
     TextAnalysis.writeWinnowIndexRooted(spark, "widx_spec", benchA,
       "doc_id", "text", k = 4, w = 4, numBuckets = 4)
     val face = TextAnalysis.readWinnowIndexRootedLive(spark, "widx_spec")
@@ -705,7 +705,7 @@ class TextMultimodalSpec extends SparkSpec {
     assert(spark.table("widx_spec_meta").collect().toSeq == metaBefore)
     // torn generation (the crash the epoch-poison-first append leaves
     // behind) refuses at the rooted read
-    graft.sources.Sinks.clearEpochTokens(spark, "widx_spec_fps_b")
+    graft.sources.Generations.clearEpochTokens(spark, "widx_spec_fps_b")
     assert(intercept[IllegalArgumentException] {
       TextAnalysis.readWinnowIndexRooted(spark, "widx_spec")
     }.getMessage.contains("epoch token"))
@@ -720,7 +720,7 @@ class TextMultimodalSpec extends SparkSpec {
     val train = winnowTrain.unionByName(Seq(
       (4L, null.asInstanceOf[String]), (5L, ""))
       .toDF("doc_id", "text"))
-    graft.sources.Sinks.clearLedger(spark, "widx_batch_tombstones")
+    graft.sources.Generations.clearLedger(spark, "widx_batch_tombstones")
     TextAnalysis.writeWinnowIndexRooted(spark, "widx_batch", benchA,
       "doc_id", "text", k = 4, w = 4, numBuckets = 4)
     val dir = java.nio.file.Files
