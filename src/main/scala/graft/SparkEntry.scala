@@ -74,6 +74,244 @@ object SparkEntry {
         concat_ws(" ", slice(split(trim($"text"), "\\s+"), 5, 12))
           .as("text"))
 
+  // ---- shared media fixtures ----------------------------------------
+  // The planted images, videos and clips of the media gates; their
+  // oracles replay these exact pixel and sample formulas in SQL.
+
+  /** A 16x12 gray image of `px(x, y)`, encoded as `fmt`. */
+  private def grayImage(px: (Int, Int) => Int, fmt: String): Array[Byte] = {
+    val im = new java.awt.image.BufferedImage(16, 12,
+      java.awt.image.BufferedImage.TYPE_INT_RGB)
+    for (y <- 0 until 12; x <- 0 until 16) {
+      val g = px(x, y)
+      im.setRGB(x, y, (g << 16) | (g << 8) | g)
+    }
+    val bos = new java.io.ByteArrayOutputStream()
+    javax.imageio.ImageIO.write(im, fmt, bos)
+    bos.toByteArray
+  }
+
+  /** The reference images' pixel formula: source `src`, brightness
+    * `shift`. */
+  private def refPixel(src: Long, x: Int, y: Int, shift: Int = 0): Int =
+    ((src * 31 + x * (11 + src % 7) + y * 29 +
+      x.toLong * y * (1 + src % 3) + shift) % 256).toInt
+
+  /** The novel images' pixel formula, far from every reference. */
+  private def novelPixel(src: Long, x: Int, y: Int): Int =
+    ((src * 53 + x * 29 + y * 7 + x.toLong * y * 2 + 101) % 256).toInt
+
+  /** Reference image `src` at brightness `shift`, encoded as `fmt`. */
+  private def refImage(src: Long, shift: Int, fmt: String): Array[Byte] =
+    grayImage(refPixel(src, _, _, shift), fmt)
+
+  /** An 8-frame 16x12 gray GIF (indexed gray palette, lossless): frames
+    * 0-5 follow source `src`'s formula, 6-7 a shared tail; `bright`
+    * lifts every pixel, `dropFirst` cuts frame 0 and `tweak` whitens
+    * pixel (3, 0). */
+  private def grayGif(src: Long, bright: Int, dropFirst: Boolean,
+                      tweak: Boolean = false): Array[Byte] = {
+    def pix(f: Int, x: Int, y: Int): Int = {
+      val base =
+        if (f < 6) ((src * 37 + x * (11 + src % 7) + y * 23 +
+          x.toLong * y * (1 + src % 3)) % 200).toInt
+        else ((src * 53 + x * 29 + y * 7 +
+          x.toLong * y * 2 + 101) % 200).toInt
+      if (tweak && x == 3 && y == 0) 255 else base + bright
+    }
+    val cmap = (0 until 256)
+      .map(v => (0xFF << 24) | (v << 16) | (v << 8) | v).toArray
+    val icm = new java.awt.image.IndexColorModel(8, 256, cmap, 0,
+      false, -1, java.awt.image.DataBuffer.TYPE_BYTE)
+    val bos = new java.io.ByteArrayOutputStream()
+    val ios = javax.imageio.ImageIO.createImageOutputStream(bos)
+    val writer = javax.imageio.ImageIO
+      .getImageWritersByFormatName("gif").next()
+    writer.setOutput(ios)
+    writer.prepareWriteSequence(null)
+    for (f <- (if (dropFirst) 1 else 0) until 8) {
+      val img = new java.awt.image.BufferedImage(16, 12,
+        java.awt.image.BufferedImage.TYPE_BYTE_INDEXED, icm)
+      for (y <- 0 until 12; x <- 0 until 16)
+        img.getRaster.setSample(x, y, 0, pix(f, x, y))
+      writer.writeToSequence(
+        new javax.imageio.IIOImage(img, null, null), null)
+    }
+    writer.endWriteSequence(); writer.dispose(); ios.close()
+    bos.toByteArray
+  }
+
+  /** A 16-bit 8 kHz clip of the audio fixtures' sample formula, each
+    * sample `(h(src, frame, channel) mod span) - span / 2` times
+    * `scale`, written as `tpe` with `bigEndian` samples. */
+  private def pcmClip(span: Long, src: Long, ch: Int, frames: Int,
+                      scale: Int,
+                      tpe: javax.sound.sampled.AudioFileFormat.Type,
+                      bigEndian: Boolean): Array[Byte] = {
+    val out = new Array[Byte](frames * ch * 2)
+    for (i <- 0 until frames; c <- 0 until ch) {
+      val v = (((src * 2654435761L + i.toLong * i * 40503L +
+        i * 977L + c * 997L) % span) - span / 2).toInt * scale
+      val (hi, lo) = (((v >> 8) & 0xFF).toByte, (v & 0xFF).toByte)
+      val base = (i * ch + c) * 2
+      out(base) = if (bigEndian) hi else lo
+      out(base + 1) = if (bigEndian) lo else hi
+    }
+    val fmt = new javax.sound.sampled.AudioFormat(
+      8000f, 16, ch, true, bigEndian)
+    val ais = new javax.sound.sampled.AudioInputStream(
+      new java.io.ByteArrayInputStream(out), fmt, frames.toLong)
+    val bos = new java.io.ByteArrayOutputStream()
+    javax.sound.sampled.AudioSystem.write(ais, tpe, bos)
+    bos.toByteArray
+  }
+
+  /** Decode image payloads, sign them (dHash) and classify each row's
+    * decode status: the dead-letter ingests' per-row codec step. */
+  private def decodeWithStatus(df: DataFrame): DataFrame =
+    operators.Multimodal.perceptualHashes(
+        operators.Multimodal.decodeImages(df, "payload"),
+        "pixels", "img_width", "img_height")
+      .withColumn("decode_status",
+        operators.Multimodal.decodeStatus($"payload", $"img_width"))
+
+  /** The dead-letter ingests' fixture (q142, q146): Hamming members of
+    * 8 reference PNGs (persisted), and a fresh `tag` directory whose
+    * `in` holds BMP re-encodes of refs 1-3, novel PNGs 21-22 and the
+    * garbage / empty / null payloads in 3 files. */
+  private def quarantineFixture(
+      s: SparkSession, tag: String): (DataFrame, java.nio.file.Path) = {
+    val refMedia = s.createDataFrame(
+        (1L to 8L).map(i => (i, refImage(i, 0, "png"))))
+      .toDF("media_id", "payload")
+    val members = operators.Dedup.hammingBandMembers(
+      operators.Multimodal.perceptualHashes(
+          operators.Multimodal.decodeImages(refMedia, "payload"),
+          "pixels", "img_width", "img_height")
+        .select($"media_id", $"dhash"),
+      "media_id", "dhash", maxHamming = 6)
+    members.persist(org.apache.spark.storage.StorageLevel
+      .MEMORY_AND_DISK).count()
+    val rows: Seq[(Long, Array[Byte])] =
+      (1L to 3L).map(i => (500L + i, refImage(i, 0, "bmp"))) ++
+      (21L to 22L).map(i => (500L + i, refImage(i, 0, "png"))) ++
+      Seq((9001L, "definitely not an image".getBytes("UTF-8")),
+        (9002L, Array.empty[Byte]),
+        (9003L, null.asInstanceOf[Array[Byte]]))
+    val dir = java.nio.file.Files.createTempDirectory(s"${tag}_stream")
+    dir.toFile.deleteOnExit()
+    s.createDataFrame(rows).toDF("media_id", "payload")
+      .repartition(3).write.parquet(s"$dir/in")
+    (members, dir)
+  }
+
+  /** Decode, dHash, embed and status-classify image payloads: the
+    * media cascades' per-row codec step (q159, q167, q168). */
+  private def mediaPrep(df: DataFrame): DataFrame = {
+    val sig = operators.Multimodal.perceptualHashes(
+      operators.Multimodal.decodeImages(df, "payload"),
+      "pixels", "img_width", "img_height")
+    operators.Multimodal.imageEmbed(sig, "pixels", "img_width",
+        "img_height")
+      .withColumn("decode_status",
+        operators.Multimodal.decodeStatus($"payload", $"img_width"))
+  }
+
+  /** The media cascades' arrivals: BMP re-encodes and brightness
+    * shifts of refs 1-3, verbatim copies of refs 7-9, novel images,
+    * and the garbage / null / empty payloads. */
+  private def mediaCascadeArrivals: Seq[(Long, Array[Byte])] =
+    (1L to 3L).map(i => (500L + i, refImage(i, 0, "bmp"))) ++
+    (1L to 3L).map(i => (510L + i, refImage(i, 4, "png"))) ++
+    (7L to 9L).map(i => (520L + i, refImage(i, 0, "png"))) ++
+    (1L to 3L).map(i => (530L + i,
+      grayImage(novelPixel(i, _, _), "png"))) ++
+    Seq((9001L, "not an image".getBytes("UTF-8")),
+      (9002L, null.asInstanceOf[Array[Byte]]),
+      (9003L, Array.empty[Byte]))
+
+  /** A media cascade run's decision columns, suffixed with `tag`. */
+  private def mediaDecisions(out: DataFrame, tag: String): DataFrame =
+    localCopy(out.select($"media_id",
+      col("cascade_admitted").as(s"admitted_$tag"),
+      col("reason").as(s"reason_$tag"),
+      col("perceptual_match_id").as(s"pmid_$tag"),
+      col("perceptual_hamming").as(s"pham_$tag"),
+      col("semantic_match_id").as(s"smid_$tag")))
+
+  // ---- shared text and vector fixtures --------------------------------
+
+  /** The text cascades' arrivals (q158, q166, q171): exact copies of
+    * every 20th accepted doc, appended-tail edits, word-reversed
+    * copies, novel docs, and the empty / null / too-short payloads. */
+  private def textCascadeArrivals(accepted: DataFrame,
+                                  docs: DataFrame): DataFrame = {
+    val revText = array_join(reverse(filter(
+      split(trim($"text"), "\\s+"), t => t =!= lit(""))), " ")
+    accepted.filter($"doc_id" % 20 === 0)
+        .select(($"doc_id" + 400000L).as("doc_id"), $"text")
+      .unionByName(accepted.filter($"doc_id" % 20 === 4)
+        .select(($"doc_id" + 500000L).as("doc_id"),
+          concat($"text", lit(" xyzzy qbf")).as("text")))
+      .unionByName(accepted.filter($"doc_id" % 20 === 8)
+        .select(($"doc_id" + 600000L).as("doc_id"),
+          revText.as("text")))
+      .unionByName(docs.filter($"doc_id" % 20 === 1)
+        .select(($"doc_id" + 700000L).as("doc_id"), $"text"))
+      .unionByName(docs.sparkSession.createDataFrame(Seq(
+          (900001L, ""), (900002L, null.asInstanceOf[String]),
+          (900003L, "too short")))
+        .toDF("doc_id", "text"))
+  }
+
+  /** `df`'s rows collected and re-served as a local relation: a result
+    * read before a generation swap outlives the swap's drop. */
+  private def localCopy(df: DataFrame): DataFrame =
+    df.sparkSession.createDataFrame(
+      java.util.Arrays.asList(df.collect(): _*), df.schema)
+
+  /** The IVF drift fixture (q123, q131, q145): 20 base vectors on two
+    * axes, then 10 drift vectors and 10 queries on a third. */
+  private def ivfDriftVectors(
+      s: SparkSession): (DataFrame, DataFrame, DataFrame) = {
+    val base = s.range(1, 21).select($"id".as("vec_id"),
+      expr("CASE WHEN id % 2 = 1 THEN array(1.0D, 0.0D, 0.0D, " +
+        "0.1D * CAST((id + 1) DIV 2 AS DOUBLE)) " +
+        "ELSE array(0.0D, 1.0D, 0.0D, 0.1D * CAST(id DIV 2 AS DOUBLE)) " +
+        "END").as("embedding"))
+    val drift = s.range(1, 11).select(($"id" + 100L).as("vec_id"),
+      expr("array(0.05D, 0.0D, 1.0D, 0.1D * CAST(id AS DOUBLE))")
+        .as("embedding"))
+    val queries = s.range(1, 11).select(($"id" + 1000L).as("vec_id"),
+      expr("array(0.0D, 0.05D, 1.0D, 0.1D * CAST(id AS DOUBLE))")
+        .as("embedding"))
+    (base, drift, queries)
+  }
+
+  /** The maintenance-window report of q131/q145: stale top-1, the
+    * healing window, healed top-1, then a second (quiet) window, in
+    * that order. */
+  private def ivfMaintainReport(top1: String => DataFrame,
+                                maintain: () => DataFrame): DataFrame = {
+    val pre = top1("pre_top1")
+    val heal = maintain()
+    val post = top1("post_top1")
+    val noop = maintain()
+    pre.join(post, Seq("query_id"))
+      .crossJoin(broadcast(heal.select(
+        $"pre_mean_recall".as("pre_mean"), $"retrain_fired",
+        $"post_mean_recall".as("post_mean"),
+        $"epoch_changed".as("heal_epoch_changed"))))
+      .crossJoin(broadcast(noop.select(
+        $"retrain_fired".as("noop_fired"),
+        $"post_mean_recall".as("noop_mean"),
+        $"epoch_changed".as("noop_epoch_changed"))))
+      .select($"query_id", $"pre_top1", $"post_top1", $"pre_mean",
+        $"retrain_fired", $"post_mean", $"heal_epoch_changed",
+        $"noop_fired", $"noop_mean", $"noop_epoch_changed")
+      .orderBy($"query_id")
+  }
+
   // ---- the per-operator query catalog --------------------------------
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
@@ -1478,8 +1716,7 @@ object SparkEntry {
       lines.repartition(2).write.partitionBy("pfile").mode("overwrite")
         .text(s"$out/candump")
       val glob = s"$out/candump/pfile=*/part-*"
-      val linesDf = s.read.text(glob)
-        .select(col("value").as("line"), input_file_name().as("file"))
+      val linesDf = graft.sources.Candump.lines(s, glob)
       val wide = operators.CanDecode.decodeWide(
         graft.sources.Candump.framesFromLines(linesDf),
         graft.sources.CanFixtures.schema, keys = Seq("file"))
@@ -2083,12 +2320,10 @@ object SparkEntry {
         .select(($"vec_id" + 10000L).as("vec_id"),
           expr("transform(embedding, x -> CAST(x AS DOUBLE) * 1.001 + 0.0005)")
             .as("embedding"))
-      def loc(df: DataFrame): DataFrame = s.createDataFrame(
-        java.util.Arrays.asList(df.collect(): _*), df.schema)
       val base = operators.Similarity.buildIvfPq(corpus, "vec_id",
         "embedding", lloydIters = 3)
       operators.Similarity.writeIvfPqIndexBucketed(base, "q127_idx")
-      def top1(tag: String): DataFrame = loc(
+      def top1(tag: String): DataFrame = localCopy(
         operators.Similarity.searchIvfPqLive(s, "q127_idx", corpus,
             queries, "vec_id", "embedding", k = 1)
           .filter($"rank" === 1)
@@ -2122,23 +2357,8 @@ object SparkEntry {
     // unprovable). The oracle replays both sides' pixel formulas,
     // the dHash construction and the exhaustive argmin decision.
     "q126_stream_image_admission" -> ((s, d) => {
-      val W = 16; val H = 12
-      def v(src: Long, x: Int, y: Int, shift: Int): Int =
-        ((src * 31 + x * (11 + src % 7) + y * 29 +
-          x.toLong * y * (1 + src % 3) + shift) % 256).toInt
-      def enc(src: Long, shift: Int, fmt: String): Array[Byte] = {
-        val im = new java.awt.image.BufferedImage(W, H,
-          java.awt.image.BufferedImage.TYPE_INT_RGB)
-        for (y <- 0 until H; x <- 0 until W) {
-          val g = v(src, x, y, shift)
-          im.setRGB(x, y, (g << 16) | (g << 8) | g)
-        }
-        val bos = new java.io.ByteArrayOutputStream()
-        javax.imageio.ImageIO.write(im, fmt, bos)
-        bos.toByteArray
-      }
       val refMedia = s.createDataFrame(
-          (1L to 10L).map(i => (i, enc(i, 0, "png"))))
+          (1L to 10L).map(i => (i, refImage(i, 0, "png"))))
         .toDF("media_id", "payload")
       val refSigs = operators.Multimodal.perceptualHashes(
           operators.Multimodal.decodeImages(refMedia, "payload"),
@@ -2148,11 +2368,11 @@ object SparkEntry {
         "media_id", "dhash", maxHamming = 6)
       members.persist(org.apache.spark.storage.StorageLevel
         .MEMORY_AND_DISK).count()
-      val whole = enc(1L, 0, "png")
+      val whole = refImage(1L, 0, "png")
       val rows: Seq[(Long, Array[Byte])] =
-        (1L to 5L).map(i => (500L + i, enc(i, 0, "bmp"))) ++
-        (1L to 5L).map(i => (510L + i, enc(i, 4, "png"))) ++
-        (21L to 25L).map(i => (500L + i, enc(i, 0, "png"))) ++
+        (1L to 5L).map(i => (500L + i, refImage(i, 0, "bmp"))) ++
+        (1L to 5L).map(i => (510L + i, refImage(i, 4, "png"))) ++
+        (21L to 25L).map(i => (500L + i, refImage(i, 0, "png"))) ++
         Seq((9001L, whole.take(20)),
           (9002L, "not an image".getBytes("UTF-8")),
           (9003L, Array.empty[Byte]))
@@ -2207,11 +2427,9 @@ object SparkEntry {
           expectedItems = 1L << 14, numBits = 1L << 17, shards = 4))
       operators.Dedup.tombstoneExactIndex(s, "q139_idx",
         accepted.filter($"doc_id" % 6 === 0), "text")
-      def loc(df: DataFrame): DataFrame = s.createDataFrame(
-        java.util.Arrays.asList(df.collect(): _*), df.schema)
       // materialize decisions BEFORE the window runs — the window
       // drops the generation this plan reads
-      def flags(tag: String): DataFrame = loc {
+      def flags(tag: String): DataFrame = localCopy {
         val ix = operators.Dedup.readExactIndexRootedLive(s, "q139_idx")
         batch.join(
           operators.Dedup.incrementalDropExactDups(ix, batch, "doc_id",
@@ -2220,7 +2438,7 @@ object SparkEntry {
           Seq("doc_id"), "left")
           .select($"doc_id", coalesce(col(tag), lit(false)).as(tag))
       }
-      def maintain(): DataFrame = loc(
+      def maintain(): DataFrame = localCopy(
         operators.Dedup.maintainExactIndex(s, "q139_idx", root,
           maxFpp = 0.5))
       val pre = flags("admitted_pre")
@@ -2273,9 +2491,7 @@ object SparkEntry {
           docs.filter($"doc_id" % 2 === 0), "doc_id", "text", n = 4))
       operators.Dedup.tombstoneNgramIndex(s, "q140_idx",
         docs.filter($"doc_id" % 6 === 0).select($"doc_id"))
-      def loc(df: DataFrame): DataFrame = s.createDataFrame(
-        java.util.Arrays.asList(df.collect(): _*), df.schema)
-      def flags(tag: String): DataFrame = loc {
+      def flags(tag: String): DataFrame = localCopy {
         val ix = operators.Dedup.readNgramIndexRootedLive(s, "q140_idx",
           "doc_id", n = 4)
         batch.join(
@@ -2285,7 +2501,7 @@ object SparkEntry {
           Seq("doc_id"), "left")
           .select($"doc_id", coalesce(col(tag), lit(false)).as(tag))
       }
-      def maintain(): DataFrame = loc(
+      def maintain(): DataFrame = localCopy(
         operators.Dedup.maintainNgramIndex(s, "q140_idx", "doc_id", n = 4))
       val pre = flags("admitted_pre")
       val m1 = maintain()
@@ -2341,15 +2557,13 @@ object SparkEntry {
         .unionByName(s.range(1, 9)
           .select(($"id" + 540L).as("media_id"),
             sigOf("q141n:", $"id").as("sig")))
-      def loc(df: DataFrame): DataFrame = s.createDataFrame(
-        java.util.Arrays.asList(df.collect(): _*), df.schema)
-      def decide(members: DataFrame, tag: String): DataFrame = loc(
+      def decide(members: DataFrame, tag: String): DataFrame = localCopy(
         streaming.StreamingParse.hammingAdmissionStream(arrivals,
             "media_id", "sig", members, maxHamming = 3)
           .select($"media_id",
             col("admitted").as(s"admitted_$tag"),
             col("match_id").as(s"match_$tag")))
-      def maintain(): DataFrame = loc(
+      def maintain(): DataFrame = localCopy(
         operators.Dedup.maintainHammingMembers(s, "q141_members",
           maxHamming = 3))
       val pre = decide(
@@ -2386,48 +2600,7 @@ object SparkEntry {
     // formulas, the dHash grid, the argmin admission AND the reason
     // classification.
     "q142_stream_quarantine" -> ((s, d) => {
-      val W = 16; val H = 12
-      def v(src: Long, x: Int, y: Int, shift: Int): Int =
-        ((src * 31 + x * (11 + src % 7) + y * 29 +
-          x.toLong * y * (1 + src % 3) + shift) % 256).toInt
-      def enc(src: Long, shift: Int, fmt: String): Array[Byte] = {
-        val im = new java.awt.image.BufferedImage(W, H,
-          java.awt.image.BufferedImage.TYPE_INT_RGB)
-        for (y <- 0 until H; x <- 0 until W) {
-          val g = v(src, x, y, shift)
-          im.setRGB(x, y, (g << 16) | (g << 8) | g)
-        }
-        val bos = new java.io.ByteArrayOutputStream()
-        javax.imageio.ImageIO.write(im, fmt, bos)
-        bos.toByteArray
-      }
-      val refMedia = s.createDataFrame(
-          (1L to 8L).map(i => (i, enc(i, 0, "png"))))
-        .toDF("media_id", "payload")
-      val members = operators.Dedup.hammingBandMembers(
-        operators.Multimodal.perceptualHashes(
-            operators.Multimodal.decodeImages(refMedia, "payload"),
-            "pixels", "img_width", "img_height")
-          .select($"media_id", $"dhash"),
-        "media_id", "dhash", maxHamming = 6)
-      members.persist(org.apache.spark.storage.StorageLevel
-        .MEMORY_AND_DISK).count()
-      val rows: Seq[(Long, Array[Byte])] =
-        (1L to 3L).map(i => (500L + i, enc(i, 0, "bmp"))) ++
-        (21L to 22L).map(i => (500L + i, enc(i, 0, "png"))) ++
-        Seq((9001L, "definitely not an image".getBytes("UTF-8")),
-          (9002L, Array.empty[Byte]),
-          (9003L, null.asInstanceOf[Array[Byte]]))
-      val dir = java.nio.file.Files.createTempDirectory("q142_stream")
-      dir.toFile.deleteOnExit()
-      s.createDataFrame(rows).toDF("media_id", "payload")
-        .repartition(3).write.parquet(s"$dir/in")
-      def withStatus(df: DataFrame): DataFrame =
-        operators.Multimodal.perceptualHashes(
-            operators.Multimodal.decodeImages(df, "payload"),
-            "pixels", "img_width", "img_height")
-          .withColumn("decode_status",
-            operators.Multimodal.decodeStatus($"payload", $"img_width"))
+      val (members, dir) = quarantineFixture(s, "q142")
       def healthy(b: DataFrame): DataFrame =
         streaming.StreamingParse.hammingAdmissionStream(b, "media_id",
             "dhash", members, maxHamming = 6)
@@ -2436,11 +2609,11 @@ object SparkEntry {
       // (Bench runs it twice) and across JVMs (stale managed location)
       Seq("q142_main", "q142_quarantine").foreach { tbl =>
         s.sql(s"DROP TABLE IF EXISTS $tbl")
-        sources.Sinks.dropStaleManagedLocation(refMedia, tbl)
+        sources.Sinks.dropStaleManagedLocation(members, tbl)
       }
       val sch = s.read.parquet(s"$dir/in").schema
       streaming.StreamingParse.quarantineStream(
-        withStatus(s.readStream.schema(sch)
+        decodeWithStatus(s.readStream.schema(sch)
           .option("maxFilesPerTrigger", 1).parquet(s"$dir/in")),
         "decode_status", healthy, "q142_main", "q142_quarantine")
       members.unpersist()
@@ -2473,48 +2646,7 @@ object SparkEntry {
     // pixel→dHash→argmin + reason-classification replay, row counts
     // binding.
     "q146_stream_idempotent_sink" -> ((s, d) => {
-      val W = 16; val H = 12
-      def v(src: Long, x: Int, y: Int, shift: Int): Int =
-        ((src * 31 + x * (11 + src % 7) + y * 29 +
-          x.toLong * y * (1 + src % 3) + shift) % 256).toInt
-      def enc(src: Long, shift: Int, fmt: String): Array[Byte] = {
-        val im = new java.awt.image.BufferedImage(W, H,
-          java.awt.image.BufferedImage.TYPE_INT_RGB)
-        for (y <- 0 until H; x <- 0 until W) {
-          val g = v(src, x, y, shift)
-          im.setRGB(x, y, (g << 16) | (g << 8) | g)
-        }
-        val bos = new java.io.ByteArrayOutputStream()
-        javax.imageio.ImageIO.write(im, fmt, bos)
-        bos.toByteArray
-      }
-      val refMedia = s.createDataFrame(
-          (1L to 8L).map(i => (i, enc(i, 0, "png"))))
-        .toDF("media_id", "payload")
-      val members = operators.Dedup.hammingBandMembers(
-        operators.Multimodal.perceptualHashes(
-            operators.Multimodal.decodeImages(refMedia, "payload"),
-            "pixels", "img_width", "img_height")
-          .select($"media_id", $"dhash"),
-        "media_id", "dhash", maxHamming = 6)
-      members.persist(org.apache.spark.storage.StorageLevel
-        .MEMORY_AND_DISK).count()
-      val rows: Seq[(Long, Array[Byte])] =
-        (1L to 3L).map(i => (500L + i, enc(i, 0, "bmp"))) ++
-        (21L to 22L).map(i => (500L + i, enc(i, 0, "png"))) ++
-        Seq((9001L, "definitely not an image".getBytes("UTF-8")),
-          (9002L, Array.empty[Byte]),
-          (9003L, null.asInstanceOf[Array[Byte]]))
-      val dir = java.nio.file.Files.createTempDirectory("q146_stream")
-      dir.toFile.deleteOnExit()
-      s.createDataFrame(rows).toDF("media_id", "payload")
-        .repartition(3).write.parquet(s"$dir/in")
-      def withStatus(df: DataFrame): DataFrame =
-        operators.Multimodal.perceptualHashes(
-            operators.Multimodal.decodeImages(df, "payload"),
-            "pixels", "img_width", "img_height")
-          .withColumn("decode_status",
-            operators.Multimodal.decodeStatus($"payload", $"img_width"))
+      val (members, dir) = quarantineFixture(s, "q146")
       def healthy(b: DataFrame): DataFrame =
         streaming.StreamingParse.hammingAdmissionStream(b, "media_id",
             "dhash", members, maxHamming = 6)
@@ -2522,7 +2654,7 @@ object SparkEntry {
       val mainPath = s"$dir/main"; val qPath = s"$dir/quarantine"
       val sch = s.read.parquet(s"$dir/in").schema
       streaming.StreamingParse.quarantineStreamIdempotent(
-        withStatus(s.readStream.schema(sch)
+        decodeWithStatus(s.readStream.schema(sch)
           .option("maxFilesPerTrigger", 1).parquet(s"$dir/in")),
         "decode_status", healthy, mainPath, qPath)
       // the crash-redelivery: the LAST batch arrives AGAIN with the
@@ -2540,7 +2672,7 @@ object SparkEntry {
       val replayRows = s.read.parquet(s"$dir/in")
         .join(broadcast(replayIds), Seq("media_id"), "left_semi")
       streaming.StreamingParse.applyQuarantineBatchIdempotent(
-        withStatus(replayRows), lastBatch, "decode_status", healthy,
+        decodeWithStatus(replayRows), lastBatch, "decode_status", healthy,
         mainPath, qPath)
       members.unpersist()
       s.read.parquet(mainPath)
@@ -2567,23 +2699,8 @@ object SparkEntry {
     // follows the corrupt-row discipline: null dims, null checksum,
     // never a task failure.
     "q143_image_resize" -> ((s, d) => {
-      val W = 16; val H = 12
-      def v(src: Long, x: Int, y: Int): Int =
-        ((src * 31 + x * (11 + src % 7) + y * 29 +
-          x.toLong * y * (1 + src % 3)) % 256).toInt
-      def enc(src: Long): Array[Byte] = {
-        val im = new java.awt.image.BufferedImage(W, H,
-          java.awt.image.BufferedImage.TYPE_INT_RGB)
-        for (y <- 0 until H; x <- 0 until W) {
-          val g = v(src, x, y)
-          im.setRGB(x, y, (g << 16) | (g << 8) | g)
-        }
-        val bos = new java.io.ByteArrayOutputStream()
-        javax.imageio.ImageIO.write(im, "png", bos)
-        bos.toByteArray
-      }
       val media = s.createDataFrame(
-          (1L to 6L).map(i => (i, enc(i))) :+
+          (1L to 6L).map(i => (i, refImage(i, 0, "png"))) :+
             ((9001L, "not an image".getBytes("UTF-8"))))
         .toDF("media_id", "payload")
       val byteAt = "CAST(conv(hex(substring(resized, i, 1)), 16, 10) " +
@@ -2615,38 +2732,21 @@ object SparkEntry {
     // lattice → integer-exact dots → the argmax tie rule → the tau
     // decision.
     "q148_image_embed_neardup" -> ((s, d) => {
-      val W = 16; val H = 12
-      def vRef(src: Long, x: Int, y: Int): Int =
-        ((src * 31 + x * (11 + src % 7) + y * 29 +
-          x.toLong * y * (1 + src % 3)) % 256).toInt
-      def vNovel(src: Long, x: Int, y: Int): Int =
-        ((src * 53 + x * 29 + y * 7 + x.toLong * y * 2 + 101) % 256).toInt
-      def enc(px: (Int, Int) => Int, fmt: String): Array[Byte] = {
-        val im = new java.awt.image.BufferedImage(W, H,
-          java.awt.image.BufferedImage.TYPE_INT_RGB)
-        for (y <- 0 until H; x <- 0 until W) {
-          val g = px(x, y)
-          im.setRGB(x, y, (g << 16) | (g << 8) | g)
-        }
-        val bos = new java.io.ByteArrayOutputStream()
-        javax.imageio.ImageIO.write(im, fmt, bos)
-        bos.toByteArray
-      }
       def embed(df: DataFrame): DataFrame =
         operators.Multimodal.imageEmbed(
           operators.Multimodal.decodeImages(df, "payload"),
           "pixels", "img_width", "img_height")
       val refs = s.createDataFrame((1L to 10L).map(i =>
-          (i, enc((x, y) => vRef(i, x, y), "png"))))
+          (i, refImage(i, 0, "png"))))
         .toDF("media_id", "payload")
       val refEmb = embed(refs).select($"media_id", $"img_embedding")
       val arrivals = s.createDataFrame(
           (1L to 5L).map(i => (500L + i,
-            enc((x, y) => vRef(i, x, y), "bmp"))) ++
+            refImage(i, 0, "bmp"))) ++
           (1L to 5L).map(i => (510L + i,
-            enc((x, y) => 9 * vRef(i, x, y) / 10, "png"))) ++
+            grayImage((x, y) => 9 * refPixel(i, x, y) / 10, "png"))) ++
           (1L to 3L).map(i => (520L + i,
-            enc((x, y) => vNovel(i, x, y), "png"))) ++
+            grayImage(novelPixel(i, _, _), "png"))) ++
           Seq((9001L, "not an image".getBytes("UTF-8")),
             (9002L, null.asInstanceOf[Array[Byte]])))
         .toDF("media_id", "payload")
@@ -2677,48 +2777,17 @@ object SparkEntry {
     // and the oracle recomputes every value exactly). Torn, garbage
     // and empty payloads embed null and admit.
     "q153_video_embed_neardup" -> ((s, d) => {
-      val W = 16; val H = 12
-      def pix(src: Long, f: Int, x: Int, y: Int, bright: Int): Int = {
-        val base =
-          if (f < 6) ((src * 37 + x * (11 + src % 7) + y * 23 +
-            x.toLong * y * (1 + src % 3)) % 200).toInt
-          else ((src * 53 + x * 29 + y * 7 +
-            x.toLong * y * 2 + 101) % 200).toInt
-        base + bright
-      }
-      val cmap = (0 until 256)
-        .map(v => (0xFF << 24) | (v << 16) | (v << 8) | v).toArray
-      val icm = new java.awt.image.IndexColorModel(8, 256, cmap, 0,
-        false, -1, java.awt.image.DataBuffer.TYPE_BYTE)
-      def gif(src: Long, bright: Int, dropFirst: Boolean): Array[Byte] = {
-        val bos = new java.io.ByteArrayOutputStream()
-        val ios = javax.imageio.ImageIO.createImageOutputStream(bos)
-        val writer = javax.imageio.ImageIO
-          .getImageWritersByFormatName("gif").next()
-        writer.setOutput(ios)
-        writer.prepareWriteSequence(null)
-        for (f <- (if (dropFirst) 1 else 0) until 8) {
-          val img = new java.awt.image.BufferedImage(W, H,
-            java.awt.image.BufferedImage.TYPE_BYTE_INDEXED, icm)
-          for (y <- 0 until H; x <- 0 until W)
-            img.getRaster.setSample(x, y, 0, pix(src, f, x, y, bright))
-          writer.writeToSequence(
-            new javax.imageio.IIOImage(img, null, null), null)
-        }
-        writer.endWriteSequence(); writer.dispose(); ios.close()
-        bos.toByteArray
-      }
       def embed(df: DataFrame): DataFrame =
         operators.Multimodal.videoEmbed(df, "payload")
       val refs = s.createDataFrame((1L to 6L).map(i =>
-          (i, gif(i, 0, dropFirst = false))))
+          (i, grayGif(i, 0, dropFirst = false))))
         .toDF("media_id", "payload")
       val refEmb = embed(refs).select($"media_id", $"video_embedding")
-      val whole = gif(1L, 0, dropFirst = false)
+      val whole = grayGif(1L, 0, dropFirst = false)
       val arrivals: Seq[(Long, Array[Byte])] =
-        (1L to 3L).map(i => (500L + i, gif(i, 4, dropFirst = false))) ++
-        (1L to 3L).map(i => (510L + i, gif(i, 0, dropFirst = true))) ++
-        (21L to 23L).map(i => (500L + i, gif(i, 0, dropFirst = false))) ++
+        (1L to 3L).map(i => (500L + i, grayGif(i, 4, dropFirst = false))) ++
+        (1L to 3L).map(i => (510L + i, grayGif(i, 0, dropFirst = true))) ++
+        (21L to 23L).map(i => (500L + i, grayGif(i, 0, dropFirst = false))) ++
         Seq((9001L, whole.take(whole.length * 3 / 5)),
           (9002L, "not a video".getBytes("UTF-8")),
           (9003L, Array.empty[Byte]))
@@ -2749,39 +2818,8 @@ object SparkEntry {
     // batch brute-force rule; torn/garbage/empty payloads embed null
     // and ADMIT.
     "q154_stream_video_semantic" -> ((s, d) => {
-      val W = 16; val H = 12
-      def pix(src: Long, f: Int, x: Int, y: Int, bright: Int): Int = {
-        val base =
-          if (f < 6) ((src * 37 + x * (11 + src % 7) + y * 23 +
-            x.toLong * y * (1 + src % 3)) % 200).toInt
-          else ((src * 53 + x * 29 + y * 7 +
-            x.toLong * y * 2 + 101) % 200).toInt
-        base + bright
-      }
-      val cmap = (0 until 256)
-        .map(v => (0xFF << 24) | (v << 16) | (v << 8) | v).toArray
-      val icm = new java.awt.image.IndexColorModel(8, 256, cmap, 0,
-        false, -1, java.awt.image.DataBuffer.TYPE_BYTE)
-      def gif(src: Long, bright: Int, dropFirst: Boolean): Array[Byte] = {
-        val bos = new java.io.ByteArrayOutputStream()
-        val ios = javax.imageio.ImageIO.createImageOutputStream(bos)
-        val writer = javax.imageio.ImageIO
-          .getImageWritersByFormatName("gif").next()
-        writer.setOutput(ios)
-        writer.prepareWriteSequence(null)
-        for (f <- (if (dropFirst) 1 else 0) until 8) {
-          val img = new java.awt.image.BufferedImage(W, H,
-            java.awt.image.BufferedImage.TYPE_BYTE_INDEXED, icm)
-          for (y <- 0 until H; x <- 0 until W)
-            img.getRaster.setSample(x, y, 0, pix(src, f, x, y, bright))
-          writer.writeToSequence(
-            new javax.imageio.IIOImage(img, null, null), null)
-        }
-        writer.endWriteSequence(); writer.dispose(); ios.close()
-        bos.toByteArray
-      }
       val refs = s.createDataFrame((1L to 6L).map(i =>
-          (i, gif(i, 0, dropFirst = false))))
+          (i, grayGif(i, 0, dropFirst = false))))
         .toDF("media_id", "payload")
       val refEmb = operators.Multimodal.videoEmbed(refs, "payload")
         .select($"media_id", $"video_embedding")
@@ -2790,11 +2828,11 @@ object SparkEntry {
       val members = operators.Similarity.cellMembers(index)
       members.persist(org.apache.spark.storage.StorageLevel
         .MEMORY_AND_DISK).count()
-      val whole = gif(1L, 0, dropFirst = false)
+      val whole = grayGif(1L, 0, dropFirst = false)
       val arrivals: Seq[(Long, Array[Byte])] =
-        (1L to 3L).map(i => (500L + i, gif(i, 4, dropFirst = false))) ++
-        (1L to 3L).map(i => (510L + i, gif(i, 0, dropFirst = true))) ++
-        (21L to 23L).map(i => (500L + i, gif(i, 0, dropFirst = false))) ++
+        (1L to 3L).map(i => (500L + i, grayGif(i, 4, dropFirst = false))) ++
+        (1L to 3L).map(i => (510L + i, grayGif(i, 0, dropFirst = true))) ++
+        (21L to 23L).map(i => (500L + i, grayGif(i, 0, dropFirst = false))) ++
         Seq((9001L, whole.take(whole.length * 3 / 5)),
           (9002L, "not a video".getBytes("UTF-8")),
           (9003L, Array.empty[Byte]))
@@ -2828,29 +2866,12 @@ object SparkEntry {
     // and ADMIT through the zero-probe path (never a crash, never a
     // false reject).
     "q149_stream_image_semantic" -> ((s, d) => {
-      val W = 16; val H = 12
-      def vRef(src: Long, x: Int, y: Int): Int =
-        ((src * 31 + x * (11 + src % 7) + y * 29 +
-          x.toLong * y * (1 + src % 3)) % 256).toInt
-      def vNovel(src: Long, x: Int, y: Int): Int =
-        ((src * 53 + x * 29 + y * 7 + x.toLong * y * 2 + 101) % 256).toInt
-      def enc(px: (Int, Int) => Int, fmt: String): Array[Byte] = {
-        val im = new java.awt.image.BufferedImage(W, H,
-          java.awt.image.BufferedImage.TYPE_INT_RGB)
-        for (y <- 0 until H; x <- 0 until W) {
-          val g = px(x, y)
-          im.setRGB(x, y, (g << 16) | (g << 8) | g)
-        }
-        val bos = new java.io.ByteArrayOutputStream()
-        javax.imageio.ImageIO.write(im, fmt, bos)
-        bos.toByteArray
-      }
       def embed(df: DataFrame): DataFrame =
         operators.Multimodal.imageEmbed(
           operators.Multimodal.decodeImages(df, "payload"),
           "pixels", "img_width", "img_height")
       val refs = s.createDataFrame((1L to 10L).map(i =>
-          (i, enc((x, y) => vRef(i, x, y), "png"))))
+          (i, refImage(i, 0, "png"))))
         .toDF("media_id", "payload")
       val refEmb = embed(refs).select($"media_id", $"img_embedding")
       val index = operators.Similarity.buildIvf(refEmb, "media_id",
@@ -2860,11 +2881,11 @@ object SparkEntry {
         .MEMORY_AND_DISK).count()
       val arrivals: Seq[(Long, Array[Byte])] =
         (1L to 5L).map(i => (500L + i,
-          enc((x, y) => vRef(i, x, y), "bmp"))) ++
+          refImage(i, 0, "bmp"))) ++
         (1L to 5L).map(i => (510L + i,
-          enc((x, y) => 9 * vRef(i, x, y) / 10, "png"))) ++
+          grayImage((x, y) => 9 * refPixel(i, x, y) / 10, "png"))) ++
         (1L to 3L).map(i => (520L + i,
-          enc((x, y) => vNovel(i, x, y), "png"))) ++
+          grayImage(novelPixel(i, _, _), "png"))) ++
         Seq((9001L, "not an image".getBytes("UTF-8")),
           (9002L, null.asInstanceOf[Array[Byte]]))
       val dir = java.nio.file.Files.createTempDirectory("q149_stream")
@@ -2992,9 +3013,7 @@ object SparkEntry {
       operators.Similarity.writeLshIndexBucketed(
         operators.Similarity.buildLsh(full, "vec_id", "embedding",
           planes = 10), "q157_idx", numBuckets = 2)
-      def loc(df: DataFrame): DataFrame = s.createDataFrame(
-        java.util.Arrays.asList(df.collect(): _*), df.schema)
-      def top1(tag: String): DataFrame = loc(
+      def top1(tag: String): DataFrame = localCopy(
         operators.Similarity.searchLshLive(s, "q157_idx", queries,
             "vec_id", "embedding", k = 1)
           .filter($"rank" === 1)
@@ -3073,9 +3092,7 @@ object SparkEntry {
       operators.Similarity.writeLshIndexBucketed(
         operators.Similarity.buildLsh(base, "vec_id", "embedding",
           planes = 10), "q162_idx", numBuckets = 2)
-      def loc(df: DataFrame): DataFrame = s.createDataFrame(
-        java.util.Arrays.asList(df.collect(): _*), df.schema)
-      def top1(tag: String): DataFrame = loc(
+      def top1(tag: String): DataFrame = localCopy(
         operators.Similarity.searchLshLive(s, "q162_idx", queries,
             "vec_id", "embedding", k = 1)
           .filter($"rank" === 1)
@@ -3139,28 +3156,11 @@ object SparkEntry {
             nCells = 2, lloydIters = 1), "q158_idx", numBuckets = 2))
       def acceptedTextsOf(acc: DataFrame): DataFrame =
         acc.groupBy($"text").agg(min($"doc_id").as("exact_id"))
-      val revText = array_join(reverse(filter(
-        split(trim($"text"), "\\s+"), t => t =!= lit(""))), " ")
-      val arrivals = accepted.filter($"doc_id" % 20 === 0)
-          .select(($"doc_id" + 400000L).as("doc_id"), $"text")
-        .unionByName(accepted.filter($"doc_id" % 20 === 4)
-          .select(($"doc_id" + 500000L).as("doc_id"),
-            concat($"text", lit(" xyzzy qbf")).as("text")))
-        .unionByName(accepted.filter($"doc_id" % 20 === 8)
-          .select(($"doc_id" + 600000L).as("doc_id"),
-            revText.as("text")))
-        .unionByName(docs.filter($"doc_id" % 20 === 1)
-          .select(($"doc_id" + 700000L).as("doc_id"), $"text"))
-        .unionByName(s.createDataFrame(Seq(
-            (900001L, ""), (900002L, null.asInstanceOf[String]),
-            (900003L, "too short")))
-          .toDF("doc_id", "text"))
+      val arrivals = textCascadeArrivals(accepted, docs)
       val dir = java.nio.file.Files.createTempDirectory("q158_stream")
       dir.toFile.deleteOnExit()
       arrivals.repartition(1).write.parquet(s"$dir/in")
       val sch = s.read.parquet(s"$dir/in").schema
-      def loc(df: DataFrame): DataFrame = s.createDataFrame(
-        java.util.Arrays.asList(df.collect(): _*), df.schema)
       def run(tag: String, accTexts: DataFrame): DataFrame = {
         val at = accTexts
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -3171,7 +3171,7 @@ object SparkEntry {
           ngramPrefix = "q158_ng", n = 4, threshold = 0.5,
           maxBucket = 50, annPrefix = "q158_idx", tau = 0.92,
           dim = 64, nProbe = 2, outPath = s"$dir/out_$tag")
-        val res = loc(s.read.parquet(s"$dir/out_$tag")
+        val res = localCopy(s.read.parquet(s"$dir/out_$tag")
           .select($"doc_id",
             col("cascade_admitted").as(s"admitted_$tag"),
             col("reason").as(s"reason_$tag")))
@@ -3212,36 +3212,8 @@ object SparkEntry {
     // 9×8 gradient grid, the 8×8 embed lattice, the min/argmax folds
     // and the precedence, all in SQL).
     "q159_media_cascade_stream" -> ((s, d) => {
-      val W = 16; val H = 12
-      def vRef(src: Long, x: Int, y: Int, shift: Int): Int =
-        ((src * 31 + x * (11 + src % 7) + y * 29 +
-          x.toLong * y * (1 + src % 3) + shift) % 256).toInt
-      def vNovel(src: Long, x: Int, y: Int): Int =
-        ((src * 53 + x * 29 + y * 7 + x.toLong * y * 2 + 101) % 256).toInt
-      def enc(px: (Int, Int) => Int, fmt: String): Array[Byte] = {
-        val im = new java.awt.image.BufferedImage(W, H,
-          java.awt.image.BufferedImage.TYPE_INT_RGB)
-        for (y <- 0 until H; x <- 0 until W) {
-          val g = px(x, y)
-          im.setRGB(x, y, (g << 16) | (g << 8) | g)
-        }
-        val bos = new java.io.ByteArrayOutputStream()
-        javax.imageio.ImageIO.write(im, fmt, bos)
-        bos.toByteArray
-      }
-      def prep(df: DataFrame): DataFrame = {
-        val sig = operators.Multimodal.perceptualHashes(
-          operators.Multimodal.decodeImages(df, "payload"),
-          "pixels", "img_width", "img_height")
-        operators.Multimodal.imageEmbed(sig, "pixels", "img_width",
-            "img_height")
-          .withColumn("decode_status",
-            operators.Multimodal.decodeStatus($"payload", $"img_width"))
-      }
-      val refs = s.createDataFrame((1L to 10L).map(i =>
-          (i, enc((x, y) => vRef(i, x, y, 0), "png"))))
-        .toDF("media_id", "payload")
-      val refPrep = prep(refs)
+      val refPrep = mediaPrep(s.createDataFrame((1L to 10L).map(i =>
+          (i, refImage(i, 0, "png")))).toDF("media_id", "payload"))
       val hamMembers = operators.Dedup.hammingBandMembers(
         refPrep.filter($"media_id" <= 6).select($"media_id", $"dhash"),
         "media_id", "dhash", maxHamming = 6)
@@ -3253,27 +3225,15 @@ object SparkEntry {
       val members = operators.Similarity.cellMembers(index)
       members.persist(org.apache.spark.storage.StorageLevel
         .MEMORY_AND_DISK).count()
-      val arrivals: Seq[(Long, Array[Byte])] =
-        (1L to 3L).map(i => (500L + i,
-          enc((x, y) => vRef(i, x, y, 0), "bmp"))) ++
-        (1L to 3L).map(i => (510L + i,
-          enc((x, y) => vRef(i, x, y, 4), "png"))) ++
-        (7L to 9L).map(i => (520L + i,
-          enc((x, y) => vRef(i, x, y, 0), "png"))) ++
-        (1L to 3L).map(i => (530L + i,
-          enc((x, y) => vNovel(i, x, y), "png"))) ++
-        Seq((9001L, "not an image".getBytes("UTF-8")),
-          (9002L, null.asInstanceOf[Array[Byte]]),
-          (9003L, Array.empty[Byte]))
       val dir = java.nio.file.Files.createTempDirectory("q159_stream")
       dir.toFile.deleteOnExit()
-      s.createDataFrame(arrivals).toDF("media_id", "payload")
+      s.createDataFrame(mediaCascadeArrivals).toDF("media_id", "payload")
         .repartition(4).write.parquet(s"$dir/in")
       val sch = s.read.parquet(s"$dir/in").schema
       val stream = s.readStream.schema(sch)
         .option("maxFilesPerTrigger", 1).parquet(s"$dir/in")
       val out = streaming.StreamingParse.mediaAdmissionCascadeStream(
-        prep(stream), "media_id", "decode_status", "dhash", hamMembers,
+        mediaPrep(stream), "media_id", "decode_status", "dhash", hamMembers,
         maxHamming = 6, "img_embedding", index, members, tau = 0.9,
         nProbe = 2)
       val res = runStreamToTable(s, out, "append", "media_cascade")
@@ -3494,28 +3454,11 @@ object SparkEntry {
         () => operators.Similarity.writeIvfIndexBucketed(
           operators.Similarity.buildIvf(emb, "doc_id", "embedding",
             nCells = 2, lloydIters = 1), "q166_idx", numBuckets = 2))
-      val revText = array_join(reverse(filter(
-        split(trim($"text"), "\\s+"), t => t =!= lit(""))), " ")
-      val arrivals = accepted.filter($"doc_id" % 20 === 0)
-          .select(($"doc_id" + 400000L).as("doc_id"), $"text")
-        .unionByName(accepted.filter($"doc_id" % 20 === 4)
-          .select(($"doc_id" + 500000L).as("doc_id"),
-            concat($"text", lit(" xyzzy qbf")).as("text")))
-        .unionByName(accepted.filter($"doc_id" % 20 === 8)
-          .select(($"doc_id" + 600000L).as("doc_id"),
-            revText.as("text")))
-        .unionByName(docs.filter($"doc_id" % 20 === 1)
-          .select(($"doc_id" + 700000L).as("doc_id"), $"text"))
-        .unionByName(s.createDataFrame(Seq(
-            (900001L, ""), (900002L, null.asInstanceOf[String]),
-            (900003L, "too short")))
-          .toDF("doc_id", "text"))
+      val arrivals = textCascadeArrivals(accepted, docs)
       val dir = java.nio.file.Files.createTempDirectory("q166_stream")
       dir.toFile.deleteOnExit()
       arrivals.repartition(1).write.parquet(s"$dir/in")
       val sch = s.read.parquet(s"$dir/in").schema
-      def loc(df: DataFrame): DataFrame = s.createDataFrame(
-        java.util.Arrays.asList(df.collect(): _*), df.schema)
       def run(tag: String): DataFrame = {
         val stream = s.readStream.schema(sch).parquet(s"$dir/in")
         streaming.StreamingParse.admissionCascadeBatchedStreamDurable(
@@ -3524,7 +3467,7 @@ object SparkEntry {
           ngramPrefix = "q166_ng", n = 4, threshold = 0.5,
           maxBucket = 50, annPrefix = "q166_idx", tau = 0.92,
           dim = 64, nProbe = 2, outPath = s"$dir/out_$tag")
-        loc(s.read.parquet(s"$dir/out_$tag")
+        localCopy(s.read.parquet(s"$dir/out_$tag")
           .select($"doc_id",
             col("cascade_admitted").as(s"admitted_$tag"),
             col("reason").as(s"reason_$tag")))
@@ -3566,36 +3509,8 @@ object SparkEntry {
     // both worlds' full pixel math (the 9×8 gradient dHash, the 8×8
     // embed lattice, argmin/argmax tie-breaks, precedence) in SQL.
     "q167_media_cascade_batched" -> ((s, d) => {
-      val W = 16; val H = 12
-      def vRef(src: Long, x: Int, y: Int, shift: Int): Int =
-        ((src * 31 + x * (11 + src % 7) + y * 29 +
-          x.toLong * y * (1 + src % 3) + shift) % 256).toInt
-      def vNovel(src: Long, x: Int, y: Int): Int =
-        ((src * 53 + x * 29 + y * 7 + x.toLong * y * 2 + 101) % 256).toInt
-      def enc(px: (Int, Int) => Int, fmt: String): Array[Byte] = {
-        val im = new java.awt.image.BufferedImage(W, H,
-          java.awt.image.BufferedImage.TYPE_INT_RGB)
-        for (y <- 0 until H; x <- 0 until W) {
-          val g = px(x, y)
-          im.setRGB(x, y, (g << 16) | (g << 8) | g)
-        }
-        val bos = new java.io.ByteArrayOutputStream()
-        javax.imageio.ImageIO.write(im, fmt, bos)
-        bos.toByteArray
-      }
-      def prep(df: DataFrame): DataFrame = {
-        val sig = operators.Multimodal.perceptualHashes(
-          operators.Multimodal.decodeImages(df, "payload"),
-          "pixels", "img_width", "img_height")
-        operators.Multimodal.imageEmbed(sig, "pixels", "img_width",
-            "img_height")
-          .withColumn("decode_status",
-            operators.Multimodal.decodeStatus($"payload", $"img_width"))
-      }
-      val refs = s.createDataFrame((1L to 10L).map(i =>
-          (i, enc((x, y) => vRef(i, x, y, 0), "png"))))
-        .toDF("media_id", "payload")
-      val refPrep = prep(refs)
+      val refPrep = mediaPrep(s.createDataFrame((1L to 10L).map(i =>
+          (i, refImage(i, 0, "png")))).toDF("media_id", "payload"))
       sources.Generations.clearLedger(s, "q167_ham_tombstones")
       sources.Generations.clearLedger(s, "q167_ivf_tombstones")
       // independent faces: build concurrently (guide §2.6)
@@ -3610,39 +3525,19 @@ object SparkEntry {
             refPrep.select($"media_id", $"img_embedding"), "media_id",
             "img_embedding", nCells = 2, lloydIters = 1), "q167_ivf",
           numBuckets = 2))
-      val arrivals: Seq[(Long, Array[Byte])] =
-        (1L to 3L).map(i => (500L + i,
-          enc((x, y) => vRef(i, x, y, 0), "bmp"))) ++
-        (1L to 3L).map(i => (510L + i,
-          enc((x, y) => vRef(i, x, y, 4), "png"))) ++
-        (7L to 9L).map(i => (520L + i,
-          enc((x, y) => vRef(i, x, y, 0), "png"))) ++
-        (1L to 3L).map(i => (530L + i,
-          enc((x, y) => vNovel(i, x, y), "png"))) ++
-        Seq((9001L, "not an image".getBytes("UTF-8")),
-          (9002L, null.asInstanceOf[Array[Byte]]),
-          (9003L, Array.empty[Byte]))
       val dir = java.nio.file.Files.createTempDirectory("q167_stream")
       dir.toFile.deleteOnExit()
-      s.createDataFrame(arrivals).toDF("media_id", "payload")
+      s.createDataFrame(mediaCascadeArrivals).toDF("media_id", "payload")
         .repartition(1).write.parquet(s"$dir/in")
       val sch = s.read.parquet(s"$dir/in").schema
-      def loc(df: DataFrame): DataFrame = s.createDataFrame(
-        java.util.Arrays.asList(df.collect(): _*), df.schema)
       def run(tag: String): DataFrame = {
         val stream = s.readStream.schema(sch).parquet(s"$dir/in")
         streaming.StreamingParse.mediaAdmissionCascadeBatchedStream(
-          prep(stream), "media_id", "decode_status", "dhash",
+          mediaPrep(stream), "media_id", "decode_status", "dhash",
           membersTable = "q167_ham", maxHamming = 6,
           vecCol = "img_embedding", annPrefix = "q167_ivf", tau = 0.9,
           nProbe = 2, outPath = s"$dir/out_$tag")
-        loc(s.read.parquet(s"$dir/out_$tag")
-          .select($"media_id",
-            col("cascade_admitted").as(s"admitted_$tag"),
-            col("reason").as(s"reason_$tag"),
-            col("perceptual_match_id").as(s"pmid_$tag"),
-            col("perceptual_hamming").as(s"pham_$tag"),
-            col("semantic_match_id").as(s"smid_$tag")))
+        mediaDecisions(s.read.parquet(s"$dir/out_$tag"), tag)
       }
       val pre = run("pre")
       val tomb = s.createDataFrame(Seq(Tuple1(2L), Tuple1(8L)))
@@ -3674,36 +3569,8 @@ object SparkEntry {
     // decision; takedowns file against the band ledger instead of the
     // members ledger and flip the same three dependents.
     "q168_media_cascade_unbounded" -> ((s, d) => {
-      val W = 16; val H = 12
-      def vRef(src: Long, x: Int, y: Int, shift: Int): Int =
-        ((src * 31 + x * (11 + src % 7) + y * 29 +
-          x.toLong * y * (1 + src % 3) + shift) % 256).toInt
-      def vNovel(src: Long, x: Int, y: Int): Int =
-        ((src * 53 + x * 29 + y * 7 + x.toLong * y * 2 + 101) % 256).toInt
-      def enc(px: (Int, Int) => Int, fmt: String): Array[Byte] = {
-        val im = new java.awt.image.BufferedImage(W, H,
-          java.awt.image.BufferedImage.TYPE_INT_RGB)
-        for (y <- 0 until H; x <- 0 until W) {
-          val g = px(x, y)
-          im.setRGB(x, y, (g << 16) | (g << 8) | g)
-        }
-        val bos = new java.io.ByteArrayOutputStream()
-        javax.imageio.ImageIO.write(im, fmt, bos)
-        bos.toByteArray
-      }
-      def prep(df: DataFrame): DataFrame = {
-        val sig = operators.Multimodal.perceptualHashes(
-          operators.Multimodal.decodeImages(df, "payload"),
-          "pixels", "img_width", "img_height")
-        operators.Multimodal.imageEmbed(sig, "pixels", "img_width",
-            "img_height")
-          .withColumn("decode_status",
-            operators.Multimodal.decodeStatus($"payload", $"img_width"))
-      }
-      val refs = s.createDataFrame((1L to 10L).map(i =>
-          (i, enc((x, y) => vRef(i, x, y, 0), "png"))))
-        .toDF("media_id", "payload")
-      val refPrep = prep(refs)
+      val refPrep = mediaPrep(s.createDataFrame((1L to 10L).map(i =>
+          (i, refImage(i, 0, "png")))).toDF("media_id", "payload"))
       sources.Generations.clearLedger(s, "q168_band_tombstones")
       sources.Generations.clearLedger(s, "q168_ivf_tombstones")
       // independent faces: build concurrently (guide §2.6)
@@ -3716,40 +3583,20 @@ object SparkEntry {
             refPrep.select($"media_id", $"img_embedding"), "media_id",
             "img_embedding", nCells = 2, lloydIters = 1), "q168_ivf",
           numBuckets = 2))
-      val arrivals: Seq[(Long, Array[Byte])] =
-        (1L to 3L).map(i => (500L + i,
-          enc((x, y) => vRef(i, x, y, 0), "bmp"))) ++
-        (1L to 3L).map(i => (510L + i,
-          enc((x, y) => vRef(i, x, y, 4), "png"))) ++
-        (7L to 9L).map(i => (520L + i,
-          enc((x, y) => vRef(i, x, y, 0), "png"))) ++
-        (1L to 3L).map(i => (530L + i,
-          enc((x, y) => vNovel(i, x, y), "png"))) ++
-        Seq((9001L, "not an image".getBytes("UTF-8")),
-          (9002L, null.asInstanceOf[Array[Byte]]),
-          (9003L, Array.empty[Byte]))
       val dir = java.nio.file.Files.createTempDirectory("q168_stream")
       dir.toFile.deleteOnExit()
-      s.createDataFrame(arrivals).toDF("media_id", "payload")
+      s.createDataFrame(mediaCascadeArrivals).toDF("media_id", "payload")
         .repartition(1).write.parquet(s"$dir/in")
       val sch = s.read.parquet(s"$dir/in").schema
-      def loc(df: DataFrame): DataFrame = s.createDataFrame(
-        java.util.Arrays.asList(df.collect(): _*), df.schema)
       def run(tag: String): DataFrame = {
         val stream = s.readStream.schema(sch).parquet(s"$dir/in")
         streaming.StreamingParse
           .mediaAdmissionCascadeBatchedStreamUnbounded(
-            prep(stream), "media_id", "decode_status", "dhash",
+            mediaPrep(stream), "media_id", "decode_status", "dhash",
             bandPrefix = "q168_band", vecCol = "img_embedding",
             annPrefix = "q168_ivf", tau = 0.9, nProbe = 2,
             outPath = s"$dir/out_$tag")
-        loc(s.read.parquet(s"$dir/out_$tag")
-          .select($"media_id",
-            col("cascade_admitted").as(s"admitted_$tag"),
-            col("reason").as(s"reason_$tag"),
-            col("perceptual_match_id").as(s"pmid_$tag"),
-            col("perceptual_hamming").as(s"pham_$tag"),
-            col("semantic_match_id").as(s"smid_$tag")))
+        mediaDecisions(s.read.parquet(s"$dir/out_$tag"), tag)
       }
       val pre = run("pre")
       val tomb = s.createDataFrame(Seq(Tuple1(2L), Tuple1(8L)))
@@ -3790,11 +3637,9 @@ object SparkEntry {
       operators.TextAnalysis.writeWinnowIndexRooted(s, "q169_widx",
         benchA, "doc_id", "text", k = 4, w = 4, hashName = "md5",
         numBuckets = 4)
-      def loc(df: DataFrame): DataFrame = s.createDataFrame(
-        java.util.Arrays.asList(df.collect(): _*), df.schema)
       // each world MATERIALIZES before the next mutates the live
       // generation (the append lands in the same physical table)
-      def probe(world: Long): DataFrame = loc {
+      def probe(world: Long): DataFrame = localCopy {
         val face = operators.TextAnalysis
           .readWinnowIndexRootedLive(s, "q169_widx")
         operators.TextAnalysis.containmentVsWinnowIndex(face, docs,
@@ -3837,14 +3682,12 @@ object SparkEntry {
       dir.toFile.deleteOnExit()
       arrivals.repartition(1).write.parquet(s"$dir/in")
       val sch = s.read.parquet(s"$dir/in").schema
-      def loc(df: DataFrame): DataFrame = s.createDataFrame(
-        java.util.Arrays.asList(df.collect(): _*), df.schema)
       def run(tag: String): DataFrame = {
         val stream = s.readStream.schema(sch).parquet(s"$dir/in")
         streaming.StreamingParse.decontamAdmissionBatchedStream(
           stream, "doc_id", "text", prefix = "q170_widx",
           maxContainment = 0.0, outPath = s"$dir/out_$tag")
-        loc(s.read.parquet(s"$dir/out_$tag")
+        localCopy(s.read.parquet(s"$dir/out_$tag")
           .select($"doc_id", $"n_fp",
             col("n_hits").as(s"n_hits_$tag"),
             col("admitted").as(s"admitted_$tag")))
@@ -3911,28 +3754,11 @@ object SparkEntry {
         () => operators.TextAnalysis.writeWinnowIndexRooted(s, "q171_widx",
           bench, "doc_id", "text", k = 4, w = 4, hashName = "md5",
           numBuckets = 4))
-      val revText = array_join(reverse(filter(
-        split(trim($"text"), "\\s+"), t => t =!= lit(""))), " ")
-      val arrivals = accepted.filter($"doc_id" % 20 === 0)
-          .select(($"doc_id" + 400000L).as("doc_id"), $"text")
-        .unionByName(accepted.filter($"doc_id" % 20 === 4)
-          .select(($"doc_id" + 500000L).as("doc_id"),
-            concat($"text", lit(" xyzzy qbf")).as("text")))
-        .unionByName(accepted.filter($"doc_id" % 20 === 8)
-          .select(($"doc_id" + 600000L).as("doc_id"),
-            revText.as("text")))
-        .unionByName(docs.filter($"doc_id" % 20 === 1)
-          .select(($"doc_id" + 700000L).as("doc_id"), $"text"))
-        .unionByName(s.createDataFrame(Seq(
-            (900001L, ""), (900002L, null.asInstanceOf[String]),
-            (900003L, "too short")))
-          .toDF("doc_id", "text"))
+      val arrivals = textCascadeArrivals(accepted, docs)
       val dir = java.nio.file.Files.createTempDirectory("q171_stream")
       dir.toFile.deleteOnExit()
       arrivals.repartition(1).write.parquet(s"$dir/in")
       val sch = s.read.parquet(s"$dir/in").schema
-      def loc(df: DataFrame): DataFrame = s.createDataFrame(
-        java.util.Arrays.asList(df.collect(): _*), df.schema)
       def run(tag: String): DataFrame = {
         val stream = s.readStream.schema(sch).parquet(s"$dir/in")
         streaming.StreamingParse.admissionCascadeBatchedStreamDurable(
@@ -3942,7 +3768,7 @@ object SparkEntry {
           maxBucket = 50, annPrefix = "q171_idx", tau = 0.92,
           dim = 64, nProbe = 2, outPath = s"$dir/out_$tag",
           decontam = Some(("q171_widx", 0.0)))
-        loc(s.read.parquet(s"$dir/out_$tag")
+        localCopy(s.read.parquet(s"$dir/out_$tag")
           .select($"doc_id",
             col("cascade_admitted").as(s"admitted_$tag"),
             col("reason").as(s"reason_$tag")))
@@ -3974,57 +3800,23 @@ object SparkEntry {
     // engines — the oracle replays the PCM formula, the channel mix,
     // the k·frames div 64 window spans, and the cosine argmax + tau.
     "q150_audio_embed_neardup" -> ((s, d) => {
-      def pcmBytes(src: Long, ch: Int, frames: Int,
-                   scale: Int): Array[Byte] = {
-        val out = new Array[Byte](frames * ch * 2)
-        for (i <- 0 until frames; c <- 0 until ch) {
-          val v = (((src * 2654435761L + i.toLong * i * 40503L +
-            i * 977L + c * 997L) % 128L) - 64L).toInt * scale
-          val base = (i * ch + c) * 2
-          out(base) = (v & 0xFF).toByte
-          out(base + 1) = ((v >> 8) & 0xFF).toByte
-        }
-        out
-      }
-      def clip(src: Long, ch: Int, frames: Int, scale: Int,
-               tpe: javax.sound.sampled.AudioFileFormat.Type,
-               bigEndian: Boolean): Array[Byte] = {
-        val raw = pcmBytes(src, ch, frames, scale)
-        val le = new javax.sound.sampled.AudioFormat(
-          8000f, 16, ch, true, false)
-        val pcm = if (!bigEndian) raw else {
-          val sw = new Array[Byte](raw.length)
-          var i = 0
-          while (i < raw.length) {
-            sw(i) = raw(i + 1); sw(i + 1) = raw(i); i += 2
-          }
-          sw
-        }
-        val fmt = if (!bigEndian) le
-          else new javax.sound.sampled.AudioFormat(8000f, 16, ch, true, true)
-        val ais = new javax.sound.sampled.AudioInputStream(
-          new java.io.ByteArrayInputStream(pcm), fmt, frames.toLong)
-        val bos = new java.io.ByteArrayOutputStream()
-        javax.sound.sampled.AudioSystem.write(ais, tpe, bos)
-        bos.toByteArray
-      }
       val WAVE = javax.sound.sampled.AudioFileFormat.Type.WAVE
       val AIFF = javax.sound.sampled.AudioFileFormat.Type.AIFF
       def chOf(i: Long): Int = if (i <= 4) 1 else 2
-      val whole = clip(2L, 1, 200, 1, WAVE, bigEndian = false)
+      val whole = pcmClip(128L, 2L, 1, 200, 1, WAVE, bigEndian = false)
       val refs = s.createDataFrame((1L to 8L).map(i =>
-          (i, clip(i, chOf(i), 200, 1, WAVE, bigEndian = false))))
+          (i, pcmClip(128L, i, chOf(i), 200, 1, WAVE, bigEndian = false))))
         .toDF("media_id", "payload")
       val arrivals: Seq[(Long, Array[Byte])] =
         (1L to 4L).map(i => (500L + i,
-          clip(i, chOf(i), 200, 1, AIFF, bigEndian = true))) ++
+          pcmClip(128L, i, chOf(i), 200, 1, AIFF, bigEndian = true))) ++
         (5L to 8L).map(i => (510L + i,
-          clip(i, 2, 200, 2, WAVE, bigEndian = false))) ++
+          pcmClip(128L, i, 2, 200, 2, WAVE, bigEndian = false))) ++
         (1L to 3L).map(i => (520L + i,
-          clip(20L + i, 1, 200, 1, WAVE, bigEndian = false))) ++
+          pcmClip(128L, 20L + i, 1, 200, 1, WAVE, bigEndian = false))) ++
         Seq((9001L, whole.take(whole.length - 3)),
           (9002L, "not audio at all".getBytes("UTF-8")),
-          (9003L, clip(1L, 1, 40, 1, WAVE, bigEndian = false)))
+          (9003L, pcmClip(128L, 1L, 1, 40, 1, WAVE, bigEndian = false)))
       def embed(df: DataFrame): DataFrame =
         operators.Multimodal.audioEmbed(
           operators.Multimodal.decodeWav(df, "payload"),
@@ -4057,38 +3849,6 @@ object SparkEntry {
     // brute-force rule; corrupt, garbage and too-short clips embed
     // null and ADMIT through the zero-probe path.
     "q151_stream_audio_semantic" -> ((s, d) => {
-      def pcmBytes(src: Long, ch: Int, frames: Int,
-                   scale: Int): Array[Byte] = {
-        val out = new Array[Byte](frames * ch * 2)
-        for (i <- 0 until frames; c <- 0 until ch) {
-          val v = (((src * 2654435761L + i.toLong * i * 40503L +
-            i * 977L + c * 997L) % 128L) - 64L).toInt * scale
-          val base = (i * ch + c) * 2
-          out(base) = (v & 0xFF).toByte
-          out(base + 1) = ((v >> 8) & 0xFF).toByte
-        }
-        out
-      }
-      def clip(src: Long, ch: Int, frames: Int, scale: Int,
-               tpe: javax.sound.sampled.AudioFileFormat.Type,
-               bigEndian: Boolean): Array[Byte] = {
-        val raw = pcmBytes(src, ch, frames, scale)
-        val pcm = if (!bigEndian) raw else {
-          val sw = new Array[Byte](raw.length)
-          var i = 0
-          while (i < raw.length) {
-            sw(i) = raw(i + 1); sw(i + 1) = raw(i); i += 2
-          }
-          sw
-        }
-        val fmt = new javax.sound.sampled.AudioFormat(
-          8000f, 16, ch, true, bigEndian)
-        val ais = new javax.sound.sampled.AudioInputStream(
-          new java.io.ByteArrayInputStream(pcm), fmt, frames.toLong)
-        val bos = new java.io.ByteArrayOutputStream()
-        javax.sound.sampled.AudioSystem.write(ais, tpe, bos)
-        bos.toByteArray
-      }
       val WAVE = javax.sound.sampled.AudioFileFormat.Type.WAVE
       val AIFF = javax.sound.sampled.AudioFileFormat.Type.AIFF
       def chOf(i: Long): Int = if (i <= 4) 1 else 2
@@ -4097,7 +3857,7 @@ object SparkEntry {
           operators.Multimodal.decodeWav(df, "payload"),
           "pcm", "au_channels")
       val refs = s.createDataFrame((1L to 8L).map(i =>
-          (i, clip(i, chOf(i), 200, 1, WAVE, bigEndian = false))))
+          (i, pcmClip(128L, i, chOf(i), 200, 1, WAVE, bigEndian = false))))
         .toDF("media_id", "payload")
       val refEmb = embed(refs).select($"media_id", $"audio_embedding")
       val index = operators.Similarity.buildIvf(refEmb, "media_id",
@@ -4105,17 +3865,17 @@ object SparkEntry {
       val members = operators.Similarity.cellMembers(index)
       members.persist(org.apache.spark.storage.StorageLevel
         .MEMORY_AND_DISK).count()
-      val whole = clip(2L, 1, 200, 1, WAVE, bigEndian = false)
+      val whole = pcmClip(128L, 2L, 1, 200, 1, WAVE, bigEndian = false)
       val arrivals: Seq[(Long, Array[Byte])] =
         (1L to 4L).map(i => (500L + i,
-          clip(i, chOf(i), 200, 1, AIFF, bigEndian = true))) ++
+          pcmClip(128L, i, chOf(i), 200, 1, AIFF, bigEndian = true))) ++
         (5L to 8L).map(i => (510L + i,
-          clip(i, 2, 200, 2, WAVE, bigEndian = false))) ++
+          pcmClip(128L, i, 2, 200, 2, WAVE, bigEndian = false))) ++
         (1L to 3L).map(i => (520L + i,
-          clip(20L + i, 1, 200, 1, WAVE, bigEndian = false))) ++
+          pcmClip(128L, 20L + i, 1, 200, 1, WAVE, bigEndian = false))) ++
         Seq((9001L, whole.take(whole.length - 3)),
           (9002L, "not audio at all".getBytes("UTF-8")),
-          (9003L, clip(1L, 1, 40, 1, WAVE, bigEndian = false)))
+          (9003L, pcmClip(128L, 1L, 1, 40, 1, WAVE, bigEndian = false)))
       val dir = java.nio.file.Files.createTempDirectory("q151_stream")
       dir.toFile.deleteOnExit()
       s.createDataFrame(arrivals).toDF("media_id", "payload")
@@ -4266,23 +4026,8 @@ object SparkEntry {
     // last two must agree decision-for-decision (logical ≡ physical),
     // and the oracle replays both argmin worlds.
     "q137_durable_members_lifecycle" -> ((s, d) => {
-      val W = 16; val H = 12
-      def v(src: Long, x: Int, y: Int, shift: Int): Int =
-        ((src * 31 + x * (11 + src % 7) + y * 29 +
-          x.toLong * y * (1 + src % 3) + shift) % 256).toInt
-      def enc(src: Long, shift: Int, fmt: String): Array[Byte] = {
-        val im = new java.awt.image.BufferedImage(W, H,
-          java.awt.image.BufferedImage.TYPE_INT_RGB)
-        for (y <- 0 until H; x <- 0 until W) {
-          val g = v(src, x, y, shift)
-          im.setRGB(x, y, (g << 16) | (g << 8) | g)
-        }
-        val bos = new java.io.ByteArrayOutputStream()
-        javax.imageio.ImageIO.write(im, fmt, bos)
-        bos.toByteArray
-      }
       val refMedia = s.createDataFrame(
-          (1L to 10L).map(i => (i, enc(i, 0, "png"))))
+          (1L to 10L).map(i => (i, refImage(i, 0, "png"))))
         .toDF("media_id", "payload")
       val refSigs = operators.Multimodal.perceptualHashes(
           operators.Multimodal.decodeImages(refMedia, "payload"),
@@ -4293,9 +4038,9 @@ object SparkEntry {
           maxHamming = 6),
         "q137_members")
       val rows: Seq[(Long, Array[Byte])] =
-        (1L to 5L).map(i => (500L + i, enc(i, 0, "bmp"))) ++
-        (1L to 5L).map(i => (510L + i, enc(i, 4, "png"))) ++
-        (21L to 23L).map(i => (500L + i, enc(i, 0, "png"))) ++
+        (1L to 5L).map(i => (500L + i, refImage(i, 0, "bmp"))) ++
+        (1L to 5L).map(i => (510L + i, refImage(i, 4, "png"))) ++
+        (21L to 23L).map(i => (500L + i, refImage(i, 0, "png"))) ++
         Seq((9001L, "not an image".getBytes("UTF-8")))
       val dir = java.nio.file.Files.createTempDirectory("q137_stream")
       dir.toFile.deleteOnExit()
@@ -4494,21 +4239,6 @@ object SparkEntry {
     // dims, the planted-formula dHash construction and the min-id
     // group fold.
     "q155_media_datasheet" -> ((s, d) => {
-      val W = 16; val H = 12
-      def v(src: Long, x: Int, y: Int): Int =
-        ((src * 31 + x * (11 + src % 7) + y * 29 +
-          x.toLong * y * (1 + src % 3)) % 256).toInt
-      def enc(src: Long, fmt: String): Array[Byte] = {
-        val im = new java.awt.image.BufferedImage(W, H,
-          java.awt.image.BufferedImage.TYPE_INT_RGB)
-        for (y <- 0 until H; x <- 0 until W) {
-          val g = v(src, x, y)
-          im.setRGB(x, y, (g << 16) | (g << 8) | g)
-        }
-        val bos = new java.io.ByteArrayOutputStream()
-        javax.imageio.ImageIO.write(im, fmt, bos)
-        bos.toByteArray
-      }
       def wav(): Array[Byte] = {
         val fmt = new javax.sound.sampled.AudioFormat(8000f, 16, 1,
           true, false)
@@ -4521,9 +4251,9 @@ object SparkEntry {
         bos.toByteArray
       }
       val rows: Seq[(Long, Array[Byte])] =
-        (1L to 6L).map(i => (i, enc(i, "png"))) ++
-        (1L to 3L).map(i => (500L + i, enc(i, "bmp"))) ++
-        Seq((504L, enc(1L, "gif")),
+        (1L to 6L).map(i => (i, refImage(i, 0, "png"))) ++
+        (1L to 3L).map(i => (500L + i, refImage(i, 0, "bmp"))) ++
+        Seq((504L, refImage(1L, 0, "gif")),
           (601L, wav()),
           (9001L, "garbage bytes here".getBytes("UTF-8")),
           (9002L, Array.empty[Byte]),
@@ -4554,41 +4284,8 @@ object SparkEntry {
     // every gradient comparison, the vote, the packing and the
     // exhaustive argmin decision.
     "q136_stream_video_admission" -> ((s, d) => {
-      val W = 16; val H = 12
-      def pix(src: Long, f: Int, x: Int, y: Int, bright: Int,
-              tweak: Boolean): Int = {
-        val base =
-          if (f < 6) ((src * 37 + x * (11 + src % 7) + y * 23 +
-            x.toLong * y * (1 + src % 3)) % 200).toInt
-          else ((src * 53 + x * 29 + y * 7 +
-            x.toLong * y * 2 + 101) % 200).toInt
-        if (tweak && x == 3 && y == 0) 255 else base + bright
-      }
-      val cmap = (0 until 256)
-        .map(v => (0xFF << 24) | (v << 16) | (v << 8) | v).toArray
-      val icm = new java.awt.image.IndexColorModel(8, 256, cmap, 0,
-        false, -1, java.awt.image.DataBuffer.TYPE_BYTE)
-      def gif(src: Long, bright: Int, dropFirst: Boolean,
-              tweak: Boolean): Array[Byte] = {
-        val bos = new java.io.ByteArrayOutputStream()
-        val ios = javax.imageio.ImageIO.createImageOutputStream(bos)
-        val writer = javax.imageio.ImageIO
-          .getImageWritersByFormatName("gif").next()
-        writer.setOutput(ios)
-        writer.prepareWriteSequence(null)
-        for (f <- (if (dropFirst) 1 else 0) until 8) {
-          val img = new java.awt.image.BufferedImage(W, H,
-            java.awt.image.BufferedImage.TYPE_BYTE_INDEXED, icm)
-          for (y <- 0 until H; x <- 0 until W)
-            img.getRaster.setSample(x, y, 0, pix(src, f, x, y, bright, tweak))
-          writer.writeToSequence(
-            new javax.imageio.IIOImage(img, null, null), null)
-        }
-        writer.endWriteSequence(); writer.dispose(); ios.close()
-        bos.toByteArray
-      }
       val refMedia = s.createDataFrame((1L to 6L).map(i =>
-          (i, gif(i, 0, dropFirst = false, tweak = false))))
+          (i, grayGif(i, 0, dropFirst = false, tweak = false))))
         .toDF("media_id", "payload")
       // the BATCH route signs the reference corpus — the stream side
       // must land identical bits through the per-row route
@@ -4602,14 +4299,14 @@ object SparkEntry {
         "media_id", "vsig", maxHamming = 6)
       members.persist(org.apache.spark.storage.StorageLevel
         .MEMORY_AND_DISK).count()
-      val whole = gif(1L, 0, dropFirst = false, tweak = false)
+      val whole = grayGif(1L, 0, dropFirst = false, tweak = false)
       val rows: Seq[(Long, Array[Byte])] =
-        (1L to 3L).map(i => (500L + i, gif(i, 4, dropFirst = false,
+        (1L to 3L).map(i => (500L + i, grayGif(i, 4, dropFirst = false,
           tweak = false))) ++
-        (1L to 3L).map(i => (510L + i, gif(i, 0, dropFirst = true,
+        (1L to 3L).map(i => (510L + i, grayGif(i, 0, dropFirst = true,
           tweak = false))) ++
-        Seq((521L, gif(1L, 0, dropFirst = false, tweak = true))) ++
-        (21L to 22L).map(i => (510L + i, gif(i, 0, dropFirst = false,
+        Seq((521L, grayGif(1L, 0, dropFirst = false, tweak = true))) ++
+        (21L to 22L).map(i => (510L + i, grayGif(i, 0, dropFirst = false,
           tweak = false))) ++
         Seq((9001L, whole.take(whole.length * 3 / 5)),
           (9002L, "not a video".getBytes("UTF-8")),
@@ -4646,23 +4343,8 @@ object SparkEntry {
     // formulas, the dHash construction and BOTH exhaustive argmin
     // decisions (vs refs, and vs refs minus the tombstones).
     "q134_phash_takedown_stream" -> ((s, d) => {
-      val W = 16; val H = 12
-      def v(src: Long, x: Int, y: Int, shift: Int): Int =
-        ((src * 31 + x * (11 + src % 7) + y * 29 +
-          x.toLong * y * (1 + src % 3) + shift) % 256).toInt
-      def enc(src: Long, shift: Int, fmt: String): Array[Byte] = {
-        val im = new java.awt.image.BufferedImage(W, H,
-          java.awt.image.BufferedImage.TYPE_INT_RGB)
-        for (y <- 0 until H; x <- 0 until W) {
-          val g = v(src, x, y, shift)
-          im.setRGB(x, y, (g << 16) | (g << 8) | g)
-        }
-        val bos = new java.io.ByteArrayOutputStream()
-        javax.imageio.ImageIO.write(im, fmt, bos)
-        bos.toByteArray
-      }
       val refMedia = s.createDataFrame(
-          (1L to 10L).map(i => (i, enc(i, 0, "png"))))
+          (1L to 10L).map(i => (i, refImage(i, 0, "png"))))
         .toDF("media_id", "payload")
       val refSigs = operators.Multimodal.perceptualHashes(
           operators.Multimodal.decodeImages(refMedia, "payload"),
@@ -4677,9 +4359,9 @@ object SparkEntry {
       live.persist(org.apache.spark.storage.StorageLevel
         .MEMORY_AND_DISK).count()
       val rows: Seq[(Long, Array[Byte])] =
-        (1L to 5L).map(i => (500L + i, enc(i, 0, "bmp"))) ++
-        (1L to 5L).map(i => (510L + i, enc(i, 4, "png"))) ++
-        (21L to 23L).map(i => (500L + i, enc(i, 0, "png"))) ++
+        (1L to 5L).map(i => (500L + i, refImage(i, 0, "bmp"))) ++
+        (1L to 5L).map(i => (510L + i, refImage(i, 4, "png"))) ++
+        (21L to 23L).map(i => (500L + i, refImage(i, 0, "png"))) ++
         Seq((9001L, "not an image".getBytes("UTF-8")),
           (9002L, Array.empty[Byte]))
       val dir = java.nio.file.Files.createTempDirectory("q134_stream")
@@ -4731,49 +4413,16 @@ object SparkEntry {
     // 9×8 grid sampling, every gradient comparison, the per-bit vote,
     // the bit packing and the exhaustive pairwise Hamming truth.
     "q133_video_temporal_neardup" -> ((s, d) => {
-      val W = 16; val H = 12
-      def pix(src: Long, f: Int, x: Int, y: Int, bright: Int,
-              tweak: Boolean): Int = {
-        val base =
-          if (f < 6) ((src * 37 + x * (11 + src % 7) + y * 23 +
-            x.toLong * y * (1 + src % 3)) % 200).toInt
-          else ((src * 53 + x * 29 + y * 7 +
-            x.toLong * y * 2 + 101) % 200).toInt
-        if (tweak && x == 3 && y == 0) 255 else base + bright
-      }
-      val cmap = (0 until 256)
-        .map(v => (0xFF << 24) | (v << 16) | (v << 8) | v).toArray
-      val icm = new java.awt.image.IndexColorModel(8, 256, cmap, 0,
-        false, -1, java.awt.image.DataBuffer.TYPE_BYTE)
-      def gif(src: Long, bright: Int, dropFirst: Boolean,
-              tweak: Boolean): Array[Byte] = {
-        val bos = new java.io.ByteArrayOutputStream()
-        val ios = javax.imageio.ImageIO.createImageOutputStream(bos)
-        val writer = javax.imageio.ImageIO
-          .getImageWritersByFormatName("gif").next()
-        writer.setOutput(ios)
-        writer.prepareWriteSequence(null)
-        for (f <- (if (dropFirst) 1 else 0) until 8) {
-          val img = new java.awt.image.BufferedImage(W, H,
-            java.awt.image.BufferedImage.TYPE_BYTE_INDEXED, icm)
-          for (y <- 0 until H; x <- 0 until W)
-            img.getRaster.setSample(x, y, 0, pix(src, f, x, y, bright, tweak))
-          writer.writeToSequence(
-            new javax.imageio.IIOImage(img, null, null), null)
-        }
-        writer.endWriteSequence(); writer.dispose(); ios.close()
-        bos.toByteArray
-      }
-      val whole = gif(1L, 0, dropFirst = false, tweak = false)
+      val whole = grayGif(1L, 0, dropFirst = false, tweak = false)
       val rows: Seq[(Long, Array[Byte])] =
-        (1L to 6L).map(i => (i, gif(i, 0, dropFirst = false,
+        (1L to 6L).map(i => (i, grayGif(i, 0, dropFirst = false,
           tweak = false))) ++
-        (1L to 3L).map(i => (500L + i, gif(i, 4, dropFirst = false,
+        (1L to 3L).map(i => (500L + i, grayGif(i, 4, dropFirst = false,
           tweak = false))) ++
-        (1L to 3L).map(i => (510L + i, gif(i, 0, dropFirst = true,
+        (1L to 3L).map(i => (510L + i, grayGif(i, 0, dropFirst = true,
           tweak = false))) ++
-        Seq((521L, gif(1L, 0, dropFirst = false, tweak = true))) ++
-        (21L to 22L).map(i => (510L + i, gif(i, 0, dropFirst = false,
+        Seq((521L, grayGif(1L, 0, dropFirst = false, tweak = true))) ++
+        (21L to 22L).map(i => (510L + i, grayGif(i, 0, dropFirst = false,
           tweak = false))) ++
         Seq((9001L, whole.take(whole.length * 3 / 5)),
           (9002L, "not a video".getBytes("UTF-8")),
@@ -4820,42 +4469,12 @@ object SparkEntry {
     // formulas, the stereo mixdown, every window energy, the bit
     // packing and the exhaustive argmin decision.
     "q132_stream_audio_admission" -> ((s, d) => {
-      def pcmBytes(src: Long, ch: Int, frames: Int, scale: Int,
-                   bigEndian: Boolean): Array[Byte] = {
-        val out = new Array[Byte](frames * ch * 2)
-        for (i <- 0 until frames; c <- 0 until ch) {
-          val v = (((src * 2654435761L + i.toLong * i * 40503L +
-            i * 977L + c * 997L) % 4096L) - 2048L).toInt * scale
-          val base = (i * ch + c) * 2
-          if (bigEndian) {
-            out(base) = ((v >> 8) & 0xFF).toByte
-            out(base + 1) = (v & 0xFF).toByte
-          } else {
-            out(base) = (v & 0xFF).toByte
-            out(base + 1) = ((v >> 8) & 0xFF).toByte
-          }
-        }
-        out
-      }
-      def clip(src: Long, ch: Int, frames: Int, scale: Int,
-               tpe: javax.sound.sampled.AudioFileFormat.Type,
-               bigEndian: Boolean): Array[Byte] = {
-        val fmt = new javax.sound.sampled.AudioFormat(
-          8000f, 16, ch, true, bigEndian)
-        val ais = new javax.sound.sampled.AudioInputStream(
-          new java.io.ByteArrayInputStream(
-            pcmBytes(src, ch, frames, scale, bigEndian)),
-          fmt, frames.toLong)
-        val bos = new java.io.ByteArrayOutputStream()
-        javax.sound.sampled.AudioSystem.write(ais, tpe, bos)
-        bos.toByteArray
-      }
       val WAVE = javax.sound.sampled.AudioFileFormat.Type.WAVE
       val AIFF = javax.sound.sampled.AudioFileFormat.Type.AIFF
       val AU = javax.sound.sampled.AudioFileFormat.Type.AU
       def chOf(src: Long): Int = if (src <= 4) 1 else 2
       val refMedia = s.createDataFrame((1L to 8L).map(i =>
-          (i, clip(i, chOf(i), 200, 1, WAVE, bigEndian = false))))
+          (i, pcmClip(4096L, i, chOf(i), 200, 1, WAVE, bigEndian = false))))
         .toDF("media_id", "payload")
       val refSigs = operators.Multimodal.audioFingerprint(
           operators.Multimodal.decodeWav(refMedia, "payload"),
@@ -4865,20 +4484,20 @@ object SparkEntry {
         "media_id", "afp", maxHamming = 6)
       members.persist(org.apache.spark.storage.StorageLevel
         .MEMORY_AND_DISK).count()
-      val whole = clip(1L, 1, 200, 1, WAVE, bigEndian = false)
+      val whole = pcmClip(4096L, 1L, 1, 200, 1, WAVE, bigEndian = false)
       val rows: Seq[(Long, Array[Byte])] =
-        (1L to 4L).map(i => (500L + i, clip(i, 1, 200, 1, AIFF,
+        (1L to 4L).map(i => (500L + i, pcmClip(4096L, i, 1, 200, 1, AIFF,
           bigEndian = true))) ++
-        (1L to 4L).map(i => (510L + i, clip(i, 1, 200, 3, WAVE,
+        (1L to 4L).map(i => (510L + i, pcmClip(4096L, i, 1, 200, 3, WAVE,
           bigEndian = false))) ++
-        (21L to 24L).map(i => (500L + i, clip(i, 1, 200, 1, WAVE,
+        (21L to 24L).map(i => (500L + i, pcmClip(4096L, i, 1, 200, 1, WAVE,
           bigEndian = false))) ++
-        (5L to 6L).map(i => (525L + i, clip(i, 2, 200, 1, AU,
+        (5L to 6L).map(i => (525L + i, pcmClip(4096L, i, 2, 200, 1, AU,
           bigEndian = true))) ++
         Seq((9001L, whole.take(whole.length - 3)),
           (9002L, "not audio at all".getBytes("UTF-8")),
           (9003L, Array.empty[Byte]),
-          (9004L, clip(1L, 1, 40, 1, WAVE, bigEndian = false)))
+          (9004L, pcmClip(4096L, 1L, 1, 40, 1, WAVE, bigEndian = false)))
       val dir = java.nio.file.Files.createTempDirectory("q132_stream")
       dir.toFile.deleteOnExit()
       s.createDataFrame(rows).toDF("media_id", "payload")
@@ -4900,51 +4519,21 @@ object SparkEntry {
     }),
 
     "q125_audio_fp_dedup" -> ((s, d) => {
-      def pcmBytes(src: Long, ch: Int, frames: Int, scale: Int,
-                   bigEndian: Boolean): Array[Byte] = {
-        val out = new Array[Byte](frames * ch * 2)
-        for (i <- 0 until frames; c <- 0 until ch) {
-          val v = (((src * 2654435761L + i.toLong * i * 40503L +
-            i * 977L + c * 997L) % 4096L) - 2048L).toInt * scale
-          val base = (i * ch + c) * 2
-          if (bigEndian) {
-            out(base) = ((v >> 8) & 0xFF).toByte
-            out(base + 1) = (v & 0xFF).toByte
-          } else {
-            out(base) = (v & 0xFF).toByte
-            out(base + 1) = ((v >> 8) & 0xFF).toByte
-          }
-        }
-        out
-      }
-      def clip(src: Long, ch: Int, frames: Int, scale: Int,
-               tpe: javax.sound.sampled.AudioFileFormat.Type,
-               bigEndian: Boolean): Array[Byte] = {
-        val fmt = new javax.sound.sampled.AudioFormat(
-          8000f, 16, ch, true, bigEndian)
-        val ais = new javax.sound.sampled.AudioInputStream(
-          new java.io.ByteArrayInputStream(
-            pcmBytes(src, ch, frames, scale, bigEndian)),
-          fmt, frames.toLong)
-        val bos = new java.io.ByteArrayOutputStream()
-        javax.sound.sampled.AudioSystem.write(ais, tpe, bos)
-        bos.toByteArray
-      }
       val WAVE = javax.sound.sampled.AudioFileFormat.Type.WAVE
       val AIFF = javax.sound.sampled.AudioFileFormat.Type.AIFF
       val AU = javax.sound.sampled.AudioFileFormat.Type.AU
       def chOf(i: Long): Int = if (i <= 6) 1 else 2
-      val whole = clip(2L, 1, 200, 1, WAVE, bigEndian = false)
+      val whole = pcmClip(4096L, 2L, 1, 200, 1, WAVE, bigEndian = false)
       val rows: Seq[(Long, Array[Byte])] =
         (1L to 10L).map(i =>
-          (i, clip(i, chOf(i), 200, 1, WAVE, bigEndian = false))) ++
+          (i, pcmClip(4096L, i, chOf(i), 200, 1, WAVE, bigEndian = false))) ++
         (1L to 10L).map(i =>
-          (100L + i, clip(i, chOf(i), 200, 1, AIFF, bigEndian = true))) ++
+          (100L + i, pcmClip(4096L, i, chOf(i), 200, 1, AIFF, bigEndian = true))) ++
         (1L to 10L).map(i =>
-          (200L + i, clip(i, chOf(i), 200, 1, AU, bigEndian = true))) ++
+          (200L + i, pcmClip(4096L, i, chOf(i), 200, 1, AU, bigEndian = true))) ++
         (1L to 4L).map(i =>
-          (300L + i, clip(i, 1, 200, 2, WAVE, bigEndian = false))) ++
-        Seq((50L, clip(1L, 1, 40, 1, WAVE, bigEndian = false)),
+          (300L + i, pcmClip(4096L, i, 1, 200, 2, WAVE, bigEndian = false))) ++
+        Seq((50L, pcmClip(4096L, 1L, 1, 40, 1, WAVE, bigEndian = false)),
           (9001L, whole.take(whole.length - 3)),
           (9002L, "not audio at all".getBytes("UTF-8")),
           (9003L, Array.empty[Byte]))
@@ -5022,20 +4611,8 @@ object SparkEntry {
     // The A/B generation swap + fresh-epoch discipline rides the same
     // gate (pre reads the written index; post reads the swapped one).
     "q123_ivf_drift_retrain" -> ((s, d) => {
-      val base = s.range(1, 21).select($"id".as("vec_id"),
-        expr("CASE WHEN id % 2 = 1 THEN array(1.0D, 0.0D, 0.0D, " +
-          "0.1D * CAST((id + 1) DIV 2 AS DOUBLE)) " +
-          "ELSE array(0.0D, 1.0D, 0.0D, 0.1D * CAST(id DIV 2 AS DOUBLE)) " +
-          "END").as("embedding"))
-      val drift = s.range(1, 11).select(($"id" + 100L).as("vec_id"),
-        expr("array(0.05D, 0.0D, 1.0D, 0.1D * CAST(id AS DOUBLE))")
-          .as("embedding"))
-      val queries = s.range(1, 11).select(($"id" + 1000L).as("vec_id"),
-        expr("array(0.0D, 0.05D, 1.0D, 0.1D * CAST(id AS DOUBLE))")
-          .as("embedding"))
+      val (base, drift, queries) = ivfDriftVectors(s)
       val corpus = base.unionByName(drift)
-      def loc(df: DataFrame): DataFrame = s.createDataFrame(
-        java.util.Arrays.asList(df.collect(): _*), df.schema)
       val built = operators.Similarity.buildIvf(base, "vec_id",
         "embedding", nCells = 2, lloydIters = 1)
       val grown = operators.Similarity.appendToIvf(built, drift,
@@ -5045,11 +4622,11 @@ object SparkEntry {
       val pre = operators.Similarity.readIvfIndex(s, "q123_idx")
       // materialize every pre-retrain result BEFORE the swap — the
       // retrain drops the generation these plans read
-      val preAnn = loc(operators.Similarity.searchIvf(pre, queries,
+      val preAnn = localCopy(operators.Similarity.searchIvf(pre, queries,
         "vec_id", "embedding", k = 1, nProbe = 1))
-      val preProbe = loc(operators.Similarity.recallProbe(preAnn, corpus,
+      val preProbe = localCopy(operators.Similarity.recallProbe(preAnn, corpus,
         queries, "vec_id", "embedding", k = 1))
-      val preDec = loc(operators.Similarity.driftDecision(preProbe,
+      val preDec = localCopy(operators.Similarity.driftDecision(preProbe,
         minRecall = 0.9))
       operators.Similarity.retrainIvfIndexBucketed(s, "q123_idx",
         sample => sample.filter($"__rid" % 2 === 1), lloydIters = 1,
@@ -5094,54 +4671,26 @@ object SparkEntry {
     // refit with keep-empty coalesce, re-assignment, healed probes,
     // brute-force truth, both decisions and both epoch-change flags.
     "q131_ivfpq_maintain" -> ((s, d) => {
-      val base = s.range(1, 21).select($"id".as("vec_id"),
-        expr("CASE WHEN id % 2 = 1 THEN array(1.0D, 0.0D, 0.0D, " +
-          "0.1D * CAST((id + 1) DIV 2 AS DOUBLE)) " +
-          "ELSE array(0.0D, 1.0D, 0.0D, 0.1D * CAST(id DIV 2 AS DOUBLE)) " +
-          "END").as("embedding"))
-      val drift = s.range(1, 11).select(($"id" + 100L).as("vec_id"),
-        expr("array(0.05D, 0.0D, 1.0D, 0.1D * CAST(id AS DOUBLE))")
-          .as("embedding"))
-      val queries = s.range(1, 11).select(($"id" + 1000L).as("vec_id"),
-        expr("array(0.0D, 0.05D, 1.0D, 0.1D * CAST(id AS DOUBLE))")
-          .as("embedding"))
+      val (base, drift, queries) = ivfDriftVectors(s)
       val corpus = base.unionByName(drift)
-      def loc(df: DataFrame): DataFrame = s.createDataFrame(
-        java.util.Arrays.asList(df.collect(): _*), df.schema)
       val built = operators.Similarity.buildIvfPq(base, "vec_id",
         "embedding", nCells = 2, nSub = 2, nCentroids = 2, lloydIters = 1)
       operators.Similarity.writeIvfPqIndexBucketed(built, "q131_idx",
         numBuckets = 2)
       operators.Similarity.appendToIvfPqIndexBucketed(s, "q131_idx",
         drift, "vec_id", "embedding")
-      def top1(tag: String): DataFrame = loc(
+      def top1(tag: String): DataFrame = localCopy(
         operators.Similarity.searchIvfPqLive(s, "q131_idx", corpus,
             queries, "vec_id", "embedding", k = 1, nProbe = 1,
             oversample = 32)
           .filter($"rank" === 1)
           .select($"query_id", $"neighbor_id".as(tag)))
-      def maintain(): DataFrame = loc(
+      def maintain(): DataFrame = localCopy(
         operators.Similarity.maintainIvfPqIndex(s, "q131_idx", corpus,
           "vec_id", "embedding", queries, k = 1, minRecall = 0.9,
           sample = corpus.filter($"vec_id" % 2 === 1), lloydIters = 1,
           nProbe = 1, oversample = 32, numBuckets = 2))
-      val pre = top1("pre_top1")
-      val heal = maintain()
-      val post = top1("post_top1")
-      val noop = maintain()
-      pre.join(post, Seq("query_id"))
-        .crossJoin(broadcast(heal.select(
-          $"pre_mean_recall".as("pre_mean"), $"retrain_fired",
-          $"post_mean_recall".as("post_mean"),
-          $"epoch_changed".as("heal_epoch_changed"))))
-        .crossJoin(broadcast(noop.select(
-          $"retrain_fired".as("noop_fired"),
-          $"post_mean_recall".as("noop_mean"),
-          $"epoch_changed".as("noop_epoch_changed"))))
-        .select($"query_id", $"pre_top1", $"post_top1", $"pre_mean",
-          $"retrain_fired", $"post_mean", $"heal_epoch_changed",
-          $"noop_fired", $"noop_mean", $"noop_epoch_changed")
-        .orderBy($"query_id")
+      ivfMaintainReport(top1, () => maintain())
     }),
 
     // The IVF×SQ rung of the one-call maintenance matrix — with q131
@@ -5156,55 +4705,27 @@ object SparkEntry {
     // generation (epoch_changed), the no-op call must leave the meta
     // pointer untouched.
     "q145_ivfsq_maintain" -> ((s, d) => {
-      val base = s.range(1, 21).select($"id".as("vec_id"),
-        expr("CASE WHEN id % 2 = 1 THEN array(1.0D, 0.0D, 0.0D, " +
-          "0.1D * CAST((id + 1) DIV 2 AS DOUBLE)) " +
-          "ELSE array(0.0D, 1.0D, 0.0D, 0.1D * CAST(id DIV 2 AS DOUBLE)) " +
-          "END").as("embedding"))
-      val drift = s.range(1, 11).select(($"id" + 100L).as("vec_id"),
-        expr("array(0.05D, 0.0D, 1.0D, 0.1D * CAST(id AS DOUBLE))")
-          .as("embedding"))
-      val queries = s.range(1, 11).select(($"id" + 1000L).as("vec_id"),
-        expr("array(0.0D, 0.05D, 1.0D, 0.1D * CAST(id AS DOUBLE))")
-          .as("embedding"))
+      val (base, drift, queries) = ivfDriftVectors(s)
       val corpus = base.unionByName(drift)
-      def loc(df: DataFrame): DataFrame = s.createDataFrame(
-        java.util.Arrays.asList(df.collect(): _*), df.schema)
       val built = operators.Similarity.buildIvfSq(base, "vec_id",
         "embedding", nCells = 2, lloydIters = 1)
       val grown = operators.Similarity.appendToIvfSq(built, drift,
         "vec_id", "embedding")
       operators.Similarity.writeIvfSqIndexBucketed(grown, "q145_idx",
         numBuckets = 2)
-      def top1(tag: String): DataFrame = loc(
+      def top1(tag: String): DataFrame = localCopy(
         operators.Similarity.searchIvfSq(
             operators.Similarity.readIvfSqIndex(s, "q145_idx"), corpus,
             queries, "vec_id", "embedding", k = 1, nProbe = 1,
             oversample = 32)
           .filter($"rank" === 1)
           .select($"query_id", $"neighbor_id".as(tag)))
-      def maintain(): DataFrame = loc(
+      def maintain(): DataFrame = localCopy(
         operators.Similarity.maintainIvfSqIndex(s, "q145_idx", corpus,
           "vec_id", "embedding", queries, k = 1, minRecall = 0.9,
           sample = corpus.filter($"vec_id" % 2 === 1), lloydIters = 1,
           nProbe = 1, oversample = 32, numBuckets = 2))
-      val pre = top1("pre_top1")
-      val heal = maintain()
-      val post = top1("post_top1")
-      val noop = maintain()
-      pre.join(post, Seq("query_id"))
-        .crossJoin(broadcast(heal.select(
-          $"pre_mean_recall".as("pre_mean"), $"retrain_fired",
-          $"post_mean_recall".as("post_mean"),
-          $"epoch_changed".as("heal_epoch_changed"))))
-        .crossJoin(broadcast(noop.select(
-          $"retrain_fired".as("noop_fired"),
-          $"post_mean_recall".as("noop_mean"),
-          $"epoch_changed".as("noop_epoch_changed"))))
-        .select($"query_id", $"pre_top1", $"post_top1", $"pre_mean",
-          $"retrain_fired", $"post_mean", $"heal_epoch_changed",
-          $"noop_fired", $"noop_mean", $"noop_epoch_changed")
-        .orderBy($"query_id")
+      ivfMaintainReport(top1, () => maintain())
     }),
 
     // CCNet-style per-language score bucketing (Wenzek et al. 2019):
@@ -6271,7 +5792,7 @@ object SparkEntry {
          ORDER BY doc_id""",
 
     "q102_release_gate" ->
-      """WITH p AS (SELECT doc_id, text FROM documents),
+      ("""WITH p AS (SELECT doc_id, text FROM documents),
          n AS (
            SELECT doc_id,
              CASE WHEN doc_id % 7 = 0 THEN text || ' v2 edit'
@@ -6281,45 +5802,17 @@ object SparkEntry {
            SELECT doc_id + 3000000 AS doc_id, text FROM documents
              WHERE doc_id % 11 = 0
          ),
-         d AS (
-           SELECT CASE WHEN p.doc_id IS NULL THEN 'added'
-                       WHEN n.doc_id IS NULL THEN 'removed'
-                       WHEN p.text IS NOT DISTINCT FROM n.text THEN 'unchanged'
-                       ELSE 'changed' END AS status
-           FROM p FULL OUTER JOIN n ON p.doc_id = n.doc_id
-         ),
-         c AS (SELECT
-           CAST(sum(CASE WHEN status = 'added' THEN 1 ELSE 0 END) AS DOUBLE) AS na,
-           CAST(sum(CASE WHEN status = 'removed' THEN 1 ELSE 0 END) AS DOUBLE) AS nr,
-           CAST(sum(CASE WHEN status = 'changed' THEN 1 ELSE 0 END) AS DOUBLE) AS nc,
-           CAST(sum(CASE WHEN status = 'unchanged' THEN 1 ELSE 0 END) AS DOUBLE) AS nu
-           FROM d),
-         w AS (SELECT na, nr, nc, nu,
-           nr + nc + nu AS np, na + nc + nu AS nn FROM c),
+         """ + releaseDiffSql + """
          f AS (SELECT *,
            CASE WHEN nn > 0 THEN na / nn ELSE 0 END AS af,
            CASE WHEN np > 0 THEN nr / np ELSE 0 END AS rf,
            CASE WHEN np > 0 THEN nc / np ELSE 0 END AS cf FROM w)
          SELECT metric, round(value, 6) AS value FROM (
-           SELECT 'diff:n_prev' AS metric, np AS value FROM f
-           UNION ALL SELECT 'diff:n_next', nn FROM f
-           UNION ALL SELECT 'diff:n_added', na FROM f
-           UNION ALL SELECT 'diff:n_removed', nr FROM f
-           UNION ALL SELECT 'diff:n_changed', nc FROM f
-           UNION ALL SELECT 'diff:n_unchanged', nu FROM f
-           UNION ALL SELECT 'diff:added_frac', af FROM f
-           UNION ALL SELECT 'diff:removed_frac', rf FROM f
-           UNION ALL SELECT 'diff:changed_frac', cf FROM f
-           UNION ALL SELECT 'gate:max_added_frac', 0.15 FROM f
-           UNION ALL SELECT 'gate:max_removed_frac', 0.15 FROM f
-           UNION ALL SELECT 'gate:max_changed_frac', 0.10 FROM f
-           UNION ALL SELECT 'gate:pass',
-             CASE WHEN af <= 0.15 AND rf <= 0.15 AND cf <= 0.10
-                  THEN 1.0 ELSE 0.0 END FROM f
-         ) ORDER BY metric""",
+           """ + releaseGateRowsSql + """
+         ) ORDER BY metric"""),
 
     "q103_release_report" ->
-      """WITH p AS (SELECT doc_id, text FROM documents),
+      ("""WITH p AS (SELECT doc_id, text FROM documents),
          n AS (
            SELECT doc_id,
              CASE WHEN doc_id % 7 = 0 THEN text || ' v2 edit'
@@ -6329,21 +5822,7 @@ object SparkEntry {
            SELECT doc_id + 3000000 AS doc_id, text, lang FROM documents
              WHERE doc_id % 11 = 0
          ),
-         d AS (
-           SELECT CASE WHEN p.doc_id IS NULL THEN 'added'
-                       WHEN n.doc_id IS NULL THEN 'removed'
-                       WHEN p.text IS NOT DISTINCT FROM n.text THEN 'unchanged'
-                       ELSE 'changed' END AS status
-           FROM p FULL OUTER JOIN n ON p.doc_id = n.doc_id
-         ),
-         c AS (SELECT
-           CAST(sum(CASE WHEN status = 'added' THEN 1 ELSE 0 END) AS DOUBLE) AS na,
-           CAST(sum(CASE WHEN status = 'removed' THEN 1 ELSE 0 END) AS DOUBLE) AS nr,
-           CAST(sum(CASE WHEN status = 'changed' THEN 1 ELSE 0 END) AS DOUBLE) AS nc,
-           CAST(sum(CASE WHEN status = 'unchanged' THEN 1 ELSE 0 END) AS DOUBLE) AS nu
-           FROM d),
-         w AS (SELECT na, nr, nc, nu,
-           nr + nc + nu AS np, na + nc + nu AS nn FROM c),
+         """ + releaseDiffSql + """
          f AS (SELECT *,
            CASE WHEN nn > 0 THEN na / nn ELSE 0 END AS af,
            CASE WHEN np > 0 THEN nr / np ELSE 0 END AS rf,
@@ -6361,21 +5840,7 @@ object SparkEntry {
                AS empty_frac
            FROM b)
          SELECT metric, round(value, 6) AS value FROM (
-           SELECT 'diff:n_prev' AS metric, np AS value FROM f
-           UNION ALL SELECT 'diff:n_next', nn FROM f
-           UNION ALL SELECT 'diff:n_added', na FROM f
-           UNION ALL SELECT 'diff:n_removed', nr FROM f
-           UNION ALL SELECT 'diff:n_changed', nc FROM f
-           UNION ALL SELECT 'diff:n_unchanged', nu FROM f
-           UNION ALL SELECT 'diff:added_frac', af FROM f
-           UNION ALL SELECT 'diff:removed_frac', rf FROM f
-           UNION ALL SELECT 'diff:changed_frac', cf FROM f
-           UNION ALL SELECT 'gate:max_added_frac', 0.15 FROM f
-           UNION ALL SELECT 'gate:max_removed_frac', 0.15 FROM f
-           UNION ALL SELECT 'gate:max_changed_frac', 0.10 FROM f
-           UNION ALL SELECT 'gate:pass',
-             CASE WHEN af <= 0.15 AND rf <= 0.15 AND cf <= 0.10
-                  THEN 1.0 ELSE 0.0 END FROM f
+           """ + releaseGateRowsSql + """
            UNION ALL SELECT 'next:n_docs', n_docs FROM g
            UNION ALL SELECT 'next:n_tokens_total', n_tokens_total FROM g
            UNION ALL SELECT 'next:tokens_p50', tokens_p50 FROM g
@@ -6385,7 +5850,7 @@ object SparkEntry {
            UNION ALL SELECT 'next:lang_frac:' || lang,
              count(*)::DOUBLE / (SELECT n_docs FROM g)
              FROM n GROUP BY lang
-         ) ORDER BY metric""",
+         ) ORDER BY metric"""),
 
     // the projection matrix is rebuilt sign-by-sign from md5 — the
     // scale 1/sqrt(16) is the exact binary 0.25, so `dot * 0.25` in
@@ -6406,20 +5871,11 @@ object SparkEntry {
     // brute-force argmax, verbatim the q60/q66 discipline: the PQ
     // path's rank-1 answer must be quantization-invisible
     "q105_pq_ann_recall" ->
-      """WITH c AS (SELECT vec_id, embedding::DOUBLE[] v FROM embeddings),
-         q AS (SELECT vec_id + 10000 AS query_id,
-             list_transform(v, x -> x * 1.001 + 0.0005) AS qv
-           FROM c WHERE vec_id < 10),
-         s AS (SELECT query_id, c.vec_id AS neighbor_id,
-             list_dot_product(qv, c.v) /
-               (sqrt(list_dot_product(qv, qv)) * sqrt(list_dot_product(c.v, c.v)))
-               AS cos_raw
-           FROM q CROSS JOIN c),
-         r AS (SELECT query_id, neighbor_id, row_number() OVER
-             (PARTITION BY query_id ORDER BY cos_raw DESC, neighbor_id) AS rank
+      ("""WITH c AS (SELECT vec_id, embedding::DOUBLE[] v FROM embeddings),
+         """ + bruteCosineSql + """
            FROM s)
          SELECT query_id, neighbor_id AS top1 FROM r WHERE rank = 1
-         ORDER BY query_id""",
+         ORDER BY query_id"""),
 
     // the md5-hash-ordered per-source window, replayed exactly
     "q108_domain_cap" ->
@@ -6435,20 +5891,11 @@ object SparkEntry {
     // brute-force argmax again: IVFADC must be end-to-end invisible
     // at rank 1 (coarse routing + ADC + rerank)
     "q107_ivfpq_ann_recall" ->
-      """WITH c AS (SELECT vec_id, embedding::DOUBLE[] v FROM embeddings),
-         q AS (SELECT vec_id + 10000 AS query_id,
-             list_transform(v, x -> x * 1.001 + 0.0005) AS qv
-           FROM c WHERE vec_id < 10),
-         s AS (SELECT query_id, c.vec_id AS neighbor_id,
-             list_dot_product(qv, c.v) /
-               (sqrt(list_dot_product(qv, qv)) * sqrt(list_dot_product(c.v, c.v)))
-               AS cos_raw
-           FROM q CROSS JOIN c),
-         r AS (SELECT query_id, neighbor_id, row_number() OVER
-             (PARTITION BY query_id ORDER BY cos_raw DESC, neighbor_id) AS rank
+      ("""WITH c AS (SELECT vec_id, embedding::DOUBLE[] v FROM embeddings),
+         """ + bruteCosineSql + """
            FROM s)
          SELECT query_id, neighbor_id AS top1 FROM r WHERE rank = 1
-         ORDER BY query_id""",
+         ORDER BY query_id"""),
 
     // the pixel-ramp arithmetic and channel sums replayed in SQL —
     // a lossless codec means the decoded bytes ARE the formula; the
@@ -6629,40 +6076,13 @@ object SparkEntry {
     // replayed in SQL; corrupt arrivals come back as admitted
     // null-signature rows
     "q126_stream_image_admission" ->
-      """WITH refs AS (
+      ("""WITH refs AS (
            SELECT i AS ref_id, i AS src, 0 AS shift FROM range(1, 11) t(i)),
          arrivals AS (
            SELECT 500 + i AS media_id, i AS src, 0 AS shift FROM range(1, 6) t(i)
            UNION ALL SELECT 510 + i, i, 4 FROM range(1, 6) t(i)
            UNION ALL SELECT 500 + i, i, 0 FROM range(21, 26) t(i)),
-         rg AS (
-           SELECT ref_id, gy, gx,
-             (src*31 + (gx*16//9)*(11 + src % 7) + (gy*12//8)*29
-               + (gx*16//9)*(gy*12//8)*(1 + src % 3) + shift) % 256 AS v
-           FROM refs, range(0, 8) t1(gy), range(0, 9) t2(gx)),
-         rh AS (
-           SELECT a.ref_id,
-             bit_or(CASE WHEN b.v > a.v THEN
-                 CASE WHEN a.gy*8 + a.gx = 63 THEN -9223372036854775807 - 1
-                   ELSE 1::BIGINT << (a.gy*8 + a.gx) END
-               ELSE 0::BIGINT END) AS sig
-           FROM rg a JOIN rg b ON a.ref_id = b.ref_id
-             AND b.gy = a.gy AND b.gx = a.gx + 1
-           WHERE a.gx < 8 GROUP BY a.ref_id),
-         ag AS (
-           SELECT media_id, gy, gx,
-             (src*31 + (gx*16//9)*(11 + src % 7) + (gy*12//8)*29
-               + (gx*16//9)*(gy*12//8)*(1 + src % 3) + shift) % 256 AS v
-           FROM arrivals, range(0, 8) t1(gy), range(0, 9) t2(gx)),
-         ah AS (
-           SELECT a.media_id,
-             bit_or(CASE WHEN b.v > a.v THEN
-                 CASE WHEN a.gy*8 + a.gx = 63 THEN -9223372036854775807 - 1
-                   ELSE 1::BIGINT << (a.gy*8 + a.gx) END
-               ELSE 0::BIGINT END) AS dhash
-           FROM ag a JOIN ag b ON a.media_id = b.media_id
-             AND b.gy = a.gy AND b.gx = a.gx + 1
-           WHERE a.gx < 8 GROUP BY a.media_id),
+         """ + refDhashSql + """
          sigs AS (
            SELECT media_id, dhash FROM ah
            UNION ALL SELECT media_id, NULL
@@ -6678,13 +6098,13 @@ object SparkEntry {
          SELECT s.media_id, s.dhash, b.match_id IS NULL AS admitted,
            b.match_id, b.match_hamming::INTEGER AS match_hamming
          FROM sigs s LEFT JOIN best b ON b.media_id = s.media_id
-         ORDER BY s.media_id""",
+         ORDER BY s.media_id"""),
 
     // three brute-force argmax replays: the full corpus (pre), and
     // the corpus minus the tombstoned sources (the logical-delete
     // answer and the post-purge answer, which must agree)
     "q127_ivfpq_takedown" ->
-      """WITH c0 AS (SELECT vec_id, list_transform(embedding::DOUBLE[], x -> x) AS v
+      ("""WITH c0 AS (SELECT vec_id, list_transform(embedding::DOUBLE[], x -> x) AS v
              FROM embeddings),
          twins AS (SELECT vec_id + 20000 AS vec_id,
              list_transform(v, x -> x * 0.9 + 0.05) AS v
@@ -6693,21 +6113,14 @@ object SparkEntry {
          q AS (SELECT vec_id + 10000 AS query_id,
              list_transform(v, x -> x * 1.001 + 0.0005) AS qv
            FROM c0 WHERE vec_id < 10),
-         s AS (SELECT query_id, c.vec_id AS neighbor_id,
-             list_dot_product(qv, c.v) /
-               (sqrt(list_dot_product(qv, qv)) * sqrt(list_dot_product(c.v, c.v)))
-               AS cos_raw
-           FROM q CROSS JOIN corpus c),
-         pre AS (SELECT query_id, neighbor_id AS pre_top1 FROM (
-             SELECT query_id, neighbor_id, row_number() OVER (PARTITION BY query_id
-               ORDER BY cos_raw DESC, neighbor_id) AS rn FROM s) WHERE rn = 1),
+         """ + annTakedownSql + """
          alive AS (SELECT query_id, neighbor_id AS live_top1 FROM (
              SELECT query_id, neighbor_id, row_number() OVER (PARTITION BY query_id
                ORDER BY cos_raw DESC, neighbor_id) AS rn
              FROM s WHERE neighbor_id >= 10) WHERE rn = 1)
          SELECT p.query_id, p.pre_top1, a.live_top1, a.live_top1 AS post_top1
          FROM pre p JOIN alive a USING (query_id)
-         ORDER BY p.query_id""",
+         ORDER BY p.query_id"""),
 
     // q163: every gated metric is an integer fold over the union of
     // both batches — doc/token/char/empty counts and per-language
@@ -6797,41 +6210,7 @@ object SparkEntry {
     // the deterministic dead-letter statuses, and the first-reject
     // precedence with per-tier pointers
     "q159_media_cascade_stream" ->
-      """WITH refs AS (SELECT i AS ref_id, i AS src, 0 AS shift
-           FROM range(1, 11) t(i)),
-         arr AS (
-           SELECT 500 + i AS media_id, i AS src, 0 AS shift,
-             'sig' AS kind FROM range(1, 4) t(i)
-           UNION ALL SELECT 510 + i, i, 4, 'sig' FROM range(1, 4) t(i)
-           UNION ALL SELECT 520 + i, i, 0, 'sig' FROM range(7, 10) t(i)
-           UNION ALL SELECT 530 + i, i, 0, 'novel' FROM range(1, 4) t(i)),
-         rg AS (SELECT ref_id, gy, gx,
-             (src*31 + (gx*16//9)*(11 + src % 7) + (gy*12//8)*29
-               + (gx*16//9)*(gy*12//8)*(1 + src % 3) + shift) % 256 AS v
-           FROM refs, range(0, 8) t1(gy), range(0, 9) t2(gx)
-           WHERE ref_id <= 6),
-         rh AS (SELECT a.ref_id,
-             bit_or(CASE WHEN b.v > a.v THEN
-                 CASE WHEN a.gy*8 + a.gx = 63 THEN -9223372036854775807 - 1
-                   ELSE 1::BIGINT << (a.gy*8 + a.gx) END
-               ELSE 0::BIGINT END) AS sig
-           FROM rg a JOIN rg b ON a.ref_id = b.ref_id
-             AND b.gy = a.gy AND b.gx = a.gx + 1
-           WHERE a.gx < 8 GROUP BY a.ref_id),
-         ag AS (SELECT media_id, gy, gx,
-             CASE WHEN kind = 'novel' THEN
-               (src*53 + (gx*16//9)*29 + (gy*12//8)*7
-                 + (gx*16//9)*(gy*12//8)*2 + 101) % 256
-             ELSE
-               (src*31 + (gx*16//9)*(11 + src % 7) + (gy*12//8)*29
-                 + (gx*16//9)*(gy*12//8)*(1 + src % 3) + shift) % 256
-             END AS v
-           FROM arr, range(0, 8) t1(gy), range(0, 9) t2(gx)),
-         ah AS (SELECT a.media_id,
-             bit_or(CASE WHEN b.v > a.v THEN
-                 CASE WHEN a.gy*8 + a.gx = 63 THEN -9223372036854775807 - 1
-                   ELSE 1::BIGINT << (a.gy*8 + a.gx) END
-               ELSE 0::BIGINT END) AS dhash
+      (mediaCascadeDhashSql + """
            FROM ag a JOIN ag b ON a.media_id = b.media_id
              AND b.gy = a.gy AND b.gx = a.gx + 1
            WHERE a.gx < 8 GROUP BY a.media_id),
@@ -6842,25 +6221,7 @@ object SparkEntry {
              min(bit_count(xor(s.dhash, r.sig))) AS pham
            FROM ah s JOIN rh r ON bit_count(xor(s.dhash, r.sig)) <= 6
            GROUP BY s.media_id),
-         re AS (SELECT ref_id, gy*8 + gx AS i,
-             (src*31 + (gx*16//8)*(11 + src % 7) + (gy*12//8)*29
-               + (gx*16//8)*(gy*12//8)*(1 + src % 3) + shift) % 256 AS v
-           FROM refs, range(0, 8) a(gy), range(0, 8) b(gx)),
-         ae AS (SELECT media_id, gy*8 + gx AS i,
-             CASE WHEN kind = 'novel' THEN
-               (src*53 + (gx*16//8)*29 + (gy*12//8)*7
-                 + (gx*16//8)*(gy*12//8)*2 + 101) % 256
-             ELSE
-               (src*31 + (gx*16//8)*(11 + src % 7) + (gy*12//8)*29
-                 + (gx*16//8)*(gy*12//8)*(1 + src % 3) + shift) % 256
-             END AS v
-           FROM arr, range(0, 8) a(gy), range(0, 8) b(gx)),
-         dots AS (SELECT a.media_id, r.ref_id, sum(a.v * r.v) AS dp
-           FROM ae a JOIN re r ON a.i = r.i GROUP BY 1, 2),
-         an AS (SELECT media_id, sqrt(sum(v*v)) AS n FROM ae GROUP BY 1),
-         rn2 AS (SELECT ref_id, sqrt(sum(v*v)) AS n FROM re GROUP BY 1),
-         cosr AS (SELECT d.media_id, d.ref_id, d.dp / (an.n * rn2.n) AS cosv
-           FROM dots d JOIN an USING (media_id) JOIN rn2 USING (ref_id)),
+         """ + mediaCascadeEmbedSql + """
          sem AS (SELECT media_id, ref_id AS smid, cosv FROM (
              SELECT media_id, ref_id, cosv, row_number() OVER
                (PARTITION BY media_id ORDER BY cosv DESC, ref_id) AS rk
@@ -6885,7 +6246,7 @@ object SparkEntry {
              AS perceptual_hamming,
            CASE WHEN reason = 'semantic' THEN smid END
              AS semantic_match_id
-         FROM decided ORDER BY media_id""",
+         FROM decided ORDER BY media_id"""),
 
     // q167: q159's pixel math replayed in TWO decision worlds — the
     // pre world ≡ q159's reference sets, the live world with refs 2
@@ -6909,56 +6270,23 @@ object SparkEntry {
     // Integer counts only (count(*) / count(fp) — BIGINT native, the
     // q160 HUGEINT lesson), world literals BIGINT-cast.
     "q169_winnow_index_lifecycle" ->
-      """WITH tk AS (SELECT doc_id,
+      ("""WITH tk AS (SELECT doc_id,
            regexp_split_to_array(trim(lower(text)), '\s+') t,
            regexp_split_to_array(trim(text), '\s+') traw
          FROM documents),
-         hs AS (SELECT doc_id,
-             [('0x' || substring(md5(array_to_string(t[p : p + 3], ' ')),
-                 1, 15))::BIGINT
-               for p in generate_series(1, greatest(len(t) - 3, 1))] AS h
-           FROM tk),
-         sel AS (SELECT DISTINCT doc_id,
-             s - 1 + list_max([i for i in generate_series(1, len(sl))
-               if sl[i] = list_min(sl)]) AS pos
-           FROM (SELECT doc_id, h, least(4, len(h)) AS win FROM hs) x,
-             LATERAL (SELECT unnest(generate_series(1, len(h) - win + 1))
-               AS s),
-             LATERAL (SELECT h[s : s + win - 1] AS sl)),
+         """ + winnowSql("tk", "doc_id", "hs", "sel") + """
          tfp AS (SELECT DISTINCT s.doc_id, hs.h[s.pos] AS fp
            FROM sel s JOIN hs USING (doc_id)),
          btka AS (SELECT * FROM (SELECT doc_id AS bench_id,
              [lower(x) for x in traw[3:14]] AS t
            FROM tk WHERE doc_id % 13 = 0) WHERE len(t) > 0),
-         bhsa AS (SELECT bench_id,
-             [('0x' || substring(md5(array_to_string(t[p : p + 3], ' ')),
-                 1, 15))::BIGINT
-               for p in generate_series(1, greatest(len(t) - 3, 1))] AS h
-           FROM btka),
-         bsela AS (SELECT DISTINCT bench_id,
-             s - 1 + list_max([i for i in generate_series(1, len(sl))
-               if sl[i] = list_min(sl)]) AS pos
-           FROM (SELECT bench_id, h, least(4, len(h)) AS win FROM bhsa) x,
-             LATERAL (SELECT unnest(generate_series(1, len(h) - win + 1))
-               AS s),
-             LATERAL (SELECT h[s : s + win - 1] AS sl)),
+         """ + winnowSql("btka", "bench_id", "bhsa", "bsela") + """
          bfpa AS (SELECT DISTINCT s.bench_id, bhsa.h[s.pos] AS fp
            FROM bsela s JOIN bhsa USING (bench_id)),
          btkb AS (SELECT * FROM (SELECT doc_id + 1000000 AS bench_id,
              [lower(x) for x in traw[5:16]] AS t
            FROM tk WHERE doc_id % 11 = 0) WHERE len(t) > 0),
-         bhsb AS (SELECT bench_id,
-             [('0x' || substring(md5(array_to_string(t[p : p + 3], ' ')),
-                 1, 15))::BIGINT
-               for p in generate_series(1, greatest(len(t) - 3, 1))] AS h
-           FROM btkb),
-         bselb AS (SELECT DISTINCT bench_id,
-             s - 1 + list_max([i for i in generate_series(1, len(sl))
-               if sl[i] = list_min(sl)]) AS pos
-           FROM (SELECT bench_id, h, least(4, len(h)) AS win FROM bhsb) x,
-             LATERAL (SELECT unnest(generate_series(1, len(h) - win + 1))
-               AS s),
-             LATERAL (SELECT h[s : s + win - 1] AS sl)),
+         """ + winnowSql("btkb", "bench_id", "bhsb", "bselb") + """
          bfpb AS (SELECT DISTINCT s.bench_id, bhsb.h[s.pos] AS fp
            FROM bselb s JOIN bhsb USING (bench_id)),
          w1 AS (SELECT DISTINCT fp FROM bfpa),
@@ -6978,64 +6306,31 @@ object SparkEntry {
          FROM (SELECT 1::BIGINT AS world, * FROM a1
            UNION ALL SELECT 2::BIGINT AS world, * FROM a2
            UNION ALL SELECT 3::BIGINT AS world, * FROM a3)
-         ORDER BY world, doc_id""",
+         ORDER BY world, doc_id"""),
 
     // q170: two worlds of the same set algebra over the even-id
     // arrival slice — world 1 vs suite A, world 2 vs A ∪ B after the
     // mid-stream append; admitted ⇔ zero hits (containment ≤ 0 with
     // n_fp ≥ 1 by the winnowing short-doc floor)
     "q170_decontam_stream" ->
-      """WITH tk AS (SELECT doc_id,
+      ("""WITH tk AS (SELECT doc_id,
            regexp_split_to_array(trim(lower(text)), '\s+') t,
            regexp_split_to_array(trim(text), '\s+') traw
          FROM documents),
-         hs AS (SELECT doc_id,
-             [('0x' || substring(md5(array_to_string(t[p : p + 3], ' ')),
-                 1, 15))::BIGINT
-               for p in generate_series(1, greatest(len(t) - 3, 1))] AS h
-           FROM tk),
-         sel AS (SELECT DISTINCT doc_id,
-             s - 1 + list_max([i for i in generate_series(1, len(sl))
-               if sl[i] = list_min(sl)]) AS pos
-           FROM (SELECT doc_id, h, least(4, len(h)) AS win FROM hs) x,
-             LATERAL (SELECT unnest(generate_series(1, len(h) - win + 1))
-               AS s),
-             LATERAL (SELECT h[s : s + win - 1] AS sl)),
+         """ + winnowSql("tk", "doc_id", "hs", "sel") + """
          tfp AS (SELECT DISTINCT s.doc_id, hs.h[s.pos] AS fp
            FROM sel s JOIN hs USING (doc_id)
            WHERE s.doc_id % 2 = 0),
          btka AS (SELECT * FROM (SELECT doc_id AS bench_id,
              [lower(x) for x in traw[3:14]] AS t
            FROM tk WHERE doc_id % 13 = 0) WHERE len(t) > 0),
-         bhsa AS (SELECT bench_id,
-             [('0x' || substring(md5(array_to_string(t[p : p + 3], ' ')),
-                 1, 15))::BIGINT
-               for p in generate_series(1, greatest(len(t) - 3, 1))] AS h
-           FROM btka),
-         bsela AS (SELECT DISTINCT bench_id,
-             s - 1 + list_max([i for i in generate_series(1, len(sl))
-               if sl[i] = list_min(sl)]) AS pos
-           FROM (SELECT bench_id, h, least(4, len(h)) AS win FROM bhsa) x,
-             LATERAL (SELECT unnest(generate_series(1, len(h) - win + 1))
-               AS s),
-             LATERAL (SELECT h[s : s + win - 1] AS sl)),
+         """ + winnowSql("btka", "bench_id", "bhsa", "bsela") + """
          bfpa AS (SELECT DISTINCT bhsa.h[s.pos] AS fp
            FROM bsela s JOIN bhsa USING (bench_id)),
          btkb AS (SELECT * FROM (SELECT doc_id + 1000000 AS bench_id,
              [lower(x) for x in traw[5:16]] AS t
            FROM tk WHERE doc_id % 11 = 0) WHERE len(t) > 0),
-         bhsb AS (SELECT bench_id,
-             [('0x' || substring(md5(array_to_string(t[p : p + 3], ' ')),
-                 1, 15))::BIGINT
-               for p in generate_series(1, greatest(len(t) - 3, 1))] AS h
-           FROM btkb),
-         bselb AS (SELECT DISTINCT bench_id,
-             s - 1 + list_max([i for i in generate_series(1, len(sl))
-               if sl[i] = list_min(sl)]) AS pos
-           FROM (SELECT bench_id, h, least(4, len(h)) AS win FROM bhsb) x,
-             LATERAL (SELECT unnest(generate_series(1, len(h) - win + 1))
-               AS s),
-             LATERAL (SELECT h[s : s + win - 1] AS sl)),
+         """ + winnowSql("btkb", "bench_id", "bhsb", "bselb") + """
          bfpb AS (SELECT DISTINCT bhsb.h[s.pos] AS fp
            FROM bselb s JOIN bhsb USING (bench_id)),
          w1 AS (SELECT DISTINCT fp FROM bfpa),
@@ -7048,7 +6343,7 @@ object SparkEntry {
          SELECT a1.doc_id, a1.n_fp, a1.n_hits AS n_hits_pre,
            a1.n_hits = 0 AS admitted_pre,
            a2.n_hits AS n_hits_live, a2.n_hits = 0 AS admitted_live
-         FROM a1 JOIN a2 USING (doc_id) ORDER BY doc_id""",
+         FROM a1 JOIN a2 USING (doc_id) ORDER BY doc_id"""),
 
     // q171: the five-tier front door — the q166 algebra with the
     // contamination rung's two winnowing worlds folded into the
@@ -7160,7 +6455,7 @@ object SparkEntry {
     // evens, known_b = coverage of the refit corpus, blind counts are
     // occurrence-weighted anti-join sums, all counts BIGINT-cast
     "q164_lr_maintain" ->
-      """WITH base AS (SELECT doc_id, text FROM documents
+      ("""WITH base AS (SELECT doc_id, text FROM documents
            WHERE length(trim(text)) > 0 AND doc_id < 1000),
          ev AS (SELECT regexp_split_to_array(trim(lower(text)),
              '\s+') AS t
@@ -7188,40 +6483,14 @@ object SparkEntry {
            UNION ALL
            SELECT ('0x' || substring(md5(feat), 1, 15))::BIGINT % 65536
            FROM fdr WHERE feat <> '')),
-         soccs AS (SELECT
-             ('0x' || substring(md5(feat), 1, 15))::BIGINT % 65536 AS b
-           FROM fdr WHERE feat <> ''),
-         pre AS (SELECT count(*) AS n,
-             sum(CASE WHEN k.b IS NULL THEN 1 ELSE 0 END)::BIGINT
-               AS blind
-           FROM soccs s LEFT JOIN known_a k ON k.b = s.b),
-         post AS (SELECT
-             sum(CASE WHEN k.b IS NULL THEN 1 ELSE 0 END)::BIGINT
-               AS blind
-           FROM soccs s LEFT JOIN known_b k ON k.b = s.b),
-         c1 AS (SELECT pre.n, pre.blind AS pre_blind,
-             pre.blind > 0.2 * pre.n AS f1,
-             CASE WHEN pre.blind > 0.2 * pre.n THEN post.blind
-               ELSE pre.blind END AS post1
-           FROM pre CROSS JOIN post),
-         c2 AS (SELECT c1.n, c1.post1 AS pre_blind,
-             c1.post1 > 0.2 * c1.n AS f2,
-             CASE WHEN c1.post1 > 0.2 * c1.n THEN post.blind
-               ELSE c1.post1 END AS post2
-           FROM c1 CROSS JOIN post)
-         SELECT 1::BIGINT AS step, n AS n_sample_feats,
-           pre_blind AS pre_blind_feats, f1 AS refit_fired,
-           post1 AS post_blind_feats, f1 AS epoch_changed
-         FROM c1
-         UNION ALL
-         SELECT 2::BIGINT, n, pre_blind, f2, post2, f2 FROM c2
-         ORDER BY step""",
+         """ + blindWindowSql + """
+         ORDER BY step"""),
 
     // q165: identical chain, but the fit-time coverage is source ∪
     // TARGET (the evens plus the zz-qq-suffixed target slice) and the
     // refit coverage adds the drifted sample to the source side
     "q165_dsir_maintain" ->
-      """WITH base AS (SELECT doc_id, text FROM documents
+      ("""WITH base AS (SELECT doc_id, text FROM documents
            WHERE length(trim(text)) > 0 AND doc_id < 1000),
          ev AS (SELECT regexp_split_to_array(trim(lower(text)),
              '\s+') AS t
@@ -7264,53 +6533,15 @@ object SparkEntry {
            UNION ALL
            SELECT ('0x' || substring(md5(feat), 1, 15))::BIGINT % 65536
            FROM fdr WHERE feat <> '')),
-         soccs AS (SELECT
-             ('0x' || substring(md5(feat), 1, 15))::BIGINT % 65536 AS b
-           FROM fdr WHERE feat <> ''),
-         pre AS (SELECT count(*) AS n,
-             sum(CASE WHEN k.b IS NULL THEN 1 ELSE 0 END)::BIGINT
-               AS blind
-           FROM soccs s LEFT JOIN known_a k ON k.b = s.b),
-         post AS (SELECT
-             sum(CASE WHEN k.b IS NULL THEN 1 ELSE 0 END)::BIGINT
-               AS blind
-           FROM soccs s LEFT JOIN known_b k ON k.b = s.b),
-         c1 AS (SELECT pre.n, pre.blind AS pre_blind,
-             pre.blind > 0.2 * pre.n AS f1,
-             CASE WHEN pre.blind > 0.2 * pre.n THEN post.blind
-               ELSE pre.blind END AS post1
-           FROM pre CROSS JOIN post),
-         c2 AS (SELECT c1.n, c1.post1 AS pre_blind,
-             c1.post1 > 0.2 * c1.n AS f2,
-             CASE WHEN c1.post1 > 0.2 * c1.n THEN post.blind
-               ELSE c1.post1 END AS post2
-           FROM c1 CROSS JOIN post)
-         SELECT 1::BIGINT AS step, n AS n_sample_feats,
-           pre_blind AS pre_blind_feats, f1 AS refit_fired,
-           post1 AS post_blind_feats, f1 AS epoch_changed
-         FROM c1
-         UNION ALL
-         SELECT 2::BIGINT, n, pre_blind, f2, post2, f2 FROM c2
-         ORDER BY step""",
+         """ + blindWindowSql + """
+         ORDER BY step"""),
 
     // set-level replay of all three admission decisions: accepted
     // texts, accepted EXCEPT the tombstoned texts, and the per-text
     // min-id collapse — identical live/post columns pin that the
     // Bloom purge moves cost, never decisions
     "q128_exact_takedown" ->
-      """WITH accepted AS (SELECT doc_id, text FROM documents WHERE doc_id % 3 = 0),
-         batch AS (
-           SELECT doc_id + 1000000 AS doc_id, text FROM accepted WHERE doc_id % 6 = 0
-           UNION ALL SELECT doc_id + 2000000, text FROM accepted WHERE doc_id % 6 = 3
-           UNION ALL SELECT doc_id + 3000000, text FROM documents WHERE doc_id % 3 = 1
-           UNION ALL SELECT doc_id + 3500000, text FROM documents
-             WHERE doc_id % 3 = 1 AND doc_id % 5 = 1),
-         firsts AS (
-           SELECT doc_id, text,
-             doc_id = min(doc_id) OVER (PARTITION BY text) AS is_first
-           FROM batch),
-         acc_texts AS (SELECT DISTINCT text FROM accepted),
-         tomb_texts AS (SELECT DISTINCT text FROM accepted WHERE doc_id % 6 = 0),
+      (exactTakedownBatchSql + """
          live_texts AS (SELECT text FROM acc_texts
            EXCEPT SELECT text FROM tomb_texts)
          SELECT f.doc_id,
@@ -7320,37 +6551,18 @@ object SparkEntry {
          FROM firsts f
          LEFT JOIN acc_texts a ON a.text = f.text
          LEFT JOIN live_texts l ON l.text = f.text
-         ORDER BY f.doc_id""",
+         ORDER BY f.doc_id"""),
 
     // the full incremental near-dup contract replayed twice (pre /
     // post takedown): shingles, cross Jaccard against both accepted
     // sets, within-batch pairs, the recursive closure and both taint
     // decisions — set algebra over the q56 oracle
     "q129_ngram_takedown" ->
-      """WITH olds AS (SELECT doc_id, lower(trim(text)) tx
+      ("""WITH olds AS (SELECT doc_id, lower(trim(text)) tx
              FROM documents WHERE doc_id % 2 = 0),
           live_olds AS (SELECT * FROM olds WHERE doc_id % 6 != 0),
-          batch AS (
-            SELECT doc_id, lower(trim(text)) tx
-            FROM documents WHERE doc_id % 2 = 1
-            UNION ALL
-            SELECT doc_id + 1000000, lower(trim(text || ' xyzzy qbf'))
-            FROM documents WHERE doc_id % 14 = 0
-            UNION ALL
-            SELECT doc_id + 2000000, lower(trim(text || ' plugh tail'))
-            FROM documents WHERE doc_id % 14 = 7),
-          bt AS (SELECT doc_id, regexp_split_to_array(tx, '\s+') t FROM batch),
-          bsh AS (SELECT DISTINCT doc_id, array_to_string(t[i:i+3], ' ') s
-            FROM bt, LATERAL (SELECT unnest(generate_series(1,
-              greatest(len(t)-3, 1))) AS i)),
-          ot AS (SELECT doc_id, regexp_split_to_array(tx, '\s+') t FROM olds),
-          osh AS (SELECT DISTINCT doc_id, array_to_string(t[i:i+3], ' ') s
-            FROM ot, LATERAL (SELECT unnest(generate_series(1,
-              greatest(len(t)-3, 1))) AS i)),
-          bsz AS (SELECT doc_id, count(*) sz FROM bsh GROUP BY 1),
-          osz AS (SELECT doc_id, count(*) sz FROM osh GROUP BY 1),
-          hx AS (SELECT b.doc_id bid, o.doc_id oid, count(*) i
-            FROM bsh b JOIN osh o ON b.s = o.s GROUP BY 1, 2),
+          """ + decontamBatchSql + """
+          """ + shingleOverlapSql + """
           hitsx AS (SELECT hx.bid, hx.oid FROM hx
             JOIN bsz ON bsz.doc_id = hx.bid
             JOIN osz ON osz.doc_id = hx.oid
@@ -7358,20 +6570,7 @@ object SparkEntry {
           hits_pre AS (SELECT DISTINCT bid AS doc_id FROM hitsx),
           hits_post AS (SELECT DISTINCT bid AS doc_id FROM hitsx
             WHERE oid % 6 != 0),
-          wx AS (SELECT a.doc_id a, b.doc_id b, count(*) i FROM bsh a
-            JOIN bsh b ON a.s = b.s AND a.doc_id < b.doc_id GROUP BY 1, 2),
-          wpairs AS (SELECT a, b FROM wx
-            JOIN bsz sa ON sa.doc_id = a JOIN bsz sb ON sb.doc_id = b
-            WHERE i*1.0/(sa.sz + sb.sz - i) >= 0.5),
-          edges AS (SELECT a x, b y FROM wpairs UNION SELECT b, a FROM wpairs),
-          reach AS (
-            WITH RECURSIVE r(x, y) AS (
-              SELECT x, y FROM edges
-              UNION
-              SELECT r.x, e.y FROM r JOIN edges e ON r.y = e.x)
-            SELECT x, y FROM r),
-          comp AS (SELECT x AS doc_id, least(x, min(y)) AS comp
-            FROM reach GROUP BY x),
+          """ + batchComponentsSql + """
           labeled AS (SELECT b.doc_id, coalesce(comp.comp, b.doc_id) AS comp
             FROM batch b LEFT JOIN comp USING (doc_id)),
           tainted_pre AS (SELECT DISTINCT l.comp FROM labeled l
@@ -7384,7 +6583,7 @@ object SparkEntry {
            l.comp = l.doc_id AND l.comp NOT IN (SELECT comp FROM tainted_post)
              AS admitted_post
          FROM labeled l
-         ORDER BY l.doc_id""",
+         ORDER BY l.doc_id"""),
 
     // the full text→vector chain replayed: tokenize, md5 bucket +
     // sign-hash fold, per-doc nonzero/sum-of-squares stats (exact
@@ -7485,106 +6684,10 @@ object SparkEntry {
     // q154: identical decisions through the streamed IVF route
     // (nProbe = nCells — the probe IS the brute-force rule)
     "q154_stream_video_semantic" ->
-      """WITH refs AS (SELECT i AS ref_id, i AS src, 0 AS bright,
-             0 AS drop0 FROM range(1, 7) t(i)),
-         arr AS (
-           SELECT 500 + i AS media_id, i AS src, 4 AS bright, 0 AS drop0
-           FROM range(1, 4) t(i)
-           UNION ALL SELECT 510 + i, i, 0, 1 FROM range(1, 4) t(i)
-           UNION ALL SELECT 520 + i, 20 + i, 0, 0 FROM range(1, 4) t(i)),
-         rcell AS (SELECT ref_id, gy*8 + gx AS i, sum(
-             CASE WHEN f < 6 THEN
-               (src*37 + (gx*16//8)*(11 + src % 7) + (gy*12//8)*23
-                 + (gx*16//8)*(gy*12//8)*(1 + src % 3)) % 200
-             ELSE
-               (src*53 + (gx*16//8)*29 + (gy*12//8)*7
-                 + (gx*16//8)*(gy*12//8)*2 + 101) % 200
-             END + bright) AS v
-           FROM refs, range(0, 8) ff(f), range(0, 8) a(gy),
-             range(0, 8) b(gx)
-           GROUP BY 1, 2),
-         acell AS (SELECT media_id, gy*8 + gx AS i, sum(
-             CASE WHEN f < 6 THEN
-               (src*37 + (gx*16//8)*(11 + src % 7) + (gy*12//8)*23
-                 + (gx*16//8)*(gy*12//8)*(1 + src % 3)) % 200
-             ELSE
-               (src*53 + (gx*16//8)*29 + (gy*12//8)*7
-                 + (gx*16//8)*(gy*12//8)*2 + 101) % 200
-             END + bright) AS v
-           FROM arr, range(0, 8) ff(f), range(0, 8) a(gy),
-             range(0, 8) b(gx)
-           WHERE f >= drop0
-           GROUP BY 1, 2),
-         dots AS (SELECT a.media_id, r.ref_id, sum(a.v * r.v) AS dp
-           FROM acell a JOIN rcell r ON a.i = r.i GROUP BY 1, 2),
-         an AS (SELECT media_id, sqrt(sum(v*v)) AS n FROM acell
-           GROUP BY 1),
-         rn AS (SELECT ref_id, sqrt(sum(v*v)) AS n FROM rcell
-           GROUP BY 1),
-         cosr AS (SELECT d.media_id, d.ref_id, d.dp / (an.n * rn.n) AS cosv
-           FROM dots d JOIN an USING (media_id) JOIN rn USING (ref_id)),
-         best AS (SELECT media_id, ref_id, cosv FROM (
-           SELECT media_id, ref_id, cosv, row_number() OVER
-             (PARTITION BY media_id ORDER BY cosv DESC, ref_id) AS rk
-           FROM cosr) WHERE rk = 1)
-         SELECT m.media_id,
-           coalesce(b.cosv < 0.98, TRUE) AS admitted,
-           CASE WHEN b.cosv >= 0.98 THEN b.ref_id END AS match_id
-         FROM (SELECT media_id FROM arr UNION ALL SELECT 9001
-               UNION ALL SELECT 9002 UNION ALL SELECT 9003) m
-         LEFT JOIN best b USING (media_id)
-         ORDER BY media_id""",
+      videoEmbedOracleSql,
 
     "q153_video_embed_neardup" ->
-      """WITH refs AS (SELECT i AS ref_id, i AS src, 0 AS bright,
-             0 AS drop0 FROM range(1, 7) t(i)),
-         arr AS (
-           SELECT 500 + i AS media_id, i AS src, 4 AS bright, 0 AS drop0
-           FROM range(1, 4) t(i)
-           UNION ALL SELECT 510 + i, i, 0, 1 FROM range(1, 4) t(i)
-           UNION ALL SELECT 520 + i, 20 + i, 0, 0 FROM range(1, 4) t(i)),
-         rcell AS (SELECT ref_id, gy*8 + gx AS i, sum(
-             CASE WHEN f < 6 THEN
-               (src*37 + (gx*16//8)*(11 + src % 7) + (gy*12//8)*23
-                 + (gx*16//8)*(gy*12//8)*(1 + src % 3)) % 200
-             ELSE
-               (src*53 + (gx*16//8)*29 + (gy*12//8)*7
-                 + (gx*16//8)*(gy*12//8)*2 + 101) % 200
-             END + bright) AS v
-           FROM refs, range(0, 8) ff(f), range(0, 8) a(gy),
-             range(0, 8) b(gx)
-           GROUP BY 1, 2),
-         acell AS (SELECT media_id, gy*8 + gx AS i, sum(
-             CASE WHEN f < 6 THEN
-               (src*37 + (gx*16//8)*(11 + src % 7) + (gy*12//8)*23
-                 + (gx*16//8)*(gy*12//8)*(1 + src % 3)) % 200
-             ELSE
-               (src*53 + (gx*16//8)*29 + (gy*12//8)*7
-                 + (gx*16//8)*(gy*12//8)*2 + 101) % 200
-             END + bright) AS v
-           FROM arr, range(0, 8) ff(f), range(0, 8) a(gy),
-             range(0, 8) b(gx)
-           WHERE f >= drop0
-           GROUP BY 1, 2),
-         dots AS (SELECT a.media_id, r.ref_id, sum(a.v * r.v) AS dp
-           FROM acell a JOIN rcell r ON a.i = r.i GROUP BY 1, 2),
-         an AS (SELECT media_id, sqrt(sum(v*v)) AS n FROM acell
-           GROUP BY 1),
-         rn AS (SELECT ref_id, sqrt(sum(v*v)) AS n FROM rcell
-           GROUP BY 1),
-         cosr AS (SELECT d.media_id, d.ref_id, d.dp / (an.n * rn.n) AS cosv
-           FROM dots d JOIN an USING (media_id) JOIN rn USING (ref_id)),
-         best AS (SELECT media_id, ref_id, cosv FROM (
-           SELECT media_id, ref_id, cosv, row_number() OVER
-             (PARTITION BY media_id ORDER BY cosv DESC, ref_id) AS rk
-           FROM cosr) WHERE rk = 1)
-         SELECT m.media_id,
-           coalesce(b.cosv < 0.98, TRUE) AS admitted,
-           CASE WHEN b.cosv >= 0.98 THEN b.ref_id END AS match_id
-         FROM (SELECT media_id FROM arr UNION ALL SELECT 9001
-               UNION ALL SELECT 9002 UNION ALL SELECT 9003) m
-         LEFT JOIN best b USING (media_id)
-         ORDER BY media_id""",
+      videoEmbedOracleSql,
 
     // q155: magic-byte format table + dead-letter classification from
     // planted knowledge; dims from the fixture; dup pointers from the
@@ -7638,44 +6741,7 @@ object SparkEntry {
     // → the tau decision; corrupt/null payloads are explicit admit
     // rows. q149 runs the SAME oracle against the streamed IVF route.
     "q148_image_embed_neardup" ->
-      """WITH refs AS (SELECT i AS ref_id, i AS src FROM range(1, 11) t(i)),
-         arr AS (
-           SELECT 500 + i AS media_id, i AS src, 'copy' AS kind
-           FROM range(1, 6) t(i)
-           UNION ALL SELECT 510 + i, i, 'gain' FROM range(1, 6) t(i)
-           UNION ALL SELECT 520 + i, i, 'novel' FROM range(1, 4) t(i)),
-         rg AS (SELECT ref_id, gy*8 + gx AS i,
-             (src*31 + (gx*16//8)*(11 + src % 7) + (gy*12//8)*29
-               + (gx*16//8)*(gy*12//8)*(1 + src % 3)) % 256 AS v
-           FROM refs, range(0, 8) a(gy), range(0, 8) b(gx)),
-         ag AS (SELECT media_id, gy*8 + gx AS i,
-             CASE kind
-               WHEN 'novel' THEN (src*53 + (gx*16//8)*29 + (gy*12//8)*7
-                 + (gx*16//8)*(gy*12//8)*2 + 101) % 256
-               WHEN 'gain' THEN (9 * ((src*31 + (gx*16//8)*(11 + src % 7)
-                 + (gy*12//8)*29
-                 + (gx*16//8)*(gy*12//8)*(1 + src % 3)) % 256)) // 10
-               ELSE (src*31 + (gx*16//8)*(11 + src % 7) + (gy*12//8)*29
-                 + (gx*16//8)*(gy*12//8)*(1 + src % 3)) % 256
-             END AS v
-           FROM arr, range(0, 8) a(gy), range(0, 8) b(gx)),
-         dots AS (SELECT a.media_id, r.ref_id, sum(a.v * r.v) AS dp
-           FROM ag a JOIN rg r ON a.i = r.i GROUP BY 1, 2),
-         an AS (SELECT media_id, sqrt(sum(v*v)) AS n FROM ag GROUP BY 1),
-         rn AS (SELECT ref_id, sqrt(sum(v*v)) AS n FROM rg GROUP BY 1),
-         cosr AS (SELECT d.media_id, d.ref_id, d.dp / (an.n * rn.n) AS cosv
-           FROM dots d JOIN an USING (media_id) JOIN rn USING (ref_id)),
-         best AS (SELECT media_id, ref_id, cosv FROM (
-           SELECT media_id, ref_id, cosv, row_number() OVER
-             (PARTITION BY media_id ORDER BY cosv DESC, ref_id) AS rk
-           FROM cosr) WHERE rk = 1)
-         SELECT m.media_id,
-           coalesce(b.cosv < 0.9, TRUE) AS admitted,
-           CASE WHEN b.cosv >= 0.9 THEN b.ref_id END AS match_id
-         FROM (SELECT media_id FROM arr
-               UNION ALL SELECT 9001 UNION ALL SELECT 9002) m
-         LEFT JOIN best b USING (media_id)
-         ORDER BY media_id""",
+      imageEmbedOracleSql,
 
     // q150: PCM formula → channel mix → k·frames div 64 window
     // energies (all integer-exact in doubles — the fixture bounds
@@ -7685,264 +6751,35 @@ object SparkEntry {
     // q151: identical decisions through the streamed IVF route
     // (nProbe = nCells — the probe IS the brute-force rule)
     "q151_stream_audio_semantic" ->
-      """WITH refs AS (SELECT i AS ref_id, i AS src,
-             CASE WHEN i <= 4 THEN 1 ELSE 2 END AS ch, 1 AS scale
-           FROM range(1, 9) t(i)),
-         arr AS (
-           SELECT 500 + i AS media_id, i AS src,
-             CASE WHEN i <= 4 THEN 1 ELSE 2 END AS ch, 1 AS scale
-           FROM range(1, 5) t(i)
-           UNION ALL SELECT 510 + i, i, 2, 2 FROM range(5, 9) t(i)
-           UNION ALL SELECT 520 + i, 20 + i, 1, 1 FROM range(1, 4) t(i)),
-         rmix AS (SELECT ref_id, i,
-             sum((((src*2654435761 + i*i*40503 + i*977 + c*997) % 128)
-               - 64) * scale) AS m
-           FROM refs, range(0, 200) s(i), range(0, 2) cc(c)
-           WHERE c < ch GROUP BY 1, 2),
-         re AS (SELECT ref_id, k, sum(m*m) AS e
-           FROM rmix, range(0, 64) w(k)
-           WHERE i >= k*200//64 AND i < (k+1)*200//64 GROUP BY 1, 2),
-         amix AS (SELECT media_id, i,
-             sum((((src*2654435761 + i*i*40503 + i*977 + c*997) % 128)
-               - 64) * scale) AS m
-           FROM arr, range(0, 200) s(i), range(0, 2) cc(c)
-           WHERE c < ch GROUP BY 1, 2),
-         ae AS (SELECT media_id, k, sum(m*m) AS e
-           FROM amix, range(0, 64) w(k)
-           WHERE i >= k*200//64 AND i < (k+1)*200//64 GROUP BY 1, 2),
-         dots AS (SELECT a.media_id, r.ref_id, sum(a.e * r.e) AS dp
-           FROM ae a JOIN re r ON a.k = r.k GROUP BY 1, 2),
-         an AS (SELECT media_id, sqrt(sum(e*e)) AS n FROM ae GROUP BY 1),
-         rn AS (SELECT ref_id, sqrt(sum(e*e)) AS n FROM re GROUP BY 1),
-         cosr AS (SELECT d.media_id, d.ref_id, d.dp / (an.n * rn.n) AS cosv
-           FROM dots d JOIN an USING (media_id) JOIN rn USING (ref_id)),
-         best AS (SELECT media_id, ref_id, cosv FROM (
-           SELECT media_id, ref_id, cosv, row_number() OVER
-             (PARTITION BY media_id ORDER BY cosv DESC, ref_id) AS rk
-           FROM cosr) WHERE rk = 1)
-         SELECT m.media_id,
-           coalesce(b.cosv < 0.95, TRUE) AS admitted,
-           CASE WHEN b.cosv >= 0.95 THEN b.ref_id END AS match_id
-         FROM (SELECT media_id FROM arr UNION ALL SELECT 9001
-               UNION ALL SELECT 9002 UNION ALL SELECT 9003) m
-         LEFT JOIN best b USING (media_id)
-         ORDER BY media_id""",
+      audioEmbedOracleSql,
 
     "q150_audio_embed_neardup" ->
-      """WITH refs AS (SELECT i AS ref_id, i AS src,
-             CASE WHEN i <= 4 THEN 1 ELSE 2 END AS ch, 1 AS scale
-           FROM range(1, 9) t(i)),
-         arr AS (
-           SELECT 500 + i AS media_id, i AS src,
-             CASE WHEN i <= 4 THEN 1 ELSE 2 END AS ch, 1 AS scale
-           FROM range(1, 5) t(i)
-           UNION ALL SELECT 510 + i, i, 2, 2 FROM range(5, 9) t(i)
-           UNION ALL SELECT 520 + i, 20 + i, 1, 1 FROM range(1, 4) t(i)),
-         rmix AS (SELECT ref_id, i,
-             sum((((src*2654435761 + i*i*40503 + i*977 + c*997) % 128)
-               - 64) * scale) AS m
-           FROM refs, range(0, 200) s(i), range(0, 2) cc(c)
-           WHERE c < ch GROUP BY 1, 2),
-         re AS (SELECT ref_id, k, sum(m*m) AS e
-           FROM rmix, range(0, 64) w(k)
-           WHERE i >= k*200//64 AND i < (k+1)*200//64 GROUP BY 1, 2),
-         amix AS (SELECT media_id, i,
-             sum((((src*2654435761 + i*i*40503 + i*977 + c*997) % 128)
-               - 64) * scale) AS m
-           FROM arr, range(0, 200) s(i), range(0, 2) cc(c)
-           WHERE c < ch GROUP BY 1, 2),
-         ae AS (SELECT media_id, k, sum(m*m) AS e
-           FROM amix, range(0, 64) w(k)
-           WHERE i >= k*200//64 AND i < (k+1)*200//64 GROUP BY 1, 2),
-         dots AS (SELECT a.media_id, r.ref_id, sum(a.e * r.e) AS dp
-           FROM ae a JOIN re r ON a.k = r.k GROUP BY 1, 2),
-         an AS (SELECT media_id, sqrt(sum(e*e)) AS n FROM ae GROUP BY 1),
-         rn AS (SELECT ref_id, sqrt(sum(e*e)) AS n FROM re GROUP BY 1),
-         cosr AS (SELECT d.media_id, d.ref_id, d.dp / (an.n * rn.n) AS cosv
-           FROM dots d JOIN an USING (media_id) JOIN rn USING (ref_id)),
-         best AS (SELECT media_id, ref_id, cosv FROM (
-           SELECT media_id, ref_id, cosv, row_number() OVER
-             (PARTITION BY media_id ORDER BY cosv DESC, ref_id) AS rk
-           FROM cosr) WHERE rk = 1)
-         SELECT m.media_id,
-           coalesce(b.cosv < 0.95, TRUE) AS admitted,
-           CASE WHEN b.cosv >= 0.95 THEN b.ref_id END AS match_id
-         FROM (SELECT media_id FROM arr UNION ALL SELECT 9001
-               UNION ALL SELECT 9002 UNION ALL SELECT 9003) m
-         LEFT JOIN best b USING (media_id)
-         ORDER BY media_id""",
+      audioEmbedOracleSql,
 
     // q149: identical decisions through the streamed IVF route
     // (nProbe = nCells — the probe IS the brute-force rule)
     "q149_stream_image_semantic" ->
-      """WITH refs AS (SELECT i AS ref_id, i AS src FROM range(1, 11) t(i)),
-         arr AS (
-           SELECT 500 + i AS media_id, i AS src, 'copy' AS kind
-           FROM range(1, 6) t(i)
-           UNION ALL SELECT 510 + i, i, 'gain' FROM range(1, 6) t(i)
-           UNION ALL SELECT 520 + i, i, 'novel' FROM range(1, 4) t(i)),
-         rg AS (SELECT ref_id, gy*8 + gx AS i,
-             (src*31 + (gx*16//8)*(11 + src % 7) + (gy*12//8)*29
-               + (gx*16//8)*(gy*12//8)*(1 + src % 3)) % 256 AS v
-           FROM refs, range(0, 8) a(gy), range(0, 8) b(gx)),
-         ag AS (SELECT media_id, gy*8 + gx AS i,
-             CASE kind
-               WHEN 'novel' THEN (src*53 + (gx*16//8)*29 + (gy*12//8)*7
-                 + (gx*16//8)*(gy*12//8)*2 + 101) % 256
-               WHEN 'gain' THEN (9 * ((src*31 + (gx*16//8)*(11 + src % 7)
-                 + (gy*12//8)*29
-                 + (gx*16//8)*(gy*12//8)*(1 + src % 3)) % 256)) // 10
-               ELSE (src*31 + (gx*16//8)*(11 + src % 7) + (gy*12//8)*29
-                 + (gx*16//8)*(gy*12//8)*(1 + src % 3)) % 256
-             END AS v
-           FROM arr, range(0, 8) a(gy), range(0, 8) b(gx)),
-         dots AS (SELECT a.media_id, r.ref_id, sum(a.v * r.v) AS dp
-           FROM ag a JOIN rg r ON a.i = r.i GROUP BY 1, 2),
-         an AS (SELECT media_id, sqrt(sum(v*v)) AS n FROM ag GROUP BY 1),
-         rn AS (SELECT ref_id, sqrt(sum(v*v)) AS n FROM rg GROUP BY 1),
-         cosr AS (SELECT d.media_id, d.ref_id, d.dp / (an.n * rn.n) AS cosv
-           FROM dots d JOIN an USING (media_id) JOIN rn USING (ref_id)),
-         best AS (SELECT media_id, ref_id, cosv FROM (
-           SELECT media_id, ref_id, cosv, row_number() OVER
-             (PARTITION BY media_id ORDER BY cosv DESC, ref_id) AS rk
-           FROM cosr) WHERE rk = 1)
-         SELECT m.media_id,
-           coalesce(b.cosv < 0.9, TRUE) AS admitted,
-           CASE WHEN b.cosv >= 0.9 THEN b.ref_id END AS match_id
-         FROM (SELECT media_id FROM arr
-               UNION ALL SELECT 9001 UNION ALL SELECT 9002) m
-         LEFT JOIN best b USING (media_id)
-         ORDER BY media_id""",
+      imageEmbedOracleSql,
 
     // pixel formulas → dHash grid → argmin admission for the healthy
     // route; explicit VALUES rows with the deterministic reason
     // classification for the quarantined route
     "q142_stream_quarantine" ->
-      """WITH refs AS (
-           SELECT i AS ref_id, i AS src, 0 AS shift FROM range(1, 9) t(i)),
-         arrivals AS (
-           SELECT 500 + i AS media_id, i AS src, 0 AS shift FROM range(1, 4) t(i)
-           UNION ALL SELECT 500 + i, i, 0 FROM range(21, 23) t(i)),
-         rg AS (
-           SELECT ref_id, gy, gx,
-             (src*31 + (gx*16//9)*(11 + src % 7) + (gy*12//8)*29
-               + (gx*16//9)*(gy*12//8)*(1 + src % 3) + shift) % 256 AS v
-           FROM refs, range(0, 8) t1(gy), range(0, 9) t2(gx)),
-         rh AS (
-           SELECT a.ref_id,
-             bit_or(CASE WHEN b.v > a.v THEN
-                 CASE WHEN a.gy*8 + a.gx = 63 THEN -9223372036854775807 - 1
-                   ELSE 1::BIGINT << (a.gy*8 + a.gx) END
-               ELSE 0::BIGINT END) AS sig
-           FROM rg a JOIN rg b ON a.ref_id = b.ref_id
-             AND b.gy = a.gy AND b.gx = a.gx + 1
-           WHERE a.gx < 8 GROUP BY a.ref_id),
-         ag AS (
-           SELECT media_id, gy, gx,
-             (src*31 + (gx*16//9)*(11 + src % 7) + (gy*12//8)*29
-               + (gx*16//9)*(gy*12//8)*(1 + src % 3) + shift) % 256 AS v
-           FROM arrivals, range(0, 8) t1(gy), range(0, 9) t2(gx)),
-         ah AS (
-           SELECT a.media_id,
-             bit_or(CASE WHEN b.v > a.v THEN
-                 CASE WHEN a.gy*8 + a.gx = 63 THEN -9223372036854775807 - 1
-                   ELSE 1::BIGINT << (a.gy*8 + a.gx) END
-               ELSE 0::BIGINT END) AS dhash
-           FROM ag a JOIN ag b ON a.media_id = b.media_id
-             AND b.gy = a.gy AND b.gx = a.gx + 1
-           WHERE a.gx < 8 GROUP BY a.media_id),
-         best AS (
-           SELECT s.media_id,
-             min_by(r.ref_id,
-               bit_count(xor(s.dhash, r.sig))::BIGINT * 1000 + r.ref_id)
-               AS match_id
-           FROM ah s JOIN rh r ON bit_count(xor(s.dhash, r.sig)) <= 6
-           GROUP BY s.media_id)
-         SELECT a.media_id, 'main' AS routed, a.dhash,
-           b.match_id IS NULL AS admitted, b.match_id,
-           NULL::VARCHAR AS reason
-         FROM ah a LEFT JOIN best b USING (media_id)
-         UNION ALL
-         SELECT media_id, 'quarantine', NULL::BIGINT, NULL::BOOLEAN,
-           NULL::BIGINT, reason
-         FROM (VALUES (9001, 'undecodable'), (9002, 'empty_payload'),
-           (9003, 'null_payload')) t(media_id, reason)
-         ORDER BY media_id""",
+      quarantineOracleSql,
 
     // q146: q142's replay verbatim — the idempotent sink under a
     // simulated crash-redelivery must produce EXACTLY the no-crash
     // output (an append sink would duplicate the replayed batch's
     // rows, breaking the oracle's row counts)
     "q146_stream_idempotent_sink" ->
-      """WITH refs AS (
-           SELECT i AS ref_id, i AS src, 0 AS shift FROM range(1, 9) t(i)),
-         arrivals AS (
-           SELECT 500 + i AS media_id, i AS src, 0 AS shift FROM range(1, 4) t(i)
-           UNION ALL SELECT 500 + i, i, 0 FROM range(21, 23) t(i)),
-         rg AS (
-           SELECT ref_id, gy, gx,
-             (src*31 + (gx*16//9)*(11 + src % 7) + (gy*12//8)*29
-               + (gx*16//9)*(gy*12//8)*(1 + src % 3) + shift) % 256 AS v
-           FROM refs, range(0, 8) t1(gy), range(0, 9) t2(gx)),
-         rh AS (
-           SELECT a.ref_id,
-             bit_or(CASE WHEN b.v > a.v THEN
-                 CASE WHEN a.gy*8 + a.gx = 63 THEN -9223372036854775807 - 1
-                   ELSE 1::BIGINT << (a.gy*8 + a.gx) END
-               ELSE 0::BIGINT END) AS sig
-           FROM rg a JOIN rg b ON a.ref_id = b.ref_id
-             AND b.gy = a.gy AND b.gx = a.gx + 1
-           WHERE a.gx < 8 GROUP BY a.ref_id),
-         ag AS (
-           SELECT media_id, gy, gx,
-             (src*31 + (gx*16//9)*(11 + src % 7) + (gy*12//8)*29
-               + (gx*16//9)*(gy*12//8)*(1 + src % 3) + shift) % 256 AS v
-           FROM arrivals, range(0, 8) t1(gy), range(0, 9) t2(gx)),
-         ah AS (
-           SELECT a.media_id,
-             bit_or(CASE WHEN b.v > a.v THEN
-                 CASE WHEN a.gy*8 + a.gx = 63 THEN -9223372036854775807 - 1
-                   ELSE 1::BIGINT << (a.gy*8 + a.gx) END
-               ELSE 0::BIGINT END) AS dhash
-           FROM ag a JOIN ag b ON a.media_id = b.media_id
-             AND b.gy = a.gy AND b.gx = a.gx + 1
-           WHERE a.gx < 8 GROUP BY a.media_id),
-         best AS (
-           SELECT s.media_id,
-             min_by(r.ref_id,
-               bit_count(xor(s.dhash, r.sig))::BIGINT * 1000 + r.ref_id)
-               AS match_id
-           FROM ah s JOIN rh r ON bit_count(xor(s.dhash, r.sig)) <= 6
-           GROUP BY s.media_id)
-         SELECT a.media_id, 'main' AS routed, a.dhash,
-           b.match_id IS NULL AS admitted, b.match_id,
-           NULL::VARCHAR AS reason
-         FROM ah a LEFT JOIN best b USING (media_id)
-         UNION ALL
-         SELECT media_id, 'quarantine', NULL::BIGINT, NULL::BOOLEAN,
-           NULL::BIGINT, reason
-         FROM (VALUES (9001, 'undecodable'), (9002, 'empty_payload'),
-           (9003, 'null_payload')) t(media_id, reason)
-         ORDER BY media_id""",
+      quarantineOracleSql,
 
     // the q128 decision algebra (admission vs accepted-minus-
     // tombstoned texts, per-text min-id rule) + the window's
     // lifecycle flags: fired = pending ledger rows exist, the
     // generation flips iff fired, the ledger clears
     "q139_exact_maintain" ->
-      """WITH accepted AS (SELECT doc_id, text FROM documents WHERE doc_id % 3 = 0),
-         batch AS (
-           SELECT doc_id + 1000000 AS doc_id, text FROM accepted WHERE doc_id % 6 = 0
-           UNION ALL SELECT doc_id + 2000000, text FROM accepted WHERE doc_id % 6 = 3
-           UNION ALL SELECT doc_id + 3000000, text FROM documents WHERE doc_id % 3 = 1
-           UNION ALL SELECT doc_id + 3500000, text FROM documents
-             WHERE doc_id % 3 = 1 AND doc_id % 5 = 1),
-         firsts AS (
-           SELECT doc_id, text,
-             doc_id = min(doc_id) OVER (PARTITION BY text) AS is_first
-           FROM batch),
-         acc_texts AS (SELECT DISTINCT text FROM accepted),
-         tomb_texts AS (SELECT DISTINCT text FROM accepted WHERE doc_id % 6 = 0),
+      (exactTakedownBatchSql + """
          live_texts AS (SELECT text FROM acc_texts
            EXCEPT SELECT text FROM tomb_texts),
          pend AS (SELECT count(*) AS c FROM tomb_texts)
@@ -7958,14 +6795,14 @@ object SparkEntry {
            FALSE AS gen_changed_2
          FROM firsts f
          LEFT JOIN live_texts l ON l.text = f.text
-         ORDER BY f.doc_id""",
+         ORDER BY f.doc_id"""),
 
     // the q129 incremental contract replayed ONCE against
     // accepted-minus-tombstoned (the window's pre and post decisions
     // are both ledger-applied, so they replay identically) + the
     // lifecycle flags
     "q140_ngram_maintain" ->
-      """WITH olds AS (SELECT doc_id, lower(trim(text)) tx
+      ("""WITH olds AS (SELECT doc_id, lower(trim(text)) tx
              FROM documents WHERE doc_id % 2 = 0 AND doc_id < 250),
           batch AS (
             SELECT doc_id, lower(trim(text)) tx
@@ -7981,32 +6818,13 @@ object SparkEntry {
             FROM bt, LATERAL (SELECT unnest(generate_series(1,
               greatest(len(t)-3, 1))) AS i)),
           ot AS (SELECT doc_id, regexp_split_to_array(tx, '\s+') t FROM olds),
-          osh AS (SELECT DISTINCT doc_id, array_to_string(t[i:i+3], ' ') s
-            FROM ot, LATERAL (SELECT unnest(generate_series(1,
-              greatest(len(t)-3, 1))) AS i)),
-          bsz AS (SELECT doc_id, count(*) sz FROM bsh GROUP BY 1),
-          osz AS (SELECT doc_id, count(*) sz FROM osh GROUP BY 1),
-          hx AS (SELECT b.doc_id bid, o.doc_id oid, count(*) i
-            FROM bsh b JOIN osh o ON b.s = o.s GROUP BY 1, 2),
+          """ + shingleOverlapSql + """
           hits AS (SELECT DISTINCT hx.bid AS doc_id FROM hx
             JOIN bsz ON bsz.doc_id = hx.bid
             JOIN osz ON osz.doc_id = hx.oid
             WHERE hx.oid % 6 != 0
               AND hx.i*1.0/(bsz.sz + osz.sz - hx.i) >= 0.5),
-          wx AS (SELECT a.doc_id a, b.doc_id b, count(*) i FROM bsh a
-            JOIN bsh b ON a.s = b.s AND a.doc_id < b.doc_id GROUP BY 1, 2),
-          wpairs AS (SELECT a, b FROM wx
-            JOIN bsz sa ON sa.doc_id = a JOIN bsz sb ON sb.doc_id = b
-            WHERE i*1.0/(sa.sz + sb.sz - i) >= 0.5),
-          edges AS (SELECT a x, b y FROM wpairs UNION SELECT b, a FROM wpairs),
-          reach AS (
-            WITH RECURSIVE r(x, y) AS (
-              SELECT x, y FROM edges
-              UNION
-              SELECT r.x, e.y FROM r JOIN edges e ON r.y = e.x)
-            SELECT x, y FROM r),
-          comp AS (SELECT x AS doc_id, least(x, min(y)) AS comp
-            FROM reach GROUP BY x),
+          """ + batchComponentsSql + """
           labeled AS (SELECT b.doc_id, coalesce(comp.comp, b.doc_id) AS comp
             FROM batch b LEFT JOIN comp USING (doc_id)),
           tainted AS (SELECT DISTINCT l.comp FROM labeled l
@@ -8025,7 +6843,7 @@ object SparkEntry {
            FALSE AS fired_2,
            FALSE AS gen_changed_2
          FROM labeled l
-         ORDER BY l.doc_id""",
+         ORDER BY l.doc_id"""),
 
     // md5-derived signatures, XOR bit flips and the exhaustive
     // argmin admission decision vs refs-minus-tombstoned (the
@@ -8066,7 +6884,7 @@ object SparkEntry {
          ORDER BY a.media_id""",
 
     "q138_stream_text_admission" ->
-      """WITH base AS (
+      ("""WITH base AS (
            SELECT doc_id, text FROM documents
            WHERE length(trim(text)) > 0),
          acc AS (SELECT doc_id, text, 1 AS is_acc FROM base
@@ -8078,29 +6896,7 @@ object SparkEntry {
            UNION ALL SELECT doc_id + 600000, text, 0 FROM base
            WHERE doc_id >= 200 AND doc_id < 205),
          alltexts AS (SELECT * FROM acc UNION ALL SELECT * FROM arr),
-         toks AS (SELECT is_acc, doc_id,
-           unnest(list_filter(regexp_split_to_array(lower(trim(text)), '\s+'),
-             t -> t != '')) AS t
-           FROM alltexts),
-         vecs AS (SELECT is_acc, doc_id,
-           ('0x' || substring(md5(t), 1, 15))::BIGINT % 64 AS b,
-           sum(CASE WHEN (('0x' || substring(md5(t), 1, 15))::BIGINT // 64) % 2 = 0
-             THEN 1.0 ELSE -1.0 END) AS v
-           FROM toks GROUP BY 1, 2, 3
-           HAVING sum(CASE WHEN (('0x' || substring(md5(t), 1, 15))::BIGINT // 64) % 2 = 0
-             THEN 1.0 ELSE -1.0 END) != 0),
-         norms AS (SELECT is_acc, doc_id, sqrt(sum(v * v)) AS n
-           FROM vecs GROUP BY 1, 2),
-         dots AS (SELECT q.doc_id AS doc_id, c.doc_id AS acc_id,
-             sum(q.v * c.v) AS dp
-           FROM vecs q JOIN vecs c
-             ON q.b = c.b AND q.is_acc = 0 AND c.is_acc = 1
-           GROUP BY 1, 2),
-         cosr AS (SELECT d.doc_id, d.acc_id,
-             d.dp / (qn.n * cn.n) AS cosv
-           FROM dots d
-             JOIN norms qn ON qn.doc_id = d.doc_id AND qn.is_acc = 0
-             JOIN norms cn ON cn.doc_id = d.acc_id AND cn.is_acc = 1),
+         """ + simhashCosineSql + """
          best AS (SELECT doc_id, acc_id, cosv FROM (
            SELECT doc_id, acc_id, cosv, row_number() OVER
              (PARTITION BY doc_id ORDER BY cosv DESC, acc_id) AS rn
@@ -8113,14 +6909,14 @@ object SparkEntry {
            UNION ALL SELECT doc_id, TRUE, NULL
            FROM (VALUES (900001), (900002)) t(doc_id))
          SELECT doc_id, admitted, match_id
-         FROM decided ORDER BY doc_id""",
+         FROM decided ORDER BY doc_id"""),
 
     // q147: the whole cascade replayed — exact text match (with the
     // min-id audit pointer), the multiplicative quality rule, the
     // q138 md5-bucket/sign embedding + cosine argmax for the semantic
     // tier, and the first-reject precedence fold on top
     "q147_stream_admission_cascade" ->
-      """WITH base AS (
+      ("""WITH base AS (
            SELECT doc_id, text FROM documents
            WHERE length(trim(text)) > 0),
          acc AS (SELECT doc_id, text FROM base WHERE doc_id < 40),
@@ -8142,29 +6938,7 @@ object SparkEntry {
            SELECT 1 AS is_acc, doc_id, text FROM acc
            UNION ALL SELECT 0, doc_id, text FROM arr
            WHERE length(trim(coalesce(text, ''))) > 0),
-         toks AS (SELECT is_acc, doc_id,
-           unnest(list_filter(regexp_split_to_array(lower(trim(text)), '\s+'),
-             t -> t != '')) AS t
-           FROM alltexts),
-         vecs AS (SELECT is_acc, doc_id,
-           ('0x' || substring(md5(t), 1, 15))::BIGINT % 64 AS b,
-           sum(CASE WHEN (('0x' || substring(md5(t), 1, 15))::BIGINT // 64) % 2 = 0
-             THEN 1.0 ELSE -1.0 END) AS v
-           FROM toks GROUP BY 1, 2, 3
-           HAVING sum(CASE WHEN (('0x' || substring(md5(t), 1, 15))::BIGINT // 64) % 2 = 0
-             THEN 1.0 ELSE -1.0 END) != 0),
-         norms AS (SELECT is_acc, doc_id, sqrt(sum(v * v)) AS n
-           FROM vecs GROUP BY 1, 2),
-         dots AS (SELECT q.doc_id AS doc_id, c.doc_id AS acc_id,
-             sum(q.v * c.v) AS dp
-           FROM vecs q JOIN vecs c
-             ON q.b = c.b AND q.is_acc = 0 AND c.is_acc = 1
-           GROUP BY 1, 2),
-         cosr AS (SELECT d.doc_id, d.acc_id,
-             d.dp / (qn.n * cn.n) AS cosv
-           FROM dots d
-             JOIN norms qn ON qn.doc_id = d.doc_id AND qn.is_acc = 0
-             JOIN norms cn ON cn.doc_id = d.acc_id AND cn.is_acc = 1),
+         """ + simhashCosineSql + """
          best AS (SELECT doc_id, acc_id, cosv FROM (
            SELECT doc_id, acc_id, cosv, row_number() OVER
              (PARTITION BY doc_id ORDER BY cosv DESC, acc_id) AS rn
@@ -8187,7 +6961,7 @@ object SparkEntry {
          SELECT doc_id, reason IS NULL AS admitted, reason,
            CASE WHEN reason = 'exact' THEN exact_id END AS exact_match_id,
            CASE WHEN reason = 'semantic' THEN acc_id END AS semantic_match_id
-         FROM decided ORDER BY doc_id""",
+         FROM decided ORDER BY doc_id"""),
 
     // q156: the q147 cascade replayed in TWO decision worlds — the
     // full accepted set (pre) and the set minus the tombstoned docs
@@ -8195,7 +6969,7 @@ object SparkEntry {
     // over surviving accepted vectors; quality and precedence
     // unchanged
     "q156_cascade_takedown" ->
-      """WITH base AS (
+      ("""WITH base AS (
            SELECT doc_id, text FROM documents
            WHERE length(trim(text)) > 0),
          acc AS (SELECT doc_id, text FROM base WHERE doc_id < 40),
@@ -8216,29 +6990,7 @@ object SparkEntry {
            SELECT 1 AS is_acc, doc_id, text FROM acc
            UNION ALL SELECT 0, doc_id, text FROM arr
            WHERE length(trim(coalesce(text, ''))) > 0),
-         toks AS (SELECT is_acc, doc_id,
-           unnest(list_filter(regexp_split_to_array(lower(trim(text)), '\s+'),
-             t -> t != '')) AS t
-           FROM alltexts),
-         vecs AS (SELECT is_acc, doc_id,
-           ('0x' || substring(md5(t), 1, 15))::BIGINT % 64 AS b,
-           sum(CASE WHEN (('0x' || substring(md5(t), 1, 15))::BIGINT // 64) % 2 = 0
-             THEN 1.0 ELSE -1.0 END) AS v
-           FROM toks GROUP BY 1, 2, 3
-           HAVING sum(CASE WHEN (('0x' || substring(md5(t), 1, 15))::BIGINT // 64) % 2 = 0
-             THEN 1.0 ELSE -1.0 END) != 0),
-         norms AS (SELECT is_acc, doc_id, sqrt(sum(v * v)) AS n
-           FROM vecs GROUP BY 1, 2),
-         dots AS (SELECT q.doc_id AS doc_id, c.doc_id AS acc_id,
-             sum(q.v * c.v) AS dp
-           FROM vecs q JOIN vecs c
-             ON q.b = c.b AND q.is_acc = 0 AND c.is_acc = 1
-           GROUP BY 1, 2),
-         cosr AS (SELECT d.doc_id, d.acc_id,
-             d.dp / (qn.n * cn.n) AS cosv
-           FROM dots d
-             JOIN norms qn ON qn.doc_id = d.doc_id AND qn.is_acc = 0
-             JOIN norms cn ON cn.doc_id = d.acc_id AND cn.is_acc = 1),
+         """ + simhashCosineSql + """
          best_pre AS (SELECT doc_id, acc_id, cosv FROM (
            SELECT doc_id, acc_id, cosv, row_number() OVER
              (PARTITION BY doc_id ORDER BY cosv DESC, acc_id) AS rn
@@ -8269,7 +7021,7 @@ object SparkEntry {
          SELECT doc_id,
            reason_pre IS NULL AS admitted_pre, reason_pre,
            reason_live IS NULL AS admitted_live, reason_live
-         FROM decided ORDER BY doc_id""",
+         FROM decided ORDER BY doc_id"""),
 
     // q157: brute-force cosine argmax replayed over both decision
     // worlds. EXACT twins make every rank deterministic: the query's
@@ -8278,68 +7030,34 @@ object SparkEntry {
     // pre-takedown and the twin after; post ≡ live pins that the
     // physical purge moves cost, never answers
     "q157_lsh_takedown" ->
-      """WITH c0 AS (SELECT vec_id, embedding::DOUBLE[] AS v
+      ("""WITH c0 AS (SELECT vec_id, embedding::DOUBLE[] AS v
              FROM embeddings),
          twins AS (SELECT vec_id + 20000 AS vec_id, v
            FROM c0 WHERE vec_id < 10),
          corpus AS (SELECT * FROM c0 UNION ALL SELECT * FROM twins),
          q AS (SELECT vec_id + 10000 AS query_id, v AS qv
            FROM c0 WHERE vec_id < 10),
-         s AS (SELECT query_id, c.vec_id AS neighbor_id,
-             list_dot_product(qv, c.v) /
-               (sqrt(list_dot_product(qv, qv)) * sqrt(list_dot_product(c.v, c.v)))
-               AS cos_raw
-           FROM q CROSS JOIN corpus c),
-         pre AS (SELECT query_id, neighbor_id AS pre_top1 FROM (
-             SELECT query_id, neighbor_id, row_number() OVER (PARTITION BY query_id
-               ORDER BY cos_raw DESC, neighbor_id) AS rn FROM s) WHERE rn = 1),
+         """ + annTakedownSql + """
          alive AS (SELECT query_id, neighbor_id AS live_top1 FROM (
              SELECT query_id, neighbor_id, row_number() OVER (PARTITION BY query_id
                ORDER BY cos_raw DESC, neighbor_id) AS rn
              FROM s WHERE neighbor_id >= 10) WHERE rn = 1)
          SELECT p.query_id, p.pre_top1, a.live_top1, a.live_top1 AS post_top1
          FROM pre p JOIN alive a USING (query_id)
-         ORDER BY p.query_id""",
+         ORDER BY p.query_id"""),
 
     // the q134 replay with THREE decision worlds: the full reference
     // set (pre), and the set minus the tombstoned ids twice — the
     // ledger-applied live table and the post-compaction table must
     // produce the SAME argmin decisions (logical ≡ physical delete)
     "q137_durable_members_lifecycle" ->
-      """WITH refs AS (
+      ("""WITH refs AS (
            SELECT i AS ref_id, i AS src, 0 AS shift FROM range(1, 11) t(i)),
          arrivals AS (
            SELECT 500 + i AS media_id, i AS src, 0 AS shift FROM range(1, 6) t(i)
            UNION ALL SELECT 510 + i, i, 4 FROM range(1, 6) t(i)
            UNION ALL SELECT 500 + i, i, 0 FROM range(21, 24) t(i)),
-         rg AS (
-           SELECT ref_id, gy, gx,
-             (src*31 + (gx*16//9)*(11 + src % 7) + (gy*12//8)*29
-               + (gx*16//9)*(gy*12//8)*(1 + src % 3) + shift) % 256 AS v
-           FROM refs, range(0, 8) t1(gy), range(0, 9) t2(gx)),
-         rh AS (
-           SELECT a.ref_id,
-             bit_or(CASE WHEN b.v > a.v THEN
-                 CASE WHEN a.gy*8 + a.gx = 63 THEN -9223372036854775807 - 1
-                   ELSE 1::BIGINT << (a.gy*8 + a.gx) END
-               ELSE 0::BIGINT END) AS sig
-           FROM rg a JOIN rg b ON a.ref_id = b.ref_id
-             AND b.gy = a.gy AND b.gx = a.gx + 1
-           WHERE a.gx < 8 GROUP BY a.ref_id),
-         ag AS (
-           SELECT media_id, gy, gx,
-             (src*31 + (gx*16//9)*(11 + src % 7) + (gy*12//8)*29
-               + (gx*16//9)*(gy*12//8)*(1 + src % 3) + shift) % 256 AS v
-           FROM arrivals, range(0, 8) t1(gy), range(0, 9) t2(gx)),
-         ah AS (
-           SELECT a.media_id,
-             bit_or(CASE WHEN b.v > a.v THEN
-                 CASE WHEN a.gy*8 + a.gx = 63 THEN -9223372036854775807 - 1
-                   ELSE 1::BIGINT << (a.gy*8 + a.gx) END
-               ELSE 0::BIGINT END) AS dhash
-           FROM ag a JOIN ag b ON a.media_id = b.media_id
-             AND b.gy = a.gy AND b.gx = a.gx + 1
-           WHERE a.gx < 8 GROUP BY a.media_id),
+         """ + refDhashSql + """
          sigs AS (
            SELECT media_id, dhash FROM ah
            UNION ALL SELECT 9001, NULL),
@@ -8368,7 +7086,7 @@ object SparkEntry {
          FROM sigs s
            LEFT JOIN best_pre bp ON bp.media_id = s.media_id
            LEFT JOIN best_live bl ON bl.media_id = s.media_id
-         ORDER BY s.media_id""",
+         ORDER BY s.media_id"""),
 
     // the q133 temporal replay split into reference and arrival
     // sides, then the exhaustive argmin admission decision at the
@@ -8442,40 +7160,13 @@ object SparkEntry {
     // tombstoned ids (post); corrupt arrivals are admitted
     // null-signature rows in both worlds
     "q134_phash_takedown_stream" ->
-      """WITH refs AS (
+      ("""WITH refs AS (
            SELECT i AS ref_id, i AS src, 0 AS shift FROM range(1, 11) t(i)),
          arrivals AS (
            SELECT 500 + i AS media_id, i AS src, 0 AS shift FROM range(1, 6) t(i)
            UNION ALL SELECT 510 + i, i, 4 FROM range(1, 6) t(i)
            UNION ALL SELECT 500 + i, i, 0 FROM range(21, 24) t(i)),
-         rg AS (
-           SELECT ref_id, gy, gx,
-             (src*31 + (gx*16//9)*(11 + src % 7) + (gy*12//8)*29
-               + (gx*16//9)*(gy*12//8)*(1 + src % 3) + shift) % 256 AS v
-           FROM refs, range(0, 8) t1(gy), range(0, 9) t2(gx)),
-         rh AS (
-           SELECT a.ref_id,
-             bit_or(CASE WHEN b.v > a.v THEN
-                 CASE WHEN a.gy*8 + a.gx = 63 THEN -9223372036854775807 - 1
-                   ELSE 1::BIGINT << (a.gy*8 + a.gx) END
-               ELSE 0::BIGINT END) AS sig
-           FROM rg a JOIN rg b ON a.ref_id = b.ref_id
-             AND b.gy = a.gy AND b.gx = a.gx + 1
-           WHERE a.gx < 8 GROUP BY a.ref_id),
-         ag AS (
-           SELECT media_id, gy, gx,
-             (src*31 + (gx*16//9)*(11 + src % 7) + (gy*12//8)*29
-               + (gx*16//9)*(gy*12//8)*(1 + src % 3) + shift) % 256 AS v
-           FROM arrivals, range(0, 8) t1(gy), range(0, 9) t2(gx)),
-         ah AS (
-           SELECT a.media_id,
-             bit_or(CASE WHEN b.v > a.v THEN
-                 CASE WHEN a.gy*8 + a.gx = 63 THEN -9223372036854775807 - 1
-                   ELSE 1::BIGINT << (a.gy*8 + a.gx) END
-               ELSE 0::BIGINT END) AS dhash
-           FROM ag a JOIN ag b ON a.media_id = b.media_id
-             AND b.gy = a.gy AND b.gx = a.gx + 1
-           WHERE a.gx < 8 GROUP BY a.media_id),
+         """ + refDhashSql + """
          sigs AS (
            SELECT media_id, dhash FROM ah
            UNION ALL SELECT media_id, NULL
@@ -8503,7 +7194,7 @@ object SparkEntry {
          FROM sigs s
            LEFT JOIN best_pre bp ON bp.media_id = s.media_id
            LEFT JOIN best_post bq ON bq.media_id = s.media_id
-         ORDER BY s.media_id""",
+         ORDER BY s.media_id"""),
 
     // the whole temporal chain replayed: planted pixel formulas →
     // 9×8 grid lumas per frame → every dHash gradient comparison →
@@ -8714,22 +7405,13 @@ object SparkEntry {
     // plus the all-hit probe/decision constants the planted regime
     // must produce exactly
     "q116_ivfpq_append_recall" ->
-      """WITH c AS (SELECT vec_id, embedding::DOUBLE[] v FROM embeddings),
-         q AS (SELECT vec_id + 10000 AS query_id,
-             list_transform(v, x -> x * 1.001 + 0.0005) AS qv
-           FROM c WHERE vec_id < 10),
-         s AS (SELECT query_id, c.vec_id AS neighbor_id,
-             list_dot_product(qv, c.v) /
-               (sqrt(list_dot_product(qv, qv)) * sqrt(list_dot_product(c.v, c.v)))
-               AS cos_raw
-           FROM q CROSS JOIN c),
-         r AS (SELECT query_id, neighbor_id, row_number() OVER
-             (PARTITION BY query_id ORDER BY cos_raw DESC, neighbor_id) AS rank
+      ("""WITH c AS (SELECT vec_id, embedding::DOUBLE[] v FROM embeddings),
+         """ + bruteCosineSql + """
            FROM s)
          SELECT query_id, neighbor_id AS top1, 1.0::DOUBLE AS recall,
            1.0::DOUBLE AS mean_recall, FALSE AS retrain
          FROM r WHERE rank = 1
-         ORDER BY query_id""",
+         ORDER BY query_id"""),
 
     // the complete drift-retrain arithmetic replayed: build seeds +
     // Lloyd mean, frozen append assignment, probe/top1 on the stale
@@ -8737,115 +7419,7 @@ object SparkEntry {
     // coalesce), re-assignment, probe/top1 on the new geometry,
     // brute-force truth, per-query recalls and both drift decisions
     "q123_ivf_drift_retrain" ->
-      """WITH corpus_base AS (
-           SELECT i AS vec_id,
-             CASE WHEN i % 2 = 1
-               THEN [1.0, 0.0, 0.0, 0.1 * ((i + 1) // 2)]
-               ELSE [0.0, 1.0, 0.0, 0.1 * (i // 2)] END::DOUBLE[] AS v
-           FROM range(1, 21) t(i)),
-         drift AS (
-           SELECT 100 + i AS vec_id,
-             [0.05, 0.0, 1.0, 0.1 * i]::DOUBLE[] AS v
-           FROM range(1, 11) t(i)),
-         queries AS (
-           SELECT 1000 + i AS query_id,
-             [0.0, 0.05, 1.0, 0.1 * i]::DOUBLE[] AS qv
-           FROM range(1, 11) t(i)),
-         seeds AS (SELECT vec_id AS cell, v AS cvec FROM corpus_base
-           WHERE vec_id <= 2),
-         assign0 AS (
-           SELECT vec_id, cell FROM (
-             SELECT b.vec_id, s.cell, row_number() OVER
-               (PARTITION BY b.vec_id
-                ORDER BY list_dot_product(b.v, s.cvec) /
-                  (sqrt(list_dot_product(b.v, b.v)) *
-                   sqrt(list_dot_product(s.cvec, s.cvec))) DESC,
-                  s.cell) AS rn
-             FROM corpus_base b CROSS JOIN seeds s) WHERE rn = 1),
-         cents AS (
-           SELECT a.cell, [avg(b.v[1]), avg(b.v[2]), avg(b.v[3]),
-             avg(b.v[4])]::DOUBLE[] AS cvec
-           FROM corpus_base b JOIN assign0 a USING (vec_id)
-           GROUP BY a.cell),
-         corpus AS (SELECT * FROM corpus_base UNION ALL
-           SELECT * FROM drift),
-         pre_assign AS (
-           SELECT vec_id, cell FROM (
-             SELECT c.vec_id, ct.cell, row_number() OVER
-               (PARTITION BY c.vec_id
-                ORDER BY list_dot_product(c.v, ct.cvec) /
-                  (sqrt(list_dot_product(c.v, c.v)) *
-                   sqrt(list_dot_product(ct.cvec, ct.cvec))) DESC,
-                  ct.cell) AS rn
-             FROM corpus c CROSS JOIN cents ct) WHERE rn = 1),
-         pre_probe AS (
-           SELECT query_id, cell FROM (
-             SELECT q.query_id, ct.cell, row_number() OVER
-               (PARTITION BY q.query_id
-                ORDER BY list_dot_product(q.qv, ct.cvec) /
-                  (sqrt(list_dot_product(q.qv, q.qv)) *
-                   sqrt(list_dot_product(ct.cvec, ct.cvec))) DESC,
-                  ct.cell) AS rn
-             FROM queries q CROSS JOIN cents ct) WHERE rn = 1),
-         pre_top AS (
-           SELECT query_id, vec_id AS pre_top1 FROM (
-             SELECT q.query_id, c.vec_id, row_number() OVER
-               (PARTITION BY q.query_id
-                ORDER BY list_dot_product(q.qv, c.v) /
-                  (sqrt(list_dot_product(q.qv, q.qv)) *
-                   sqrt(list_dot_product(c.v, c.v))) DESC,
-                  c.vec_id) AS rn
-             FROM queries q JOIN pre_probe p USING (query_id)
-               JOIN pre_assign a ON a.cell = p.cell
-               JOIN corpus c ON c.vec_id = a.vec_id) WHERE rn = 1),
-         sample_assign AS (
-           SELECT vec_id, cell FROM pre_assign WHERE vec_id % 2 = 1),
-         refit AS (
-           SELECT sa.cell, [avg(c.v[1]), avg(c.v[2]), avg(c.v[3]),
-             avg(c.v[4])]::DOUBLE[] AS cvec
-           FROM corpus c JOIN sample_assign sa USING (vec_id)
-           GROUP BY sa.cell),
-         new_cents AS (
-           SELECT ct.cell, coalesce(r.cvec, ct.cvec) AS cvec
-           FROM cents ct LEFT JOIN refit r ON r.cell = ct.cell),
-         post_assign AS (
-           SELECT vec_id, cell FROM (
-             SELECT c.vec_id, ct.cell, row_number() OVER
-               (PARTITION BY c.vec_id
-                ORDER BY list_dot_product(c.v, ct.cvec) /
-                  (sqrt(list_dot_product(c.v, c.v)) *
-                   sqrt(list_dot_product(ct.cvec, ct.cvec))) DESC,
-                  ct.cell) AS rn
-             FROM corpus c CROSS JOIN new_cents ct) WHERE rn = 1),
-         post_probe AS (
-           SELECT query_id, cell FROM (
-             SELECT q.query_id, ct.cell, row_number() OVER
-               (PARTITION BY q.query_id
-                ORDER BY list_dot_product(q.qv, ct.cvec) /
-                  (sqrt(list_dot_product(q.qv, q.qv)) *
-                   sqrt(list_dot_product(ct.cvec, ct.cvec))) DESC,
-                  ct.cell) AS rn
-             FROM queries q CROSS JOIN new_cents ct) WHERE rn = 1),
-         post_top AS (
-           SELECT query_id, vec_id AS post_top1 FROM (
-             SELECT q.query_id, c.vec_id, row_number() OVER
-               (PARTITION BY q.query_id
-                ORDER BY list_dot_product(q.qv, c.v) /
-                  (sqrt(list_dot_product(q.qv, q.qv)) *
-                   sqrt(list_dot_product(c.v, c.v))) DESC,
-                  c.vec_id) AS rn
-             FROM queries q JOIN post_probe p USING (query_id)
-               JOIN post_assign a ON a.cell = p.cell
-               JOIN corpus c ON c.vec_id = a.vec_id) WHERE rn = 1),
-         truth AS (
-           SELECT query_id, vec_id AS true_top1 FROM (
-             SELECT q.query_id, c.vec_id, row_number() OVER
-               (PARTITION BY q.query_id
-                ORDER BY list_dot_product(q.qv, c.v) /
-                  (sqrt(list_dot_product(q.qv, q.qv)) *
-                   sqrt(list_dot_product(c.v, c.v))) DESC,
-                  c.vec_id) AS rn
-             FROM queries q CROSS JOIN corpus c) WHERE rn = 1),
+      (ivfDriftReplaySql + """
          rec AS (
            SELECT t.query_id, pr.pre_top1, po.post_top1,
              round(CASE WHEN pr.pre_top1 = t.true_top1 THEN 1.0
@@ -8864,7 +7438,7 @@ object SparkEntry {
            r.post_recall, d.pre_mean, d.post_mean, d.retrain_fired,
            d.post_retrain
          FROM rec r CROSS JOIN dec d
-         ORDER BY r.query_id""",
+         ORDER BY r.query_id"""),
 
     // the q123 arithmetic driven through the one-call maintenance
     // window: same build/append/refit replay (the PQ layer is
@@ -8874,137 +7448,7 @@ object SparkEntry {
     // and the NO-OP call's quiet decision with the epoch untouched
     // (epoch_changed must equal the fired flag on both calls)
     "q131_ivfpq_maintain" ->
-      """WITH corpus_base AS (
-           SELECT i AS vec_id,
-             CASE WHEN i % 2 = 1
-               THEN [1.0, 0.0, 0.0, 0.1 * ((i + 1) // 2)]
-               ELSE [0.0, 1.0, 0.0, 0.1 * (i // 2)] END::DOUBLE[] AS v
-           FROM range(1, 21) t(i)),
-         drift AS (
-           SELECT 100 + i AS vec_id,
-             [0.05, 0.0, 1.0, 0.1 * i]::DOUBLE[] AS v
-           FROM range(1, 11) t(i)),
-         queries AS (
-           SELECT 1000 + i AS query_id,
-             [0.0, 0.05, 1.0, 0.1 * i]::DOUBLE[] AS qv
-           FROM range(1, 11) t(i)),
-         seeds AS (SELECT vec_id AS cell, v AS cvec FROM corpus_base
-           WHERE vec_id <= 2),
-         assign0 AS (
-           SELECT vec_id, cell FROM (
-             SELECT b.vec_id, s.cell, row_number() OVER
-               (PARTITION BY b.vec_id
-                ORDER BY list_dot_product(b.v, s.cvec) /
-                  (sqrt(list_dot_product(b.v, b.v)) *
-                   sqrt(list_dot_product(s.cvec, s.cvec))) DESC,
-                  s.cell) AS rn
-             FROM corpus_base b CROSS JOIN seeds s) WHERE rn = 1),
-         cents AS (
-           SELECT a.cell, [avg(b.v[1]), avg(b.v[2]), avg(b.v[3]),
-             avg(b.v[4])]::DOUBLE[] AS cvec
-           FROM corpus_base b JOIN assign0 a USING (vec_id)
-           GROUP BY a.cell),
-         corpus AS (SELECT * FROM corpus_base UNION ALL
-           SELECT * FROM drift),
-         pre_assign AS (
-           SELECT vec_id, cell FROM (
-             SELECT c.vec_id, ct.cell, row_number() OVER
-               (PARTITION BY c.vec_id
-                ORDER BY list_dot_product(c.v, ct.cvec) /
-                  (sqrt(list_dot_product(c.v, c.v)) *
-                   sqrt(list_dot_product(ct.cvec, ct.cvec))) DESC,
-                  ct.cell) AS rn
-             FROM corpus c CROSS JOIN cents ct) WHERE rn = 1),
-         pre_probe AS (
-           SELECT query_id, cell FROM (
-             SELECT q.query_id, ct.cell, row_number() OVER
-               (PARTITION BY q.query_id
-                ORDER BY list_dot_product(q.qv, ct.cvec) /
-                  (sqrt(list_dot_product(q.qv, q.qv)) *
-                   sqrt(list_dot_product(ct.cvec, ct.cvec))) DESC,
-                  ct.cell) AS rn
-             FROM queries q CROSS JOIN cents ct) WHERE rn = 1),
-         pre_top AS (
-           SELECT query_id, vec_id AS pre_top1 FROM (
-             SELECT q.query_id, c.vec_id, row_number() OVER
-               (PARTITION BY q.query_id
-                ORDER BY list_dot_product(q.qv, c.v) /
-                  (sqrt(list_dot_product(q.qv, q.qv)) *
-                   sqrt(list_dot_product(c.v, c.v))) DESC,
-                  c.vec_id) AS rn
-             FROM queries q JOIN pre_probe p USING (query_id)
-               JOIN pre_assign a ON a.cell = p.cell
-               JOIN corpus c ON c.vec_id = a.vec_id) WHERE rn = 1),
-         sample_assign AS (
-           SELECT vec_id, cell FROM pre_assign WHERE vec_id % 2 = 1),
-         refit AS (
-           SELECT sa.cell, [avg(c.v[1]), avg(c.v[2]), avg(c.v[3]),
-             avg(c.v[4])]::DOUBLE[] AS cvec
-           FROM corpus c JOIN sample_assign sa USING (vec_id)
-           GROUP BY sa.cell),
-         new_cents AS (
-           SELECT ct.cell, coalesce(r.cvec, ct.cvec) AS cvec
-           FROM cents ct LEFT JOIN refit r ON r.cell = ct.cell),
-         post_assign AS (
-           SELECT vec_id, cell FROM (
-             SELECT c.vec_id, ct.cell, row_number() OVER
-               (PARTITION BY c.vec_id
-                ORDER BY list_dot_product(c.v, ct.cvec) /
-                  (sqrt(list_dot_product(c.v, c.v)) *
-                   sqrt(list_dot_product(ct.cvec, ct.cvec))) DESC,
-                  ct.cell) AS rn
-             FROM corpus c CROSS JOIN new_cents ct) WHERE rn = 1),
-         post_probe AS (
-           SELECT query_id, cell FROM (
-             SELECT q.query_id, ct.cell, row_number() OVER
-               (PARTITION BY q.query_id
-                ORDER BY list_dot_product(q.qv, ct.cvec) /
-                  (sqrt(list_dot_product(q.qv, q.qv)) *
-                   sqrt(list_dot_product(ct.cvec, ct.cvec))) DESC,
-                  ct.cell) AS rn
-             FROM queries q CROSS JOIN new_cents ct) WHERE rn = 1),
-         post_top AS (
-           SELECT query_id, vec_id AS post_top1 FROM (
-             SELECT q.query_id, c.vec_id, row_number() OVER
-               (PARTITION BY q.query_id
-                ORDER BY list_dot_product(q.qv, c.v) /
-                  (sqrt(list_dot_product(q.qv, q.qv)) *
-                   sqrt(list_dot_product(c.v, c.v))) DESC,
-                  c.vec_id) AS rn
-             FROM queries q JOIN post_probe p USING (query_id)
-               JOIN post_assign a ON a.cell = p.cell
-               JOIN corpus c ON c.vec_id = a.vec_id) WHERE rn = 1),
-         truth AS (
-           SELECT query_id, vec_id AS true_top1 FROM (
-             SELECT q.query_id, c.vec_id, row_number() OVER
-               (PARTITION BY q.query_id
-                ORDER BY list_dot_product(q.qv, c.v) /
-                  (sqrt(list_dot_product(q.qv, q.qv)) *
-                   sqrt(list_dot_product(c.v, c.v))) DESC,
-                  c.vec_id) AS rn
-             FROM queries q CROSS JOIN corpus c) WHERE rn = 1),
-         rec AS (
-           SELECT t.query_id, pr.pre_top1, po.post_top1,
-             CASE WHEN pr.pre_top1 = t.true_top1 THEN 1.0 ELSE 0.0 END
-               AS pre_recall,
-             CASE WHEN po.post_top1 = t.true_top1 THEN 1.0 ELSE 0.0 END
-               AS post_recall
-           FROM truth t JOIN pre_top pr USING (query_id)
-             JOIN post_top po USING (query_id)),
-         dec AS (
-           SELECT round(avg(pre_recall), 6)::DOUBLE AS pre_mean,
-             round(avg(post_recall), 6)::DOUBLE AS post_mean,
-             avg(pre_recall) < 0.9 AS retrain_fired,
-             avg(pre_recall) < 0.9 AS heal_epoch_changed,
-             avg(post_recall) < 0.9 AS noop_fired,
-             round(avg(post_recall), 6)::DOUBLE AS noop_mean,
-             avg(post_recall) < 0.9 AS noop_epoch_changed
-           FROM rec)
-         SELECT r.query_id, r.pre_top1, r.post_top1, d.pre_mean,
-           d.retrain_fired, d.post_mean, d.heal_epoch_changed,
-           d.noop_fired, d.noop_mean, d.noop_epoch_changed
-         FROM rec r CROSS JOIN dec d
-         ORDER BY r.query_id""",
+      ivfMaintainOracleSql,
 
     // q145: the q131 replay verbatim — the planted geometry and the
     // maintenance-report semantics are IDENTICAL for the IVF×SQ rung
@@ -9013,144 +7457,14 @@ object SparkEntry {
     // coarse probe + exact argmax decide every value; the quantizer
     // arithmetic itself is value-pinned by q60/q66)
     "q145_ivfsq_maintain" ->
-      """WITH corpus_base AS (
-           SELECT i AS vec_id,
-             CASE WHEN i % 2 = 1
-               THEN [1.0, 0.0, 0.0, 0.1 * ((i + 1) // 2)]
-               ELSE [0.0, 1.0, 0.0, 0.1 * (i // 2)] END::DOUBLE[] AS v
-           FROM range(1, 21) t(i)),
-         drift AS (
-           SELECT 100 + i AS vec_id,
-             [0.05, 0.0, 1.0, 0.1 * i]::DOUBLE[] AS v
-           FROM range(1, 11) t(i)),
-         queries AS (
-           SELECT 1000 + i AS query_id,
-             [0.0, 0.05, 1.0, 0.1 * i]::DOUBLE[] AS qv
-           FROM range(1, 11) t(i)),
-         seeds AS (SELECT vec_id AS cell, v AS cvec FROM corpus_base
-           WHERE vec_id <= 2),
-         assign0 AS (
-           SELECT vec_id, cell FROM (
-             SELECT b.vec_id, s.cell, row_number() OVER
-               (PARTITION BY b.vec_id
-                ORDER BY list_dot_product(b.v, s.cvec) /
-                  (sqrt(list_dot_product(b.v, b.v)) *
-                   sqrt(list_dot_product(s.cvec, s.cvec))) DESC,
-                  s.cell) AS rn
-             FROM corpus_base b CROSS JOIN seeds s) WHERE rn = 1),
-         cents AS (
-           SELECT a.cell, [avg(b.v[1]), avg(b.v[2]), avg(b.v[3]),
-             avg(b.v[4])]::DOUBLE[] AS cvec
-           FROM corpus_base b JOIN assign0 a USING (vec_id)
-           GROUP BY a.cell),
-         corpus AS (SELECT * FROM corpus_base UNION ALL
-           SELECT * FROM drift),
-         pre_assign AS (
-           SELECT vec_id, cell FROM (
-             SELECT c.vec_id, ct.cell, row_number() OVER
-               (PARTITION BY c.vec_id
-                ORDER BY list_dot_product(c.v, ct.cvec) /
-                  (sqrt(list_dot_product(c.v, c.v)) *
-                   sqrt(list_dot_product(ct.cvec, ct.cvec))) DESC,
-                  ct.cell) AS rn
-             FROM corpus c CROSS JOIN cents ct) WHERE rn = 1),
-         pre_probe AS (
-           SELECT query_id, cell FROM (
-             SELECT q.query_id, ct.cell, row_number() OVER
-               (PARTITION BY q.query_id
-                ORDER BY list_dot_product(q.qv, ct.cvec) /
-                  (sqrt(list_dot_product(q.qv, q.qv)) *
-                   sqrt(list_dot_product(ct.cvec, ct.cvec))) DESC,
-                  ct.cell) AS rn
-             FROM queries q CROSS JOIN cents ct) WHERE rn = 1),
-         pre_top AS (
-           SELECT query_id, vec_id AS pre_top1 FROM (
-             SELECT q.query_id, c.vec_id, row_number() OVER
-               (PARTITION BY q.query_id
-                ORDER BY list_dot_product(q.qv, c.v) /
-                  (sqrt(list_dot_product(q.qv, q.qv)) *
-                   sqrt(list_dot_product(c.v, c.v))) DESC,
-                  c.vec_id) AS rn
-             FROM queries q JOIN pre_probe p USING (query_id)
-               JOIN pre_assign a ON a.cell = p.cell
-               JOIN corpus c ON c.vec_id = a.vec_id) WHERE rn = 1),
-         sample_assign AS (
-           SELECT vec_id, cell FROM pre_assign WHERE vec_id % 2 = 1),
-         refit AS (
-           SELECT sa.cell, [avg(c.v[1]), avg(c.v[2]), avg(c.v[3]),
-             avg(c.v[4])]::DOUBLE[] AS cvec
-           FROM corpus c JOIN sample_assign sa USING (vec_id)
-           GROUP BY sa.cell),
-         new_cents AS (
-           SELECT ct.cell, coalesce(r.cvec, ct.cvec) AS cvec
-           FROM cents ct LEFT JOIN refit r ON r.cell = ct.cell),
-         post_assign AS (
-           SELECT vec_id, cell FROM (
-             SELECT c.vec_id, ct.cell, row_number() OVER
-               (PARTITION BY c.vec_id
-                ORDER BY list_dot_product(c.v, ct.cvec) /
-                  (sqrt(list_dot_product(c.v, c.v)) *
-                   sqrt(list_dot_product(ct.cvec, ct.cvec))) DESC,
-                  ct.cell) AS rn
-             FROM corpus c CROSS JOIN new_cents ct) WHERE rn = 1),
-         post_probe AS (
-           SELECT query_id, cell FROM (
-             SELECT q.query_id, ct.cell, row_number() OVER
-               (PARTITION BY q.query_id
-                ORDER BY list_dot_product(q.qv, ct.cvec) /
-                  (sqrt(list_dot_product(q.qv, q.qv)) *
-                   sqrt(list_dot_product(ct.cvec, ct.cvec))) DESC,
-                  ct.cell) AS rn
-             FROM queries q CROSS JOIN new_cents ct) WHERE rn = 1),
-         post_top AS (
-           SELECT query_id, vec_id AS post_top1 FROM (
-             SELECT q.query_id, c.vec_id, row_number() OVER
-               (PARTITION BY q.query_id
-                ORDER BY list_dot_product(q.qv, c.v) /
-                  (sqrt(list_dot_product(q.qv, q.qv)) *
-                   sqrt(list_dot_product(c.v, c.v))) DESC,
-                  c.vec_id) AS rn
-             FROM queries q JOIN post_probe p USING (query_id)
-               JOIN post_assign a ON a.cell = p.cell
-               JOIN corpus c ON c.vec_id = a.vec_id) WHERE rn = 1),
-         truth AS (
-           SELECT query_id, vec_id AS true_top1 FROM (
-             SELECT q.query_id, c.vec_id, row_number() OVER
-               (PARTITION BY q.query_id
-                ORDER BY list_dot_product(q.qv, c.v) /
-                  (sqrt(list_dot_product(q.qv, q.qv)) *
-                   sqrt(list_dot_product(c.v, c.v))) DESC,
-                  c.vec_id) AS rn
-             FROM queries q CROSS JOIN corpus c) WHERE rn = 1),
-         rec AS (
-           SELECT t.query_id, pr.pre_top1, po.post_top1,
-             CASE WHEN pr.pre_top1 = t.true_top1 THEN 1.0 ELSE 0.0 END
-               AS pre_recall,
-             CASE WHEN po.post_top1 = t.true_top1 THEN 1.0 ELSE 0.0 END
-               AS post_recall
-           FROM truth t JOIN pre_top pr USING (query_id)
-             JOIN post_top po USING (query_id)),
-         dec AS (
-           SELECT round(avg(pre_recall), 6)::DOUBLE AS pre_mean,
-             round(avg(post_recall), 6)::DOUBLE AS post_mean,
-             avg(pre_recall) < 0.9 AS retrain_fired,
-             avg(pre_recall) < 0.9 AS heal_epoch_changed,
-             avg(post_recall) < 0.9 AS noop_fired,
-             round(avg(post_recall), 6)::DOUBLE AS noop_mean,
-             avg(post_recall) < 0.9 AS noop_epoch_changed
-           FROM rec)
-         SELECT r.query_id, r.pre_top1, r.post_top1, d.pre_mean,
-           d.retrain_fired, d.post_mean, d.heal_epoch_changed,
-           d.noop_fired, d.noop_mean, d.noop_epoch_changed
-         FROM rec r CROSS JOIN dec d
-         ORDER BY r.query_id""",
+      ivfMaintainOracleSql,
 
     // the engine's entire translate+regexp normalization chain,
     // replayed stage-for-stage (chr() codes stand in for the planted
     // typographic/control characters); the trailing key_md5 replays
     // the CCNet lowercase/digit-fold/punct-strip key on top
     "q106_normalize_text" ->
-      """WITH m AS (SELECT doc_id,
+      ("""WITH m AS (SELECT doc_id,
            CASE WHEN doc_id % 3 = 0 THEN
                chr(8220) || 'Q' || chr(8221) || ' ' || chr(8211) || ' x' ||
                chr(8230) || ' ' || chr(160) || ' ' || text ||
@@ -9162,22 +7476,7 @@ object SparkEntry {
            END AS t
          FROM documents),
          n AS (SELECT doc_id,
-           trim(regexp_replace(regexp_replace(
-             regexp_replace(
-               regexp_replace(
-                 regexp_replace(
-                   regexp_replace(
-                     translate(t,
-                       chr(8216) || chr(8217) || chr(8218) || chr(8220) ||
-                       chr(8221) || chr(8222) || chr(8211) || chr(8212) ||
-                       chr(8722) || chr(160),
-                       chr(39) || chr(39) || chr(39) || chr(34) ||
-                       chr(34) || chr(34) || '--- '),
-                   chr(8230), '...', 'g'),
-                 '\r\n?', chr(10), 'g'),
-               '[\x00-\x08\x0B\x0C\x0E-\x1F\x7F\x{200B}\x{200C}\x{200D}\x{FEFF}]',
-               '', 'g'),
-             '[ \t]+', ' ', 'g'),
+           """ + normalizeTextSql + """
            ' ?\n ?', chr(10), 'g'), '^\n+|\n+$', '', 'g')) AS norm
          FROM m)
          SELECT doc_id, md5(norm) AS norm_md5,
@@ -9186,7 +7485,7 @@ object SparkEntry {
              '[0-9]', '0', 'g'),
              '[^\p{L}\p{N} \t\n\f\r]', '', 'g'),
              '[ \t\n\f\r]+', ' ', 'g'))) AS key_md5
-         FROM n ORDER BY doc_id""",
+         FROM n ORDER BY doc_id"""),
 
     "q100_ccnet_buckets" ->
       """WITH toks AS (SELECT doc_id,
@@ -9255,7 +7554,7 @@ object SparkEntry {
     // quantile_cont thresholds over the batch-scored corpus and the
     // ties-down labeling the stream must reproduce
     "q117_stream_trigram_buckets" ->
-      """WITH toks AS (SELECT doc_id,
+      ("""WITH toks AS (SELECT doc_id,
            [t for t in regexp_split_to_array(trim(lower(text)), '\s+')
             if t <> ''] AS tk
          FROM documents),
@@ -9265,18 +7564,7 @@ object SparkEntry {
            FROM toks WHERE len(tk) >= 3),
          tg AS (SELECT doc_id, g.w1 AS w1, g.w2 AS w2, g.w3 AS w3 FROM tg0),
          c3all AS (SELECT w1, w2, w3, count(*) c3 FROM tg GROUP BY 1, 2, 3),
-         c12 AS (SELECT w1, w2, CAST(sum(c3) AS BIGINT) c12 FROM c3all
-           GROUP BY 1, 2),
-         c3 AS (SELECT * FROM c3all WHERE c3 >= 2),
-         bg0 AS (SELECT unnest([{'u': tk[i], 'v': tk[i + 1]}
-               for i in generate_series(1, len(tk) - 1)]) AS b
-           FROM toks WHERE len(tk) >= 2),
-         cb AS (SELECT b.u AS w2, b.v AS w3, count(*) cb FROM bg0
-           GROUP BY 1, 2),
-         cw AS (SELECT w2, CAST(sum(cb) AS BIGINT) cw FROM cb GROUP BY 1),
-         uni AS (SELECT t AS w3, count(*) cu
-           FROM (SELECT unnest(tk) AS t FROM toks) GROUP BY 1),
-         tot AS (SELECT CAST(sum(cu) AS BIGINT) T FROM uni),
+         """ + trigramBackoffCountsSql + """
          terms AS (SELECT doc_id, w1, w2, w3,
              ln(0.75::DOUBLE * (COALESCE(c3, 0)::DOUBLE / (c12::DOUBLE)) +
                 0.25::DOUBLE * (0.75::DOUBLE * ((cb::DOUBLE) / (cw::DOUBLE)) +
@@ -9302,7 +7590,7 @@ object SparkEntry {
                 WHEN sl.lm3_score <= th.q1 THEN 'middle'
                 ELSE 'head' END AS bucket
          FROM sl JOIN th ON sl.lang IS NOT DISTINCT FROM th.lang
-         ORDER BY sl.doc_id""",
+         ORDER BY sl.doc_id"""),
 
     "q99_perplexity_buckets" ->
       """WITH s AS (SELECT doc_id,
@@ -9332,7 +7620,7 @@ object SparkEntry {
     // sides and the anti-join membership decision the stream must
     // reproduce across micro-batches
     "q114_stream_ccnet_admission" ->
-      """WITH src AS (
+      ("""WITH src AS (
            SELECT d.doc_id,
              CASE WHEN d.doc_id % 3 = 1 AND b.text IS NOT NULL
                   THEN '  ' || upper(translate(b.text, '0123456789', '5555555555'))
@@ -9346,22 +7634,7 @@ object SparkEntry {
            FROM documents WHERE doc_id % 3 = 0),
          k AS (SELECT doc_id, side,
            trim(regexp_replace(regexp_replace(regexp_replace(lower(
-             trim(regexp_replace(regexp_replace(
-               regexp_replace(
-                 regexp_replace(
-                   regexp_replace(
-                     regexp_replace(
-                       translate(t,
-                         chr(8216) || chr(8217) || chr(8218) || chr(8220) ||
-                         chr(8221) || chr(8222) || chr(8211) || chr(8212) ||
-                         chr(8722) || chr(160),
-                         chr(39) || chr(39) || chr(39) || chr(34) ||
-                         chr(34) || chr(34) || '--- '),
-                     chr(8230), '...', 'g'),
-                   '\r\n?', chr(10), 'g'),
-                 '[\x00-\x08\x0B\x0C\x0E-\x1F\x7F\x{200B}\x{200C}\x{200D}\x{FEFF}]',
-                 '', 'g'),
-               '[ \t]+', ' ', 'g'),
+             """ + normalizeTextSql + """
              ' ?\n ?', chr(10), 'g'), '^\n+|\n+$', '', 'g'))),
              '[0-9]', '0', 'g'),
              '[^\p{L}\p{N} \t\n\f\r]', '', 'g'),
@@ -9371,7 +7644,7 @@ object SparkEntry {
          skey AS (SELECT doc_id, k FROM k WHERE side = 'stream')
          SELECT doc_id, md5(k) AS key_md5
          FROM skey ANTI JOIN akey USING (k)
-         ORDER BY doc_id""",
+         ORDER BY doc_id"""),
 
     // the candidate stream regenerated from `embeddings`, then the
     // exhaustive brute-force decision the IVF probe must reproduce:
@@ -9383,48 +7656,10 @@ object SparkEntry {
     // searchIvf) route against the durable index — same fixture,
     // same brute-force rule
     "q152_stream_ann_batched" ->
-      """WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-         acc AS (SELECT * FROM e WHERE vec_id % 3 = 0),
-         cand AS (SELECT c.vec_id,
-             CASE WHEN c.vec_id % 3 = 1 AND src.v IS NOT NULL
-               THEN list_transform(src.v, x -> x * 1.001 + 0.0005)
-               ELSE c.v END AS v
-           FROM e c LEFT JOIN e src ON src.vec_id = c.vec_id - 1
-           WHERE c.vec_id % 3 <> 0),
-         s AS (SELECT cand.vec_id, acc.vec_id AS aid,
-             list_dot_product(cand.v, acc.v) /
-               (sqrt(list_dot_product(cand.v, cand.v)) *
-                sqrt(list_dot_product(acc.v, acc.v))) AS cos_raw
-           FROM cand CROSS JOIN acc),
-         r AS (SELECT vec_id, aid, cos_raw, row_number() OVER
-             (PARTITION BY vec_id ORDER BY cos_raw DESC, aid) AS rk
-           FROM s)
-         SELECT vec_id, cos_raw < 0.9 AS admitted,
-           CASE WHEN cos_raw >= 0.9 THEN aid END AS match_id
-         FROM r WHERE rk = 1
-         ORDER BY vec_id""",
+      annAdmissionOracleSql,
 
     "q120_stream_ann_admission" ->
-      """WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-         acc AS (SELECT * FROM e WHERE vec_id % 3 = 0),
-         cand AS (SELECT c.vec_id,
-             CASE WHEN c.vec_id % 3 = 1 AND src.v IS NOT NULL
-               THEN list_transform(src.v, x -> x * 1.001 + 0.0005)
-               ELSE c.v END AS v
-           FROM e c LEFT JOIN e src ON src.vec_id = c.vec_id - 1
-           WHERE c.vec_id % 3 <> 0),
-         s AS (SELECT cand.vec_id, acc.vec_id AS aid,
-             list_dot_product(cand.v, acc.v) /
-               (sqrt(list_dot_product(cand.v, cand.v)) *
-                sqrt(list_dot_product(acc.v, acc.v))) AS cos_raw
-           FROM cand CROSS JOIN acc),
-         r AS (SELECT vec_id, aid, cos_raw, row_number() OVER
-             (PARTITION BY vec_id ORDER BY cos_raw DESC, aid) AS rk
-           FROM s)
-         SELECT vec_id, cos_raw < 0.9 AS admitted,
-           CASE WHEN cos_raw >= 0.9 THEN aid END AS match_id
-         FROM r WHERE rk = 1
-         ORDER BY vec_id""",
+      annAdmissionOracleSql,
 
     // q144: the q120 brute-force decision replayed TWICE — once vs
     // the full accepted set (pre) and once vs the tombstone-excluded
@@ -9694,7 +7929,7 @@ object SparkEntry {
          ORDER BY r_name, n_name""",
 
     "q34_dedup_components" ->
-      """WITH corpus AS (
+      ("""WITH corpus AS (
            SELECT doc_id, lower(text) tx FROM documents
            UNION ALL
            SELECT doc_id + 1000000, lower(text || ' xyzzy qbf')
@@ -9704,21 +7939,9 @@ object SparkEntry {
          sh AS (SELECT DISTINCT doc_id, array_to_string(t[i:i+3], ' ') AS s
            FROM toks, LATERAL (SELECT unnest(generate_series(1,
              greatest(len(t)-3, 1))) AS i)),
-         sizes AS (SELECT doc_id, count(*) sz FROM sh GROUP BY 1),
-         inter AS (SELECT a.doc_id a, b.doc_id b, count(*) i FROM sh a
-           JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id GROUP BY 1,2),
-         pairs AS (SELECT a, b FROM inter
-           JOIN sizes sa ON sa.doc_id = a JOIN sizes sb ON sb.doc_id = b
-           WHERE i*1.0/(sa.sz+sb.sz-i) >= 0.5),
-         edges AS (SELECT a x, b y FROM pairs UNION SELECT b, a FROM pairs),
-         reach AS (
-           WITH RECURSIVE r(x, y) AS (
-             SELECT x, y FROM edges
-             UNION
-             SELECT r.x, e.y FROM r JOIN edges e ON r.y = e.x)
-           SELECT x, y FROM r)
+         """ + shingleClosureSql + """
          SELECT x AS doc_id, least(x, min(y)) AS component
-         FROM reach GROUP BY x ORDER BY doc_id""",
+         FROM reach GROUP BY x ORDER BY doc_id"""),
 
     "q25_simhash_neardup" -> simhashOracleSql,
 
@@ -9758,55 +7981,28 @@ object SparkEntry {
          ORDER BY stratum, rank""",
 
     "q31_ann_recall" ->
-      """WITH c AS (SELECT vec_id, embedding::DOUBLE[] v FROM embeddings),
-         q AS (SELECT vec_id + 10000 AS query_id,
-             list_transform(v, x -> x * 1.001 + 0.0005) AS qv
-           FROM c WHERE vec_id < 10),
-         s AS (SELECT query_id, c.vec_id AS neighbor_id,
-             list_dot_product(qv, c.v) /
-               (sqrt(list_dot_product(qv, qv)) * sqrt(list_dot_product(c.v, c.v)))
-               AS cos_raw
-           FROM q CROSS JOIN c),
-         r AS (SELECT query_id, neighbor_id, row_number() OVER
-             (PARTITION BY query_id ORDER BY cos_raw DESC, neighbor_id) AS rank
+      ("""WITH c AS (SELECT vec_id, embedding::DOUBLE[] v FROM embeddings),
+         """ + bruteCosineSql + """
            FROM s)
          SELECT method, query_id, neighbor_id AS top1 FROM
            (SELECT 'ivf' AS method, query_id, neighbor_id FROM r WHERE rank = 1
             UNION ALL
             SELECT 'lsh', query_id, neighbor_id FROM r WHERE rank = 1)
-         ORDER BY method, query_id""",
+         ORDER BY method, query_id"""),
 
     "q60_sq_ann_recall" ->
-      """WITH c AS (SELECT vec_id, embedding::DOUBLE[] v FROM embeddings),
-         q AS (SELECT vec_id + 10000 AS query_id,
-             list_transform(v, x -> x * 1.001 + 0.0005) AS qv
-           FROM c WHERE vec_id < 10),
-         s AS (SELECT query_id, c.vec_id AS neighbor_id,
-             list_dot_product(qv, c.v) /
-               (sqrt(list_dot_product(qv, qv)) * sqrt(list_dot_product(c.v, c.v)))
-               AS cos_raw
-           FROM q CROSS JOIN c),
-         r AS (SELECT query_id, neighbor_id, row_number() OVER
-             (PARTITION BY query_id ORDER BY cos_raw DESC, neighbor_id) AS rank
+      ("""WITH c AS (SELECT vec_id, embedding::DOUBLE[] v FROM embeddings),
+         """ + bruteCosineSql + """
            FROM s)
          SELECT query_id, neighbor_id AS top1 FROM r WHERE rank = 1
-         ORDER BY query_id""",
+         ORDER BY query_id"""),
 
     "q66_ivfsq_ann_recall" ->
-      """WITH c AS (SELECT vec_id, embedding::DOUBLE[] v FROM embeddings),
-         q AS (SELECT vec_id + 10000 AS query_id,
-             list_transform(v, x -> x * 1.001 + 0.0005) AS qv
-           FROM c WHERE vec_id < 10),
-         s AS (SELECT query_id, c.vec_id AS neighbor_id,
-             list_dot_product(qv, c.v) /
-               (sqrt(list_dot_product(qv, qv)) * sqrt(list_dot_product(c.v, c.v)))
-               AS cos_raw
-           FROM q CROSS JOIN c),
-         r AS (SELECT query_id, neighbor_id, row_number() OVER
-             (PARTITION BY query_id ORDER BY cos_raw DESC, neighbor_id) AS rank
+      ("""WITH c AS (SELECT vec_id, embedding::DOUBLE[] v FROM embeddings),
+         """ + bruteCosineSql + """
            FROM s)
          SELECT query_id, neighbor_id AS top1 FROM r WHERE rank = 1
-         ORDER BY query_id""",
+         ORDER BY query_id"""),
 
     "q33_cosine_neardup" ->
       """WITH c0 AS (SELECT vec_id, embedding::DOUBLE[] v FROM embeddings),
@@ -9823,28 +8019,17 @@ object SparkEntry {
          WHERE cos_raw >= 0.9 ORDER BY a, b""",
 
     "q52_semantic_dedup" ->
-      """WITH c0 AS (SELECT vec_id, embedding::DOUBLE[] v FROM embeddings),
+      ("""WITH c0 AS (SELECT vec_id, embedding::DOUBLE[] v FROM embeddings),
          c AS (SELECT vec_id, v FROM c0
            UNION ALL
            SELECT vec_id + 1000000, list_transform(v, x -> x * 1.001 + 0.0005)
            FROM c0 WHERE vec_id % 7 = 0),
-         s AS (SELECT a.vec_id a, b.vec_id b FROM c a
-           JOIN c b ON a.vec_id < b.vec_id
-           WHERE list_dot_product(a.v, b.v) /
-             (sqrt(list_dot_product(a.v, a.v)) *
-              sqrt(list_dot_product(b.v, b.v))) >= 0.9),
-         edges AS (SELECT a x, b y FROM s UNION SELECT b, a FROM s),
-         reach AS (
-           WITH RECURSIVE r(x, y) AS (
-             SELECT x, y FROM edges
-             UNION
-             SELECT r.x, e.y FROM r JOIN edges e ON r.y = e.x)
-           SELECT x, y FROM r),
+         """ + vectorComponentsSql + """
          comp AS (SELECT x AS vec_id, least(x, min(y)) AS comp
            FROM reach GROUP BY x)
          SELECT c.vec_id FROM c LEFT JOIN comp USING (vec_id)
          WHERE comp.comp IS NULL OR comp.comp = c.vec_id
-         ORDER BY c.vec_id""",
+         ORDER BY c.vec_id"""),
 
     "q57_gopher_rules" ->
       """WITH d AS (SELECT doc_id,
@@ -10163,7 +8348,7 @@ object SparkEntry {
     "q72_simhash_rescue" -> simhashRescueOracleSql,
 
     "q70_semantic_rescue" ->
-      """WITH c0 AS (SELECT vec_id, embedding::DOUBLE[] v FROM embeddings),
+      ("""WITH c0 AS (SELECT vec_id, embedding::DOUBLE[] v FROM embeddings),
          cb AS (SELECT vec_id, v FROM c0
            UNION ALL
            SELECT vec_id + 1000000, list_transform(v, x -> x * 1.001 + 0.0005)
@@ -10173,23 +8358,12 @@ object SparkEntry {
            SELECT 2000000 + r.range AS vec_id,
              (SELECT v FROM cb WHERE vec_id = 0) AS v
            FROM range(0, 300) r),
-         s AS (SELECT a.vec_id a, b.vec_id b FROM c a
-           JOIN c b ON a.vec_id < b.vec_id
-           WHERE list_dot_product(a.v, b.v) /
-             (sqrt(list_dot_product(a.v, a.v)) *
-              sqrt(list_dot_product(b.v, b.v))) >= 0.9),
-         edges AS (SELECT a x, b y FROM s UNION SELECT b, a FROM s),
-         reach AS (
-           WITH RECURSIVE r(x, y) AS (
-             SELECT x, y FROM edges
-             UNION
-             SELECT r.x, e.y FROM r JOIN edges e ON r.y = e.x)
-           SELECT x, y FROM r),
+         """ + vectorComponentsSql + """
          comp AS (SELECT x AS vec_id, least(x, min(y)) AS comp
            FROM reach GROUP BY x)
          SELECT c.vec_id FROM c LEFT JOIN comp USING (vec_id)
          WHERE comp.comp IS NULL OR comp.comp = c.vec_id
-         ORDER BY c.vec_id""",
+         ORDER BY c.vec_id"""),
 
     "q69_cosine_rescue" ->
       """WITH c0 AS (SELECT vec_id, embedding::DOUBLE[] v FROM embeddings),
@@ -10343,7 +8517,7 @@ object SparkEntry {
     // c12 contexts, the full bigram backoff tier, unigram floor, the
     // nested exact-binary mixture and the trigram-sorted fold
     "q113_trigram_logprob" ->
-      """WITH toks AS (SELECT doc_id,
+      ("""WITH toks AS (SELECT doc_id,
            [t for t in regexp_split_to_array(trim(lower(text)), '\s+')
             if t <> ''] AS tk
          FROM documents),
@@ -10356,18 +8530,7 @@ object SparkEntry {
            GROUP BY 1, 2, 3, 4),
          c3all AS (SELECT w1, w2, w3, CAST(sum(tf) AS BIGINT) c3 FROM tf
            GROUP BY 1, 2, 3),
-         c12 AS (SELECT w1, w2, CAST(sum(c3) AS BIGINT) c12 FROM c3all
-           GROUP BY 1, 2),
-         c3 AS (SELECT * FROM c3all WHERE c3 >= 2),
-         bg0 AS (SELECT unnest([{'u': tk[i], 'v': tk[i + 1]}
-               for i in generate_series(1, len(tk) - 1)]) AS b
-           FROM toks WHERE len(tk) >= 2),
-         cb AS (SELECT b.u AS w2, b.v AS w3, count(*) cb FROM bg0
-           GROUP BY 1, 2),
-         cw AS (SELECT w2, CAST(sum(cb) AS BIGINT) cw FROM cb GROUP BY 1),
-         uni AS (SELECT t AS w3, count(*) cu
-           FROM (SELECT unnest(tk) AS t FROM toks) GROUP BY 1),
-         tot AS (SELECT CAST(sum(cu) AS BIGINT) T FROM uni),
+         """ + trigramBackoffCountsSql + """
          terms AS (SELECT doc_id, w1, w2, w3, tf,
              tf * ln(0.75::DOUBLE * (COALESCE(c3, 0)::DOUBLE / (c12::DOUBLE)) +
                      0.25::DOUBLE * (0.75::DOUBLE * ((cb::DOUBLE) / (cw::DOUBLE)) +
@@ -10380,7 +8543,7 @@ object SparkEntry {
          SELECT doc_id, CAST(sum(tf) AS BIGINT) AS n_trigrams,
            round(list_reduce(list(term ORDER BY w1, w2, w3), (a, b) -> a + b)
              / CAST(sum(tf) AS DOUBLE), 6) AS logprob_per_trigram
-         FROM terms GROUP BY 1 ORDER BY doc_id""",
+         FROM terms GROUP BY 1 ORDER BY doc_id"""),
 
     "q59_paragraph_dedup" ->
       """WITH d AS (SELECT doc_id,
@@ -10446,45 +8609,23 @@ object SparkEntry {
          ORDER BY metric""",
 
     "q89_winnow_containment" ->
-      """WITH tk AS (SELECT doc_id,
+      ("""WITH tk AS (SELECT doc_id,
            regexp_split_to_array(trim(lower(text)), '\s+') t,
            regexp_split_to_array(trim(text), '\s+') traw
          FROM documents),
-         hs AS (SELECT doc_id,
-             [('0x' || substring(md5(array_to_string(t[p : p + 3], ' ')),
-                 1, 15))::BIGINT
-               for p in generate_series(1, greatest(len(t) - 3, 1))] AS h
-           FROM tk),
-         sel AS (SELECT DISTINCT doc_id,
-             s - 1 + list_max([i for i in generate_series(1, len(sl))
-               if sl[i] = list_min(sl)]) AS pos
-           FROM (SELECT doc_id, h, least(4, len(h)) AS win FROM hs) x,
-             LATERAL (SELECT unnest(generate_series(1, len(h) - win + 1))
-               AS s),
-             LATERAL (SELECT h[s : s + win - 1] AS sl)),
+         """ + winnowSql("tk", "doc_id", "hs", "sel") + """
          tfp AS (SELECT DISTINCT s.doc_id, hs.h[s.pos] AS fp
            FROM sel s JOIN hs USING (doc_id)),
          btk AS (SELECT doc_id, [lower(x) for x in traw[3:14]] AS t
            FROM tk WHERE doc_id % 13 = 0),
-         bhs AS (SELECT doc_id,
-             [('0x' || substring(md5(array_to_string(t[p : p + 3], ' ')),
-                 1, 15))::BIGINT
-               for p in generate_series(1, greatest(len(t) - 3, 1))] AS h
-           FROM btk),
-         bsel AS (SELECT DISTINCT doc_id,
-             s - 1 + list_max([i for i in generate_series(1, len(sl))
-               if sl[i] = list_min(sl)]) AS pos
-           FROM (SELECT doc_id, h, least(4, len(h)) AS win FROM bhs) x,
-             LATERAL (SELECT unnest(generate_series(1, len(h) - win + 1))
-               AS s),
-             LATERAL (SELECT h[s : s + win - 1] AS sl)),
+         """ + winnowSql("btk", "doc_id", "bhs", "bsel") + """
          bfp AS (SELECT DISTINCT bhs.h[s.pos] AS fp
            FROM bsel s JOIN bhs USING (doc_id)),
          agg AS (SELECT t.doc_id, count(*) AS n_fp, count(b.fp) AS n_hits
            FROM tfp t LEFT JOIN bfp b ON t.fp = b.fp GROUP BY 1)
          SELECT doc_id, n_fp, n_hits,
            round(n_hits::DOUBLE / n_fp::DOUBLE, 6) AS containment
-         FROM agg ORDER BY doc_id""",
+         FROM agg ORDER BY doc_id"""),
 
     "q88_winnow_fingerprints" ->
       """WITH tk AS (SELECT doc_id,
@@ -10798,7 +8939,7 @@ object SparkEntry {
     // cumtrapz energy, GPS speed/heading/distance with quirk Q7, and
     // the as-of ffill join.
     "q65_season_e2e" ->
-      """WITH
+      ("""WITH
          mainE AS (SELECT ts, user_id, event_id FROM events
            WHERE ts BETWEEN TIMESTAMP '2024-01-08 09:00:00'
                         AND TIMESTAMP '2024-01-11 21:00:00'
@@ -10845,26 +8986,7 @@ object SparkEntry {
              'MOD17__SENSOR__FLAG1', 'MOD17__SENSOR__FLAG2']) signal) s
            CROSS JOIN (SELECT unnest(generate_series((SELECT lo FROM bnds),
              (SELECT hi FROM bnds), INTERVAL 1 MINUTE)) b) g),
-         dense AS (SELECT grid.signal, grid.b, binned.v
-           FROM grid LEFT JOIN binned USING (signal, b)),
-         selx AS (SELECT signal, b, v,
-             last_value(v IGNORE NULLS) OVER wp pv,
-             first_value(v IGNORE NULLS) OVER wn nv,
-             last_value(CASE WHEN v IS NOT NULL THEN b END IGNORE NULLS)
-               OVER wp pt,
-             first_value(CASE WHEN v IS NOT NULL THEN b END IGNORE NULLS)
-               OVER wn nt
-           FROM dense WINDOW
-             wp AS (PARTITION BY signal ORDER BY b
-                    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW),
-             wn AS (PARTITION BY signal ORDER BY b
-                    ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING)),
-         resam AS (SELECT signal, b, CASE WHEN v IS NOT NULL THEN v
-             WHEN pv IS NOT NULL AND nv IS NOT NULL
-               AND epoch_us(b) - epoch_us(pt) <= 60000000 THEN
-               pv + (nv - pv) * (CAST(epoch_us(b) - epoch_us(pt) AS DOUBLE)
-                 / CAST(epoch_us(nt) - epoch_us(pt) AS DOUBLE))
-             END val FROM selx),
+         """ + seasonInterpSql(60000000L) + """,
          rs AS (SELECT b ts,
              max(CASE WHEN signal = 'MOD17__SENSOR__SIGNATURE' THEN val END) s_signature,
              max(CASE WHEN signal = 'MOD17__SENSOR__CURR' THEN val END) s_curr,
@@ -10872,128 +8994,10 @@ object SparkEntry {
              max(CASE WHEN signal = 'MOD17__SENSOR__FLAG1' THEN val END) s_flag1,
              max(CASE WHEN signal = 'MOD17__SENSOR__FLAG2' THEN val END) s_flag2
            FROM resam GROUP BY b),
-         fc AS (SELECT t, (epoch_us(t) -
-             epoch_us(TIMESTAMP '2024-01-10 10:00:00')) // 300000000 i
-           FROM (SELECT unnest(generate_series(
-             TIMESTAMP '2024-01-10 10:00:00', TIMESTAMP '2024-01-10 17:00:00',
-             INTERVAL 300 SECOND)) t)),
-         fcv AS (SELECT t,
-             500.0 + (i % 7) * 20.0 dni, 300.0 + (i % 5) * 10.0 ghi,
-             100.0 + (i % 3) * 5.0 dhi, 1.5 + (i % 4) * 0.125 airmass,
-             0.06 albedo FROM fc),
-         sp1 AS (SELECT *,
-             CAST(epoch_us(t + INTERVAL 150 SECOND) AS DOUBLE)
-               / 86400000000.0 + 2440587.5 - 2451545.0 AS n,
-             (CAST(epoch_us(t + INTERVAL 150 SECOND) AS DOUBLE)
-               / 3600000000.0) % 24.0 AS hr
-           FROM fcv),
-         sp2 AS (SELECT *,
-             2.1429 - 0.0010394594 * n AS omega,
-             4.8950630 + 0.017202791698 * n AS mlon,
-             6.2400600 + 0.0172019699 * n AS manom FROM sp1),
-         sp3 AS (SELECT *,
-             mlon + 0.03341607 * sin(manom) + 0.00034894 * sin(2.0 * manom)
-               - 0.0001134 - 0.0000203 * sin(omega) AS elon,
-             0.4090928 - 6.2140e-9 * n + 0.0000396 * cos(omega) AS eobl
-           FROM sp2),
-         sp4 AS (SELECT *,
-             CASE WHEN atan2(cos(eobl) * sin(elon), cos(elon)) < 0
-                  THEN atan2(cos(eobl) * sin(elon), cos(elon)) + 2 * pi()
-                  ELSE atan2(cos(eobl) * sin(elon), cos(elon)) END AS ra,
-             asin(sin(eobl) * sin(elon)) AS sdec FROM sp3),
-         sp5 AS (SELECT *,
-             ((6.6974243242 + 0.0657098283 * n + hr) * 15.0
-               + (-48.6417668)) * (pi() / 180.0) - ra AS ha FROM sp4),
-         sp6 AS (SELECT *,
-             acos(cos((-26.243602) * (pi() / 180.0)) * cos(ha) * cos(sdec)
-               + sin(sdec) * sin((-26.243602) * (pi() / 180.0))) AS zen0
-           FROM sp5),
-         sp7 AS (SELECT *,
-             90.0 - ((zen0 + (6371.01 / 149597890.0) * sin(zen0))
-               * 180.0 / pi()) AS elev FROM sp6),
-         sp8 AS (SELECT *,
-             CASE WHEN elev >= -1.0 * (0.26667 + 0.5667) THEN
-               ((101325.0 / 100.0) / 1010.0) * (283.0 / (273.0 + 12.0)) * 1.02
-                 / (60.0 * tan((elev + 10.3 / (elev + 5.11)) / 180.0 * pi()))
-             ELSE 0.0 END AS refr FROM sp7),
-         spz AS (SELECT t, dni, ghi, dhi, airmass, albedo,
-             dni * greatest(cos((90.0 - (elev + refr)) / 180.0 * pi()), 0.0)
-               + dhi AS poa
-           FROM sp8),
-         fsl AS (SELECT * FROM spz
-           WHERE t BETWEEN TIMESTAMP '2024-01-10 11:00:00'
-                       AND TIMESTAMP '2024-01-10 16:00:00'),
-         fen0 AS (SELECT *, lag(poa) OVER w ppoa, lag(t) OVER w plt
-           FROM fsl WINDOW w AS (ORDER BY t)),
-         fen AS (SELECT t, dni, ghi, dhi, airmass, albedo, poa,
-             coalesce(sum((poa + ppoa) / 2.0 *
-               (CAST(epoch_us(t) - epoch_us(plt) AS DOUBLE)
-                 / 3600000000.0)) OVER
-               (ORDER BY t ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW),
-             0.0) energy
-           FROM fen0),
-         cutoff AS (SELECT max(ts) - INTERVAL 3 HOUR c FROM rs),
-         solp AS (SELECT r.ts,
-             CASE WHEN r.ts >= TIMESTAMP '2024-01-10 16:00:00'
-               THEN TIMESTAMP '2024-01-10 16:00:00'
-               ELSE make_timestamp(epoch_us(TIMESTAMP '2024-01-10 11:00:00')
-                 + ((epoch_us(r.ts) - epoch_us(TIMESTAMP '2024-01-10 11:00:00'))
-                    // 300000000) * 300000000) END pt
-           FROM rs r
-           WHERE r.ts >= TIMESTAMP '2024-01-10 11:00:00'
-             AND r.ts <= (SELECT c FROM cutoff)),
-         soli AS (SELECT p.ts, p.pt,
-             CASE WHEN p.ts >= TIMESTAMP '2024-01-10 16:00:00' THEN 0.0
-               ELSE CAST(epoch_us(p.ts) - epoch_us(p.pt) AS DOUBLE)
-                 / 300000000.0 END frac
-           FROM solp p),
-         sol AS (SELECT p.ts,
-             a.dni + (coalesce(b.dni, a.dni) - a.dni) * p.frac dni,
-             a.ghi + (coalesce(b.ghi, a.ghi) - a.ghi) * p.frac ghi,
-             a.dhi + (coalesce(b.dhi, a.dhi) - a.dhi) * p.frac dhi,
-             a.airmass + (coalesce(b.airmass, a.airmass) - a.airmass)
-               * p.frac airmass,
-             a.albedo + (coalesce(b.albedo, a.albedo) - a.albedo)
-               * p.frac albedo,
-             a.poa + (coalesce(b.poa, a.poa) - a.poa) * p.frac poa,
-             a.energy + (coalesce(b.energy, a.energy) - a.energy)
-               * p.frac energy
-           FROM soli p JOIN fen a ON a.t = p.pt
-           LEFT JOIN fen b ON b.t = p.pt + INTERVAL 300 SECOND),
-         trkraw AS (SELECT * FROM (VALUES
-             (TIMESTAMP '2024-01-10 09:30:00', -26.240, -48.640, 5.0),
-             (TIMESTAMP '2024-01-10 09:55:00', -26.237, -48.638, 6.0),
-             (TIMESTAMP '2024-01-10 10:20:00', -26.234, -48.636, 7.0),
-             (TIMESTAMP '2024-01-10 10:45:00', -26.231, -48.634, 8.0),
-             (TIMESTAMP '2024-01-10 11:10:00', -26.228, -48.632, 9.0),
-             (TIMESTAMP '2024-01-10 11:35:00', -26.225, -48.630, 10.0),
-             (TIMESTAMP '2024-01-10 12:00:00', -26.222, -48.628, 11.0),
-             (TIMESTAMP '2024-01-10 12:25:00', -26.219, -48.626, 12.0),
-             (TIMESTAMP '2024-01-10 12:50:00', -26.216, -48.624, 13.0),
-             (TIMESTAMP '2024-01-10 13:15:00', -26.213, -48.622, 14.0)
-           ) v(g_ts, lat, lon, ele)),
-         trk1 AS (SELECT *, lag(lat) OVER w plat, lag(lon) OVER w plon,
-             lag(g_ts) OVER w ptt
-           FROM trkraw WINDOW w AS (ORDER BY g_ts)),
-         trk2 AS (SELECT *,
-             6371.0 * 2 * asin(sqrt(
-               pow(sin(((lat - plat) / 180.0 * pi()) / 2), 2)
-               + cos(plat / 180.0 * pi()) * cos(lat / 180.0 * pi())
-                 * pow(sin(((lon - plon) / 180.0 * pi()) / 2), 2))) dist,
-             (atan2(cos(plat / 180.0 * pi()) * sin((lon - plon) / 180.0 * pi()),
-                sin(plat / 180.0 * pi()) * (cos(plat / 180.0 * pi())
-                  - cos(lat / 180.0 * pi()) * cos((lon - plon) / 180.0 * pi())))
-               * 180.0 / pi()) + 180.0 heading,
-             ((epoch_us(g_ts) - epoch_us(ptt)) // 1000000) % 86400 dts
-           FROM trk1),
-         trk3 AS (SELECT g_ts, lat, lon, ele, heading,
-             CASE WHEN dts = 0 THEN NULL
-                  ELSE dist / (CAST(dts AS DOUBLE) / 3600.0) END speed,
-             sum(coalesce(dist, 0.0)) OVER (ORDER BY g_ts
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) distance
-           FROM trk2),
-         trkf AS (SELECT * FROM trk3
-           WHERE speed IS NOT NULL AND heading IS NOT NULL),
+         """ + seasonForecastSql + """
+         """ + seasonSolarSql(
+           Seq("dni", "ghi", "dhi", "airmass", "albedo")) + """
+         """ + seasonTrackSql + """
          gpsj AS (SELECT g.ts, k.lat, k.lon, k.ele, k.speed, k.heading,
              k.distance
            FROM (SELECT ts FROM rs WHERE ts <= (SELECT c FROM cutoff)) g
@@ -11019,7 +9023,7 @@ object SparkEntry {
            round(j.distance, 6) AS gps_distance
          FROM rs r LEFT JOIN sol s ON s.ts = r.ts
          LEFT JOIN gpsj j ON j.ts = r.ts
-         ORDER BY timestamp""",
+         ORDER BY timestamp"""),
 
     // q65's machinery with (a) every main timestamp shifted by the
     // clock fix +2,730,123,456 µs BEFORE bucketing (the reference
@@ -11031,7 +9035,7 @@ object SparkEntry {
     // (%101 unknown topic, %103 short frame) still drop while the SAME
     // events' MAB19 frames survive.
     "q73_season_mab20" ->
-      """WITH
+      ("""WITH
          mainE AS (SELECT make_timestamp(epoch_us(ts) + 2730123456) ts,
              user_id, event_id FROM events
            WHERE ts BETWEEN TIMESTAMP '2024-01-08 09:00:00'
@@ -11079,147 +9083,16 @@ object SparkEntry {
              'MAB19__PUMPS__PUMPS']) signal) s
            CROSS JOIN (SELECT unnest(generate_series((SELECT lo FROM bnds),
              (SELECT hi FROM bnds), INTERVAL 1 MINUTE)) b) g),
-         dense AS (SELECT grid.signal, grid.b, binned.v
-           FROM grid LEFT JOIN binned USING (signal, b)),
-         selx AS (SELECT signal, b, v,
-             last_value(v IGNORE NULLS) OVER wp pv,
-             first_value(v IGNORE NULLS) OVER wn nv,
-             last_value(CASE WHEN v IS NOT NULL THEN b END IGNORE NULLS)
-               OVER wp pt,
-             first_value(CASE WHEN v IS NOT NULL THEN b END IGNORE NULLS)
-               OVER wn nt
-           FROM dense WINDOW
-             wp AS (PARTITION BY signal ORDER BY b
-                    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW),
-             wn AS (PARTITION BY signal ORDER BY b
-                    ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING)),
-         resam AS (SELECT signal, b, CASE WHEN v IS NOT NULL THEN v
-             WHEN pv IS NOT NULL AND nv IS NOT NULL
-               AND epoch_us(b) - epoch_us(pt) <= 60000000 THEN
-               pv + (nv - pv) * (CAST(epoch_us(b) - epoch_us(pt) AS DOUBLE)
-                 / CAST(epoch_us(nt) - epoch_us(pt) AS DOUBLE))
-             END val FROM selx),
+         """ + seasonInterpSql(60000000L) + """,
          rs AS (SELECT b ts,
              max(CASE WHEN signal = 'MOD17__SENSOR__CURR' THEN val END) s_curr,
              max(CASE WHEN signal = 'MAB19__STATE__STATE' THEN val END) m_state,
              max(CASE WHEN signal = 'MAB19__STATE__ERROR' THEN val END) m_error,
              max(CASE WHEN signal = 'MAB19__PUMPS__PUMPS' THEN val END) m_pumps
            FROM resam GROUP BY b),
-         fc AS (SELECT t, (epoch_us(t) -
-             epoch_us(TIMESTAMP '2024-01-10 10:00:00')) // 300000000 i
-           FROM (SELECT unnest(generate_series(
-             TIMESTAMP '2024-01-10 10:00:00', TIMESTAMP '2024-01-10 17:00:00',
-             INTERVAL 300 SECOND)) t)),
-         fcv AS (SELECT t,
-             500.0 + (i % 7) * 20.0 dni, 300.0 + (i % 5) * 10.0 ghi,
-             100.0 + (i % 3) * 5.0 dhi, 1.5 + (i % 4) * 0.125 airmass,
-             0.06 albedo FROM fc),
-         sp1 AS (SELECT *,
-             CAST(epoch_us(t + INTERVAL 150 SECOND) AS DOUBLE)
-               / 86400000000.0 + 2440587.5 - 2451545.0 AS n,
-             (CAST(epoch_us(t + INTERVAL 150 SECOND) AS DOUBLE)
-               / 3600000000.0) % 24.0 AS hr
-           FROM fcv),
-         sp2 AS (SELECT *,
-             2.1429 - 0.0010394594 * n AS omega,
-             4.8950630 + 0.017202791698 * n AS mlon,
-             6.2400600 + 0.0172019699 * n AS manom FROM sp1),
-         sp3 AS (SELECT *,
-             mlon + 0.03341607 * sin(manom) + 0.00034894 * sin(2.0 * manom)
-               - 0.0001134 - 0.0000203 * sin(omega) AS elon,
-             0.4090928 - 6.2140e-9 * n + 0.0000396 * cos(omega) AS eobl
-           FROM sp2),
-         sp4 AS (SELECT *,
-             CASE WHEN atan2(cos(eobl) * sin(elon), cos(elon)) < 0
-                  THEN atan2(cos(eobl) * sin(elon), cos(elon)) + 2 * pi()
-                  ELSE atan2(cos(eobl) * sin(elon), cos(elon)) END AS ra,
-             asin(sin(eobl) * sin(elon)) AS sdec FROM sp3),
-         sp5 AS (SELECT *,
-             ((6.6974243242 + 0.0657098283 * n + hr) * 15.0
-               + (-48.6417668)) * (pi() / 180.0) - ra AS ha FROM sp4),
-         sp6 AS (SELECT *,
-             acos(cos((-26.243602) * (pi() / 180.0)) * cos(ha) * cos(sdec)
-               + sin(sdec) * sin((-26.243602) * (pi() / 180.0))) AS zen0
-           FROM sp5),
-         sp7 AS (SELECT *,
-             90.0 - ((zen0 + (6371.01 / 149597890.0) * sin(zen0))
-               * 180.0 / pi()) AS elev FROM sp6),
-         sp8 AS (SELECT *,
-             CASE WHEN elev >= -1.0 * (0.26667 + 0.5667) THEN
-               ((101325.0 / 100.0) / 1010.0) * (283.0 / (273.0 + 12.0)) * 1.02
-                 / (60.0 * tan((elev + 10.3 / (elev + 5.11)) / 180.0 * pi()))
-             ELSE 0.0 END AS refr FROM sp7),
-         spz AS (SELECT t, dni, ghi, dhi, airmass, albedo,
-             dni * greatest(cos((90.0 - (elev + refr)) / 180.0 * pi()), 0.0)
-               + dhi AS poa
-           FROM sp8),
-         fsl AS (SELECT * FROM spz
-           WHERE t BETWEEN TIMESTAMP '2024-01-10 11:00:00'
-                       AND TIMESTAMP '2024-01-10 16:00:00'),
-         fen0 AS (SELECT *, lag(poa) OVER w ppoa, lag(t) OVER w plt
-           FROM fsl WINDOW w AS (ORDER BY t)),
-         fen AS (SELECT t, poa,
-             coalesce(sum((poa + ppoa) / 2.0 *
-               (CAST(epoch_us(t) - epoch_us(plt) AS DOUBLE)
-                 / 3600000000.0)) OVER
-               (ORDER BY t ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW),
-             0.0) energy
-           FROM fen0),
-         cutoff AS (SELECT max(ts) - INTERVAL 3 HOUR c FROM rs),
-         solp AS (SELECT r.ts,
-             CASE WHEN r.ts >= TIMESTAMP '2024-01-10 16:00:00'
-               THEN TIMESTAMP '2024-01-10 16:00:00'
-               ELSE make_timestamp(epoch_us(TIMESTAMP '2024-01-10 11:00:00')
-                 + ((epoch_us(r.ts) - epoch_us(TIMESTAMP '2024-01-10 11:00:00'))
-                    // 300000000) * 300000000) END pt
-           FROM rs r
-           WHERE r.ts >= TIMESTAMP '2024-01-10 11:00:00'
-             AND r.ts <= (SELECT c FROM cutoff)),
-         soli AS (SELECT p.ts, p.pt,
-             CASE WHEN p.ts >= TIMESTAMP '2024-01-10 16:00:00' THEN 0.0
-               ELSE CAST(epoch_us(p.ts) - epoch_us(p.pt) AS DOUBLE)
-                 / 300000000.0 END frac
-           FROM solp p),
-         sol AS (SELECT p.ts,
-             a.poa + (coalesce(b.poa, a.poa) - a.poa) * p.frac poa,
-             a.energy + (coalesce(b.energy, a.energy) - a.energy)
-               * p.frac energy
-           FROM soli p JOIN fen a ON a.t = p.pt
-           LEFT JOIN fen b ON b.t = p.pt + INTERVAL 300 SECOND),
-         trkraw AS (SELECT * FROM (VALUES
-             (TIMESTAMP '2024-01-10 09:30:00', -26.240, -48.640, 5.0),
-             (TIMESTAMP '2024-01-10 09:55:00', -26.237, -48.638, 6.0),
-             (TIMESTAMP '2024-01-10 10:20:00', -26.234, -48.636, 7.0),
-             (TIMESTAMP '2024-01-10 10:45:00', -26.231, -48.634, 8.0),
-             (TIMESTAMP '2024-01-10 11:10:00', -26.228, -48.632, 9.0),
-             (TIMESTAMP '2024-01-10 11:35:00', -26.225, -48.630, 10.0),
-             (TIMESTAMP '2024-01-10 12:00:00', -26.222, -48.628, 11.0),
-             (TIMESTAMP '2024-01-10 12:25:00', -26.219, -48.626, 12.0),
-             (TIMESTAMP '2024-01-10 12:50:00', -26.216, -48.624, 13.0),
-             (TIMESTAMP '2024-01-10 13:15:00', -26.213, -48.622, 14.0)
-           ) v(g_ts, lat, lon, ele)),
-         trk1 AS (SELECT *, lag(lat) OVER w plat, lag(lon) OVER w plon,
-             lag(g_ts) OVER w ptt
-           FROM trkraw WINDOW w AS (ORDER BY g_ts)),
-         trk2 AS (SELECT *,
-             6371.0 * 2 * asin(sqrt(
-               pow(sin(((lat - plat) / 180.0 * pi()) / 2), 2)
-               + cos(plat / 180.0 * pi()) * cos(lat / 180.0 * pi())
-                 * pow(sin(((lon - plon) / 180.0 * pi()) / 2), 2))) dist,
-             (atan2(cos(plat / 180.0 * pi()) * sin((lon - plon) / 180.0 * pi()),
-                sin(plat / 180.0 * pi()) * (cos(plat / 180.0 * pi())
-                  - cos(lat / 180.0 * pi()) * cos((lon - plon) / 180.0 * pi())))
-               * 180.0 / pi()) + 180.0 heading,
-             ((epoch_us(g_ts) - epoch_us(ptt)) // 1000000) % 86400 dts
-           FROM trk1),
-         trk3 AS (SELECT g_ts, lat, lon, ele, heading,
-             CASE WHEN dts = 0 THEN NULL
-                  ELSE dist / (CAST(dts AS DOUBLE) / 3600.0) END speed,
-             sum(coalesce(dist, 0.0)) OVER (ORDER BY g_ts
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) distance
-           FROM trk2),
-         trkf AS (SELECT * FROM trk3
-           WHERE speed IS NOT NULL AND heading IS NOT NULL),
+         """ + seasonForecastSql + """
+         """ + seasonSolarSql(Nil) + """
+         """ + seasonTrackSql + """
          gpsj AS (SELECT g.ts, k.speed, k.distance
            FROM (SELECT ts FROM rs WHERE ts <= (SELECT c FROM cutoff)) g
            ASOF LEFT JOIN trkf k ON g.ts >= k.g_ts)
@@ -11234,7 +9107,7 @@ object SparkEntry {
            round(j.distance, 6) AS gps_distance
          FROM rs r LEFT JOIN sol s ON s.ts = r.ts
          LEFT JOIN gpsj j ON j.ts = r.ts
-         ORDER BY timestamp""",
+         ORDER BY timestamp"""),
 
     "q30_resample_ms" ->
       """SELECT event_type,
@@ -11388,7 +9261,7 @@ object SparkEntry {
     // keep-min, near-dup closure = q34's recursive CTE, containment =
     // q51's scoring, buckets = q36's md5 hash, packing = q41's window.
     "q50_curate" ->
-      """WITH corpus AS (
+      ("""WITH corpus AS (
            SELECT doc_id, text FROM documents
            UNION ALL
            SELECT doc_id + 1000000, text || ' xyzzy qbf'
@@ -11424,19 +9297,7 @@ object SparkEntry {
          sh AS (SELECT DISTINCT doc_id, array_to_string(t[i:i+3], ' ') s
            FROM toks, LATERAL (SELECT unnest(generate_series(1,
              greatest(len(t)-3, 1))) AS i)),
-         sizes AS (SELECT doc_id, count(*) sz FROM sh GROUP BY 1),
-         inter AS (SELECT a.doc_id a, b.doc_id b, count(*) i FROM sh a
-           JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id GROUP BY 1,2),
-         pairs AS (SELECT a, b FROM inter
-           JOIN sizes sa ON sa.doc_id = a JOIN sizes sb ON sb.doc_id = b
-           WHERE i*1.0/(sa.sz+sb.sz-i) >= 0.5),
-         edges AS (SELECT a x, b y FROM pairs UNION SELECT b, a FROM pairs),
-         reach AS (
-           WITH RECURSIVE r(x, y) AS (
-             SELECT x, y FROM edges
-             UNION
-             SELECT r.x, e.y FROM r JOIN edges e ON r.y = e.x)
-           SELECT x, y FROM r),
+         """ + shingleClosureSql + """,
          comp AS (SELECT x AS doc_id, least(x, min(y)) AS component
            FROM reach GROUP BY x),
          kept AS (SELECT e.doc_id, e.text FROM ex e
@@ -11477,7 +9338,7 @@ object SparkEntry {
            FROM sp)
          SELECT doc_id, split, shard, prior // 2048 AS seq_id,
            prior % 2048 AS seq_offset
-         FROM pk ORDER BY doc_id""",
+         FROM pk ORDER BY doc_id"""),
 
     "q51_containment_decontam" ->
       """WITH lt AS (SELECT doc_id, lower(trim(text)) tx FROM documents),
@@ -11523,6 +9384,924 @@ object SparkEntry {
     * + resample + gap-limited interpolation machinery parameterized by
     * the bucket width (µs). The interpolation gap limit replicates
     * lib/resampler.py:66 — max(1, 60 s / period) ticks. */
+  // ---- shared oracle fragments -------------------------------------
+  // Each CTE or clause that several oracles replay lives here once;
+  // the oracles splice it into their SQL.
+
+  /** The trigram LM oracles' backoff counts over toks' token lists:
+    * bigram context totals (c12), kept trigrams (c3 >= 2), bigram
+    * counts and their contexts (cb, cw), unigram counts and the token
+    * total. */
+  private def trigramBackoffCountsSql: String =
+    """c12 AS (SELECT w1, w2, CAST(sum(c3) AS BIGINT) c12 FROM c3all
+           GROUP BY 1, 2),
+         c3 AS (SELECT * FROM c3all WHERE c3 >= 2),
+         bg0 AS (SELECT unnest([{'u': tk[i], 'v': tk[i + 1]}
+               for i in generate_series(1, len(tk) - 1)]) AS b
+           FROM toks WHERE len(tk) >= 2),
+         cb AS (SELECT b.u AS w2, b.v AS w3, count(*) cb FROM bg0
+           GROUP BY 1, 2),
+         cw AS (SELECT w2, CAST(sum(cb) AS BIGINT) cw FROM cb GROUP BY 1),
+         uni AS (SELECT t AS w3, count(*) cu
+           FROM (SELECT unnest(tk) AS t FROM toks) GROUP BY 1),
+         tot AS (SELECT CAST(sum(cu) AS BIGINT) T FROM uni),"""
+
+  /** The exact-tier takedown oracles' inputs (q128, q139): every third
+    * doc accepted, a batch of accepted copies, novel docs and their
+    * repeats, each text's first arrival, and the accepted and
+    * taken-down text sets. */
+  private def exactTakedownBatchSql: String =
+    """WITH accepted AS (SELECT doc_id, text FROM documents WHERE doc_id % 3 = 0),
+         batch AS (
+           SELECT doc_id + 1000000 AS doc_id, text FROM accepted WHERE doc_id % 6 = 0
+           UNION ALL SELECT doc_id + 2000000, text FROM accepted WHERE doc_id % 6 = 3
+           UNION ALL SELECT doc_id + 3000000, text FROM documents WHERE doc_id % 3 = 1
+           UNION ALL SELECT doc_id + 3500000, text FROM documents
+             WHERE doc_id % 3 = 1 AND doc_id % 5 = 1),
+         firsts AS (
+           SELECT doc_id, text,
+             doc_id = min(doc_id) OVER (PARTITION BY text) AS is_first
+           FROM batch),
+         acc_texts AS (SELECT DISTINCT text FROM accepted),
+         tomb_texts AS (SELECT DISTINCT text FROM accepted WHERE doc_id % 6 = 0),"""
+
+  /** Shingle Jaccard closure over sh: set sizes, pair intersections,
+    * pairs at Jaccard >= 0.5, and their transitive closure (reach). */
+  private def shingleClosureSql: String =
+    """sizes AS (SELECT doc_id, count(*) sz FROM sh GROUP BY 1),
+         inter AS (SELECT a.doc_id a, b.doc_id b, count(*) i FROM sh a
+           JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id GROUP BY 1,2),
+         pairs AS (SELECT a, b FROM inter
+           JOIN sizes sa ON sa.doc_id = a JOIN sizes sb ON sb.doc_id = b
+           WHERE i*1.0/(sa.sz+sb.sz-i) >= 0.5),
+         edges AS (SELECT a x, b y FROM pairs UNION SELECT b, a FROM pairs),
+         reach AS (
+           WITH RECURSIVE r(x, y) AS (
+             SELECT x, y FROM edges
+             UNION
+             SELECT r.x, e.y FROM r JOIN edges e ON r.y = e.x)
+           SELECT x, y FROM r)"""
+
+  /** The engine's text normalization chain over column t (q106 and its
+    * reuse): typographic quotes, dashes and spaces folded, ellipses
+    * expanded, line endings unified, control and zero-width characters
+    * dropped, blank runs squeezed, and edge newlines trimmed. */
+  private def normalizeTextSql: String =
+    """trim(regexp_replace(regexp_replace(
+           regexp_replace(
+             regexp_replace(
+               regexp_replace(
+                 regexp_replace(
+                   translate(t,
+                     chr(8216) || chr(8217) || chr(8218) || chr(8220) ||
+                     chr(8221) || chr(8222) || chr(8211) || chr(8212) ||
+                     chr(8722) || chr(160),
+                     chr(39) || chr(39) || chr(39) || chr(34) ||
+                     chr(34) || chr(34) || '--- '),
+                 chr(8230), '...', 'g'),
+               '\r\n?', chr(10), 'g'),
+             '[\x00-\x08\x0B\x0C\x0E-\x1F\x7F\x{200B}\x{200C}\x{200D}\x{FEFF}]',
+             '', 'g'),
+           '[ \t]+', ' ', 'g'),"""
+
+  /** The release gate's metric rows (q102, q103): the diff counts and
+    * fractions of f, the three max-fraction thresholds and the pass
+    * decision. */
+  private def releaseGateRowsSql: String =
+    """SELECT 'diff:n_prev' AS metric, np AS value FROM f
+           UNION ALL SELECT 'diff:n_next', nn FROM f
+           UNION ALL SELECT 'diff:n_added', na FROM f
+           UNION ALL SELECT 'diff:n_removed', nr FROM f
+           UNION ALL SELECT 'diff:n_changed', nc FROM f
+           UNION ALL SELECT 'diff:n_unchanged', nu FROM f
+           UNION ALL SELECT 'diff:added_frac', af FROM f
+           UNION ALL SELECT 'diff:removed_frac', rf FROM f
+           UNION ALL SELECT 'diff:changed_frac', cf FROM f
+           UNION ALL SELECT 'gate:max_added_frac', 0.15 FROM f
+           UNION ALL SELECT 'gate:max_removed_frac', 0.15 FROM f
+           UNION ALL SELECT 'gate:max_changed_frac', 0.10 FROM f
+           UNION ALL SELECT 'gate:pass',
+             CASE WHEN af <= 0.15 AND rf <= 0.15 AND cf <= 0.10
+                  THEN 1.0 ELSE 0.0 END FROM f"""
+
+  /** Winnowing over `src`'s token lists `t` (4-gram md5 hashes, window
+    * 4, rightmost minimum): each `id`'s hash list in `hs` and its
+    * selected fingerprint positions in `sel`. */
+  private def winnowSql(src: String, id: String, hs: String,
+                        sel: String): String =
+    s"""$hs AS (SELECT $id,
+             [('0x' || substring(md5(array_to_string(t[p : p + 3], ' ')),
+                 1, 15))::BIGINT
+               for p in generate_series(1, greatest(len(t) - 3, 1))] AS h
+           FROM $src),
+         $sel AS (SELECT DISTINCT $id,
+             s - 1 + list_max([i for i in generate_series(1, len(sl))
+               if sl[i] = list_min(sl)]) AS pos
+           FROM (SELECT $id, h, least(4, len(h)) AS win FROM $hs) x,
+             LATERAL (SELECT unnest(generate_series(1, len(h) - win + 1))
+               AS s),
+             LATERAL (SELECT h[s : s + win - 1] AS sl)),"""
+
+  /** The incremental-dedup batch: odd docs plus two appended-tail
+    * strata of every 14th doc, tokenized into 3-word shingles (bsh). */
+  private def decontamBatchSql: String =
+    """batch AS (
+           SELECT doc_id, lower(trim(text)) tx
+           FROM documents WHERE doc_id % 2 = 1
+           UNION ALL
+           SELECT doc_id + 1000000, lower(trim(text || ' xyzzy qbf'))
+           FROM documents WHERE doc_id % 14 = 0
+           UNION ALL
+           SELECT doc_id + 2000000, lower(trim(text || ' plugh tail'))
+           FROM documents WHERE doc_id % 14 = 7),
+         bt AS (SELECT doc_id, regexp_split_to_array(tx, '\s+') t FROM batch),
+         bsh AS (SELECT DISTINCT doc_id, array_to_string(t[i:i+3], ' ') s
+           FROM bt, LATERAL (SELECT unnest(generate_series(1,
+             greatest(len(t)-3, 1))) AS i)),
+         ot AS (SELECT doc_id, regexp_split_to_array(tx, '\s+') t FROM olds),"""
+
+  /** The ANN takedown oracles' brute force: perturbed first-10 queries
+    * against the corpus (s) and each query's top-1 before any
+    * takedown (pre). */
+  private def annTakedownSql: String =
+    """s AS (SELECT query_id, c.vec_id AS neighbor_id,
+             list_dot_product(qv, c.v) /
+               (sqrt(list_dot_product(qv, qv)) * sqrt(list_dot_product(c.v, c.v)))
+               AS cos_raw
+           FROM q CROSS JOIN corpus c),
+         pre AS (SELECT query_id, neighbor_id AS pre_top1 FROM (
+             SELECT query_id, neighbor_id, row_number() OVER (PARTITION BY query_id
+               ORDER BY cos_raw DESC, neighbor_id) AS rn FROM s) WHERE rn = 1),"""
+
+  /** Brute-force cosine of the ANN recall oracles: the first 10
+    * embeddings, perturbed (x * 1.001 + 0.0005), as queries against
+    * every corpus vector. */
+  private def bruteCosineSql: String =
+    """q AS (SELECT vec_id + 10000 AS query_id,
+             list_transform(v, x -> x * 1.001 + 0.0005) AS qv
+           FROM c WHERE vec_id < 10),
+         s AS (SELECT query_id, c.vec_id AS neighbor_id,
+             list_dot_product(qv, c.v) /
+               (sqrt(list_dot_product(qv, qv)) * sqrt(list_dot_product(c.v, c.v)))
+               AS cos_raw
+           FROM q CROSS JOIN c),
+         r AS (SELECT query_id, neighbor_id, row_number() OVER
+             (PARTITION BY query_id ORDER BY cos_raw DESC, neighbor_id) AS rank"""
+
+  /** The cosine near-duplicate pairs of the vector dedup oracles
+    * (pairs of c at cosine >= 0.9) and their transitive closure. */
+  private def vectorComponentsSql: String =
+    """s AS (SELECT a.vec_id a, b.vec_id b FROM c a
+           JOIN c b ON a.vec_id < b.vec_id
+           WHERE list_dot_product(a.v, b.v) /
+             (sqrt(list_dot_product(a.v, a.v)) *
+              sqrt(list_dot_product(b.v, b.v))) >= 0.9),
+         edges AS (SELECT a x, b y FROM s UNION SELECT b, a FROM s),
+         reach AS (
+           WITH RECURSIVE r(x, y) AS (
+             SELECT x, y FROM edges
+             UNION
+             SELECT r.x, e.y FROM r JOIN edges e ON r.y = e.x)
+           SELECT x, y FROM r),"""
+
+  /** The text cascades' arrival strata (the four- and five-tier
+    * cascade oracles): exact copies, appended-tail edits,
+    * word-reversed copies, novel base docs, and the empty, null and
+    * too-short payloads, with each arrival's quality flag. */
+  private def cascadeArrivalsSql: String =
+    """arr AS (
+           SELECT doc_id + 400000 AS doc_id, text FROM acc
+           WHERE doc_id % 20 = 0
+           UNION ALL SELECT doc_id + 500000, text || ' xyzzy qbf'
+           FROM acc WHERE doc_id % 20 = 4
+           UNION ALL SELECT doc_id + 600000,
+             array_to_string(list_reverse(list_filter(
+               regexp_split_to_array(trim(text), '\s+'), t -> t != '')), ' ')
+           FROM acc WHERE doc_id % 20 = 8
+           UNION ALL SELECT doc_id + 700000, text FROM base
+           WHERE doc_id % 20 = 1
+           UNION ALL SELECT doc_id, text FROM (VALUES (900001, ''),
+             (900002, NULL), (900003, 'too short')) t(doc_id, text)),
+         qual AS (SELECT doc_id,
+           coalesce(length(trim(text)) >= 20 AND
+             length(regexp_replace(text, '[A-Za-z0-9\s]', '', 'g'))
+               <= 0.3 * length(text), FALSE) AS qok
+           FROM arr),"""
+
+  /** The streamed ANN admission oracle (q120 broadcast probe, q152
+    * batched durable-index search): near-copies of every third vector
+    * against the accepted thirds, brute-force cosine argmax and tau
+    * 0.9. */
+  private def annAdmissionOracleSql: String =
+    """WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
+         acc AS (SELECT * FROM e WHERE vec_id % 3 = 0),
+         cand AS (SELECT c.vec_id,
+             CASE WHEN c.vec_id % 3 = 1 AND src.v IS NOT NULL
+               THEN list_transform(src.v, x -> x * 1.001 + 0.0005)
+               ELSE c.v END AS v
+           FROM e c LEFT JOIN e src ON src.vec_id = c.vec_id - 1
+           WHERE c.vec_id % 3 <> 0),
+         s AS (SELECT cand.vec_id, acc.vec_id AS aid,
+             list_dot_product(cand.v, acc.v) /
+               (sqrt(list_dot_product(cand.v, cand.v)) *
+                sqrt(list_dot_product(acc.v, acc.v))) AS cos_raw
+           FROM cand CROSS JOIN acc),
+         r AS (SELECT vec_id, aid, cos_raw, row_number() OVER
+             (PARTITION BY vec_id ORDER BY cos_raw DESC, aid) AS rk
+           FROM s)
+         SELECT vec_id, cos_raw < 0.9 AS admitted,
+           CASE WHEN cos_raw >= 0.9 THEN aid END AS match_id
+         FROM r WHERE rk = 1
+         ORDER BY vec_id"""
+
+  /** The dead-letter ingest oracle (q142 appends, q146 idempotent
+    * sink): argmin dHash admission for the healthy route and the
+    * deterministic reason rows for the quarantined one. */
+  private def quarantineOracleSql: String =
+    """WITH refs AS (
+           SELECT i AS ref_id, i AS src, 0 AS shift FROM range(1, 9) t(i)),
+         arrivals AS (
+           SELECT 500 + i AS media_id, i AS src, 0 AS shift FROM range(1, 4) t(i)
+           UNION ALL SELECT 500 + i, i, 0 FROM range(21, 23) t(i)),
+         """ + refDhashSql + """
+         best AS (
+           SELECT s.media_id,
+             min_by(r.ref_id,
+               bit_count(xor(s.dhash, r.sig))::BIGINT * 1000 + r.ref_id)
+               AS match_id
+           FROM ah s JOIN rh r ON bit_count(xor(s.dhash, r.sig)) <= 6
+           GROUP BY s.media_id)
+         SELECT a.media_id, 'main' AS routed, a.dhash,
+           b.match_id IS NULL AS admitted, b.match_id,
+           NULL::VARCHAR AS reason
+         FROM ah a LEFT JOIN best b USING (media_id)
+         UNION ALL
+         SELECT media_id, 'quarantine', NULL::BIGINT, NULL::BOOLEAN,
+           NULL::BIGINT, reason
+         FROM (VALUES (9001, 'undecodable'), (9002, 'empty_payload'),
+           (9003, 'null_payload')) t(media_id, reason)
+         ORDER BY media_id"""
+
+  /** The season oracles' solar join (q65 with the forecast columns
+    * `cols`, q73 with POA only): the cumulative POA energy, the 3-hour
+    * cutoff, each telemetry minute's 5-minute forecast slot, and the
+    * linear interpolation of `cols`, POA and energy inside it. */
+  private def seasonSolarSql(cols: Seq[String]): String = {
+    val lerp = (cols :+ "poa" :+ "energy").map(c =>
+      s"a.$c + (coalesce(b.$c, a.$c) - a.$c) * p.frac $c")
+    s"""fen AS (SELECT t, ${cols.map(_ + ", ").mkString}poa,
+             coalesce(sum((poa + ppoa) / 2.0 *
+               (CAST(epoch_us(t) - epoch_us(plt) AS DOUBLE)
+                 / 3600000000.0)) OVER
+               (ORDER BY t ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW),
+             0.0) energy
+           FROM fen0),
+         cutoff AS (SELECT max(ts) - INTERVAL 3 HOUR c FROM rs),
+         solp AS (SELECT r.ts,
+             CASE WHEN r.ts >= TIMESTAMP '2024-01-10 16:00:00'
+               THEN TIMESTAMP '2024-01-10 16:00:00'
+               ELSE make_timestamp(epoch_us(TIMESTAMP '2024-01-10 11:00:00')
+                 + ((epoch_us(r.ts) - epoch_us(TIMESTAMP '2024-01-10 11:00:00'))
+                    // 300000000) * 300000000) END pt
+           FROM rs r
+           WHERE r.ts >= TIMESTAMP '2024-01-10 11:00:00'
+             AND r.ts <= (SELECT c FROM cutoff)),
+         soli AS (SELECT p.ts, p.pt,
+             CASE WHEN p.ts >= TIMESTAMP '2024-01-10 16:00:00' THEN 0.0
+               ELSE CAST(epoch_us(p.ts) - epoch_us(p.pt) AS DOUBLE)
+                 / 300000000.0 END frac
+           FROM solp p),
+         sol AS (SELECT p.ts,
+             ${lerp.mkString(",\n             ")}
+           FROM soli p JOIN fen a ON a.t = p.pt
+           LEFT JOIN fen b ON b.t = p.pt + INTERVAL 300 SECOND),"""
+  }
+
+  /** The release-diff counts of q102/q103: each doc's
+    * added/removed/changed/unchanged status of the next corpus n
+    * against the previous one p, and the status totals. */
+  private def releaseDiffSql: String =
+    """d AS (
+           SELECT CASE WHEN p.doc_id IS NULL THEN 'added'
+                       WHEN n.doc_id IS NULL THEN 'removed'
+                       WHEN p.text IS NOT DISTINCT FROM n.text THEN 'unchanged'
+                       ELSE 'changed' END AS status
+           FROM p FULL OUTER JOIN n ON p.doc_id = n.doc_id
+         ),
+         c AS (SELECT
+           CAST(sum(CASE WHEN status = 'added' THEN 1 ELSE 0 END) AS DOUBLE) AS na,
+           CAST(sum(CASE WHEN status = 'removed' THEN 1 ELSE 0 END) AS DOUBLE) AS nr,
+           CAST(sum(CASE WHEN status = 'changed' THEN 1 ELSE 0 END) AS DOUBLE) AS nc,
+           CAST(sum(CASE WHEN status = 'unchanged' THEN 1 ELSE 0 END) AS DOUBLE) AS nu
+           FROM d),
+         w AS (SELECT na, nr, nc, nu,
+           nr + nc + nu AS np, na + nc + nu AS nn FROM c),"""
+
+  /** The 3-word shingle overlap of the decontamination oracles: the
+    * accepted docs' shingle set (osh) beside the batch's (bsh), both
+    * set sizes, and every batch/accepted pair's intersection (hx). */
+  private def shingleOverlapSql: String =
+    """osh AS (SELECT DISTINCT doc_id, array_to_string(t[i:i+3], ' ') s
+           FROM ot, LATERAL (SELECT unnest(generate_series(1,
+             greatest(len(t)-3, 1))) AS i)),
+         bsz AS (SELECT doc_id, count(*) sz FROM bsh GROUP BY 1),
+         osz AS (SELECT doc_id, count(*) sz FROM osh GROUP BY 1),
+         hx AS (SELECT b.doc_id bid, o.doc_id oid, count(*) i
+           FROM bsh b JOIN osh o ON b.s = o.s GROUP BY 1, 2),"""
+
+  /** The batch's own near-duplicate components: batch pairs at shingle
+    * Jaccard >= 0.5, their transitive closure, and each doc's
+    * component (the smallest doc id reachable). */
+  private def batchComponentsSql: String =
+    """wx AS (SELECT a.doc_id a, b.doc_id b, count(*) i FROM bsh a
+           JOIN bsh b ON a.s = b.s AND a.doc_id < b.doc_id GROUP BY 1, 2),
+         wpairs AS (SELECT a, b FROM wx
+           JOIN bsz sa ON sa.doc_id = a JOIN bsz sb ON sb.doc_id = b
+           WHERE i*1.0/(sa.sz + sb.sz - i) >= 0.5),
+         edges AS (SELECT a x, b y FROM wpairs UNION SELECT b, a FROM wpairs),
+         reach AS (
+           WITH RECURSIVE r(x, y) AS (
+             SELECT x, y FROM edges
+             UNION
+             SELECT r.x, e.y FROM r JOIN edges e ON r.y = e.x)
+           SELECT x, y FROM r),
+         comp AS (SELECT x AS doc_id, least(x, min(y)) AS comp
+           FROM reach GROUP BY x),"""
+
+  /** The signed-feature cosine of the semantic text tiers: lower-cased
+    * whitespace tokens hashed into 64 signed md5 buckets per doc (zero
+    * buckets dropped), doc norms, and the cosine of every arrival
+    * against every accepted doc sharing a bucket (cosr). */
+  private def simhashCosineSql: String =
+    """toks AS (SELECT is_acc, doc_id,
+           unnest(list_filter(regexp_split_to_array(lower(trim(text)), '\s+'),
+             t -> t != '')) AS t
+           FROM alltexts),
+         vecs AS (SELECT is_acc, doc_id,
+           ('0x' || substring(md5(t), 1, 15))::BIGINT % 64 AS b,
+           sum(CASE WHEN (('0x' || substring(md5(t), 1, 15))::BIGINT // 64) % 2 = 0
+             THEN 1.0 ELSE -1.0 END) AS v
+           FROM toks GROUP BY 1, 2, 3
+           HAVING sum(CASE WHEN (('0x' || substring(md5(t), 1, 15))::BIGINT // 64) % 2 = 0
+             THEN 1.0 ELSE -1.0 END) != 0),
+         norms AS (SELECT is_acc, doc_id, sqrt(sum(v * v)) AS n
+           FROM vecs GROUP BY 1, 2),
+         dots AS (SELECT q.doc_id AS doc_id, c.doc_id AS acc_id,
+             sum(q.v * c.v) AS dp
+           FROM vecs q JOIN vecs c
+             ON q.b = c.b AND q.is_acc = 0 AND c.is_acc = 1
+           GROUP BY 1, 2),
+         cosr AS (SELECT d.doc_id, d.acc_id,
+             d.dp / (qn.n * cn.n) AS cosv
+           FROM dots d
+             JOIN norms qn ON qn.doc_id = d.doc_id AND qn.is_acc = 0
+             JOIN norms cn ON cn.doc_id = d.acc_id AND cn.is_acc = 1),"""
+
+  /** The blind-rate window of the LR/DSIR fitted-table oracles: each
+    * scored feature's bucket against the known buckets before
+    * (`known_a`) and after (`known_b`) a refit, and the two chained
+    * window decisions at the 0.2 threshold. */
+  private def blindWindowSql: String =
+    """soccs AS (SELECT
+             ('0x' || substring(md5(feat), 1, 15))::BIGINT % 65536 AS b
+           FROM fdr WHERE feat <> ''),
+         pre AS (SELECT count(*) AS n,
+             sum(CASE WHEN k.b IS NULL THEN 1 ELSE 0 END)::BIGINT
+               AS blind
+           FROM soccs s LEFT JOIN known_a k ON k.b = s.b),
+         post AS (SELECT
+             sum(CASE WHEN k.b IS NULL THEN 1 ELSE 0 END)::BIGINT
+               AS blind
+           FROM soccs s LEFT JOIN known_b k ON k.b = s.b),
+         c1 AS (SELECT pre.n, pre.blind AS pre_blind,
+             pre.blind > 0.2 * pre.n AS f1,
+             CASE WHEN pre.blind > 0.2 * pre.n THEN post.blind
+               ELSE pre.blind END AS post1
+           FROM pre CROSS JOIN post),
+         c2 AS (SELECT c1.n, c1.post1 AS pre_blind,
+             c1.post1 > 0.2 * c1.n AS f2,
+             CASE WHEN c1.post1 > 0.2 * c1.n THEN post.blind
+               ELSE c1.post1 END AS post2
+           FROM c1 CROSS JOIN post)
+         SELECT 1::BIGINT AS step, n AS n_sample_feats,
+           pre_blind AS pre_blind_feats, f1 AS refit_fired,
+           post1 AS post_blind_feats, f1 AS epoch_changed
+         FROM c1
+         UNION ALL
+         SELECT 2::BIGINT, n, pre_blind, f2, post2, f2 FROM c2"""
+
+  /** The media cascades' perceptual inputs (q159, q167, q168): the
+    * planted refs and arrival strata, the refs-1..6 dHash window (rh)
+    * and the arrivals' dHash (ah), both pixel formulas on the 9x8
+    * gradient grid. */
+  private def mediaCascadeDhashSql: String =
+    """WITH refs AS (SELECT i AS ref_id, i AS src, 0 AS shift
+           FROM range(1, 11) t(i)),
+         arr AS (
+           SELECT 500 + i AS media_id, i AS src, 0 AS shift,
+             'sig' AS kind FROM range(1, 4) t(i)
+           UNION ALL SELECT 510 + i, i, 4, 'sig' FROM range(1, 4) t(i)
+           UNION ALL SELECT 520 + i, i, 0, 'sig' FROM range(7, 10) t(i)
+           UNION ALL SELECT 530 + i, i, 0, 'novel' FROM range(1, 4) t(i)),
+         rg AS (SELECT ref_id, gy, gx,
+             (src*31 + (gx*16//9)*(11 + src % 7) + (gy*12//8)*29
+               + (gx*16//9)*(gy*12//8)*(1 + src % 3) + shift) % 256 AS v
+           FROM refs, range(0, 8) t1(gy), range(0, 9) t2(gx)
+           WHERE ref_id <= 6),
+         rh AS (SELECT a.ref_id,
+             bit_or(CASE WHEN b.v > a.v THEN
+                 CASE WHEN a.gy*8 + a.gx = 63 THEN -9223372036854775807 - 1
+                   ELSE 1::BIGINT << (a.gy*8 + a.gx) END
+               ELSE 0::BIGINT END) AS sig
+           FROM rg a JOIN rg b ON a.ref_id = b.ref_id
+             AND b.gy = a.gy AND b.gx = a.gx + 1
+           WHERE a.gx < 8 GROUP BY a.ref_id),
+         ag AS (SELECT media_id, gy, gx,
+             CASE WHEN kind = 'novel' THEN
+               (src*53 + (gx*16//9)*29 + (gy*12//8)*7
+                 + (gx*16//9)*(gy*12//8)*2 + 101) % 256
+             ELSE
+               (src*31 + (gx*16//9)*(11 + src % 7) + (gy*12//8)*29
+                 + (gx*16//9)*(gy*12//8)*(1 + src % 3) + shift) % 256
+             END AS v
+           FROM arr, range(0, 8) t1(gy), range(0, 9) t2(gx)),
+         ah AS (SELECT a.media_id,
+             bit_or(CASE WHEN b.v > a.v THEN
+                 CASE WHEN a.gy*8 + a.gx = 63 THEN -9223372036854775807 - 1
+                   ELSE 1::BIGINT << (a.gy*8 + a.gx) END
+               ELSE 0::BIGINT END) AS dhash"""
+
+  /** The media cascades' vector tier (q159, q167, q168): both pixel
+    * formulas on the 8x8 embed lattice, integer-exact dots and cosine
+    * norms (the caller ranks cosr). */
+  private def mediaCascadeEmbedSql: String =
+    """re AS (SELECT ref_id, gy*8 + gx AS i,
+             (src*31 + (gx*16//8)*(11 + src % 7) + (gy*12//8)*29
+               + (gx*16//8)*(gy*12//8)*(1 + src % 3) + shift) % 256 AS v
+           FROM refs, range(0, 8) a(gy), range(0, 8) b(gx)),
+         ae AS (SELECT media_id, gy*8 + gx AS i,
+             CASE WHEN kind = 'novel' THEN
+               (src*53 + (gx*16//8)*29 + (gy*12//8)*7
+                 + (gx*16//8)*(gy*12//8)*2 + 101) % 256
+             ELSE
+               (src*31 + (gx*16//8)*(11 + src % 7) + (gy*12//8)*29
+                 + (gx*16//8)*(gy*12//8)*(1 + src % 3) + shift) % 256
+             END AS v
+           FROM arr, range(0, 8) a(gy), range(0, 8) b(gx)),
+         dots AS (SELECT a.media_id, r.ref_id, sum(a.v * r.v) AS dp
+           FROM ae a JOIN re r ON a.i = r.i GROUP BY 1, 2),
+         an AS (SELECT media_id, sqrt(sum(v*v)) AS n FROM ae GROUP BY 1),
+         rn2 AS (SELECT ref_id, sqrt(sum(v*v)) AS n FROM re GROUP BY 1),
+         cosr AS (SELECT d.media_id, d.ref_id, d.dp / (an.n * rn2.n) AS cosv
+           FROM dots d JOIN an USING (media_id) JOIN rn2 USING (ref_id)),"""
+
+  /** Both sides of the dHash admission oracles (q126, q134, q137,
+    * q142, q146): the planted pixel formula on the 9x8 gradient grid
+    * and the packed row-gradient bits of every ref (`rh.sig`) and every
+    * arrival (`ah.dhash`). */
+  private def refDhashSql: String =
+    """rg AS (
+           SELECT ref_id, gy, gx,
+             (src*31 + (gx*16//9)*(11 + src % 7) + (gy*12//8)*29
+               + (gx*16//9)*(gy*12//8)*(1 + src % 3) + shift) % 256 AS v
+           FROM refs, range(0, 8) t1(gy), range(0, 9) t2(gx)),
+         rh AS (
+           SELECT a.ref_id,
+             bit_or(CASE WHEN b.v > a.v THEN
+                 CASE WHEN a.gy*8 + a.gx = 63 THEN -9223372036854775807 - 1
+                   ELSE 1::BIGINT << (a.gy*8 + a.gx) END
+               ELSE 0::BIGINT END) AS sig
+           FROM rg a JOIN rg b ON a.ref_id = b.ref_id
+             AND b.gy = a.gy AND b.gx = a.gx + 1
+           WHERE a.gx < 8 GROUP BY a.ref_id),
+         ag AS (
+           SELECT media_id, gy, gx,
+             (src*31 + (gx*16//9)*(11 + src % 7) + (gy*12//8)*29
+               + (gx*16//9)*(gy*12//8)*(1 + src % 3) + shift) % 256 AS v
+           FROM arrivals, range(0, 8) t1(gy), range(0, 9) t2(gx)),
+         ah AS (
+           SELECT a.media_id,
+             bit_or(CASE WHEN b.v > a.v THEN
+                 CASE WHEN a.gy*8 + a.gx = 63 THEN -9223372036854775807 - 1
+                   ELSE 1::BIGINT << (a.gy*8 + a.gx) END
+               ELSE 0::BIGINT END) AS dhash
+           FROM ag a JOIN ag b ON a.media_id = b.media_id
+             AND b.gy = a.gy AND b.gx = a.gx + 1
+           WHERE a.gx < 8 GROUP BY a.media_id),"""
+
+  /** The audio-embedding oracle (q150 batch, q151 streamed): PCM
+    * formula, channel mix, k*frames div 64 window energies, cosine
+    * argmax and tau 0.95; corrupt and short clips admit. */
+  private def audioEmbedOracleSql: String =
+    """WITH refs AS (SELECT i AS ref_id, i AS src,
+             CASE WHEN i <= 4 THEN 1 ELSE 2 END AS ch, 1 AS scale
+           FROM range(1, 9) t(i)),
+         arr AS (
+           SELECT 500 + i AS media_id, i AS src,
+             CASE WHEN i <= 4 THEN 1 ELSE 2 END AS ch, 1 AS scale
+           FROM range(1, 5) t(i)
+           UNION ALL SELECT 510 + i, i, 2, 2 FROM range(5, 9) t(i)
+           UNION ALL SELECT 520 + i, 20 + i, 1, 1 FROM range(1, 4) t(i)),
+         rmix AS (SELECT ref_id, i,
+             sum((((src*2654435761 + i*i*40503 + i*977 + c*997) % 128)
+               - 64) * scale) AS m
+           FROM refs, range(0, 200) s(i), range(0, 2) cc(c)
+           WHERE c < ch GROUP BY 1, 2),
+         re AS (SELECT ref_id, k, sum(m*m) AS e
+           FROM rmix, range(0, 64) w(k)
+           WHERE i >= k*200//64 AND i < (k+1)*200//64 GROUP BY 1, 2),
+         amix AS (SELECT media_id, i,
+             sum((((src*2654435761 + i*i*40503 + i*977 + c*997) % 128)
+               - 64) * scale) AS m
+           FROM arr, range(0, 200) s(i), range(0, 2) cc(c)
+           WHERE c < ch GROUP BY 1, 2),
+         ae AS (SELECT media_id, k, sum(m*m) AS e
+           FROM amix, range(0, 64) w(k)
+           WHERE i >= k*200//64 AND i < (k+1)*200//64 GROUP BY 1, 2),
+         dots AS (SELECT a.media_id, r.ref_id, sum(a.e * r.e) AS dp
+           FROM ae a JOIN re r ON a.k = r.k GROUP BY 1, 2),
+         an AS (SELECT media_id, sqrt(sum(e*e)) AS n FROM ae GROUP BY 1),
+         rn AS (SELECT ref_id, sqrt(sum(e*e)) AS n FROM re GROUP BY 1),
+         cosr AS (SELECT d.media_id, d.ref_id, d.dp / (an.n * rn.n) AS cosv
+           FROM dots d JOIN an USING (media_id) JOIN rn USING (ref_id)),
+         best AS (SELECT media_id, ref_id, cosv FROM (
+           SELECT media_id, ref_id, cosv, row_number() OVER
+             (PARTITION BY media_id ORDER BY cosv DESC, ref_id) AS rk
+           FROM cosr) WHERE rk = 1)
+         SELECT m.media_id,
+           coalesce(b.cosv < 0.95, TRUE) AS admitted,
+           CASE WHEN b.cosv >= 0.95 THEN b.ref_id END AS match_id
+         FROM (SELECT media_id FROM arr UNION ALL SELECT 9001
+               UNION ALL SELECT 9002 UNION ALL SELECT 9003) m
+         LEFT JOIN best b USING (media_id)
+         ORDER BY media_id"""
+
+  /** The image-embedding oracle (q148 batch, q149 streamed): pixel
+    * formulas, gray luma (= v), the 8x8 embed lattice, integer-exact
+    * dots, cosine argmax (ties to the smaller ref) and tau 0.9; corrupt
+    * and null payloads admit. */
+  private def imageEmbedOracleSql: String =
+    """WITH refs AS (SELECT i AS ref_id, i AS src FROM range(1, 11) t(i)),
+         arr AS (
+           SELECT 500 + i AS media_id, i AS src, 'copy' AS kind
+           FROM range(1, 6) t(i)
+           UNION ALL SELECT 510 + i, i, 'gain' FROM range(1, 6) t(i)
+           UNION ALL SELECT 520 + i, i, 'novel' FROM range(1, 4) t(i)),
+         rg AS (SELECT ref_id, gy*8 + gx AS i,
+             (src*31 + (gx*16//8)*(11 + src % 7) + (gy*12//8)*29
+               + (gx*16//8)*(gy*12//8)*(1 + src % 3)) % 256 AS v
+           FROM refs, range(0, 8) a(gy), range(0, 8) b(gx)),
+         ag AS (SELECT media_id, gy*8 + gx AS i,
+             CASE kind
+               WHEN 'novel' THEN (src*53 + (gx*16//8)*29 + (gy*12//8)*7
+                 + (gx*16//8)*(gy*12//8)*2 + 101) % 256
+               WHEN 'gain' THEN (9 * ((src*31 + (gx*16//8)*(11 + src % 7)
+                 + (gy*12//8)*29
+                 + (gx*16//8)*(gy*12//8)*(1 + src % 3)) % 256)) // 10
+               ELSE (src*31 + (gx*16//8)*(11 + src % 7) + (gy*12//8)*29
+                 + (gx*16//8)*(gy*12//8)*(1 + src % 3)) % 256
+             END AS v
+           FROM arr, range(0, 8) a(gy), range(0, 8) b(gx)),
+         dots AS (SELECT a.media_id, r.ref_id, sum(a.v * r.v) AS dp
+           FROM ag a JOIN rg r ON a.i = r.i GROUP BY 1, 2),
+         an AS (SELECT media_id, sqrt(sum(v*v)) AS n FROM ag GROUP BY 1),
+         rn AS (SELECT ref_id, sqrt(sum(v*v)) AS n FROM rg GROUP BY 1),
+         cosr AS (SELECT d.media_id, d.ref_id, d.dp / (an.n * rn.n) AS cosv
+           FROM dots d JOIN an USING (media_id) JOIN rn USING (ref_id)),
+         best AS (SELECT media_id, ref_id, cosv FROM (
+           SELECT media_id, ref_id, cosv, row_number() OVER
+             (PARTITION BY media_id ORDER BY cosv DESC, ref_id) AS rk
+           FROM cosr) WHERE rk = 1)
+         SELECT m.media_id,
+           coalesce(b.cosv < 0.9, TRUE) AS admitted,
+           CASE WHEN b.cosv >= 0.9 THEN b.ref_id END AS match_id
+         FROM (SELECT media_id FROM arr
+               UNION ALL SELECT 9001 UNION ALL SELECT 9002) m
+         LEFT JOIN best b USING (media_id)
+         ORDER BY media_id"""
+
+  /** The video-embedding oracle (q153 batch, q154 streamed): per-frame
+    * pixel formulas into the 8x8 lattice, sum-pooled across frames (the
+    * dropped-first-frame stratum skips f = 0), cosine argmax and tau
+    * 0.98; torn, garbage and empty payloads admit. */
+  private def videoEmbedOracleSql: String =
+    """WITH refs AS (SELECT i AS ref_id, i AS src, 0 AS bright,
+             0 AS drop0 FROM range(1, 7) t(i)),
+         arr AS (
+           SELECT 500 + i AS media_id, i AS src, 4 AS bright, 0 AS drop0
+           FROM range(1, 4) t(i)
+           UNION ALL SELECT 510 + i, i, 0, 1 FROM range(1, 4) t(i)
+           UNION ALL SELECT 520 + i, 20 + i, 0, 0 FROM range(1, 4) t(i)),
+         rcell AS (SELECT ref_id, gy*8 + gx AS i, sum(
+             CASE WHEN f < 6 THEN
+               (src*37 + (gx*16//8)*(11 + src % 7) + (gy*12//8)*23
+                 + (gx*16//8)*(gy*12//8)*(1 + src % 3)) % 200
+             ELSE
+               (src*53 + (gx*16//8)*29 + (gy*12//8)*7
+                 + (gx*16//8)*(gy*12//8)*2 + 101) % 200
+             END + bright) AS v
+           FROM refs, range(0, 8) ff(f), range(0, 8) a(gy),
+             range(0, 8) b(gx)
+           GROUP BY 1, 2),
+         acell AS (SELECT media_id, gy*8 + gx AS i, sum(
+             CASE WHEN f < 6 THEN
+               (src*37 + (gx*16//8)*(11 + src % 7) + (gy*12//8)*23
+                 + (gx*16//8)*(gy*12//8)*(1 + src % 3)) % 200
+             ELSE
+               (src*53 + (gx*16//8)*29 + (gy*12//8)*7
+                 + (gx*16//8)*(gy*12//8)*2 + 101) % 200
+             END + bright) AS v
+           FROM arr, range(0, 8) ff(f), range(0, 8) a(gy),
+             range(0, 8) b(gx)
+           WHERE f >= drop0
+           GROUP BY 1, 2),
+         dots AS (SELECT a.media_id, r.ref_id, sum(a.v * r.v) AS dp
+           FROM acell a JOIN rcell r ON a.i = r.i GROUP BY 1, 2),
+         an AS (SELECT media_id, sqrt(sum(v*v)) AS n FROM acell
+           GROUP BY 1),
+         rn AS (SELECT ref_id, sqrt(sum(v*v)) AS n FROM rcell
+           GROUP BY 1),
+         cosr AS (SELECT d.media_id, d.ref_id, d.dp / (an.n * rn.n) AS cosv
+           FROM dots d JOIN an USING (media_id) JOIN rn USING (ref_id)),
+         best AS (SELECT media_id, ref_id, cosv FROM (
+           SELECT media_id, ref_id, cosv, row_number() OVER
+             (PARTITION BY media_id ORDER BY cosv DESC, ref_id) AS rk
+           FROM cosr) WHERE rk = 1)
+         SELECT m.media_id,
+           coalesce(b.cosv < 0.98, TRUE) AS admitted,
+           CASE WHEN b.cosv >= 0.98 THEN b.ref_id END AS match_id
+         FROM (SELECT media_id FROM arr UNION ALL SELECT 9001
+               UNION ALL SELECT 9002 UNION ALL SELECT 9003) m
+         LEFT JOIN best b USING (media_id)
+         ORDER BY media_id"""
+
+  /** The season oracles' resample (q65, q73, q75): the dense (signal,
+    * bin) grid left-joined to the bins and the interior
+    * time-interpolation across gaps up to `gapUs`. */
+  private def seasonInterpSql(gapUs: Long): String =
+    s"""dense AS (SELECT grid.signal, grid.b, binned.v
+           FROM grid LEFT JOIN binned USING (signal, b)),
+         selx AS (SELECT signal, b, v,
+             last_value(v IGNORE NULLS) OVER wp pv,
+             first_value(v IGNORE NULLS) OVER wn nv,
+             last_value(CASE WHEN v IS NOT NULL THEN b END IGNORE NULLS)
+               OVER wp pt,
+             first_value(CASE WHEN v IS NOT NULL THEN b END IGNORE NULLS)
+               OVER wn nt
+           FROM dense WINDOW
+             wp AS (PARTITION BY signal ORDER BY b
+                    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW),
+             wn AS (PARTITION BY signal ORDER BY b
+                    ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING)),
+         resam AS (SELECT signal, b, CASE WHEN v IS NOT NULL THEN v
+             WHEN pv IS NOT NULL AND nv IS NOT NULL
+               AND epoch_us(b) - epoch_us(pt) <= $gapUs THEN
+               pv + (nv - pv) * (CAST(epoch_us(b) - epoch_us(pt) AS DOUBLE)
+                 / CAST(epoch_us(nt) - epoch_us(pt) AS DOUBLE))
+             END val FROM selx)"""
+
+  /** The season oracles' forecast (q65, q73): the 5-minute irradiance
+    * grid, the NREL solar-position chain with refraction,
+    * plane-of-array irradiance, the race-window slice and the lagged
+    * POA for the energy integral. */
+  private def seasonForecastSql: String =
+    """fc AS (SELECT t, (epoch_us(t) -
+             epoch_us(TIMESTAMP '2024-01-10 10:00:00')) // 300000000 i
+           FROM (SELECT unnest(generate_series(
+             TIMESTAMP '2024-01-10 10:00:00', TIMESTAMP '2024-01-10 17:00:00',
+             INTERVAL 300 SECOND)) t)),
+         fcv AS (SELECT t,
+             500.0 + (i % 7) * 20.0 dni, 300.0 + (i % 5) * 10.0 ghi,
+             100.0 + (i % 3) * 5.0 dhi, 1.5 + (i % 4) * 0.125 airmass,
+             0.06 albedo FROM fc),
+         sp1 AS (SELECT *,
+             CAST(epoch_us(t + INTERVAL 150 SECOND) AS DOUBLE)
+               / 86400000000.0 + 2440587.5 - 2451545.0 AS n,
+             (CAST(epoch_us(t + INTERVAL 150 SECOND) AS DOUBLE)
+               / 3600000000.0) % 24.0 AS hr
+           FROM fcv),
+         sp2 AS (SELECT *,
+             2.1429 - 0.0010394594 * n AS omega,
+             4.8950630 + 0.017202791698 * n AS mlon,
+             6.2400600 + 0.0172019699 * n AS manom FROM sp1),
+         sp3 AS (SELECT *,
+             mlon + 0.03341607 * sin(manom) + 0.00034894 * sin(2.0 * manom)
+               - 0.0001134 - 0.0000203 * sin(omega) AS elon,
+             0.4090928 - 6.2140e-9 * n + 0.0000396 * cos(omega) AS eobl
+           FROM sp2),
+         sp4 AS (SELECT *,
+             CASE WHEN atan2(cos(eobl) * sin(elon), cos(elon)) < 0
+                  THEN atan2(cos(eobl) * sin(elon), cos(elon)) + 2 * pi()
+                  ELSE atan2(cos(eobl) * sin(elon), cos(elon)) END AS ra,
+             asin(sin(eobl) * sin(elon)) AS sdec FROM sp3),
+         sp5 AS (SELECT *,
+             ((6.6974243242 + 0.0657098283 * n + hr) * 15.0
+               + (-48.6417668)) * (pi() / 180.0) - ra AS ha FROM sp4),
+         sp6 AS (SELECT *,
+             acos(cos((-26.243602) * (pi() / 180.0)) * cos(ha) * cos(sdec)
+               + sin(sdec) * sin((-26.243602) * (pi() / 180.0))) AS zen0
+           FROM sp5),
+         sp7 AS (SELECT *,
+             90.0 - ((zen0 + (6371.01 / 149597890.0) * sin(zen0))
+               * 180.0 / pi()) AS elev FROM sp6),
+         sp8 AS (SELECT *,
+             CASE WHEN elev >= -1.0 * (0.26667 + 0.5667) THEN
+               ((101325.0 / 100.0) / 1010.0) * (283.0 / (273.0 + 12.0)) * 1.02
+                 / (60.0 * tan((elev + 10.3 / (elev + 5.11)) / 180.0 * pi()))
+             ELSE 0.0 END AS refr FROM sp7),
+         spz AS (SELECT t, dni, ghi, dhi, airmass, albedo,
+             dni * greatest(cos((90.0 - (elev + refr)) / 180.0 * pi()), 0.0)
+               + dhi AS poa
+           FROM sp8),
+         fsl AS (SELECT * FROM spz
+           WHERE t BETWEEN TIMESTAMP '2024-01-10 11:00:00'
+                       AND TIMESTAMP '2024-01-10 16:00:00'),
+         fen0 AS (SELECT *, lag(poa) OVER w ppoa, lag(t) OVER w plt
+           FROM fsl WINDOW w AS (ORDER BY t)),"""
+
+  /** The season oracles' GPS track (q65, q73): the planted fixes,
+    * haversine leg distance, bearing, day-wrapped leg seconds, speed
+    * and cumulative distance, keeping fixes with a speed and a heading. */
+  private def seasonTrackSql: String =
+    """trkraw AS (SELECT * FROM (VALUES
+             (TIMESTAMP '2024-01-10 09:30:00', -26.240, -48.640, 5.0),
+             (TIMESTAMP '2024-01-10 09:55:00', -26.237, -48.638, 6.0),
+             (TIMESTAMP '2024-01-10 10:20:00', -26.234, -48.636, 7.0),
+             (TIMESTAMP '2024-01-10 10:45:00', -26.231, -48.634, 8.0),
+             (TIMESTAMP '2024-01-10 11:10:00', -26.228, -48.632, 9.0),
+             (TIMESTAMP '2024-01-10 11:35:00', -26.225, -48.630, 10.0),
+             (TIMESTAMP '2024-01-10 12:00:00', -26.222, -48.628, 11.0),
+             (TIMESTAMP '2024-01-10 12:25:00', -26.219, -48.626, 12.0),
+             (TIMESTAMP '2024-01-10 12:50:00', -26.216, -48.624, 13.0),
+             (TIMESTAMP '2024-01-10 13:15:00', -26.213, -48.622, 14.0)
+           ) v(g_ts, lat, lon, ele)),
+         trk1 AS (SELECT *, lag(lat) OVER w plat, lag(lon) OVER w plon,
+             lag(g_ts) OVER w ptt
+           FROM trkraw WINDOW w AS (ORDER BY g_ts)),
+         trk2 AS (SELECT *,
+             6371.0 * 2 * asin(sqrt(
+               pow(sin(((lat - plat) / 180.0 * pi()) / 2), 2)
+               + cos(plat / 180.0 * pi()) * cos(lat / 180.0 * pi())
+                 * pow(sin(((lon - plon) / 180.0 * pi()) / 2), 2))) dist,
+             (atan2(cos(plat / 180.0 * pi()) * sin((lon - plon) / 180.0 * pi()),
+                sin(plat / 180.0 * pi()) * (cos(plat / 180.0 * pi())
+                  - cos(lat / 180.0 * pi()) * cos((lon - plon) / 180.0 * pi())))
+               * 180.0 / pi()) + 180.0 heading,
+             ((epoch_us(g_ts) - epoch_us(ptt)) // 1000000) % 86400 dts
+           FROM trk1),
+         trk3 AS (SELECT g_ts, lat, lon, ele, heading,
+             CASE WHEN dts = 0 THEN NULL
+                  ELSE dist / (CAST(dts AS DOUBLE) / 3600.0) END speed,
+             sum(coalesce(dist, 0.0)) OVER (ORDER BY g_ts
+               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) distance
+           FROM trk2),
+         trkf AS (SELECT * FROM trk3
+           WHERE speed IS NOT NULL AND heading IS NOT NULL),"""
+
+  /** The IVF drift replay (q131, q145) through the maintenance window:
+    * per-query recalls, both window decisions and both epoch-change
+    * flags. */
+  private def ivfMaintainOracleSql: String =
+    ivfDriftReplaySql + """
+         rec AS (
+           SELECT t.query_id, pr.pre_top1, po.post_top1,
+             CASE WHEN pr.pre_top1 = t.true_top1 THEN 1.0 ELSE 0.0 END
+               AS pre_recall,
+             CASE WHEN po.post_top1 = t.true_top1 THEN 1.0 ELSE 0.0 END
+               AS post_recall
+           FROM truth t JOIN pre_top pr USING (query_id)
+             JOIN post_top po USING (query_id)),
+         dec AS (
+           SELECT round(avg(pre_recall), 6)::DOUBLE AS pre_mean,
+             round(avg(post_recall), 6)::DOUBLE AS post_mean,
+             avg(pre_recall) < 0.9 AS retrain_fired,
+             avg(pre_recall) < 0.9 AS heal_epoch_changed,
+             avg(post_recall) < 0.9 AS noop_fired,
+             round(avg(post_recall), 6)::DOUBLE AS noop_mean,
+             avg(post_recall) < 0.9 AS noop_epoch_changed
+           FROM rec)
+         SELECT r.query_id, r.pre_top1, r.post_top1, d.pre_mean,
+           d.retrain_fired, d.post_mean, d.heal_epoch_changed,
+           d.noop_fired, d.noop_mean, d.noop_epoch_changed
+         FROM rec r CROSS JOIN dec d
+         ORDER BY r.query_id"""
+
+  /** The IVF drift replay (q123, q131, q145): the planted two-axis
+    * corpus, the drift batch and queries on a third axis, the build
+    * seeds and Lloyd mean, frozen append assignment, stale probe/top1,
+    * the id%2-sampled warm refit (keep-empty-cell coalesce),
+    * re-assignment, healed probe/top1 and brute-force truth. */
+  private def ivfDriftReplaySql: String =
+    """WITH corpus_base AS (
+           SELECT i AS vec_id,
+             CASE WHEN i % 2 = 1
+               THEN [1.0, 0.0, 0.0, 0.1 * ((i + 1) // 2)]
+               ELSE [0.0, 1.0, 0.0, 0.1 * (i // 2)] END::DOUBLE[] AS v
+           FROM range(1, 21) t(i)),
+         drift AS (
+           SELECT 100 + i AS vec_id,
+             [0.05, 0.0, 1.0, 0.1 * i]::DOUBLE[] AS v
+           FROM range(1, 11) t(i)),
+         queries AS (
+           SELECT 1000 + i AS query_id,
+             [0.0, 0.05, 1.0, 0.1 * i]::DOUBLE[] AS qv
+           FROM range(1, 11) t(i)),
+         seeds AS (SELECT vec_id AS cell, v AS cvec FROM corpus_base
+           WHERE vec_id <= 2),
+         assign0 AS (
+           SELECT vec_id, cell FROM (
+             SELECT b.vec_id, s.cell, row_number() OVER
+               (PARTITION BY b.vec_id
+                ORDER BY list_dot_product(b.v, s.cvec) /
+                  (sqrt(list_dot_product(b.v, b.v)) *
+                   sqrt(list_dot_product(s.cvec, s.cvec))) DESC,
+                  s.cell) AS rn
+             FROM corpus_base b CROSS JOIN seeds s) WHERE rn = 1),
+         cents AS (
+           SELECT a.cell, [avg(b.v[1]), avg(b.v[2]), avg(b.v[3]),
+             avg(b.v[4])]::DOUBLE[] AS cvec
+           FROM corpus_base b JOIN assign0 a USING (vec_id)
+           GROUP BY a.cell),
+         corpus AS (SELECT * FROM corpus_base UNION ALL
+           SELECT * FROM drift),
+         pre_assign AS (
+           SELECT vec_id, cell FROM (
+             SELECT c.vec_id, ct.cell, row_number() OVER
+               (PARTITION BY c.vec_id
+                ORDER BY list_dot_product(c.v, ct.cvec) /
+                  (sqrt(list_dot_product(c.v, c.v)) *
+                   sqrt(list_dot_product(ct.cvec, ct.cvec))) DESC,
+                  ct.cell) AS rn
+             FROM corpus c CROSS JOIN cents ct) WHERE rn = 1),
+         pre_probe AS (
+           SELECT query_id, cell FROM (
+             SELECT q.query_id, ct.cell, row_number() OVER
+               (PARTITION BY q.query_id
+                ORDER BY list_dot_product(q.qv, ct.cvec) /
+                  (sqrt(list_dot_product(q.qv, q.qv)) *
+                   sqrt(list_dot_product(ct.cvec, ct.cvec))) DESC,
+                  ct.cell) AS rn
+             FROM queries q CROSS JOIN cents ct) WHERE rn = 1),
+         pre_top AS (
+           SELECT query_id, vec_id AS pre_top1 FROM (
+             SELECT q.query_id, c.vec_id, row_number() OVER
+               (PARTITION BY q.query_id
+                ORDER BY list_dot_product(q.qv, c.v) /
+                  (sqrt(list_dot_product(q.qv, q.qv)) *
+                   sqrt(list_dot_product(c.v, c.v))) DESC,
+                  c.vec_id) AS rn
+             FROM queries q JOIN pre_probe p USING (query_id)
+               JOIN pre_assign a ON a.cell = p.cell
+               JOIN corpus c ON c.vec_id = a.vec_id) WHERE rn = 1),
+         sample_assign AS (
+           SELECT vec_id, cell FROM pre_assign WHERE vec_id % 2 = 1),
+         refit AS (
+           SELECT sa.cell, [avg(c.v[1]), avg(c.v[2]), avg(c.v[3]),
+             avg(c.v[4])]::DOUBLE[] AS cvec
+           FROM corpus c JOIN sample_assign sa USING (vec_id)
+           GROUP BY sa.cell),
+         new_cents AS (
+           SELECT ct.cell, coalesce(r.cvec, ct.cvec) AS cvec
+           FROM cents ct LEFT JOIN refit r ON r.cell = ct.cell),
+         post_assign AS (
+           SELECT vec_id, cell FROM (
+             SELECT c.vec_id, ct.cell, row_number() OVER
+               (PARTITION BY c.vec_id
+                ORDER BY list_dot_product(c.v, ct.cvec) /
+                  (sqrt(list_dot_product(c.v, c.v)) *
+                   sqrt(list_dot_product(ct.cvec, ct.cvec))) DESC,
+                  ct.cell) AS rn
+             FROM corpus c CROSS JOIN new_cents ct) WHERE rn = 1),
+         post_probe AS (
+           SELECT query_id, cell FROM (
+             SELECT q.query_id, ct.cell, row_number() OVER
+               (PARTITION BY q.query_id
+                ORDER BY list_dot_product(q.qv, ct.cvec) /
+                  (sqrt(list_dot_product(q.qv, q.qv)) *
+                   sqrt(list_dot_product(ct.cvec, ct.cvec))) DESC,
+                  ct.cell) AS rn
+             FROM queries q CROSS JOIN new_cents ct) WHERE rn = 1),
+         post_top AS (
+           SELECT query_id, vec_id AS post_top1 FROM (
+             SELECT q.query_id, c.vec_id, row_number() OVER
+               (PARTITION BY q.query_id
+                ORDER BY list_dot_product(q.qv, c.v) /
+                  (sqrt(list_dot_product(q.qv, q.qv)) *
+                   sqrt(list_dot_product(c.v, c.v))) DESC,
+                  c.vec_id) AS rn
+             FROM queries q JOIN post_probe p USING (query_id)
+               JOIN post_assign a ON a.cell = p.cell
+               JOIN corpus c ON c.vec_id = a.vec_id) WHERE rn = 1),
+         truth AS (
+           SELECT query_id, vec_id AS true_top1 FROM (
+             SELECT q.query_id, c.vec_id, row_number() OVER
+               (PARTITION BY q.query_id
+                ORDER BY list_dot_product(q.qv, c.v) /
+                  (sqrt(list_dot_product(q.qv, q.qv)) *
+                   sqrt(list_dot_product(c.v, c.v))) DESC,
+                  c.vec_id) AS rn
+             FROM queries q CROSS JOIN corpus c) WHERE rn = 1),"""
+
   private def q75PeriodSql(label: String, periodUs: Long): String = {
     val gapUs = math.max(1L, 60000000L / periodUs) * periodUs
     s"""SELECT * FROM (WITH
@@ -11563,26 +10342,7 @@ object SparkEntry {
            'MOD17__SENSOR__DUTY', 'MOD17__SENSOR__FLAG1']) signal) s
          CROSS JOIN (SELECT unnest(generate_series((SELECT lo FROM bnds),
            (SELECT hi FROM bnds), to_microseconds($periodUs))) b) g),
-       dense AS (SELECT grid.signal, grid.b, binned.v
-         FROM grid LEFT JOIN binned USING (signal, b)),
-       selx AS (SELECT signal, b, v,
-           last_value(v IGNORE NULLS) OVER wp pv,
-           first_value(v IGNORE NULLS) OVER wn nv,
-           last_value(CASE WHEN v IS NOT NULL THEN b END IGNORE NULLS)
-             OVER wp pt,
-           first_value(CASE WHEN v IS NOT NULL THEN b END IGNORE NULLS)
-             OVER wn nt
-         FROM dense WINDOW
-           wp AS (PARTITION BY signal ORDER BY b
-                  ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW),
-           wn AS (PARTITION BY signal ORDER BY b
-                  ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING)),
-       resam AS (SELECT signal, b, CASE WHEN v IS NOT NULL THEN v
-           WHEN pv IS NOT NULL AND nv IS NOT NULL
-             AND epoch_us(b) - epoch_us(pt) <= $gapUs THEN
-             pv + (nv - pv) * (CAST(epoch_us(b) - epoch_us(pt) AS DOUBLE)
-               / CAST(epoch_us(nt) - epoch_us(pt) AS DOUBLE))
-           END val FROM selx)
+       ${seasonInterpSql(gapUs)}
        SELECT '$label' AS period, b AS timestamp,
          round(max(CASE WHEN signal = 'MOD17__SENSOR__CURR' THEN val END), 6)
            AS s_curr,
@@ -11593,10 +10353,6 @@ object SparkEntry {
        FROM resam GROUP BY b)"""
   }
 
-  /** Shared q56/q74 oracle: exhaustive batch-vs-index 4-gram Jaccard
-    * hits + within-batch recursive closure; survivors are untainted
-    * min-id representatives. q74 runs the SAME decision over an index
-    * round-tripped through a bucketed parquet table. */
   /** The q158 four-tier cascade oracle, parameterized on the LIVE
     * exact-tier view: the caller-frame path (q158) removes a text
     * only when NO surviving accepted doc holds it (doc-keyed), while
@@ -11614,24 +10370,7 @@ object SparkEntry {
          accx_pre AS (SELECT text, min(doc_id) AS exact_id FROM acc
            GROUP BY text),
          accx_live AS (""" + accxLive + """),
-         arr AS (
-           SELECT doc_id + 400000 AS doc_id, text FROM acc
-           WHERE doc_id % 20 = 0
-           UNION ALL SELECT doc_id + 500000, text || ' xyzzy qbf'
-           FROM acc WHERE doc_id % 20 = 4
-           UNION ALL SELECT doc_id + 600000,
-             array_to_string(list_reverse(list_filter(
-               regexp_split_to_array(trim(text), '\s+'), t -> t != '')), ' ')
-           FROM acc WHERE doc_id % 20 = 8
-           UNION ALL SELECT doc_id + 700000, text FROM base
-           WHERE doc_id % 20 = 1
-           UNION ALL SELECT doc_id, text FROM (VALUES (900001, ''),
-             (900002, NULL), (900003, 'too short')) t(doc_id, text)),
-         qual AS (SELECT doc_id,
-           coalesce(length(trim(text)) >= 20 AND
-             length(regexp_replace(text, '[A-Za-z0-9\s]', '', 'g'))
-               <= 0.3 * length(text), FALSE) AS qok
-           FROM arr),
+         """ + cascadeArrivalsSql + """
          batchn AS (SELECT doc_id, lower(trim(text)) tx FROM arr
            WHERE text IS NOT NULL),
          bt AS (SELECT doc_id, regexp_split_to_array(tx, '\s+') t
@@ -11641,13 +10380,7 @@ object SparkEntry {
              greatest(len(t)-3, 1))) AS i)),
          ot AS (SELECT doc_id,
            regexp_split_to_array(lower(trim(text)), '\s+') t FROM acc),
-         osh AS (SELECT DISTINCT doc_id, array_to_string(t[i:i+3], ' ') s
-           FROM ot, LATERAL (SELECT unnest(generate_series(1,
-             greatest(len(t)-3, 1))) AS i)),
-         bsz AS (SELECT doc_id, count(*) sz FROM bsh GROUP BY 1),
-         osz AS (SELECT doc_id, count(*) sz FROM osh GROUP BY 1),
-         hx AS (SELECT b.doc_id bid, o.doc_id oid, count(*) i
-           FROM bsh b JOIN osh o ON b.s = o.s GROUP BY 1, 2),
+         """ + shingleOverlapSql + """
          hitsx AS (SELECT hx.bid, hx.oid FROM hx
            JOIN bsz ON bsz.doc_id = hx.bid
            JOIN osz ON osz.doc_id = hx.oid
@@ -11655,20 +10388,7 @@ object SparkEntry {
          hits_pre AS (SELECT DISTINCT bid AS doc_id FROM hitsx),
          hits_live AS (SELECT DISTINCT bid AS doc_id FROM hitsx
            WHERE oid % 40 NOT IN (0, 4, 8)),
-         wx AS (SELECT a.doc_id a, b.doc_id b, count(*) i FROM bsh a
-           JOIN bsh b ON a.s = b.s AND a.doc_id < b.doc_id GROUP BY 1, 2),
-         wpairs AS (SELECT a, b FROM wx
-           JOIN bsz sa ON sa.doc_id = a JOIN bsz sb ON sb.doc_id = b
-           WHERE i*1.0/(sa.sz + sb.sz - i) >= 0.5),
-         edges AS (SELECT a x, b y FROM wpairs UNION SELECT b, a FROM wpairs),
-         reach AS (
-           WITH RECURSIVE r(x, y) AS (
-             SELECT x, y FROM edges
-             UNION
-             SELECT r.x, e.y FROM r JOIN edges e ON r.y = e.x)
-           SELECT x, y FROM r),
-         comp AS (SELECT x AS doc_id, least(x, min(y)) AS comp
-           FROM reach GROUP BY x),
+         """ + batchComponentsSql + """
          labeled AS (SELECT b.doc_id, coalesce(comp.comp, b.doc_id) AS comp
            FROM batchn b LEFT JOIN comp USING (doc_id)),
          tainted_pre AS (SELECT DISTINCT l.comp FROM labeled l
@@ -11685,29 +10405,7 @@ object SparkEntry {
            SELECT 1 AS is_acc, doc_id, text FROM acc
            UNION ALL SELECT 0, doc_id, text FROM arr
            WHERE length(trim(coalesce(text, ''))) > 0),
-         toks AS (SELECT is_acc, doc_id,
-           unnest(list_filter(regexp_split_to_array(lower(trim(text)), '\s+'),
-             t -> t != '')) AS t
-           FROM alltexts),
-         vecs AS (SELECT is_acc, doc_id,
-           ('0x' || substring(md5(t), 1, 15))::BIGINT % 64 AS b,
-           sum(CASE WHEN (('0x' || substring(md5(t), 1, 15))::BIGINT // 64) % 2 = 0
-             THEN 1.0 ELSE -1.0 END) AS v
-           FROM toks GROUP BY 1, 2, 3
-           HAVING sum(CASE WHEN (('0x' || substring(md5(t), 1, 15))::BIGINT // 64) % 2 = 0
-             THEN 1.0 ELSE -1.0 END) != 0),
-         norms AS (SELECT is_acc, doc_id, sqrt(sum(v * v)) AS n
-           FROM vecs GROUP BY 1, 2),
-         dots AS (SELECT q.doc_id AS doc_id, c.doc_id AS acc_id,
-             sum(q.v * c.v) AS dp
-           FROM vecs q JOIN vecs c
-             ON q.b = c.b AND q.is_acc = 0 AND c.is_acc = 1
-           GROUP BY 1, 2),
-         cosr AS (SELECT d.doc_id, d.acc_id,
-             d.dp / (qn.n * cn.n) AS cosv
-           FROM dots d
-             JOIN norms qn ON qn.doc_id = d.doc_id AND qn.is_acc = 0
-             JOIN norms cn ON cn.doc_id = d.acc_id AND cn.is_acc = 1),
+         """ + simhashCosineSql + """
          sem AS (SELECT doc_id, max(cosv) AS best_pre,
              max(CASE WHEN acc_id % 40 NOT IN (0, 4, 8) THEN cosv END)
                AS best_live
@@ -11747,57 +10445,18 @@ object SparkEntry {
          acc AS (SELECT doc_id, text FROM base WHERE doc_id % 2 = 0),
          accx AS (SELECT text, min(doc_id) AS exact_id FROM acc
            GROUP BY text),
-         arr AS (
-           SELECT doc_id + 400000 AS doc_id, text FROM acc
-           WHERE doc_id % 20 = 0
-           UNION ALL SELECT doc_id + 500000, text || ' xyzzy qbf'
-           FROM acc WHERE doc_id % 20 = 4
-           UNION ALL SELECT doc_id + 600000,
-             array_to_string(list_reverse(list_filter(
-               regexp_split_to_array(trim(text), '\s+'), t -> t != '')), ' ')
-           FROM acc WHERE doc_id % 20 = 8
-           UNION ALL SELECT doc_id + 700000, text FROM base
-           WHERE doc_id % 20 = 1
-           UNION ALL SELECT doc_id, text FROM (VALUES (900001, ''),
-             (900002, NULL), (900003, 'too short')) t(doc_id, text)),
-         qual AS (SELECT doc_id,
-           coalesce(length(trim(text)) >= 20 AND
-             length(regexp_replace(text, '[A-Za-z0-9\s]', '', 'g'))
-               <= 0.3 * length(text), FALSE) AS qok
-           FROM arr),
+         """ + cascadeArrivalsSql + """
          wtk AS (SELECT doc_id,
              regexp_split_to_array(lower(trim(text)), '\s+') t
            FROM arr WHERE text IS NOT NULL),
-         whs AS (SELECT doc_id,
-             [('0x' || substring(md5(array_to_string(t[p : p + 3], ' ')),
-                 1, 15))::BIGINT
-               for p in generate_series(1, greatest(len(t) - 3, 1))] AS h
-           FROM wtk),
-         wsel AS (SELECT DISTINCT doc_id,
-             s - 1 + list_max([i for i in generate_series(1, len(sl))
-               if sl[i] = list_min(sl)]) AS pos
-           FROM (SELECT doc_id, h, least(4, len(h)) AS win FROM whs) x,
-             LATERAL (SELECT unnest(generate_series(1, len(h) - win + 1))
-               AS s),
-             LATERAL (SELECT h[s : s + win - 1] AS sl)),
+         """ + winnowSql("wtk", "doc_id", "whs", "wsel") + """
          wfp AS (SELECT DISTINCT s.doc_id, whs.h[s.pos] AS fp
            FROM wsel s JOIN whs USING (doc_id)),
          wbt AS (SELECT * FROM (SELECT doc_id AS bench_id,
              [lower(x) for x in
                regexp_split_to_array(trim(text), '\s+')[3:14]] AS t
            FROM base WHERE doc_id % 20 = 1) WHERE len(t) > 0),
-         wbh AS (SELECT bench_id,
-             [('0x' || substring(md5(array_to_string(t[p : p + 3], ' ')),
-                 1, 15))::BIGINT
-               for p in generate_series(1, greatest(len(t) - 3, 1))] AS h
-           FROM wbt),
-         wbsel AS (SELECT DISTINCT bench_id,
-             s - 1 + list_max([i for i in generate_series(1, len(sl))
-               if sl[i] = list_min(sl)]) AS pos
-           FROM (SELECT bench_id, h, least(4, len(h)) AS win FROM wbh) x,
-             LATERAL (SELECT unnest(generate_series(1, len(h) - win + 1))
-               AS s),
-             LATERAL (SELECT h[s : s + win - 1] AS sl)),
+         """ + winnowSql("wbt", "bench_id", "wbh", "wbsel") + """
          wbfp AS (SELECT DISTINCT s.bench_id, wbh.h[s.pos] AS fp
            FROM wbsel s JOIN wbh USING (bench_id)),
          wpre AS (SELECT DISTINCT f.doc_id FROM wfp f
@@ -11814,31 +10473,12 @@ object SparkEntry {
              greatest(len(t)-3, 1))) AS i)),
          ot AS (SELECT doc_id,
            regexp_split_to_array(lower(trim(text)), '\s+') t FROM acc),
-         osh AS (SELECT DISTINCT doc_id, array_to_string(t[i:i+3], ' ') s
-           FROM ot, LATERAL (SELECT unnest(generate_series(1,
-             greatest(len(t)-3, 1))) AS i)),
-         bsz AS (SELECT doc_id, count(*) sz FROM bsh GROUP BY 1),
-         osz AS (SELECT doc_id, count(*) sz FROM osh GROUP BY 1),
-         hx AS (SELECT b.doc_id bid, o.doc_id oid, count(*) i
-           FROM bsh b JOIN osh o ON b.s = o.s GROUP BY 1, 2),
+         """ + shingleOverlapSql + """
          hits AS (SELECT DISTINCT hx.bid AS doc_id FROM hx
            JOIN bsz ON bsz.doc_id = hx.bid
            JOIN osz ON osz.doc_id = hx.oid
            WHERE hx.i*1.0/(bsz.sz + osz.sz - hx.i) >= 0.5),
-         wx AS (SELECT a.doc_id a, b.doc_id b, count(*) i FROM bsh a
-           JOIN bsh b ON a.s = b.s AND a.doc_id < b.doc_id GROUP BY 1, 2),
-         wpairs AS (SELECT a, b FROM wx
-           JOIN bsz sa ON sa.doc_id = a JOIN bsz sb ON sb.doc_id = b
-           WHERE i*1.0/(sa.sz + sb.sz - i) >= 0.5),
-         edges AS (SELECT a x, b y FROM wpairs UNION SELECT b, a FROM wpairs),
-         reach AS (
-           WITH RECURSIVE r(x, y) AS (
-             SELECT x, y FROM edges
-             UNION
-             SELECT r.x, e.y FROM r JOIN edges e ON r.y = e.x)
-           SELECT x, y FROM r),
-         comp AS (SELECT x AS doc_id, least(x, min(y)) AS comp
-           FROM reach GROUP BY x),
+         """ + batchComponentsSql + """
          labeled AS (SELECT b.doc_id, coalesce(comp.comp, b.doc_id) AS comp
            FROM batchn b LEFT JOIN comp USING (doc_id)),
          tainted AS (SELECT DISTINCT l.comp FROM labeled l
@@ -11851,29 +10491,7 @@ object SparkEntry {
            SELECT 1 AS is_acc, doc_id, text FROM acc
            UNION ALL SELECT 0, doc_id, text FROM arr
            WHERE length(trim(coalesce(text, ''))) > 0),
-         toks AS (SELECT is_acc, doc_id,
-           unnest(list_filter(regexp_split_to_array(lower(trim(text)), '\s+'),
-             t -> t != '')) AS t
-           FROM alltexts),
-         vecs AS (SELECT is_acc, doc_id,
-           ('0x' || substring(md5(t), 1, 15))::BIGINT % 64 AS b,
-           sum(CASE WHEN (('0x' || substring(md5(t), 1, 15))::BIGINT // 64) % 2 = 0
-             THEN 1.0 ELSE -1.0 END) AS v
-           FROM toks GROUP BY 1, 2, 3
-           HAVING sum(CASE WHEN (('0x' || substring(md5(t), 1, 15))::BIGINT // 64) % 2 = 0
-             THEN 1.0 ELSE -1.0 END) != 0),
-         norms AS (SELECT is_acc, doc_id, sqrt(sum(v * v)) AS n
-           FROM vecs GROUP BY 1, 2),
-         dots AS (SELECT q.doc_id AS doc_id, c.doc_id AS acc_id,
-             sum(q.v * c.v) AS dp
-           FROM vecs q JOIN vecs c
-             ON q.b = c.b AND q.is_acc = 0 AND c.is_acc = 1
-           GROUP BY 1, 2),
-         cosr AS (SELECT d.doc_id, d.acc_id,
-             d.dp / (qn.n * cn.n) AS cosv
-           FROM dots d
-             JOIN norms qn ON qn.doc_id = d.doc_id AND qn.is_acc = 0
-             JOIN norms cn ON cn.doc_id = d.acc_id AND cn.is_acc = 1),
+         """ + simhashCosineSql + """
          sem AS (SELECT doc_id, max(cosv) AS best FROM cosr GROUP BY 1),
          decided AS (
            SELECT a.doc_id,
@@ -11906,41 +10524,7 @@ object SparkEntry {
     * are pigeonhole recall-exact with the same (hamming, id) argmin —
     * so one oracle pins that the swap moves no decision. */
   private def mediaCascadeTwoWorldOracleSql: String =
-      """WITH refs AS (SELECT i AS ref_id, i AS src, 0 AS shift
-           FROM range(1, 11) t(i)),
-         arr AS (
-           SELECT 500 + i AS media_id, i AS src, 0 AS shift,
-             'sig' AS kind FROM range(1, 4) t(i)
-           UNION ALL SELECT 510 + i, i, 4, 'sig' FROM range(1, 4) t(i)
-           UNION ALL SELECT 520 + i, i, 0, 'sig' FROM range(7, 10) t(i)
-           UNION ALL SELECT 530 + i, i, 0, 'novel' FROM range(1, 4) t(i)),
-         rg AS (SELECT ref_id, gy, gx,
-             (src*31 + (gx*16//9)*(11 + src % 7) + (gy*12//8)*29
-               + (gx*16//9)*(gy*12//8)*(1 + src % 3) + shift) % 256 AS v
-           FROM refs, range(0, 8) t1(gy), range(0, 9) t2(gx)
-           WHERE ref_id <= 6),
-         rh AS (SELECT a.ref_id,
-             bit_or(CASE WHEN b.v > a.v THEN
-                 CASE WHEN a.gy*8 + a.gx = 63 THEN -9223372036854775807 - 1
-                   ELSE 1::BIGINT << (a.gy*8 + a.gx) END
-               ELSE 0::BIGINT END) AS sig
-           FROM rg a JOIN rg b ON a.ref_id = b.ref_id
-             AND b.gy = a.gy AND b.gx = a.gx + 1
-           WHERE a.gx < 8 GROUP BY a.ref_id),
-         ag AS (SELECT media_id, gy, gx,
-             CASE WHEN kind = 'novel' THEN
-               (src*53 + (gx*16//9)*29 + (gy*12//8)*7
-                 + (gx*16//9)*(gy*12//8)*2 + 101) % 256
-             ELSE
-               (src*31 + (gx*16//9)*(11 + src % 7) + (gy*12//8)*29
-                 + (gx*16//9)*(gy*12//8)*(1 + src % 3) + shift) % 256
-             END AS v
-           FROM arr, range(0, 8) t1(gy), range(0, 9) t2(gx)),
-         ah AS (SELECT a.media_id,
-             bit_or(CASE WHEN b.v > a.v THEN
-                 CASE WHEN a.gy*8 + a.gx = 63 THEN -9223372036854775807 - 1
-                   ELSE 1::BIGINT << (a.gy*8 + a.gx) END
-               ELSE 0::BIGINT END) AS dhash
+      mediaCascadeDhashSql + """
            FROM ag a JOIN ag b ON a.media_id = b.media_id
              AND b.gy = a.gy AND b.gx = a.gx + 1
            WHERE a.gx < 8 GROUP BY a.media_id),
@@ -11959,25 +10543,7 @@ object SparkEntry {
            FROM ah s JOIN rh r ON bit_count(xor(s.dhash, r.sig)) <= 6
              AND r.ref_id NOT IN (2, 8)
            GROUP BY s.media_id),
-         re AS (SELECT ref_id, gy*8 + gx AS i,
-             (src*31 + (gx*16//8)*(11 + src % 7) + (gy*12//8)*29
-               + (gx*16//8)*(gy*12//8)*(1 + src % 3) + shift) % 256 AS v
-           FROM refs, range(0, 8) a(gy), range(0, 8) b(gx)),
-         ae AS (SELECT media_id, gy*8 + gx AS i,
-             CASE WHEN kind = 'novel' THEN
-               (src*53 + (gx*16//8)*29 + (gy*12//8)*7
-                 + (gx*16//8)*(gy*12//8)*2 + 101) % 256
-             ELSE
-               (src*31 + (gx*16//8)*(11 + src % 7) + (gy*12//8)*29
-                 + (gx*16//8)*(gy*12//8)*(1 + src % 3) + shift) % 256
-             END AS v
-           FROM arr, range(0, 8) a(gy), range(0, 8) b(gx)),
-         dots AS (SELECT a.media_id, r.ref_id, sum(a.v * r.v) AS dp
-           FROM ae a JOIN re r ON a.i = r.i GROUP BY 1, 2),
-         an AS (SELECT media_id, sqrt(sum(v*v)) AS n FROM ae GROUP BY 1),
-         rn2 AS (SELECT ref_id, sqrt(sum(v*v)) AS n FROM re GROUP BY 1),
-         cosr AS (SELECT d.media_id, d.ref_id, d.dp / (an.n * rn2.n) AS cosv
-           FROM dots d JOIN an USING (media_id) JOIN rn2 USING (ref_id)),
+         """ + mediaCascadeEmbedSql + """
          sem_pre AS (SELECT media_id, ref_id AS smid, cosv FROM (
              SELECT media_id, ref_id, cosv, row_number() OVER
                (PARTITION BY media_id ORDER BY cosv DESC, ref_id) AS rk
@@ -12060,48 +10626,20 @@ object SparkEntry {
            coalesce(rb.clean_md5, md5('')) AS clean_md5
          FROM tk LEFT JOIN rb USING (doc_id) ORDER BY doc_id"""
 
+  /** Shared q56/q74 oracle: exhaustive batch-vs-index 4-gram Jaccard
+    * hits + within-batch recursive closure; survivors are untainted
+    * min-id representatives. q74 runs the SAME decision over an index
+    * round-tripped through a bucketed parquet table. */
   private def incrementalDedupOracleSql: String =
     """WITH olds AS (SELECT doc_id, lower(trim(text)) tx
            FROM documents WHERE doc_id % 2 = 0),
-         batch AS (
-           SELECT doc_id, lower(trim(text)) tx
-           FROM documents WHERE doc_id % 2 = 1
-           UNION ALL
-           SELECT doc_id + 1000000, lower(trim(text || ' xyzzy qbf'))
-           FROM documents WHERE doc_id % 14 = 0
-           UNION ALL
-           SELECT doc_id + 2000000, lower(trim(text || ' plugh tail'))
-           FROM documents WHERE doc_id % 14 = 7),
-         bt AS (SELECT doc_id, regexp_split_to_array(tx, '\s+') t FROM batch),
-         bsh AS (SELECT DISTINCT doc_id, array_to_string(t[i:i+3], ' ') s
-           FROM bt, LATERAL (SELECT unnest(generate_series(1,
-             greatest(len(t)-3, 1))) AS i)),
-         ot AS (SELECT doc_id, regexp_split_to_array(tx, '\s+') t FROM olds),
-         osh AS (SELECT DISTINCT doc_id, array_to_string(t[i:i+3], ' ') s
-           FROM ot, LATERAL (SELECT unnest(generate_series(1,
-             greatest(len(t)-3, 1))) AS i)),
-         bsz AS (SELECT doc_id, count(*) sz FROM bsh GROUP BY 1),
-         osz AS (SELECT doc_id, count(*) sz FROM osh GROUP BY 1),
-         hx AS (SELECT b.doc_id bid, o.doc_id oid, count(*) i
-           FROM bsh b JOIN osh o ON b.s = o.s GROUP BY 1, 2),
+         """ + decontamBatchSql + """
+         """ + shingleOverlapSql + """
          hits AS (SELECT DISTINCT hx.bid AS doc_id FROM hx
            JOIN bsz ON bsz.doc_id = hx.bid
            JOIN osz ON osz.doc_id = hx.oid
            WHERE hx.i*1.0/(bsz.sz + osz.sz - hx.i) >= 0.5),
-         wx AS (SELECT a.doc_id a, b.doc_id b, count(*) i FROM bsh a
-           JOIN bsh b ON a.s = b.s AND a.doc_id < b.doc_id GROUP BY 1, 2),
-         wpairs AS (SELECT a, b FROM wx
-           JOIN bsz sa ON sa.doc_id = a JOIN bsz sb ON sb.doc_id = b
-           WHERE i*1.0/(sa.sz + sb.sz - i) >= 0.5),
-         edges AS (SELECT a x, b y FROM wpairs UNION SELECT b, a FROM wpairs),
-         reach AS (
-           WITH RECURSIVE r(x, y) AS (
-             SELECT x, y FROM edges
-             UNION
-             SELECT r.x, e.y FROM r JOIN edges e ON r.y = e.x)
-           SELECT x, y FROM r),
-         comp AS (SELECT x AS doc_id, least(x, min(y)) AS comp
-           FROM reach GROUP BY x),
+         """ + batchComponentsSql + """
          labeled AS (SELECT b.doc_id, coalesce(comp.comp, b.doc_id) AS comp
            FROM batch b LEFT JOIN comp USING (doc_id)),
          tainted AS (SELECT DISTINCT l.comp FROM labeled l
@@ -12111,9 +10649,6 @@ object SparkEntry {
            AND l.comp = l.doc_id
          ORDER BY l.doc_id"""
 
-  /** Shared q68/q71 oracle: 100 planted copies of doc 0, exhaustive
-    * word-trigram Jaccard pairs at 0.8, recursive closure, min-id
-    * survivors. */
   /** Shared by q09 (batch gap sessionization) and q80 (its stateful
     * streaming face): identical session assignment. */
   private def sessionizeOracleSql: String =
@@ -12155,6 +10690,9 @@ object SparkEntry {
            CAST(((event_id % 4) >> 1) & 1 AS DOUBLE), '' FROM base)
        SELECT * FROM fields ORDER BY timestamp, byte_name, value"""
 
+  /** Shared q68/q71/q93 oracle: 100 planted copies of doc 0, exhaustive
+    * word-trigram Jaccard pairs at 0.8, recursive closure, min-id
+    * survivors. */
   private def floodClosureOracleSql: String =
     """WITH corpus AS (
          SELECT doc_id, lower(text) tx FROM documents

@@ -499,10 +499,9 @@ object Dedup {
     * table suffices — the serving side broadcasts it whole. */
   def writeHammingMembers(spark: org.apache.spark.sql.SparkSession,
                           members: DataFrame, table: String): Unit = {
-    val gen = s"${table}_members"
-    Sinks.writeTable(members, gen)
-    Generations.commit(spark, table, Seq(gen))(e =>
-      Seq("epoch" -> e, "members_table" -> gen))
+    Generations.writeSlot(spark, table, s"${table}_members",
+        "members_table", Seq(_))(Sinks.writeTable(members, _))(
+      (gen, e) => Seq("epoch" -> e, "members_table" -> gen))
   }
 
   private def membersTables(m: Map[String, String]): Seq[String] =

@@ -221,11 +221,10 @@ object Similarity {
     * different planes should still go to a fresh prefix. */
   def writeLshIndexBucketed(index: LshIndex, prefix: String,
                             numBuckets: Int = 64): Unit = {
-    val hashed = s"${prefix}_hashed"
-    Sinks.writeBucketed(index.hashedCorpus, hashed, Seq("bucket"),
-      numBuckets)
-    Generations.commit(index.hashedCorpus.sparkSession, prefix,
-      Seq(hashed))(lshRow(index.planes, hashed))
+    Generations.writeSlot(index.hashedCorpus.sparkSession, prefix,
+        s"${prefix}_hashed", "hashed_table", Seq(_))(
+      Sinks.writeBucketed(index.hashedCorpus, _, Seq("bucket"),
+        numBuckets))(lshRow(index.planes, _)(_))
   }
 
   private def lshRow(planes: Int, hashed: String)(
@@ -670,13 +669,14 @@ object Similarity {
     * refuses at [[readIvfIndex]] instead. */
   def writeIvfIndexBucketed(index: IvfIndex, prefix: String,
                             numBuckets: Int = 64): Unit = {
-    val cells = s"${prefix}_cells"
-    Sinks.inParallel(
-      () => Sinks.writeBucketed(index.corpusCells, cells, Seq("cell"),
-        numBuckets),
-      () => Sinks.writeTable(index.centroids, s"${prefix}_centroids"))
-    Generations.commit(index.centroids.sparkSession, prefix,
-      Seq(cells, s"${prefix}_centroids"))(ivfRow(cells))
+    Generations.writeSlot(index.centroids.sparkSession, prefix,
+        s"${prefix}_cells", "cells_table",
+        Seq(_, s"${prefix}_centroids")) { cells =>
+      Sinks.inParallel(
+        () => Sinks.writeBucketed(index.corpusCells, cells, Seq("cell"),
+          numBuckets),
+        () => Sinks.writeTable(index.centroids, s"${prefix}_centroids"))
+    }(ivfRow(_)(_))
   }
 
   /** Reopen the live generation of a durable IVF index (raw —
@@ -1164,14 +1164,15 @@ object Similarity {
     * search pays only its own query-side work. */
   def writeIvfSqIndexBucketed(index: IvfSqIndex, prefix: String,
                               numBuckets: Int = 64): Unit = {
-    val codes = s"${prefix}_cell_codes"
-    Sinks.inParallel(
-      () => Sinks.writeTable(index.centroids, s"${prefix}_centroids"),
-      () => Sinks.writeTable(index.stats, s"${prefix}_stats"),
-      () => Sinks.writeBucketed(index.cellCodes, codes, Seq("cell"),
-        numBuckets))
-    Generations.commit(index.centroids.sparkSession, prefix,
-      ivfSqTables(prefix, codes))(ivfSqRow(codes))
+    Generations.writeSlot(index.centroids.sparkSession, prefix,
+        s"${prefix}_cell_codes", "codes_table",
+        ivfSqTables(prefix, _)) { codes =>
+      Sinks.inParallel(
+        () => Sinks.writeTable(index.centroids, s"${prefix}_centroids"),
+        () => Sinks.writeTable(index.stats, s"${prefix}_stats"),
+        () => Sinks.writeBucketed(index.cellCodes, codes, Seq("cell"),
+          numBuckets))
+    }(ivfSqRow(_)(_))
   }
 
   private def ivfSqTables(prefix: String, codes: String): Seq[String] =
@@ -1717,16 +1718,17 @@ object Similarity {
     * one generation's codes against another's codebooks. */
   def writeIvfPqIndexBucketed(index: IvfPqIndex, prefix: String,
                               numBuckets: Int = 64): Unit = {
-    val codes = s"${prefix}_cell_codes"
-    Sinks.inParallel(
-      () => Sinks.writeBucketed(index.cellCodes, codes, Seq("cell"),
-        numBuckets),
-      () => Sinks.writeTable(index.codebooks, s"${prefix}_codebooks"),
-      () => Sinks.writeTable(index.centroids, s"${prefix}_centroids"),
-      () => Sinks.writeTable(builtCellStats(index.cellCodes),
-        s"${prefix}_cell_stats"))
-    Generations.commit(index.centroids.sparkSession, prefix,
-      ivfPqTables(prefix, codes))(ivfPqRow(index, codes))
+    Generations.writeSlot(index.centroids.sparkSession, prefix,
+        s"${prefix}_cell_codes", "codes_table",
+        ivfPqTables(prefix, _)) { codes =>
+      Sinks.inParallel(
+        () => Sinks.writeBucketed(index.cellCodes, codes, Seq("cell"),
+          numBuckets),
+        () => Sinks.writeTable(index.codebooks, s"${prefix}_codebooks"),
+        () => Sinks.writeTable(index.centroids, s"${prefix}_centroids"),
+        () => Sinks.writeTable(builtCellStats(index.cellCodes),
+          s"${prefix}_cell_stats"))
+    }(ivfPqRow(index, _)(_))
   }
 
   /** A fresh per-cell growth ledger: how many vectors the build (or a

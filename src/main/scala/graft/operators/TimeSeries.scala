@@ -53,23 +53,6 @@ object TimeSeries {
                   keys: Seq[String], valueCol: String): DataFrame =
     resampleAggMicros(df, tsCol, Period.micros(period), keys, valueCol)
 
-  /** A4 (lib/unifier_with_forecast_data.py:42-46): asfreq — snap onto a
-    * constant-frequency dense grid, null where no data. Grid built with
-    * sequence+explode (distributed after explode; the sequence itself is
-    * bounded by gridStart/gridEnd, computed once). Step granularity:
-    * microseconds (sub-second grids are first-class).
-    */
-  def denseGridMicros(df: DataFrame, startTs: Column, endTs: Column,
-                      stepUs: Long): DataFrame =
-    df.sparkSession.range(1).select(
-        explode(sequence(startTs.cast("timestamp"), endTs.cast("timestamp"),
-          expr(s"INTERVAL $stepUs MICROSECOND"))).as("grid_ts"))
-
-  /** [[denseGridMicros]] with the step in whole seconds. */
-  def denseGrid(df: DataFrame, startTs: Column, endTs: Column,
-                stepSec: Long): DataFrame =
-    denseGridMicros(df, startTs, endTs, stepSec * 1000000L)
-
   /** A8 (lib/process_gpx_data.py:71): cumulative sum (nancumsum —
     * nulls contribute 0 but rows are kept). */
   def cumsum(df: DataFrame, tsCol: String, valueCol: String,

@@ -106,8 +106,7 @@ object ParseStage {
   def report(spark: SparkSession, inputGlob: String, wide: DataFrame,
              perFilePipeline: Option[String => DataFrame] = None,
              maxTimedFiles: Int = 16): Seq[Report] = {
-    val lineCounts = spark.read.textFile(inputGlob).toDF("line")
-      .withColumn("file", input_file_name())
+    val lineCounts = Candump.lines(spark, inputGlob)
       .groupBy("file").count().collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
     val t0 = System.nanoTime()

@@ -8,8 +8,8 @@ import graft.operators.{Period, TimeSeries}
 /** E2 — the resample stage (lib/resampler.py:59-101): sparse wide
   * telemetry → constant-period mean bins (A2, wall-clock aligned,
   * empty bins materialized as null rows) → time-interpolation limited
-  * to 60 s of consecutive ticks, interior-only (A3). The IQR outlier
-  * pass exists but is default-off, replicating quirk Q4 (commented out
+  * to 60 s of consecutive ticks, interior-only (A3). There is no IQR
+  * outlier pass, replicating quirk Q4 (the reference comments it out
   * at lib/resampler.py:92-95).
   *
   * Periods are pandas-style strings at MICROSECOND granularity — the
@@ -17,7 +17,7 @@ import graft.operators.{Period, TimeSeries}
   *
   * Architecture: the wide frame is MELTED to long form
   * (keys, timestamp, signal, value) and every per-signal operation —
-  * bin mean, dense grid, IQR fences, gap-limited interpolation — runs
+  * bin mean, dense grid, gap-limited interpolation — runs
   * over (keys, signal) groups with ONE constant-size expression set;
   * a single pivot at the end restores the wide layout. A naive wide
   * formulation needs ~6 window expressions PER SIGNAL (~4,000 for a
@@ -38,8 +38,7 @@ import graft.operators.{Period, TimeSeries}
 object ResampleStage {
 
   def run(wide: DataFrame, signals: Seq[String], period: String,
-          keys: Seq[String] = Nil,
-          applyIqr: Boolean = false, iqrP: Double = 0.01): DataFrame = {
+          keys: Seq[String] = Nil): DataFrame = {
     require(signals.nonEmpty, "no signal columns to resample")
     val periodUs = Period.micros(period)
     val k = keys.map(col)
@@ -66,30 +65,12 @@ object ResampleStage {
       .select((k :+ col("timestamp") :+
         explode(array(signals.map(lit): _*)).as("signal")): _*)
     val dense = grid.join(binned, keys ++ Seq("signal", "timestamp"), "left")
-    // optional A5 (default-off, Q4): IQR fences blank outliers only.
-    // One aggregate over the long form yields every (key, signal)'s
-    // fences — one job at any schema width, broadcast back.
-    val cleaned =
-      if (!applyIqr) dense
-      else {
-        val fences = binned.groupBy((k :+ col("signal")): _*)
-          .agg(expr(s"percentile(value, $iqrP)").as("__q1"),
-               expr(s"percentile(value, ${1 - iqrP})").as("__q3"))
-          .withColumn("__lo", col("__q1") - (col("__q3") - col("__q1")) * 1.5)
-          .withColumn("__hi", col("__q3") + (col("__q3") - col("__q1")) * 1.5)
-        dense.join(broadcast(fences), keys :+ "signal", "left")
-          .withColumn("value",
-            when(col("__lo").isNull ||
-                 (col("value") >= col("__lo") && col("value") <= col("__hi")),
-              col("value")).otherwise(lit(null)))
-          .drop("__q1", "__q3", "__lo", "__hi")
-      }
     // A3: limited interior time-interpolation, one window pass
     // partitioned by (keys, signal)
     // (lib/resampler.py:66: limit = max(1, 60s / period) ticks)
     val limit = math.max(1L, 60000000L / math.max(periodUs, 1L)).toInt
     val interped = TimeSeries
-      .interpolateMany(cleaned, "timestamp", Seq("value"),
+      .interpolateMany(dense, "timestamp", Seq("value"),
         keys :+ "signal", maxGap = limit, fillForward = false)
       .withColumn("value", col("interp__value")).drop("interp__value")
     // pivot back to wide: one row per (keys, timestamp) exists per

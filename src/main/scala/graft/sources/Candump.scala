@@ -1,5 +1,6 @@
 package graft.sources
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -45,10 +46,28 @@ object Candump {
     */
   def frames(spark: SparkSession, path: String,
              offsetMicros: Long = 0L): DataFrame =
-    framesFromLines(
-      spark.read.textFile(path).toDF("line")
-        .withColumn("file", input_file_name()),
-      offsetMicros)
+    framesFromLines(lines(spark, path), offsetMicros)
+
+  /** The text lines of every file `path` names, as (line, file).
+    * A glob is resolved HERE, once on the driver, and Spark reads the
+    * matched paths with their glob metacharacters escaped: handed the
+    * glob itself, Spark's single-path streaming-sink probe stats the
+    * pattern as a file and logs a benign `FileNotFoundException` stack
+    * trace on every read. `file` (`input_file_name()`) is the string
+    * the glob read yields; a path that matches nothing fails, naming
+    * it. */
+  def lines(spark: SparkSession, path: String): DataFrame = {
+    val pattern = new Path(path)
+    val fs = pattern.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val matched = Option(fs.globStatus(pattern)).getOrElse(Array.empty)
+      .map(_.getPath.toString.flatMap {
+        case c if "\\{}[]*?".indexOf(c) >= 0 => s"\\$c"
+        case c => c.toString
+      })
+    require(matched.nonEmpty, s"Path does not exist: $path")
+    spark.read.textFile(matched.toSeq: _*).toDF("line")
+      .withColumn("file", input_file_name())
+  }
 
   /** Same extraction over an in-memory `line` column (e.g. generated
     * test corpora or a Structured Streaming text source). Expects
@@ -96,27 +115,23 @@ object Candump {
     * input size, and the join back is a broadcast hash join — the big
     * side never shuffles (a whole-partition window here would
     * shuffle+sort every frame). The bounds side recomputes the text
-    * scan + single-pass regex by default — cheaper than caching the
-    * whole frame table at scale; pass persist=true to materialize the
-    * frames instead when the input is expensive to re-read.
+    * scan + single-pass regex — cheaper than caching the whole frame
+    * table at scale.
     *
-    * CAVEAT: the default double evaluation is only safe when `frames`'
-    * lineage is deterministic (a file scan + narrow projections, as in
-    * ParseStage). The lineage embeds `spark_partition_id`/
+    * CAVEAT: the double evaluation is only safe when `frames`' lineage
+    * is deterministic (a file scan + narrow projections, as in
+    * ParseStage): both subtrees must read the same rows in the same
+    * placement. The lineage embeds `spark_partition_id`/
     * `monotonically_increasing_id`; over a shuffled or streaming
-    * upstream the two subtrees could observe different row placement —
-    * pass persist=true there so bounds and probe read ONE
-    * materialization.
+    * upstream the two subtrees could observe different row placement,
+    * so persist such an input before calling this.
     */
-  def cropToFileRange(frames: DataFrame, persist: Boolean = false): DataFrame = {
-    val f = if (persist)
-      frames.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    else frames
+  def cropToFileRange(frames: DataFrame): DataFrame = {
     val ord = struct(col("line_id"), col("match_no"))
-    val bounds = f.groupBy(col("file"), col("chunk"))
+    val bounds = frames.groupBy(col("file"), col("chunk"))
       .agg(min_by(col("ts"), ord).as("__first_ts"),
            max_by(col("ts"), ord).as("__last_ts"))
-    f.join(broadcast(bounds), Seq("file", "chunk"))
+    frames.join(broadcast(bounds), Seq("file", "chunk"))
       .filter(col("ts") >= col("__first_ts") && col("ts") <= col("__last_ts"))
       .drop("__first_ts", "__last_ts")
   }

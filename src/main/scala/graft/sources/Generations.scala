@@ -55,6 +55,27 @@ object Generations {
   def otherSlot(live: String, base: String): String =
     if (live == base) s"${base}_b" else base
 
+  /** A fresh whole write of a table-pointer family: `write` the slot
+    * that `prefix`'s committed `pointer` column does NOT name (`base`
+    * before the first commit), then [[commit]] it with `row(slot,
+    * epoch)`, superseding the slot that served. A write over a served
+    * prefix thus never rewrites the serving table in place, and a
+    * generation a purge or retrain moved to `base_b` is dropped at the
+    * commit instead of left behind. */
+  def writeSlot(spark: SparkSession, prefix: String, base: String,
+                pointer: String, stamp: String => Seq[String])(
+      write: String => Unit)(
+      row: (String, String) => Seq[(String, Any)]): Unit = {
+    val metaTable = s"${prefix}_meta"
+    val live =
+      if (!spark.catalog.tableExists(metaTable)) None
+      else Some(spark.table(metaTable).select(pointer).collect()(0)
+        .getString(0))
+    val slot = live.fold(base)(otherSlot(_, base))
+    write(slot)
+    commit(spark, prefix, stamp(slot), live.toSeq)(row(slot, _))
+  }
+
   /** The serving `gen` of `${prefix}_meta`, or None before the first
     * commit — for rebuilds called outside a window (a window already
     * knows it from its [[open]]). */
@@ -312,7 +333,8 @@ object Generations {
     val merged = live.map(_._2.unionByName(incoming)).getOrElse(incoming)
       .distinct().coalesce(1)
     Sinks.writeTable(merged, s"${ledger}_$next")
-    commit(spark, ledger, Seq(s"${ledger}_$next"))(e =>
+    commit(spark, ledger, Seq(s"${ledger}_$next"),
+      live.map { case (g, _) => s"${ledger}_$g" }.toSeq)(e =>
       Seq("gen" -> next, "epoch" -> e))
   }
 

@@ -83,6 +83,24 @@ class CandumpSpec extends SparkSpec {
     assert(ts.sorted.toSeq == Seq(1.5000001e9, 1.50000015e9, 1.5000002e9))
   }
 
+  test("a glob read resolves on the driver and tags lines as Spark's glob read does") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("candump_glob")
+    Files.writeString(dir.resolve("a.log"), "l1\nl2\n")
+    Files.writeString(dir.resolve("b.log"), "l3\n")
+    Files.writeString(dir.resolve("c.txt"), "skip\n")
+    val glob = s"$dir/*.log"
+    def perFile(df: org.apache.spark.sql.DataFrame) =
+      df.groupBy("file").count().as[(String, Long)].collect().toMap
+    val viaSpark = spark.read.textFile(glob).toDF("line")
+      .withColumn("file", org.apache.spark.sql.functions.input_file_name())
+    assert(perFile(Candump.lines(spark, glob)) == perFile(viaSpark))
+    assert(perFile(viaSpark).values.toSeq.sorted == Seq(1L, 2L))
+    val e = intercept[IllegalArgumentException](
+      Candump.lines(spark, s"$dir/*.none"))
+    assert(e.getMessage.contains(s"$dir/*.none"), e.getMessage)
+  }
+
   test("frameRegex lock: substring field extraction assumes this exact pattern") {
     // framesFromLines slices fields by offsets derived from the widths
     // below; if this assertion fires you changed the pattern — revisit

@@ -3,6 +3,7 @@ package graft
 import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 
+import graft.operators.{Dedup, Similarity}
 import graft.sources.{Generations, Sinks}
 
 class GenerationsSpec extends SparkSpec {
@@ -48,6 +49,58 @@ class GenerationsSpec extends SparkSpec {
       Map("gen" -> "b", "epoch" -> "e1"))
     assert(fired.fired && fired.changed && fired.pre == "a" &&
       fired.post == "b")
+  }
+
+  test("a ledger append drops the generation it supersedes") {
+    import spark.implicits._
+    Generations.clearLedger(spark, "gs_led")
+    Generations.appendLedger(spark, "gs_led", Seq(1L, 2L).toDF("id"))
+    Generations.appendLedger(spark, "gs_led", Seq(2L, 3L).toDF("id"))
+    assert(Seq("gs_led_a", "gs_led_b").count(spark.catalog.tableExists) == 1)
+    val (_, rows) = Generations.readLedger(spark, "gs_led").get
+    assert(rows.as[Long].collect().sorted.toSeq == Seq(1L, 2L, 3L))
+  }
+
+  test("a write over a purged LSH index drops the moved generation") {
+    import spark.implicits._
+    val p = "gs_lsh"
+    Seq(s"${p}_meta", s"${p}_hashed", s"${p}_hashed_b")
+      .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+    Generations.clearLedger(spark, s"${p}_tombstones")
+    def vecs(ids: Seq[Long]) = ids.map(i => (i, Array(1.0, i.toDouble)))
+      .toDF("vec_id", "embedding")
+    def write(ids: Seq[Long]) = Similarity.writeLshIndexBucketed(
+      Similarity.buildLsh(vecs(ids), "vec_id", "embedding", planes = 4),
+      p, numBuckets = 2)
+    write(Seq(1L, 2L, 3L))
+    assert(spark.catalog.tableExists(s"${p}_hashed"))
+    Similarity.tombstoneLsh(spark, p, Seq(1L).toDF("vec_id"), "vec_id")
+    Similarity.purgeLshIndex(spark, p, numBuckets = 2).collect()
+    assert(spark.table(s"${p}_meta").collect()(0)
+      .getAs[String]("hashed_table") == s"${p}_hashed_b")
+    write(Seq(7L, 8L))
+    assert(!spark.catalog.tableExists(s"${p}_hashed_b"))
+    assert(Similarity.readLshIndex(spark, p).hashedCorpus
+      .select("neighbor_id").as[Long].collect().sorted.toSeq == Seq(7L, 8L))
+  }
+
+  test("a write over a compacted members table drops the moved generation") {
+    import spark.implicits._
+    val t = "gs_hm"
+    Seq(s"${t}_meta", s"${t}_members", s"${t}_members_b")
+      .foreach(x => spark.sql(s"DROP TABLE IF EXISTS $x"))
+    Generations.clearLedger(spark, s"${t}_tombstones")
+    def members(ids: Seq[Long]) = Dedup.hammingBandMembers(
+      ids.map(i => (i, 7L)).toDF("media_id", "sig"), "media_id", "sig",
+      maxHamming = 2)
+    Dedup.writeHammingMembers(spark, members(Seq(1L, 2L)), t)
+    Dedup.compactHammingMembers(spark, t, maxHamming = 2)
+    assert(spark.table(s"${t}_meta").collect()(0)
+      .getAs[String]("members_table") == s"${t}_members_b")
+    val last = members(Seq(5L))
+    Dedup.writeHammingMembers(spark, last, t)
+    assert(!spark.catalog.tableExists(s"${t}_members_b"))
+    assert(Dedup.readHammingMembers(spark, t).count() == last.count())
   }
 
   test("the commit protocol lives only in the generation store") {

@@ -97,7 +97,8 @@ class StreamingSeasonSpec extends SparkSpec {
       .collect().map(_.toString).sorted.toSeq
     // batch oracle over the full corpus (the framesFromLines +
     // decodeLong path the streaming variant mirrors)
-    val batchLines = spark.read.text(s"$in/*.log")
+    val batchLines = spark.read.text(
+        Seq("a", "b", "c", "d").map(f => in.resolve(s"$f.log").toString): _*)
       .select(org.apache.spark.sql.functions.col("value").as("line"),
         org.apache.spark.sql.functions.input_file_name().as("file"))
     val want = graft.operators.CanDecode.decodeLong(
