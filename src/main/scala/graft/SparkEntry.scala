@@ -1,10792 +1,32 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.operators.TimeSeries
+import graft.catalog._
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** Driver contract — see SURVEY.md §7.
   *
-  * Each entry in `queries` exercises one operator family from
-  * SURVEY.md §2 against the driver-generated synthetic tables; the
-  * matching `oracleSql` is ANSI SQL producing the identical result in
-  * DuckDB (same column names, same deterministic ORDER BY, and
-  * float-stable arithmetic: exact integer aggregates, or rounding
-  * applied identically on both sides).
+  * Each catalog entry exercises one operator family from SURVEY.md §2
+  * against the driver-generated synthetic tables; its oracle is ANSI
+  * SQL producing the identical result in DuckDB. The entries live in
+  * family files under `graft/catalog/`, each query beside its oracle;
+  * `queries` and `oracleSql` are views of that one list.
   */
 object SparkEntry {
 
-  private def t(s: SparkSession, dir: String, name: String): DataFrame = {
-    // events.parquet has shipped with TWO timestamp physical layouts
-    // across testdata generations: ns-precision TIMESTAMP(NANOS)
-    // (rejected by Spark's reader unless read as long — floor to the
-    // µs DuckDB also sees) and plain µs TIMESTAMP (inferred as NTZ).
-    // Branch on the ACTUAL column type so either layout loads; the
-    // NTZ→timestamp cast is wall-clock-preserving under the session's
-    // UTC zone, matching DuckDB's naive read.
-    if (name == "events") {
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val raw = s.read.parquet(s"$dir/events.parquet")
-      raw.schema("ts").dataType match {
-        case org.apache.spark.sql.types.LongType =>
-          raw.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
-        case _ => raw.withColumn("ts", $"ts".cast("timestamp"))
-      }
-    } else s.read.parquet(s"$dir/$name.parquet")
-  }
+  lazy val catalog: Seq[CatalogEntry] = Seq(RelationalQueries.entries,
+    PaperPathQueries.entries, DedupQueries.entries, VectorQueries.entries,
+    TextQueries.entries, ImageQueries.entries, AudioVideoQueries.entries,
+    LifecycleQueries.entries, CascadeQueries.entries).flatten
+
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
+    catalog.map(e => e.name -> e.query).toMap
+
+  lazy val oracleSql: Map[String, String] =
+    catalog.flatMap(e => e.oracle.map(e.name -> _)).toMap
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0.
     * Mini end-to-end slice: resample → dense grid → interpolate. */
   def entry(spark: SparkSession): DataFrame =
     queries("q11_interpolate")(spark, "/root/testdata/sf0.001")
-
-  /** q83/q87 shared fixture (ONE definition, like their shared oracle
-    * SQL — the two rows claim an identical decision contract, so they
-    * must gate an identical corpus): planted licence TAIL, shared
-    * boilerplate HEAD, whole-doc SELF-repeat. */
-  private def spanDedupFixture(docs: DataFrame): DataFrame =
-    docs.select($"doc_id",
-      when($"doc_id" % 5 === 0,
-          concat($"text", lit(" every duplicated span longer than" +
-            " eight words must survive exactly once corpus wide")))
-        .when($"doc_id" % 7 === 0,
-          concat(lit("this shared preamble sentence has more than" +
-            " eight words of pure boilerplate "), $"text"))
-        .when($"doc_id" % 11 === 0,
-          concat($"text", lit(" "), $"text"))
-        .otherwise($"text").as("text"))
-
-  /** q86/q89 shared benchmark fixture: 12-word interior slice of
-    * every 13th document — planted containment the decontamination
-    * and screening tiers must both catch. */
-  private def benchSliceFixture(docs: DataFrame): DataFrame =
-    docs.filter($"doc_id" % 13 === 0)
-      .select($"doc_id",
-        concat_ws(" ", slice(split(trim($"text"), "\\s+"), 3, 12))
-          .as("text"))
-
-  // the second-suite sibling (q169/q170's "new eval suite lands"
-  // fixture): different stride, offset and a disjoint bench_id space
-  private def benchSliceFixtureB(docs: DataFrame): DataFrame =
-    docs.filter($"doc_id" % 11 === 0)
-      .select(($"doc_id" + 1000000L).as("doc_id"),
-        concat_ws(" ", slice(split(trim($"text"), "\\s+"), 5, 12))
-          .as("text"))
-
-  // ---- shared media fixtures ----------------------------------------
-  // The planted images, videos and clips of the media gates; their
-  // oracles replay these exact pixel and sample formulas in SQL.
-
-  /** A 16x12 gray image of `px(x, y)`, encoded as `fmt`. */
-  private def grayImage(px: (Int, Int) => Int, fmt: String): Array[Byte] = {
-    val im = new java.awt.image.BufferedImage(16, 12,
-      java.awt.image.BufferedImage.TYPE_INT_RGB)
-    for (y <- 0 until 12; x <- 0 until 16) {
-      val g = px(x, y)
-      im.setRGB(x, y, (g << 16) | (g << 8) | g)
-    }
-    val bos = new java.io.ByteArrayOutputStream()
-    javax.imageio.ImageIO.write(im, fmt, bos)
-    bos.toByteArray
-  }
-
-  /** The reference images' pixel formula: source `src`, brightness
-    * `shift`. */
-  private def refPixel(src: Long, x: Int, y: Int, shift: Int = 0): Int =
-    ((src * 31 + x * (11 + src % 7) + y * 29 +
-      x.toLong * y * (1 + src % 3) + shift) % 256).toInt
-
-  /** The novel images' pixel formula, far from every reference. */
-  private def novelPixel(src: Long, x: Int, y: Int): Int =
-    ((src * 53 + x * 29 + y * 7 + x.toLong * y * 2 + 101) % 256).toInt
-
-  /** Reference image `src` at brightness `shift`, encoded as `fmt`. */
-  private def refImage(src: Long, shift: Int, fmt: String): Array[Byte] =
-    grayImage(refPixel(src, _, _, shift), fmt)
-
-  /** An 8-frame 16x12 gray GIF (indexed gray palette, lossless): frames
-    * 0-5 follow source `src`'s formula, 6-7 a shared tail; `bright`
-    * lifts every pixel, `dropFirst` cuts frame 0 and `tweak` whitens
-    * pixel (3, 0). */
-  private def grayGif(src: Long, bright: Int, dropFirst: Boolean,
-                      tweak: Boolean = false): Array[Byte] = {
-    def pix(f: Int, x: Int, y: Int): Int = {
-      val base =
-        if (f < 6) ((src * 37 + x * (11 + src % 7) + y * 23 +
-          x.toLong * y * (1 + src % 3)) % 200).toInt
-        else ((src * 53 + x * 29 + y * 7 +
-          x.toLong * y * 2 + 101) % 200).toInt
-      if (tweak && x == 3 && y == 0) 255 else base + bright
-    }
-    val cmap = (0 until 256)
-      .map(v => (0xFF << 24) | (v << 16) | (v << 8) | v).toArray
-    val icm = new java.awt.image.IndexColorModel(8, 256, cmap, 0,
-      false, -1, java.awt.image.DataBuffer.TYPE_BYTE)
-    val bos = new java.io.ByteArrayOutputStream()
-    val ios = javax.imageio.ImageIO.createImageOutputStream(bos)
-    val writer = javax.imageio.ImageIO
-      .getImageWritersByFormatName("gif").next()
-    writer.setOutput(ios)
-    writer.prepareWriteSequence(null)
-    for (f <- (if (dropFirst) 1 else 0) until 8) {
-      val img = new java.awt.image.BufferedImage(16, 12,
-        java.awt.image.BufferedImage.TYPE_BYTE_INDEXED, icm)
-      for (y <- 0 until 12; x <- 0 until 16)
-        img.getRaster.setSample(x, y, 0, pix(f, x, y))
-      writer.writeToSequence(
-        new javax.imageio.IIOImage(img, null, null), null)
-    }
-    writer.endWriteSequence(); writer.dispose(); ios.close()
-    bos.toByteArray
-  }
-
-  /** A 16-bit 8 kHz clip of the audio fixtures' sample formula, each
-    * sample `(h(src, frame, channel) mod span) - span / 2` times
-    * `scale`, written as `tpe` with `bigEndian` samples. */
-  private def pcmClip(span: Long, src: Long, ch: Int, frames: Int,
-                      scale: Int,
-                      tpe: javax.sound.sampled.AudioFileFormat.Type,
-                      bigEndian: Boolean): Array[Byte] = {
-    val out = new Array[Byte](frames * ch * 2)
-    for (i <- 0 until frames; c <- 0 until ch) {
-      val v = (((src * 2654435761L + i.toLong * i * 40503L +
-        i * 977L + c * 997L) % span) - span / 2).toInt * scale
-      val (hi, lo) = (((v >> 8) & 0xFF).toByte, (v & 0xFF).toByte)
-      val base = (i * ch + c) * 2
-      out(base) = if (bigEndian) hi else lo
-      out(base + 1) = if (bigEndian) lo else hi
-    }
-    val fmt = new javax.sound.sampled.AudioFormat(
-      8000f, 16, ch, true, bigEndian)
-    val ais = new javax.sound.sampled.AudioInputStream(
-      new java.io.ByteArrayInputStream(out), fmt, frames.toLong)
-    val bos = new java.io.ByteArrayOutputStream()
-    javax.sound.sampled.AudioSystem.write(ais, tpe, bos)
-    bos.toByteArray
-  }
-
-  /** Decode image payloads, sign them (dHash) and classify each row's
-    * decode status: the dead-letter ingests' per-row codec step. */
-  private def decodeWithStatus(df: DataFrame): DataFrame =
-    operators.Multimodal.perceptualHashes(
-        operators.Multimodal.decodeImages(df, "payload"),
-        "pixels", "img_width", "img_height")
-      .withColumn("decode_status",
-        operators.Multimodal.decodeStatus($"payload", $"img_width"))
-
-  /** The dead-letter ingests' fixture (q142, q146): Hamming members of
-    * 8 reference PNGs (persisted), and a fresh `tag` directory whose
-    * `in` holds BMP re-encodes of refs 1-3, novel PNGs 21-22 and the
-    * garbage / empty / null payloads in 3 files. */
-  private def quarantineFixture(
-      s: SparkSession, tag: String): (DataFrame, java.nio.file.Path) = {
-    val refMedia = s.createDataFrame(
-        (1L to 8L).map(i => (i, refImage(i, 0, "png"))))
-      .toDF("media_id", "payload")
-    val members = operators.Dedup.hammingBandMembers(
-      operators.Multimodal.perceptualHashes(
-          operators.Multimodal.decodeImages(refMedia, "payload"),
-          "pixels", "img_width", "img_height")
-        .select($"media_id", $"dhash"),
-      "media_id", "dhash", maxHamming = 6)
-    members.persist(org.apache.spark.storage.StorageLevel
-      .MEMORY_AND_DISK).count()
-    val rows: Seq[(Long, Array[Byte])] =
-      (1L to 3L).map(i => (500L + i, refImage(i, 0, "bmp"))) ++
-      (21L to 22L).map(i => (500L + i, refImage(i, 0, "png"))) ++
-      Seq((9001L, "definitely not an image".getBytes("UTF-8")),
-        (9002L, Array.empty[Byte]),
-        (9003L, null.asInstanceOf[Array[Byte]]))
-    val dir = java.nio.file.Files.createTempDirectory(s"${tag}_stream")
-    dir.toFile.deleteOnExit()
-    s.createDataFrame(rows).toDF("media_id", "payload")
-      .repartition(3).write.parquet(s"$dir/in")
-    (members, dir)
-  }
-
-  /** Decode, dHash, embed and status-classify image payloads: the
-    * media cascades' per-row codec step (q159, q167, q168). */
-  private def mediaPrep(df: DataFrame): DataFrame = {
-    val sig = operators.Multimodal.perceptualHashes(
-      operators.Multimodal.decodeImages(df, "payload"),
-      "pixels", "img_width", "img_height")
-    operators.Multimodal.imageEmbed(sig, "pixels", "img_width",
-        "img_height")
-      .withColumn("decode_status",
-        operators.Multimodal.decodeStatus($"payload", $"img_width"))
-  }
-
-  /** The media cascades' arrivals: BMP re-encodes and brightness
-    * shifts of refs 1-3, verbatim copies of refs 7-9, novel images,
-    * and the garbage / null / empty payloads. */
-  private def mediaCascadeArrivals: Seq[(Long, Array[Byte])] =
-    (1L to 3L).map(i => (500L + i, refImage(i, 0, "bmp"))) ++
-    (1L to 3L).map(i => (510L + i, refImage(i, 4, "png"))) ++
-    (7L to 9L).map(i => (520L + i, refImage(i, 0, "png"))) ++
-    (1L to 3L).map(i => (530L + i,
-      grayImage(novelPixel(i, _, _), "png"))) ++
-    Seq((9001L, "not an image".getBytes("UTF-8")),
-      (9002L, null.asInstanceOf[Array[Byte]]),
-      (9003L, Array.empty[Byte]))
-
-  /** A media cascade run's decision columns, suffixed with `tag`. */
-  private def mediaDecisions(out: DataFrame, tag: String): DataFrame =
-    localCopy(out.select($"media_id",
-      col("cascade_admitted").as(s"admitted_$tag"),
-      col("reason").as(s"reason_$tag"),
-      col("perceptual_match_id").as(s"pmid_$tag"),
-      col("perceptual_hamming").as(s"pham_$tag"),
-      col("semantic_match_id").as(s"smid_$tag")))
-
-  // ---- shared text and vector fixtures --------------------------------
-
-  /** The text cascades' arrivals (q158, q166, q171): exact copies of
-    * every 20th accepted doc, appended-tail edits, word-reversed
-    * copies, novel docs, and the empty / null / too-short payloads. */
-  private def textCascadeArrivals(accepted: DataFrame,
-                                  docs: DataFrame): DataFrame = {
-    val revText = array_join(reverse(filter(
-      split(trim($"text"), "\\s+"), t => t =!= lit(""))), " ")
-    accepted.filter($"doc_id" % 20 === 0)
-        .select(($"doc_id" + 400000L).as("doc_id"), $"text")
-      .unionByName(accepted.filter($"doc_id" % 20 === 4)
-        .select(($"doc_id" + 500000L).as("doc_id"),
-          concat($"text", lit(" xyzzy qbf")).as("text")))
-      .unionByName(accepted.filter($"doc_id" % 20 === 8)
-        .select(($"doc_id" + 600000L).as("doc_id"),
-          revText.as("text")))
-      .unionByName(docs.filter($"doc_id" % 20 === 1)
-        .select(($"doc_id" + 700000L).as("doc_id"), $"text"))
-      .unionByName(docs.sparkSession.createDataFrame(Seq(
-          (900001L, ""), (900002L, null.asInstanceOf[String]),
-          (900003L, "too short")))
-        .toDF("doc_id", "text"))
-  }
-
-  /** `df`'s rows collected and re-served as a local relation: a result
-    * read before a generation swap outlives the swap's drop. */
-  private def localCopy(df: DataFrame): DataFrame =
-    df.sparkSession.createDataFrame(
-      java.util.Arrays.asList(df.collect(): _*), df.schema)
-
-  /** The IVF drift fixture (q123, q131, q145): 20 base vectors on two
-    * axes, then 10 drift vectors and 10 queries on a third. */
-  private def ivfDriftVectors(
-      s: SparkSession): (DataFrame, DataFrame, DataFrame) = {
-    val base = s.range(1, 21).select($"id".as("vec_id"),
-      expr("CASE WHEN id % 2 = 1 THEN array(1.0D, 0.0D, 0.0D, " +
-        "0.1D * CAST((id + 1) DIV 2 AS DOUBLE)) " +
-        "ELSE array(0.0D, 1.0D, 0.0D, 0.1D * CAST(id DIV 2 AS DOUBLE)) " +
-        "END").as("embedding"))
-    val drift = s.range(1, 11).select(($"id" + 100L).as("vec_id"),
-      expr("array(0.05D, 0.0D, 1.0D, 0.1D * CAST(id AS DOUBLE))")
-        .as("embedding"))
-    val queries = s.range(1, 11).select(($"id" + 1000L).as("vec_id"),
-      expr("array(0.0D, 0.05D, 1.0D, 0.1D * CAST(id AS DOUBLE))")
-        .as("embedding"))
-    (base, drift, queries)
-  }
-
-  /** The maintenance-window report of q131/q145: stale top-1, the
-    * healing window, healed top-1, then a second (quiet) window, in
-    * that order. */
-  private def ivfMaintainReport(top1: String => DataFrame,
-                                maintain: () => DataFrame): DataFrame = {
-    val pre = top1("pre_top1")
-    val heal = maintain()
-    val post = top1("post_top1")
-    val noop = maintain()
-    pre.join(post, Seq("query_id"))
-      .crossJoin(broadcast(heal.select(
-        $"pre_mean_recall".as("pre_mean"), $"retrain_fired",
-        $"post_mean_recall".as("post_mean"),
-        $"epoch_changed".as("heal_epoch_changed"))))
-      .crossJoin(broadcast(noop.select(
-        $"retrain_fired".as("noop_fired"),
-        $"post_mean_recall".as("noop_mean"),
-        $"epoch_changed".as("noop_epoch_changed"))))
-      .select($"query_id", $"pre_top1", $"post_top1", $"pre_mean",
-        $"retrain_fired", $"post_mean", $"heal_epoch_changed",
-        $"noop_fired", $"noop_mean", $"noop_epoch_changed")
-      .orderBy($"query_id")
-  }
-
-  // ---- the per-operator query catalog --------------------------------
-
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-
-    // A1/A14: hash aggregate w/ exact + rounded aggregates (partial agg
-    // map-side, 2-col grouping; scales via hash shuffle on group keys)
-    "q01_agg" -> ((s, d) => {
-      t(s, d, "lineitem")
-        .groupBy($"l_returnflag", $"l_linestatus")
-        .agg(sum($"l_quantity").as("sum_qty"),
-             count(lit(1)).as("n"),
-             round(sum($"l_extendedprice"), 2).as("sum_price"),
-             min($"l_discount").as("min_disc"),
-             max($"l_discount").as("max_disc"))
-        .orderBy($"l_returnflag", $"l_linestatus")
-    }),
-
-    // P7/S: filter + projection, pushed down to the parquet scan
-    "q02_filter_project" -> ((s, d) => {
-      t(s, d, "events")
-        .filter($"event_type" === "purchase" && $"value" > 100)
-        .select($"event_id", $"user_id", $"ts", $"value")
-        .orderBy($"event_id")
-    }),
-
-    // J: multi-way join (broadcast dim × shuffle fact) + aggregate
-    "q03_join_agg" -> ((s, d) => {
-      val c = t(s, d, "customer"); val o = t(s, d, "orders")
-      val l = t(s, d, "lineitem")
-      l.join(o, l("l_orderkey") === o("o_orderkey"))
-        .join(broadcast(c), o("o_custkey") === c("c_custkey"))
-        .groupBy($"c_mktsegment")
-        .agg(countDistinct($"o_orderkey").as("n_orders"),
-             round(sum($"l_extendedprice" * (lit(1) - $"l_discount")), 2).as("revenue"))
-        .orderBy($"c_mktsegment")
-    }),
-
-    // A11/A12: global sort + limit (TakeOrderedAndProject, no full sort)
-    "q04_topk" -> ((s, d) => {
-      t(s, d, "orders")
-        .select($"o_orderkey", $"o_custkey", $"o_totalprice")
-        .orderBy($"o_totalprice".desc, $"o_orderkey")
-        .limit(10)
-    }),
-
-    // window ranking (beyond-reference; partition-parallel)
-    "q05_window_rank" -> ((s, d) => {
-      val w = Window.partitionBy($"o_custkey").orderBy($"o_orderdate", $"o_orderkey")
-      t(s, d, "orders")
-        .withColumn("rn", row_number().over(w))
-        .filter($"rn" <= 3)
-        .select($"o_custkey", $"o_orderkey", $"rn")
-        .orderBy($"o_custkey", $"rn")
-    }),
-
-    // A8: cumulative sum per key (lib/process_gpx_data.py:71)
-    "q06_cumsum" -> ((s, d) => {
-      TimeSeries.cumsum(t(s, d, "events"), "ts", "value",
-          Seq("user_id"), Seq("event_id"))
-        .select($"user_id", $"event_id", round($"cum_value", 2).as("cum_value"))
-        .orderBy($"user_id", $"event_id")
-    }),
-
-    // A10: adjacent-row diff via lag (lib/process_gpx_data.py:49-56)
-    "q07_lag_diff" -> ((s, d) => {
-      TimeSeries.lagDiff(t(s, d, "events"), "ts", "value",
-          Seq("user_id"), Seq("event_id"))
-        .select($"user_id", $"event_id", round($"diff_value", 2).as("diff_value"))
-        .orderBy($"user_id", $"event_id")
-    }),
-
-    // A2: tumbling-window resample + mean (lib/resampler.py:97-99)
-    "q08_resample" -> ((s, d) => {
-      TimeSeries.resampleAgg(t(s, d, "events"), "ts", 3600,
-          Seq("event_type"), "value")
-        .select($"event_type", $"bucket_ts", $"sum_value", $"n", $"mean_value")
-        .orderBy($"event_type", $"bucket_ts")
-    }),
-
-    // gap-based sessionization (beyond-reference training-pipeline op)
-    "q09_sessionize" -> ((s, d) => {
-      TimeSeries.sessionize(t(s, d, "events"), "ts", Seq("user_id"),
-          1800, Seq("event_id"))
-        .select($"user_id", $"event_id", $"session_id")
-        .orderBy($"user_id", $"event_id")
-    }),
-
-    // J4: as-of (ffill) alignment via union trick (lib/process_gpx_data.py:165-169)
-    "q10_asof" -> ((s, d) => {
-      val ev = t(s, d, "events")
-      val left = ev.filter($"event_type" === "purchase")
-      val right = ev.filter($"event_type" === "click")
-        .groupBy($"user_id", $"ts").agg(max_by($"value", $"event_id").as("rv"))
-      TimeSeries.asofJoin(left, right, "ts", Seq("user_id"), Seq("rv"))
-        .select($"event_id", $"user_id", round($"asof_rv", 2).as("asof_value"))
-        .orderBy($"event_id")
-    }),
-
-    // A3/J5/A4: dense grid + linear interpolation with both-side
-    // brackets (lib/resampler.py:63-66, lib/unifier_with_forecast_data.py:69-73)
-    "q11_interpolate" -> ((s, d) => {
-      val ev = t(s, d, "events")
-      val b = TimeSeries.resampleAgg(ev, "ts", 3600, Seq("user_id"), "value")
-        .select($"user_id", $"bucket_ts", $"mean_value")
-      val bounds = b.agg(min($"bucket_ts").as("lo"), max($"bucket_ts").as("hi"))
-      // repartition after the 1-row explode: without it the whole grid
-      // (users × hours) would stream through a single task
-      val grid = bounds.select(explode(sequence($"lo", $"hi",
-          expr("INTERVAL 3600 SECONDS"))).as("bucket_ts"))
-        .repartition(s.sparkContext.defaultParallelism)
-        .crossJoin(ev.select($"user_id").distinct())
-      val joined = grid.join(b, Seq("user_id", "bucket_ts"), "left")
-      // no final rounding: every input (round(sum,2)/n means, exact µs
-      // fractions) is bit-identical across engines, so the interpolated
-      // doubles are too — rounding would only reintroduce half-way
-      // disagreements between BigDecimal and binary rounding.
-      TimeSeries.interpolateLinear(joined, "bucket_ts", "mean_value", Seq("user_id"))
-        .select($"user_id", $"bucket_ts", $"interp_value")
-        .orderBy($"user_id", $"bucket_ts")
-    }),
-
-    // A5/P12: IQR fences + outlier blanking (lib/resampler.py:40-56)
-    "q12_iqr" -> ((s, d) => {
-      val ev = t(s, d, "events")
-      TimeSeries.iqrBlank(ev, "value", Seq("event_type"), 0.25)
-        .groupBy($"event_type")
-        .agg(round(first($"__lo"), 6).as("lo_fence"),
-             round(first($"__hi"), 6).as("hi_fence"),
-             sum(when($"clean_value".isNull, 1L).otherwise(0L)).as("n_out"),
-             round(sum($"clean_value"), 2).as("sum_in"))
-        .orderBy($"event_type")
-    }),
-
-    // A9: cumulative trapezoidal integral (lib/process_solcast_historic_data.py:7-17)
-    "q13_cumtrapz" -> ((s, d) => {
-      TimeSeries.cumtrapz(t(s, d, "events"), "ts", "value",
-          Seq("user_id"), Seq("event_id"))
-        .select($"user_id", $"event_id", round($"integral", 6).as("energy"))
-        .orderBy($"user_id", $"event_id")
-    }),
-
-    // A1: pivot long→wide with schema-known values (lib/canparser.py:222-239)
-    "q14_pivot" -> ((s, d) => {
-      t(s, d, "events")
-        .groupBy(date_trunc("DAY", $"ts").as("day"))
-        .pivot("event_type", Seq("click", "error", "purchase", "signup", "view"))
-        .agg(round(sum($"value"), 2))
-        .orderBy($"day")
-    }),
-
-    // exact dedup: keep-first representative per identical text
-    "q15_dedup_exact" -> ((s, d) => {
-      t(s, d, "documents")
-        .groupBy($"text")
-        .agg(min($"doc_id").as("doc_id"), count(lit(1)).as("n_copies"))
-        .select($"doc_id", $"n_copies")
-        .orderBy($"doc_id")
-    }),
-
-    // text-quality stats (token/vowel counts; beyond-reference)
-    "q16_text_stats" -> ((s, d) => {
-      t(s, d, "documents")
-        .select($"doc_id",
-          length($"text").as("len"),
-          (length($"text") - length(regexp_replace($"text", " ", "")) + 1).as("n_tokens"),
-          (length($"text") - length(regexp_replace($"text", "[aeiou]", ""))).as("n_vowels"))
-        .orderBy($"doc_id")
-    }),
-
-    // document fingerprint (md5 of normalized text; beyond-reference)
-    "q17_fingerprint" -> ((s, d) => {
-      t(s, d, "documents")
-        .select($"doc_id", md5(lower($"text")).as("fp"))
-        .orderBy($"doc_id")
-    }),
-
-    // A4: asfreq dense grid, zero-filled counts
-    "q18_grid_asfreq" -> ((s, d) => {
-      val b = TimeSeries.resampleAgg(t(s, d, "events"), "ts", 3600, Nil, "value")
-        .select($"bucket_ts", $"n")
-      val bounds = b.agg(min($"bucket_ts").as("lo"), max($"bucket_ts").as("hi"))
-      bounds.select(explode(sequence($"lo", $"hi",
-          expr("INTERVAL 3600 SECONDS"))).as("bucket_ts"))
-        .join(b, Seq("bucket_ts"), "left")
-        .select($"bucket_ts", coalesce($"n", lit(0L)).as("n"))
-        .orderBy($"bucket_ts")
-    }),
-
-    // J1: time-range union-merge (lib/unify_parsed_candump.py:13-27)
-    "q19_unify_merge" -> ((s, d) => {
-      val ev = t(s, d, "events")
-      val chunk = ev.filter($"event_type" === "error")
-        .select($"ts", $"event_id", $"user_id", $"value")
-      val ref = ev.filter($"event_type" === "click")
-        .select($"ts", $"event_id", $"user_id", $"value")
-      TimeSeries.unionMerge(chunk, ref, "ts", orderTieBreak = Seq("event_id"))
-        .select($"event_id", $"user_id", $"value")
-    }),
-
-    // F9-F11: solar scalar chain — Kasten-Young airmass, Spencer
-    // extraterrestrial DNI, isotropic POA transposition — over
-    // synthetic irradiance inputs (the PSA solar position itself is
-    // golden-validated in SolarSpec against the NREL SPA test vector)
-    "q23_solar" -> ((s, d) => {
-      val ev = t(s, d, "events")
-        .withColumn("zen", (expr("event_id % 60") + lit(30)).cast("double"))
-        .withColumn("az", (expr("(event_id * 7) % 360")).cast("double"))
-      ev.select($"event_id",
-          round(graft.functions.Solar.poaGlobalIsotropic(
-            lit(15.0), lit(180.0), $"zen", $"az",
-            $"value", $"value" * 0.8, $"value" * 0.3, lit(0.08)), 6).as("poa"),
-          round(graft.functions.Solar.airmassRelative($"zen"), 6).as("airmass"),
-          round(graft.functions.Solar.extraRadiation($"ts"), 6).as("dni_extra"))
-        .orderBy($"event_id")
-    }),
-
-    // §2.3 S1/P1-P6 + decoder: candump lines generated from `events`,
-    // run through the real regex scan + schema-driven decode (incl.
-    // quirks Q1/Q3); the oracle recomputes expected values straight
-    // from the source columns. Malformed/unknown/short frames injected
-    // and dropped on both sides.
-    "q21_can_decode" -> ((s, d) => {
-      canLong(t(s, d, "events"))
-        .select($"timestamp", $"module_name", $"topic_name", $"byte_name",
-          $"value", $"unit")
-        .orderBy($"timestamp", $"byte_name", $"value")
-    }),
-
-    // A1: long → wide pivot with schema-enumerated signal columns
-    // (lib/canparser.py:222-239)
-    "q22_can_pivot" -> ((s, d) => {
-      operators.CanDecode.pivotWide(canLong(t(s, d, "events")),
-          graft.sources.CanFixtures.schema)
-        .orderBy($"timestamp")
-    }),
-
-    // MinHash+LSH near-dup detection (word-trigram shingle → minhash
-    // → band → bucket-join → exact-Jaccard verify). Corpus = documents
-    // plus perturbed copies of every 7th doc; the oracle computes the
-    // TRUE exhaustive jaccard pairs in SQL, so this checks 100% recall
-    // of the LSH pipeline (r=4 × 32 bands ⇒ miss probability ~4e-8 at
-    // j≥0.8) plus exact verification. Word trigrams, not char 5-grams:
-    // this corpus's shared vocabulary puts random-pair char-gram
-    // Jaccard at 0.3-0.5, which floods any banding scheme.
-    "q24_minhash_neardup" -> ((s, d) => {
-      operators.Dedup.minhashNearDups(dupCorpus(t(s, d, "documents")),
-          "doc_id", "text", numHashes = 128, bands = 32,
-          threshold = 0.8, wordGrams = 3)
-        .select($"a", $"b")
-        .orderBy($"a", $"b")
-    }),
-
-    // SimHash near-dups vs an EXHAUSTIVE oracle: the oracle recomputes
-    // every doc's simhash in SQL (possible because the gate uses the
-    // engine-neutral md5-derived token hash, Dedup.md5Hash60; xxhash64
-    // stays the production default) and scores ALL pairs — so this
-    // checks both the banding's 100% recall (pigeonhole: hamming ≤ 3
-    // pairs share ≥ 1 of 4 bands) and the packed-hash values.
-    "q25_simhash_neardup" -> ((s, d) => {
-      operators.Dedup.simhashNearDups(dupCorpus(t(s, d, "documents")),
-          "doc_id", "text", maxHamming = 3,
-          tokenHash = operators.Dedup.md5Hash60)
-        .select($"a", $"b", $"hamming".cast("long").as("hamming"))
-        .orderBy($"a", $"b")
-    }),
-
-    // Brute-force cosine top-k ANN baseline; ranking on bit-identical
-    // doubles (sequential fold == DuckDB list_dot_product)
-    "q26_ann_topk" -> ((s, d) => {
-      val emb = t(s, d, "embeddings")
-      operators.Similarity.bruteForceTopK(emb, emb.filter($"vec_id" < 10),
-          "vec_id", "embedding", k = 3)
-        .select($"query_id", $"neighbor_id", $"rank",
-          round($"cosine", 6).as("cosine"))
-        .orderBy($"query_id", $"rank")
-    }),
-
-    // Cluster-balanced semantic sampling: strata are nearest-anchor
-    // cells (first 16 ids as anchors), membership capped at 5 per
-    // stratum in md5-hash order. The oracle recomputes the full
-    // assignment (bit-identical cosines via list_dot_product) and the
-    // per-stratum hash ranking, so a flipped argmax tie, a wrong
-    // anchor set, or a drifted hash order all change the kept rows.
-    "q85_semantic_sample" -> ((s, d) => {
-      operators.Similarity.semanticStratifiedSample(
-          t(s, d, "embeddings"), "vec_id", "embedding",
-          nStrata = 16, perStratum = 5, hashFn = operators.Dedup.md5Hash60)
-        .orderBy($"stratum", $"rank")
-    }),
-
-    // Scale-path ANN gate: the LSH (hyperplane, multi-probe) and IVF
-    // (coarse-quantized, Lloyd-refined) indexes must return the TRUE
-    // nearest neighbor of planted near-duplicate queries (perturbed
-    // copies of the first 10 corpus vectors — the synthetic embeddings
-    // are near-orthogonal, so unplanted "neighbors" at cosine ≈ 0.3
-    // are information-free; a planted query at cosine ≈ 1 is the
-    // workload ANN indexes exist for). The oracle recomputes each
-    // query's brute-force argmax independently, so a value mismatch
-    // means the index missed the true top-1. Fully deterministic:
-    // seeded hashes, lowest-id IVF seeding, double arithmetic.
-    "q31_ann_recall" -> ((s, d) => {
-      val emb = t(s, d, "embeddings")
-      val qs = emb.filter($"vec_id" < 10)
-        .select(($"vec_id" + 10000L).as("vec_id"),
-          expr("transform(embedding, x -> CAST(x AS DOUBLE) * 1.001 + 0.0005)")
-            .as("embedding"))
-      def top1(approx: DataFrame, m: String): DataFrame =
-        approx.filter($"rank" === 1)
-          .select(lit(m).as("method"), $"query_id", $"neighbor_id".as("top1"))
-      top1(operators.Similarity.ivfTopK(emb, qs, "vec_id", "embedding", 3), "ivf")
-        .unionByName(
-          top1(operators.Similarity.lshTopK(emb, qs, "vec_id", "embedding", 3), "lsh"))
-        .orderBy($"method", $"query_id")
-    }),
-
-    // Scalar-quantization ANN gate, same planted-query discipline as
-    // q31: int8 codes must surface the true nearest neighbor of each
-    // perturbed-copy query within the oversampled candidate set, and
-    // the exact float rerank must put it at rank 1. The oracle is the
-    // per-query brute-force argmax — quantization is invisible at
-    // rank 1 or the gate fails.
-    "q60_sq_ann_recall" -> ((s, d) => {
-      val emb = t(s, d, "embeddings")
-      val qs = emb.filter($"vec_id" < 10)
-        .select(($"vec_id" + 10000L).as("vec_id"),
-          expr("transform(embedding, x -> CAST(x AS DOUBLE) * 1.001 + 0.0005)")
-            .as("embedding"))
-      operators.Similarity.sqTopK(emb, qs, "vec_id", "embedding", k = 3)
-        .filter($"rank" === 1)
-        .select($"query_id", $"neighbor_id".as("top1"))
-        .orderBy($"query_id")
-    }),
-
-    // Composed IVF × SQ ANN gate — the 100 TB production shape: the
-    // approximate pass is cell-pruned (nProbe of nCells cells) AND
-    // reads only int8 codes; floats appear only at the exact rerank.
-    // Same planted-query discipline as q31/q60, same brute-force
-    // argmax oracle: the coarse quantizer must route each perturbed
-    // query to its source's cell, quantization must keep the true
-    // neighbor inside the oversampled candidate set, and the rerank
-    // must put it at rank 1.
-    "q66_ivfsq_ann_recall" -> ((s, d) => {
-      val emb = t(s, d, "embeddings")
-      val qs = emb.filter($"vec_id" < 10)
-        .select(($"vec_id" + 10000L).as("vec_id"),
-          expr("transform(embedding, x -> CAST(x AS DOUBLE) * 1.001 + 0.0005)")
-            .as("embedding"))
-      operators.Similarity.ivfSqTopK(emb, qs, "vec_id", "embedding", k = 3)
-        .filter($"rank" === 1)
-        .select($"query_id", $"neighbor_id".as("top1"))
-        .orderBy($"query_id")
-    }),
-
-    // Embedding-cosine near-dup: corpus ∪ perturbed copies of every 7th
-    // vector, candidates from multi-probe hyperplane-LSH buckets, exact
-    // cosine verify. The oracle scores ALL pairs exhaustively, so this
-    // gate proves 100% recall of the bucketed path at the threshold —
-    // organic pairs top out near cosine 0.6 on this corpus, so 0.9
-    // admits exactly the planted near-identical pairs.
-    "q33_cosine_neardup" -> ((s, d) => {
-      val emb = t(s, d, "embeddings")
-      val corpus = emb.select($"vec_id", expr(
-          "transform(embedding, x -> CAST(x AS DOUBLE))").as("embedding"))
-        .unionByName(emb.filter($"vec_id" % 7 === 0)
-          .select(($"vec_id" + 1000000L).as("vec_id"),
-            expr("transform(embedding, x -> CAST(x AS DOUBLE) * 1.001 + 0.0005)")
-              .as("embedding")))
-      operators.Similarity.cosineNearDups(corpus, "vec_id", "embedding",
-          threshold = 0.9)
-        .select($"a", $"b", round($"cosine", 6).as("cosine"))
-        .orderBy($"a", $"b")
-    }),
-
-    // Semantic dedup, SemDeDup-style: cluster-bucketed candidates
-    // (deterministic IVF k-means cells) + exact cosine verify + the
-    // connected-components keep-min decision, end-to-end. The oracle
-    // recomputes survivors from the EXHAUSTIVE pair set (all-pairs
-    // cosine ≥ 0.9 → recursive-CTE closure → min-id representative),
-    // so the gate pins both that the cell-bucketed generator finds
-    // every qualifying pair ON THIS CORPUS (planted near-identical
-    // copies co-cluster with their source by construction; a pair
-    // split across cells is SemDeDup's accepted recall trade) and
-    // that the dedup decision keeps exactly the right rows.
-    "q52_semantic_dedup" -> ((s, d) => {
-      val emb = t(s, d, "embeddings")
-      val corpus = emb.select($"vec_id", expr(
-          "transform(embedding, x -> CAST(x AS DOUBLE))").as("embedding"))
-        .unionByName(emb.filter($"vec_id" % 7 === 0)
-          .select(($"vec_id" + 1000000L).as("vec_id"),
-            expr("transform(embedding, x -> CAST(x AS DOUBLE) * 1.001 + 0.0005)")
-              .as("embedding")))
-      operators.Similarity.semanticDropNearDups(corpus, "vec_id",
-          "embedding", threshold = 0.9)
-        .select($"vec_id")
-        .orderBy($"vec_id")
-    }),
-
-    // Gopher quality rules: every flag column is an int/int division
-    // or regex count both engines compute identically, so the gate
-    // pins RAW doubles — no rounding anywhere. The fixture doctors
-    // every 5th doc into a bullet list and every 7th into an
-    // ellipsis-heavy fragment so each rule actually fires somewhere.
-    "q57_gopher_rules" -> ((s, d) => {
-      val docs = t(s, d, "documents").select($"doc_id",
-        when($"doc_id" % 5 === 0,
-            concat(lit("- item one\n- item two\n- "), $"text"))
-          .when($"doc_id" % 7 === 0,
-            concat($"text", lit(" trailing...\nshort line...\n# # # #")))
-          .when($"doc_id" % 3 === 0,
-            concat(lit("the point of that note have to be read with care "),
-              $"text"))
-          .otherwise($"text").as("text"))
-      operators.TextAnalysis.gopherQualityFlags(docs, "text", minWords = 20)
-        .select($"doc_id", $"n_words", $"mean_word_len",
-          $"symbol_word_ratio", $"bullet_line_ratio",
-          $"ellipsis_line_ratio", $"alpha_word_ratio",
-          $"req_stopword_hits", $"gopher_pass")
-        .orderBy($"doc_id")
-    }),
-
-    // Gopher repetition rules: every fraction is a ratio of exact
-    // integer counts (occurrences × lengths), so the gate pins RAW
-    // doubles like q57. The fixture plants every repetition kind the
-    // rules measure: every 7th doc gets duplicate lines AND duplicate
-    // paragraphs (the %7 branch wins ties, same CASE order as the
-    // oracle), every 5th doc a 3×-repeated 60-char prefix (hot
-    // duplicate n-grams at every n); untouched docs exercise the
-    // near-zero path on the natural corpus.
-    "q58_gopher_repetition" -> ((s, d) => {
-      val docs = t(s, d, "documents").select($"doc_id",
-        when($"doc_id" % 7 === 0,
-            concat(lit("alpha beta gamma\ndelta line two\nalpha beta gamma\n\n"),
-              $"text", lit("\n\nalpha beta gamma\n\nalpha beta gamma")))
-          .when($"doc_id" % 5 === 0,
-            concat_ws(" ", substring($"text", 1, 60),
-              substring($"text", 1, 60), substring($"text", 1, 60), $"text"))
-          .otherwise($"text").as("text"))
-      operators.TextAnalysis.gopherRepetitionFlags(docs, "doc_id", "text")
-        .select($"doc_id", $"dup_line_frac", $"dup_line_char_frac",
-          $"dup_para_frac", $"dup_para_char_frac",
-          $"top_2gram_char_frac", $"top_3gram_char_frac",
-          $"top_4gram_char_frac", $"dup_5gram_char_frac",
-          $"dup_6gram_char_frac", $"dup_7gram_char_frac",
-          $"dup_8gram_char_frac", $"dup_9gram_char_frac",
-          $"dup_10gram_char_frac", $"repetition_pass")
-        .orderBy($"doc_id")
-    }),
-
-    // DSIR importance resampling (Xie et al. 2023): hashed
-    // unigram+bigram log-likelihood-ratio weights vs a target corpus,
-    // Gumbel-top-k selection. The fixture appends a marker phrase to
-    // the target docs AND to every 31st source doc — the planted
-    // source docs share target-only bigrams and must rank high — and
-    // the oracle recomputes the whole chain (feature hash, smoothed
-    // ratios, bucket-sorted fold, deterministic Gumbel keys) in SQL.
-    // Engine-neutral md5 hash; 512 buckets keep the oracle tractable.
-    "q64_dsir_select" -> ((s, d) => {
-      val docs = t(s, d, "documents").select($"doc_id", $"text")
-      val source = docs.select($"doc_id",
-        when($"doc_id" % 31 === 0, concat($"text", lit(" zz qq zz qq")))
-          .otherwise($"text").as("text"))
-      val target = docs.filter($"doc_id" % 17 === 0)
-        .select($"doc_id", concat($"text", lit(" zz qq zz qq")).as("text"))
-      operators.Curation.dsirSelect(source, target, "doc_id", "text",
-          k = 100, buckets = 512, hashFn = operators.Dedup.md5Hash60)
-        .orderBy($"sel_key".desc, $"doc_id")
-    }),
-
-    // Fitted-DSIR scorer gate: fit a dense ratio table on source and
-    // target corpora, then score NEW documents disjoint from both —
-    // including a marker-only doc hitting TARGET-ONLY buckets (the
-    // full-outer ratio domain that dsirWeights' source-led join never
-    // exercises) and a gibberish doc landing in NEVER-SEEN buckets
-    // (the smoothed default fill), plus an empty doc that must score
-    // null. The oracle rebuilds the dense table (full-outer bucket
-    // domain + default lr) and refolds each new doc's bucket-sorted
-    // feature list in SQL. Engine-neutral md5 hash, 512 buckets.
-    "q67_dsir_fitted_score" -> ((s, d) => {
-      val docs = t(s, d, "documents").select($"doc_id", $"text")
-      val source = docs.filter($"doc_id" % 3 === 0)
-      val target = docs.filter($"doc_id" % 17 === 0)
-        .select($"doc_id", concat($"text", lit(" zz qq zz qq")).as("text"))
-      def one(id: Long, text: String) =
-        s.range(1).select(lit(id).as("doc_id"), lit(text).as("text"))
-      val fresh = docs.filter($"doc_id" % 3 === 1 && $"doc_id" % 17 =!= 0)
-        .unionByName(one(9000001L, "zz qq zz qq"))
-        .unionByName(one(9000002L, "kxqv wzzyx vvqk jjxw qqzv"))
-        .unionByName(one(9000003L, ""))
-      val model = operators.Curation.fitDsir(source, target, "text",
-        buckets = 512, hashFn = operators.Dedup.md5Hash60)
-      fresh.select($"doc_id",
-          operators.Curation.dsirScoreCol($"text", model,
-            operators.Dedup.md5Hash60).as("raw"))
-        .select($"doc_id", round($"raw", 6).as("dsir_score"))
-        .orderBy($"doc_id")
-    }),
-
-    // Hot-bucket rescue gate: 100 byte-identical copies of doc 0 are
-    // planted; with maxBucket = 50 every band bucket holding the copy
-    // cluster is hot, and the plain guard would DROP it — losing every
-    // copy pair, so dropNearDups would keep all 100 copies. With
-    // rescueHot the identical-signature collapse reroutes the cluster
-    // through exact-dup star pairs (Dedup.scala minhashNearDups) and
-    // bands only the representatives, so near-dup recall stays 100%
-    // with the guard ON. The oracle recomputes the exhaustive
-    // threshold closure (recursive CTE over true word-trigram Jaccard
-    // pairs) and the survivor sets must match exactly.
-    "q68_hot_bucket_rescue" -> ((s, d) => {
-      val docs = t(s, d, "documents").select($"doc_id", $"text")
-      val boiler = docs.filter($"doc_id" === 0L)
-        .select(explode(sequence(lit(0L), lit(99L))).as("i"), $"text")
-        .select(($"i" + 2000000L).as("doc_id"), $"text")
-      val corpus = docs.unionByName(boiler)
-      val pairs = operators.Dedup.minhashNearDups(corpus, "doc_id", "text",
-        numHashes = 128, bands = 32, threshold = 0.8, wordGrams = 3,
-        maxBucket = 50, rescueHot = true)
-      operators.Dedup.dropNearDups(corpus, pairs, "doc_id")
-        .select($"doc_id").orderBy($"doc_id")
-    }),
-
-    // SemDeDup-rescue gate: q52's corpus (perturbed copies co-cluster
-    // with their sources) plus a 300-copy identical-vector flood that
-    // blows the cell cap. rescueHot collapses the flood to one
-    // representative per vector value — identical vectors share an
-    // argmax cell, so the collapse never crosses SemDeDup's clustering
-    // recall boundary — and the exhaustive closure oracle pins the
-    // survivor set.
-    "q70_semantic_rescue" -> ((s, d) => {
-      val emb = t(s, d, "embeddings")
-      val base = emb.select($"vec_id", expr(
-          "transform(embedding, x -> CAST(x AS DOUBLE))").as("embedding"))
-        .unionByName(emb.filter($"vec_id" % 7 === 0)
-          .select(($"vec_id" + 1000000L).as("vec_id"),
-            expr("transform(embedding, x -> CAST(x AS DOUBLE) * 1.001 + 0.0005)")
-              .as("embedding")))
-      val copies = base.filter($"vec_id" === 0L)
-        .select(explode(sequence(lit(0L), lit(299L))).as("i"), $"embedding")
-        .select(($"i" + 2000000L).as("vec_id"), $"embedding")
-      val corpus = base.unionByName(copies)
-      operators.Similarity.semanticDropNearDups(corpus, "vec_id",
-          "embedding", threshold = 0.9, maxBucket = 150, rescueHot = true)
-        .select($"vec_id").orderBy($"vec_id")
-    }),
-
-    // Cosine-rescue gate (the embedding-side q68): 300 byte-identical
-    // copies of vec 0's embedding land in every probe bucket of that
-    // signature, blowing maxBucket = 150 — the plain guard would drop
-    // them all and dedup would keep every copy. rescueHot collapses
-    // identical vectors to one representative before probing; the
-    // oracle recomputes the exhaustive cosine threshold closure and
-    // the survivor sets must match exactly (cosine scoring is
-    // bit-identical to DuckDB's list_dot_product, pinned by q26/q33).
-    "q69_cosine_rescue" -> ((s, d) => {
-      val emb = t(s, d, "embeddings")
-      val base = emb.select($"vec_id",
-        expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("embedding"))
-      val copies = base.filter($"vec_id" === 0L)
-        .select(explode(sequence(lit(0L), lit(299L))).as("i"), $"embedding")
-        .select(($"i" + 2000000L).as("vec_id"), $"embedding")
-      val corpus = base.unionByName(copies)
-      val pairs = operators.Similarity.cosineNearDups(corpus, "vec_id",
-        "embedding", threshold = 0.9, maxBucket = 150, rescueHot = true)
-      operators.Dedup.dropNearDups(corpus, pairs, "vec_id")
-        .select($"vec_id").orderBy($"vec_id")
-    }),
-
-    // n-gram-path rescue gate: q68's corpus and oracle (the closure is
-    // over true word-trigram Jaccard either way — only the candidate
-    // generator differs), driven through ngramJaccardNearDups'
-    // rescueHot: identical-TEXT collapse instead of the minhash
-    // signature collapse, same survivor contract.
-    "q71_ngram_rescue" -> ((s, d) => {
-      val docs = t(s, d, "documents").select($"doc_id", $"text")
-      val boiler = docs.filter($"doc_id" === 0L)
-        .select(explode(sequence(lit(0L), lit(99L))).as("i"), $"text")
-        .select(($"i" + 2000000L).as("doc_id"), $"text")
-      val corpus = docs.unionByName(boiler)
-      val pairs = operators.Dedup.ngramJaccardNearDups(corpus, "doc_id",
-        "text", n = 3, threshold = 0.8, maxBucket = 50, rescueHot = true)
-      operators.Dedup.dropNearDups(corpus, pairs, "doc_id")
-        .select($"doc_id").orderBy($"doc_id")
-    }),
-
-    // q71's corpus, oracle and survivor contract through the
-    // hashedRescueKey (100 TB) tier: the collapse keys on a 128-bit
-    // double-xxhash64 of the normalized text instead of the text
-    // VALUE, so the rescue's group/join shuffles carry 16-byte keys
-    // (~3× text bytes in the value-keyed form) and the text moves at
-    // most once, by id, into the representative set. The shared
-    // exhaustive-closure oracle pins that the decisions are unchanged.
-    "q93_ngram_rescue_hashed" -> ((s, d) => {
-      val docs = t(s, d, "documents").select($"doc_id", $"text")
-      val boiler = docs.filter($"doc_id" === 0L)
-        .select(explode(sequence(lit(0L), lit(99L))).as("i"), $"text")
-        .select(($"i" + 2000000L).as("doc_id"), $"text")
-      val corpus = docs.unionByName(boiler)
-      val pairs = operators.Dedup.ngramJaccardNearDups(corpus, "doc_id",
-        "text", n = 3, threshold = 0.8, maxBucket = 50, rescueHot = true,
-        hashedRescueKey = true)
-      operators.Dedup.dropNearDups(corpus, pairs, "doc_id")
-        .select($"doc_id").orderBy($"doc_id")
-    }),
-
-    // SimHash-path rescue gate: the engine-neutral md5 token hash lets
-    // the oracle recompute every sketch in SQL (q25's machinery), and
-    // the rescue's full-sketch grouping is exactly lossless — the
-    // survivor closure over oracle-computed hamming ≤ 3 pairs must
-    // match bit-for-bit.
-    "q72_simhash_rescue" -> ((s, d) => {
-      val docs = t(s, d, "documents").select($"doc_id", $"text")
-      val boiler = docs.filter($"doc_id" === 0L)
-        .select(explode(sequence(lit(0L), lit(99L))).as("i"), $"text")
-        .select(($"i" + 2000000L).as("doc_id"), $"text")
-      val corpus = docs.unionByName(boiler)
-      // maxBucket 200 (the operator default): measured natural
-      // rep-band buckets reach 169 at sf0.1 (template-generated docs
-      // share 16-bit bands), and the gate must stay drop-free for the
-      // exhaustive oracle to pin 100% recall; the flood itself never
-      // reaches the banding — rescueHot collapses sketch-identical
-      // docs first, which is the behavior under test
-      val pairs = operators.Dedup.simhashNearDups(corpus, "doc_id", "text",
-        maxHamming = 3, maxBucket = 200,
-        tokenHash = operators.Dedup.md5Hash60, rescueHot = true)
-      operators.Dedup.dropNearDups(corpus, pairs, "doc_id")
-        .select($"doc_id").orderBy($"doc_id")
-    }),
-
-    // The PRODUCTION simhash-rescue configuration (native xxhash64
-    // token hash — what a user actually runs; q72's md5 token hash
-    // exists only so the oracle can recompute sketches in SQL). Same
-    // flood corpus and rescue semantics as q72, benched as the
-    // headline timing for the path; no SQL oracle (xxhash64 is not
-    // reproducible in DuckDB), so the driver records the rows-only
-    // check and correctness stays pinned by q72's md5 gate plus the
-    // native/aggregate bit-parity specs. The +2000000 flood-id offset
-    // (shared with the q68-q72 rescue family AND their oracles, which
-    // regenerate the same corpus in SQL) assumes the gate corpus stays
-    // under 2M docs — true at every driver SF; both sides shift
-    // together if that ever changes.
-    "q76_simhash_rescue_native" -> ((s, d) => {
-      val docs = t(s, d, "documents").select($"doc_id", $"text")
-      val boiler = docs.filter($"doc_id" === 0L)
-        .select(explode(sequence(lit(0L), lit(99L))).as("i"), $"text")
-        .select(($"i" + 2000000L).as("doc_id"), $"text")
-      val corpus = docs.unionByName(boiler)
-      val pairs = operators.Dedup.simhashNearDups(corpus, "doc_id", "text",
-        maxHamming = 3, maxBucket = 200, rescueHot = true)
-      operators.Dedup.dropNearDups(corpus, pairs, "doc_id")
-        .select($"doc_id").orderBy($"doc_id")
-    }),
-
-    // §2.7 STREAMING gates — each runs a real Structured Streaming
-    // query to completion (file source, several micro-batches via
-    // maxFilesPerTrigger, Trigger.AvailableNow) and returns the memory
-    // sink's table, so the DuckDB oracle pins the STREAM's semantics
-    // against the batch SQL. q77 gates the production append-mode
-    // path end-to-end: bins emit only when the watermark passes them,
-    // and the planted far-future sentinel (arriving last by file
-    // mtime) drives the closing watermark past every real bin — the
-    // sentinel's own bin stays in state and correctly never emits, so
-    // the streamed output must equal the batch tumbling resample
-    // (q08's oracle) exactly.
-    "q77_stream_resample" -> ((s, d) => {
-      val fix = streamFixtures(s, d)
-      val sch = s.read.parquet(s"$fix/events").schema
-      val stream = s.readStream.schema(sch)
-        .option("maxFilesPerTrigger", 2).parquet(s"$fix/events")
-      val agg = streaming.StreamingParse.resampleEventsStream(
-        stream, "ts", 3600, Seq("event_type"), "value",
-        watermark = "365 days")
-      runStreamToTable(s, agg, "append", "resample")
-        .filter($"event_type" =!= "__sentinel")
-        .select($"event_type", $"bucket_ts", $"sum_value", $"n",
-          $"mean_value")
-        .orderBy($"event_type", $"bucket_ts")
-    }),
-
-    // Streaming exact dedup (bounded state via
-    // dropDuplicatesWithinWatermark): one admitted row per key across
-    // ALL micro-batches — the output projected to its keys must equal
-    // the batch DISTINCT. The sentinel is filtered BEFORE the
-    // watermark so it can't fast-forward the horizon and late-drop
-    // real rows; the 365-day delay exceeds the corpus span, so
-    // nothing real is ever beyond the dedup horizon.
-    "q78_stream_dedup" -> ((s, d) => {
-      val fix = streamFixtures(s, d)
-      val sch = s.read.parquet(s"$fix/events").schema
-      val stream = s.readStream.schema(sch)
-        .option("maxFilesPerTrigger", 2).parquet(s"$fix/events")
-        .filter($"event_type" =!= "__sentinel")
-      val dd = streaming.StreamingParse.dedupStream(stream,
-        Seq("user_id", "event_type"), "ts", watermark = "365 days")
-      runStreamToTable(s, dd, "append", "dedup")
-        .select($"user_id", $"event_type")
-        .orderBy($"user_id", $"event_type")
-    }),
-
-    // Streaming candump parse→decode (stateless): the q21 fixture
-    // lines (incl. the reject cases and the garbage non-frame line)
-    // streamed through decodedStream must produce exactly the batch
-    // decode — q21's oracle verbatim.
-    "q79_stream_decode" -> ((s, d) => {
-      val fix = streamFixtures(s, d)
-      val decoded = streaming.StreamingParse.decodedStream(s,
-        s"$fix/candump", graft.sources.CanFixtures.schema)
-      runStreamToTable(s, decoded, "append", "decode")
-        .select($"timestamp", $"module_name", $"topic_name", $"byte_name",
-          $"value", $"unit")
-        .orderBy($"timestamp", $"byte_name", $"value")
-    }),
-
-    // Stateful streaming sessionization: per-user (lastTs, counter)
-    // state carried across FOUR micro-batches (maxFilesPerTrigger=1
-    // over the four time-range-partitioned files), gap > 30 min opens
-    // a new session — the flatMapGroupsWithState path, pinned against
-    // the batch window-SQL oracle (q09's verbatim).
-    "q80_stream_sessionize" -> ((s, d) => {
-      val fix = streamFixtures(s, d)
-      val sch = s.read.parquet(s"$fix/events_sorted").schema
-      val stream = s.readStream.schema(sch)
-        .option("maxFilesPerTrigger", 1).parquet(s"$fix/events_sorted")
-      val sess = streaming.StatefulSessionize.sessionize(
-        streaming.StatefulSessionize.fromDF(stream), gapSec = 1800L)
-      runStreamToTable(s, sess.toDF(), "append", "sessionize")
-        .select($"user_id", $"event_id", $"session_id")
-        .orderBy($"user_id", $"event_id")
-    }),
-
-    // Streaming CCNet ingestion admission END-TO-END: the accepted
-    // corpus (%3==0 docs) builds a SHARDED Bloom exact index over its
-    // normalize→ccnetHashKey keys; the stream carries the rest, with
-    // every %3==1 doc a disguised re-crawl of an accepted doc (case,
-    // digits, punctuation, padding — the variation the key collapses)
-    // and %3==2 docs novel. Streamed admissions across micro-batches
-    // must equal the batch normalize→key→anti-join: the oracle
-    // replays the full normalization chain, the key fold and the
-    // membership decision. A drift anywhere — normalize stage order,
-    // key classes, shard routing, Bloom verification — changes the
-    // admitted set.
-    "q114_stream_ccnet_admission" -> ((s, d) => {
-      val fix = streamFixtures(s, d)
-      val docs = t(s, d, "documents").select($"doc_id", $"text")
-      val keyedAcc = operators.Curation
-        .normalizeText(docs.filter($"doc_id" % 3 === 0), "text", "__norm")
-        .select(operators.Curation.ccnetHashKey($"__norm").as("ccnet_key"))
-      // sketch geometry sized to the fixture (the q101 lesson: plan
-      // literals re-canonicalize per micro-batch trigger, ~1 s of
-      // driver time per MiB) — 4 × 16 KiB covers the ≤ a-few-thousand
-      // accepted keys at vanishing fpp
-      val index = operators.Dedup.buildExactIndex(keyedAcc, "ccnet_key",
-        expectedItems = 1L << 13, numBits = 1L << 17, shards = 4)
-      // the stream-static contract re-plans the static side per
-      // micro-batch — materialize the verification table once instead
-      // of re-deriving normalize+distinct every trigger (the
-      // bloomDedupStream scaladoc's own instruction)
-      index.hashes.persist(org.apache.spark.storage.StorageLevel
-        .MEMORY_AND_DISK).count()
-      val sch = s.read.parquet(s"$fix/documents").schema
-      val stream = s.readStream.schema(sch)
-        .option("maxFilesPerTrigger", 1).parquet(s"$fix/documents")
-      val admitted = streaming.StreamingParse
-        .ccnetAdmissionStream(stream, "text", index)
-      runStreamToTable(s, admitted, "append", "ccnet_admission")
-        .select($"doc_id", md5($"ccnet_key").as("key_md5"))
-        .orderBy($"doc_id")
-    }),
-
-    // Streaming CCNet LM-perplexity tiering: a pruned unigram LM
-    // (top-64 vocabulary — the corpus has more, so the OOV floor is
-    // exercised on real tokens) and per-language score thresholds are
-    // fitted BATCH-side on the calibration corpus, then every doc
-    // streams through the frozen model + thresholds. The oracle
-    // refits everything in SQL: the (count DESC, token) top-K vocab,
-    // the unpruned total, the token-sorted per-doc fold with the
-    // floor-1 OOV term, per-language quantile_cont thresholds over
-    // the batch-scored corpus, and the ties-down labeling.
-    "q115_stream_lm_buckets" -> ((s, d) => {
-      val fix = streamFixtures(s, d)
-      val docs = t(s, d, "documents").select($"doc_id", $"lang", $"text")
-      val model = operators.TextAnalysis.fitUnigramLm(docs, "text",
-        maxVocab = 64)
-      val scored = docs.withColumn("lm_score",
-        operators.TextAnalysis.unigramLmScoreCol($"text", model))
-      val th = operators.TextAnalysis.scoreThresholds(scored, "lm_score",
-        Seq("lang"))
-      val sch = s.read.parquet(s"$fix/documents_plain").schema
-      val stream = s.readStream.schema(sch)
-        .option("maxFilesPerTrigger", 1).parquet(s"$fix/documents_plain")
-      val labeled = streaming.StreamingParse.lmBucketStream(stream, "text",
-        Seq("lang"), model, th)
-      runStreamToTable(s, labeled, "append", "lm_buckets")
-        .select($"doc_id", $"lang", $"lm_score", $"bucket")
-        .orderBy($"doc_id")
-    }),
-
-    // Streaming CCNet tiering at the TRIGRAM rung (the production
-    // model shape: table-backed counts through broadcast stream-
-    // static joins, not a map literal): the trigram LM and the
-    // per-language thresholds are fitted batch-side on the
-    // calibration corpus, then every doc streams through the frozen
-    // model — gram joins before the one aggregation, thresholds as a
-    // literal projection after it (joins after a streaming
-    // aggregation are forbidden). The oracle refits EVERYTHING in
-    // SQL: pruned trigram counts over unpruned contexts (q113's
-    // discipline), the per-position (w1,w2,w3)-sorted fold,
-    // per-language quantile_cont thresholds over the batch-scored
-    // corpus, and the ties-down labeling.
-    "q117_stream_trigram_buckets" -> ((s, d) => {
-      val fix = streamFixtures(s, d)
-      val docs = t(s, d, "documents").select($"doc_id", $"lang", $"text")
-      // fit once per (corpus, JVM), serve from durable tables after:
-      // the gate times the SCORER, not a per-run corpus refit (the
-      // r12 cold-start attribution — the fit's trigram aggregates
-      // were 2× the steady-state gate). The prefix keys on the sf
-      // dir so a stale model can never score another scale's corpus.
-      val lmPrefix = "q117_lm_" + java.security.MessageDigest
-        .getInstance("MD5").digest(d.getBytes("UTF-8"))
-        .take(4).map(b => f"$b%02x").mkString
-      if (!s.catalog.tableExists(s"${lmPrefix}_meta"))
-        operators.TextAnalysis.writeTrigramLm(
-          operators.TextAnalysis.fitTrigramLm(docs, "text"), lmPrefix)
-      val model = operators.TextAnalysis.readTrigramLm(s, lmPrefix)
-      val scoredBatch = operators.TextAnalysis.trigramLmScore(docs,
-        "doc_id", "text", model, carryCols = Seq("lang"))
-      val th = operators.TextAnalysis.scoreThresholds(scoredBatch,
-        "lm3_score", Seq("lang"))
-      val sch = s.read.parquet(s"$fix/documents_plain").schema
-      val stream = s.readStream.schema(sch)
-        .option("maxFilesPerTrigger", 1).parquet(s"$fix/documents_plain")
-      val labeled = streaming.StreamingParse.trigramBucketStream(stream,
-        "doc_id", "text", Seq("lang"), model, th)
-      runStreamToTable(s, labeled, "complete", "trigram_buckets")
-        .select($"doc_id", $"lang", $"lm3_score", $"bucket")
-        .orderBy($"doc_id")
-    }),
-
-    // Streaming EMBEDDING near-dup admission — the vector-family rung
-    // of the ingestion ladder: the accepted embeddings (%3==0) build
-    // a frozen IVF index (3 Lloyd iterations, the q105/q107 build
-    // discipline); the stream carries the rest, every %3==1 vector a
-    // disguised re-embed of an accepted vector (scaled + shifted —
-    // same direction, so it lands its source's max-cosine cell) and
-    // %3==2 vectors novel. Streamed admissions across micro-batches
-    // must equal the BRUTE-FORCE batch decision at tau=0.9 — the
-    // oracle regenerates the candidate stream and replays exhaustive
-    // max-cosine + argmax vs the accepted set, so a drift anywhere
-    // (centroid literal ranking, probe-cell routing, the member-array
-    // fold, the tie rule, the admit-on-unprovable branch) changes the
-    // admitted set or a match id.
-    "q120_stream_ann_admission" -> ((s, d) => {
-      val fix = streamFixtures(s, d)
-      val emb = t(s, d, "embeddings")
-      val accepted = emb.filter($"vec_id" % 3 === 0)
-      val index = operators.Similarity.buildIvf(accepted, "vec_id",
-        "embedding", nCells = 8, lloydIters = 3)
-      val members = operators.Similarity.cellMembers(index)
-      // the stream-static contract re-plans the static side per
-      // micro-batch — materialize the member arrays once (the q114
-      // discipline)
-      members.persist(org.apache.spark.storage.StorageLevel
-        .MEMORY_AND_DISK).count()
-      val sch = s.read.parquet(s"$fix/embeddings_stream").schema
-      val stream = s.readStream.schema(sch)
-        .option("maxFilesPerTrigger", 1).parquet(s"$fix/embeddings_stream")
-      val admitted = streaming.StreamingParse.annAdmissionStream(stream,
-        "vec_id", "embedding", index, members, tau = 0.9, nProbe = 2)
-      val out = runStreamToTable(s, admitted, "append", "ann_admission")
-        .select($"vec_id", $"admitted", $"match_id")
-        .orderBy($"vec_id")
-      // the stream is done once runStreamToTable returns — release the
-      // cached member arrays so they don't leak into later queries
-      members.unpersist()
-      out
-    }),
-
-    // Split-leakage audit: the corpus carries its own split labels;
-    // planted val-side near-copies of train docs must surface as
-    // leaking pairs, the disjoint test-side docs must not. The oracle
-    // recomputes the exhaustive cross-partition Jaccard.
-    "q63_split_leakage" -> ((s, d) => {
-      val base = t(s, d, "documents")
-        .select($"doc_id", $"text", lit("train").as("split"))
-      val leaks = t(s, d, "documents").filter($"doc_id" % 11 === 0)
-        .select(($"doc_id" + 3000000L).as("doc_id"),
-          concat($"text", lit(" shifted tail words")).as("text"),
-          lit("val").as("split"))
-      val clean = t(s, d, "documents").filter($"doc_id" < 8)
-        .select(($"doc_id" + 4000000L).as("doc_id"),
-          concat(lit("qq"), $"doc_id".cast("string"),
-            lit(" ww ee rr tt yy uu")).as("text"),
-          lit("test").as("split"))
-      val df = base.unionByName(leaks).unionByName(clean)
-      operators.TextAnalysis.auditSplitLeakage(df, "doc_id", "text",
-          "split", n = 4, threshold = 0.5)
-        .orderBy($"eval_id", $"train_id")
-    }),
-
-    // Contamination report: per benchmark doc, worst-case containment
-    // against the corpus + hit counts. The fixture mixes truly
-    // contaminated benchmark items (every 13th doc + trailing tokens,
-    // containment ≈ 1) with synthetic zero-overlap items that share no
-    // 4-gram with the corpus — the report must carry those as explicit
-    // (0.0, null, 0, 0) rows, not drop them. The oracle recomputes the
-    // exhaustive pair scores and the (score DESC, id DESC) argmax.
-    "q62_contamination_report" -> ((s, d) => {
-      val docs = t(s, d, "documents").select($"doc_id", $"text")
-      val bench = docs.filter($"doc_id" % 13 === 0)
-        .select(($"doc_id" + 1000000L).as("doc_id"),
-          concat($"text", lit(" extra trailing token")).as("text"))
-        .unionByName(docs.filter($"doc_id" < 5)
-          .select(($"doc_id" + 2000000L).as("doc_id"),
-            concat(lit("zz"), $"doc_id".cast("string"),
-              lit(" yy qq ww ee rr tt")).as("text")))
-      operators.TextAnalysis.contaminationReport(docs, bench, "doc_id",
-          "text", n = 4, threshold = 0.5)
-        .orderBy($"bench_id")
-    }),
-
-    // Unigram LM score: the per-doc fold runs over the token-SORTED
-    // term list on both sides (floating-point addition is order-
-    // sensitive; an unordered SUM would be engine-dependent in the
-    // last ulps), ln is correctly rounded in both engines, so the
-    // mean log-probability matches to the rounded 6 decimals.
-    "q61_unigram_logprob" -> ((s, d) => {
-      val docs = t(s, d, "documents").select($"doc_id", $"text")
-      operators.TextAnalysis.unigramLogProb(docs, "doc_id", "text")
-        .orderBy($"doc_id")
-    }),
-
-    // BPE application (Sennrich et al. 2016 inference rule): a fixed
-    // three-merge list replays over every distinct corpus word —
-    // char split + </w> marker, then e+</w>, t+h, th+e</w> in order,
-    // so "the" collapses to ONE piece while "theme"/"thee" show the
-    // left-to-right non-overlapping fold at every boundary case. The
-    // oracle unrolls the same three folds as list_reduce stages;
-    // md5 of the chr(1)-joined pieces pins every piece BOUNDARY, not
-    // just the counts. (Merge LEARNING is data-derived state a SQL
-    // oracle cannot replay — the fit loop is spec-pinned on the
-    // Sennrich corpus and benched rows-only by q111.)
-    "q110_bpe_encode" -> ((s, d) => {
-      val docs = t(s, d, "documents").select($"text")
-      val words = docs.select(
-          explode(split(lower(trim($"text")), "\\s+")).as("w"))
-        .filter($"w" =!= "").distinct()
-      val merges = Seq(("e", "</w>"), ("t", "h"), ("th", "e</w>"))
-      operators.Bpe.encodeWords(words, "w", merges)
-        .select($"w", size($"pieces").cast("long").as("n_pieces"),
-          md5(concat_ws("\u0001", $"pieces")).as("pieces_md5"))
-        .orderBy($"w")
-    }),
-
-    // BPE vocabulary induction end-to-end (rows-only production
-    // bench, the q76/q90/q92 discipline): fit 16 merges on the
-    // corpus's distinct-word table through the BATCHED production
-    // tier (provably identical merges to the sequential fit —
-    // equivalence spec-pinned AND value-gated at q112), then count
-    // per-doc BPE pieces through the fitted word join.
-    "q111_bpe_fit_tokens" -> ((s, d) => {
-      val docs = t(s, d, "documents").select($"doc_id", $"text")
-      val vocab = operators.Bpe.fitBatched(docs, "text", numMerges = 16)
-      val out = operators.Bpe.tokenCount(docs, "doc_id", "text", vocab)
-        .orderBy($"doc_id")
-      out
-    }),
-
-    // BPE merge LEARNING value-gated (upgrades q111's rows-only
-    // check): three batched-fit merges on the corpus, and the oracle
-    // REDISCOVERS each argmax pair itself — per round it recounts
-    // weighted pair frequencies over the word table, takes the
-    // (count DESC, a, b) argmax with the ≥2 floor, and replays the
-    // fold — then md5-pins every piece boundary of the final word
-    // table. A wrong pair count, tie-break, min-count floor, batch
-    // trim, or fold order all change the learned merges and break
-    // the hash. (Runs the batched tier, whose ≡-to-sequential claim
-    // is additionally spec-pinned on adversarial corpora.)
-    "q112_bpe_fit_replay" -> ((s, d) => {
-      val docs = t(s, d, "documents").select($"text")
-      val vocab = operators.Bpe.fitBatched(docs, "text", numMerges = 3)
-      vocab.wordPieces
-        .select($"w", $"n", size($"s").cast("long").as("n_pieces"),
-          md5(concat_ws("\u0001", $"s")).as("pieces_md5"))
-        .orderBy($"w")
-    }),
-
-    // Bigram LM score with Jelinek-Mercer unigram backoff — q61's
-    // fold discipline one n-gram up (order-sensitive fluency signal,
-    // the step toward CCNet's KenLM perplexity): terms fold
-    // bigram-sorted on both sides, the smoothing expression shares
-    // one operation order, λ = 0.75 keeps both mixture weights exact
-    // binary so the oracle's literals are bit-identical.
-    "q109_bigram_logprob" -> ((s, d) => {
-      val docs = t(s, d, "documents").select($"doc_id", $"text")
-      operators.TextAnalysis.bigramLogProb(docs, "doc_id", "text")
-        .orderBy($"doc_id")
-    }),
-
-    // Trigram LM with recursive JM backoff and SINGLETON-PRUNED
-    // trigram counts (the Stupid-Backoff/KenLM table trick) — q109
-    // one n-gram up. The oracle recomputes every tier: pruned c3
-    // (≥2 floor) against UNPRUNED c12 contexts, the full bigram
-    // backoff, unigram floor, the exact-binary nested 0.75/0.25
-    // mixture in the same operation order, and the trigram-sorted
-    // fold — a wrong pruning side (contexts pruned too → silent
-    // renormalization), a dropped backoff tier, or a fold-order
-    // drift all break the hash.
-    "q113_trigram_logprob" -> ((s, d) => {
-      val docs = t(s, d, "documents").select($"doc_id", $"text")
-      operators.TextAnalysis.trigramLogProb(docs, "doc_id", "text")
-        .orderBy($"doc_id")
-    }),
-
-    // Paragraph-level exact dedup: corpus-wide keep-first at paragraph
-    // granularity. The fixture plants a banner paragraph shared across
-    // the %6 and %9 docs (only the lowest (doc, pos) occurrence may
-    // survive), a footer shared across the %6 docs, and a whole-body
-    // self-repeat in the %8 docs (the intra-doc second occurrence must
-    // drop too). The oracle recomputes first occurrences with a
-    // row_number window and reassembles survivors with an ordered
-    // string_agg — md5 of the rebuilt text pins reassembly order and
-    // separator handling, not just counts.
-    "q59_paragraph_dedup" -> ((s, d) => {
-      val docs = t(s, d, "documents").select($"doc_id",
-        when($"doc_id" % 6 === 0,
-            concat(lit("shared banner paragraph\n\n"), $"text",
-              lit("\n\nshared footer paragraph")))
-          .when($"doc_id" % 9 === 0,
-            concat($"text", lit("\n\nshared banner paragraph")))
-          .when($"doc_id" % 8 === 0,
-            concat($"text", lit("\n\n"), $"text"))
-          .otherwise($"text").as("text"))
-      operators.Curation.dropDuplicateParagraphs(docs, "doc_id", "text")
-        .select($"doc_id", $"n_paras", $"n_kept_paras",
-          md5($"clean_text".cast("binary")).as("clean_md5"))
-        .orderBy($"doc_id")
-    }),
-
-    // Production-path winnowing bench (the q76/q90 pattern): native
-    // GramHashes + WinnowSelect — the configuration a real run uses;
-    // q88's md5 grams exist for the oracle. Rows-only driver check;
-    // selection correctness is pinned by q88 + the parity specs.
-    "q92_winnow_native" -> ((s, d) => {
-      operators.TextAnalysis.winnowFingerprints(t(s, d, "documents"),
-          "doc_id", "text", k = 4, w = 4)
-        .groupBy($"doc_id").agg(count(lit(1)).as("n_fp"))
-        .orderBy($"doc_id")
-    }),
-
-    // Corpus datasheet: corpus-level release metrics as one long-form
-    // table. The fixture plants exact duplicates (every 10th doc is
-    // replaced by one shared literal text) and empties (every 41st) so
-    // the dup/empty fractions are live numbers, not zeros.
-    "q91_corpus_datasheet" -> ((s, d) => {
-      val docs = t(s, d, "documents").select($"doc_id",
-        when($"doc_id" % 41 === 0, lit(""))
-          .when($"doc_id" % 10 === 0, lit("the repeated corpus text"))
-          .otherwise($"text").as("text"),
-        $"lang")
-      operators.TextAnalysis.corpusDatasheet(docs, "doc_id", "text",
-        langCol = Some("lang"))
-    }),
-
-    // Winnowing fingerprints (MOSS): md5-hashed word 4-grams, window
-    // 4, rightmost-minimum selection. The oracle recomputes gram
-    // hashes and replays every window's rightmost minimum with SQL
-    // list functions, so a wrong tie-break side, an off-by-one in the
-    // window span, or a dropped short-doc window all change the
-    // selected (pos, fingerprint) rows.
-    "q88_winnow_fingerprints" -> ((s, d) => {
-      operators.TextAnalysis.winnowFingerprints(t(s, d, "documents"),
-          "doc_id", "text", k = 4, w = 4,
-          tokenHash = operators.Dedup.md5Hash60)
-        .orderBy($"doc_id", $"pos")
-    }),
-
-    // Winnow-containment screening: benchmark items are 12-word
-    // interior slices of every 13th doc (the q86 fixture), so those
-    // docs must score containment > 0 through the sampled-fingerprint
-    // channel; the oracle replays BOTH corpora's winnowing chains and
-    // the distinct-fingerprint join in SQL.
-    "q89_winnow_containment" -> ((s, d) => {
-      val docs = t(s, d, "documents")
-      val bench = benchSliceFixture(docs)
-      operators.TextAnalysis.winnowContainment(docs, bench,
-          "doc_id", "text", k = 4, w = 4,
-          tokenHash = operators.Dedup.md5Hash60)
-        .select($"doc_id", $"n_fp", $"n_hits",
-          round($"containment", 6).as("containment"))
-        .orderBy($"doc_id")
-    }),
-
-    // Hashed-feature logistic-regression quality classifier, fitted
-    // by full-batch GD from a zero model (round 1's predictions are
-    // exactly 0.5, which lets the oracle unroll BOTH fit rounds in
-    // closed form — a wrong gradient sign, a mis-ordered fold, a
-    // bias/weight update mixed up, or a drifted feature hash all
-    // land in the final per-doc probabilities). Labels: lang = 'en'.
-    "q84_quality_lr" -> ((s, d) => {
-      val labeled = t(s, d, "documents")
-        .select($"doc_id", $"text", ($"lang" === "en").cast("int").as("is_en"))
-      val model = operators.Curation.fitQualityLr(labeled,
-        "doc_id", "text", "is_en", buckets = 512, iters = 2,
-        stepSize = 0.5, hashFn = operators.Dedup.md5Hash60)
-      operators.Curation.lrScore(labeled, "doc_id", "text", model,
-          hashFn = operators.Dedup.md5Hash60)
-        .select($"doc_id", $"n_feats", round($"score", 6).as("score"))
-        .orderBy($"doc_id")
-    }),
-
-    // Surgical span-level decontamination: the benchmark set is a
-    // 12-word interior slice of every 13th document, so each such doc
-    // must lose exactly that window (plus any organic cross-doc gram
-    // matches) while the rest of its text survives — the case where
-    // doc-level decontamination would delete the whole document. The
-    // oracle recomputes benchmark grams, the semi-join hit set, span
-    // coverage and reassembly in SQL.
-    "q86_span_decontam" -> ((s, d) => {
-      val docs = t(s, d, "documents")
-      val bench = benchSliceFixture(docs)
-      operators.Curation.redactContaminatedSpans(docs, bench,
-          "doc_id", "text", n = 8)
-        .select($"doc_id", $"n_words", $"n_kept_words", $"n_removed_words",
-          md5($"clean_text".cast("binary")).as("clean_md5"))
-        .orderBy($"doc_id")
-    }),
-
-    // Production-path LR benchmark entry (the q76 pattern): the fit a
-    // real run would use — native xxhash64 features, 2^16 buckets,
-    // partial-aggregated plain-sum folds — timed by Bench; the
-    // decision arithmetic itself is oracle-pinned by q84 (md5/exact
-    // folds) and the fold-mode parity spec, so this row carries the
-    // driver's rows-only check. The corpus's lang/source labels carry
-    // NO textual signal (the synthetic texts share one token pool),
-    // so the label is a PLANTED vocabulary marker — the per-class
-    // average scores in the output visibly demonstrate the fit
-    // learned it.
-    "q90_quality_lr_native" -> ((s, d) => {
-      val labeled = t(s, d, "documents")
-        .select($"doc_id",
-          when($"doc_id" % 3 === 0,
-            concat($"text", lit(" lowvalue boiler plate marker")))
-            .otherwise(concat($"text", lit(" curated highvalue marker")))
-            .as("text"),
-          ($"doc_id" % 3 =!= 0).cast("int").as("y"))
-      val model = operators.Curation.fitQualityLr(labeled,
-        "doc_id", "text", "y", iters = 4, stepSize = 8.0,
-        exactFold = false)
-      operators.Curation.lrScore(labeled, "doc_id", "text", model,
-          exactFold = false)
-        .join(labeled.select($"doc_id", $"y"), Seq("doc_id"))
-        .groupBy($"y")
-        .agg(count(lit(1)).as("n"), round(avg($"score"), 3).as("avg_score"))
-        .orderBy($"y")
-    }),
-
-    // Substring-span dedup (Lee et al. exact-substring discipline at
-    // word-gram resolution): the fixture plants a shared licence
-    // TAIL, a shared boilerplate HEAD, and a whole-doc SELF-repeat —
-    // tail/head test cross-doc spans at both ends of documents,
-    // self-repeat tests intra-doc removal where every duplicated
-    // gram's first occurrence lives in the same doc. The oracle
-    // recomputes the whole chain (gram tiling, global first
-    // occurrence, covered-word union, reassembly) in SQL, so a wrong
-    // anchor stride, an off-by-one in span coverage, or a
-    // keep-position picked on the wrong side all fail the md5.
-    "q83_substring_dedup" -> ((s, d) => {
-      val docs = spanDedupFixture(t(s, d, "documents"))
-      operators.Curation.dropDuplicateSpans(docs, "doc_id", "text", n = 8)
-        .select($"doc_id", $"n_words", $"n_kept_words",
-          md5($"clean_text".cast("binary")).as("clean_md5"))
-        .orderBy($"doc_id")
-    }),
-
-    // identical DECISION contract to q83 (same oracle): the only
-    // difference is the 100 TB shuffle shape — grams keyed by the
-    // 128-bit double hash instead of the gram string — so this row
-    // both gates the hashed path end-to-end and benches the
-    // configuration a production run would use
-    "q87_substring_dedup_hashed" -> ((s, d) => {
-      val docs = spanDedupFixture(t(s, d, "documents"))
-      operators.Curation.dropDuplicateSpans(docs, "doc_id", "text", n = 8,
-          hashGrams = true)
-        .select($"doc_id", $"n_words", $"n_kept_words",
-          md5($"clean_text".cast("binary")).as("clean_md5"))
-        .orderBy($"doc_id")
-    }),
-
-    // Incremental dedup: a new batch (odd docs + perturbed copies of
-    // INDEX docs + perturbed copies of BATCH docs) is admitted against
-    // an index built ONCE over the even docs. The oracle recomputes
-    // the full decision — index hits by exhaustive cross-Jaccard,
-    // within-batch components by recursive-CTE closure, tainted-
-    // component drop, min-id representative — so it catches a wrong
-    // threshold, a missed chain (new₂ ~ new₁ ~ indexed), and a
-    // representative picked on the wrong side.
-    "q56_incremental_dedup" -> ((s, d) => {
-      val docs = t(s, d, "documents").select($"doc_id", $"text")
-      val batch = docs.filter($"doc_id" % 2 === 1)
-        .unionByName(docs.filter($"doc_id" % 14 === 0)
-          .select(($"doc_id" + 1000000L).as("doc_id"),
-            concat($"text", lit(" xyzzy qbf")).as("text")))
-        .unionByName(docs.filter($"doc_id" % 14 === 7)
-          .select(($"doc_id" + 2000000L).as("doc_id"),
-            concat($"text", lit(" plugh tail")).as("text")))
-      val idx = operators.Dedup.buildNgramIndex(
-        docs.filter($"doc_id" % 2 === 0), "doc_id", "text", n = 4)
-      idx.grams.persist()
-      operators.Dedup.incrementalDropNearDups(idx, batch, "text",
-          threshold = 0.5)
-        .select($"doc_id")
-        .orderBy($"doc_id")
-    }),
-
-    // q56's decision contract over the PERSISTED index: the gram table
-    // is written as a parquet table bucketed on `gram` and re-read, so
-    // the batch probe aggregates the index side with no Exchange (the
-    // bucket layout pre-pays the shuffle — the 100 TB
-    // build-once/search-many claim, plan-pinned in PlanSpec) and the
-    // oracle proves the round-trip loses nothing: the kept set must
-    // equal q56's exactly. The index build + bucketed write is
-    // memoized per sfDir (like the season fixtures): that IS the
-    // build-once/search-many production split — the first call
-    // (Verify's only one; Bench's warm pass) pays the build, and
-    // timed runs measure the per-batch PROBE a daily increment
-    // actually costs.
-    "q74_bucketed_incremental" -> ((s, d) => {
-      val docs = t(s, d, "documents").select($"doc_id", $"text")
-      val batch = docs.filter($"doc_id" % 2 === 1)
-        .unionByName(docs.filter($"doc_id" % 14 === 0)
-          .select(($"doc_id" + 1000000L).as("doc_id"),
-            concat($"text", lit(" xyzzy qbf")).as("text")))
-        .unionByName(docs.filter($"doc_id" % 14 === 7)
-          .select(($"doc_id" + 2000000L).as("doc_id"),
-            concat($"text", lit(" plugh tail")).as("text")))
-      val table = q74IndexTables.computeIfAbsent(d, _ => {
-        // name embeds the sanitized dir itself — collision-free by
-        // construction (a 32-bit hash could alias two dirs onto one
-        // table; map size could race)
-        val name = "graft_q74_ngram_idx_" +
-          d.replaceAll("[^A-Za-z0-9]", "_").takeRight(64)
-        val built = operators.Dedup.buildNgramIndex(
-          docs.filter($"doc_id" % 2 === 0), "doc_id", "text", n = 4)
-        operators.Dedup.writeNgramIndexBucketed(built, name,
-          numBuckets = 32)
-        name
-      })
-      val idx = operators.Dedup.readNgramIndex(s, table, "doc_id", 4)
-      operators.Dedup.incrementalDropNearDups(idx, batch, "text",
-          threshold = 0.5)
-        .select($"doc_id")
-        .orderBy($"doc_id")
-    }),
-
-    // Bloom-guarded incremental EXACT dedup: q56's daily-increment
-    // setting for the exact tier. The index (even docs) carries a
-    // driver-held Bloom sketch over the accepted text hashes; the
-    // batch (odd docs + exact copies of INDEX docs + exact copies of
-    // BATCH docs) probes it as a pure projection and only
-    // Bloom-positive docs take the verification anti join — the
-    // accepted corpus is never scanned for novel admissions, the
-    // per-batch cost a 100 TB corpus demands. Decisions are provably
-    // Bloom-independent (no false negatives; positives are verified
-    // on hash AND text), and the oracle recomputes the full plain
-    // decision: not-in-index AND min-id within the batch's
-    // identical-text group.
-    "q94_bloom_incremental_exact" -> ((s, d) => {
-      val docs = t(s, d, "documents").select($"doc_id", $"text")
-      val batch = docs.filter($"doc_id" % 2 === 1)
-        .unionByName(docs.filter($"doc_id" % 14 === 0)
-          .select(($"doc_id" + 1000000L).as("doc_id"), $"text"))
-        .unionByName(docs.filter($"doc_id" % 10 === 1)
-          .select(($"doc_id" + 2000000L).as("doc_id"), $"text"))
-      // shards = 4 runs the gate through the SHARDED sketch tier (the
-      // past-2^26-bits capacity path): decisions must be identical to
-      // the plain anti-join oracle regardless of which shard's sketch
-      // answers each probe. Geometry sized to the fixture (q101's
-      // driver-side literal-canonicalization lesson)
-      val idx = operators.Dedup.buildExactIndex(
-        docs.filter($"doc_id" % 2 === 0), "text",
-        expectedItems = 1L << 14, numBits = 1L << 17, shards = 4)
-      operators.Dedup.incrementalDropExactDups(idx, batch, "doc_id", "text")
-        .select($"doc_id").orderBy($"doc_id")
-    }),
-
-    // The PRODUCTION index-growth loop, gated end-to-end: build →
-    // admit batch 1 → append survivors → admit batch 2, where batch 2
-    // plants exact copies of batch-1 SURVIVORS (they drop only if the
-    // append actually entered them into the index — a broken append
-    // silently re-admits them) plus copies of base docs (still
-    // dropped through the grown index) plus novel docs (still
-    // admitted). The oracle re-derives both generations' decisions
-    // from scratch: min-id within batch per identical-text group,
-    // text not in the accepted union as of that batch. Sharded (k=4)
-    // so the growth path is gated through the capacity tier too.
-    "q101_bloom_index_growth" -> ((s, d) => {
-      val docs = t(s, d, "documents").select($"doc_id", $"text")
-      val base = docs.filter($"doc_id" % 3 === 0)
-      val batch1 = docs.filter($"doc_id" % 3 === 1)
-        .unionByName(docs.filter($"doc_id" % 9 === 0)
-          .select(($"doc_id" + 1000000L).as("doc_id"), $"text"))
-      val batch2 = docs.filter($"doc_id" % 3 === 2)
-        .unionByName(docs.filter($"doc_id" % 6 === 1)
-          .select(($"doc_id" + 2000000L).as("doc_id"), $"text"))
-        .unionByName(docs.filter($"doc_id" % 12 === 0)
-          .select(($"doc_id" + 3000000L).as("doc_id"), $"text"))
-      // sketch geometry sized to the fixture (16 KiB/shard), not the
-      // 1 MiB default: the plan carries each shard as a binary
-      // LITERAL, and driver-side expression canonicalization over
-      // megabyte literals (hashCode/equals per optimizer pass) was
-      // measured dominating this gate's wall time (8 of 11 s) while
-      // its Spark jobs summed 3 s — decisions are Bloom-independent,
-      // so geometry only moves the fpp, never the gate
-      val idx0 = operators.Dedup.buildExactIndex(base, "text",
-        expectedItems = 1L << 14, numBits = 1L << 17, shards = 4)
-      // the survivor set feeds THREE consumers (the append's sketch +
-      // hash aggregates, batch 2's verification join through idx1, and
-      // the output union) — persist it as production would, or the
-      // whole batch-1 admission pipeline re-executes per consumer
-      val kept1 = operators.Dedup
-        .incrementalDropExactDups(idx0, batch1, "doc_id", "text")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val idx1 = operators.Dedup.appendToExactIndex(idx0, kept1, "text")
-      val kept2 = operators.Dedup
-        .incrementalDropExactDups(idx1, batch2, "doc_id", "text")
-      kept1.select($"doc_id", lit(1L).as("batch"))
-        .unionByName(kept2.select($"doc_id", lit(2L).as("batch")))
-        .orderBy($"doc_id", $"batch")
-    }),
-
-    // S6 CSV write as a VALUE gate (was spec-only): the events table
-    // round-trips the engine's CSV sink (header on, overwrite) and is
-    // read back with an explicit schema — doubles survive exactly
-    // (shortest-round-trip rendering both ways), timestamps ride as
-    // µs-exact formatted strings, and the oracle produces the same
-    // projection straight from parquet, so a quoting, header, or
-    // rendering bug breaks the hash. Total order: ts_str (globally
-    // unique in the testdata).
-    "q95_csv_roundtrip" -> ((s, d) => {
-      val ev = t(s, d, "events").select(
-        date_format($"ts", "yyyy-MM-dd HH:mm:ss.SSSSSS").as("ts_str"),
-        $"user_id".cast("long").as("user_id"),
-        $"event_id".cast("long").as("event_id"),
-        $"value".cast("double").as("value"),
-        $"event_type")
-      val out = seasonOutDir("q95")
-      sources.Sinks.writeCsv(ev, s"$out/csv")
-      s.read.option("header", "true")
-        .schema("ts_str STRING, user_id BIGINT, event_id BIGINT, " +
-          "value DOUBLE, event_type STRING")
-        .csv(s"$out/csv")
-        .orderBy($"ts_str")
-    }),
-
-    // P9 dropna as a VALUE gate (was spec-only): nulls planted into
-    // two columns on modular patterns; `na.drop(subset)` must keep
-    // exactly the rows where BOTH survive — the oracle recomputes the
-    // masking and filters with IS NOT NULL (robust to natural nulls
-    // in the source columns).
-    "q96_dropna" -> ((s, d) => {
-      val ev = t(s, d, "events").select(
-        $"event_id".cast("long").as("event_id"), $"ts",
-        when($"event_id" % 5 === 0, lit(null).cast("double"))
-          .otherwise($"value".cast("double")).as("value"),
-        when($"event_id" % 7 === 0, lit(null).cast("string"))
-          .otherwise($"event_type").as("event_type"))
-      ev.na.drop(Seq("value", "event_type"))
-        .select($"event_id", $"value", $"event_type",
-          date_format($"ts", "yyyy-MM-dd HH:mm:ss.SSSSSS").as("ts_str"))
-        .orderBy($"ts_str")
-    }),
-
-    // §2.7 per-file parse report as a VALUE gate (was spec-only): the
-    // q21 frame layout written as a text corpus PARTITIONED by
-    // event_id % 3 (deterministic per-directory content — a plain
-    // repartition would round-robin rows nondeterministically), then
-    // ParseStage.report's two-pass per-file counters aggregated back
-    // to the partition key. input_lines pins the text-scan pass,
-    // output_rows the decode pass (unknown-topic %101 and short-frame
-    // %103 rejects excluded, one wide row per unique frame ts); the
-    // measured/attributed ELAPSED is deliberately not in the gate —
-    // it is wall-clock. The driver-side Seq[Report] is bounded by the
-    // file count (3 dirs × part files), the documented report
-    // contract.
-    "q97_parse_report" -> ((s, d) => {
-      val out = seasonOutDir("q97")
-      val b = (c: Column) => lpad(hex(c), 2, "0")
-      val payloadOk = concat(lit("11"),
-        b(expr("user_id % 256")), b(expr("user_id div 256")),
-        b(expr("event_id % 256")), b(expr("event_id % 4")), lit("00"))
-      val payloadShort = concat(lit("11"),
-        b(expr("user_id % 256")), b(expr("user_id div 256")),
-        b(expr("event_id % 256")))
-      val lines = t(s, d, "events").select(
-        format_string("(%d.%06d) can0 %s#%s",
-          expr("unix_micros(ts) div 1000000"), expr("unix_micros(ts) % 1000000"),
-          when(expr("event_id % 101 = 0"), lit("022")).otherwise(lit("021")),
-          when(expr("event_id % 103 = 0"), payloadShort).otherwise(payloadOk))
-          .as("value"),
-        expr("string(event_id % 3)").as("pfile"))
-      // few part files per dir (WHICH rows land in which part file is
-      // round-robin nondeterministic, but the gate aggregates per
-      // DIRECTORY, whose content partitionBy pins exactly)
-      lines.repartition(2).write.partitionBy("pfile").mode("overwrite")
-        .text(s"$out/candump")
-      val glob = s"$out/candump/pfile=*/part-*"
-      val linesDf = graft.sources.Candump.lines(s, glob)
-      val wide = operators.CanDecode.decodeWide(
-        graft.sources.Candump.framesFromLines(linesDf),
-        graft.sources.CanFixtures.schema, keys = Seq("file"))
-      val reports = graft.pipeline.ParseStage.report(s, glob, wide)
-      val perDir = reports
-        .map(r => ("pfile=(\\d+)".r.findFirstMatchIn(r.inputFile)
-          .map(_.group(1)).getOrElse("?"), r.inputLines, r.outputRows))
-        .groupBy(_._1).toSeq
-        .map { case (p, rs) => (p, rs.map(_._2).sum, rs.map(_._3).sum) }
-      s.createDataFrame(perDir)
-        .toDF("pfile", "input_lines", "output_rows").orderBy(col("pfile"))
-    }),
-
-    // Corpus version diff: v2 removes every 9th doc, edits every 7th
-    // surviving doc's text, and adds a copy of every 11th under a new
-    // id — per-doc added/removed/changed/unchanged status must match a
-    // full-outer-join oracle that compares the TEXT values (the Spark
-    // side compares 128-bit text hashes — the documented scale shape —
-    // so the gate also pins that the hash comparison reaches the same
-    // statuses).
-    "q98_corpus_diff" -> ((s, d) => {
-      val docs = t(s, d, "documents").select($"doc_id", $"text")
-      val next = docs.filter($"doc_id" % 9 =!= 0)
-        .select($"doc_id",
-          when($"doc_id" % 7 === 0, concat($"text", lit(" v2 edit")))
-            .otherwise($"text").as("text"))
-        .unionByName(docs.filter($"doc_id" % 11 === 0)
-          .select(($"doc_id" + 3000000L).as("doc_id"), $"text"))
-      operators.Curation.corpusDiff(docs, next, "doc_id", "text")
-        .orderBy($"doc_id")
-    }),
-
-    // The CI release gate over q98's version diff: churn counts,
-    // fractions and a pass/fail verdict in the datasheet's long
-    // (metric, value) shape. Thresholds straddle the planted churn
-    // (changed_frac ≈ (8/9)·(1/7) ≈ 0.127 of prev > 0.10; added and
-    // removed under theirs), so the oracle pins the full arithmetic
-    // INCLUDING a failing verdict — a wrong denominator, a dropped
-    // status, or a boundary-side error all flip a metric or the pass
-    // bit.
-    "q102_release_gate" -> ((s, d) => {
-      val docs = t(s, d, "documents").select($"doc_id", $"text")
-      val next = docs.filter($"doc_id" % 9 =!= 0)
-        .select($"doc_id",
-          when($"doc_id" % 7 === 0, concat($"text", lit(" v2 edit")))
-            .otherwise($"text").as("text"))
-        .unionByName(docs.filter($"doc_id" % 11 === 0)
-          .select(($"doc_id" + 3000000L).as("doc_id"), $"text"))
-      operators.Curation.corpusReleaseGate(docs, next, "doc_id", "text",
-        maxAddedFrac = 0.15, maxRemovedFrac = 0.15, maxChangedFrac = 0.10)
-    }),
-
-    // The COMPLETE release artifact (q102's gate unioned with the new
-    // version's q91-style datasheet, metrics prefixed `next:`): one
-    // (metric, value) table per corpus release. The oracle recomputes
-    // both halves over the same version fixture — churn arithmetic
-    // with the failing verdict AND the datasheet aggregates including
-    // per-language composition of the NEW corpus.
-    "q103_release_report" -> ((s, d) => {
-      val docs = t(s, d, "documents").select($"doc_id", $"text", $"lang")
-      val next = docs.filter($"doc_id" % 9 =!= 0)
-        .select($"doc_id",
-          when($"doc_id" % 7 === 0, concat($"text", lit(" v2 edit")))
-            .otherwise($"text").as("text"), $"lang")
-        .unionByName(docs.filter($"doc_id" % 11 === 0)
-          .select(($"doc_id" + 3000000L).as("doc_id"), $"text", $"lang"))
-      operators.Curation.corpusReleaseReport(docs, next, "doc_id", "text",
-        langCol = Some("lang"),
-        maxAddedFrac = 0.15, maxRemovedFrac = 0.15, maxChangedFrac = 0.10)
-    }),
-
-    // Johnson–Lindenstrauss ±1 random projection (Achlioptas 2001):
-    // 64-dim embeddings down to 16 dims through a deterministic
-    // md5-sign matrix the oracle rebuilds in SQL (the q25
-    // engine-neutral hash discipline) — a wrong sign, a transposed
-    // index, a scale slip, or an accumulation-order change all break
-    // the value hash. Output exploded to (vec_id, dim, value) rows so
-    // the compare is scalar-exact.
-    "q104_random_projection" -> ((s, d) => {
-      val emb = t(s, d, "embeddings").select($"vec_id",
-        expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("emb"))
-      operators.Similarity.randomProjection(emb, "emb", "proj",
-          inDim = 64, outDim = 16)
-        .select($"vec_id", posexplode($"proj"))
-        .select($"vec_id", $"pos".cast("long").as("dim"),
-          round($"col", 6).as("value"))
-        .orderBy($"vec_id", $"dim")
-    }),
-
-    // Text cleanup normalization + CCNet hash key: the fixture is
-    // doctored three ways (curly quotes/dashes/ellipsis/NBSP + a
-    // zero-width char and a BEL; tab runs + CRLF and a lone CR;
-    // em-dash + BOM) so every fold in the chain fires somewhere, and
-    // the oracle replays the ENTIRE translate+regexp chain in SQL —
-    // md5 of the normalized text pins every byte, md5 of the CCNet
-    // key pins the lowercase/digit-fold/punct-strip key the dedup
-    // tier hashes. Pattern discipline: RE2-portable source strings
-    // shared verbatim with the oracle (explicit whitespace classes —
-    // Java's \s and RE2's \s disagree on \x0B).
-    "q106_normalize_text" -> ((s, d) => {
-      val docs = t(s, d, "documents").select($"doc_id", $"text")
-      val messy = docs.select($"doc_id",
-        when($"doc_id" % 3 === 0,
-          concat(lit("\u201CQ\u201D \u2013 x\u2026 \u00A0 "), $"text",
-            lit("\u200Bz\u0007w  ")))
-        .when($"doc_id" % 3 === 1,
-          concat(lit("l1  \t l2\r\nl3 \r"), $"text", lit("\t\t 123 ")))
-        .otherwise(concat($"text", lit(" \u2014 fin\uFEFF"))).as("text"))
-      operators.Curation.normalizeText(messy, "text", "norm")
-        .select($"doc_id", md5($"norm").as("norm_md5"),
-          length($"norm").cast("long").as("norm_len"),
-          md5(operators.Curation.ccnetHashKey($"norm")).as("key_md5"))
-        .orderBy($"doc_id")
-    }),
-
-    // Product-quantization ANN gate (Jégou, Douze, Schmid 2011) —
-    // the memory-bound scan tier beyond int8 SQ: 8 subspaces × 16
-    // centroids compress each 64-dim vector to 8 BYTES, and the
-    // approximate pass is 8 LUT lookups per pair over those code
-    // words alone. Same planted-query discipline as q60/q66, same
-    // brute-force argmax oracle: the per-subspace codebooks must keep
-    // the true neighbor inside the oversampled ADC candidate set, and
-    // the exact float rerank must put it at rank 1 — quantization is
-    // invisible at rank 1 or the gate fails.
-    "q105_pq_ann_recall" -> ((s, d) => {
-      val emb = t(s, d, "embeddings")
-      val qs = emb.filter($"vec_id" < 10)
-        .select(($"vec_id" + 10000L).as("vec_id"),
-          expr("transform(embedding, x -> CAST(x AS DOUBLE) * 1.001 + 0.0005)")
-            .as("embedding"))
-      operators.Similarity.pqTopK(emb, qs, "vec_id", "embedding", k = 3,
-          lloydIters = 3)
-        .filter($"rank" === 1)
-        .select($"query_id", $"neighbor_id".as("top1"))
-        .orderBy($"query_id")
-    }),
-
-    // Per-domain document cap (RefinedWeb-style source balancing):
-    // at most 10 docs per source, membership in engine-neutral
-    // md5-hash order so the oracle replays the exact window — a wrong
-    // hash, a wrong tie-break, or a rate-vs-count mixup all change
-    // the kept set. The cap binds on every source (20 × 25 docs →
-    // 10 each at sf0.01).
-    "q108_domain_cap" -> ((s, d) => {
-      val docs = t(s, d, "documents").select($"doc_id", $"source")
-      operators.Curation.capPerKey(docs, "source", "doc_id",
-          maxPerKey = 10, hashFn = operators.Dedup.md5Hash60)
-        .orderBy($"doc_id")
-    }),
-
-    // Composed IVF × PQ ANN gate — IVFADC (Jégou et al. 2011), the
-    // classic billion-scale layout: the approximate pass is
-    // cell-pruned (nProbe of nCells cells) AND reads only 8-byte PQ
-    // code words, multiplying the two compressions (q66's IVF×SQ at
-    // 8× smaller codes). Same planted-query discipline, same
-    // brute-force argmax oracle: coarse routing, in-cell ADC recall
-    // and the exact rerank must all hold for rank 1 to survive.
-    "q107_ivfpq_ann_recall" -> ((s, d) => {
-      val emb = t(s, d, "embeddings")
-      val qs = emb.filter($"vec_id" < 10)
-        .select(($"vec_id" + 10000L).as("vec_id"),
-          expr("transform(embedding, x -> CAST(x AS DOUBLE) * 1.001 + 0.0005)")
-            .as("embedding"))
-      operators.Similarity.ivfPqTopK(emb, qs, "vec_id", "embedding", k = 3,
-          lloydIters = 3)
-        .filter($"rank" === 1)
-        .select($"query_id", $"neighbor_id".as("top1"))
-        .orderBy($"query_id")
-    }),
-
-    // REAL image decode through the multimodal codec boundary:
-    // deterministic pixel-ramp PNGs are encoded driver-side (40
-    // bounded rows), decoded back by javax.imageio inside
-    // mapPartitions, and feature-extracted to per-channel sums — PNG
-    // is lossless, so the decoded bytes must reproduce the generator
-    // formula exactly, which is what lets DuckDB oracle a binary
-    // codec it cannot run: it replays the ramp arithmetic
-    // ((id·31 + c·7 + y·w + x) mod 256) and the channel sums in SQL.
-    // Planted corrupt payloads (truncated PNG, non-image bytes, empty)
-    // must survive as null rows — one bad crawl image cannot kill a
-    // 100 TB decode stage.
-    "q118_image_decode" -> ((s, d) => {
-      val ids = t(s, d, "documents").select($"doc_id")
-        .filter($"doc_id" < 40).collect().map(_.getLong(0)).sorted
-      def png(id: Long): Array[Byte] = {
-        val w = (8 + id % 5).toInt; val h = (6 + id % 4).toInt
-        val img = new java.awt.image.BufferedImage(w, h,
-          java.awt.image.BufferedImage.TYPE_INT_RGB)
-        for (y <- 0 until h; x <- 0 until w) {
-          def ch(c: Int) = ((id * 31 + c * 7 + y * w + x) % 256).toInt
-          img.setRGB(x, y, (ch(0) << 16) | (ch(1) << 8) | ch(2))
-        }
-        val bos = new java.io.ByteArrayOutputStream()
-        javax.imageio.ImageIO.write(img, "png", bos)
-        bos.toByteArray
-      }
-      val rows = ids.toSeq.map(i => (i, png(i))) ++ Seq(
-        (9001L, png(1L).take(16)),
-        (9002L, "not an image".getBytes("UTF-8")),
-        (9003L, Array.empty[Byte]))
-      val media = s.createDataFrame(rows)
-        .toDF("media_id", "payload").repartition(4)
-      operators.Multimodal.channelSums(
-          operators.Multimodal.decodeImages(media, "payload"), "pixels")
-        .select($"media_id", $"img_width".as("width"),
-          $"img_height".as("height"), $"img_channels".as("channels"),
-          element_at($"ch_sums", 1).as("r_sum"),
-          element_at($"ch_sums", 2).as("g_sum"),
-          element_at($"ch_sums", 3).as("b_sum"))
-        .orderBy($"media_id")
-    }),
-
-    // REAL audio decode through the multimodal codec boundary — the
-    // WAV sibling of q118: deterministic sample-ramp 16-bit PCM WAVs
-    // (mixed mono/stereo, three sample rates) are container-encoded
-    // driver-side by javax.sound.sampled, decoded back inside
-    // mapPartitions, and feature-extracted to per-channel signed
-    // sample sums. PCM is lossless, so the decoded samples must
-    // reproduce the generator formula exactly — which is what lets
-    // DuckDB oracle an audio codec it cannot run: it replays the ramp
-    // ((id·37 + ch·11 + i·13) mod 4096 − 2048) and the channel sums
-    // in SQL. Planted corrupt payloads (frame-misaligned truncation,
-    // non-audio bytes, empty) must survive as null rows.
-    "q119_audio_decode" -> ((s, d) => {
-      val ids = t(s, d, "documents").select($"doc_id")
-        .filter($"doc_id" < 40).collect().map(_.getLong(0)).sorted
-      def wav(id: Long): Array[Byte] = {
-        val rate = (8000 + (id % 3) * 4000).toInt
-        val channels = (1 + id % 2).toInt
-        val frames = (50 + (id % 7) * 10).toInt
-        val pcm = new Array[Byte](frames * channels * 2)
-        for (i <- 0 until frames; ch <- 0 until channels) {
-          val v = ((id * 37 + ch * 11 + i * 13) % 4096 - 2048).toInt
-          val base = (i * channels + ch) * 2
-          pcm(base) = (v & 0xFF).toByte
-          pcm(base + 1) = ((v >> 8) & 0xFF).toByte
-        }
-        val fmt = new javax.sound.sampled.AudioFormat(
-          rate.toFloat, 16, channels, true, false)
-        val ais = new javax.sound.sampled.AudioInputStream(
-          new java.io.ByteArrayInputStream(pcm), fmt, frames.toLong)
-        val bos = new java.io.ByteArrayOutputStream()
-        javax.sound.sampled.AudioSystem.write(ais,
-          javax.sound.sampled.AudioFileFormat.Type.WAVE, bos)
-        bos.toByteArray
-      }
-      val whole = wav(2L) // mono → 2-byte frames; −3 breaks alignment
-      val rows = ids.toSeq.map(i => (i, wav(i))) ++ Seq(
-        (9001L, whole.take(whole.length - 3)),
-        (9002L, "not audio at all".getBytes("UTF-8")),
-        (9003L, Array.empty[Byte]))
-      val media = s.createDataFrame(rows)
-        .toDF("media_id", "payload").repartition(4)
-      operators.Multimodal.pcmChannelSums(
-          operators.Multimodal.decodeWav(media, "payload"),
-          "pcm", "au_channels")
-        .select($"media_id", $"au_rate".as("rate"),
-          $"au_channels".as("channels"), $"au_frames".as("frames"),
-          element_at($"sample_sums", 1).as("s0_sum"),
-          when($"au_channels" === 2, element_at($"sample_sums", 2))
-            .as("s1_sum"))
-        .orderBy($"media_id")
-    }),
-
-    // REAL multi-frame ("video") decode through the codec boundary:
-    // animated GIFs with an EXPLICIT 256-gray palette (GIF is
-    // palette-indexed, so a grayscale ramp survives the codec
-    // byte-exact where truecolor would quantize) are encoded
-    // driver-side frame by frame, exploded back to one row per frame
-    // by the ImageReader loop, and feature-extracted per frame. The
-    // oracle replays the per-frame ramp ((id·31 + f·17 + y·w + x)
-    // mod 256) and the equal-by-construction R/G/B channel sums in
-    // SQL. A GIF truncated after its first complete frame must yield
-    // ONE null row — all-or-nothing, no silent short video.
-    "q122_frame_decode" -> ((s, d) => {
-      val ids = t(s, d, "documents").select($"doc_id")
-        .filter($"doc_id" < 12).collect().map(_.getLong(0)).sorted
-      val cmap = (0 until 256)
-        .map(v => (0xFF << 24) | (v << 16) | (v << 8) | v).toArray
-      val icm = new java.awt.image.IndexColorModel(8, 256, cmap, 0,
-        false, -1, java.awt.image.DataBuffer.TYPE_BYTE)
-      def gif(id: Long): Array[Byte] = {
-        val w = (6 + id % 4).toInt; val h = (5 + id % 3).toInt
-        val nf = (2 + id % 3).toInt
-        val bos = new java.io.ByteArrayOutputStream()
-        val ios = javax.imageio.ImageIO.createImageOutputStream(bos)
-        val writer = javax.imageio.ImageIO
-          .getImageWritersByFormatName("gif").next()
-        writer.setOutput(ios)
-        writer.prepareWriteSequence(null)
-        for (f <- 0 until nf) {
-          val img = new java.awt.image.BufferedImage(w, h,
-            java.awt.image.BufferedImage.TYPE_BYTE_INDEXED, icm)
-          for (y <- 0 until h; x <- 0 until w)
-            img.getRaster.setSample(x, y, 0,
-              ((id * 31 + f * 17 + y * w + x) % 256).toInt)
-          writer.writeToSequence(
-            new javax.imageio.IIOImage(img, null, null), null)
-        }
-        writer.endWriteSequence(); writer.dispose(); ios.close()
-        bos.toByteArray
-      }
-      val anim = gif(1L)
-      val rows = ids.toSeq.map(i => (i, gif(i))) ++ Seq(
-        (9001L, anim.take(anim.length * 3 / 5)), // dies mid-frame
-        (9002L, anim.dropRight(2)), // clean cut: prefix decodes, but
-                                    // the missing 0x3B trailer refuses
-        (9003L, "not a video".getBytes("UTF-8")),
-        (9004L, Array.empty[Byte]))
-      val media = s.createDataFrame(rows)
-        .toDF("media_id", "payload").repartition(4)
-      operators.Multimodal.channelSums(
-          operators.Multimodal.decodeFrames(media, "payload"),
-          "frame_pixels")
-        .select($"media_id", $"frame_no",
-          $"frame_w".as("width"), $"frame_h".as("height"),
-          $"frame_channels".as("channels"),
-          element_at($"ch_sums", 1).as("r_sum"),
-          element_at($"ch_sums", 2).as("g_sum"),
-          element_at($"ch_sums", 3).as("b_sum"))
-        .orderBy($"media_id", $"frame_no")
-    }),
-
-    // Z-order layout: the multi-dimensional scan-pruning key
-    // (lakehouse OPTIMIZE ZORDER, engine-agnostic) value-gated
-    // bit-for-bit — two integer dimensions (text length × doc_id mod
-    // 97) bucket through the integer-exact equi-width formula and
-    // interleave into one Morton scalar; the oracle recomputes
-    // min/max, the `div` bucketing and every shift/mask term in SQL.
-    // A wrong bucket width, a swapped interleave order or a float
-    // division anywhere changes z-values. (The actual rows-READ
-    // pruning win of the laid-out table is measured in PlanSpec —
-    // layout effectiveness is an IO metric, not a result set.)
-    "q121_zorder" -> ((s, d) => {
-      val docs = t(s, d, "documents").select($"doc_id",
-        length($"text").cast("long").as("dx"),
-        ($"doc_id" % 97).as("dy"))
-      operators.Layout.withZValue(docs, Seq("dx", "dy"), bits = 8)
-        .select($"doc_id", $"dx", $"dy", $"zvalue")
-        .orderBy($"doc_id")
-    }),
-
-    // Image near-dup END TO END from real bytes — the LAION-style
-    // dedup a 100 TB multimodal pipeline runs: planted grayscale
-    // images (pixel = (src·31 + x·17 + y·29 + x·y + shift) mod 256)
-    // are container-encoded driver-side as PNG, pixel-identical BMP
-    // and GIF re-encodes, and +4-brightness PNG variants; the engine
-    // decodes the bytes (q118's codec boundary), perceptual-hashes
-    // the raw buffers (integer-exact dHash gradient signs + aHash
-    // mean bits over nearest-neighbor luma grids), and Hamming-bands
-    // the 64-bit signatures into verified near-dup pairs (pigeonhole
-    // bands — exact recall at the threshold). A byte-level hash sees
-    // FOUR different files per image; the perceptual pipeline must
-    // see one. The oracle replays pixels from the formula, both hash
-    // constructions bit-for-bit and the exhaustive pairwise Hamming
-    // truth in SQL — lossless decode means a drift anywhere (decode,
-    // luma weights, grid index math, bit packing, banding recall)
-    // breaks hash values or the pair stats. Corrupt payloads ride
-    // through as null-hash rows that never enter a band.
-    "q124_image_phash_dedup" -> ((s, d) => {
-      val W = 16; val H = 12
-      def v(src: Long, x: Int, y: Int, shift: Int): Int =
-        ((src * 31 + x * 17 + y * 29 + x.toLong * y + shift) % 256).toInt
-      val cmap = (0 until 256)
-        .map(g => (0xFF << 24) | (g << 16) | (g << 8) | g).toArray
-      val icm = new java.awt.image.IndexColorModel(8, 256, cmap, 0,
-        false, -1, java.awt.image.DataBuffer.TYPE_BYTE)
-      def enc(src: Long, shift: Int, fmt: String): Array[Byte] = {
-        // GIF needs the indexed gray palette for a lossless
-        // round-trip (the q122 fixture discipline); PNG/BMP take RGB
-        val img =
-          if (fmt == "gif") {
-            val im = new java.awt.image.BufferedImage(W, H,
-              java.awt.image.BufferedImage.TYPE_BYTE_INDEXED, icm)
-            for (y <- 0 until H; x <- 0 until W)
-              im.getRaster.setSample(x, y, 0, v(src, x, y, shift))
-            im
-          } else {
-            val im = new java.awt.image.BufferedImage(W, H,
-              java.awt.image.BufferedImage.TYPE_INT_RGB)
-            for (y <- 0 until H; x <- 0 until W) {
-              val g = v(src, x, y, shift)
-              im.setRGB(x, y, (g << 16) | (g << 8) | g)
-            }
-            im
-          }
-        val bos = new java.io.ByteArrayOutputStream()
-        javax.imageio.ImageIO.write(img, fmt, bos)
-        bos.toByteArray
-      }
-      val rows: Seq[(Long, Array[Byte])] =
-        (1L to 10L).map(i => (i, enc(i, 0, "png"))) ++
-        (1L to 10L).map(i => (100L + i, enc(i, 0, "bmp"))) ++
-        (1L to 3L).map(i => (200L + i, enc(i, 0, "gif"))) ++
-        (1L to 5L).map(i => (300L + i, enc(i, 4, "png"))) ++
-        Seq((9001L, enc(1L, 0, "png").take(20)),
-          (9002L, "not an image".getBytes("UTF-8")),
-          (9003L, Array.empty[Byte]))
-      val media = s.createDataFrame(rows)
-        .toDF("media_id", "payload").repartition(4)
-      val sigs = operators.Multimodal.perceptualHashes(
-          operators.Multimodal.decodeImages(media, "payload"),
-          "pixels", "img_width", "img_height")
-        .select($"media_id", $"dhash", $"ahash")
-      val pairs = operators.Dedup.hammingNearDups(sigs, "media_id",
-        "dhash", maxHamming = 6)
-      val partnered = pairs.select($"a".as("media_id"), $"b".as("partner"))
-        .unionByName(pairs.select($"b".as("media_id"), $"a".as("partner")))
-      val stats = partnered.groupBy($"media_id")
-        .agg(count(lit(1)).as("n_pairs"), min($"partner").as("top_partner"))
-      sigs.join(stats, Seq("media_id"), "left")
-        .select($"media_id", $"dhash", $"ahash",
-          coalesce($"n_pairs", lit(0L)).as("n_pairs"), $"top_partner")
-        .orderBy($"media_id")
-    }),
-
-    // Audio near-dup END TO END from real bytes — q124's discipline
-    // for the sound tier: pseudo-random planted PCM clips
-    // (sample = (src·2654435761 + i²·40503 + i·977 + c·997) mod 4096
-    // − 2048, mixed mono/stereo) are container-encoded driver-side
-    // as WAV plus byte-swapped AIFF and AU re-encodes of the SAME
-    // samples, plus volume-doubled WAV variants; the engine decodes
-    // (q119's codec boundary), fingerprints the PCM (65-window
-    // integer energy-gradient signs — gain-invariant by the square)
-    // and Hamming-bands the signatures into verified pairs. Three
-    // different containers and a 2× gain must collapse to one
-    // signature; the oracle replays the sample formula, the stereo
-    // mixdown, every window energy, the bit packing and the
-    // exhaustive pairwise Hamming truth in SQL. A 40-frame clip is
-    // too short for a stable gradient signature and must come back
-    // null alongside the corrupt payloads — and null fingerprints
-    // never enter a band.
-    // The text modality's bytes→vector bridge made REAL end to end:
-    // documents feature-hash into fixed-dim signed-count vectors (the
-    // hashing trick — one pure HOF projection, no model, no shuffle,
-    // stream-legal), and near-copies (each query is a corpus doc plus
-    // three appended tokens) must recover their source as the cosine
-    // argmax over the embedded corpus. Values are exact integers
-    // inside doubles, so the oracle replays the tokenize → md5 bucket
-    // + sign → fold → per-doc stats → brute-force cosine argmax chain
-    // bit-for-bit in SQL. Composes directly with the vector family —
-    // the same column feeds buildIvf/hammingNearDups/annAdmission.
-    "q130_text_embed_ann" -> ((s, d) => {
-      val docs = t(s, d, "documents").select($"doc_id", $"text")
-      val emb = operators.TextAnalysis.hashEmbed(docs, "text", dim = 64)
-        .select($"doc_id", $"embedding")
-      val qdocs = docs.filter($"doc_id" < 15)
-        .select(($"doc_id" + 500000L).as("doc_id"),
-          concat($"text", lit(" zq zq qz")).as("text"))
-      val qemb = operators.TextAnalysis.hashEmbed(qdocs, "text", dim = 64)
-        .select($"doc_id", $"embedding")
-      val ann = operators.Similarity.bruteForceTopK(emb, qemb,
-        "doc_id", "embedding", k = 1).filter($"rank" === 1)
-      val stats = emb.select($"doc_id".as("top1"),
-        expr("aggregate(embedding, 0L, (a, x) -> " +
-          "a + CASE WHEN x != 0.0D THEN 1L ELSE 0L END)").as("nnz"),
-        expr("CAST(aggregate(embedding, 0.0D, (a, x) -> a + x * x) " +
-          "AS BIGINT)").as("ssq"))
-      ann.select($"query_id", $"neighbor_id".as("top1"))
-        .join(stats, Seq("top1"))
-        .select($"query_id", $"top1", $"nnz", $"ssq")
-        .orderBy($"query_id")
-    }),
-
-    // hashEmbed at a PRODUCTION dim (1024) — the r13 prescription's
-    // scale gate for the native projection: the old HOF fold rebuilt
-    // the full dim-array once per token (O(tokens × dim) churn, fine
-    // at the q130 dim=64, a cliff at 1024+), the native expression
-    // hashes each token once and scatters into a scratch buffer —
-    // O(tokens + dim) per doc, flat in dim per token. Stats are exact
-    // integers; wsum weights each bucket by its 1-based POSITION so
-    // the oracle pins not just the multiset of values but which
-    // bucket every count landed in.
-    "q135_hash_embed_hidim" -> ((s, d) => {
-      val docs = t(s, d, "documents").select($"doc_id", $"text")
-        .filter($"text".isNotNull)
-      val emb = operators.TextAnalysis.hashEmbed(docs, "text", dim = 1024)
-      emb.select($"doc_id",
-        expr("aggregate(embedding, 0L, (a, x) -> " +
-          "a + CASE WHEN x != 0.0D THEN 1L ELSE 0L END)").as("nnz"),
-        expr("CAST(aggregate(embedding, 0.0D, (a, x) -> a + x * x) " +
-          "AS BIGINT)").as("ssq"),
-        expr("CAST(aggregate(zip_with(embedding, " +
-          "sequence(1, 1024), (v, i) -> v * CAST(i AS DOUBLE)), " +
-          "0.0D, (a, x) -> a + x) AS BIGINT)").as("wsum"))
-        .orderBy($"doc_id")
-    }),
-
-    // TAKEDOWN for the NEAR-dup index — the third face of the
-    // compliance lifecycle (exact q128, vector q127): removing an
-    // accepted document must stop it TAINTING future batches — its
-    // near-copies (and docs whose ONLY near-match it was) flip
-    // drop → admit, while every other decision (other hits, the
-    // within-batch component collapse) holds. The q56 fixture with a
-    // third of the accepted corpus tombstoned; the oracle replays the
-    // full incremental contract twice — shingles, cross Jaccard vs
-    // accepted and vs accepted-minus-tombstoned, within-batch pairs,
-    // the recursive component closure and both taint decisions.
-    "q129_ngram_takedown" -> ((s, d) => {
-      val docs = t(s, d, "documents").select($"doc_id", $"text")
-      val batch = docs.filter($"doc_id" % 2 === 1)
-        .unionByName(docs.filter($"doc_id" % 14 === 0)
-          .select(($"doc_id" + 1000000L).as("doc_id"),
-            concat($"text", lit(" xyzzy qbf")).as("text")))
-        .unionByName(docs.filter($"doc_id" % 14 === 7)
-          .select(($"doc_id" + 2000000L).as("doc_id"),
-            concat($"text", lit(" plugh tail")).as("text")))
-      val idx = operators.Dedup.buildNgramIndex(
-        docs.filter($"doc_id" % 2 === 0), "doc_id", "text", n = 4)
-      idx.grams.persist()
-      val live = operators.Dedup.tombstoneFromNgramIndex(idx,
-        docs.filter($"doc_id" % 6 === 0).select($"doc_id"))
-      def flags(ix: operators.Dedup.NgramIndex, tag: String): DataFrame =
-        batch.join(
-          operators.Dedup.incrementalDropNearDups(ix, batch, "text",
-              threshold = 0.5)
-            .select($"doc_id", lit(true).as(tag)),
-          Seq("doc_id"), "left")
-          .select($"doc_id", coalesce(col(tag), lit(false)).as(tag))
-      // the two contract runs (vs the full index, vs the tombstoned
-      // face) are independent — their construction is EAGER (the
-      // within-batch closure localCheckpoints per round), so run them
-      // concurrently (guide §2.6); both share the persisted grams
-      val Seq(preF, postF) = sources.Sinks.inParallelMap(Seq(
-        () => flags(idx, "admitted_pre"),
-        () => flags(live, "admitted_post")))
-      val out = preF.join(postF, Seq("doc_id"))
-        .orderBy($"doc_id")
-      val materialized = s.createDataFrame(
-        java.util.Arrays.asList(out.collect(): _*), out.schema)
-      idx.grams.unpersist()
-      materialized
-    }),
-
-    // TAKEDOWN lifecycle for the EXACT-dedup accepted corpus — q127's
-    // sibling on the text side: removing a document from the accepted
-    // set must make future identical copies ADMISSIBLE again,
-    // immediately (logical: the verification rows leave, the Bloom's
-    // stale "maybe" only costs a join) and stay admissible after the
-    // physical purge (compactExactIndex re-sketches from the purged
-    // table — the same call that remediates fpp drift). The batch
-    // mixes copies of tombstoned accepted docs (drop → admit → admit),
-    // copies of still-accepted docs (always drop), fresh texts
-    // (always admit) and within-batch duplicates of those fresh texts
-    // (always drop — the min-id collapse is orthogonal to takedowns).
-    // Oracle: set-level replay of all three decisions — accepted
-    // texts, accepted EXCEPT tombstoned texts, and the per-text
-    // min-id rule.
-    "q128_exact_takedown" -> ((s, d) => {
-      val docs = t(s, d, "documents").select($"doc_id", $"text")
-      val accepted = docs.filter($"doc_id" % 3 === 0)
-      val batch = accepted.filter($"doc_id" % 6 === 0)
-          .select(($"doc_id" + 1000000L).as("doc_id"), $"text")
-        .unionByName(accepted.filter($"doc_id" % 6 === 3)
-          .select(($"doc_id" + 2000000L).as("doc_id"), $"text"))
-        .unionByName(docs.filter($"doc_id" % 3 === 1)
-          .select(($"doc_id" + 3000000L).as("doc_id"), $"text"))
-        .unionByName(docs.filter($"doc_id" % 3 === 1 && $"doc_id" % 5 === 1)
-          .select(($"doc_id" + 3500000L).as("doc_id"), $"text"))
-      val idx = operators.Dedup.buildExactIndex(accepted, "text",
-        expectedItems = 1L << 14, numBits = 1L << 17, shards = 4)
-      def flags(ix: operators.Dedup.ExactIndex, tag: String): DataFrame =
-        batch.join(
-          operators.Dedup.incrementalDropExactDups(ix, batch, "doc_id",
-              "text")
-            .select($"doc_id", lit(true).as(tag)),
-          Seq("doc_id"), "left")
-          .select($"doc_id", coalesce(col(tag), lit(false)).as(tag))
-      val tomb = accepted.filter($"doc_id" % 6 === 0)
-      val live = operators.Dedup.tombstoneFromExactIndex(idx, tomb, "text")
-      val purged = operators.Dedup.compactExactIndex(live,
-        expectedItems = 1L << 14, numBits = 1L << 17, shards = 4)
-      flags(idx, "admitted_pre")
-        .join(flags(live, "admitted_live"), Seq("doc_id"))
-        .join(flags(purged, "admitted_post"), Seq("doc_id"))
-        .orderBy($"doc_id")
-    }),
-
-    // TAKEDOWN lifecycle for the durable vector index — the
-    // compliance path a 100 TB training-data index needs: every
-    // query's true top-1 (its planted source vector) is tombstoned,
-    // so the served search must immediately surface the live
-    // runner-up (the planted twin — same direction family, well
-    // separated from the random corpus) WITHOUT an index rewrite;
-    // the next warm retrain purges the tombstoned rows physically
-    // and clears the ledger, and the served answer must not move.
-    // Oracle: three brute-force argmax replays — the full corpus
-    // (pre), and the corpus minus the tombstoned ids (logical +
-    // post-purge, which must agree).
-    "q127_ivfpq_takedown" -> ((s, d) => {
-      val emb = t(s, d, "embeddings")
-      val twins = emb.filter($"vec_id" < 10)
-        .select(($"vec_id" + 20000L).as("vec_id"),
-          expr("transform(embedding, x -> CAST(x AS DOUBLE) * 0.9 + 0.05)")
-            .as("embedding"))
-      val corpus = emb.select($"vec_id",
-          expr("transform(embedding, x -> CAST(x AS DOUBLE))")
-            .as("embedding"))
-        .unionByName(twins)
-      val queries = emb.filter($"vec_id" < 10)
-        .select(($"vec_id" + 10000L).as("vec_id"),
-          expr("transform(embedding, x -> CAST(x AS DOUBLE) * 1.001 + 0.0005)")
-            .as("embedding"))
-      val base = operators.Similarity.buildIvfPq(corpus, "vec_id",
-        "embedding", lloydIters = 3)
-      operators.Similarity.writeIvfPqIndexBucketed(base, "q127_idx")
-      def top1(tag: String): DataFrame = localCopy(
-        operators.Similarity.searchIvfPqLive(s, "q127_idx", corpus,
-            queries, "vec_id", "embedding", k = 1)
-          .filter($"rank" === 1)
-          .select($"query_id", $"neighbor_id".as(tag)))
-      val pre = top1("pre_top1")
-      operators.Similarity.tombstoneIvfPq(s, "q127_idx",
-        emb.filter($"vec_id" < 10).select($"vec_id"), "vec_id")
-      val live = top1("live_top1")
-      operators.Similarity.retrainIvfPqIndexBucketed(s, "q127_idx",
-        corpus, "vec_id", "embedding",
-        sample = corpus.filter($"vec_id" % 3 === 0), lloydIters = 1)
-      val post = top1("post_top1")
-      pre.join(live, Seq("query_id")).join(post, Seq("query_id"))
-        .select($"query_id", $"pre_top1", $"live_top1", $"post_top1")
-        .orderBy($"query_id")
-    }),
-
-    // The MULTIMODAL rung of the streaming ingestion ladder: images
-    // arrive as BYTES on the stream, decode + perceptual-hash as
-    // stateless codec ops in-flight, and admit/reject against a
-    // static accepted corpus via maxHamming+1 broadcast band joins —
-    // recall-EXACT at the threshold by pigeonhole (unlike the IVF
-    // rung there is no probe-miss caveat), so the streamed decision
-    // must equal the batch hammingNearDups decision bit-for-bit. The
-    // reference signatures are derived through the REAL decode path
-    // (PNG corpus → decodeImages → dHash); arrivals mix BMP
-    // re-encodes of accepted images (reject at hamming 0 — the
-    // cross-container duplicate no byte hash can see), brightness
-    // variants (reject within threshold), novel images (admit) and
-    // corrupt payloads (null signature → admit, membership
-    // unprovable). The oracle replays both sides' pixel formulas,
-    // the dHash construction and the exhaustive argmin decision.
-    "q126_stream_image_admission" -> ((s, d) => {
-      val refMedia = s.createDataFrame(
-          (1L to 10L).map(i => (i, refImage(i, 0, "png"))))
-        .toDF("media_id", "payload")
-      val refSigs = operators.Multimodal.perceptualHashes(
-          operators.Multimodal.decodeImages(refMedia, "payload"),
-          "pixels", "img_width", "img_height")
-        .select($"media_id", $"dhash")
-      val members = operators.Dedup.hammingBandMembers(refSigs,
-        "media_id", "dhash", maxHamming = 6)
-      members.persist(org.apache.spark.storage.StorageLevel
-        .MEMORY_AND_DISK).count()
-      val whole = refImage(1L, 0, "png")
-      val rows: Seq[(Long, Array[Byte])] =
-        (1L to 5L).map(i => (500L + i, refImage(i, 0, "bmp"))) ++
-        (1L to 5L).map(i => (510L + i, refImage(i, 4, "png"))) ++
-        (21L to 25L).map(i => (500L + i, refImage(i, 0, "png"))) ++
-        Seq((9001L, whole.take(20)),
-          (9002L, "not an image".getBytes("UTF-8")),
-          (9003L, Array.empty[Byte]))
-      val dir = java.nio.file.Files.createTempDirectory("q126_stream")
-      dir.toFile.deleteOnExit()
-      s.createDataFrame(rows).toDF("media_id", "payload")
-        .repartition(4).write.parquet(s"$dir/in")
-      val sch = s.read.parquet(s"$dir/in").schema
-      val stream = s.readStream.schema(sch)
-        .option("maxFilesPerTrigger", 1).parquet(s"$dir/in")
-      val hashed = operators.Multimodal.perceptualHashes(
-        operators.Multimodal.decodeImages(stream, "payload"),
-        "pixels", "img_width", "img_height")
-      val admitted = streaming.StreamingParse.hammingAdmissionStream(
-        hashed, "media_id", "dhash", members, maxHamming = 6)
-      val out = runStreamToTable(s, admitted, "append", "image_admission")
-        .select($"media_id", $"dhash", $"admitted", $"match_id",
-          $"match_hamming")
-        .orderBy($"media_id")
-      members.unpersist()
-      out
-    }),
-
-    // ONE-CALL maintenance window for the ROOTED exact-dedup index —
-    // maintainExactIndex completes the cron-shaped lifecycle the
-    // vector family got in q131: the q128 takedown fixture driven
-    // through the durable pointer face (writeExactIndexRooted /
-    // readExactIndexRootedLive) and healed by the SINGLE call —
-    // pending ledger rows fire the window, the live hash table
-    // re-sketches under fresh geometry to the alternate generation,
-    // the meta pointer flips, the ledger clears — and the admission
-    // decisions before (logical delete) and after (physical purge)
-    // must agree bit-for-bit. The second call is a quiet no-op: no
-    // pending debt, generation untouched. fpp never fires here by
-    // geometry (2^17 bits/shard over ≤ thousands of accepted texts —
-    // est_fpp stays orders of magnitude under the 0.5 bar at any
-    // driver sf), so every flag is replayable set algebra.
-    "q139_exact_maintain" -> ((s, d) => {
-      val docs = t(s, d, "documents").select($"doc_id", $"text")
-      val accepted = docs.filter($"doc_id" % 3 === 0)
-      val batch = accepted.filter($"doc_id" % 6 === 0)
-          .select(($"doc_id" + 1000000L).as("doc_id"), $"text")
-        .unionByName(accepted.filter($"doc_id" % 6 === 3)
-          .select(($"doc_id" + 2000000L).as("doc_id"), $"text"))
-        .unionByName(docs.filter($"doc_id" % 3 === 1)
-          .select(($"doc_id" + 3000000L).as("doc_id"), $"text"))
-        .unionByName(docs.filter($"doc_id" % 3 === 1 && $"doc_id" % 5 === 1)
-          .select(($"doc_id" + 3500000L).as("doc_id"), $"text"))
-      val root = s"${seasonOutDir("q139")}/exact_idx"
-      operators.Dedup.writeExactIndexRooted(s, "q139_idx", root,
-        operators.Dedup.buildExactIndex(accepted, "text",
-          expectedItems = 1L << 14, numBits = 1L << 17, shards = 4))
-      operators.Dedup.tombstoneExactIndex(s, "q139_idx",
-        accepted.filter($"doc_id" % 6 === 0), "text")
-      // materialize decisions BEFORE the window runs — the window
-      // drops the generation this plan reads
-      def flags(tag: String): DataFrame = localCopy {
-        val ix = operators.Dedup.readExactIndexRootedLive(s, "q139_idx")
-        batch.join(
-          operators.Dedup.incrementalDropExactDups(ix, batch, "doc_id",
-              "text")
-            .select($"doc_id", lit(true).as(tag)),
-          Seq("doc_id"), "left")
-          .select($"doc_id", coalesce(col(tag), lit(false)).as(tag))
-      }
-      def maintain(): DataFrame = localCopy(
-        operators.Dedup.maintainExactIndex(s, "q139_idx", root,
-          maxFpp = 0.5))
-      val pre = flags("admitted_pre")
-      val m1 = maintain()
-      val post = flags("admitted_post")
-      val m2 = maintain()
-      pre.join(post, Seq("doc_id"))
-        .crossJoin(broadcast(m1.select(
-          $"pending_tombstones".as("pending_1"),
-          $"fpp_fired".as("fpp_fired_1"),
-          $"purge_fired".as("fired_1"),
-          $"post_pending".as("post_pending_1"),
-          $"gen_changed".as("gen_changed_1"))))
-        .crossJoin(broadcast(m2.select(
-          $"purge_fired".as("fired_2"),
-          $"gen_changed".as("gen_changed_2"))))
-        .orderBy($"doc_id")
-    }),
-
-    // ONE-CALL maintenance window for the ROOTED near-dup index —
-    // the q129 taint-takedown fixture driven through the durable
-    // pointer face (writeNgramIndexRooted / readNgramIndexRootedLive)
-    // and purged by the SINGLE call: pending tombstones fire the
-    // window, the live (ledger-applied) gram frame rewrites bucketed
-    // to the alternate generation — one shuffle over surviving grams,
-    // never a corpus re-shingle — the meta pointer flips and the
-    // ledger clears; the incremental admission decisions before
-    // (logical) and after (physical) must agree bit-for-bit,
-    // component closure included. Second call: quiet no-op. The
-    // oracle replays the FULL incremental contract once against
-    // accepted-minus-tombstoned (pre ≡ post by construction) plus the
-    // lifecycle flags as set algebra.
-    "q140_ngram_maintain" -> ((s, d) => {
-      // bounded fixture (doc_id < 250): the lifecycle under test —
-      // taint takedown, pointer flip, purge, quiet no-op — is
-      // scale-free, and the contract-TWICE replay was the catalog's
-      // most expensive row at full width (r14 plan audit); q129/q56
-      // keep pinning the contract itself at full width
-      val docs = t(s, d, "documents").select($"doc_id", $"text")
-        .filter($"doc_id" < 250)
-      val batch = docs.filter($"doc_id" % 2 === 1)
-        .unionByName(docs.filter($"doc_id" % 14 === 0)
-          .select(($"doc_id" + 1000000L).as("doc_id"),
-            concat($"text", lit(" xyzzy qbf")).as("text")))
-        .unionByName(docs.filter($"doc_id" % 14 === 7)
-          .select(($"doc_id" + 2000000L).as("doc_id"),
-            concat($"text", lit(" plugh tail")).as("text")))
-      operators.Dedup.writeNgramIndexRooted(s, "q140_idx",
-        operators.Dedup.buildNgramIndex(
-          docs.filter($"doc_id" % 2 === 0), "doc_id", "text", n = 4))
-      operators.Dedup.tombstoneNgramIndex(s, "q140_idx",
-        docs.filter($"doc_id" % 6 === 0).select($"doc_id"))
-      def flags(tag: String): DataFrame = localCopy {
-        val ix = operators.Dedup.readNgramIndexRootedLive(s, "q140_idx",
-          "doc_id", n = 4)
-        batch.join(
-          operators.Dedup.incrementalDropNearDups(ix, batch, "text",
-              threshold = 0.5)
-            .select($"doc_id", lit(true).as(tag)),
-          Seq("doc_id"), "left")
-          .select($"doc_id", coalesce(col(tag), lit(false)).as(tag))
-      }
-      def maintain(): DataFrame = localCopy(
-        operators.Dedup.maintainNgramIndex(s, "q140_idx", "doc_id", n = 4))
-      val pre = flags("admitted_pre")
-      val m1 = maintain()
-      val post = flags("admitted_post")
-      val m2 = maintain()
-      pre.join(post, Seq("doc_id"))
-        .crossJoin(broadcast(m1.select(
-          $"pending_tombstones".as("pending_1"),
-          $"fired".as("fired_1"),
-          $"post_pending".as("post_pending_1"),
-          $"gen_changed".as("gen_changed_1"))))
-        .crossJoin(broadcast(m2.select(
-          $"fired".as("fired_2"),
-          $"gen_changed".as("gen_changed_2"))))
-        .orderBy($"doc_id")
-    }),
-
-    // ONE-CALL maintenance window for the durable PERCEPTUAL members
-    // table — maintainHammingMembers completes the matrix: every
-    // durable family (exact q139, ngram q140, vector q131, layout,
-    // members here) now heals through a single cron-shaped call.
-    // Signatures are md5-derived 60-bit values (replayable — the
-    // banding machinery is signature-agnostic; the DECODE path is
-    // q126/q137's job), arrivals mix exact copies of tombstoned refs
-    // (admit through the live read, and STILL admit after the purge),
-    // copies of kept refs (always reject at hamming 0), one-bit
-    // flips (reject at hamming 1) and novel signatures (admit). The
-    // admission operator is the same stateless hammingAdmissionStream
-    // the streams run — batch-legal by construction. The oracle
-    // replays the md5 signatures, the XOR flips and the exhaustive
-    // argmin decision, plus the lifecycle flags as set algebra.
-    "q141_members_maintain" -> ((s, d) => {
-      def sigOf(salt: String, id: Column): Column =
-        conv(substring(md5(concat(lit(salt), id.cast("string"))), 1, 15),
-          16, 10).cast("long")
-      val refs = s.range(1, 41).select($"id".as("media_id"),
-        sigOf("q141:", $"id").as("sig"))
-      operators.Dedup.writeHammingMembers(s,
-        operators.Dedup.hammingBandMembers(refs, "media_id", "sig",
-          maxHamming = 3),
-        "q141_members")
-      operators.Dedup.tombstoneHammingMembers(s, "q141_members",
-        s.range(1, 6).select($"id".as("media_id")))
-      val arrivals = s.range(1, 11)
-          .select(($"id" + 500L).as("media_id"),
-            sigOf("q141:", $"id").as("sig"))
-        .unionByName(s.range(11, 16)
-          .select(($"id" + 520L).as("media_id"),
-            sigOf("q141:", $"id")
-              .bitwiseXOR(expr(
-                "shiftleft(CAST(1 AS BIGINT), CAST(id % 60 AS INT))"))
-              .as("sig")))
-        .unionByName(s.range(1, 9)
-          .select(($"id" + 540L).as("media_id"),
-            sigOf("q141n:", $"id").as("sig")))
-      def decide(members: DataFrame, tag: String): DataFrame = localCopy(
-        streaming.StreamingParse.hammingAdmissionStream(arrivals,
-            "media_id", "sig", members, maxHamming = 3)
-          .select($"media_id",
-            col("admitted").as(s"admitted_$tag"),
-            col("match_id").as(s"match_$tag")))
-      def maintain(): DataFrame = localCopy(
-        operators.Dedup.maintainHammingMembers(s, "q141_members",
-          maxHamming = 3))
-      val pre = decide(
-        operators.Dedup.readHammingMembersLive(s, "q141_members"), "pre")
-      val m1 = maintain()
-      val post = decide(
-        operators.Dedup.readHammingMembersLive(s, "q141_members"), "post")
-      val m2 = maintain()
-      pre.join(post, Seq("media_id"))
-        .crossJoin(broadcast(m1.select(
-          $"pending_tombstones".as("pending_1"),
-          $"fired".as("fired_1"),
-          $"post_pending".as("post_pending_1"),
-          $"gen_changed".as("gen_changed_1"))))
-        .crossJoin(broadcast(m2.select(
-          $"fired".as("fired_2"),
-          $"gen_changed".as("gen_changed_2"))))
-        .orderBy($"media_id")
-    }),
-
-    // DEAD-LETTER QUARANTINE for a streaming codec ingest — the
-    // multi-sink pattern every 100 TB pipeline runs at its decode
-    // boundary, done as ONE routed pass (foreachBatch: the micro-batch
-    // persists once, healthy rows flow through the admission transform
-    // into the main table, corrupt rows land VERBATIM in the
-    // quarantine with a DETERMINISTIC reason — null_payload /
-    // empty_payload / undecodable, derived from the row itself, never
-    // an exception message). Until now corrupt payloads null-admitted
-    // silently; here they leave the healthy path entirely and keep
-    // their forensics. Arrivals: BMP re-encodes of accepted PNGs
-    // (decode ok → reject at hamming 0), novel PNGs (decode ok →
-    // admit), garbage bytes / zero bytes / null payload (each to
-    // quarantine under its own reason). The oracle replays the pixel
-    // formulas, the dHash grid, the argmin admission AND the reason
-    // classification.
-    "q142_stream_quarantine" -> ((s, d) => {
-      val (members, dir) = quarantineFixture(s, "q142")
-      def healthy(b: DataFrame): DataFrame =
-        streaming.StreamingParse.hammingAdmissionStream(b, "media_id",
-            "dhash", members, maxHamming = 6)
-          .select($"media_id", $"dhash", $"admitted", $"match_id")
-      // hard-reset both sinks: the gate must be re-runnable in-session
-      // (Bench runs it twice) and across JVMs (stale managed location)
-      Seq("q142_main", "q142_quarantine").foreach { tbl =>
-        s.sql(s"DROP TABLE IF EXISTS $tbl")
-        sources.Sinks.dropStaleManagedLocation(members, tbl)
-      }
-      val sch = s.read.parquet(s"$dir/in").schema
-      streaming.StreamingParse.quarantineStream(
-        decodeWithStatus(s.readStream.schema(sch)
-          .option("maxFilesPerTrigger", 1).parquet(s"$dir/in")),
-        "decode_status", healthy, "q142_main", "q142_quarantine")
-      members.unpersist()
-      s.table("q142_main")
-        .select($"media_id", lit("main").as("routed"), $"dhash",
-          $"admitted", $"match_id",
-          lit(null).cast("string").as("reason"))
-        .unionByName(s.table("q142_quarantine")
-          .select($"media_id", lit("quarantine").as("routed"),
-            lit(null).cast("long").as("dhash"),
-            lit(null).cast("boolean").as("admitted"),
-            lit(null).cast("long").as("match_id"),
-            $"decode_status".as("reason")))
-        .orderBy($"media_id")
-    }),
-
-    // EXACTLY-ONCE output for the dead-letter ingest — q142's routing
-    // under a SIMULATED CRASH-REDELIVERY: the same decode→route split
-    // runs through quarantineStreamIdempotent (batch_id-partitioned
-    // dynamic overwrite instead of blind appends), then the gate
-    // replays the LAST batch verbatim — same rows, same batch id,
-    // exactly what the checkpoint re-delivers after a crash between
-    // the two sink writes — by calling the public per-batch body
-    // directly. Under q142's documented at-least-once appends the
-    // replay would DUPLICATE every row of that batch (and the
-    // oracle's row counts would catch it); under the dynamic
-    // partition overwrite the batch rewrites its own partition
-    // byte-for-byte and every other batch is untouched, so the final
-    // output equals the no-crash run exactly. Oracle: q142's full
-    // pixel→dHash→argmin + reason-classification replay, row counts
-    // binding.
-    "q146_stream_idempotent_sink" -> ((s, d) => {
-      val (members, dir) = quarantineFixture(s, "q146")
-      def healthy(b: DataFrame): DataFrame =
-        streaming.StreamingParse.hammingAdmissionStream(b, "media_id",
-            "dhash", members, maxHamming = 6)
-          .select($"media_id", $"dhash", $"admitted", $"match_id")
-      val mainPath = s"$dir/main"; val qPath = s"$dir/quarantine"
-      val sch = s.read.parquet(s"$dir/in").schema
-      streaming.StreamingParse.quarantineStreamIdempotent(
-        decodeWithStatus(s.readStream.schema(sch)
-          .option("maxFilesPerTrigger", 1).parquet(s"$dir/in")),
-        "decode_status", healthy, mainPath, qPath)
-      // the crash-redelivery: the LAST batch arrives AGAIN with the
-      // same id and the same rows (reconstructed exactly from the
-      // batch's own committed output — media ids are unique)
-      val lastBatch = s.read.parquet(mainPath).select($"batch_id")
-        .unionByName(s.read.parquet(qPath).select($"batch_id"))
-        .agg(max($"batch_id".cast("long"))).collect()(0).getLong(0)
-      val replayIds = s.read.parquet(mainPath)
-        .filter($"batch_id".cast("long") === lastBatch)
-        .select($"media_id")
-        .unionByName(s.read.parquet(qPath)
-          .filter($"batch_id".cast("long") === lastBatch)
-          .select($"media_id"))
-      val replayRows = s.read.parquet(s"$dir/in")
-        .join(broadcast(replayIds), Seq("media_id"), "left_semi")
-      streaming.StreamingParse.applyQuarantineBatchIdempotent(
-        decodeWithStatus(replayRows), lastBatch, "decode_status", healthy,
-        mainPath, qPath)
-      members.unpersist()
-      s.read.parquet(mainPath)
-        .select($"media_id", lit("main").as("routed"), $"dhash",
-          $"admitted", $"match_id",
-          lit(null).cast("string").as("reason"))
-        .unionByName(s.read.parquet(qPath)
-          .select($"media_id", lit("quarantine").as("routed"),
-            lit(null).cast("long").as("dhash"),
-            lit(null).cast("boolean").as("admitted"),
-            lit(null).cast("long").as("match_id"),
-            $"decode_status".as("reason")))
-        .orderBy($"media_id")
-    }),
-
-    // Image RESIZE as a VALUE gate — the feature-prep verb between
-    // decode and any fixed-input model stage, done nearest-neighbor
-    // with floor sampling so every output byte is integer-exact and
-    // the WHOLE resized buffer is pinned: the gate folds the resized
-    // bytes into a position-weighted checksum + plain sum via pure
-    // SQL byte extraction (hex of each 1-byte substring), and the
-    // oracle regenerates both from the planted pixel formula and the
-    // same integer sampling rule ((x*srcW)//outW). A corrupt payload
-    // follows the corrupt-row discipline: null dims, null checksum,
-    // never a task failure.
-    "q143_image_resize" -> ((s, d) => {
-      val media = s.createDataFrame(
-          (1L to 6L).map(i => (i, refImage(i, 0, "png"))) :+
-            ((9001L, "not an image".getBytes("UTF-8"))))
-        .toDF("media_id", "payload")
-      val byteAt = "CAST(conv(hex(substring(resized, i, 1)), 16, 10) " +
-        "AS BIGINT)"
-      operators.Multimodal.resizeImages(
-          operators.Multimodal.decodeImages(media, "payload"),
-          "pixels", "img_width", "img_height", outW = 7, outH = 5)
-        .select($"media_id", $"resized_width", $"resized_height",
-          expr("aggregate(sequence(1, length(resized)), 0L, " +
-            s"(a, i) -> a + $byteAt * i)").as("checksum"),
-          expr("aggregate(sequence(1, length(resized)), 0L, " +
-            s"(a, i) -> a + $byteAt)").as("total"))
-        .orderBy($"media_id")
-    }),
-
-    // The IMAGE bytes→vector bridge (imageEmbed — the tiny-image luma
-    // thumbnail as an array<double>) through the BATCH vector tier:
-    // where the Hamming rung (q124) answers "re-encode within radius
-    // h?", the cosine rung RANKS look-alikes and composes with every
-    // vector operator. Strata: BMP re-encodes of reference PNGs embed
-    // IDENTICALLY (cosine exactly 1 — the codec boundary is lossless
-    // on these pixels, pinned by q118) and reject; integer
-    // gain-scaled copies ((9·v) div 10 per pixel — floor noise only)
-    // still reject near 1; novel-formula images sit in the
-    // positive-luma cosine floor (≈0.75 — raw luma grids never
-    // decorrelate to 0) well under tau and admit; corrupt and null
-    // payloads embed null and admit. The oracle replays pixel
-    // formula → ITU-601 luma (= v on gray pixels) → the 8×8 sample
-    // lattice → integer-exact dots → the argmax tie rule → the tau
-    // decision.
-    "q148_image_embed_neardup" -> ((s, d) => {
-      def embed(df: DataFrame): DataFrame =
-        operators.Multimodal.imageEmbed(
-          operators.Multimodal.decodeImages(df, "payload"),
-          "pixels", "img_width", "img_height")
-      val refs = s.createDataFrame((1L to 10L).map(i =>
-          (i, refImage(i, 0, "png"))))
-        .toDF("media_id", "payload")
-      val refEmb = embed(refs).select($"media_id", $"img_embedding")
-      val arrivals = s.createDataFrame(
-          (1L to 5L).map(i => (500L + i,
-            refImage(i, 0, "bmp"))) ++
-          (1L to 5L).map(i => (510L + i,
-            grayImage((x, y) => 9 * refPixel(i, x, y) / 10, "png"))) ++
-          (1L to 3L).map(i => (520L + i,
-            grayImage(novelPixel(i, _, _), "png"))) ++
-          Seq((9001L, "not an image".getBytes("UTF-8")),
-            (9002L, null.asInstanceOf[Array[Byte]])))
-        .toDF("media_id", "payload")
-      val arrEmb = embed(arrivals).select($"media_id", $"img_embedding")
-      val top1 = operators.Similarity.bruteForceTopK(refEmb,
-          arrEmb.filter($"img_embedding".isNotNull),
-          "media_id", "img_embedding", k = 1)
-        .filter($"rank" === 1)
-      arrEmb.select($"media_id")
-        .join(top1.select($"query_id".as("media_id"), $"neighbor_id",
-          $"cosine"), Seq("media_id"), "left")
-        .select($"media_id",
-          coalesce($"cosine" < 0.9, lit(true)).as("admitted"),
-          when($"cosine" >= 0.9, $"neighbor_id").as("match_id"))
-        .orderBy($"media_id")
-    }),
-
-    // The VIDEO bytes→vector bridge (videoEmbed — per-frame tiny-image
-    // lattices SUM-pooled across frames) through the batch vector
-    // tier, completing the modality × vector-tier MATRIX (text q130,
-    // image q148, audio q150, video here; each also has its Hamming
-    // face). Sum pooling keeps the chain integer-exact; cosine RANKS
-    // where the vsig majority vote (q133) thresholds: brightness
-    // re-renders land ≈0.9999 (additive shift, not exactly 1 — unlike
-    // the dHash face, which is blind to it), first-frame-dropped
-    // copies ≈0.9996 (one frame's share of the sum), novel videos
-    // ≤0.902 — tau 0.98 splits with margin on BOTH sides (measured,
-    // and the oracle recomputes every value exactly). Torn, garbage
-    // and empty payloads embed null and admit.
-    "q153_video_embed_neardup" -> ((s, d) => {
-      def embed(df: DataFrame): DataFrame =
-        operators.Multimodal.videoEmbed(df, "payload")
-      val refs = s.createDataFrame((1L to 6L).map(i =>
-          (i, grayGif(i, 0, dropFirst = false))))
-        .toDF("media_id", "payload")
-      val refEmb = embed(refs).select($"media_id", $"video_embedding")
-      val whole = grayGif(1L, 0, dropFirst = false)
-      val arrivals: Seq[(Long, Array[Byte])] =
-        (1L to 3L).map(i => (500L + i, grayGif(i, 4, dropFirst = false))) ++
-        (1L to 3L).map(i => (510L + i, grayGif(i, 0, dropFirst = true))) ++
-        (21L to 23L).map(i => (500L + i, grayGif(i, 0, dropFirst = false))) ++
-        Seq((9001L, whole.take(whole.length * 3 / 5)),
-          (9002L, "not a video".getBytes("UTF-8")),
-          (9003L, Array.empty[Byte]))
-      val arrEmb = embed(s.createDataFrame(arrivals)
-          .toDF("media_id", "payload"))
-        .select($"media_id", $"video_embedding")
-      val top1 = operators.Similarity.bruteForceTopK(refEmb,
-          arrEmb.filter($"video_embedding".isNotNull),
-          "media_id", "video_embedding", k = 1)
-        .filter($"rank" === 1)
-      arrEmb.select($"media_id")
-        .join(top1.select($"query_id".as("media_id"), $"neighbor_id",
-          $"cosine"), Seq("media_id"), "left")
-        .select($"media_id",
-          coalesce($"cosine" < 0.98, lit(true)).as("admitted"),
-          when($"cosine" >= 0.98, $"neighbor_id").as("match_id"))
-        .orderBy($"media_id")
-    }),
-
-    // The VIDEO modality's semantic admission rung IN FLIGHT — the
-    // final cell of the streaming cosine matrix (text q138, image
-    // q149, audio q151, video here): multi-frame payloads arrive as
-    // bytes, the WHOLE temporal chain (decode every frame, per-frame
-    // lattice, sum-pool) runs as ONE per-row codec op (videoEmbed —
-    // stream-legal by the q136 argument), and admission rides the
-    // same annAdmissionStream broadcast probes. Same strata and SAME
-    // ORACLE as q153 — nProbe = nCells pins the streamed probe to the
-    // batch brute-force rule; torn/garbage/empty payloads embed null
-    // and ADMIT.
-    "q154_stream_video_semantic" -> ((s, d) => {
-      val refs = s.createDataFrame((1L to 6L).map(i =>
-          (i, grayGif(i, 0, dropFirst = false))))
-        .toDF("media_id", "payload")
-      val refEmb = operators.Multimodal.videoEmbed(refs, "payload")
-        .select($"media_id", $"video_embedding")
-      val index = operators.Similarity.buildIvf(refEmb, "media_id",
-        "video_embedding", nCells = 2, lloydIters = 1)
-      val members = operators.Similarity.cellMembers(index)
-      members.persist(org.apache.spark.storage.StorageLevel
-        .MEMORY_AND_DISK).count()
-      val whole = grayGif(1L, 0, dropFirst = false)
-      val arrivals: Seq[(Long, Array[Byte])] =
-        (1L to 3L).map(i => (500L + i, grayGif(i, 4, dropFirst = false))) ++
-        (1L to 3L).map(i => (510L + i, grayGif(i, 0, dropFirst = true))) ++
-        (21L to 23L).map(i => (500L + i, grayGif(i, 0, dropFirst = false))) ++
-        Seq((9001L, whole.take(whole.length * 3 / 5)),
-          (9002L, "not a video".getBytes("UTF-8")),
-          (9003L, Array.empty[Byte]))
-      val dir = java.nio.file.Files.createTempDirectory("q154_stream")
-      dir.toFile.deleteOnExit()
-      s.createDataFrame(arrivals).toDF("media_id", "payload")
-        .repartition(4).write.parquet(s"$dir/in")
-      val sch = s.read.parquet(s"$dir/in").schema
-      val stream = s.readStream.schema(sch)
-        .option("maxFilesPerTrigger", 1).parquet(s"$dir/in")
-      val admitted = streaming.StreamingParse.annAdmissionStream(
-        operators.Multimodal.videoEmbed(stream, "payload"), "media_id",
-        "video_embedding", index, members, tau = 0.98, nProbe = 2)
-      val out = runStreamToTable(s, admitted, "append", "video_semantic")
-        .select($"media_id", $"admitted", $"match_id")
-        .orderBy($"media_id")
-      members.unpersist()
-      out
-    }),
-
-    // The IMAGE modality's semantic admission rung IN FLIGHT — q138's
-    // composition with imageEmbed in hashEmbed's seat, completing the
-    // "every modality reaches the vector tier, streaming" story:
-    // image bytes arrive on the stream, decode and embed per row
-    // (both pure codec-boundary ops), and admit/reject against an IVF
-    // of the embedded reference corpus through annAdmissionStream's
-    // broadcast probe joins. Same strata and SAME ORACLE as q148 —
-    // nProbe equals nCells, so the streamed IVF decision must equal
-    // the batch brute-force rule decision-for-decision, pinning the
-    // two routes against each other; corrupt/null payloads embed null
-    // and ADMIT through the zero-probe path (never a crash, never a
-    // false reject).
-    "q149_stream_image_semantic" -> ((s, d) => {
-      def embed(df: DataFrame): DataFrame =
-        operators.Multimodal.imageEmbed(
-          operators.Multimodal.decodeImages(df, "payload"),
-          "pixels", "img_width", "img_height")
-      val refs = s.createDataFrame((1L to 10L).map(i =>
-          (i, refImage(i, 0, "png"))))
-        .toDF("media_id", "payload")
-      val refEmb = embed(refs).select($"media_id", $"img_embedding")
-      val index = operators.Similarity.buildIvf(refEmb, "media_id",
-        "img_embedding", nCells = 2, lloydIters = 1)
-      val members = operators.Similarity.cellMembers(index)
-      members.persist(org.apache.spark.storage.StorageLevel
-        .MEMORY_AND_DISK).count()
-      val arrivals: Seq[(Long, Array[Byte])] =
-        (1L to 5L).map(i => (500L + i,
-          refImage(i, 0, "bmp"))) ++
-        (1L to 5L).map(i => (510L + i,
-          grayImage((x, y) => 9 * refPixel(i, x, y) / 10, "png"))) ++
-        (1L to 3L).map(i => (520L + i,
-          grayImage(novelPixel(i, _, _), "png"))) ++
-        Seq((9001L, "not an image".getBytes("UTF-8")),
-          (9002L, null.asInstanceOf[Array[Byte]]))
-      val dir = java.nio.file.Files.createTempDirectory("q149_stream")
-      dir.toFile.deleteOnExit()
-      s.createDataFrame(arrivals).toDF("media_id", "payload")
-        .repartition(4).write.parquet(s"$dir/in")
-      val sch = s.read.parquet(s"$dir/in").schema
-      val stream = s.readStream.schema(sch)
-        .option("maxFilesPerTrigger", 1).parquet(s"$dir/in")
-      val admitted = streaming.StreamingParse.annAdmissionStream(
-        embed(stream), "media_id", "img_embedding", index, members,
-        tau = 0.9, nProbe = 2)
-      val out = runStreamToTable(s, admitted, "append", "image_semantic")
-        .select($"media_id", $"admitted", $"match_id")
-        .orderBy($"media_id")
-      members.unpersist()
-      out
-    }),
-
-    // TAKEDOWNS THROUGH THE COMPOSED FRONT DOOR — the compliance
-    // lifecycle (q144's vector rung, q128's exact rung) reaching the
-    // one-pass cascade (q147) with NO restart: the accepted corpus's
-    // first five docs file into the durable index's tombstone ledger
-    // and leave the exact-tier reference view, and the very next
-    // stream pass flips exactly their arrivals — verbatim re-crawls
-    // of removed docs fall through the exact tier, pass quality, find
-    // no ≥tau live neighbor and ADMIT; near-copies of removed docs
-    // flip semantic → admit; every other row's decision and reason
-    // hold bit-for-bit. The oracle replays the whole cascade TWICE
-    // (full accepted set, then minus the tombstoned docs).
-    "q156_cascade_takedown" -> ((s, d) => {
-      val docs = t(s, d, "documents").select($"doc_id", $"text")
-        .filter(length(trim($"text")) > 0)
-      val accepted = docs.filter($"doc_id" < 40)
-      val emb = operators.TextAnalysis.hashEmbed(accepted, "text",
-          dim = 64)
-        .select($"doc_id", $"embedding")
-      // gate hygiene: the ledger survives re-runs (the index tables
-      // rewrite below but appendLedger accumulates) — reset so the
-      // PRE pass always sees a clean slate
-      sources.Generations.clearLedger(s, "q156_idx_tombstones")
-      operators.Similarity.writeIvfIndexBucketed(
-        operators.Similarity.buildIvf(emb, "doc_id", "embedding",
-          nCells = 2, lloydIters = 1), "q156_idx", numBuckets = 2)
-      def acceptedTextsOf(acc: DataFrame): DataFrame =
-        acc.groupBy($"text").agg(min($"doc_id").as("exact_id"))
-      val arrivals = accepted.filter($"doc_id" < 10)
-          .select(($"doc_id" + 400000L).as("doc_id"), $"text")
-        .unionByName(accepted.filter($"doc_id" < 10)
-          .select(($"doc_id" + 500000L).as("doc_id"),
-            concat($"text", lit(" zq zq qz")).as("text")))
-        .unionByName(docs.filter($"doc_id" >= 200 && $"doc_id" < 205)
-          .select(($"doc_id" + 600000L).as("doc_id"), $"text"))
-        .unionByName(s.createDataFrame(Seq(
-            (900001L, ""), (900002L, null.asInstanceOf[String])))
-          .toDF("doc_id", "text"))
-      val dir = java.nio.file.Files.createTempDirectory("q156_stream")
-      dir.toFile.deleteOnExit()
-      arrivals.repartition(4).write.parquet(s"$dir/in")
-      val sch = s.read.parquet(s"$dir/in").schema
-      def run(tag: String, accTexts: DataFrame): DataFrame = {
-        val idx = operators.Similarity.readIvfIndexLive(s, "q156_idx")
-        val members = operators.Similarity.cellMembers(idx)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        members.count()
-        val at = accTexts
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        at.count()
-        val stream = s.readStream.schema(sch)
-          .option("maxFilesPerTrigger", 1).parquet(s"$dir/in")
-        val res = runStreamToTable(s,
-          streaming.StreamingParse.admissionCascadeStream(stream,
-            "doc_id", "text", at, minLen = 20, maxNonAlphaRatio = 0.3,
-            index = idx, members = members, tau = 0.9, dim = 64,
-            nProbe = 2),
-          "append", s"cascade_td_$tag")
-          .select($"doc_id",
-            col("cascade_admitted").as(s"admitted_$tag"),
-            col("reason").as(s"reason_$tag"))
-        val local = s.createDataFrame(
-          java.util.Arrays.asList(res.collect(): _*), res.schema)
-        members.unpersist(); at.unpersist()
-        local
-      }
-      val pre = run("pre", acceptedTextsOf(accepted))
-      operators.Similarity.tombstoneIvf(s, "q156_idx",
-        accepted.filter($"doc_id" < 5).select($"doc_id"), "doc_id")
-      val live = run("live",
-        acceptedTextsOf(accepted.filter($"doc_id" >= 5)))
-      pre.join(live, Seq("doc_id"))
-        .select($"doc_id", $"admitted_pre", $"reason_pre",
-          $"admitted_live", $"reason_live")
-        .orderBy($"doc_id")
-    }),
-
-    // TAKEDOWN lifecycle for the LSH family — closing the compliance
-    // matrix across ALL FOUR durable vector families (exact q128,
-    // ngram q129, IVF q144, IVF×PQ q127, IVF×SQ spec, LSH here): the
-    // q127 three-world shape with EXACT twins (identical vectors →
-    // identical hyperplane signatures → bucket recovery is certain
-    // and the cosine-1.0 tie resolves by the deterministic id
-    // tie-break, so every world's answer is value-pinned, never
-    // probabilistic). Pre: original wins the tie (smaller id). File
-    // the originals into the ledger → the live search serves the
-    // exact twin (pre-rank exclusion: the row never enters a probe
-    // bucket). purgeLshIndex — the LSH maintenance call is PURGE-ONLY
-    // because frozen hyperplanes cannot drift — rewrites the
-    // surviving signature rows once (bucketed A/B generation swap,
-    // meta-last, ledger cleared; never a re-hash of the corpus) and
-    // the served answer must not move. The oracle replays brute-force
-    // cosine argmax over both worlds.
-    "q157_lsh_takedown" -> ((s, d) => {
-      val emb = t(s, d, "embeddings")
-      val corpus = emb.select($"vec_id",
-        expr("transform(embedding, x -> CAST(x AS DOUBLE))")
-          .as("embedding"))
-      val twins = corpus.filter($"vec_id" < 10)
-        .select(($"vec_id" + 20000L).as("vec_id"), $"embedding")
-      val full = corpus.unionByName(twins)
-      val queries = corpus.filter($"vec_id" < 10)
-        .select(($"vec_id" + 10000L).as("vec_id"), $"embedding")
-      // gate hygiene: the ledger survives re-runs — reset so the PRE
-      // pass always sees a clean slate
-      sources.Generations.clearLedger(s, "q157_idx_tombstones")
-      operators.Similarity.writeLshIndexBucketed(
-        operators.Similarity.buildLsh(full, "vec_id", "embedding",
-          planes = 10), "q157_idx", numBuckets = 2)
-      def top1(tag: String): DataFrame = localCopy(
-        operators.Similarity.searchLshLive(s, "q157_idx", queries,
-            "vec_id", "embedding", k = 1)
-          .filter($"rank" === 1)
-          .select($"query_id", $"neighbor_id".as(tag)))
-      val pre = top1("pre_top1")
-      operators.Similarity.tombstoneLsh(s, "q157_idx",
-        emb.filter($"vec_id" < 10).select($"vec_id"), "vec_id")
-      val live = top1("live_top1")
-      operators.Similarity.purgeLshIndex(s, "q157_idx", numBuckets = 2)
-      val post = top1("post_top1")
-      pre.join(live, Seq("query_id")).join(post, Seq("query_id"))
-        .select($"query_id", $"pre_top1", $"live_top1", $"post_top1")
-        .orderBy($"query_id")
-    }),
-
-    // INCREMENTAL corpus datasheet — release statistics maintained
-    // O(batch), never O(corpus): each ingest folds one mergeable
-    // partial row per language into the stats table through the q146
-    // batch-keyed dynamic-overwrite sink, and the datasheet folds the
-    // partials without rescanning anything. The gate appends the
-    // corpus in TWO batches AND crash-redelivers the second batch
-    // verbatim — an append-mode stats sink would double-count every
-    // odd doc; the idempotent partition rewrite must leave the fold
-    // equal to the direct one-pass truth. The HLL distinct-texts
-    // estimate is excluded here (estimate by construction;
-    // tolerance-pinned in the spec) — every gated metric is an
-    // integer fold of integer partials, replayed exactly in SQL.
-    "q163_incremental_datasheet" -> ((s, d) => {
-      val docs = t(s, d, "documents").select($"doc_id", $"text")
-        .withColumn("lang",
-          when($"doc_id" % 3 === 0, "en")
-            .when($"doc_id" % 3 === 1, "pt"))
-      val dir = java.nio.file.Files.createTempDirectory("q163_stats")
-      dir.toFile.deleteOnExit()
-      val path = s"$dir/stats"
-      operators.TextAnalysis.appendCorpusStats(s, path,
-        docs.filter($"doc_id" % 2 === 0), "text", Some("lang"),
-        "batch_a")
-      operators.TextAnalysis.appendCorpusStats(s, path,
-        docs.filter($"doc_id" % 2 === 1), "text", Some("lang"),
-        "batch_b")
-      // crash-redelivery: the same ingest re-runs with the same key —
-      // the stats must not move
-      operators.TextAnalysis.appendCorpusStats(s, path,
-        docs.filter($"doc_id" % 2 === 1), "text", Some("lang"),
-        "batch_b")
-      operators.TextAnalysis.corpusDatasheetFromStats(s, path)
-        .filter($"metric" =!= "distinct_texts_est")
-        .orderBy($"metric")
-    }),
-
-    // Durable O(new) APPEND for the LSH family — the last cell of the
-    // durable append matrix (IVF q116's sibling): the batch hashes
-    // with the FROZEN hyperplanes and appends into the live bucket
-    // layout; the corpus side never rewrites, and (unlike the IVF
-    // families) no drift can accumulate — an appended batch buckets
-    // exactly as a full rebuild would. EXACT twins make both worlds
-    // value-pinned: the queries' only cosine-1.0 neighbors in the
-    // BUILT corpus are planted +30000 twins (pre top1), and the
-    // appended batch holds the ORIGINALS, whose smaller ids win the
-    // tie after the append (post top1) — the flip proves the appended
-    // rows serve through the reopened index. Oracle: brute-force
-    // argmax in both worlds.
-    "q162_lsh_append" -> ((s, d) => {
-      val emb = t(s, d, "embeddings")
-      val corpus = emb.select($"vec_id",
-        expr("transform(embedding, x -> CAST(x AS DOUBLE))")
-          .as("embedding"))
-      val twins = corpus.filter($"vec_id" < 10)
-        .select(($"vec_id" + 30000L).as("vec_id"), $"embedding")
-      val base = corpus.filter($"vec_id" >= 10).unionByName(twins)
-      val batch = corpus.filter($"vec_id" < 10)
-      val queries = corpus.filter($"vec_id" < 10)
-        .select(($"vec_id" + 10000L).as("vec_id"), $"embedding")
-      sources.Generations.clearLedger(s, "q162_idx_tombstones")
-      operators.Similarity.writeLshIndexBucketed(
-        operators.Similarity.buildLsh(base, "vec_id", "embedding",
-          planes = 10), "q162_idx", numBuckets = 2)
-      def top1(tag: String): DataFrame = localCopy(
-        operators.Similarity.searchLshLive(s, "q162_idx", queries,
-            "vec_id", "embedding", k = 1)
-          .filter($"rank" === 1)
-          .select($"query_id", $"neighbor_id".as(tag)))
-      val pre = top1("pre_top1")
-      operators.Similarity.appendToLshIndexBucketed(s, "q162_idx",
-        batch, "vec_id", "embedding")
-      val post = top1("post_top1")
-      pre.join(post, Seq("query_id"))
-        .select($"query_id", $"pre_top1", $"post_top1")
-        .orderBy($"query_id")
-    }),
-
-    // The FOUR-tier streaming admission cascade — the q147/q156
-    // three-tier front door grown the FUZZY rung the one-pass shape
-    // cannot express (within-batch near-dup components are
-    // relational): exact → quality → fuzzy (the q56
-    // incrementalDropNearDups contract vs the LIVE rooted n-gram
-    // index, per micro-batch) → semantic (searchIvfLive vs the
-    // durable bucketed IVF — the q152 unbounded tier), first-reject
-    // precedence, batch_id-partitioned exactly-once output. Planted
-    // strata: verbatim re-crawls (exact), tail-token paraphrases that
-    // EVADE exact and sit above Jaccard 0.5 (fuzzy — the hole the
-    // three-tier cascade left), REVERSED-token copies whose bag-of-
-    // words embedding is bit-identical to their source but whose
-    // 4-gram Jaccard is ~0 (semantic — they sail through fuzzy),
-    // novel docs (admit) and degenerate texts (quality). Takedowns
-    // file against EVERY durable face at once (n-gram ledger + IVF
-    // ledger + the exact view) and the very next stream pass must
-    // flip exactly the removed sources' arrivals. One micro-batch by
-    // construction (the fuzzy tier's decisions depend on batch
-    // composition, so the gate pins the single-batch replay). The
-    // oracle replays all four tiers in SQL: the q129 shingle/closure
-    // contract, the q156 md5 hashEmbed cosine, and the precedence
-    // fold — each in TWO decision worlds.
-    "q158_cascade_fuzzy_stream" -> ((s, d) => {
-      // bounded fixture (doc_id < 150, thinned from 300 in r16: the
-      // catalog's most expensive row at 21 s was pure fixture width):
-      // the cascade wiring, precedence and takedown flips under test
-      // are scale-free, and the gate runs the q56 contract TWICE plus
-      // two IVF searches per pass — q56/q129 keep pinning the
-      // contract itself at full width
-      val docs = t(s, d, "documents").select($"doc_id", $"text")
-        .filter(length(trim($"text")) > 0 && $"doc_id" < 150)
-      val accepted = docs.filter($"doc_id" % 2 === 0)
-      sources.Generations.clearLedger(s, "q158_ng_tombstones")
-      sources.Generations.clearLedger(s, "q158_idx_tombstones")
-      val emb = operators.TextAnalysis.hashEmbed(accepted, "text",
-          dim = 64)
-        .select($"doc_id", $"embedding")
-      // nCells=2 + nProbe=2 → the probe is exhaustive, so the served
-      // semantic argmax equals the oracle's brute force (the q156
-      // discipline). The two faces are independent — build
-      // concurrently (guide §2.6)
-      sources.Sinks.inParallel(
-        () => operators.Dedup.writeNgramIndexRooted(s, "q158_ng",
-          operators.Dedup.buildNgramIndex(accepted, "doc_id", "text",
-            n = 4), numBuckets = 4),
-        () => operators.Similarity.writeIvfIndexBucketed(
-          operators.Similarity.buildIvf(emb, "doc_id", "embedding",
-            nCells = 2, lloydIters = 1), "q158_idx", numBuckets = 2))
-      def acceptedTextsOf(acc: DataFrame): DataFrame =
-        acc.groupBy($"text").agg(min($"doc_id").as("exact_id"))
-      val arrivals = textCascadeArrivals(accepted, docs)
-      val dir = java.nio.file.Files.createTempDirectory("q158_stream")
-      dir.toFile.deleteOnExit()
-      arrivals.repartition(1).write.parquet(s"$dir/in")
-      val sch = s.read.parquet(s"$dir/in").schema
-      def run(tag: String, accTexts: DataFrame): DataFrame = {
-        val at = accTexts
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        at.count()
-        val stream = s.readStream.schema(sch).parquet(s"$dir/in")
-        streaming.StreamingParse.admissionCascadeBatchedStream(stream,
-          "doc_id", "text", at, minLen = 20, maxNonAlphaRatio = 0.3,
-          ngramPrefix = "q158_ng", n = 4, threshold = 0.5,
-          maxBucket = 50, annPrefix = "q158_idx", tau = 0.92,
-          dim = 64, nProbe = 2, outPath = s"$dir/out_$tag")
-        val res = localCopy(s.read.parquet(s"$dir/out_$tag")
-          .select($"doc_id",
-            col("cascade_admitted").as(s"admitted_$tag"),
-            col("reason").as(s"reason_$tag")))
-        at.unpersist()
-        res
-      }
-      val pre = run("pre", acceptedTextsOf(accepted))
-      val isTomb = $"doc_id" % 40 === 0 || $"doc_id" % 40 === 4 ||
-        $"doc_id" % 40 === 8
-      val tomb = accepted.filter(isTomb).select($"doc_id")
-      sources.Sinks.inParallel(
-        () => operators.Dedup.tombstoneNgramIndex(s, "q158_ng", tomb),
-        () => operators.Similarity.tombstoneIvf(s, "q158_idx", tomb,
-          "doc_id"))
-      val live = run("live", acceptedTextsOf(accepted.filter(!isTomb)))
-      pre.join(live, Seq("doc_id"))
-        .select($"doc_id", $"admitted_pre", $"reason_pre",
-          $"admitted_live", $"reason_live")
-        .orderBy($"doc_id")
-    }),
-
-    // The composed MEDIA admission cascade — q147's multimodal twin,
-    // in ONE stateless stream pass: dead_letter (decodeStatus) →
-    // perceptual (dHash Hamming bands, recall-exact by pigeonhole) →
-    // semantic (imageEmbed cosine vs the IVF members), first-reject
-    // precedence, per-tier pointers, ONE decode feeding both signal
-    // tiers. The two reference sets deliberately DIFFER — the
-    // perceptual window holds refs 1–6, the vector corpus refs 1–10 —
-    // so exact copies of refs 7–9 sail through the Hamming tier and
-    // land `semantic` at cosine 1.0 (the stratum only the vector tier
-    // can catch), while BMP re-encodes and brightness shifts of refs
-    // 1–3 land `perceptual` at hamming 0 (what no byte hash sees),
-    // corrupt payloads land `dead_letter` WITH their forensic reason
-    // (they carry null signatures/vectors, so the signal tiers could
-    // never have rejected them), and novel images admit. nCells=2 +
-    // nProbe=2 keeps the probe exhaustive so the oracle's brute force
-    // replays the served argmax exactly (both pixel formulas, the
-    // 9×8 gradient grid, the 8×8 embed lattice, the min/argmax folds
-    // and the precedence, all in SQL).
-    "q159_media_cascade_stream" -> ((s, d) => {
-      val refPrep = mediaPrep(s.createDataFrame((1L to 10L).map(i =>
-          (i, refImage(i, 0, "png")))).toDF("media_id", "payload"))
-      val hamMembers = operators.Dedup.hammingBandMembers(
-        refPrep.filter($"media_id" <= 6).select($"media_id", $"dhash"),
-        "media_id", "dhash", maxHamming = 6)
-      hamMembers.persist(org.apache.spark.storage.StorageLevel
-        .MEMORY_AND_DISK).count()
-      val index = operators.Similarity.buildIvf(
-        refPrep.select($"media_id", $"img_embedding"), "media_id",
-        "img_embedding", nCells = 2, lloydIters = 1)
-      val members = operators.Similarity.cellMembers(index)
-      members.persist(org.apache.spark.storage.StorageLevel
-        .MEMORY_AND_DISK).count()
-      val dir = java.nio.file.Files.createTempDirectory("q159_stream")
-      dir.toFile.deleteOnExit()
-      s.createDataFrame(mediaCascadeArrivals).toDF("media_id", "payload")
-        .repartition(4).write.parquet(s"$dir/in")
-      val sch = s.read.parquet(s"$dir/in").schema
-      val stream = s.readStream.schema(sch)
-        .option("maxFilesPerTrigger", 1).parquet(s"$dir/in")
-      val out = streaming.StreamingParse.mediaAdmissionCascadeStream(
-        mediaPrep(stream), "media_id", "decode_status", "dhash", hamMembers,
-        maxHamming = 6, "img_embedding", index, members, tau = 0.9,
-        nProbe = 2)
-      val res = runStreamToTable(s, out, "append", "media_cascade")
-        .select($"media_id", $"cascade_admitted", $"reason",
-          $"perceptual_match_id", $"perceptual_hamming",
-          $"semantic_match_id")
-        .orderBy($"media_id")
-      hamMembers.unpersist(); members.unpersist()
-      res
-    }),
-
-    // ONE-CALL maintenance window for the FITTED-artifact families —
-    // the q139/q131/q141 cron matrix reaching the trigram LM: a model
-    // fitted once rots silently as the corpus moves (every unseen
-    // token scores through the OOV floor), and nothing in the serving
-    // path says so. The window probes the occurrence-weighted OOV
-    // rate of a held-out CURRENT sample vs the fitted unigram
-    // vocabulary, fires the refit over the live corpus when it
-    // exceeds the bar, swaps generations atomically (rooted A/B, the
-    // index-family discipline) and re-probes. The fixture drifts the
-    // odd docs hard (vowels→digits — most tokens leave the fitted
-    // vocabulary), so call 1 fires and the refit recovers OOV to
-    // ZERO (the sample is a subset of the refit corpus — exact by
-    // construction); call 2 is the quiet no-op. The oracle replays
-    // the token set algebra, the fire threshold and both calls'
-    // mechanics — integer counts only, no derived-double rounding.
-    "q160_lm_maintain" -> ((s, d) => {
-      // doc_id < 1000 bound: a no-op at the sf0.01 gate scale (500
-      // docs), caps the two corpus fits at bench SF
-      val docs = t(s, d, "documents").select($"doc_id", $"text")
-        .filter(length(trim($"text")) > 0 && $"doc_id" < 1000)
-      val evens = docs.filter($"doc_id" % 2 === 0)
-      val drifted = docs.filter($"doc_id" % 2 === 1)
-        .select($"doc_id",
-          translate(lower($"text"), "aeiou", "01234").as("text"))
-      operators.TextAnalysis.writeTrigramLmRooted(s, "q160_lm",
-        operators.TextAnalysis.fitTrigramLm(evens, "text"))
-      val refit = evens.unionByName(drifted)
-      def call(i: Int): DataFrame =
-        operators.TextAnalysis.maintainTrigramLm(s, "q160_lm",
-            drifted, "text", refit, maxOovRate = 0.2)
-          .withColumn("step", lit(i.toLong))
-      call(1).unionByName(call(2))
-        .select($"step", $"n_sample_tokens", $"pre_oov_tokens",
-          $"refit_fired", $"post_oov_tokens", $"epoch_changed")
-        .orderBy($"step")
-    }),
-
-    // The tokenizer face of q160 — maintainBpeVocab closes the
-    // fitted-artifact maintenance matrix: an aging BPE vocabulary
-    // fragments new-domain words through the chars+1 fallback
-    // (silent token-budget inflation), and the window's probe is the
-    // occurrence-weighted OOV-WORD rate vs the fitted word-pieces
-    // table — piece inflation's root cause, O(sample) to measure.
-    // Same two-call shape: drifted odds fire the refit (fitBatched
-    // over the live corpus, rooted A/B dir+table swap via the
-    // meta-last pointer), OOV recovers to zero, the second call is a
-    // quiet no-op with the generation pointer untouched. Oracle:
-    // word-occurrence set algebra in both worlds plus the fire
-    // threshold — no merge replay needed, because OOV is about word
-    // IDENTITY, not segmentation (the segmentation itself is
-    // value-pinned by q110/q112).
-    "q161_bpe_maintain" -> ((s, d) => {
-      // doc_id < 1000 bound: a no-op at the sf0.01 gate scale, caps
-      // the two tokenizer fits at bench SF
-      val docs = t(s, d, "documents").select($"doc_id", $"text")
-        .filter(length(trim($"text")) > 0 && $"doc_id" < 1000)
-      val evens = docs.filter($"doc_id" % 2 === 0)
-      val drifted = docs.filter($"doc_id" % 2 === 1)
-        .select($"doc_id",
-          translate(lower($"text"), "aeiou", "01234").as("text"))
-      val dir = java.nio.file.Files.createTempDirectory("q161_bpe")
-      dir.toFile.deleteOnExit()
-      operators.Bpe.writeBpeVocabRooted(s, "q161_bpe", dir.toString,
-        operators.Bpe.fitBatched(evens, "text", numMerges = 8),
-        numBuckets = 4)
-      val refit = evens.unionByName(drifted)
-      def call(i: Int): DataFrame =
-        operators.Bpe.maintainBpeVocab(s, "q161_bpe", dir.toString,
-            drifted, "text", refit, maxOovRate = 0.2, numMerges = 8,
-            numBuckets = 4)
-          .withColumn("step", lit(i.toLong))
-      call(1).unionByName(call(2))
-        .select($"step", $"n_sample_words", $"pre_oov_words",
-          $"refit_fired", $"post_oov_words", $"gen_changed")
-        .orderBy($"step")
-    }),
-
-    // The DISCRIMINATIVE face of q160 — maintainQualityLr closes the
-    // third of the four rotting fitted-artifact families (LM q160,
-    // BPE q161, LR here, DSIR q165): a quality classifier fitted once
-    // goes blind as the corpus moves, because a fresh-domain feature
-    // hashes to a bucket the fit never touched and contributes weight
-    // EXACTLY 0 to every score — silent, and invisible in the score
-    // distribution precisely because the blind features don't move
-    // it. The window's probe is the occurrence-weighted blind-bucket
-    // rate of a current sample against the persisted fit-time feature
-    // coverage — feature IDENTITY, not weight arithmetic (that stays
-    // pinned by q84/q90), so the oracle replays the whole two-call
-    // decision chain as md5-bucket set algebra, the exact q160 move.
-    // Step 1: drifted odds (vowel→digit translation = a new feature
-    // space) fire the refit, rooted A/B swap, blind recovers to 0.
-    // Step 2: quiet no-op, meta untouched.
-    "q164_lr_maintain" -> ((s, d) => {
-      // doc_id < 1000 bound: a no-op at the sf0.01 gate scale, caps
-      // the two classifier fits at bench SF
-      val docs = t(s, d, "documents").select($"doc_id", $"text")
-        .filter(length(trim($"text")) > 0 && $"doc_id" < 1000)
-      val evens = docs.filter($"doc_id" % 2 === 0)
-        .select($"doc_id", $"text",
-          ($"doc_id" % 4 === 0).cast("int").as("y"))
-      val drifted = docs.filter($"doc_id" % 2 === 1)
-        .select($"doc_id",
-          translate(lower($"text"), "aeiou", "01234").as("text"))
-      // iters=1 / plain-sum folds: the window's DECISION never reads
-      // a weight value, so the gate takes the cheap fit path — the
-      // fit arithmetic itself is q84/q90's contract, not this one's
-      operators.Curation.writeQualityLrRooted(s, "q164_lr",
-        operators.Curation.fitQualityLr(evens, "doc_id", "text", "y",
-          buckets = 1 << 16, iters = 1, stepSize = 0.5,
-          hashFn = operators.Dedup.md5Hash60, exactFold = false),
-        evens, "text", operators.Dedup.md5Hash60)
-      val refit = evens.unionByName(drifted
-        .select($"doc_id", $"text",
-          ($"doc_id" % 4 === 0).cast("int").as("y")))
-      def call(i: Int): DataFrame =
-        operators.Curation.maintainQualityLr(s, "q164_lr", drifted,
-            "text", refit, "doc_id", "y", maxBlindRate = 0.2,
-            iters = 1, stepSize = 0.5,
-            hashFn = operators.Dedup.md5Hash60, exactFold = false)
-          .withColumn("step", lit(i.toLong))
-      call(1).unionByName(call(2))
-        .select($"step", $"n_sample_feats", $"pre_blind_feats",
-          $"refit_fired", $"post_blind_feats", $"epoch_changed")
-        .orderBy($"step")
-    }),
-
-    // The GENERATIVE twin of q164 — maintainDsirRatios closes the
-    // LAST rotting fitted-artifact family: a DSIR ratio table fitted
-    // once importance-weights any post-drift arrival by the
-    // uninformative smoothing default (its features hit buckets
-    // neither the fit-time source nor target ever touched), so
-    // resampling quietly degrades to noise. Same blind-bucket probe,
-    // same two-call contract; the refit re-fits source ∪ drifted
-    // against the UNCHANGED target (the judge's "importance-weight
-    // staleness" signal measured directly). Ratio arithmetic stays
-    // pinned by q64/q67.
-    "q165_dsir_maintain" -> ((s, d) => {
-      // doc_id < 1000 bound: a no-op at the sf0.01 gate scale, caps
-      // the two ratio fits at bench SF
-      val docs = t(s, d, "documents").select($"doc_id", $"text")
-        .filter(length(trim($"text")) > 0 && $"doc_id" < 1000)
-      val evens = docs.filter($"doc_id" % 2 === 0)
-      val target = evens.filter($"doc_id" % 8 === 0)
-        .select($"doc_id", concat($"text", lit(" zz qq zz qq")).as("text"))
-      val drifted = docs.filter($"doc_id" % 2 === 1)
-        .select($"doc_id",
-          translate(lower($"text"), "aeiou", "01234").as("text"))
-      operators.Curation.writeDsirRooted(s, "q165_dsir",
-        operators.Curation.fitDsir(evens, target, "text",
-          buckets = 1 << 16, smoothing = 1.0,
-          hashFn = operators.Dedup.md5Hash60),
-        evens, target, "text", operators.Dedup.md5Hash60)
-      val refitSource = evens.unionByName(drifted)
-      def call(i: Int): DataFrame =
-        operators.Curation.maintainDsirRatios(s, "q165_dsir", drifted,
-            "text", refitSource, target, maxBlindRate = 0.2,
-            smoothing = 1.0, hashFn = operators.Dedup.md5Hash60)
-          .withColumn("step", lit(i.toLong))
-      call(1).unionByName(call(2))
-        .select($"step", $"n_sample_feats", $"pre_blind_feats",
-          $"refit_fired", $"post_blind_feats", $"epoch_changed")
-        .orderBy($"step")
-    }),
-
-    // q158's decision contract with the exact tier moved onto the
-    // DURABLE rooted exact index (applyCascadeBatchDurable): at
-    // unbounded-corpus scale the accepted set is neither
-    // broadcastable nor cheap to re-join on a raw-text key per batch
-    // — here it Bloom-prefilters as a pure projection and only the
-    // positives pay the bucketed verify join, and the exact tier
-    // becomes takedown-aware IN-FLIGHT like tiers 3/4 (the
-    // `_tombstones` ledger applies at the next micro-batch, no
-    // restart). Same planted strata, same thresholds, same oracle
-    // body as q158 — swapping the exact tier's face must move NO
-    // other tier's decision; the one deliberate delta is live-view
-    // semantics (content-keyed takedown: the q166 oracle's accx_live
-    // drops a text even when a surviving accepted doc holds an
-    // identical copy). PlanSpec pins that the accepted side never
-    // broadcasts or re-shuffles.
-    "q166_cascade_exact_durable" -> ((s, d) => {
-      // doc_id < 150: the q158 bound (shared oracle body)
-      val docs = t(s, d, "documents").select($"doc_id", $"text")
-        .filter(length(trim($"text")) > 0 && $"doc_id" < 150)
-      val accepted = docs.filter($"doc_id" % 2 === 0)
-      sources.Generations.clearLedger(s, "q166_xidx_tombstones")
-      sources.Generations.clearLedger(s, "q166_ng_tombstones")
-      sources.Generations.clearLedger(s, "q166_idx_tombstones")
-      val idxRoot = java.nio.file.Files.createTempDirectory("q166_xidx")
-      idxRoot.toFile.deleteOnExit()
-      val emb = operators.TextAnalysis.hashEmbed(accepted, "text",
-          dim = 64)
-        .select($"doc_id", $"embedding")
-      // gate-sized sketch geometry (150 accepted texts): the probe
-      // path (plan-literal CASE vs broadcast) is tier-parity-spec'd.
-      // The three durable faces are independent — build them
-      // concurrently (guide §2.6); each keeps its own data→epoch→meta
-      // commit order internally
-      sources.Sinks.inParallel(
-        () => operators.Dedup.writeExactIndexRooted(s, "q166_xidx",
-          idxRoot.toString,
-          operators.Dedup.buildExactIndex(accepted, "text",
-            expectedItems = 4096, numBits = 1L << 15),
-          numBuckets = 4),
-        () => operators.Dedup.writeNgramIndexRooted(s, "q166_ng",
-          operators.Dedup.buildNgramIndex(accepted, "doc_id", "text",
-            n = 4), numBuckets = 4),
-        () => operators.Similarity.writeIvfIndexBucketed(
-          operators.Similarity.buildIvf(emb, "doc_id", "embedding",
-            nCells = 2, lloydIters = 1), "q166_idx", numBuckets = 2))
-      val arrivals = textCascadeArrivals(accepted, docs)
-      val dir = java.nio.file.Files.createTempDirectory("q166_stream")
-      dir.toFile.deleteOnExit()
-      arrivals.repartition(1).write.parquet(s"$dir/in")
-      val sch = s.read.parquet(s"$dir/in").schema
-      def run(tag: String): DataFrame = {
-        val stream = s.readStream.schema(sch).parquet(s"$dir/in")
-        streaming.StreamingParse.admissionCascadeBatchedStreamDurable(
-          stream, "doc_id", "text", exactPrefix = "q166_xidx",
-          minLen = 20, maxNonAlphaRatio = 0.3,
-          ngramPrefix = "q166_ng", n = 4, threshold = 0.5,
-          maxBucket = 50, annPrefix = "q166_idx", tau = 0.92,
-          dim = 64, nProbe = 2, outPath = s"$dir/out_$tag")
-        localCopy(s.read.parquet(s"$dir/out_$tag")
-          .select($"doc_id",
-            col("cascade_admitted").as(s"admitted_$tag"),
-            col("reason").as(s"reason_$tag")))
-      }
-      val pre = run("pre")
-      val isTomb = $"doc_id" % 40 === 0 || $"doc_id" % 40 === 4 ||
-        $"doc_id" % 40 === 8
-      val tomb = accepted.filter(isTomb)
-      // takedowns file against every durable face at once: the exact
-      // ledger keys on CONTENT (the texts), the gram/vector ledgers
-      // on the doc ids. The three ledgers are independent — file
-      // concurrently (guide §2.6)
-      sources.Sinks.inParallel(
-        () => operators.Dedup.tombstoneExactIndex(s, "q166_xidx", tomb,
-          "text"),
-        () => operators.Dedup.tombstoneNgramIndex(s, "q166_ng",
-          tomb.select($"doc_id")),
-        () => operators.Similarity.tombstoneIvf(s, "q166_idx",
-          tomb.select($"doc_id"), "doc_id"))
-      val live = run("live")
-      pre.join(live, Seq("doc_id"))
-        .select($"doc_id", $"admitted_pre", $"reason_pre",
-          $"admitted_live", $"reason_live")
-        .orderBy($"doc_id")
-    }),
-
-    // q159's media cascade grown the q158 treatment — the foreachBatch
-    // twin over DURABLE takedown-aware faces (applyMediaCascadeBatch):
-    // the one-pass shape captures its reference sets at plan time,
-    // so a takedown needs a restart; here the perceptual tier reopens
-    // the rooted members table (+ its tombstone ledger) and the
-    // semantic tier the bucketed IVF (+ its ledger) per micro-batch.
-    // Two decision worlds: ref 2 (in BOTH faces) and ref 8 (vector
-    // corpus only) are taken down between the passes, and the very
-    // next pass must flip exactly their dependents — the bmp
-    // re-encode and brightness shift of ref 2 lose their perceptual
-    // match, ref 8's verbatim copy loses its cosine-1.0 source — with
-    // every surviving decision byte-identical. The oracle replays
-    // both worlds' full pixel math (the 9×8 gradient dHash, the 8×8
-    // embed lattice, argmin/argmax tie-breaks, precedence) in SQL.
-    "q167_media_cascade_batched" -> ((s, d) => {
-      val refPrep = mediaPrep(s.createDataFrame((1L to 10L).map(i =>
-          (i, refImage(i, 0, "png")))).toDF("media_id", "payload"))
-      sources.Generations.clearLedger(s, "q167_ham_tombstones")
-      sources.Generations.clearLedger(s, "q167_ivf_tombstones")
-      // independent faces: build concurrently (guide §2.6)
-      sources.Sinks.inParallel(
-        () => operators.Dedup.writeHammingMembers(s,
-          operators.Dedup.hammingBandMembers(
-            refPrep.filter($"media_id" <= 6)
-              .select($"media_id", $"dhash"),
-            "media_id", "dhash", maxHamming = 6), "q167_ham"),
-        () => operators.Similarity.writeIvfIndexBucketed(
-          operators.Similarity.buildIvf(
-            refPrep.select($"media_id", $"img_embedding"), "media_id",
-            "img_embedding", nCells = 2, lloydIters = 1), "q167_ivf",
-          numBuckets = 2))
-      val dir = java.nio.file.Files.createTempDirectory("q167_stream")
-      dir.toFile.deleteOnExit()
-      s.createDataFrame(mediaCascadeArrivals).toDF("media_id", "payload")
-        .repartition(1).write.parquet(s"$dir/in")
-      val sch = s.read.parquet(s"$dir/in").schema
-      def run(tag: String): DataFrame = {
-        val stream = s.readStream.schema(sch).parquet(s"$dir/in")
-        streaming.StreamingParse.mediaAdmissionCascadeBatchedStream(
-          mediaPrep(stream), "media_id", "decode_status", "dhash",
-          membersTable = "q167_ham", maxHamming = 6,
-          vecCol = "img_embedding", annPrefix = "q167_ivf", tau = 0.9,
-          nProbe = 2, outPath = s"$dir/out_$tag")
-        mediaDecisions(s.read.parquet(s"$dir/out_$tag"), tag)
-      }
-      val pre = run("pre")
-      val tomb = s.createDataFrame(Seq(Tuple1(2L), Tuple1(8L)))
-        .toDF("media_id")
-      sources.Sinks.inParallel(
-        () => operators.Dedup.tombstoneHammingMembers(s, "q167_ham", tomb),
-        () => operators.Similarity.tombstoneIvf(s, "q167_ivf", tomb,
-          "media_id"))
-      val live = run("live")
-      pre.join(live, Seq("media_id"))
-        .select($"media_id", $"admitted_pre", $"reason_pre",
-          $"pmid_pre", $"pham_pre", $"smid_pre",
-          $"admitted_live", $"reason_live",
-          $"pmid_live", $"pham_live", $"smid_live")
-        .orderBy($"media_id")
-    }),
-
-    // q167's decision contract with the perceptual tier on the
-    // RELATIONAL banded-signature index (applyMediaCascadeBatchUnbounded)
-    // — the UNBOUNDED perceptual-corpus path: the broadcast members
-    // table is the bounded-window tier (arrays, capped buckets,
-    // fails open on floods); here the accepted corpus lives as
-    // (band, bh, member) rows bucketed on exactly the probe keys, the
-    // per-batch probe is one equi-join whose index side reads its
-    // bucket layout unshuffled (PlanSpec-pinned), recall stays
-    // pigeonhole-exact with NO fail-open cap, and the banding
-    // threshold rides the index meta. Same fixture, same thresholds,
-    // SAME oracle as q167 — swapping the perceptual face must move no
-    // decision; takedowns file against the band ledger instead of the
-    // members ledger and flip the same three dependents.
-    "q168_media_cascade_unbounded" -> ((s, d) => {
-      val refPrep = mediaPrep(s.createDataFrame((1L to 10L).map(i =>
-          (i, refImage(i, 0, "png")))).toDF("media_id", "payload"))
-      sources.Generations.clearLedger(s, "q168_band_tombstones")
-      sources.Generations.clearLedger(s, "q168_ivf_tombstones")
-      // independent faces: build concurrently (guide §2.6)
-      sources.Sinks.inParallel(
-        () => operators.Dedup.writeHammingBandIndexRooted(s, "q168_band",
-          refPrep.filter($"media_id" <= 6).select($"media_id", $"dhash"),
-          "media_id", "dhash", maxHamming = 6, numBuckets = 4),
-        () => operators.Similarity.writeIvfIndexBucketed(
-          operators.Similarity.buildIvf(
-            refPrep.select($"media_id", $"img_embedding"), "media_id",
-            "img_embedding", nCells = 2, lloydIters = 1), "q168_ivf",
-          numBuckets = 2))
-      val dir = java.nio.file.Files.createTempDirectory("q168_stream")
-      dir.toFile.deleteOnExit()
-      s.createDataFrame(mediaCascadeArrivals).toDF("media_id", "payload")
-        .repartition(1).write.parquet(s"$dir/in")
-      val sch = s.read.parquet(s"$dir/in").schema
-      def run(tag: String): DataFrame = {
-        val stream = s.readStream.schema(sch).parquet(s"$dir/in")
-        streaming.StreamingParse
-          .mediaAdmissionCascadeBatchedStreamUnbounded(
-            mediaPrep(stream), "media_id", "decode_status", "dhash",
-            bandPrefix = "q168_band", vecCol = "img_embedding",
-            annPrefix = "q168_ivf", tau = 0.9, nProbe = 2,
-            outPath = s"$dir/out_$tag")
-        mediaDecisions(s.read.parquet(s"$dir/out_$tag"), tag)
-      }
-      val pre = run("pre")
-      val tomb = s.createDataFrame(Seq(Tuple1(2L), Tuple1(8L)))
-        .toDF("media_id")
-      sources.Sinks.inParallel(
-        () => operators.Dedup.tombstoneHammingBandIndex(s, "q168_band",
-          tomb),
-        () => operators.Similarity.tombstoneIvf(s, "q168_ivf", tomb,
-          "media_id"))
-      val live = run("live")
-      pre.join(live, Seq("media_id"))
-        .select($"media_id", $"admitted_pre", $"reason_pre",
-          $"pmid_pre", $"pham_pre", $"smid_pre",
-          $"admitted_live", $"reason_live",
-          $"pmid_live", $"pham_live", $"smid_live")
-        .orderBy($"media_id")
-    }),
-
-    // The durable winnowing-index lifecycle in THREE decision worlds:
-    // world 1 screens the corpus against suite A (the q89 benchmark
-    // fixture — 12-word interior slices of every 13th doc), world 2
-    // after an O(new) APPEND of suite B (different slice offset,
-    // every 11th doc, disjoint bench_id space — the "new eval suite
-    // lands" event), world 3 after RETIRING half of suite A through
-    // the tombstone ledger (bench_id % 26 = 0 — the "deprecated
-    // suite" event). The oracle replays all three worlds as pure
-    // fingerprint SET ALGEBRA (the q89 winnowing CTE machinery per
-    // corpus, three LEFT joins against the three live fingerprint
-    // sets) — a wrong append bucketing, a takedown that leaks
-    // fingerprints, or a live face that drops suite-B rows all move
-    // integer (n_fp, n_hits) counts. Purge/quiet-window/torn-crash
-    // mechanics are spec-pinned (TextMultimodalSpec), decisions here.
-    "q169_winnow_index_lifecycle" -> ((s, d) => {
-      val docs = t(s, d, "documents")
-      val benchA = benchSliceFixture(docs)
-      val benchB = benchSliceFixtureB(docs)
-      sources.Generations.clearLedger(s, "q169_widx_tombstones")
-      operators.TextAnalysis.writeWinnowIndexRooted(s, "q169_widx",
-        benchA, "doc_id", "text", k = 4, w = 4, hashName = "md5",
-        numBuckets = 4)
-      // each world MATERIALIZES before the next mutates the live
-      // generation (the append lands in the same physical table)
-      def probe(world: Long): DataFrame = localCopy {
-        val face = operators.TextAnalysis
-          .readWinnowIndexRootedLive(s, "q169_widx")
-        operators.TextAnalysis.containmentVsWinnowIndex(face, docs,
-            "doc_id", "text")
-          .select(lit(world).as("world"), $"doc_id", $"n_fp",
-            $"n_hits", round($"containment", 6).as("containment"))
-      }
-      val w1 = probe(1L)
-      operators.TextAnalysis.appendToWinnowIndexRooted(s, "q169_widx",
-        benchB, "doc_id", "text")
-      val w2 = probe(2L)
-      operators.TextAnalysis.tombstoneWinnowIndex(s, "q169_widx",
-        benchA.filter($"doc_id" % 26 === 0).select($"doc_id"))
-      val w3 = probe(3L)
-      w1.union(w2).union(w3).orderBy($"world", $"doc_id")
-    }),
-
-    // Streaming decontamination against the durable face, in two
-    // decision worlds split by a MID-STREAM suite append — the event
-    // the one-pass broadcast screen is structurally blind to (its
-    // benchmark side is captured at plan time; a suite landing
-    // mid-run screens nothing until restart). Pass 1 admits
-    // everything suite A misses; suite B lands via the O(new)
-    // append; pass 2 rejects the arrivals whose winnow fingerprints
-    // hit B — with NO restart and NO re-winnow of suite A (the face
-    // reopens per micro-batch). The exactly-once batch_id sink is
-    // the q152 discipline; the oracle replays both worlds' hit
-    // counts and the containment-threshold admission as set algebra.
-    "q170_decontam_stream" -> ((s, d) => {
-      val docs = t(s, d, "documents")
-      val arrivals = docs.filter($"doc_id" % 2 === 0)
-        .select($"doc_id", $"text")
-      val benchA = benchSliceFixture(docs)
-      val benchB = benchSliceFixtureB(docs)
-      sources.Generations.clearLedger(s, "q170_widx_tombstones")
-      operators.TextAnalysis.writeWinnowIndexRooted(s, "q170_widx",
-        benchA, "doc_id", "text", k = 4, w = 4, hashName = "md5",
-        numBuckets = 4)
-      val dir = java.nio.file.Files.createTempDirectory("q170_stream")
-      dir.toFile.deleteOnExit()
-      arrivals.repartition(1).write.parquet(s"$dir/in")
-      val sch = s.read.parquet(s"$dir/in").schema
-      def run(tag: String): DataFrame = {
-        val stream = s.readStream.schema(sch).parquet(s"$dir/in")
-        streaming.StreamingParse.decontamAdmissionBatchedStream(
-          stream, "doc_id", "text", prefix = "q170_widx",
-          maxContainment = 0.0, outPath = s"$dir/out_$tag")
-        localCopy(s.read.parquet(s"$dir/out_$tag")
-          .select($"doc_id", $"n_fp",
-            col("n_hits").as(s"n_hits_$tag"),
-            col("admitted").as(s"admitted_$tag")))
-      }
-      val pre = run("pre")
-      operators.TextAnalysis.appendToWinnowIndexRooted(s, "q170_widx",
-        benchB, "doc_id", "text")
-      val live = run("live")
-      pre.join(live.drop("n_fp"), Seq("doc_id"))
-        .select($"doc_id", $"n_fp", $"n_hits_pre", $"admitted_pre",
-          $"n_hits_live", $"admitted_live")
-        .orderBy($"doc_id")
-    }),
-
-    // The FIVE-tier durable cascade: q166's front door with the
-    // CONTAMINATION rung armed — every admission threat a 100 TB
-    // text ingest faces (exact dup, quality, benchmark contamination,
-    // fuzzy dup, semantic dup) now screens in ONE micro-batch pass
-    // against durable takedown-aware faces. The benchmark suite is
-    // 12-word interior slices of the odd strata docs (% 20 = 1) whose
-    // full texts also ARRIVE (+700000): those arrivals pass exact /
-    // quality / fuzzy / semantic and reject only at the new rung,
-    // with first-reject precedence placing 'contaminated' between
-    // quality and fuzzy (a contaminated doc is named, never laundered
-    // out as a dup). Two decision worlds split by RETIRING half the
-    // suite (bench_id % 40 = 21) through the winnow ledger — the
-    // retired slices' dependents flip to their un-contaminated fate
-    // at the very next pass with no restart, every other decision
-    // byte-identical (no other ledger is touched, isolating the
-    // rung). The oracle replays all five tiers in SQL: the q166
-    // set algebra plus the q89 winnowing chains for both worlds.
-    "q171_cascade_decontam" -> ((s, d) => {
-      val docs = t(s, d, "documents").select($"doc_id", $"text")
-        .filter(length(trim($"text")) > 0 && $"doc_id" < 150)
-      val accepted = docs.filter($"doc_id" % 2 === 0)
-      sources.Generations.clearLedger(s, "q171_xidx_tombstones")
-      sources.Generations.clearLedger(s, "q171_ng_tombstones")
-      sources.Generations.clearLedger(s, "q171_idx_tombstones")
-      sources.Generations.clearLedger(s, "q171_widx_tombstones")
-      val idxRoot = java.nio.file.Files.createTempDirectory("q171_xidx")
-      idxRoot.toFile.deleteOnExit()
-      val emb = operators.TextAnalysis.hashEmbed(accepted, "text",
-          dim = 64)
-        .select($"doc_id", $"embedding")
-      val bench = docs.filter($"doc_id" % 20 === 1)
-        .select($"doc_id",
-          concat_ws(" ", slice(split(trim($"text"), "\\s+"), 3, 12))
-            .as("text"))
-      // the four durable faces are independent of each other — build
-      // them concurrently (guide §2.6): each face's own write keeps
-      // its data→epoch→meta commit order internally
-      sources.Sinks.inParallel(
-        () => operators.Dedup.writeExactIndexRooted(s, "q171_xidx",
-          idxRoot.toString,
-          operators.Dedup.buildExactIndex(accepted, "text",
-            expectedItems = 4096, numBits = 1L << 15),
-          numBuckets = 4),
-        () => operators.Dedup.writeNgramIndexRooted(s, "q171_ng",
-          operators.Dedup.buildNgramIndex(accepted, "doc_id", "text",
-            n = 4), numBuckets = 4),
-        () => operators.Similarity.writeIvfIndexBucketed(
-          operators.Similarity.buildIvf(emb, "doc_id", "embedding",
-            nCells = 2, lloydIters = 1), "q171_idx", numBuckets = 2),
-        () => operators.TextAnalysis.writeWinnowIndexRooted(s, "q171_widx",
-          bench, "doc_id", "text", k = 4, w = 4, hashName = "md5",
-          numBuckets = 4))
-      val arrivals = textCascadeArrivals(accepted, docs)
-      val dir = java.nio.file.Files.createTempDirectory("q171_stream")
-      dir.toFile.deleteOnExit()
-      arrivals.repartition(1).write.parquet(s"$dir/in")
-      val sch = s.read.parquet(s"$dir/in").schema
-      def run(tag: String): DataFrame = {
-        val stream = s.readStream.schema(sch).parquet(s"$dir/in")
-        streaming.StreamingParse.admissionCascadeBatchedStreamDurable(
-          stream, "doc_id", "text", exactPrefix = "q171_xidx",
-          minLen = 20, maxNonAlphaRatio = 0.3,
-          ngramPrefix = "q171_ng", n = 4, threshold = 0.5,
-          maxBucket = 50, annPrefix = "q171_idx", tau = 0.92,
-          dim = 64, nProbe = 2, outPath = s"$dir/out_$tag",
-          decontam = Some(("q171_widx", 0.0)))
-        localCopy(s.read.parquet(s"$dir/out_$tag")
-          .select($"doc_id",
-            col("cascade_admitted").as(s"admitted_$tag"),
-            col("reason").as(s"reason_$tag")))
-      }
-      val pre = run("pre")
-      operators.TextAnalysis.tombstoneWinnowIndex(s, "q171_widx",
-        bench.filter($"doc_id" % 40 === 21).select($"doc_id"))
-      val live = run("live")
-      pre.join(live, Seq("doc_id"))
-        .select($"doc_id", $"admitted_pre", $"reason_pre",
-          $"admitted_live", $"reason_live")
-        .orderBy($"doc_id")
-    }),
-
-    // The AUDIO bytes→vector bridge (audioEmbed — the 64-window
-    // energy envelope as array<double>) through the batch vector
-    // tier, completing the cosine rung across ALL THREE modalities
-    // (text q130/q138, image q148/q149, audio here). The star
-    // property: gain-invariance comes out EXACT — a 2× gain scales
-    // every window energy by 4 uniformly and cosine is scale-free, so
-    // the gained copies reject at cosine exactly 1 alongside the
-    // container re-encodes (where the Hamming fingerprint q125 needed
-    // its gradient-sign trick for the same robustness). Novel clips
-    // sit in the positive-energy cosine floor under tau and admit;
-    // truncated/garbage payloads decode null and a too-short clip
-    // (fewer frames than windows) embeds null — all admit, never
-    // crash. The fixture keeps samples small (±63) so every window
-    // energy, dot and norm is integer-exact in doubles on BOTH
-    // engines — the oracle replays the PCM formula, the channel mix,
-    // the k·frames div 64 window spans, and the cosine argmax + tau.
-    "q150_audio_embed_neardup" -> ((s, d) => {
-      val WAVE = javax.sound.sampled.AudioFileFormat.Type.WAVE
-      val AIFF = javax.sound.sampled.AudioFileFormat.Type.AIFF
-      def chOf(i: Long): Int = if (i <= 4) 1 else 2
-      val whole = pcmClip(128L, 2L, 1, 200, 1, WAVE, bigEndian = false)
-      val refs = s.createDataFrame((1L to 8L).map(i =>
-          (i, pcmClip(128L, i, chOf(i), 200, 1, WAVE, bigEndian = false))))
-        .toDF("media_id", "payload")
-      val arrivals: Seq[(Long, Array[Byte])] =
-        (1L to 4L).map(i => (500L + i,
-          pcmClip(128L, i, chOf(i), 200, 1, AIFF, bigEndian = true))) ++
-        (5L to 8L).map(i => (510L + i,
-          pcmClip(128L, i, 2, 200, 2, WAVE, bigEndian = false))) ++
-        (1L to 3L).map(i => (520L + i,
-          pcmClip(128L, 20L + i, 1, 200, 1, WAVE, bigEndian = false))) ++
-        Seq((9001L, whole.take(whole.length - 3)),
-          (9002L, "not audio at all".getBytes("UTF-8")),
-          (9003L, pcmClip(128L, 1L, 1, 40, 1, WAVE, bigEndian = false)))
-      def embed(df: DataFrame): DataFrame =
-        operators.Multimodal.audioEmbed(
-          operators.Multimodal.decodeWav(df, "payload"),
-          "pcm", "au_channels")
-      val refEmb = embed(refs).select($"media_id", $"audio_embedding")
-      val arrEmb = embed(s.createDataFrame(arrivals)
-          .toDF("media_id", "payload"))
-        .select($"media_id", $"audio_embedding")
-      val top1 = operators.Similarity.bruteForceTopK(refEmb,
-          arrEmb.filter($"audio_embedding".isNotNull),
-          "media_id", "audio_embedding", k = 1)
-        .filter($"rank" === 1)
-      arrEmb.select($"media_id")
-        .join(top1.select($"query_id".as("media_id"), $"neighbor_id",
-          $"cosine"), Seq("media_id"), "left")
-        .select($"media_id",
-          coalesce($"cosine" < 0.95, lit(true)).as("admitted"),
-          when($"cosine" >= 0.95, $"neighbor_id").as("match_id"))
-        .orderBy($"media_id")
-    }),
-
-    // The AUDIO modality's semantic admission rung IN FLIGHT — with
-    // q138 (text) and q149 (image) this closes the streaming cosine
-    // matrix: every modality now has BOTH streaming rungs (Hamming:
-    // q126/q132/q136, cosine: q138/q149/here). Audio bytes arrive on
-    // the stream, decode and embed per row (decodeWav → audioEmbed,
-    // both pure codec-boundary ops), and admit/reject against an IVF
-    // of the embedded reference corpus. Same strata and SAME ORACLE
-    // as q150 — nProbe = nCells pins the streamed probe to the batch
-    // brute-force rule; corrupt, garbage and too-short clips embed
-    // null and ADMIT through the zero-probe path.
-    "q151_stream_audio_semantic" -> ((s, d) => {
-      val WAVE = javax.sound.sampled.AudioFileFormat.Type.WAVE
-      val AIFF = javax.sound.sampled.AudioFileFormat.Type.AIFF
-      def chOf(i: Long): Int = if (i <= 4) 1 else 2
-      def embed(df: DataFrame): DataFrame =
-        operators.Multimodal.audioEmbed(
-          operators.Multimodal.decodeWav(df, "payload"),
-          "pcm", "au_channels")
-      val refs = s.createDataFrame((1L to 8L).map(i =>
-          (i, pcmClip(128L, i, chOf(i), 200, 1, WAVE, bigEndian = false))))
-        .toDF("media_id", "payload")
-      val refEmb = embed(refs).select($"media_id", $"audio_embedding")
-      val index = operators.Similarity.buildIvf(refEmb, "media_id",
-        "audio_embedding", nCells = 2, lloydIters = 1)
-      val members = operators.Similarity.cellMembers(index)
-      members.persist(org.apache.spark.storage.StorageLevel
-        .MEMORY_AND_DISK).count()
-      val whole = pcmClip(128L, 2L, 1, 200, 1, WAVE, bigEndian = false)
-      val arrivals: Seq[(Long, Array[Byte])] =
-        (1L to 4L).map(i => (500L + i,
-          pcmClip(128L, i, chOf(i), 200, 1, AIFF, bigEndian = true))) ++
-        (5L to 8L).map(i => (510L + i,
-          pcmClip(128L, i, 2, 200, 2, WAVE, bigEndian = false))) ++
-        (1L to 3L).map(i => (520L + i,
-          pcmClip(128L, 20L + i, 1, 200, 1, WAVE, bigEndian = false))) ++
-        Seq((9001L, whole.take(whole.length - 3)),
-          (9002L, "not audio at all".getBytes("UTF-8")),
-          (9003L, pcmClip(128L, 1L, 1, 40, 1, WAVE, bigEndian = false)))
-      val dir = java.nio.file.Files.createTempDirectory("q151_stream")
-      dir.toFile.deleteOnExit()
-      s.createDataFrame(arrivals).toDF("media_id", "payload")
-        .repartition(4).write.parquet(s"$dir/in")
-      val sch = s.read.parquet(s"$dir/in").schema
-      val stream = s.readStream.schema(sch)
-        .option("maxFilesPerTrigger", 1).parquet(s"$dir/in")
-      val admitted = streaming.StreamingParse.annAdmissionStream(
-        embed(stream), "media_id", "audio_embedding", index, members,
-        tau = 0.95, nProbe = 2)
-      val out = runStreamToTable(s, admitted, "append", "audio_semantic")
-        .select($"media_id", $"admitted", $"match_id")
-        .orderBy($"media_id")
-      members.unpersist()
-      out
-    }),
-
-    // The TEXT modality's semantic admission rung made end-to-end —
-    // the composition a 100 TB text ingest runs IN FLIGHT: raw text
-    // arrives on the stream, feature-hashes to a fixed-dim vector
-    // (hashEmbed — the NATIVE projection, which is what makes the
-    // bytes→vector step stream-legal at all), and admits/rejects
-    // against an IVF of the hash-embedded accepted corpus through
-    // annAdmissionStream's broadcast probe joins. Near-copies of
-    // accepted docs (three appended tokens) must REJECT with their
-    // source as the match; novel docs admit; empty text embeds as
-    // the zero vector and ADMITS (the zero-norm discipline — an
-    // ungated 0/0 would NaN-reject); null text admits. nProbe equals
-    // nCells, so the streamed decision is exactly the max-cosine-vs-
-    // accepted rule and the oracle replays it with integer-exact
-    // sparse dots (the hashEmbed md5 chain end to end) — probe-WIDTH
-    // selection is q120's planted-geometry gate; this one pins the
-    // text composition.
-    "q138_stream_text_admission" -> ((s, d) => {
-      val docs = t(s, d, "documents").select($"doc_id", $"text")
-        .filter(length(trim($"text")) > 0)
-      val accepted = docs.filter($"doc_id" < 40)
-      val emb = operators.TextAnalysis.hashEmbed(accepted, "text",
-          dim = 64)
-        .select($"doc_id", $"embedding")
-      val index = operators.Similarity.buildIvf(emb, "doc_id",
-        "embedding", nCells = 2, lloydIters = 1)
-      val members = operators.Similarity.cellMembers(index)
-      members.persist(org.apache.spark.storage.StorageLevel
-        .MEMORY_AND_DISK).count()
-      val arrivals = accepted.filter($"doc_id" < 10)
-        .select(($"doc_id" + 500000L).as("doc_id"),
-          concat($"text", lit(" zq zq qz")).as("text"))
-        .unionByName(docs.filter($"doc_id" >= 200 && $"doc_id" < 205)
-          .select(($"doc_id" + 600000L).as("doc_id"), $"text"))
-        .unionByName(s.createDataFrame(Seq(
-            (900001L, ""), (900002L, null.asInstanceOf[String])))
-          .toDF("doc_id", "text"))
-      val dir = java.nio.file.Files.createTempDirectory("q138_stream")
-      dir.toFile.deleteOnExit()
-      arrivals.repartition(4).write.parquet(s"$dir/in")
-      val sch = s.read.parquet(s"$dir/in").schema
-      val stream = s.readStream.schema(sch)
-        .option("maxFilesPerTrigger", 1).parquet(s"$dir/in")
-      val embedded = operators.TextAnalysis.hashEmbed(stream, "text",
-        dim = 64)
-      val admitted = streaming.StreamingParse.annAdmissionStream(
-        embedded, "doc_id", "embedding", index, members,
-        tau = 0.9, nProbe = 2)
-      val out = runStreamToTable(s, admitted, "append", "text_admission")
-        .select($"doc_id", $"admitted", $"match_id")
-        .orderBy($"doc_id")
-      members.unpersist()
-      out
-    }),
-
-    // The streaming ingestion ladder as ONE composed pass
-    // (admissionCascadeStream): exact → quality → semantic with
-    // first-reject precedence, each rung individually gated elsewhere
-    // (q114/q138) and here pinned THROUGH the composition. Planted
-    // strata, one per outcome: verbatim re-crawls of accepted docs
-    // reject 'exact' (even though their cosine is 1.0 — precedence
-    // decides, with the accepted min-id as the audit pointer);
-    // symbol-soup arrivals reject 'quality' (non-alphanumeric ratio,
-    // evaluated multiplicatively — ANSI-safe on empties) along with
-    // the planted empty and null texts; suffixed near-copies pass
-    // both cheap tiers and reject 'semantic' with their source as
-    // match; novel clean docs admit. nCells = nProbe, so the streamed
-    // semantic probe IS the brute-force rule and the oracle replays
-    // the whole cascade: the md5 bucket/sign embedding, every cosine,
-    // the argmax tie rule, both cheap tiers' exact predicates and the
-    // precedence fold.
-    "q147_stream_admission_cascade" -> ((s, d) => {
-      val docs = t(s, d, "documents").select($"doc_id", $"text")
-        .filter(length(trim($"text")) > 0)
-      val accepted = docs.filter($"doc_id" < 40)
-      val emb = operators.TextAnalysis.hashEmbed(accepted, "text",
-          dim = 64)
-        .select($"doc_id", $"embedding")
-      val index = operators.Similarity.buildIvf(emb, "doc_id",
-        "embedding", nCells = 2, lloydIters = 1)
-      val members = operators.Similarity.cellMembers(index)
-      members.persist(org.apache.spark.storage.StorageLevel
-        .MEMORY_AND_DISK).count()
-      val acceptedTexts = accepted.groupBy($"text")
-        .agg(min($"doc_id").as("exact_id"))
-      acceptedTexts.persist(org.apache.spark.storage.StorageLevel
-        .MEMORY_AND_DISK).count()
-      val arrivals = accepted.filter($"doc_id" < 10)
-          .select(($"doc_id" + 400000L).as("doc_id"), $"text")
-        .unionByName(accepted.filter($"doc_id" < 10)
-          .select(($"doc_id" + 500000L).as("doc_id"),
-            concat($"text", lit(" zq zq qz")).as("text")))
-        .unionByName(docs.filter($"doc_id" >= 200 && $"doc_id" < 205)
-          .select(($"doc_id" + 600000L).as("doc_id"), $"text"))
-        .unionByName(docs.filter($"doc_id" >= 200 && $"doc_id" < 205)
-          .select(($"doc_id" + 700000L).as("doc_id"),
-            concat(lit("@@ ## $$ %% !! ?? ;; :: "),
-              $"doc_id".cast("string")).as("text")))
-        .unionByName(s.createDataFrame(Seq(
-            (900001L, ""), (900002L, null.asInstanceOf[String])))
-          .toDF("doc_id", "text"))
-      val dir = java.nio.file.Files.createTempDirectory("q147_stream")
-      dir.toFile.deleteOnExit()
-      arrivals.repartition(4).write.parquet(s"$dir/in")
-      val sch = s.read.parquet(s"$dir/in").schema
-      val stream = s.readStream.schema(sch)
-        .option("maxFilesPerTrigger", 1).parquet(s"$dir/in")
-      val decided = streaming.StreamingParse.admissionCascadeStream(
-        stream, "doc_id", "text", acceptedTexts, minLen = 20,
-        maxNonAlphaRatio = 0.3, index = index, members = members,
-        tau = 0.9, dim = 64, nProbe = 2)
-      val out = runStreamToTable(s, decided, "append", "cascade")
-        .select($"doc_id", $"cascade_admitted".as("admitted"),
-          $"reason", $"exact_match_id", $"semantic_match_id")
-        .orderBy($"doc_id")
-      members.unpersist(); acceptedTexts.unpersist()
-      out
-    }),
-
-    // The DURABLE face of the perceptual admission reference set —
-    // q134 proved the logical takedown on an in-memory members table;
-    // this drives the full durable lifecycle the way a long-running
-    // admission service operates it: the banded members PERSIST
-    // (A/B generation + epoch + meta-last), takedowns file through
-    // the crash-safe frame ledger, the LIVE read applies them before
-    // the table reaches the stream, and compactHammingMembers purges
-    // physically (rebuilding the banding from the live table's own
-    // distinct signatures — no corpus re-read), flips the generation
-    // pointer and clears the ledger. Three stream passes over the
-    // same arrivals: the freshly-written full set (pre), the
-    // ledger-applied live set, and the post-compaction set — the
-    // last two must agree decision-for-decision (logical ≡ physical),
-    // and the oracle replays both argmin worlds.
-    "q137_durable_members_lifecycle" -> ((s, d) => {
-      val refMedia = s.createDataFrame(
-          (1L to 10L).map(i => (i, refImage(i, 0, "png"))))
-        .toDF("media_id", "payload")
-      val refSigs = operators.Multimodal.perceptualHashes(
-          operators.Multimodal.decodeImages(refMedia, "payload"),
-          "pixels", "img_width", "img_height")
-        .select($"media_id", $"dhash")
-      operators.Dedup.writeHammingMembers(s,
-        operators.Dedup.hammingBandMembers(refSigs, "media_id", "dhash",
-          maxHamming = 6),
-        "q137_members")
-      val rows: Seq[(Long, Array[Byte])] =
-        (1L to 5L).map(i => (500L + i, refImage(i, 0, "bmp"))) ++
-        (1L to 5L).map(i => (510L + i, refImage(i, 4, "png"))) ++
-        (21L to 23L).map(i => (500L + i, refImage(i, 0, "png"))) ++
-        Seq((9001L, "not an image".getBytes("UTF-8")))
-      val dir = java.nio.file.Files.createTempDirectory("q137_stream")
-      dir.toFile.deleteOnExit()
-      s.createDataFrame(rows).toDF("media_id", "payload")
-        .repartition(4).write.parquet(s"$dir/in")
-      val sch = s.read.parquet(s"$dir/in").schema
-      def run(m: DataFrame, tag: String): DataFrame = {
-        val cached = m.persist(org.apache.spark.storage.StorageLevel
-          .MEMORY_AND_DISK)
-        cached.count()
-        val stream = s.readStream.schema(sch)
-          .option("maxFilesPerTrigger", 1).parquet(s"$dir/in")
-        val hashed = operators.Multimodal.perceptualHashes(
-          operators.Multimodal.decodeImages(stream, "payload"),
-          "pixels", "img_width", "img_height")
-        val res = runStreamToTable(s,
-          streaming.StreamingParse.hammingAdmissionStream(
-            hashed, "media_id", "dhash", cached, maxHamming = 6),
-          "append", s"members_lc_$tag")
-          .select($"media_id", $"dhash",
-            col("admitted").as(s"admitted_$tag"),
-            col("match_id").as(s"match_$tag"))
-        val local = s.createDataFrame(
-          java.util.Arrays.asList(res.collect(): _*), res.schema)
-        cached.unpersist()
-        local
-      }
-      val pre = run(
-        operators.Dedup.readHammingMembers(s, "q137_members"), "pre")
-      operators.Dedup.tombstoneHammingMembers(s, "q137_members",
-        s.createDataFrame(Seq(Tuple1(1L), Tuple1(3L))).toDF("media_id"))
-      val live = run(
-        operators.Dedup.readHammingMembersLive(s, "q137_members"), "live")
-        .drop("dhash")
-      operators.Dedup.compactHammingMembers(s, "q137_members",
-        maxHamming = 6)
-      val comp = run(
-        operators.Dedup.readHammingMembers(s, "q137_members"), "post")
-        .drop("dhash")
-      pre.join(live, Seq("media_id")).join(comp, Seq("media_id"))
-        .select($"media_id", $"dhash", $"admitted_pre", $"match_pre",
-          $"admitted_live", $"match_live", $"admitted_post",
-          $"match_post")
-        .orderBy($"media_id")
-    }),
-
-    // Streaming ANN admission under TAKEDOWN — the VECTOR rung of the
-    // durable compliance lifecycle (q137's discipline applied to the
-    // IVF tier, q127's three-phase shape applied to the stream): the
-    // accepted embeddings build a DURABLE bucketed IVF index; the
-    // admission stream runs three times against its evolving live
-    // view. PRE: every %3==1 re-embed rejects with its source as
-    // match_id (the q120 contract). Then the %15==0 accepted sources
-    // file into the tombstone ledger (tombstoneIvf — crash-safe
-    // distinct-union, no driver collect) and the LIVE pass reads
-    // cellMembers over readIvfIndexLive: re-embeds of tombstoned
-    // sources flip reject → admit IMMEDIATELY (logical delete — the
-    // member arrays simply never carry the row), everything else
-    // holds. Finally retrainIvfIndexBucketed purges PHYSICALLY (the
-    // re-assignment pass skips tombstoned rows, the A/B generation
-    // swaps, the ledger clears) and the POST pass over the new
-    // generation must reproduce the live decisions bit-for-bit —
-    // logical and physical deletion are observationally equal, and
-    // the gate ends with a clean ledger (re-runnable). The oracle
-    // replays the exhaustive brute-force argmax decision vs the full
-    // accepted set AND vs the tombstone-excluded set.
-    "q144_stream_ann_takedown" -> ((s, d) => {
-      val fix = streamFixtures(s, d)
-      val emb = t(s, d, "embeddings")
-      val accepted = emb.filter($"vec_id" % 3 === 0)
-      val index = operators.Similarity.buildIvf(accepted, "vec_id",
-        "embedding", nCells = 8, lloydIters = 3)
-      operators.Similarity.writeIvfIndexBucketed(index, "q144_idx",
-        numBuckets = 8)
-      val sch = s.read.parquet(s"$fix/embeddings_stream").schema
-      def run(tag: String, live: operators.Similarity.IvfIndex,
-              members: DataFrame): DataFrame = {
-        val stream = s.readStream.schema(sch)
-          .option("maxFilesPerTrigger", 1).parquet(s"$fix/embeddings_stream")
-        val res = runStreamToTable(s,
-          streaming.StreamingParse.annAdmissionStream(stream, "vec_id",
-            "embedding", live, members, tau = 0.9, nProbe = 2),
-          "append", s"ann_takedown_$tag")
-          .select($"vec_id", col("admitted").as(s"admitted_$tag"),
-            col("match_id").as(s"match_$tag"))
-        s.createDataFrame(
-          java.util.Arrays.asList(res.collect(): _*), res.schema)
-      }
-      def mkMembers(idx: operators.Similarity.IvfIndex): DataFrame = {
-        val m = operators.Similarity.cellMembers(idx)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        m.count()
-        m
-      }
-      val idx0 = operators.Similarity.readIvfIndexLive(s, "q144_idx")
-      val members0 = mkMembers(idx0)
-      val pre = run("pre", idx0, members0)
-      operators.Similarity.tombstoneIvf(s, "q144_idx",
-        emb.filter($"vec_id" % 15 === 0), "vec_id")
-      // the LIVE member arrays are the PRE arrays minus the tombstoned
-      // ids (a takedown only removes rows; centroids pass through
-      // unchanged — readIvfIndexLive's contract), so reuse the already
-      // persisted pre arrays instead of re-reading the index through a
-      // second cellMembers (guide §2.4): they explode, anti-join the
-      // ledger frame (broadcast — the bounded takedown set, the same
-      // rows readIvfIndexLive broadcasts for its anti-join; no driver
-      // collect, no per-id plan literals) and regroup by cell.
-      // Value-identical: the stream's per-cell fold is array_max over
-      // (sim, −id) structs — member ORDER is irrelevant — and a cell
-      // whose members all died yields no row, matching the groupBy-
-      // after-anti-join shape (an absent cell folds to null → admit).
-      val tombs = operators.Similarity.readIvfTombstones(s, "q144_idx")
-      val members1 = members0
-        .select(col("cell"), explode(col("members")).as("m"))
-        .join(broadcast(tombs),
-          col("m.neighbor_id") === tombs("neighbor_id"), "left_anti")
-        .groupBy(col("cell"))
-        .agg(collect_list(col("m")).as("members"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      members1.count()
-      members0.unpersist()
-      val live = run("live", idx0, members1)
-      members1.unpersist()
-      operators.Similarity.retrainIvfIndexBucketed(s, "q144_idx",
-        v => v.filter(col("__rid") % 2 === 0), lloydIters = 1,
-        numBuckets = 8)
-      // the retrain DOES invalidate the arrays (new centroids, new
-      // cell assignment, physical purge) — rebuild from the swapped
-      // generation
-      val idx2 = operators.Similarity.readIvfIndexLive(s, "q144_idx")
-      val members2 = mkMembers(idx2)
-      val post = run("post", idx2, members2)
-      members2.unpersist()
-      pre.join(live, Seq("vec_id")).join(post, Seq("vec_id"))
-        .select($"vec_id", $"admitted_pre", $"match_pre",
-          $"admitted_live", $"match_live", $"admitted_post",
-          $"match_post")
-        .orderBy($"vec_id")
-    }),
-
-    // The UNBOUNDED-corpus tier of the streaming ANN rung — the
-    // foreachBatch route annAdmissionStream's scaladoc promises for
-    // an accepted corpus too big for broadcast member arrays: each
-    // micro-batch runs the relational searchIvf against the DURABLE
-    // bucketed index (corpus side reopens shuffle-free; only the
-    // small batch shuffles), decisions land via the q146 exactly-once
-    // discipline (batch_id-partitioned dynamic overwrite), and the
-    // gate replays the LAST batch verbatim — append semantics would
-    // duplicate its rows. Decisions must equal q120's brute-force
-    // oracle exactly (same fixture, same probe geometry, same tie
-    // rule) — the two streaming tiers (broadcast-members and batched)
-    // are pinned to the SAME truth.
-    "q152_stream_ann_batched" -> ((s, d) => {
-      val fix = streamFixtures(s, d)
-      val emb = t(s, d, "embeddings")
-      val accepted = emb.filter($"vec_id" % 3 === 0)
-      val index = operators.Similarity.buildIvf(accepted, "vec_id",
-        "embedding", nCells = 8, lloydIters = 3)
-      operators.Similarity.writeIvfIndexBucketed(index, "q152_idx",
-        numBuckets = 8)
-      val dir = java.nio.file.Files.createTempDirectory("q152_out")
-      dir.toFile.deleteOnExit()
-      val outPath = s"$dir/decisions"
-      val sch = s.read.parquet(s"$fix/embeddings_stream").schema
-      val stream = s.readStream.schema(sch)
-        .option("maxFilesPerTrigger", 1).parquet(s"$fix/embeddings_stream")
-      streaming.StreamingParse.annAdmissionBatchedStream(stream,
-        "vec_id", "embedding", "q152_idx", tau = 0.9, nProbe = 2,
-        outPath)
-      // crash-redelivery of the last batch: same rows, same id — the
-      // dynamic overwrite must leave the output byte-identical
-      val outDf = s.read.parquet(outPath)
-      val lastBatch = outDf.agg(max($"batch_id".cast("long")))
-        .collect()(0).getLong(0)
-      val replayIds = outDf.filter($"batch_id".cast("long") === lastBatch)
-        .select($"vec_id")
-      val replayRows = s.read.parquet(s"$fix/embeddings_stream")
-        .join(broadcast(replayIds), Seq("vec_id"), "left_semi")
-      streaming.StreamingParse.applyAnnAdmissionBatch(s, replayRows,
-        lastBatch, "q152_idx", "vec_id", "embedding", tau = 0.9,
-        nProbe = 2, outPath)
-      s.read.parquet(outPath)
-        .select($"vec_id", $"admitted", $"match_id")
-        .orderBy($"vec_id")
-    }),
-
-    // The MULTIMODAL corpus datasheet — the media face of the text
-    // tier's q91 profile / q102 release gates: per-payload container
-    // format (magic bytes, DECODER-INDEPENDENT — a WAV payload in an
-    // image corpus reads 'wav' even though the image tier rejects
-    // it), dead-letter classification, decoded pixel count, and the
-    // exact-perceptual dup pointer (smallest media id sharing the
-    // dHash — PNG/BMP/GIF re-encodes of identical pixels collapse to
-    // one group, the group's first member stays canonical with a
-    // null pointer). The oracle replays the magic-byte table, the
-    // dims, the planted-formula dHash construction and the min-id
-    // group fold.
-    "q155_media_datasheet" -> ((s, d) => {
-      def wav(): Array[Byte] = {
-        val fmt = new javax.sound.sampled.AudioFormat(8000f, 16, 1,
-          true, false)
-        val pcm = Array.tabulate[Byte](200)(i => (i % 100).toByte)
-        val ais = new javax.sound.sampled.AudioInputStream(
-          new java.io.ByteArrayInputStream(pcm), fmt, 100L)
-        val bos = new java.io.ByteArrayOutputStream()
-        javax.sound.sampled.AudioSystem.write(ais,
-          javax.sound.sampled.AudioFileFormat.Type.WAVE, bos)
-        bos.toByteArray
-      }
-      val rows: Seq[(Long, Array[Byte])] =
-        (1L to 6L).map(i => (i, refImage(i, 0, "png"))) ++
-        (1L to 3L).map(i => (500L + i, refImage(i, 0, "bmp"))) ++
-        Seq((504L, refImage(1L, 0, "gif")),
-          (601L, wav()),
-          (9001L, "garbage bytes here".getBytes("UTF-8")),
-          (9002L, Array.empty[Byte]),
-          (9003L, null.asInstanceOf[Array[Byte]]))
-      val media = s.createDataFrame(rows).toDF("media_id", "payload")
-        .repartition(3)
-      operators.Multimodal.mediaDatasheet(media, "media_id", "payload")
-        .select($"media_id", $"format", $"decode_status", $"n_px",
-          $"dup_of")
-        .orderBy($"media_id")
-    }),
-
-    // The VIDEO rung of the streaming multimodal admission ladder —
-    // completing the modality trio (image q126, audio q132): animated
-    // payloads arrive as BYTES on the stream and the WHOLE temporal
-    // chain (decode every frame, per-frame dHash, per-bit majority
-    // vote) runs as ONE per-row codec op (videoSignatures — every
-    // frame originates from one input row, so no frame explode and no
-    // relational aggregation is needed; stream-legal by construction
-    // and bit-identical to the q133 batch route, whose shared helpers
-    // it calls). Admission = the same maxHamming+1 broadcast band
-    // joins against a reference corpus signed through the BATCH route
-    // — so the gate also pins the two routes against each other:
-    // brightness re-renders and first-frame-dropped copies of
-    // accepted videos reject at hamming 0, the single-pixel edit
-    // rejects within the radius, novel videos and corrupt payloads
-    // admit. The oracle replays both sides' pixel formulas, the grid,
-    // every gradient comparison, the vote, the packing and the
-    // exhaustive argmin decision.
-    "q136_stream_video_admission" -> ((s, d) => {
-      val refMedia = s.createDataFrame((1L to 6L).map(i =>
-          (i, grayGif(i, 0, dropFirst = false, tweak = false))))
-        .toDF("media_id", "payload")
-      // the BATCH route signs the reference corpus — the stream side
-      // must land identical bits through the per-row route
-      val refSigs = operators.Multimodal.videoSignature(
-          operators.Multimodal.perceptualHashes(
-            operators.Multimodal.decodeFrames(refMedia, "payload"),
-            "frame_pixels", "frame_w", "frame_h"),
-          "media_id", "dhash")
-        .select($"media_id", $"vsig")
-      val members = operators.Dedup.hammingBandMembers(refSigs,
-        "media_id", "vsig", maxHamming = 6)
-      members.persist(org.apache.spark.storage.StorageLevel
-        .MEMORY_AND_DISK).count()
-      val whole = grayGif(1L, 0, dropFirst = false, tweak = false)
-      val rows: Seq[(Long, Array[Byte])] =
-        (1L to 3L).map(i => (500L + i, grayGif(i, 4, dropFirst = false,
-          tweak = false))) ++
-        (1L to 3L).map(i => (510L + i, grayGif(i, 0, dropFirst = true,
-          tweak = false))) ++
-        Seq((521L, grayGif(1L, 0, dropFirst = false, tweak = true))) ++
-        (21L to 22L).map(i => (510L + i, grayGif(i, 0, dropFirst = false,
-          tweak = false))) ++
-        Seq((9001L, whole.take(whole.length * 3 / 5)),
-          (9002L, "not a video".getBytes("UTF-8")),
-          (9003L, Array.empty[Byte]))
-      val dir = java.nio.file.Files.createTempDirectory("q136_stream")
-      dir.toFile.deleteOnExit()
-      s.createDataFrame(rows).toDF("media_id", "payload")
-        .repartition(4).write.parquet(s"$dir/in")
-      val sch = s.read.parquet(s"$dir/in").schema
-      val stream = s.readStream.schema(sch)
-        .option("maxFilesPerTrigger", 1).parquet(s"$dir/in")
-      val signed = operators.Multimodal.videoSignatures(stream, "payload")
-      val admitted = streaming.StreamingParse.hammingAdmissionStream(
-        signed, "media_id", "vsig", members, maxHamming = 6)
-      val out = runStreamToTable(s, admitted, "append", "video_admission")
-        .select($"media_id", $"n_frames", $"vsig", $"admitted",
-          $"match_id", $"match_hamming")
-        .orderBy($"media_id")
-      members.unpersist()
-      out
-    }),
-
-    // TAKEDOWN for the perceptual reference corpus — the fourth face
-    // of the compliance lifecycle (vector q127, exact q128, near-dup
-    // q129), closing the one rung q126 left static: removing accepted
-    // reference images must flip their streamed look-alikes
-    // reject → admit IMMEDIATELY (logical: the removed ids leave the
-    // member arrays via one broadcast array-filter — never a re-hash
-    // of the reference corpus), while every other decision holds
-    // bit-for-bit. The q126 fixture with refs 1 and 3 tombstoned; the
-    // same arrival set (BMP re-encodes, brightness variants, novels,
-    // corrupt payloads) streams against the full members PRE and the
-    // tombstoned members POST; the oracle replays both sides' pixel
-    // formulas, the dHash construction and BOTH exhaustive argmin
-    // decisions (vs refs, and vs refs minus the tombstones).
-    "q134_phash_takedown_stream" -> ((s, d) => {
-      val refMedia = s.createDataFrame(
-          (1L to 10L).map(i => (i, refImage(i, 0, "png"))))
-        .toDF("media_id", "payload")
-      val refSigs = operators.Multimodal.perceptualHashes(
-          operators.Multimodal.decodeImages(refMedia, "payload"),
-          "pixels", "img_width", "img_height")
-        .select($"media_id", $"dhash")
-      val members = operators.Dedup.hammingBandMembers(refSigs,
-        "media_id", "dhash", maxHamming = 6)
-      members.persist(org.apache.spark.storage.StorageLevel
-        .MEMORY_AND_DISK).count()
-      val live = operators.Dedup.tombstoneFromHammingMembers(members,
-        s.createDataFrame(Seq(Tuple1(1L), Tuple1(3L))).toDF("media_id"))
-      live.persist(org.apache.spark.storage.StorageLevel
-        .MEMORY_AND_DISK).count()
-      val rows: Seq[(Long, Array[Byte])] =
-        (1L to 5L).map(i => (500L + i, refImage(i, 0, "bmp"))) ++
-        (1L to 5L).map(i => (510L + i, refImage(i, 4, "png"))) ++
-        (21L to 23L).map(i => (500L + i, refImage(i, 0, "png"))) ++
-        Seq((9001L, "not an image".getBytes("UTF-8")),
-          (9002L, Array.empty[Byte]))
-      val dir = java.nio.file.Files.createTempDirectory("q134_stream")
-      dir.toFile.deleteOnExit()
-      s.createDataFrame(rows).toDF("media_id", "payload")
-        .repartition(4).write.parquet(s"$dir/in")
-      val sch = s.read.parquet(s"$dir/in").schema
-      def run(m: DataFrame, tag: String): DataFrame = {
-        val stream = s.readStream.schema(sch)
-          .option("maxFilesPerTrigger", 1).parquet(s"$dir/in")
-        val hashed = operators.Multimodal.perceptualHashes(
-          operators.Multimodal.decodeImages(stream, "payload"),
-          "pixels", "img_width", "img_height")
-        runStreamToTable(s,
-          streaming.StreamingParse.hammingAdmissionStream(
-            hashed, "media_id", "dhash", m, maxHamming = 6),
-          "append", s"phash_td_$tag")
-          .select($"media_id", $"dhash",
-            col("admitted").as(s"admitted_$tag"),
-            col("match_id").as(s"match_$tag"))
-      }
-      val pre = run(members, "pre")
-      val post = run(live, "post").drop("dhash")
-      val out = pre.join(post, Seq("media_id"))
-        .select($"media_id", $"dhash", $"admitted_pre", $"match_pre",
-          $"admitted_post", $"match_post")
-        .orderBy($"media_id")
-      val materialized = s.createDataFrame(
-        java.util.Arrays.asList(out.collect(): _*), out.schema)
-      members.unpersist(); live.unpersist()
-      materialized
-    }),
-
-    // TEMPORAL near-dup for multi-frame media — the video modality's
-    // REAL near-dup for the one container the JDK decodes: animated
-    // GIFs decode frame-by-frame (decodeFrames), each frame
-    // perceptual-hashes (dHash), and the per-bit MAJORITY VOTE over
-    // the frame hashes packs into one 64-bit video signature
-    // (videoSignature — SimHash over the frame sequence) feeding the
-    // same pigeonhole Hamming bands. Planted scene-cut videos (six
-    // pattern-A frames, two pattern-B frames): brightness-shifted
-    // re-renders collapse at hamming 0 (dHash gradients), FIRST-FRAME-
-    // DROPPED copies collapse at hamming 0 through the majority vote
-    // (5-of-7 still carries every A bit — the temporal robustness no
-    // single-frame hash has), a single-pixel-edited variant lands
-    // within the band radius, novel videos stay apart, and corrupt
-    // payloads (mid-frame cut / non-video / empty) surface as explicit
-    // null-signature rows. The oracle replays pixel formulas, the
-    // 9×8 grid sampling, every gradient comparison, the per-bit vote,
-    // the bit packing and the exhaustive pairwise Hamming truth.
-    "q133_video_temporal_neardup" -> ((s, d) => {
-      val whole = grayGif(1L, 0, dropFirst = false, tweak = false)
-      val rows: Seq[(Long, Array[Byte])] =
-        (1L to 6L).map(i => (i, grayGif(i, 0, dropFirst = false,
-          tweak = false))) ++
-        (1L to 3L).map(i => (500L + i, grayGif(i, 4, dropFirst = false,
-          tweak = false))) ++
-        (1L to 3L).map(i => (510L + i, grayGif(i, 0, dropFirst = true,
-          tweak = false))) ++
-        Seq((521L, grayGif(1L, 0, dropFirst = false, tweak = true))) ++
-        (21L to 22L).map(i => (510L + i, grayGif(i, 0, dropFirst = false,
-          tweak = false))) ++
-        Seq((9001L, whole.take(whole.length * 3 / 5)),
-          (9002L, "not a video".getBytes("UTF-8")),
-          (9003L, Array.empty[Byte]))
-      val media = s.createDataFrame(rows)
-        .toDF("media_id", "payload").repartition(4)
-      val hashed = operators.Multimodal.perceptualHashes(
-        operators.Multimodal.decodeFrames(media, "payload"),
-        "frame_pixels", "frame_w", "frame_h")
-      val vsigs = operators.Multimodal.videoSignature(hashed,
-        "media_id", "dhash")
-      val pairs = operators.Dedup.hammingNearDups(vsigs, "media_id",
-        "vsig", maxHamming = 6)
-      val partnered = pairs
-        .select($"a".as("media_id"), $"b".as("partner"), $"hamming")
-        .unionByName(pairs
-          .select($"b".as("media_id"), $"a".as("partner"), $"hamming"))
-      val stats = partnered.groupBy($"media_id")
-        .agg(count(lit(1)).as("n_pairs"),
-          min(struct($"hamming", $"partner")).as("__best"))
-      media.select($"media_id").join(vsigs, Seq("media_id"), "left")
-        .join(stats, Seq("media_id"), "left")
-        .select($"media_id", $"n_frames", $"vsig",
-          coalesce($"n_pairs", lit(0L)).as("n_pairs"),
-          col("__best").getField("partner").as("top_partner"),
-          col("__best").getField("hamming").cast("int")
-            .as("top_hamming"))
-        .orderBy($"media_id")
-    }),
-
-    // The AUDIO rung of the streaming multimodal admission ladder —
-    // q126's sibling for sound, closing the r13 "claimed, not gated"
-    // gap: clips arrive as BYTES on the stream, decode
-    // (javax.sound.sampled) + fingerprint (65-window energy-gradient
-    // signs) as stateless codec ops in-flight, and admit/reject
-    // against a static accepted corpus via the SAME maxHamming+1
-    // broadcast band joins — recall-EXACT by pigeonhole. Arrivals mix
-    // AIFF and AU re-encodes of accepted WAV clips (reject at
-    // hamming 0 — the cross-container duplicate no byte hash sees),
-    // 3×-gain copies (reject at hamming 0 — energy scales by the
-    // square, gradient signs unchanged), novel clips (admit), a
-    // too-short clip and corrupt payloads (null fingerprint → admit,
-    // membership unprovable). The oracle replays both sides' sample
-    // formulas, the stereo mixdown, every window energy, the bit
-    // packing and the exhaustive argmin decision.
-    "q132_stream_audio_admission" -> ((s, d) => {
-      val WAVE = javax.sound.sampled.AudioFileFormat.Type.WAVE
-      val AIFF = javax.sound.sampled.AudioFileFormat.Type.AIFF
-      val AU = javax.sound.sampled.AudioFileFormat.Type.AU
-      def chOf(src: Long): Int = if (src <= 4) 1 else 2
-      val refMedia = s.createDataFrame((1L to 8L).map(i =>
-          (i, pcmClip(4096L, i, chOf(i), 200, 1, WAVE, bigEndian = false))))
-        .toDF("media_id", "payload")
-      val refSigs = operators.Multimodal.audioFingerprint(
-          operators.Multimodal.decodeWav(refMedia, "payload"),
-          "pcm", "au_channels")
-        .select($"media_id", $"afp")
-      val members = operators.Dedup.hammingBandMembers(refSigs,
-        "media_id", "afp", maxHamming = 6)
-      members.persist(org.apache.spark.storage.StorageLevel
-        .MEMORY_AND_DISK).count()
-      val whole = pcmClip(4096L, 1L, 1, 200, 1, WAVE, bigEndian = false)
-      val rows: Seq[(Long, Array[Byte])] =
-        (1L to 4L).map(i => (500L + i, pcmClip(4096L, i, 1, 200, 1, AIFF,
-          bigEndian = true))) ++
-        (1L to 4L).map(i => (510L + i, pcmClip(4096L, i, 1, 200, 3, WAVE,
-          bigEndian = false))) ++
-        (21L to 24L).map(i => (500L + i, pcmClip(4096L, i, 1, 200, 1, WAVE,
-          bigEndian = false))) ++
-        (5L to 6L).map(i => (525L + i, pcmClip(4096L, i, 2, 200, 1, AU,
-          bigEndian = true))) ++
-        Seq((9001L, whole.take(whole.length - 3)),
-          (9002L, "not audio at all".getBytes("UTF-8")),
-          (9003L, Array.empty[Byte]),
-          (9004L, pcmClip(4096L, 1L, 1, 40, 1, WAVE, bigEndian = false)))
-      val dir = java.nio.file.Files.createTempDirectory("q132_stream")
-      dir.toFile.deleteOnExit()
-      s.createDataFrame(rows).toDF("media_id", "payload")
-        .repartition(4).write.parquet(s"$dir/in")
-      val sch = s.read.parquet(s"$dir/in").schema
-      val stream = s.readStream.schema(sch)
-        .option("maxFilesPerTrigger", 1).parquet(s"$dir/in")
-      val fped = operators.Multimodal.audioFingerprint(
-        operators.Multimodal.decodeWav(stream, "payload"),
-        "pcm", "au_channels")
-      val admitted = streaming.StreamingParse.hammingAdmissionStream(
-        fped, "media_id", "afp", members, maxHamming = 6)
-      val out = runStreamToTable(s, admitted, "append", "audio_admission")
-        .select($"media_id", $"afp", $"admitted", $"match_id",
-          $"match_hamming")
-        .orderBy($"media_id")
-      members.unpersist()
-      out
-    }),
-
-    "q125_audio_fp_dedup" -> ((s, d) => {
-      val WAVE = javax.sound.sampled.AudioFileFormat.Type.WAVE
-      val AIFF = javax.sound.sampled.AudioFileFormat.Type.AIFF
-      val AU = javax.sound.sampled.AudioFileFormat.Type.AU
-      def chOf(i: Long): Int = if (i <= 6) 1 else 2
-      val whole = pcmClip(4096L, 2L, 1, 200, 1, WAVE, bigEndian = false)
-      val rows: Seq[(Long, Array[Byte])] =
-        (1L to 10L).map(i =>
-          (i, pcmClip(4096L, i, chOf(i), 200, 1, WAVE, bigEndian = false))) ++
-        (1L to 10L).map(i =>
-          (100L + i, pcmClip(4096L, i, chOf(i), 200, 1, AIFF, bigEndian = true))) ++
-        (1L to 10L).map(i =>
-          (200L + i, pcmClip(4096L, i, chOf(i), 200, 1, AU, bigEndian = true))) ++
-        (1L to 4L).map(i =>
-          (300L + i, pcmClip(4096L, i, 1, 200, 2, WAVE, bigEndian = false))) ++
-        Seq((50L, pcmClip(4096L, 1L, 1, 40, 1, WAVE, bigEndian = false)),
-          (9001L, whole.take(whole.length - 3)),
-          (9002L, "not audio at all".getBytes("UTF-8")),
-          (9003L, Array.empty[Byte]))
-      val media = s.createDataFrame(rows)
-        .toDF("media_id", "payload").repartition(4)
-      val sigs = operators.Multimodal.audioFingerprint(
-          operators.Multimodal.decodeWav(media, "payload"),
-          "pcm", "au_channels")
-        .select($"media_id", $"afp")
-      val pairs = operators.Dedup.hammingNearDups(sigs, "media_id",
-        "afp", maxHamming = 6)
-      val partnered = pairs.select($"a".as("media_id"), $"b".as("partner"))
-        .unionByName(pairs.select($"b".as("media_id"), $"a".as("partner")))
-      val stats = partnered.groupBy($"media_id")
-        .agg(count(lit(1)).as("n_pairs"), min($"partner").as("top_partner"))
-      sigs.join(stats, Seq("media_id"), "left")
-        .select($"media_id", $"afp",
-          coalesce($"n_pairs", lit(0L)).as("n_pairs"), $"top_partner")
-        .orderBy($"media_id")
-    }),
-
-    // Vector-index growth loop end-to-end (the q101 discipline for
-    // the ANN family): build IVF×PQ on the EVEN half, persist
-    // bucketed, append the ODD half IN PLACE against the frozen
-    // geometry (O(new) encode + O(new) bucket files + the poison-token
-    // crash window), reopen, and serve planted queries targeting BOTH
-    // halves — an appended vector that failed to index would break
-    // its query's row. The recall probe + drift decision run over the
-    // same served index: in the planted all-hit regime they must emit
-    // exactly recall=1.0 / retrain=false (the miss regime is
-    // spec-gated with fresh cluster samples). Oracle: the q107
-    // brute-force argmax over the FULL corpus plus the all-hit
-    // probe/decision constants.
-    "q116_ivfpq_append_recall" -> ((s, d) => {
-      val emb = t(s, d, "embeddings")
-      val b1 = emb.filter($"vec_id" % 2 === 0)
-      val b2 = emb.filter($"vec_id" % 2 =!= 0)
-      val base = operators.Similarity.buildIvfPq(b1, "vec_id", "embedding",
-        lloydIters = 3)
-      operators.Similarity.writeIvfPqIndexBucketed(base, "q116_idx")
-      operators.Similarity.appendToIvfPqIndexBucketed(s, "q116_idx", b2,
-        "vec_id", "embedding")
-      val disk = operators.Similarity.readIvfPqIndex(s, "q116_idx")
-      val qs = emb.filter($"vec_id" < 10)
-        .select(($"vec_id" + 10000L).as("vec_id"),
-          expr("transform(embedding, x -> CAST(x AS DOUBLE) * 1.001 + 0.0005)")
-            .as("embedding"))
-      val ann = operators.Similarity.searchIvfPq(disk, emb, qs, "vec_id",
-        "embedding", k = 3).filter($"rank" === 1)
-      val probe = operators.Similarity.recallProbe(ann, emb, qs, "vec_id",
-        "embedding", k = 1)
-      val decision = operators.Similarity.driftDecision(probe,
-        minRecall = 0.9)
-      ann.select($"query_id", $"neighbor_id".as("top1"))
-        .join(probe.select($"query_id", $"recall"), Seq("query_id"))
-        .crossJoin(broadcast(decision.select($"mean_recall", $"retrain")))
-        .orderBy($"query_id")
-    }),
-
-    // The drift loop CLOSED (q116 made drift measurable; this acts on
-    // it): planted clusters where the drifted batch provably breaks
-    // the frozen-geometry index — drifted members lean toward cell 1
-    // while their queries lean toward cell 2, so every nProbe=1 probe
-    // lands a cell without the true twin and pre-retrain recall is
-    // exactly 0 → driftDecision fires. The warm-start retrain
-    // (Lloyd seeded from the CURRENT centroids over the id%2 SAMPLE
-    // of the index's own durable rows — never a corpus refit) pulls
-    // centroid 1 toward the drifted region, every probe re-lands
-    // correctly, and post-retrain recall is exactly 1 → the decision
-    // clears. The oracle replays the ENTIRE arithmetic in SQL: seed
-    // choice, build Lloyd mean, frozen append assignment, the sampled
-    // warm refit with the keep-empty-cell coalesce, final
-    // re-assignment, both probe/top1 passes, brute-force truth and
-    // both decisions — a drift anywhere in the fit math breaks rows.
-    // The A/B generation swap + fresh-epoch discipline rides the same
-    // gate (pre reads the written index; post reads the swapped one).
-    "q123_ivf_drift_retrain" -> ((s, d) => {
-      val (base, drift, queries) = ivfDriftVectors(s)
-      val corpus = base.unionByName(drift)
-      val built = operators.Similarity.buildIvf(base, "vec_id",
-        "embedding", nCells = 2, lloydIters = 1)
-      val grown = operators.Similarity.appendToIvf(built, drift,
-        "vec_id", "embedding")
-      operators.Similarity.writeIvfIndexBucketed(grown, "q123_idx",
-        numBuckets = 2)
-      val pre = operators.Similarity.readIvfIndex(s, "q123_idx")
-      // materialize every pre-retrain result BEFORE the swap — the
-      // retrain drops the generation these plans read
-      val preAnn = localCopy(operators.Similarity.searchIvf(pre, queries,
-        "vec_id", "embedding", k = 1, nProbe = 1))
-      val preProbe = localCopy(operators.Similarity.recallProbe(preAnn, corpus,
-        queries, "vec_id", "embedding", k = 1))
-      val preDec = localCopy(operators.Similarity.driftDecision(preProbe,
-        minRecall = 0.9))
-      operators.Similarity.retrainIvfIndexBucketed(s, "q123_idx",
-        sample => sample.filter($"__rid" % 2 === 1), lloydIters = 1,
-        numBuckets = 2)
-      val post = operators.Similarity.readIvfIndex(s, "q123_idx")
-      val postAnn = operators.Similarity.searchIvf(post, queries,
-        "vec_id", "embedding", k = 1, nProbe = 1)
-      val postProbe = operators.Similarity.recallProbe(postAnn, corpus,
-        queries, "vec_id", "embedding", k = 1)
-      val postDec = operators.Similarity.driftDecision(postProbe,
-        minRecall = 0.9)
-      preAnn.select($"query_id", $"neighbor_id".as("pre_top1"))
-        .join(postAnn.select($"query_id", $"neighbor_id".as("post_top1")),
-          Seq("query_id"))
-        .join(preProbe.select($"query_id", $"recall".as("pre_recall")),
-          Seq("query_id"))
-        .join(postProbe.select($"query_id", $"recall".as("post_recall")),
-          Seq("query_id"))
-        .crossJoin(broadcast(preDec.select($"mean_recall".as("pre_mean"),
-          $"retrain".as("retrain_fired"))))
-        .crossJoin(broadcast(postDec.select($"mean_recall".as("post_mean"),
-          $"retrain".as("post_retrain"))))
-        .select($"query_id", $"pre_top1", $"post_top1", $"pre_recall",
-          $"post_recall", $"pre_mean", $"post_mean", $"retrain_fired",
-          $"post_retrain")
-        .orderBy($"query_id")
-    }),
-
-    // The drift loop made OPERATIONAL — q123 proved
-    // decision → retrain → recovery with the caller hand-wiring three
-    // calls; this gate drives the whole lifecycle through the ONE
-    // maintenance composition a cron window runs
-    // (maintainIvfPqIndex: probe → decide → conditional warm retrain
-    // → re-probe), twice: a drifted IVF×PQ index (the q123 planted
-    // geometry, PQ layer made outcome-neutral by oversample ≥ cell
-    // size so the coarse probe decides — and the oracle can replay
-    // every value without the codebook arithmetic) must HEAL through
-    // the single call (fired, recall 0 → 1, generation swapped), and
-    // the immediate second call must be a NO-OP (not fired, epoch
-    // pointer untouched, recall stays 1). The oracle replays the
-    // build Lloyd, frozen append, stale probes, the sampled warm
-    // refit with keep-empty coalesce, re-assignment, healed probes,
-    // brute-force truth, both decisions and both epoch-change flags.
-    "q131_ivfpq_maintain" -> ((s, d) => {
-      val (base, drift, queries) = ivfDriftVectors(s)
-      val corpus = base.unionByName(drift)
-      val built = operators.Similarity.buildIvfPq(base, "vec_id",
-        "embedding", nCells = 2, nSub = 2, nCentroids = 2, lloydIters = 1)
-      operators.Similarity.writeIvfPqIndexBucketed(built, "q131_idx",
-        numBuckets = 2)
-      operators.Similarity.appendToIvfPqIndexBucketed(s, "q131_idx",
-        drift, "vec_id", "embedding")
-      def top1(tag: String): DataFrame = localCopy(
-        operators.Similarity.searchIvfPqLive(s, "q131_idx", corpus,
-            queries, "vec_id", "embedding", k = 1, nProbe = 1,
-            oversample = 32)
-          .filter($"rank" === 1)
-          .select($"query_id", $"neighbor_id".as(tag)))
-      def maintain(): DataFrame = localCopy(
-        operators.Similarity.maintainIvfPqIndex(s, "q131_idx", corpus,
-          "vec_id", "embedding", queries, k = 1, minRecall = 0.9,
-          sample = corpus.filter($"vec_id" % 2 === 1), lloydIters = 1,
-          nProbe = 1, oversample = 32, numBuckets = 2))
-      ivfMaintainReport(top1, () => maintain())
-    }),
-
-    // The IVF×SQ rung of the one-call maintenance matrix — with q131
-    // (IVF×PQ) and the q139-q141 windows this makes EVERY durable
-    // index family cron-operable through a single composition. Same
-    // planted drift geometry and replay discipline as q131; the SQ
-    // int8 layer is outcome-neutral under the gate's oversample
-    // (every probed cell's members reach the exact float rerank), so
-    // the oracle replays coarse probe + exact argmax + both
-    // maintenance decisions without the quantizer arithmetic — which
-    // q60/q66 value-pin separately. The heal call must swap the A/B
-    // generation (epoch_changed), the no-op call must leave the meta
-    // pointer untouched.
-    "q145_ivfsq_maintain" -> ((s, d) => {
-      val (base, drift, queries) = ivfDriftVectors(s)
-      val corpus = base.unionByName(drift)
-      val built = operators.Similarity.buildIvfSq(base, "vec_id",
-        "embedding", nCells = 2, lloydIters = 1)
-      val grown = operators.Similarity.appendToIvfSq(built, drift,
-        "vec_id", "embedding")
-      operators.Similarity.writeIvfSqIndexBucketed(grown, "q145_idx",
-        numBuckets = 2)
-      def top1(tag: String): DataFrame = localCopy(
-        operators.Similarity.searchIvfSq(
-            operators.Similarity.readIvfSqIndex(s, "q145_idx"), corpus,
-            queries, "vec_id", "embedding", k = 1, nProbe = 1,
-            oversample = 32)
-          .filter($"rank" === 1)
-          .select($"query_id", $"neighbor_id".as(tag)))
-      def maintain(): DataFrame = localCopy(
-        operators.Similarity.maintainIvfSqIndex(s, "q145_idx", corpus,
-          "vec_id", "embedding", queries, k = 1, minRecall = 0.9,
-          sample = corpus.filter($"vec_id" % 2 === 1), lloydIters = 1,
-          nProbe = 1, oversample = 32, numBuckets = 2))
-      ivfMaintainReport(top1, () => maintain())
-    }),
-
-    // CCNet-style per-language score bucketing (Wenzek et al. 2019):
-    // head/middle/tail tiers by per-LANGUAGE percentile thresholds.
-    // Score = char length (deterministic, oracle-compact; the CCNet
-    // setting plugs q61's LM logprob into the same operator). The
-    // oracle recomputes quantile_cont thresholds per language and the
-    // <=-with-ties-down labeling — a wrong interpolation formula, a
-    // per-group/global mixup, or a boundary-side error all break it.
-    // a planted NULL-lang stratum (doc_id % 7) gates the null-key
-    // contract for real: scoreBuckets keys its threshold join with
-    // null-safe <=> so langid-abstained docs form their own bucket
-    // group, and the oracle must mirror it with IS NOT DISTINCT FROM
-    // (a plain equi/USING join silently drops the whole stratum)
-    "q99_perplexity_buckets" -> ((s, d) => {
-      val docs = t(s, d, "documents").select($"doc_id",
-        when($"doc_id" % 7 === 0, lit(null)).otherwise($"lang").as("lang"),
-        length($"text").cast("double").as("score"))
-      operators.TextAnalysis.scoreBuckets(docs, "score", Seq("lang"))
-        .select($"doc_id", $"lang", $"score", $"bucket")
-        .orderBy($"doc_id")
-    }),
-
-    // The CCNet composition end-to-end (Wenzek et al. 2019): the
-    // fitted corpus unigram-LM logprob (q61's operator, values
-    // bit-pinned there) bucketed into per-LANGUAGE head/middle/tail
-    // thirds (q99's operator). The oracle recomposes BOTH stages —
-    // the LM fit, the order-stable per-doc fold, per-language
-    // quantile_cont thresholds and the ties-down labeling — so a
-    // drift anywhere in the composition (score rounding, threshold
-    // group, boundary side) breaks the hash.
-    "q100_ccnet_buckets" -> ((s, d) => {
-      val docs = t(s, d, "documents").select($"doc_id", $"lang", $"text")
-      val scored = operators.TextAnalysis
-        .unigramLogProb(docs, "doc_id", "text")
-        .select($"doc_id", $"logprob_per_token".as("score"))
-        .join(docs.select($"doc_id", $"lang"), Seq("doc_id"))
-      operators.TextAnalysis.scoreBuckets(scored, "score", Seq("lang"))
-        .select($"doc_id", $"lang", $"score", $"bucket")
-        .orderBy($"doc_id")
-    }),
-
-    // Cross-document boilerplate removal: a banner line injected into
-    // EVERY doc (doc frequency 1.0 > 0.5) must drop; a notice line in
-    // ~⅓ of docs and each doc's own text stay. The gate pins per-doc
-    // line counts and the md5 of the reassembled text, so it catches
-    // both wrong threshold arithmetic and order-scrambled reassembly.
-    "q54_boilerplate_lines" -> ((s, d) => {
-      val docs = t(s, d, "documents").select($"doc_id",
-        concat_ws("\n", lit("subscribe to our newsletter"), $"text",
-          when($"doc_id" % 3 === 0, lit("cookie policy applies")))
-          .as("text"))
-      operators.Curation.dropBoilerplateLines(docs, "doc_id", "text",
-          maxDocFrac = 0.5)
-        .select($"doc_id", $"n_lines", $"n_kept_lines",
-          md5($"clean_text").as("clean_md5"))
-        .orderBy($"doc_id")
-    }),
-
-    // Deterministic token-budget sampling: hash-ordered prefix until
-    // the per-shard running token total hits budget/shards. The
-    // engine-neutral md5 hash pins the EXACT kept set against the
-    // oracle's window recomputation — order, shard split, boundary
-    // rule (kept iff the PRIOR cumsum is under budget) all match.
-    "q55_token_budget" -> ((s, d) => {
-      val docs = t(s, d, "documents").select($"doc_id", $"text")
-        .withColumn("n_tokens",
-          operators.TextAnalysis.tokenCount($"text").cast("long"))
-      operators.Curation.sampleToTokenBudget(docs, "doc_id", "n_tokens",
-          budgetTokens = 20000L, shards = 8,
-          hashFn = operators.Dedup.md5Hash60)
-        .select($"doc_id", $"n_tokens")
-        .orderBy($"doc_id")
-    }),
-
-    // Corpus length-distribution profile: exact interpolating
-    // percentiles of char length and token count — Spark `percentile`
-    // and DuckDB `quantile_cont` share the rank-p·(n−1) linear-
-    // interpolation definition (identical double formula: lo·(1−g) +
-    // g·hi), so the gate pins values with NO rounding. The exact
-    // aggregate is the calibration path; the 100 TB path is the same
-    // operator with exact=false (approx_percentile's mergeable sketch,
-    // bounded executor memory), spec-pinned within rank error.
-    "q53_length_quantiles" -> ((s, d) => {
-      operators.TextAnalysis.lengthDistribution(t(s, d, "documents"),
-          "text", Seq(0.25, 0.5, 0.75, 0.9, 0.99))
-        .orderBy($"p")
-    }),
-
-    // Text curation profile: token counts, punctuation, case ratio,
-    // language-ID heuristic, composite quality score
-    "q27_text_profile" -> ((s, d) => {
-      operators.TextAnalysis.profile(t(s, d, "documents"), "text")
-        .select($"doc_id", $"n_tokens", $"n_tokens_bpeish", $"n_punct",
-          $"upper_ratio", $"pred_lang", $"quality")
-        .orderBy($"doc_id")
-    }),
-
-    // Multimodal plumbing: binary payloads → per-partition decode
-    // (stubbed codec) + frame sampling. The gate pins everything the
-    // pipeline derives from the payload BYTES (lengths, frame counts,
-    // feature dims) against SQL recomputed from the source text; the
-    // stub's feature VALUES (pure Scala hash-mix, not SQL-expressible)
-    // are pinned by TextMultimodalSpec's golden-value test instead.
-    "q28_multimodal" -> ((s, d) => {
-      val media = operators.Multimodal.syntheticMedia(t(s, d, "documents"))
-      val dec = operators.Multimodal.withDecodedFeatures(media, "payload",
-        "synthetic/raw", dim = 16)
-      val frames = operators.Multimodal.sampleFrames(dec, "payload", 64, 2)
-      frames.groupBy($"media_id")
-        .agg(first($"feat_dim").as("feat_dim"),
-             first($"meta.duration_ms").as("payload_len"),
-             count(lit(1)).as("n_frames"))
-        .orderBy($"media_id")
-    }),
-
-    // n-gram Jaccard near-dups: rare-gram bucket join + exact verify,
-    // vs the exhaustive word-4-gram Jaccard oracle (every qualifying
-    // pair shares ≥7 grams whose buckets are ≤5 docs on this corpus,
-    // so the skew guard can't cost recall)
-    "q29_ngram_jaccard" -> ((s, d) => {
-      operators.Dedup.ngramJaccardNearDups(dupCorpus(t(s, d, "documents")),
-          "doc_id", "text", n = 4, threshold = 0.5)
-        .select($"a", $"b")
-        .orderBy($"a", $"b")
-    }),
-
-    // TPC-H-Q5-shaped star join over all six relational tables: fact ⋈
-    // fact ⋈ four dimensions with a part-filter — exercises Catalyst
-    // join reordering and multi-way broadcast (every dimension side is
-    // broadcast-sized; only the lineitem⋈orders spine shuffles).
-    // Revenue rounded at 2 digits on both sides (the q03 float-parity
-    // pattern).
-    "q35_star_join" -> ((s, d) => {
-      t(s, d, "lineitem")
-        .join(t(s, d, "orders"), $"l_orderkey" === $"o_orderkey")
-        .join(t(s, d, "customer"), $"o_custkey" === $"c_custkey")
-        .join(t(s, d, "supplier"), $"l_suppkey" === $"s_suppkey")
-        .join(t(s, d, "nation"), $"s_nationkey" === $"n_nationkey")
-        .join(t(s, d, "region"), $"n_regionkey" === $"r_regionkey")
-        .join(t(s, d, "part").filter($"p_size" < 25), $"l_partkey" === $"p_partkey")
-        .groupBy($"r_name", $"n_name")
-        .agg(round(sum($"l_extendedprice" * (lit(1) - $"l_discount")), 2)
-               .as("revenue"),
-             count(lit(1)).as("n_rows"))
-        .orderBy($"r_name", $"n_name")
-    }),
-
-    // Dedup decisions from near-dup pairs: connected components over
-    // the q29 pair graph (min-label propagation, one shuffle per
-    // round) — every paired doc labeled with its component's min id.
-    // The oracle recomputes the same pairs exhaustively and takes the
-    // transitive closure with a recursive CTE, so this pins both the
-    // component structure and the representative choice.
-    "q34_dedup_components" -> ((s, d) => {
-      val pairs = operators.Dedup.ngramJaccardNearDups(
-        dupCorpus(t(s, d, "documents")), "doc_id", "text", n = 4, threshold = 0.5)
-      operators.Dedup.connectedComponents(pairs)
-        .select($"node".as("doc_id"), $"comp".as("component"))
-        .orderBy($"doc_id")
-    }),
-
-    // A2 at sub-second granularity: 500 ms tumbling bins on µs bucket
-    // math (the reference's live period list includes "100ms",
-    // main_2020.py:140 — inexpressible with second-floored buckets)
-    "q30_resample_ms" -> ((s, d) => {
-      TimeSeries.resampleAgg(t(s, d, "events"), "ts", "500ms",
-          Seq("event_type"), "value")
-        .select($"event_type", $"bucket_ts", $"sum_value", $"n", $"mean_value")
-        .orderBy($"event_type", $"bucket_ts")
-    }),
-
-    // Order-sensitive rolling-hash document fingerprint (Rabin-Karp
-    // fold over the token stream) vs a DuckDB list_reduce oracle. The
-    // engine-neutral md5-derived token hash (Dedup.md5Hash60) makes
-    // the fold value-exact across engines; xxhash64 stays the
-    // production default.
-    "q32_rolling_fingerprint" -> ((s, d) => {
-      t(s, d, "documents")
-        .select($"doc_id",
-          operators.TextAnalysis.rollingFingerprint($"text",
-            operators.Dedup.md5Hash60).as("fingerprint"))
-        .orderBy($"doc_id")
-    }),
-
-    // Deterministic train/val/test split: membership is a pure
-    // function of the key's hash bucket (no RNG state), so re-runs,
-    // repartitionings and other engines agree row-for-row — the gate
-    // uses the engine-neutral md5-derived hash and the oracle
-    // recomputes every row's label independently.
-    "q36_hash_split" -> ((s, d) => {
-      operators.TextAnalysis.hashSplit(t(s, d, "documents").select($"doc_id"),
-          "doc_id", Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1),
-          hashFn = operators.Dedup.md5Hash60)
-        .select($"doc_id", $"split")
-        .orderBy($"doc_id")
-    }),
-
-    // Time-RANGE window frame: trailing 30-second mean per user — the
-    // rangeBetween shape (frame bounded by the ORDER BY value, not row
-    // offsets; tied timestamps are peers in both engines). Telemetry
-    // smoothing without resampling to a grid.
-    "q40_trailing_window" -> ((s, d) => {
-      val w = Window.partitionBy($"user_id").orderBy(unix_micros($"ts"))
-        .rangeBetween(-30000000L, 0L) // [ts − 30 s, ts], inclusive
-      t(s, d, "events")
-        .select($"event_id", $"user_id", $"ts",
-          round(avg($"value").over(w), 6).as("trail_mean_30s"),
-          count(lit(1)).over(w).as("n_in_window"))
-        .orderBy($"event_id")
-    }),
-
-    // Corpus curation dashboard: per-language stats with a ROLLUP
-    // grand-total row — grouping-set aggregation (Expand + partial
-    // agg), the one A-family shape the catalog lacked. Language labels
-    // come from the q27 stopword heuristic, recomputed by the oracle.
-    "q39_rollup_stats" -> ((s, d) => {
-      val docs = t(s, d, "documents").select($"text",
-        operators.TextAnalysis.langId($"text").as("pred_lang"))
-      docs.rollup($"pred_lang")
-        .agg(count(lit(1)).as("n_docs"),
-             sum(length($"text")).as("total_chars"),
-             round(avg(operators.TextAnalysis.tokenCount($"text")), 4)
-               .as("avg_tokens"))
-        .select(coalesce($"pred_lang", lit("ALL")).as("lang"),
-          $"n_docs", $"total_chars", $"avg_tokens")
-        .orderBy($"lang")
-    }),
-
-    // Eval-set decontamination: broadcast LEFT ANTI join of the corpus
-    // against a blocklist of document fingerprints (every 13th doc
-    // plays the "benchmark" — its rolling fingerprint must knock the
-    // doc out of the training set). Uses the engine-neutral md5 token
-    // hash so the oracle recomputes both sides' fingerprints.
-    "q38_decontaminate" -> ((s, d) => {
-      val docs = t(s, d, "documents").select($"doc_id",
-        operators.TextAnalysis.rollingFingerprint($"text",
-          operators.Dedup.md5Hash60).as("fingerprint"))
-      val blocklist = docs.filter($"doc_id" % 13 === 0).select($"fingerprint")
-      operators.TextAnalysis.decontaminate(docs, blocklist, "fingerprint")
-        .select($"doc_id", $"fingerprint")
-        .orderBy($"doc_id")
-    }),
-
-    // Corpus vocabulary heavy-hitters: token frequency top-k with a
-    // deterministic tie-break — partial-aggregated token counts, one
-    // shuffle, TakeOrdered(k)
-    "q37_vocab_topk" -> ((s, d) => {
-      operators.TextAnalysis.topTokens(t(s, d, "documents"), "text", 50)
-    }),
-
-    // Sequence packing (concat-and-chunk): docs laid end-to-end in id
-    // order within a shard, cut every 2048 tokens — each doc tagged
-    // with the sequence it starts in and its offset. The shard key is
-    // the parallelism unit (real pipelines pack per output shard);
-    // the oracle recomputes the running token count as a window sum.
-    "q41_sequence_pack" -> ((s, d) => {
-      val docs = t(s, d, "documents").select($"doc_id",
-        ($"doc_id" % 8).as("shard"),
-        operators.TextAnalysis.tokenCount($"text").as("n_tokens"))
-      operators.Curation.packSequences(docs, "doc_id", "n_tokens", 2048,
-          keys = Seq("shard"))
-        .select($"doc_id", $"shard", $"seq_id", $"seq_offset")
-        .orderBy($"doc_id")
-    }),
-
-    // PII redaction: deterministic synthetic emails/IPs appended to
-    // every doc, redacted by the shared RE2-portable patterns; the
-    // gate pins match counts AND the md5 of the redacted text.
-    "q42_pii_redact" -> ((s, d) => {
-      val docs = t(s, d, "documents").select($"doc_id",
-        concat($"text", lit(" contact user"), $"doc_id".cast("string"),
-          lit("@example.com from 10.0."),
-          pmod($"doc_id", lit(256)).cast("string"), lit(".7")).as("text"))
-      operators.Curation.redactPii(docs, "text")
-        .select($"doc_id", $"n_emails", $"n_ips",
-          md5($"redacted").as("red_md5"))
-        .orderBy($"doc_id")
-    }),
-
-    // Stratified deterministic sampling (sampleBy without RNG): each
-    // event_type keeps its own hash-bucket fraction; membership is a
-    // pure function of event_id so the oracle recomputes every row.
-    "q43_stratified_sample" -> ((s, d) => {
-      operators.Curation.stratifiedHashSample(t(s, d, "events"),
-          "event_id", "event_type",
-          Map("click" -> 0.2, "view" -> 0.1, "purchase" -> 1.0),
-          defaultRate = 0.05, hashFn = operators.Dedup.md5Hash60)
-        .select($"event_id", $"event_type")
-        .orderBy($"event_id")
-    }),
-
-    // Intra-document repetition removal: repeated lines dropped
-    // keep-first in original order (the boilerplate filter). Corpus =
-    // each doc tripled around a unique tail line, so ground truth is
-    // exactly (text, tail); the oracle still recomputes the full
-    // split→first-occurrence→reassemble pipeline in SQL.
-    "q44_repeat_lines" -> ((s, d) => {
-      val docs = t(s, d, "documents").select($"doc_id",
-        concat_ws("\n", $"text", $"text",
-          concat(lit("tail "), $"doc_id".cast("string")), $"text").as("text"))
-      operators.Curation.dropRepeatedLines(docs, "doc_id", "text")
-        .select($"doc_id", $"n_lines", $"n_unique_lines",
-          md5($"dedup_text").as("dedup_md5"))
-        .orderBy($"doc_id")
-    }),
-
-    // Weighted domain mixing: deterministic fractional upsampling —
-    // floor(w) copies plus one hash-selected extra for the fractional
-    // part, so realized multiplicity is a pure function of the key.
-    "q45_upsample_mix" -> ((s, d) => {
-      val w = when($"event_type" === "purchase", 2.5)
-        .when($"event_type" === "click", 0.5).otherwise(1.0)
-      operators.Curation.upsampleByWeight(t(s, d, "events"), "event_id", w,
-          hashFn = operators.Dedup.md5Hash60)
-        .select($"event_id", $"event_type", $"copy")
-        .orderBy($"event_id", $"copy")
-    }),
-
-    // TF-IDF top terms per document: corpus-level statistical term
-    // weighting — two hash aggregates + vocabulary join + per-doc
-    // top-k window; ranking on the ROUNDED score so both engines
-    // agree on ties (then token breaks them).
-    "q46_tfidf" -> ((s, d) => {
-      operators.TextAnalysis.tfidfTopTerms(t(s, d, "documents"),
-          "doc_id", "text", 3)
-        .orderBy($"doc_id", $"rank")
-    }),
-
-    // Sliding-window token chunking (50-token windows, 10-token
-    // overlap): the RAG/long-doc context splitter as a pure per-row
-    // generator. The gate pins chunk counts, per-chunk token counts
-    // and the md5 of every chunk's text.
-    "q47_chunk_overlap" -> ((s, d) => {
-      operators.Curation.chunkByTokens(t(s, d, "documents"),
-          "doc_id", "text", 50, 10)
-        .select($"doc_id", $"chunk_id", $"chunk_tokens",
-          md5($"chunk_text").as("chunk_md5"))
-        .orderBy($"doc_id", $"chunk_id")
-    }),
-
-    // Salted two-phase aggregation over hot keys (5 event types share
-    // all rows — maximal key skew): per-(key, salt) partials recombine
-    // exactly for algebraic aggregates, so the oracle is the PLAIN
-    // unsalted aggregate — the gate pins the decomposition's
-    // correctness, q01-style rounding absorbs double-sum order.
-    "q48_salted_agg" -> ((s, d) => {
-      operators.Skew.saltedSumStats(t(s, d, "events"),
-          Seq("event_type"), "value", salts = 16)
-        .select($"event_type", round($"sum_value", 2).as("sum_value"),
-          $"n", $"min_value", $"max_value")
-        .orderBy($"event_type")
-    }),
-
-    // Cross-corpus fuzzy contamination pairs: training docs vs a
-    // lightly-edited benchmark set (every 13th doc + appended tokens)
-    // via the two-sided gram bucket join — the lightly-EDITED
-    // contamination the exact fingerprint anti-join (q38) cannot see
-    // (EMBEDDED passages are q51's containment mode — symmetric
-    // Jaccard misses those by construction). The oracle computes the
-    // exhaustive cross-Jaccard, so the gate pins full recall of the
-    // bucketed path ON THIS CORPUS — a production corpus with grams
-    // hotter than maxBucket trades recall, visible only through the
-    // dropped_buckets observe metric (surfaced by Verify's listener).
-    "q49_cross_contamination" -> ((s, d) => {
-      val docs = t(s, d, "documents").select($"doc_id", $"text")
-      val bench = t(s, d, "documents").filter($"doc_id" % 13 === 0)
-        .select(($"doc_id" + 1000000L).as("doc_id"),
-          concat($"text", lit(" extra trailing token")).as("text"))
-      operators.Dedup.crossJaccardNearDups(docs, bench, "doc_id", "text",
-          n = 4, threshold = 0.5)
-        .select($"a", $"b")
-        .orderBy($"a", $"b")
-    }),
-
-    // The full curate() pipeline as ONE gate: quality filter → exact
-    // dedup → near-dup components → containment decontamination →
-    // hash split/shard → per-shard sequence packing, against an oracle
-    // that recomputes every stage in SQL (q27's quality formula, q15's
-    // keep-min dedup, q34's recursive-CTE closure, q36's md5 buckets,
-    // q41's window pack). A composition bug any single-stage gate
-    // can't see — the split column leaking into packing keys, the anti
-    // join dropping the wrong side — breaks the final
-    // (doc_id, split, shard, seq_id, seq_offset) tuple.
-    "q50_curate" -> ((s, d) => {
-      val docs = t(s, d, "documents").select($"doc_id", $"text")
-      val bench = docs.filter($"doc_id" % 23 === 0)
-        .select(($"doc_id" + 3000000L).as("doc_id"),
-          concat_ws(" ", slice(split(trim($"text"), "\\s+"), 2, 20)).as("text"))
-      operators.Curation.curate(dupCorpus(t(s, d, "documents")), "doc_id",
-          "text", benchmark = Some(bench),
-          cfg = operators.Curation.CurateConfig(
-            minQuality = 0.3,
-            nearDupNgram = 4, nearDupThreshold = 0.5,
-            decontamNgram = 4, decontamThreshold = 0.8,
-            decontamContainment = true,
-            splits = Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1),
-            seqLen = 2048, packShards = 8,
-            hashFn = operators.Dedup.md5Hash60))
-        .select($"doc_id", $"split", $"shard", $"seq_id", $"seq_offset")
-        .orderBy($"doc_id")
-    }),
-
-    // Embedded-passage decontamination: benchmark items are 20-token
-    // passages lifted VERBATIM from every 17th doc — symmetric Jaccard
-    // scores a short passage near zero against its 100-token source
-    // (q49's mode misses embedded contamination by construction), so
-    // this gate pins the containment mode (|shared grams| / |benchmark
-    // grams| = 1.0 for a verbatim passage) against an exhaustive
-    // cross-containment oracle: the surviving doc set must match.
-    "q51_containment_decontam" -> ((s, d) => {
-      val docs = t(s, d, "documents").select($"doc_id", $"text")
-      val bench = docs.filter($"doc_id" % 17 === 0)
-        .select(($"doc_id" + 2000000L).as("doc_id"),
-          concat_ws(" ", slice(split(trim($"text"), "\\s+"), 3, 20)).as("text"))
-      operators.TextAnalysis.fuzzyDecontaminate(docs, bench, "doc_id",
-          "text", n = 4, threshold = 0.8, containment = true)
-        .select($"doc_id")
-        .orderBy($"doc_id")
-    }),
-
-    // §3 E1-E4 — the season pipeline END-TO-END in the canonical stage
-    // order of main_2020.py:209-213: parse → unify(reference-DB clip)
-    // → resample(1min) → unify_forecast (−3h shift_back_localize,
-    // event slice, POA, trapezoidal energy) → unify_gps (as-of ffill).
-    // The mini-season is generated deterministically from `events`
-    // (sorted candump logs with unknown-topic/short-frame rejects, a
-    // 300 s Solcast CSV, a 10-point GPX track), and the oracle
-    // recomputes EVERY stage in SQL: the Q1/Q3 decode quirks, bucket
-    // means, the dense grid, gap-limited interpolation, the shifted
-    // forecast alignment, the full PSA solar-position closed forms,
-    // cumtrapz energy, GPS speed/heading/distance (incl. quirk Q7) and
-    // the as-of join — the composition-level gate VERDICT r5 asked for.
-    "q65_season_e2e" -> ((s, d) => {
-      val tmp = q65Fixtures(s, d)
-      val cfg = graft.pipeline.Seasons.SeasonConfig(
-        name = "q65", canIdsPath = s"$tmp/can_ids.json",
-        mab20Workaround = false, shiftBackLocalize = true,
-        site = Some(graft.pipeline.SolarStage.Site(-26.243602, -48.6417668)),
-        event = Some(("2024-01-10 11:00:00", "2024-01-10 16:00:00")),
-        resamplePeriods = Seq("1min"),
-        datasets = Seq(
-          graft.pipeline.Seasons.DatasetFiles(s"$tmp/main_log/part-*"),
-          graft.pipeline.Seasons.DatasetFiles(s"$tmp/db_log/part-*",
-            isReferenceDb = true)))
-      // EMPTIED output dir per invocation: the parse stage's S9
-      // skip-if-exists would otherwise turn a repeat run (bench run 2)
-      // into a parquet re-read instead of a full parse — and a fresh
-      // createTempDirectory per run would leak season output into
-      // /tmp across bench/verify invocations (one reusable dir per
-      // query, wiped on entry and deleted on JVM exit)
-      val outDir = seasonOutDir("q65")
-      val out = graft.pipeline.Seasons.run(s, cfg, outDir,
-        forecastCsv = Some(s"$tmp/solcast.csv"),
-        gpxFiles = Seq(s"$tmp/track.gpx"), resamplePeriod = "1min")
-      out.select(col("timestamp"),
-        round(col("MOD17__SENSOR__SIGNATURE"), 6).as("s_signature"),
-        round(col("MOD17__SENSOR__CURR"), 6).as("s_curr"),
-        round(col("MOD17__SENSOR__DUTY"), 6).as("s_duty"),
-        round(col("MOD17__SENSOR__FLAG1"), 6).as("s_flag1"),
-        round(col("MOD17__SENSOR__FLAG2"), 6).as("s_flag2"),
-        round(col("solcast_dni"), 6).as("solcast_dni"),
-        round(col("solcast_ghi"), 6).as("solcast_ghi"),
-        round(col("solcast_dhi"), 6).as("solcast_dhi"),
-        round(col("solcast_airmass"), 6).as("solcast_airmass"),
-        round(col("solcast_albedo"), 6).as("solcast_albedo"),
-        round(col("solcast_poa"), 6).as("solcast_poa"),
-        round(col("solcast_energy"), 6).as("solcast_energy"),
-        round(col("gps_latitude"), 6).as("gps_latitude"),
-        round(col("gps_longitude"), 6).as("gps_longitude"),
-        round(col("gps_altitude"), 6).as("gps_altitude"),
-        round(col("gps_speed"), 6).as("gps_speed"),
-        round(col("gps_heading"), 6).as("gps_heading"),
-        round(col("gps_distance"), 6).as("gps_distance"))
-        .orderBy($"timestamp")
-    }),
-
-    // Q5 + clock-offset composition gate (VERDICT r6 gap #1): the q65
-    // mini-season re-run with `mab20Workaround = true` and a nonzero
-    // `to − from` clock fix (+45 min 30.123456 s, derived through
-    // DatasetFiles.withClockFix exactly as main_2020.py:35-65 declares
-    // its datasets). The main log carries topic 0x41 frames with a
-    // WRONG raw signature byte + 6 junk tail bytes (decodable only
-    // through the forced-signature + 2-byte truncation of
-    // lib/canparser.py:127-133) and topic 0x40 frames with a wrong
-    // signature byte (forced to 230) — without the workaround every
-    // one is silently dropped and the MAB19 columns come out empty.
-    // The reference-DB log keeps offset 0, so the unify clip runs
-    // against SHIFTED main bounds (the cross-dataset interaction an
-    // offset-vs-crop ordering bug would corrupt), and the µs-odd
-    // offset moves every value to a different minute bucket than
-    // q65's. The oracle recomputes the shifted decode and all five
-    // stages in SQL.
-    "q73_season_mab20" -> ((s, d) => {
-      val tmp = q65Fixtures(s, d)
-      val cfg = graft.pipeline.Seasons.SeasonConfig(
-        name = "q73", canIdsPath = s"$tmp/can_ids_mab.json",
-        mab20Workaround = true, shiftBackLocalize = true,
-        site = Some(graft.pipeline.SolarStage.Site(-26.243602, -48.6417668)),
-        event = Some(("2024-01-10 11:00:00", "2024-01-10 16:00:00")),
-        resamplePeriods = Seq("1min"),
-        datasets = Seq(
-          graft.pipeline.Seasons.DatasetFiles.withClockFix(
-            s"$tmp/main_mab_log/part-*",
-            java.time.LocalDateTime.parse("2024-01-10T10:00:00"),
-            java.time.LocalDateTime.parse("2024-01-10T10:45:30.123456")),
-          graft.pipeline.Seasons.DatasetFiles(s"$tmp/db_log/part-*",
-            isReferenceDb = true)))
-      val outDir = seasonOutDir("q73")
-      val out = graft.pipeline.Seasons.run(s, cfg, outDir,
-        forecastCsv = Some(s"$tmp/solcast.csv"),
-        gpxFiles = Seq(s"$tmp/track.gpx"), resamplePeriod = "1min")
-      out.select(col("timestamp"),
-        round(col("MOD17__SENSOR__CURR"), 6).as("s_curr"),
-        round(col("MAB19__STATE__STATE"), 6).as("mab_state"),
-        round(col("MAB19__STATE__ERROR"), 6).as("mab_error"),
-        round(col("MAB19__PUMPS__PUMPS"), 6).as("mab_pumps"),
-        round(col("solcast_poa"), 6).as("solcast_poa"),
-        round(col("solcast_energy"), 6).as("solcast_energy"),
-        round(col("gps_speed"), 6).as("gps_speed"),
-        round(col("gps_distance"), 6).as("gps_distance"))
-        .orderBy($"timestamp")
-    }),
-
-    // runAll multi-period reuse gate (VERDICT r6 gap #3): the per-period
-    // driver loop (main_2020.py:137-150) parses once into
-    // `parsed_<name>_*` and resamples per period through the S9
-    // skip-if-exists — period 2 READS period 1's parsed parquet
-    // instead of re-parsing (the write-once/read-twice contract is
-    // spec-pinned via a QueryExecutionListener in StreamingSeasonSpec;
-    // this row pins that the reuse also loses NOTHING: both periods'
-    // final tables match an oracle that re-derives each period from
-    // the raw events independently).
-    "q75_multi_period" -> ((s, d) => {
-      val tmp = q65Fixtures(s, d)
-      val cfg = graft.pipeline.Seasons.SeasonConfig(
-        name = "q75", canIdsPath = s"$tmp/can_ids.json",
-        mab20Workaround = false, shiftBackLocalize = false,
-        site = None, resamplePeriods = Seq("1min", "2min"),
-        datasets = Seq(
-          graft.pipeline.Seasons.DatasetFiles(s"$tmp/main_log/part-*"),
-          graft.pipeline.Seasons.DatasetFiles(s"$tmp/db_log/part-*",
-            isReferenceDb = true)))
-      val outDir = seasonOutDir("q75")
-      graft.pipeline.Seasons.runAll(s, cfg, outDir)
-      Seq("1min", "2min").map { p =>
-        s.read.parquet(s"$outDir/$p/final_q75")
-          .select(lit(p).as("period"), col("timestamp"),
-            round(col("MOD17__SENSOR__CURR"), 6).as("s_curr"),
-            round(col("MOD17__SENSOR__DUTY"), 6).as("s_duty"),
-            round(col("MOD17__SENSOR__FLAG1"), 6).as("s_flag1"))
-      }.reduce(_ unionByName _).orderBy($"period", $"timestamp")
-    }),
-
-    // S8/F6: the Mongo-dump → candump converter
-    // (convert_json_to_candump.py:45-162) as a value gate — records
-    // built from `events` (decimal-STRING byte arrays, exactly the
-    // dump's shape; every 59th record gets an empty bytes array and
-    // must be skipped), converted through toCandumpLines; the oracle
-    // recomputes the 10.6-digit epoch prefix and the lowercase
-    // zero-padded hex payload with printf. `ts` is globally unique in
-    // the testdata, so the reference's sort-by-date is a total order.
-    "q81_candump_convert" -> ((s, d) => {
-      val ev = t(s, d, "events")
-      val recs = ev.select(
-        date_format($"ts", "yyyy-MM-dd HH:mm:ss.SSSSSS").as("date"),
-        ($"user_id" % 256).cast("int").as("mod"),
-        ($"event_id" % 1024).cast("int").as("top"),
-        when($"event_id" % 59 === 0, array().cast("array<string>"))
-          .otherwise(array(($"event_id" % 256).cast("string"),
-            ($"user_id" % 256).cast("string"), lit("7"))).as("bytes"))
-      sources.CandumpConverter.toCandumpLines(recs)
-    }),
-
-    // A6/Q10: the lag-k timestamp-jump outlier filter
-    // (lib/canparser.py:244-260) as a value gate. Synthetic per-key
-    // spacing straddles the (1e11, 1e12) ns drop band at k=50 — even
-    // user parities step 3 s (lag-50 diff lands IN the band → rows
-    // beyond the first window drop), odd parities step 30 s (diff
-    // beyond the band → all kept) — and `click` rows are exempt (the
-    // Q10 'db'-file skip, as a predicate). The oracle recomputes the
-    // lag window and band test.
-    "q82_jump_filter" -> ((s, d) => {
-      val ev = t(s, d, "events")
-      val fix = ev.select(($"user_id" % 4).as("k"), $"event_id",
-        expr("timestamp_micros(1704067200000000 + event_id * " +
-          "(CASE WHEN user_id % 2 = 0 THEN 3000000 ELSE 30000000 END))")
-          .as("tsx"),
-        $"event_type")
-      TimeSeries.timestampJumpFilter(fix, "tsx", Seq("k"), k = 50,
-          orderTieBreak = Seq("event_id"),
-          exempt = $"event_type" === "click")
-        .select($"k", $"event_id")
-        .orderBy($"k", $"event_id")
-    }),
-
-    // F1: haversine distance between consecutive synthetic GPS points
-    // (lib/process_gpx_data.py:26-37)
-    "q20_haversine" -> ((s, d) => {
-      val w = Window.partitionBy($"user_id").orderBy($"ts", $"event_id")
-      val ev = t(s, d, "events")
-        .withColumn("lat", lit(-26.0) + $"value" / 100.0)
-        .withColumn("lon", lit(-48.0) + ($"event_id" % 100).cast("double") / 100.0)
-        .withColumn("plat", lag($"lat", 1).over(w))
-        .withColumn("plon", lag($"lon", 1).over(w))
-      ev.select($"user_id", $"event_id",
-          round(graft.functions.Geo.haversineKm($"plat", $"plon", $"lat", $"lon"), 6)
-            .as("dist_km"))
-        .orderBy($"user_id", $"event_id")
-    })
-  )
-
-  /** The q21 candump fixture LINES — a synthetic candump corpus
-    * derived from `events`. Payload layout mirrors
-    * [[graft.sources.CanFixtures]]: sig 0x11, CURR=user_id (u16le),
-    * DUTY=event_id%256, flags byte=event_id%4, one byte of padding to
-    * satisfy the Q3 over-counted length (6). Injected rejects:
-    * garbage non-frame text, unknown topic 0x22 every 101st event,
-    * short 4-byte frame every 103rd. Shared by the batch decode gates
-    * (q21/q22, via [[canLong]]) and the streaming decode gate (q79,
-    * which writes these lines as text files and parses them through
-    * [[graft.streaming.StreamingParse.decodedStream]]). */
-  private def canLines(events: DataFrame): DataFrame = {
-    val b = (c: Column) => lpad(hex(c), 2, "0")
-    val payloadOk = concat(lit("11"),
-      b(expr("user_id % 256")), b(expr("user_id div 256")),
-      b(expr("event_id % 256")), b(expr("event_id % 4")), lit("00"))
-    val payloadShort = concat(lit("11"),
-      b(expr("user_id % 256")), b(expr("user_id div 256")),
-      b(expr("event_id % 256")))
-    val topicStr = when(expr("event_id % 101 = 0"), lit("022")).otherwise(lit("021"))
-    val payload = when(expr("event_id % 103 = 0"), payloadShort).otherwise(payloadOk)
-    val lines = events.select(
-      format_string("(%d.%06d) can0 %s#%s",
-        expr("unix_micros(ts) div 1000000"), expr("unix_micros(ts) % 1000000"),
-        topicStr, payload).as("line"),
-      lit("gen.log").as("file"))
-    val garbage = events.sparkSession.range(1).select(
-      lit("(1580415599.609) can0 0z1#XYZW not-a-frame").as("line"),
-      lit("gen.log").as("file"))
-    lines.unionByName(garbage)
-  }
-
-  private def canLong(events: DataFrame): DataFrame = {
-    val frames = graft.sources.Candump.framesFromLines(canLines(events))
-    operators.CanDecode.decodeLong(frames, graft.sources.CanFixtures.schema)
-  }
-
-  /** Reusable season-pipeline output dir, one per query tag: created
-    * once per JVM, WIPED on every call (so the S9 skip-if-exists never
-    * short-circuits a timed re-run) and deleted on JVM exit — repeated
-    * bench/verify runs must not accumulate season parquet in /tmp. */
-  private val seasonOutDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, java.nio.file.Path]()
-  private def seasonOutDir(tag: String): String = {
-    val p = seasonOutDirs.computeIfAbsent(tag, t => {
-      val dir = java.nio.file.Files.createTempDirectory(s"graft_${t}_out")
-      Runtime.getRuntime.addShutdownHook(new Thread(() => deleteTree(dir)))
-      dir
-    })
-    // wipe contents, keep the dir itself
-    if (java.nio.file.Files.exists(p)) {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(p).sorted(java.util.Comparator.reverseOrder())
-        .iterator().asScala.filterNot(_ == p)
-        .foreach(java.nio.file.Files.deleteIfExists(_))
-    }
-    p.toString
-  }
-  private def deleteTree(p: java.nio.file.Path): Unit =
-    if (java.nio.file.Files.exists(p)) {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(p).sorted(java.util.Comparator.reverseOrder())
-        .iterator().asScala.foreach(java.nio.file.Files.deleteIfExists(_))
-    }
-
-  /** Streaming-gate fixtures (q77–q79), memoized per sfDir like
-    * [[q65Fixtures]]: `events/` holds the events table as several
-    * parquet files (so `maxFilesPerTrigger` yields several
-    * micro-batches and cross-batch watermark/state is actually
-    * exercised) PLUS one sentinel row 400 days past the real range,
-    * written as a separate file whose mtime is forced 60 s later —
-    * the file source processes oldest-mtime first (FileStreamSource
-    * sorts fetched files by modification timestamp unless
-    * `latestFirst` is set), so the sentinel arrives in the FINAL
-    * micro-batch, driving the closing watermark
-    * past every real bin (append-mode aggregations then flush them
-    * all, while the sentinel's own bin stays in state and never
-    * emits). `candump/` holds the q21 fixture lines as text files
-    * for the streaming decode gate. */
-  private val streamFixtureCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private def streamFixtures(s: SparkSession, d: String): String =
-    streamFixtureCache.computeIfAbsent(d, _ => {
-      import java.nio.file.{Files, Path}
-      val dir = Files.createTempDirectory("graft_stream_fix")
-      Runtime.getRuntime.addShutdownHook(new Thread(() => deleteTree(dir)))
-      val ev = t(s, d, "events")
-        .select(col("ts"), col("user_id"), col("event_id"), col("value"),
-          col("event_type"))
-      val evDir = dir.resolve("events")
-      ev.repartition(4).write.parquet(evDir.toString)
-      val maxTs = ev.agg(max(col("ts"))).collect()(0).getTimestamp(0)
-      val sentinelTs =
-        new java.sql.Timestamp(maxTs.getTime + 400L * 24 * 3600 * 1000)
-      val sentinel = s.range(1).select(
-        lit(sentinelTs).as("ts"),
-        lit(-1L).cast(ev.schema("user_id").dataType).as("user_id"),
-        lit(-1L).cast(ev.schema("event_id").dataType).as("event_id"),
-        lit(0.0).as("value"), lit("__sentinel").as("event_type"))
-      val stage = dir.resolve("sentinel_stage")
-      sentinel.coalesce(1).write.parquet(stage.toString)
-      import scala.jdk.CollectionConverters._
-      val part = Files.list(stage).iterator().asScala
-        .find(_.getFileName.toString.startsWith("part-")).get
-      val dst = evDir.resolve("part-99999-sentinel.snappy.parquet")
-      Files.move(part, dst)
-      Files.setLastModifiedTime(dst, java.nio.file.attribute.FileTime
-        .fromMillis(System.currentTimeMillis() + 60000L))
-      canLines(t(s, d, "events")).select(col("line"))
-        .repartition(2).write.text(dir.resolve("candump").toString)
-      // documents/: the q114 ingestion stream — the non-accepted docs,
-      // where every %3==1 doc is a DISGUISED RE-CRAWL of the accepted
-      // doc just below it (case flip, digits rewritten, punctuation
-      // and padding added — exactly the variation the CCNet hash key
-      // collapses) and %3==2 docs are novel. Deterministic function
-      // of `documents`, so the DuckDB oracle regenerates it exactly.
-      val allDocs = t(s, d, "documents")
-        .select(col("doc_id"), col("lang"), col("text"))
-      val below = allDocs.select((col("doc_id") + 1).as("doc_id"),
-        col("text").as("__src"))
-      allDocs.filter(col("doc_id") % 3 =!= 0)
-        .join(below, Seq("doc_id"), "left")
-        .select(col("doc_id"),
-          when(col("doc_id") % 3 === 1 && col("__src").isNotNull,
-            concat(lit("  "), upper(translate(col("__src"),
-              "0123456789", "5555555555")), lit(" !!! ")))
-          .otherwise(col("text")).as("text"))
-        .repartition(4).write.parquet(dir.resolve("documents").toString)
-      // documents_plain/: the UNMODIFIED corpus as a multi-file stream
-      // source (q115 scores the same docs the batch calibration saw —
-      // parity must hold row-for-row)
-      allDocs.select(col("doc_id"), col("lang"), col("text"))
-        .repartition(4)
-        .write.parquet(dir.resolve("documents_plain").toString)
-      // embeddings_stream/: the q120 vector-admission stream — the
-      // non-accepted embeddings, where every %3==1 vector is a
-      // disguised RE-EMBED of the accepted vector just below it
-      // (x·1.001 + 0.0005 — same direction, so it lands its source's
-      // max-cosine IVF cell) and %3==2 vectors are novel.
-      // Deterministic function of `embeddings`, so the DuckDB oracle
-      // regenerates it exactly.
-      val emb = t(s, d, "embeddings").select(col("vec_id"), col("embedding"))
-      val embBelow = emb.select((col("vec_id") + 1).as("vec_id"),
-        col("embedding").as("__src"))
-      emb.filter(col("vec_id") % 3 =!= 0)
-        .join(embBelow, Seq("vec_id"), "left")
-        .select(col("vec_id"),
-          when(col("vec_id") % 3 === 1 && col("__src").isNotNull,
-            expr("transform(__src, x -> CAST(x AS DOUBLE) * 1.001 + 0.0005)"))
-          .otherwise(expr("transform(embedding, x -> CAST(x AS DOUBLE))"))
-          .as("embedding"))
-        .repartition(4).write.parquet(dir.resolve("embeddings_stream").toString)
-      // events_sorted/: time-RANGE-partitioned files with ascending
-      // mtimes, so the file source (oldest-mtime first) delivers each
-      // user's events in event-time order ACROSS micro-batches — the
-      // in-order-source premise StatefulSessionize documents (its
-      // per-batch sort handles intra-batch disorder; q80 gates the
-      // cross-batch state machine against the batch window SQL)
-      val sortedDir = dir.resolve("events_sorted")
-      ev.repartitionByRange(4, col("ts")).sortWithinPartitions("ts")
-        .write.parquet(sortedDir.toString)
-      Files.list(sortedDir).iterator().asScala.toSeq
-        .filter(_.getFileName.toString.startsWith("part-"))
-        .sortBy(_.getFileName.toString)
-        .zipWithIndex.foreach { case (p, i) =>
-          Files.setLastModifiedTime(p, java.nio.file.attribute.FileTime
-            .fromMillis(System.currentTimeMillis() + i * 1000L))
-        }
-      dir.toString
-    })
-
-  /** Run a streaming frame to completion (Trigger.AvailableNow) into a
-    * memory sink and return the materialized table — the harness that
-    * lets a `queries` entry gate a STREAMING operator against the
-    * batch DuckDB oracle. The sink name is deterministic per gate
-    * (`tag`) and the previous run's temp view is dropped first:
-    * memory-sink rows live on the driver heap, so unique-per-
-    * invocation names would accumulate a full output copy per bench
-    * warm/timed/retry run (q79 holds ~half a million decoded rows at
-    * sf0.1 — four stranded copies is real GC pressure for every
-    * query benched after it). */
-  /** q74's bucketed index table, built once per sfDir (table name
-    * embeds the SANITIZED dir — not a 32-bit hash, whose collisions
-    * would alias two dirs onto one table and silently serve the wrong
-    * corpus's index — so specs at sf0.001 and a bench at sf0.1 never
-    * share one). */
-  private val q74IndexTables =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  private def runStreamToTable(s: SparkSession, df: DataFrame,
-                               mode: String, tag: String): DataFrame = {
-    val name = s"graft_stream_$tag"
-    s.catalog.dropTempView(name)
-    val q = df.writeStream.format("memory").queryName(name)
-      .outputMode(mode)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    s.table(name)
-  }
-
-  /** q65 mini-season fixtures (can_ids JSON, sorted main/reference-DB
-    * candump logs derived from `events`, a 300 s Solcast CSV, a
-    * 10-point GPX track) written into a fresh temp dir; returns its
-    * path (registered for deletion at JVM exit). Every value is a
-    * literal or a deterministic function of
-    * `events` columns so the DuckDB oracle regenerates it exactly.
-    * The main log injects the q21 rejects (unknown topic 0x22 every
-    * 101st event, short 4-byte frame every 103rd); the reference-DB
-    * log spans a WIDER time range than the main log so the unify
-    * stage's clip-to-[min,max] (J1) actually removes rows. */
-  private val q65FixtureCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** Memoized per sfDir for the JVM's lifetime: the fixtures are
-    * INPUT data (a deterministic function of `events`), so
-    * regenerating them on every invocation would bill two Spark
-    * sort+write jobs to each timed bench run of the season pipeline
-    * itself. Verify calls once either way; Bench's warm-up pays the
-    * build and the timed runs measure parse→unify→forecast→gps. */
-  private def q65Fixtures(s: SparkSession, d: String): String =
-    q65FixtureCache.computeIfAbsent(d, dir => buildQ65Fixtures(s, dir))
-
-  private def buildQ65Fixtures(s: SparkSession, d: String): String = {
-    import java.nio.file.{Files, Paths}
-    val tmp = Files.createTempDirectory("graft_q65").toString
-    Runtime.getRuntime.addShutdownHook(new Thread(() =>
-      deleteTree(Paths.get(tmp))))
-    Files.writeString(Paths.get(s"$tmp/can_ids.json"),
-      graft.sources.CanFixtures.json)
-    val ev = t(s, d, "events")
-    val b = (c: Column) => lpad(hex(c), 2, "0")
-    val payloadOk = concat(lit("11"),
-      b(expr("user_id % 256")), b(expr("user_id div 256")),
-      b(expr("event_id % 256")), b(expr("event_id % 4")), lit("00"))
-    val payloadShort = concat(lit("11"),
-      b(expr("user_id % 256")), b(expr("user_id div 256")),
-      b(expr("event_id % 256")))
-    // file-order-dependent semantics (crop Q2) need a deterministic
-    // file: one sorted part per log
-    def dump(df: DataFrame, topic: Column, payload: Column, path: String): Unit =
-      df.select(format_string("(%d.%06d) can0 %s#%s",
-          expr("unix_micros(ts) div 1000000"), expr("unix_micros(ts) % 1000000"),
-          topic, payload).as("value"), col("ts"), col("event_id"))
-        .repartition(1).sortWithinPartitions("ts", "event_id").select("value")
-        .write.mode("overwrite").text(path)
-    dump(ev.filter(expr(
-        "ts BETWEEN TIMESTAMP'2024-01-08 09:00:00' AND TIMESTAMP'2024-01-11 21:00:00'" +
-          " AND event_id % 3 != 0")),
-      when(expr("event_id % 101 = 0"), lit("022")).otherwise(lit("021")),
-      when(expr("event_id % 103 = 0"), payloadShort).otherwise(payloadOk),
-      s"$tmp/main_log")
-    dump(ev.filter(expr(
-        "ts BETWEEN TIMESTAMP'2024-01-08 00:00:00' AND TIMESTAMP'2024-01-12 00:00:00'" +
-          " AND event_id % 3 = 0")),
-      lit("021"), payloadOk, s"$tmp/db_log")
-    // q73 main log: the q65 MOD17 lines (same rejects) PLUS the Q5
-    // mab20 traps — topic 041 frames with a WRONG raw signature byte
-    // (0x22) and 6 junk tail bytes (decodable only through the forced
-    // signature + 2-byte truncation) on every 5k+1th event, and topic
-    // 040 frames with raw signature byte 0x11 (forced to 230) on every
-    // 5k+2th. Without the workaround every one of these frames is
-    // silently dropped; with it they decode as MAB19 STATE/PUMPS.
-    Files.writeString(Paths.get(s"$tmp/can_ids_mab.json"),
-      graft.sources.CanFixtures.jsonMab)
-    val mabBase = ev.filter(expr(
-      "ts BETWEEN TIMESTAMP'2024-01-08 09:00:00' AND TIMESTAMP'2024-01-11 21:00:00'" +
-        " AND event_id % 3 != 0"))
-    def mabLines(df: DataFrame, topic: Column, payload: Column): DataFrame =
-      df.select(format_string("(%d.%06d) can0 %s#%s",
-        expr("unix_micros(ts) div 1000000"), expr("unix_micros(ts) % 1000000"),
-        topic, payload).as("value"), col("ts"), col("event_id"))
-    val mod17Lines = mabLines(mabBase,
-      when(expr("event_id % 101 = 0"), lit("022")).otherwise(lit("021")),
-      when(expr("event_id % 103 = 0"), payloadShort).otherwise(payloadOk))
-    val pumpsLines = mabLines(mabBase.filter(expr("event_id % 5 = 1")),
-      lit("041"), concat(lit("22"), b(expr("event_id % 256")),
-        lit("AABBCCDDEE00")))
-    val stateLines = mabLines(mabBase.filter(expr("event_id % 5 = 2")),
-      lit("040"), concat(lit("11"), b(expr("user_id % 256")),
-        b(expr("event_id % 7"))))
-    mod17Lines.unionByName(pumpsLines).unionByName(stateLines)
-      .repartition(1).sortWithinPartitions("ts", "event_id", "value")
-      .select("value")
-      .write.mode("overwrite").text(s"$tmp/main_mab_log")
-    // Solcast CSV: 300 s ticks 10:00→17:00 UTC; values are exact
-    // binary doubles (20.0/10.0/5.0/0.125 steps) so CSV round-trip and
-    // the oracle's regeneration are bit-identical
-    val fcBase = java.time.Instant.parse("2024-01-10T10:00:00Z")
-    val fcRows = (0 to 84).map { i =>
-      s"${fcBase.plusSeconds(i * 300L)},${500.0 + (i % 7) * 20.0}," +
-        s"${300.0 + (i % 5) * 10.0},${100.0 + (i % 3) * 5.0}," +
-        s"${1.5 + (i % 4) * 0.125},0.06"
-    }
-    Files.writeString(Paths.get(s"$tmp/solcast.csv"),
-      ("PeriodStart,Dni,Ghi,Dhi,Airmass,AlbedoDaily" +: fcRows).mkString("\n"))
-    // GPX: 10 points every 25 min from 09:30; %.3f-printed literals so
-    // the oracle's VALUES list parses to the same doubles
-    val gpxBase = java.time.Instant.parse("2024-01-10T09:30:00Z")
-    val pts = (0 to 9).map { k =>
-      f"""<trkpt lat="${-26.240 + 0.003 * k}%.3f" lon="${-48.640 + 0.002 * k}%.3f">""" +
-        s"<ele>${5.0 + k}</ele><time>${gpxBase.plusSeconds(k * 1500L)}</time></trkpt>"
-    }
-    Files.writeString(Paths.get(s"$tmp/track.gpx"),
-      "<?xml version=\"1.0\"?><gpx><trk><trkseg>" + pts.mkString +
-        "</trkseg></trk></gpx>")
-    tmp
-  }
-
-  /** documents ∪ perturbed copies of every 7th doc (ids +1,000,000) —
-    * the near-dup test corpus shared by q24/q25. */
-  private def dupCorpus(docs: DataFrame): DataFrame =
-    docs.select($"doc_id", $"text").unionByName(
-      docs.filter(expr("doc_id % 7 = 0"))
-        .select(($"doc_id" + 1000000L).as("doc_id"),
-          concat($"text", lit(" xyzzy qbf")).as("text")))
-
-  // ---- DuckDB oracles -------------------------------------------------
-
-  def oracleSql: Map[String, String] = Map(
-    "q01_agg" ->
-      """SELECT l_returnflag, l_linestatus, sum(l_quantity) AS sum_qty,
-         count(*) AS n, round(sum(l_extendedprice),2) AS sum_price,
-         min(l_discount) AS min_disc, max(l_discount) AS max_disc
-         FROM lineitem GROUP BY 1,2 ORDER BY 1,2""",
-
-    "q02_filter_project" ->
-      """SELECT event_id, user_id, ts, value FROM events
-         WHERE event_type = 'purchase' AND value > 100 ORDER BY event_id""",
-
-    "q03_join_agg" ->
-      """SELECT c_mktsegment, count(DISTINCT o_orderkey) AS n_orders,
-         round(sum(l_extendedprice*(1-l_discount)),2) AS revenue
-         FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-         JOIN customer ON o_custkey = c_custkey
-         GROUP BY 1 ORDER BY 1""",
-
-    "q04_topk" ->
-      """SELECT o_orderkey, o_custkey, o_totalprice FROM orders
-         ORDER BY o_totalprice DESC, o_orderkey LIMIT 10""",
-
-    "q05_window_rank" ->
-      """SELECT o_custkey, o_orderkey, rn FROM (
-           SELECT o_custkey, o_orderkey, row_number() OVER
-             (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey) AS rn
-           FROM orders) WHERE rn <= 3 ORDER BY o_custkey, rn""",
-
-    "q06_cumsum" ->
-      """SELECT user_id, event_id, round(sum(value) OVER
-           (PARTITION BY user_id ORDER BY ts, event_id
-            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW),2) AS cum_value
-         FROM events ORDER BY user_id, event_id""",
-
-    "q07_lag_diff" ->
-      """SELECT user_id, event_id, round(value - lag(value) OVER
-           (PARTITION BY user_id ORDER BY ts, event_id),2) AS diff_value
-         FROM events ORDER BY user_id, event_id""",
-
-    "q08_resample" -> resampleOracleSql,
-
-    // q77 streams the SAME tumbling resample through a watermarked
-    // append-mode aggregation (sentinel-flushed); the oracle is the
-    // batch SQL verbatim — stream ≡ batch is the whole claim
-    "q77_stream_resample" -> resampleOracleSql,
-
-    // q78: streaming dedup admits exactly one row per key; projected
-    // to keys, that is the batch DISTINCT
-    "q78_stream_dedup" ->
-      """SELECT DISTINCT user_id, event_type FROM events
-         ORDER BY user_id, event_type""",
-
-    // q82: the jump filter's lag-50 window and ns band recomputed
-    "q82_jump_filter" ->
-      """WITH f AS (SELECT user_id % 4 AS k, event_id, event_type,
-           make_timestamp(1704067200000000 + event_id *
-             (CASE WHEN user_id % 2 = 0 THEN 3000000 ELSE 30000000 END)) AS tsx
-         FROM events),
-         d AS (SELECT k, event_id, event_type,
-           coalesce(epoch_us(tsx) - lag(epoch_us(tsx), 50)
-             OVER (PARTITION BY k ORDER BY tsx, event_id), 0) AS du
-         FROM f)
-         SELECT k, event_id FROM d
-         WHERE event_type = 'click'
-            OR NOT (abs(du)*1000 > 100000000000 AND abs(du)*1000 < 1000000000000)
-         ORDER BY k, event_id""",
-
-    // q81: the converter's epoch arithmetic and hex formatting
-    // recomputed with printf; WHERE mirrors the empty-bytes skip
-    "q81_candump_convert" ->
-      """SELECT printf('(%d.%06d) can0 %s#%s',
-           epoch_us(ts)//1000000, epoch_us(ts)%1000000,
-           printf('%03x', event_id % 1024),
-           printf('%02x', user_id % 256) ||
-           printf('%02x', event_id % 256) ||
-           printf('%02x', user_id % 256) || '07') AS line
-         FROM events WHERE event_id % 59 != 0 ORDER BY ts""",
-
-    // S6 gate: the oracle is the same projection straight from
-    // parquet — the Spark side must lose nothing through its CSV
-    // write → read round trip (µs-exact ts strings, shortest-
-    // round-trip doubles)
-    "q95_csv_roundtrip" ->
-      """SELECT strftime(ts, '%Y-%m-%d %H:%M:%S.%f') AS ts_str,
-           CAST(user_id AS BIGINT) AS user_id,
-           CAST(event_id AS BIGINT) AS event_id,
-           CAST(value AS DOUBLE) AS value,
-           event_type
-         FROM events ORDER BY ts_str""",
-
-    // P9 gate: recompute the planted-null masking, then IS NOT NULL
-    // on both subset columns (robust to natural nulls in the source)
-    "q96_dropna" ->
-      """WITH e AS (SELECT CAST(event_id AS BIGINT) AS event_id, ts,
-           CASE WHEN event_id % 5 = 0 THEN NULL
-                ELSE CAST(value AS DOUBLE) END AS value,
-           CASE WHEN event_id % 7 = 0 THEN NULL
-                ELSE event_type END AS event_type
-         FROM events)
-         SELECT event_id, value, event_type,
-           strftime(ts, '%Y-%m-%d %H:%M:%S.%f') AS ts_str
-         FROM e WHERE value IS NOT NULL AND event_type IS NOT NULL
-         ORDER BY ts_str""",
-
-    // per-file report gate: input_lines = every generated frame line
-    // of the partition, output_rows = one wide row per decodable
-    // frame ts (the q21 reject rules: unknown topic every 101st,
-    // short payload every 103rd; ts is globally unique so frames ≡
-    // wide rows)
-    "q97_parse_report" ->
-      """SELECT CAST(event_id % 3 AS VARCHAR) AS pfile,
-           COUNT(*) AS input_lines,
-           CAST(SUM(CASE WHEN event_id % 101 <> 0 AND event_id % 103 <> 0
-                    THEN 1 ELSE 0 END) AS BIGINT) AS output_rows
-         FROM events GROUP BY 1 ORDER BY pfile""",
-
-    "q98_corpus_diff" ->
-      """WITH p AS (SELECT doc_id, text FROM documents),
-         n AS (
-           SELECT doc_id,
-             CASE WHEN doc_id % 7 = 0 THEN text || ' v2 edit'
-                  ELSE text END AS text
-           FROM documents WHERE doc_id % 9 <> 0
-           UNION ALL
-           SELECT doc_id + 3000000 AS doc_id, text FROM documents
-             WHERE doc_id % 11 = 0
-         )
-         SELECT COALESCE(p.doc_id, n.doc_id) AS doc_id,
-           CASE WHEN p.doc_id IS NULL THEN 'added'
-                WHEN n.doc_id IS NULL THEN 'removed'
-                WHEN p.text IS NOT DISTINCT FROM n.text THEN 'unchanged'
-                ELSE 'changed' END AS status
-         FROM p FULL OUTER JOIN n ON p.doc_id = n.doc_id
-         ORDER BY doc_id""",
-
-    "q102_release_gate" ->
-      ("""WITH p AS (SELECT doc_id, text FROM documents),
-         n AS (
-           SELECT doc_id,
-             CASE WHEN doc_id % 7 = 0 THEN text || ' v2 edit'
-                  ELSE text END AS text
-           FROM documents WHERE doc_id % 9 <> 0
-           UNION ALL
-           SELECT doc_id + 3000000 AS doc_id, text FROM documents
-             WHERE doc_id % 11 = 0
-         ),
-         """ + releaseDiffSql + """
-         f AS (SELECT *,
-           CASE WHEN nn > 0 THEN na / nn ELSE 0 END AS af,
-           CASE WHEN np > 0 THEN nr / np ELSE 0 END AS rf,
-           CASE WHEN np > 0 THEN nc / np ELSE 0 END AS cf FROM w)
-         SELECT metric, round(value, 6) AS value FROM (
-           """ + releaseGateRowsSql + """
-         ) ORDER BY metric"""),
-
-    "q103_release_report" ->
-      ("""WITH p AS (SELECT doc_id, text FROM documents),
-         n AS (
-           SELECT doc_id,
-             CASE WHEN doc_id % 7 = 0 THEN text || ' v2 edit'
-                  ELSE text END AS text, lang
-           FROM documents WHERE doc_id % 9 <> 0
-           UNION ALL
-           SELECT doc_id + 3000000 AS doc_id, text, lang FROM documents
-             WHERE doc_id % 11 = 0
-         ),
-         """ + releaseDiffSql + """
-         f AS (SELECT *,
-           CASE WHEN nn > 0 THEN na / nn ELSE 0 END AS af,
-           CASE WHEN np > 0 THEN nr / np ELSE 0 END AS rf,
-           CASE WHEN np > 0 THEN nc / np ELSE 0 END AS cf FROM w),
-         b AS (SELECT text,
-             len(regexp_split_to_array(trim(text), '\s+'))::DOUBLE AS tn
-           FROM n),
-         g AS (SELECT count(*)::DOUBLE AS n_docs,
-             sum(tn) AS n_tokens_total,
-             quantile_cont(tn, 0.5) AS tokens_p50,
-             avg(tn) AS tokens_mean,
-             1.0 - count(DISTINCT lower(trim(text)))::DOUBLE
-               / count(*)::DOUBLE AS exact_dup_frac,
-             avg(CASE WHEN trim(text) = '' THEN 1.0 ELSE 0.0 END)
-               AS empty_frac
-           FROM b)
-         SELECT metric, round(value, 6) AS value FROM (
-           """ + releaseGateRowsSql + """
-           UNION ALL SELECT 'next:n_docs', n_docs FROM g
-           UNION ALL SELECT 'next:n_tokens_total', n_tokens_total FROM g
-           UNION ALL SELECT 'next:tokens_p50', tokens_p50 FROM g
-           UNION ALL SELECT 'next:tokens_mean', tokens_mean FROM g
-           UNION ALL SELECT 'next:exact_dup_frac', exact_dup_frac FROM g
-           UNION ALL SELECT 'next:empty_frac', empty_frac FROM g
-           UNION ALL SELECT 'next:lang_frac:' || lang,
-             count(*)::DOUBLE / (SELECT n_docs FROM g)
-             FROM n GROUP BY lang
-         ) ORDER BY metric"""),
-
-    // the projection matrix is rebuilt sign-by-sign from md5 — the
-    // scale 1/sqrt(16) is the exact binary 0.25, so `dot * 0.25` in
-    // the engine and `dot / 4.0` here are bit-identical
-    "q104_random_projection" ->
-      """WITH e AS (SELECT vec_id,
-           [CAST(x AS DOUBLE) for x in embedding] AS emb
-         FROM embeddings)
-         SELECT e.vec_id, g.j AS dim,
-           round(list_dot_product(e.emb,
-             [CASE WHEN substring(md5('rp_' || g.j || '_' || (i - 1)), 1, 1)
-                     < '8'
-                   THEN 1.0 ELSE -1.0 END
-              for i in generate_series(1, 64)]) / 4.0, 6) AS value
-         FROM e CROSS JOIN generate_series(0, 15) AS g(j)
-         ORDER BY vec_id, dim""",
-
-    // brute-force argmax, verbatim the q60/q66 discipline: the PQ
-    // path's rank-1 answer must be quantization-invisible
-    "q105_pq_ann_recall" ->
-      ("""WITH c AS (SELECT vec_id, embedding::DOUBLE[] v FROM embeddings),
-         """ + bruteCosineSql + """
-           FROM s)
-         SELECT query_id, neighbor_id AS top1 FROM r WHERE rank = 1
-         ORDER BY query_id"""),
-
-    // the md5-hash-ordered per-source window, replayed exactly
-    "q108_domain_cap" ->
-      """WITH h AS (SELECT doc_id, source,
-           ('0x' || substring(md5(CAST(doc_id AS VARCHAR)), 1, 15))::BIGINT
-             AS hh
-         FROM documents),
-         r AS (SELECT doc_id, source, row_number() OVER
-             (PARTITION BY source ORDER BY hh, doc_id) AS rn
-           FROM h)
-         SELECT doc_id, source FROM r WHERE rn <= 10 ORDER BY doc_id""",
-
-    // brute-force argmax again: IVFADC must be end-to-end invisible
-    // at rank 1 (coarse routing + ADC + rerank)
-    "q107_ivfpq_ann_recall" ->
-      ("""WITH c AS (SELECT vec_id, embedding::DOUBLE[] v FROM embeddings),
-         """ + bruteCosineSql + """
-           FROM s)
-         SELECT query_id, neighbor_id AS top1 FROM r WHERE rank = 1
-         ORDER BY query_id"""),
-
-    // the pixel-ramp arithmetic and channel sums replayed in SQL —
-    // a lossless codec means the decoded bytes ARE the formula; the
-    // three corrupt ids must come back as explicit null rows
-    "q118_image_decode" ->
-      """WITH m AS (SELECT doc_id AS media_id,
-           CAST(8 + doc_id % 5 AS INT) AS w,
-           CAST(6 + doc_id % 4 AS INT) AS h
-         FROM documents WHERE doc_id < 40),
-         px AS (SELECT media_id, w, h, y.y AS y, x.x AS x
-           FROM m,
-             LATERAL (SELECT unnest(generate_series(0, h - 1)) AS y) y,
-             LATERAL (SELECT unnest(generate_series(0, w - 1)) AS x) x),
-         sums AS (SELECT media_id, w, h,
-             CAST(sum((media_id * 31 + 0  + y * w + x) % 256) AS BIGINT)
-               AS r_sum,
-             CAST(sum((media_id * 31 + 7  + y * w + x) % 256) AS BIGINT)
-               AS g_sum,
-             CAST(sum((media_id * 31 + 14 + y * w + x) % 256) AS BIGINT)
-               AS b_sum
-           FROM px GROUP BY 1, 2, 3)
-         SELECT media_id, w AS width, h AS height, CAST(3 AS INT) AS channels,
-           r_sum, g_sum, b_sum
-         FROM sums
-         UNION ALL
-         SELECT CAST(media_id AS BIGINT), NULL, NULL, NULL, NULL, NULL, NULL
-         FROM (VALUES (9001), (9002), (9003)) t(media_id)
-         ORDER BY media_id""",
-
-    // the sample-ramp arithmetic and signed channel sums replayed in
-    // SQL — a lossless PCM container means the decoded samples ARE
-    // the formula; mono rows carry a null second-channel sum and the
-    // three corrupt ids must come back as explicit null rows
-    "q119_audio_decode" ->
-      """WITH m AS (SELECT doc_id AS media_id,
-           CAST(8000 + (doc_id % 3) * 4000 AS INT) AS rate,
-           CAST(1 + doc_id % 2 AS INT) AS channels,
-           CAST(50 + (doc_id % 7) * 10 AS INT) AS frames
-         FROM documents WHERE doc_id < 40),
-         s AS (SELECT media_id, rate, channels, frames, i.i AS i
-           FROM m,
-             LATERAL (SELECT unnest(generate_series(0, frames - 1)) AS i) i),
-         sums AS (SELECT media_id, rate, channels, frames,
-             CAST(sum((media_id * 37 + i * 13) % 4096 - 2048) AS BIGINT)
-               AS s0_sum,
-             CAST(sum(CASE WHEN channels = 2
-               THEN (media_id * 37 + 11 + i * 13) % 4096 - 2048 END) AS BIGINT)
-               AS s1_sum
-           FROM s GROUP BY 1, 2, 3, 4)
-         SELECT media_id, rate, channels, frames, s0_sum, s1_sum FROM sums
-         UNION ALL
-         SELECT CAST(media_id AS BIGINT), NULL, NULL, NULL, NULL, NULL
-         FROM (VALUES (9001), (9002), (9003)) t(media_id)
-         ORDER BY media_id""",
-
-    // the per-frame grayscale ramp and its (equal by construction)
-    // R/G/B channel sums replayed in SQL — the explicit 256-gray
-    // palette makes the GIF codec lossless, so the decoded bytes ARE
-    // the formula; all four corrupt ids (mid-frame cut, clean cut
-    // missing the trailer, non-video bytes, empty) must come back as
-    // single explicit null rows
-    "q122_frame_decode" ->
-      """WITH m AS (SELECT doc_id AS media_id,
-           CAST(6 + doc_id % 4 AS INT) AS w,
-           CAST(5 + doc_id % 3 AS INT) AS h,
-           CAST(2 + doc_id % 3 AS INT) AS nf
-         FROM documents WHERE doc_id < 12),
-         fr AS (SELECT media_id, w, h, f.f AS frame_no
-           FROM m,
-             LATERAL (SELECT unnest(generate_series(0, nf - 1)) AS f) f),
-         px AS (SELECT media_id, w, h, frame_no, y.y AS y, x.x AS x
-           FROM fr,
-             LATERAL (SELECT unnest(generate_series(0, h - 1)) AS y) y,
-             LATERAL (SELECT unnest(generate_series(0, w - 1)) AS x) x),
-         sums AS (SELECT media_id, frame_no, w, h,
-             CAST(sum((media_id * 31 + frame_no * 17 + y * w + x) % 256)
-               AS BIGINT) AS s
-           FROM px GROUP BY 1, 2, 3, 4)
-         SELECT media_id, CAST(frame_no AS INT) AS frame_no,
-           w AS width, h AS height, CAST(3 AS INT) AS channels,
-           s AS r_sum, s AS g_sum, s AS b_sum
-         FROM sums
-         UNION ALL
-         SELECT CAST(media_id AS BIGINT), NULL, NULL, NULL, NULL,
-           NULL, NULL, NULL
-         FROM (VALUES (9001), (9002), (9003), (9004)) t(media_id)
-         ORDER BY media_id, frame_no""",
-
-    // min/max, integer-div equi-width buckets and the Morton
-    // interleave replayed term-for-term: bit i of dx lands at 2i, of
-    // dy at 2i+1 (dimension 0 on the low bit)
-    "q121_zorder" ->
-      """WITH m AS (SELECT doc_id, CAST(length(text) AS BIGINT) AS dx,
-           doc_id % 97 AS dy FROM documents),
-         st AS (SELECT min(dx) mnx, max(dx) mxx, min(dy) mny, max(dy) mxy
-           FROM m),
-         b AS (SELECT doc_id, dx, dy,
-             ((dx - mnx) * 256) // (mxx - mnx + 1) AS bx,
-             ((dy - mny) * 256) // (mxy - mny + 1) AS by_
-           FROM m, st),
-         z AS (SELECT doc_id,
-             CAST(sum((((bx >> i.i) & 1) << (2 * i.i)) +
-                      (((by_ >> i.i) & 1) << (2 * i.i + 1))) AS BIGINT)
-               AS zvalue
-           FROM b, LATERAL (SELECT unnest(generate_series(0, 7)) AS i) i
-           GROUP BY doc_id)
-         SELECT b.doc_id, b.dx, b.dy, z.zvalue
-         FROM b JOIN z ON b.doc_id = z.doc_id
-         ORDER BY b.doc_id""",
-
-    // pixels from the planted formula, both perceptual-hash
-    // constructions (luma grids, integer div index math, gradient /
-    // mean bit packing — bit 63 spelled as the signed MIN to dodge
-    // DuckDB's shift-overflow guard), and the exhaustive pairwise
-    // Hamming truth with per-image pair stats — replayed entirely in
-    // SQL against the lossless decode contract
-    "q124_image_phash_dedup" ->
-      """WITH imgs AS (
-           SELECT i AS media_id, i AS src, 0 AS shift FROM range(1, 11) t(i)
-           UNION ALL SELECT 100 + i, i, 0 FROM range(1, 11) t(i)
-           UNION ALL SELECT 200 + i, i, 0 FROM range(1, 4) t(i)
-           UNION ALL SELECT 300 + i, i, 4 FROM range(1, 6) t(i)),
-         dg AS (
-           SELECT media_id, gy, gx,
-             (src*31 + (gx*16//9)*17 + (gy*12//8)*29
-               + (gx*16//9)*(gy*12//8) + shift) % 256 AS v
-           FROM imgs, range(0, 8) t1(gy), range(0, 9) t2(gx)),
-         dh AS (
-           SELECT a.media_id,
-             bit_or(CASE WHEN b.v > a.v THEN
-                 CASE WHEN a.gy*8 + a.gx = 63 THEN -9223372036854775807 - 1
-                   ELSE 1::BIGINT << (a.gy*8 + a.gx) END
-               ELSE 0::BIGINT END) AS dhash
-           FROM dg a JOIN dg b ON a.media_id = b.media_id
-             AND b.gy = a.gy AND b.gx = a.gx + 1
-           WHERE a.gx < 8
-           GROUP BY a.media_id),
-         ag AS (
-           SELECT media_id, gy, gx,
-             (src*31 + (gx*16//8)*17 + (gy*12//8)*29
-               + (gx*16//8)*(gy*12//8) + shift) % 256 AS v
-           FROM imgs, range(0, 8) t1(gy), range(0, 8) t2(gx)),
-         am AS (SELECT media_id, sum(v) // 64 AS mean FROM ag GROUP BY media_id),
-         ah AS (
-           SELECT ag.media_id,
-             bit_or(CASE WHEN ag.v >= am.mean THEN
-                 CASE WHEN ag.gy*8 + ag.gx = 63 THEN -9223372036854775807 - 1
-                   ELSE 1::BIGINT << (ag.gy*8 + ag.gx) END
-               ELSE 0::BIGINT END) AS ahash
-           FROM ag JOIN am ON ag.media_id = am.media_id
-           GROUP BY ag.media_id),
-         sigs AS (
-           SELECT i.media_id, dh.dhash, ah.ahash
-           FROM imgs i JOIN dh ON dh.media_id = i.media_id
-             JOIN ah ON ah.media_id = i.media_id
-           UNION ALL
-           SELECT media_id, NULL, NULL
-           FROM (VALUES (9001), (9002), (9003)) t(media_id)),
-         pairs AS (
-           SELECT a.media_id AS a, b.media_id AS b,
-             bit_count(xor(a.dhash, b.dhash)) AS hamming
-           FROM sigs a JOIN sigs b ON a.media_id < b.media_id
-           WHERE a.dhash IS NOT NULL AND b.dhash IS NOT NULL
-             AND bit_count(xor(a.dhash, b.dhash)) <= 6),
-         partnered AS (
-           SELECT a AS media_id, b AS partner FROM pairs
-           UNION ALL SELECT b, a FROM pairs),
-         stats AS (
-           SELECT media_id, count(*) AS n_pairs, min(partner) AS top_partner
-           FROM partnered GROUP BY media_id)
-         SELECT s.media_id, s.dhash, s.ahash,
-           coalesce(st.n_pairs, 0)::BIGINT AS n_pairs, st.top_partner
-         FROM sigs s LEFT JOIN stats st ON st.media_id = s.media_id
-         ORDER BY s.media_id""",
-
-    // both sides' planted pixel formulas, the dHash construction and
-    // the exhaustive argmin (hamming, ref_id) admission decision
-    // replayed in SQL; corrupt arrivals come back as admitted
-    // null-signature rows
-    "q126_stream_image_admission" ->
-      ("""WITH refs AS (
-           SELECT i AS ref_id, i AS src, 0 AS shift FROM range(1, 11) t(i)),
-         arrivals AS (
-           SELECT 500 + i AS media_id, i AS src, 0 AS shift FROM range(1, 6) t(i)
-           UNION ALL SELECT 510 + i, i, 4 FROM range(1, 6) t(i)
-           UNION ALL SELECT 500 + i, i, 0 FROM range(21, 26) t(i)),
-         """ + refDhashSql + """
-         sigs AS (
-           SELECT media_id, dhash FROM ah
-           UNION ALL SELECT media_id, NULL
-           FROM (VALUES (9001), (9002), (9003)) t(media_id)),
-         best AS (
-           SELECT s.media_id,
-             min_by(r.ref_id,
-               bit_count(xor(s.dhash, r.sig))::BIGINT * 1000 + r.ref_id) AS match_id,
-             min(bit_count(xor(s.dhash, r.sig))) AS match_hamming
-           FROM sigs s JOIN rh r ON bit_count(xor(s.dhash, r.sig)) <= 6
-           WHERE s.dhash IS NOT NULL
-           GROUP BY s.media_id)
-         SELECT s.media_id, s.dhash, b.match_id IS NULL AS admitted,
-           b.match_id, b.match_hamming::INTEGER AS match_hamming
-         FROM sigs s LEFT JOIN best b ON b.media_id = s.media_id
-         ORDER BY s.media_id"""),
-
-    // three brute-force argmax replays: the full corpus (pre), and
-    // the corpus minus the tombstoned sources (the logical-delete
-    // answer and the post-purge answer, which must agree)
-    "q127_ivfpq_takedown" ->
-      ("""WITH c0 AS (SELECT vec_id, list_transform(embedding::DOUBLE[], x -> x) AS v
-             FROM embeddings),
-         twins AS (SELECT vec_id + 20000 AS vec_id,
-             list_transform(v, x -> x * 0.9 + 0.05) AS v
-           FROM c0 WHERE vec_id < 10),
-         corpus AS (SELECT * FROM c0 UNION ALL SELECT * FROM twins),
-         q AS (SELECT vec_id + 10000 AS query_id,
-             list_transform(v, x -> x * 1.001 + 0.0005) AS qv
-           FROM c0 WHERE vec_id < 10),
-         """ + annTakedownSql + """
-         alive AS (SELECT query_id, neighbor_id AS live_top1 FROM (
-             SELECT query_id, neighbor_id, row_number() OVER (PARTITION BY query_id
-               ORDER BY cos_raw DESC, neighbor_id) AS rn
-             FROM s WHERE neighbor_id >= 10) WHERE rn = 1)
-         SELECT p.query_id, p.pre_top1, a.live_top1, a.live_top1 AS post_top1
-         FROM pre p JOIN alive a USING (query_id)
-         ORDER BY p.query_id"""),
-
-    // q163: every gated metric is an integer fold over the union of
-    // both batches — doc/token/char/empty counts and per-language
-    // composition, replayed directly
-    "q163_incremental_datasheet" ->
-      """WITH docs AS (SELECT doc_id, text,
-           CASE WHEN doc_id % 3 = 0 THEN 'en'
-                WHEN doc_id % 3 = 1 THEN 'pt' END AS lang
-         FROM documents),
-         m AS (
-           SELECT 'n_docs' AS metric, count(*)::BIGINT AS value FROM docs
-           UNION ALL SELECT 'n_tokens_total',
-             sum(len(regexp_split_to_array(trim(text), '\s+')))::BIGINT
-           FROM docs
-           UNION ALL SELECT 'n_empty_docs',
-             sum(CASE WHEN trim(text) = '' THEN 1 ELSE 0 END)::BIGINT
-           FROM docs
-           UNION ALL SELECT 'n_chars', sum(length(text))::BIGINT FROM docs
-           UNION ALL SELECT 'lang_docs:' || coalesce(lang, 'null'),
-             count(*)::BIGINT
-           FROM docs GROUP BY lang)
-         SELECT metric, value FROM m ORDER BY metric""",
-
-    // q162: brute-force cosine argmax replayed over the built corpus
-    // (pre: the +30000 exact twin is the only cosine-1.0 row) and the
-    // post-append corpus (the appended original's smaller id wins the
-    // 1.0 tie)
-    "q162_lsh_append" ->
-      """WITH c0 AS (SELECT vec_id, embedding::DOUBLE[] AS v
-             FROM embeddings),
-         twins AS (SELECT vec_id + 30000 AS vec_id, v
-           FROM c0 WHERE vec_id < 10),
-         base AS (SELECT * FROM c0 WHERE vec_id >= 10
-           UNION ALL SELECT * FROM twins),
-         post_corpus AS (SELECT * FROM base
-           UNION ALL SELECT vec_id, v FROM c0 WHERE vec_id < 10),
-         q AS (SELECT vec_id + 10000 AS query_id, v AS qv
-           FROM c0 WHERE vec_id < 10),
-         s_pre AS (SELECT query_id, c.vec_id AS neighbor_id,
-             list_dot_product(qv, c.v) /
-               (sqrt(list_dot_product(qv, qv)) * sqrt(list_dot_product(c.v, c.v)))
-               AS cos_raw
-           FROM q CROSS JOIN base c),
-         s_post AS (SELECT query_id, c.vec_id AS neighbor_id,
-             list_dot_product(qv, c.v) /
-               (sqrt(list_dot_product(qv, qv)) * sqrt(list_dot_product(c.v, c.v)))
-               AS cos_raw
-           FROM q CROSS JOIN post_corpus c),
-         pre AS (SELECT query_id, neighbor_id AS pre_top1 FROM (
-             SELECT query_id, neighbor_id, row_number() OVER (PARTITION BY query_id
-               ORDER BY cos_raw DESC, neighbor_id) AS rn FROM s_pre) WHERE rn = 1),
-         post AS (SELECT query_id, neighbor_id AS post_top1 FROM (
-             SELECT query_id, neighbor_id, row_number() OVER (PARTITION BY query_id
-               ORDER BY cos_raw DESC, neighbor_id) AS rn FROM s_post) WHERE rn = 1)
-         SELECT p.query_id, p.pre_top1, o.post_top1
-         FROM pre p JOIN post o USING (query_id)
-         ORDER BY p.query_id""",
-
-    // q158: all four cascade tiers replayed in SQL, each in two
-    // decision worlds — exact via the min-id text views, quality via
-    // the length/ratio formula, FUZZY via the full q129 contract
-    // (shingles, cross-Jaccard vs full/live accepted grams,
-    // within-batch pairs, recursive closure, taint), semantic via the
-    // q156 md5 hashEmbed cosine max vs full/surviving vectors —
-    // folded under first-reject precedence
-    "q158_cascade_fuzzy_stream" -> cascadeFourTierOracleSql(
-      // caller-frame exact tier: doc-keyed takedown — a text survives
-      // the live view if ANY non-tombstoned accepted doc holds it
-      """SELECT text, min(doc_id) AS exact_id FROM acc
-           WHERE doc_id % 40 NOT IN (0, 4, 8) GROUP BY text"""),
-
-    // q166: the SAME four-tier decision contract with the exact tier
-    // served by the durable rooted exact index — one semantic
-    // difference, deliberate: the index's takedown ledger keys on
-    // CONTENT (hash, text), so a tombstoned text vanishes even if a
-    // surviving accepted doc holds an identical copy (the compliance
-    // semantics a content takedown actually wants)
-    "q166_cascade_exact_durable" -> cascadeFourTierOracleSql(
-      """SELECT text, min(doc_id) AS exact_id FROM acc
-           WHERE text NOT IN (SELECT text FROM acc
-             WHERE doc_id % 40 IN (0, 4, 8)) GROUP BY text"""),
-
-    // q159: the media cascade replayed tier by tier — both planted
-    // pixel formulas, the 9×8 gradient dHash construction, the
-    // pigeonhole argmin vs the refs-1..6 perceptual window, the 8×8
-    // embed lattice cosine argmax vs the refs-1..10 vector corpus,
-    // the deterministic dead-letter statuses, and the first-reject
-    // precedence with per-tier pointers
-    "q159_media_cascade_stream" ->
-      (mediaCascadeDhashSql + """
-           FROM ag a JOIN ag b ON a.media_id = b.media_id
-             AND b.gy = a.gy AND b.gx = a.gx + 1
-           WHERE a.gx < 8 GROUP BY a.media_id),
-         per AS (SELECT s.media_id,
-             min_by(r.ref_id,
-               bit_count(xor(s.dhash, r.sig))::BIGINT * 1000 + r.ref_id)
-               AS pmid,
-             min(bit_count(xor(s.dhash, r.sig))) AS pham
-           FROM ah s JOIN rh r ON bit_count(xor(s.dhash, r.sig)) <= 6
-           GROUP BY s.media_id),
-         """ + mediaCascadeEmbedSql + """
-         sem AS (SELECT media_id, ref_id AS smid, cosv FROM (
-             SELECT media_id, ref_id, cosv, row_number() OVER
-               (PARTITION BY media_id ORDER BY cosv DESC, ref_id) AS rk
-             FROM cosr) WHERE rk = 1),
-         allm AS (
-           SELECT media_id, 'ok' AS status FROM arr
-           UNION ALL SELECT media_id, status
-           FROM (VALUES (9001, 'undecodable'), (9002, 'null_payload'),
-             (9003, 'empty_payload')) t(media_id, status)),
-         decided AS (SELECT m.media_id,
-             CASE WHEN m.status != 'ok' THEN 'dead_letter'
-                  WHEN p.media_id IS NOT NULL THEN 'perceptual'
-                  WHEN s.cosv >= 0.9 THEN 'semantic' END AS reason,
-             p.pmid, p.pham, s.smid
-           FROM allm m
-           LEFT JOIN per p ON p.media_id = m.media_id
-           LEFT JOIN sem s ON s.media_id = m.media_id)
-         SELECT media_id, reason IS NULL AS cascade_admitted, reason,
-           CASE WHEN reason = 'perceptual' THEN pmid END
-             AS perceptual_match_id,
-           (CASE WHEN reason = 'perceptual' THEN pham END)::INTEGER
-             AS perceptual_hamming,
-           CASE WHEN reason = 'semantic' THEN smid END
-             AS semantic_match_id
-         FROM decided ORDER BY media_id"""),
-
-    // q167: q159's pixel math replayed in TWO decision worlds — the
-    // pre world ≡ q159's reference sets, the live world with refs 2
-    // (both faces) and 8 (vector corpus) taken down; per-world argmin
-    // (hamming, id) and argmax (cosine, id) tie-breaks and the
-    // dead_letter → perceptual → semantic precedence
-    "q167_media_cascade_batched" -> mediaCascadeTwoWorldOracleSql,
-
-    // q168: the SAME two-world decision contract with the perceptual
-    // tier served by the RELATIONAL banded index — identical oracle
-    // by design (pigeonhole recall-exact on both faces, identical
-    // argmin/argmax tie-breaks): swapping the perceptual tier's face
-    // must move no decision
-    "q168_media_cascade_unbounded" -> mediaCascadeTwoWorldOracleSql,
-
-    // q169: the q89 winnowing CTE machinery replayed for the train
-    // corpus and BOTH benchmark suites, then the three worlds as
-    // pure fingerprint set algebra — world 1 joins suite A's
-    // distinct fingerprints, world 2 the union after the append,
-    // world 3 the union minus the retired A-half (bench_id % 26 = 0).
-    // Integer counts only (count(*) / count(fp) — BIGINT native, the
-    // q160 HUGEINT lesson), world literals BIGINT-cast.
-    "q169_winnow_index_lifecycle" ->
-      ("""WITH tk AS (SELECT doc_id,
-           regexp_split_to_array(trim(lower(text)), '\s+') t,
-           regexp_split_to_array(trim(text), '\s+') traw
-         FROM documents),
-         """ + winnowSql("tk", "doc_id", "hs", "sel") + """
-         tfp AS (SELECT DISTINCT s.doc_id, hs.h[s.pos] AS fp
-           FROM sel s JOIN hs USING (doc_id)),
-         btka AS (SELECT * FROM (SELECT doc_id AS bench_id,
-             [lower(x) for x in traw[3:14]] AS t
-           FROM tk WHERE doc_id % 13 = 0) WHERE len(t) > 0),
-         """ + winnowSql("btka", "bench_id", "bhsa", "bsela") + """
-         bfpa AS (SELECT DISTINCT s.bench_id, bhsa.h[s.pos] AS fp
-           FROM bsela s JOIN bhsa USING (bench_id)),
-         btkb AS (SELECT * FROM (SELECT doc_id + 1000000 AS bench_id,
-             [lower(x) for x in traw[5:16]] AS t
-           FROM tk WHERE doc_id % 11 = 0) WHERE len(t) > 0),
-         """ + winnowSql("btkb", "bench_id", "bhsb", "bselb") + """
-         bfpb AS (SELECT DISTINCT s.bench_id, bhsb.h[s.pos] AS fp
-           FROM bselb s JOIN bhsb USING (bench_id)),
-         w1 AS (SELECT DISTINCT fp FROM bfpa),
-         w2 AS (SELECT DISTINCT fp FROM
-           (SELECT fp FROM bfpa UNION ALL SELECT fp FROM bfpb)),
-         w3 AS (SELECT DISTINCT fp FROM
-           (SELECT fp FROM bfpa WHERE bench_id % 26 <> 0
-            UNION ALL SELECT fp FROM bfpb)),
-         a1 AS (SELECT t.doc_id, count(*) AS n_fp, count(w.fp) AS n_hits
-           FROM tfp t LEFT JOIN w1 w ON t.fp = w.fp GROUP BY 1),
-         a2 AS (SELECT t.doc_id, count(*) AS n_fp, count(w.fp) AS n_hits
-           FROM tfp t LEFT JOIN w2 w ON t.fp = w.fp GROUP BY 1),
-         a3 AS (SELECT t.doc_id, count(*) AS n_fp, count(w.fp) AS n_hits
-           FROM tfp t LEFT JOIN w3 w ON t.fp = w.fp GROUP BY 1)
-         SELECT world, doc_id, n_fp, n_hits,
-           round(n_hits::DOUBLE / n_fp::DOUBLE, 6) AS containment
-         FROM (SELECT 1::BIGINT AS world, * FROM a1
-           UNION ALL SELECT 2::BIGINT AS world, * FROM a2
-           UNION ALL SELECT 3::BIGINT AS world, * FROM a3)
-         ORDER BY world, doc_id"""),
-
-    // q170: two worlds of the same set algebra over the even-id
-    // arrival slice — world 1 vs suite A, world 2 vs A ∪ B after the
-    // mid-stream append; admitted ⇔ zero hits (containment ≤ 0 with
-    // n_fp ≥ 1 by the winnowing short-doc floor)
-    "q170_decontam_stream" ->
-      ("""WITH tk AS (SELECT doc_id,
-           regexp_split_to_array(trim(lower(text)), '\s+') t,
-           regexp_split_to_array(trim(text), '\s+') traw
-         FROM documents),
-         """ + winnowSql("tk", "doc_id", "hs", "sel") + """
-         tfp AS (SELECT DISTINCT s.doc_id, hs.h[s.pos] AS fp
-           FROM sel s JOIN hs USING (doc_id)
-           WHERE s.doc_id % 2 = 0),
-         btka AS (SELECT * FROM (SELECT doc_id AS bench_id,
-             [lower(x) for x in traw[3:14]] AS t
-           FROM tk WHERE doc_id % 13 = 0) WHERE len(t) > 0),
-         """ + winnowSql("btka", "bench_id", "bhsa", "bsela") + """
-         bfpa AS (SELECT DISTINCT bhsa.h[s.pos] AS fp
-           FROM bsela s JOIN bhsa USING (bench_id)),
-         btkb AS (SELECT * FROM (SELECT doc_id + 1000000 AS bench_id,
-             [lower(x) for x in traw[5:16]] AS t
-           FROM tk WHERE doc_id % 11 = 0) WHERE len(t) > 0),
-         """ + winnowSql("btkb", "bench_id", "bhsb", "bselb") + """
-         bfpb AS (SELECT DISTINCT bhsb.h[s.pos] AS fp
-           FROM bselb s JOIN bhsb USING (bench_id)),
-         w1 AS (SELECT DISTINCT fp FROM bfpa),
-         w2 AS (SELECT DISTINCT fp FROM
-           (SELECT fp FROM bfpa UNION ALL SELECT fp FROM bfpb)),
-         a1 AS (SELECT t.doc_id, count(*) AS n_fp, count(w.fp) AS n_hits
-           FROM tfp t LEFT JOIN w1 w ON t.fp = w.fp GROUP BY 1),
-         a2 AS (SELECT t.doc_id, count(*) AS n_fp, count(w.fp) AS n_hits
-           FROM tfp t LEFT JOIN w2 w ON t.fp = w.fp GROUP BY 1)
-         SELECT a1.doc_id, a1.n_fp, a1.n_hits AS n_hits_pre,
-           a1.n_hits = 0 AS admitted_pre,
-           a2.n_hits AS n_hits_live, a2.n_hits = 0 AS admitted_live
-         FROM a1 JOIN a2 USING (doc_id) ORDER BY doc_id"""),
-
-    // q171: the five-tier front door — the q166 algebra with the
-    // contamination rung's two winnowing worlds folded into the
-    // precedence chain
-    "q171_cascade_decontam" -> cascadeFiveTierOracleSql,
-
-    // q160: the token set algebra    // q160: the token set algebra of both maintenance calls — OOV of
-    // the drifted sample vs the original fit vocabulary (call 1's
-    // probe), the fire threshold, OOV vs the refit vocabulary
-    // (call 1's re-probe = call 2's probe), and call 2's quiet-no-op
-    // mechanics — all integer counts
-    "q160_lm_maintain" ->
-      """WITH base AS (SELECT doc_id, text FROM documents
-           WHERE length(trim(text)) > 0 AND doc_id < 1000),
-         ev AS (SELECT lower(trim(text)) AS tx FROM base
-           WHERE doc_id % 2 = 0),
-         dr AS (SELECT translate(lower(trim(text)), 'aeiou', '01234')
-             AS tx
-           FROM base WHERE doc_id % 2 = 1),
-         vocab_a AS (SELECT DISTINCT t FROM (
-           SELECT unnest(list_filter(regexp_split_to_array(tx, '\s+'),
-             x -> x != '')) AS t FROM ev)),
-         vocab_b AS (SELECT DISTINCT t FROM (
-           SELECT unnest(list_filter(regexp_split_to_array(tx, '\s+'),
-             x -> x != '')) AS t FROM ev
-           UNION ALL
-           SELECT unnest(list_filter(regexp_split_to_array(tx, '\s+'),
-             x -> x != '')) FROM dr)),
-         stoks AS (SELECT unnest(list_filter(
-             regexp_split_to_array(tx, '\s+'), x -> x != '')) AS t
-           FROM dr),
-         pre AS (SELECT count(*) AS n,
-             sum(CASE WHEN v.t IS NULL THEN 1 ELSE 0 END)::BIGINT
-               AS oov
-           FROM stoks s LEFT JOIN vocab_a v ON v.t = s.t),
-         post AS (SELECT
-             sum(CASE WHEN v.t IS NULL THEN 1 ELSE 0 END)::BIGINT
-               AS oov
-           FROM stoks s LEFT JOIN vocab_b v ON v.t = s.t),
-         c1 AS (SELECT pre.n, pre.oov AS pre_oov,
-             pre.oov > 0.2 * pre.n AS f1,
-             CASE WHEN pre.oov > 0.2 * pre.n THEN post.oov
-               ELSE pre.oov END AS post1
-           FROM pre CROSS JOIN post),
-         c2 AS (SELECT c1.n, c1.post1 AS pre_oov,
-             c1.post1 > 0.2 * c1.n AS f2,
-             CASE WHEN c1.post1 > 0.2 * c1.n THEN post.oov
-               ELSE c1.post1 END AS post2
-           FROM c1 CROSS JOIN post)
-         SELECT 1::BIGINT AS step, n AS n_sample_tokens,
-           pre_oov AS pre_oov_tokens, f1 AS refit_fired,
-           post1 AS post_oov_tokens, f1 AS epoch_changed
-         FROM c1
-         UNION ALL
-         SELECT 2::BIGINT, n, pre_oov, f2, post2, f2 FROM c2
-         ORDER BY step""",
-
-    // q161: the same two-call replay over WORD occurrences vs the
-    // fitted word-pieces vocabularies (original and refit)
-    "q161_bpe_maintain" ->
-      """WITH base AS (SELECT doc_id, text FROM documents
-           WHERE length(trim(text)) > 0 AND doc_id < 1000),
-         ev AS (SELECT lower(trim(text)) AS tx FROM base
-           WHERE doc_id % 2 = 0),
-         dr AS (SELECT translate(lower(trim(text)), 'aeiou', '01234')
-             AS tx
-           FROM base WHERE doc_id % 2 = 1),
-         vocab_a AS (SELECT DISTINCT w FROM (
-           SELECT unnest(list_filter(regexp_split_to_array(tx, '\s+'),
-             x -> x != '')) AS w FROM ev)),
-         vocab_b AS (SELECT DISTINCT w FROM (
-           SELECT unnest(list_filter(regexp_split_to_array(tx, '\s+'),
-             x -> x != '')) AS w FROM ev
-           UNION ALL
-           SELECT unnest(list_filter(regexp_split_to_array(tx, '\s+'),
-             x -> x != '')) FROM dr)),
-         swords AS (SELECT unnest(list_filter(
-             regexp_split_to_array(tx, '\s+'), x -> x != '')) AS w
-           FROM dr),
-         pre AS (SELECT count(*) AS n,
-             sum(CASE WHEN v.w IS NULL THEN 1 ELSE 0 END)::BIGINT
-               AS oov
-           FROM swords s LEFT JOIN vocab_a v ON v.w = s.w),
-         post AS (SELECT
-             sum(CASE WHEN v.w IS NULL THEN 1 ELSE 0 END)::BIGINT
-               AS oov
-           FROM swords s LEFT JOIN vocab_b v ON v.w = s.w),
-         c1 AS (SELECT pre.n, pre.oov AS pre_oov,
-             pre.oov > 0.2 * pre.n AS f1,
-             CASE WHEN pre.oov > 0.2 * pre.n THEN post.oov
-               ELSE pre.oov END AS post1
-           FROM pre CROSS JOIN post),
-         c2 AS (SELECT c1.n, c1.post1 AS pre_oov,
-             c1.post1 > 0.2 * c1.n AS f2,
-             CASE WHEN c1.post1 > 0.2 * c1.n THEN post.oov
-               ELSE c1.post1 END AS post2
-           FROM c1 CROSS JOIN post)
-         SELECT 1::BIGINT AS step, n AS n_sample_words,
-           pre_oov AS pre_oov_words, f1 AS refit_fired,
-           post1 AS post_oov_words, f1 AS gen_changed
-         FROM c1
-         UNION ALL
-         SELECT 2::BIGINT, n, pre_oov, f2, post2, f2 FROM c2
-         ORDER BY step""",
-
-    // q164: the two-call window replayed as md5-bucket SET ALGEBRA
-    // over the shared unigram+bigram feature space (q84's feature
-    // construction verbatim) — known_a = fit-time coverage of the
-    // evens, known_b = coverage of the refit corpus, blind counts are
-    // occurrence-weighted anti-join sums, all counts BIGINT-cast
-    "q164_lr_maintain" ->
-      ("""WITH base AS (SELECT doc_id, text FROM documents
-           WHERE length(trim(text)) > 0 AND doc_id < 1000),
-         ev AS (SELECT regexp_split_to_array(trim(lower(text)),
-             '\s+') AS t
-           FROM base WHERE doc_id % 2 = 0),
-         dr AS (SELECT regexp_split_to_array(
-             trim(translate(lower(text), 'aeiou', '01234')), '\s+') AS t
-           FROM base WHERE doc_id % 2 = 1),
-         fev AS (
-           SELECT unnest(t) AS feat FROM ev
-           UNION ALL
-           SELECT array_to_string(t[i:i+1], ' ') FROM ev,
-             LATERAL (SELECT unnest(generate_series(1, len(t)-1)) AS i)),
-         fdr AS (
-           SELECT unnest(t) AS feat FROM dr
-           UNION ALL
-           SELECT array_to_string(t[i:i+1], ' ') FROM dr,
-             LATERAL (SELECT unnest(generate_series(1, len(t)-1)) AS i)),
-         known_a AS (SELECT DISTINCT
-             ('0x' || substring(md5(feat), 1, 15))::BIGINT % 65536 AS b
-           FROM fev WHERE feat <> ''),
-         known_b AS (SELECT DISTINCT b FROM (
-           SELECT ('0x' || substring(md5(feat), 1, 15))::BIGINT % 65536
-               AS b
-           FROM fev WHERE feat <> ''
-           UNION ALL
-           SELECT ('0x' || substring(md5(feat), 1, 15))::BIGINT % 65536
-           FROM fdr WHERE feat <> '')),
-         """ + blindWindowSql + """
-         ORDER BY step"""),
-
-    // q165: identical chain, but the fit-time coverage is source ∪
-    // TARGET (the evens plus the zz-qq-suffixed target slice) and the
-    // refit coverage adds the drifted sample to the source side
-    "q165_dsir_maintain" ->
-      ("""WITH base AS (SELECT doc_id, text FROM documents
-           WHERE length(trim(text)) > 0 AND doc_id < 1000),
-         ev AS (SELECT regexp_split_to_array(trim(lower(text)),
-             '\s+') AS t
-           FROM base WHERE doc_id % 2 = 0),
-         tg AS (SELECT regexp_split_to_array(
-             trim(lower(text) || ' zz qq zz qq'), '\s+') AS t
-           FROM base WHERE doc_id % 2 = 0 AND doc_id % 8 = 0),
-         dr AS (SELECT regexp_split_to_array(
-             trim(translate(lower(text), 'aeiou', '01234')), '\s+') AS t
-           FROM base WHERE doc_id % 2 = 1),
-         fev AS (
-           SELECT unnest(t) AS feat FROM ev
-           UNION ALL
-           SELECT array_to_string(t[i:i+1], ' ') FROM ev,
-             LATERAL (SELECT unnest(generate_series(1, len(t)-1)) AS i)),
-         ftg AS (
-           SELECT unnest(t) AS feat FROM tg
-           UNION ALL
-           SELECT array_to_string(t[i:i+1], ' ') FROM tg,
-             LATERAL (SELECT unnest(generate_series(1, len(t)-1)) AS i)),
-         fdr AS (
-           SELECT unnest(t) AS feat FROM dr
-           UNION ALL
-           SELECT array_to_string(t[i:i+1], ' ') FROM dr,
-             LATERAL (SELECT unnest(generate_series(1, len(t)-1)) AS i)),
-         known_a AS (SELECT DISTINCT b FROM (
-           SELECT ('0x' || substring(md5(feat), 1, 15))::BIGINT % 65536
-               AS b
-           FROM fev WHERE feat <> ''
-           UNION ALL
-           SELECT ('0x' || substring(md5(feat), 1, 15))::BIGINT % 65536
-           FROM ftg WHERE feat <> '')),
-         known_b AS (SELECT DISTINCT b FROM (
-           SELECT ('0x' || substring(md5(feat), 1, 15))::BIGINT % 65536
-               AS b
-           FROM fev WHERE feat <> ''
-           UNION ALL
-           SELECT ('0x' || substring(md5(feat), 1, 15))::BIGINT % 65536
-           FROM ftg WHERE feat <> ''
-           UNION ALL
-           SELECT ('0x' || substring(md5(feat), 1, 15))::BIGINT % 65536
-           FROM fdr WHERE feat <> '')),
-         """ + blindWindowSql + """
-         ORDER BY step"""),
-
-    // set-level replay of all three admission decisions: accepted
-    // texts, accepted EXCEPT the tombstoned texts, and the per-text
-    // min-id collapse — identical live/post columns pin that the
-    // Bloom purge moves cost, never decisions
-    "q128_exact_takedown" ->
-      (exactTakedownBatchSql + """
-         live_texts AS (SELECT text FROM acc_texts
-           EXCEPT SELECT text FROM tomb_texts)
-         SELECT f.doc_id,
-           f.is_first AND a.text IS NULL AS admitted_pre,
-           f.is_first AND l.text IS NULL AS admitted_live,
-           f.is_first AND l.text IS NULL AS admitted_post
-         FROM firsts f
-         LEFT JOIN acc_texts a ON a.text = f.text
-         LEFT JOIN live_texts l ON l.text = f.text
-         ORDER BY f.doc_id"""),
-
-    // the full incremental near-dup contract replayed twice (pre /
-    // post takedown): shingles, cross Jaccard against both accepted
-    // sets, within-batch pairs, the recursive closure and both taint
-    // decisions — set algebra over the q56 oracle
-    "q129_ngram_takedown" ->
-      ("""WITH olds AS (SELECT doc_id, lower(trim(text)) tx
-             FROM documents WHERE doc_id % 2 = 0),
-          live_olds AS (SELECT * FROM olds WHERE doc_id % 6 != 0),
-          """ + decontamBatchSql + """
-          """ + shingleOverlapSql + """
-          hitsx AS (SELECT hx.bid, hx.oid FROM hx
-            JOIN bsz ON bsz.doc_id = hx.bid
-            JOIN osz ON osz.doc_id = hx.oid
-            WHERE hx.i*1.0/(bsz.sz + osz.sz - hx.i) >= 0.5),
-          hits_pre AS (SELECT DISTINCT bid AS doc_id FROM hitsx),
-          hits_post AS (SELECT DISTINCT bid AS doc_id FROM hitsx
-            WHERE oid % 6 != 0),
-          """ + batchComponentsSql + """
-          labeled AS (SELECT b.doc_id, coalesce(comp.comp, b.doc_id) AS comp
-            FROM batch b LEFT JOIN comp USING (doc_id)),
-          tainted_pre AS (SELECT DISTINCT l.comp FROM labeled l
-            JOIN hits_pre h ON l.doc_id = h.doc_id),
-          tainted_post AS (SELECT DISTINCT l.comp FROM labeled l
-            JOIN hits_post h ON l.doc_id = h.doc_id)
-         SELECT l.doc_id,
-           l.comp = l.doc_id AND l.comp NOT IN (SELECT comp FROM tainted_pre)
-             AS admitted_pre,
-           l.comp = l.doc_id AND l.comp NOT IN (SELECT comp FROM tainted_post)
-             AS admitted_post
-         FROM labeled l
-         ORDER BY l.doc_id"""),
-
-    // the full text→vector chain replayed: tokenize, md5 bucket +
-    // sign-hash fold, per-doc nonzero/sum-of-squares stats (exact
-    // integers), brute-force cosine argmax with ties to the smaller id
-    "q130_text_embed_ann" ->
-      """WITH base AS (SELECT doc_id, text, 0 AS is_q FROM documents),
-          qd AS (SELECT doc_id + 500000 AS doc_id, text || ' zq zq qz' AS text,
-            1 AS is_q FROM documents WHERE doc_id < 15),
-          all_docs AS (SELECT * FROM base UNION ALL SELECT * FROM qd),
-          toks AS (SELECT doc_id, is_q,
-            unnest(list_filter(regexp_split_to_array(lower(trim(text)), '\s+'),
-              t -> t != '')) AS t
-            FROM all_docs),
-          contrib AS (SELECT doc_id, is_q,
-            ('0x' || substring(md5(t), 1, 15))::BIGINT % 64 AS b,
-            CASE WHEN (('0x' || substring(md5(t), 1, 15))::BIGINT // 64) % 2 = 0
-              THEN 1.0 ELSE -1.0 END AS s
-            FROM toks),
-          vecs AS (SELECT doc_id, is_q, b, sum(s) AS v FROM contrib
-            GROUP BY 1, 2, 3 HAVING sum(s) != 0),
-          stats AS (SELECT doc_id, count(*)::BIGINT AS nnz,
-            CAST(sum(v * v) AS BIGINT) AS ssq
-            FROM vecs WHERE is_q = 0 GROUP BY doc_id),
-          dots AS (SELECT q.doc_id AS query_id, c.doc_id AS neighbor_id,
-            sum(q.v * c.v) AS dp
-            FROM vecs q JOIN vecs c ON q.b = c.b AND q.is_q = 1 AND c.is_q = 0
-            GROUP BY 1, 2),
-          norms AS (SELECT doc_id, is_q, sqrt(sum(v * v)) AS n FROM vecs
-            GROUP BY 1, 2),
-          cosr AS (SELECT d.query_id, d.neighbor_id,
-            d.dp / (qn.n * cn.n) AS cosv
-            FROM dots d JOIN norms qn ON qn.doc_id = d.query_id AND qn.is_q = 1
-            JOIN norms cn ON cn.doc_id = d.neighbor_id AND cn.is_q = 0),
-          top AS (SELECT query_id, neighbor_id AS top1 FROM (
-            SELECT query_id, neighbor_id, row_number() OVER (PARTITION BY query_id
-              ORDER BY cosv DESC, neighbor_id) AS rn FROM cosr) WHERE rn = 1)
-         SELECT t.query_id, t.top1, s.nnz, s.ssq
-         FROM top t JOIN stats s ON s.doc_id = t.top1
-         ORDER BY t.query_id""",
-
-    // the q130 chain at dim 1024: tokenize, md5 bucket + sign, per-doc
-    // scatter — nnz/ssq/position-weighted checksum, all exact integers
-    "q135_hash_embed_hidim" ->
-      """WITH toks AS (SELECT doc_id,
-            unnest(list_filter(regexp_split_to_array(lower(trim(text)), '\s+'),
-              t -> t != '')) AS t
-            FROM documents WHERE text IS NOT NULL),
-          contrib AS (SELECT doc_id,
-            ('0x' || substring(md5(t), 1, 15))::BIGINT % 1024 AS b,
-            CASE WHEN (('0x' || substring(md5(t), 1, 15))::BIGINT // 1024) % 2 = 0
-              THEN 1.0 ELSE -1.0 END AS s
-            FROM toks),
-          vecs AS (SELECT doc_id, b, sum(s) AS v FROM contrib
-            GROUP BY 1, 2 HAVING sum(s) != 0),
-          stats AS (SELECT doc_id, count(*)::BIGINT AS nnz,
-            CAST(sum(v * v) AS BIGINT) AS ssq,
-            CAST(sum(v * (b + 1)) AS BIGINT) AS wsum
-            FROM vecs GROUP BY doc_id)
-         SELECT d.doc_id, coalesce(s.nnz, 0)::BIGINT AS nnz,
-           coalesce(s.ssq, 0)::BIGINT AS ssq,
-           coalesce(s.wsum, 0)::BIGINT AS wsum
-         FROM documents d LEFT JOIN stats s USING (doc_id)
-         WHERE d.text IS NOT NULL
-         ORDER BY d.doc_id""",
-
-    // the full text→vector→admission chain replayed with
-    // integer-exact sparse dots: tokenize → md5 bucket/sign → sparse
-    // vectors for BOTH corpora → cosine vs every accepted doc →
-    // max-(cosine, smaller-id) decision at tau (nProbe = nCells, so
-    // the streamed probe equals the brute-force rule); empty/null
-    // arrivals are explicit admit rows
-    // the planted pixel formula sampled through the SAME integer
-    // floor rule ((x*16)//7, (y*12)//5), every byte position-weighted
-    // — one disagreeing output byte anywhere in the resized buffer
-    // breaks the checksum
-    "q143_image_resize" ->
-      """WITH media AS (SELECT i AS media_id, i AS src FROM range(1, 7) t(i)),
-         px AS (
-           SELECT media_id,
-             (src*31 + ((x*16)//7)*(11 + src % 7) + ((y*12)//5)*29
-               + ((x*16)//7)*((y*12)//5)*(1 + src % 3)) % 256 AS v,
-             ((y*7 + x)*3 + c) + 1 AS pos
-           FROM media, range(0, 5) ty(y), range(0, 7) tx(x),
-             range(0, 3) tc(c))
-         SELECT media_id, 7::INTEGER AS resized_width,
-           5::INTEGER AS resized_height,
-           sum(v * pos)::BIGINT AS checksum, sum(v)::BIGINT AS total
-         FROM px GROUP BY media_id
-         UNION ALL
-         SELECT 9001, NULL, NULL, NULL, NULL
-         ORDER BY media_id""",
-
-    // q153: per-frame pixel formulas → the 8×8 lattice → sum-pool
-    // across frames (all integer sums) → cosine argmax + tau 0.98;
-    // the first-frame-dropped stratum drops f = 0 from its sum, the
-    // brightness stratum adds the shift inside every frame's term;
-    // torn/garbage/empty payloads are explicit admit rows
-    // q154: identical decisions through the streamed IVF route
-    // (nProbe = nCells — the probe IS the brute-force rule)
-    "q154_stream_video_semantic" ->
-      videoEmbedOracleSql,
-
-    "q153_video_embed_neardup" ->
-      videoEmbedOracleSql,
-
-    // q155: magic-byte format table + dead-letter classification from
-    // planted knowledge; dims from the fixture; dup pointers from the
-    // q142 dHash construction over the planted formulas (re-encodes
-    // share a src → share a signature; the min-id member is canonical)
-    "q155_media_datasheet" ->
-      """WITH ok AS (
-           SELECT media_id, src, fmt FROM (VALUES
-             (1, 1, 'png'), (2, 2, 'png'), (3, 3, 'png'),
-             (4, 4, 'png'), (5, 5, 'png'), (6, 6, 'png'),
-             (501, 1, 'bmp'), (502, 2, 'bmp'), (503, 3, 'bmp'),
-             (504, 1, 'gif')) t(media_id, src, fmt)),
-         g AS (
-           SELECT media_id, gy, gx,
-             (src*31 + (gx*16//9)*(11 + src % 7) + (gy*12//8)*29
-               + (gx*16//9)*(gy*12//8)*(1 + src % 3)) % 256 AS v
-           FROM ok, range(0, 8) t1(gy), range(0, 9) t2(gx)),
-         h AS (
-           SELECT a.media_id,
-             bit_or(CASE WHEN b.v > a.v THEN
-                 CASE WHEN a.gy*8 + a.gx = 63 THEN -9223372036854775807 - 1
-                   ELSE 1::BIGINT << (a.gy*8 + a.gx) END
-               ELSE 0::BIGINT END) AS dhash
-           FROM g a JOIN g b ON a.media_id = b.media_id
-             AND b.gy = a.gy AND b.gx = a.gx + 1
-           WHERE a.gx < 8 GROUP BY a.media_id),
-         firsts AS (
-           SELECT dhash, count(*) AS n, min(media_id) AS first_id
-           FROM h GROUP BY dhash),
-         okrows AS (
-           SELECT o.media_id, o.fmt AS format, 'ok' AS decode_status,
-             192::BIGINT AS n_px,
-             CASE WHEN f.n > 1 AND o.media_id <> f.first_id
-               THEN f.first_id END AS dup_of
-           FROM ok o JOIN h USING (media_id) JOIN firsts f
-             ON f.dhash = h.dhash)
-         SELECT media_id, format, decode_status, n_px, dup_of
-         FROM okrows
-         UNION ALL
-         SELECT media_id, format, decode_status, NULL, NULL
-         FROM (VALUES
-           (601, 'wav', 'undecodable'),
-           (9001, 'unknown', 'undecodable'),
-           (9002, 'empty', 'empty_payload'),
-           (9003, 'null', 'null_payload'))
-           t(media_id, format, decode_status)
-         ORDER BY media_id""",
-
-    // q148: pixel formulas → gray luma (= v) → the 8×8 embed lattice
-    // → integer-exact dots → cosine argmax (ties to the smaller ref)
-    // → the tau decision; corrupt/null payloads are explicit admit
-    // rows. q149 runs the SAME oracle against the streamed IVF route.
-    "q148_image_embed_neardup" ->
-      imageEmbedOracleSql,
-
-    // q150: PCM formula → channel mix → k·frames div 64 window
-    // energies (all integer-exact in doubles — the fixture bounds
-    // samples at ±128 so dots stay far under 2^53) → cosine argmax +
-    // tau; gained copies land at cosine exactly 1, corrupt/short
-    // clips are explicit admit rows
-    // q151: identical decisions through the streamed IVF route
-    // (nProbe = nCells — the probe IS the brute-force rule)
-    "q151_stream_audio_semantic" ->
-      audioEmbedOracleSql,
-
-    "q150_audio_embed_neardup" ->
-      audioEmbedOracleSql,
-
-    // q149: identical decisions through the streamed IVF route
-    // (nProbe = nCells — the probe IS the brute-force rule)
-    "q149_stream_image_semantic" ->
-      imageEmbedOracleSql,
-
-    // pixel formulas → dHash grid → argmin admission for the healthy
-    // route; explicit VALUES rows with the deterministic reason
-    // classification for the quarantined route
-    "q142_stream_quarantine" ->
-      quarantineOracleSql,
-
-    // q146: q142's replay verbatim — the idempotent sink under a
-    // simulated crash-redelivery must produce EXACTLY the no-crash
-    // output (an append sink would duplicate the replayed batch's
-    // rows, breaking the oracle's row counts)
-    "q146_stream_idempotent_sink" ->
-      quarantineOracleSql,
-
-    // the q128 decision algebra (admission vs accepted-minus-
-    // tombstoned texts, per-text min-id rule) + the window's
-    // lifecycle flags: fired = pending ledger rows exist, the
-    // generation flips iff fired, the ledger clears
-    "q139_exact_maintain" ->
-      (exactTakedownBatchSql + """
-         live_texts AS (SELECT text FROM acc_texts
-           EXCEPT SELECT text FROM tomb_texts),
-         pend AS (SELECT count(*) AS c FROM tomb_texts)
-         SELECT f.doc_id,
-           f.is_first AND l.text IS NULL AS admitted_pre,
-           f.is_first AND l.text IS NULL AS admitted_post,
-           (SELECT c FROM pend) AS pending_1,
-           FALSE AS fpp_fired_1,
-           (SELECT c FROM pend) > 0 AS fired_1,
-           0::BIGINT AS post_pending_1,
-           (SELECT c FROM pend) > 0 AS gen_changed_1,
-           FALSE AS fired_2,
-           FALSE AS gen_changed_2
-         FROM firsts f
-         LEFT JOIN live_texts l ON l.text = f.text
-         ORDER BY f.doc_id"""),
-
-    // the q129 incremental contract replayed ONCE against
-    // accepted-minus-tombstoned (the window's pre and post decisions
-    // are both ledger-applied, so they replay identically) + the
-    // lifecycle flags
-    "q140_ngram_maintain" ->
-      ("""WITH olds AS (SELECT doc_id, lower(trim(text)) tx
-             FROM documents WHERE doc_id % 2 = 0 AND doc_id < 250),
-          batch AS (
-            SELECT doc_id, lower(trim(text)) tx
-            FROM documents WHERE doc_id % 2 = 1 AND doc_id < 250
-            UNION ALL
-            SELECT doc_id + 1000000, lower(trim(text || ' xyzzy qbf'))
-            FROM documents WHERE doc_id % 14 = 0 AND doc_id < 250
-            UNION ALL
-            SELECT doc_id + 2000000, lower(trim(text || ' plugh tail'))
-            FROM documents WHERE doc_id % 14 = 7 AND doc_id < 250),
-          bt AS (SELECT doc_id, regexp_split_to_array(tx, '\s+') t FROM batch),
-          bsh AS (SELECT DISTINCT doc_id, array_to_string(t[i:i+3], ' ') s
-            FROM bt, LATERAL (SELECT unnest(generate_series(1,
-              greatest(len(t)-3, 1))) AS i)),
-          ot AS (SELECT doc_id, regexp_split_to_array(tx, '\s+') t FROM olds),
-          """ + shingleOverlapSql + """
-          hits AS (SELECT DISTINCT hx.bid AS doc_id FROM hx
-            JOIN bsz ON bsz.doc_id = hx.bid
-            JOIN osz ON osz.doc_id = hx.oid
-            WHERE hx.oid % 6 != 0
-              AND hx.i*1.0/(bsz.sz + osz.sz - hx.i) >= 0.5),
-          """ + batchComponentsSql + """
-          labeled AS (SELECT b.doc_id, coalesce(comp.comp, b.doc_id) AS comp
-            FROM batch b LEFT JOIN comp USING (doc_id)),
-          tainted AS (SELECT DISTINCT l.comp FROM labeled l
-            JOIN hits h ON l.doc_id = h.doc_id),
-          pend AS (SELECT count(DISTINCT doc_id) AS c FROM documents
-            WHERE doc_id % 6 = 0 AND doc_id < 250)
-         SELECT l.doc_id,
-           l.comp = l.doc_id AND l.comp NOT IN (SELECT comp FROM tainted)
-             AS admitted_pre,
-           l.comp = l.doc_id AND l.comp NOT IN (SELECT comp FROM tainted)
-             AS admitted_post,
-           (SELECT c FROM pend) AS pending_1,
-           (SELECT c FROM pend) > 0 AS fired_1,
-           0::BIGINT AS post_pending_1,
-           (SELECT c FROM pend) > 0 AS gen_changed_1,
-           FALSE AS fired_2,
-           FALSE AS gen_changed_2
-         FROM labeled l
-         ORDER BY l.doc_id"""),
-
-    // md5-derived signatures, XOR bit flips and the exhaustive
-    // argmin admission decision vs refs-minus-tombstoned (the
-    // window's pre and post are both ledger-applied), + lifecycle
-    // flags
-    "q141_members_maintain" ->
-      """WITH refs AS (SELECT id AS media_id,
-            ('0x' || substring(md5('q141:' || id), 1, 15))::BIGINT AS sig
-           FROM range(1, 41) t(id)),
-          kept AS (SELECT * FROM refs WHERE media_id > 5),
-          arr AS (
-            SELECT id + 500 AS media_id,
-              ('0x' || substring(md5('q141:' || id), 1, 15))::BIGINT AS sig
-            FROM range(1, 11) t(id)
-            UNION ALL
-            SELECT id + 520,
-              xor(('0x' || substring(md5('q141:' || id), 1, 15))::BIGINT,
-                1::BIGINT << (id % 60))
-            FROM range(11, 16) t(id)
-            UNION ALL
-            SELECT id + 540,
-              ('0x' || substring(md5('q141n:' || id), 1, 15))::BIGINT
-            FROM range(1, 9) t(id)),
-          best AS (
-            SELECT a.media_id,
-              min_by(k.media_id,
-                bit_count(xor(a.sig, k.sig))::BIGINT * 1000 + k.media_id)
-                AS match_id
-            FROM arr a JOIN kept k ON bit_count(xor(a.sig, k.sig)) <= 3
-            GROUP BY a.media_id)
-         SELECT a.media_id,
-           b.match_id IS NULL AS admitted_pre, b.match_id AS match_pre,
-           b.match_id IS NULL AS admitted_post, b.match_id AS match_post,
-           5::BIGINT AS pending_1, TRUE AS fired_1,
-           0::BIGINT AS post_pending_1, TRUE AS gen_changed_1,
-           FALSE AS fired_2, FALSE AS gen_changed_2
-         FROM arr a LEFT JOIN best b USING (media_id)
-         ORDER BY a.media_id""",
-
-    "q138_stream_text_admission" ->
-      ("""WITH base AS (
-           SELECT doc_id, text FROM documents
-           WHERE length(trim(text)) > 0),
-         acc AS (SELECT doc_id, text, 1 AS is_acc FROM base
-           WHERE doc_id < 40),
-         arr AS (
-           SELECT doc_id + 500000 AS doc_id, text || ' zq zq qz' AS text,
-             0 AS is_acc
-           FROM base WHERE doc_id < 10
-           UNION ALL SELECT doc_id + 600000, text, 0 FROM base
-           WHERE doc_id >= 200 AND doc_id < 205),
-         alltexts AS (SELECT * FROM acc UNION ALL SELECT * FROM arr),
-         """ + simhashCosineSql + """
-         best AS (SELECT doc_id, acc_id, cosv FROM (
-           SELECT doc_id, acc_id, cosv, row_number() OVER
-             (PARTITION BY doc_id ORDER BY cosv DESC, acc_id) AS rn
-           FROM cosr) WHERE rn = 1),
-         decided AS (
-           SELECT a.doc_id,
-             coalesce(b.cosv < 0.9, TRUE) AS admitted,
-             CASE WHEN b.cosv >= 0.9 THEN b.acc_id END AS match_id
-           FROM arr a LEFT JOIN best b ON b.doc_id = a.doc_id
-           UNION ALL SELECT doc_id, TRUE, NULL
-           FROM (VALUES (900001), (900002)) t(doc_id))
-         SELECT doc_id, admitted, match_id
-         FROM decided ORDER BY doc_id"""),
-
-    // q147: the whole cascade replayed — exact text match (with the
-    // min-id audit pointer), the multiplicative quality rule, the
-    // q138 md5-bucket/sign embedding + cosine argmax for the semantic
-    // tier, and the first-reject precedence fold on top
-    "q147_stream_admission_cascade" ->
-      ("""WITH base AS (
-           SELECT doc_id, text FROM documents
-           WHERE length(trim(text)) > 0),
-         acc AS (SELECT doc_id, text FROM base WHERE doc_id < 40),
-         accx AS (SELECT text, min(doc_id) AS exact_id FROM acc
-           GROUP BY text),
-         arr AS (
-           SELECT doc_id + 400000 AS doc_id, text FROM base
-           WHERE doc_id < 10
-           UNION ALL SELECT doc_id + 500000, text || ' zq zq qz'
-           FROM base WHERE doc_id < 10
-           UNION ALL SELECT doc_id + 600000, text FROM base
-           WHERE doc_id >= 200 AND doc_id < 205
-           UNION ALL SELECT doc_id + 700000,
-             '@@ ## $$ %% !! ?? ;; :: ' || CAST(doc_id AS VARCHAR)
-           FROM base WHERE doc_id >= 200 AND doc_id < 205
-           UNION ALL SELECT doc_id, text
-           FROM (VALUES (900001, ''), (900002, NULL)) t(doc_id, text)),
-         alltexts AS (
-           SELECT 1 AS is_acc, doc_id, text FROM acc
-           UNION ALL SELECT 0, doc_id, text FROM arr
-           WHERE length(trim(coalesce(text, ''))) > 0),
-         """ + simhashCosineSql + """
-         best AS (SELECT doc_id, acc_id, cosv FROM (
-           SELECT doc_id, acc_id, cosv, row_number() OVER
-             (PARTITION BY doc_id ORDER BY cosv DESC, acc_id) AS rn
-           FROM cosr) WHERE rn = 1),
-         qual AS (SELECT doc_id,
-           coalesce(length(trim(text)) >= 20 AND
-             length(regexp_replace(text, '[A-Za-z0-9\s]', '', 'g'))
-               <= 0.3 * length(text), FALSE) AS qok
-           FROM arr),
-         decided AS (
-           SELECT a.doc_id,
-             CASE WHEN x.exact_id IS NOT NULL THEN 'exact'
-                  WHEN NOT q.qok THEN 'quality'
-                  WHEN b.cosv >= 0.9 THEN 'semantic' END AS reason,
-             x.exact_id, b.acc_id
-           FROM arr a
-           LEFT JOIN accx x ON x.text = a.text
-           JOIN qual q ON q.doc_id = a.doc_id
-           LEFT JOIN best b ON b.doc_id = a.doc_id)
-         SELECT doc_id, reason IS NULL AS admitted, reason,
-           CASE WHEN reason = 'exact' THEN exact_id END AS exact_match_id,
-           CASE WHEN reason = 'semantic' THEN acc_id END AS semantic_match_id
-         FROM decided ORDER BY doc_id"""),
-
-    // q156: the q147 cascade replayed in TWO decision worlds — the
-    // full accepted set (pre) and the set minus the tombstoned docs
-    // (live): exact via the live text view, semantic via the argmax
-    // over surviving accepted vectors; quality and precedence
-    // unchanged
-    "q156_cascade_takedown" ->
-      ("""WITH base AS (
-           SELECT doc_id, text FROM documents
-           WHERE length(trim(text)) > 0),
-         acc AS (SELECT doc_id, text FROM base WHERE doc_id < 40),
-         accx_pre AS (SELECT text, min(doc_id) AS exact_id FROM acc
-           GROUP BY text),
-         accx_live AS (SELECT text, min(doc_id) AS exact_id FROM acc
-           WHERE doc_id >= 5 GROUP BY text),
-         arr AS (
-           SELECT doc_id + 400000 AS doc_id, text FROM base
-           WHERE doc_id < 10
-           UNION ALL SELECT doc_id + 500000, text || ' zq zq qz'
-           FROM base WHERE doc_id < 10
-           UNION ALL SELECT doc_id + 600000, text FROM base
-           WHERE doc_id >= 200 AND doc_id < 205
-           UNION ALL SELECT doc_id, text
-           FROM (VALUES (900001, ''), (900002, NULL)) t(doc_id, text)),
-         alltexts AS (
-           SELECT 1 AS is_acc, doc_id, text FROM acc
-           UNION ALL SELECT 0, doc_id, text FROM arr
-           WHERE length(trim(coalesce(text, ''))) > 0),
-         """ + simhashCosineSql + """
-         best_pre AS (SELECT doc_id, acc_id, cosv FROM (
-           SELECT doc_id, acc_id, cosv, row_number() OVER
-             (PARTITION BY doc_id ORDER BY cosv DESC, acc_id) AS rn
-           FROM cosr) WHERE rn = 1),
-         best_live AS (SELECT doc_id, acc_id, cosv FROM (
-           SELECT doc_id, acc_id, cosv, row_number() OVER
-             (PARTITION BY doc_id ORDER BY cosv DESC, acc_id) AS rn
-           FROM cosr WHERE acc_id >= 5) WHERE rn = 1),
-         qual AS (SELECT doc_id,
-           coalesce(length(trim(text)) >= 20 AND
-             length(regexp_replace(text, '[A-Za-z0-9\s]', '', 'g'))
-               <= 0.3 * length(text), FALSE) AS qok
-           FROM arr),
-         decided AS (
-           SELECT a.doc_id,
-             CASE WHEN xp.exact_id IS NOT NULL THEN 'exact'
-                  WHEN NOT q.qok THEN 'quality'
-                  WHEN bp.cosv >= 0.9 THEN 'semantic' END AS reason_pre,
-             CASE WHEN xl.exact_id IS NOT NULL THEN 'exact'
-                  WHEN NOT q.qok THEN 'quality'
-                  WHEN bl.cosv >= 0.9 THEN 'semantic' END AS reason_live
-           FROM arr a
-           LEFT JOIN accx_pre xp ON xp.text = a.text
-           LEFT JOIN accx_live xl ON xl.text = a.text
-           JOIN qual q ON q.doc_id = a.doc_id
-           LEFT JOIN best_pre bp ON bp.doc_id = a.doc_id
-           LEFT JOIN best_live bl ON bl.doc_id = a.doc_id)
-         SELECT doc_id,
-           reason_pre IS NULL AS admitted_pre, reason_pre,
-           reason_live IS NULL AS admitted_live, reason_live
-         FROM decided ORDER BY doc_id"""),
-
-    // q157: brute-force cosine argmax replayed over both decision
-    // worlds. EXACT twins make every rank deterministic: the query's
-    // own vector appears twice (original id < 10, twin id + 20000),
-    // both tie at cosine 1.0 and the id tie-break picks the original
-    // pre-takedown and the twin after; post ≡ live pins that the
-    // physical purge moves cost, never answers
-    "q157_lsh_takedown" ->
-      ("""WITH c0 AS (SELECT vec_id, embedding::DOUBLE[] AS v
-             FROM embeddings),
-         twins AS (SELECT vec_id + 20000 AS vec_id, v
-           FROM c0 WHERE vec_id < 10),
-         corpus AS (SELECT * FROM c0 UNION ALL SELECT * FROM twins),
-         q AS (SELECT vec_id + 10000 AS query_id, v AS qv
-           FROM c0 WHERE vec_id < 10),
-         """ + annTakedownSql + """
-         alive AS (SELECT query_id, neighbor_id AS live_top1 FROM (
-             SELECT query_id, neighbor_id, row_number() OVER (PARTITION BY query_id
-               ORDER BY cos_raw DESC, neighbor_id) AS rn
-             FROM s WHERE neighbor_id >= 10) WHERE rn = 1)
-         SELECT p.query_id, p.pre_top1, a.live_top1, a.live_top1 AS post_top1
-         FROM pre p JOIN alive a USING (query_id)
-         ORDER BY p.query_id"""),
-
-    // the q134 replay with THREE decision worlds: the full reference
-    // set (pre), and the set minus the tombstoned ids twice — the
-    // ledger-applied live table and the post-compaction table must
-    // produce the SAME argmin decisions (logical ≡ physical delete)
-    "q137_durable_members_lifecycle" ->
-      ("""WITH refs AS (
-           SELECT i AS ref_id, i AS src, 0 AS shift FROM range(1, 11) t(i)),
-         arrivals AS (
-           SELECT 500 + i AS media_id, i AS src, 0 AS shift FROM range(1, 6) t(i)
-           UNION ALL SELECT 510 + i, i, 4 FROM range(1, 6) t(i)
-           UNION ALL SELECT 500 + i, i, 0 FROM range(21, 24) t(i)),
-         """ + refDhashSql + """
-         sigs AS (
-           SELECT media_id, dhash FROM ah
-           UNION ALL SELECT 9001, NULL),
-         best_pre AS (
-           SELECT s.media_id,
-             min_by(r.ref_id,
-               bit_count(xor(s.dhash, r.sig))::BIGINT * 1000 + r.ref_id)
-               AS match_pre
-           FROM sigs s JOIN rh r ON bit_count(xor(s.dhash, r.sig)) <= 6
-           WHERE s.dhash IS NOT NULL
-           GROUP BY s.media_id),
-         best_live AS (
-           SELECT s.media_id,
-             min_by(r.ref_id,
-               bit_count(xor(s.dhash, r.sig))::BIGINT * 1000 + r.ref_id)
-               AS match_live
-           FROM sigs s JOIN rh r ON bit_count(xor(s.dhash, r.sig)) <= 6
-             AND r.ref_id NOT IN (1, 3)
-           WHERE s.dhash IS NOT NULL
-           GROUP BY s.media_id)
-         SELECT s.media_id, s.dhash,
-           bp.match_pre IS NULL AS admitted_pre, bp.match_pre,
-           bl.match_live IS NULL AS admitted_live, bl.match_live,
-           bl.match_live IS NULL AS admitted_post,
-           bl.match_live AS match_post
-         FROM sigs s
-           LEFT JOIN best_pre bp ON bp.media_id = s.media_id
-           LEFT JOIN best_live bl ON bl.media_id = s.media_id
-         ORDER BY s.media_id"""),
-
-    // the q133 temporal replay split into reference and arrival
-    // sides, then the exhaustive argmin admission decision at the
-    // threshold; corrupt arrivals are admitted null-signature rows
-    "q136_stream_video_admission" ->
-      """WITH media AS (
-           SELECT i AS media_id, i AS src, 0 AS bright, 0 AS dropfirst,
-             0 AS tweak, 1 AS is_ref FROM range(1, 7) t(i)
-           UNION ALL SELECT 500 + i, i, 4, 0, 0, 0 FROM range(1, 4) t(i)
-           UNION ALL SELECT 510 + i, i, 0, 1, 0, 0 FROM range(1, 4) t(i)
-           UNION ALL SELECT 521, 1, 0, 0, 1, 0
-           UNION ALL SELECT 510 + i, i, 0, 0, 0, 0 FROM range(21, 23) t(i)),
-         frames AS (
-           SELECT m.*, f.f FROM media m, range(0, 8) f(f)
-           WHERE NOT (m.dropfirst = 1 AND f.f = 0)),
-         grid AS (
-           SELECT gx.gx, gy.gy, (gx.gx * 16) // 9 AS sx,
-             (gy.gy * 12) // 8 AS sy
-           FROM range(0, 9) gx(gx), range(0, 8) gy(gy)),
-         lumas AS (
-           SELECT fr.media_id, fr.is_ref, fr.f, g.gx, g.gy,
-             CASE WHEN fr.tweak = 1 AND g.sx = 3 AND g.sy = 0 THEN 255
-               ELSE (CASE WHEN fr.f < 6
-                 THEN (fr.src*37 + g.sx*(11 + fr.src % 7) + g.sy*23
-                   + g.sx*g.sy*(1 + fr.src % 3)) % 200
-                 ELSE (fr.src*53 + g.sx*29 + g.sy*7
-                   + g.sx*g.sy*2 + 101) % 200 END) + fr.bright
-             END AS v
-           FROM frames fr CROSS JOIN grid g),
-         comps AS (
-           SELECT a.media_id, a.is_ref, a.f, a.gy * 8 + a.gx AS bit,
-             CASE WHEN b.v > a.v THEN 1 ELSE 0 END AS vote
-           FROM lumas a JOIN lumas b
-             ON b.media_id = a.media_id AND b.f = a.f
-               AND b.gy = a.gy AND b.gx = a.gx + 1
-           WHERE a.gx < 8),
-         votes AS (
-           SELECT media_id, is_ref, bit, sum(vote) AS nv, count(*) AS nf
-           FROM comps GROUP BY 1, 2, 3),
-         vsigs AS (
-           SELECT media_id, is_ref,
-             bit_or(CASE WHEN nv * 2 > nf THEN
-                 CASE WHEN bit = 63 THEN -9223372036854775807 - 1
-                   ELSE 1::BIGINT << bit END
-               ELSE 0::BIGINT END) AS vsig,
-             max(nf)::BIGINT AS n_frames
-           FROM votes GROUP BY media_id, is_ref),
-         sigs AS (
-           SELECT media_id, n_frames, vsig FROM vsigs WHERE is_ref = 0
-           UNION ALL SELECT media_id, NULL, NULL
-           FROM (VALUES (9001), (9002), (9003)) t(media_id)),
-         best AS (
-           SELECT s.media_id,
-             min_by(r.media_id,
-               bit_count(xor(s.vsig, r.vsig))::BIGINT * 1000 + r.media_id)
-               AS match_id,
-             min(bit_count(xor(s.vsig, r.vsig))) AS match_hamming
-           FROM sigs s JOIN vsigs r
-             ON r.is_ref = 1 AND bit_count(xor(s.vsig, r.vsig)) <= 6
-           WHERE s.vsig IS NOT NULL
-           GROUP BY s.media_id)
-         SELECT s.media_id, s.n_frames, s.vsig,
-           b.match_id IS NULL AS admitted, b.match_id,
-           b.match_hamming::INTEGER AS match_hamming
-         FROM sigs s LEFT JOIN best b ON b.media_id = s.media_id
-         ORDER BY s.media_id""",
-
-    // both sides' pixel formulas and dHash constructions replayed,
-    // then BOTH exhaustive argmin admission decisions — against the
-    // full reference set (pre) and against the set minus the
-    // tombstoned ids (post); corrupt arrivals are admitted
-    // null-signature rows in both worlds
-    "q134_phash_takedown_stream" ->
-      ("""WITH refs AS (
-           SELECT i AS ref_id, i AS src, 0 AS shift FROM range(1, 11) t(i)),
-         arrivals AS (
-           SELECT 500 + i AS media_id, i AS src, 0 AS shift FROM range(1, 6) t(i)
-           UNION ALL SELECT 510 + i, i, 4 FROM range(1, 6) t(i)
-           UNION ALL SELECT 500 + i, i, 0 FROM range(21, 24) t(i)),
-         """ + refDhashSql + """
-         sigs AS (
-           SELECT media_id, dhash FROM ah
-           UNION ALL SELECT media_id, NULL
-           FROM (VALUES (9001), (9002)) t(media_id)),
-         best_pre AS (
-           SELECT s.media_id,
-             min_by(r.ref_id,
-               bit_count(xor(s.dhash, r.sig))::BIGINT * 1000 + r.ref_id)
-               AS match_pre
-           FROM sigs s JOIN rh r ON bit_count(xor(s.dhash, r.sig)) <= 6
-           WHERE s.dhash IS NOT NULL
-           GROUP BY s.media_id),
-         best_post AS (
-           SELECT s.media_id,
-             min_by(r.ref_id,
-               bit_count(xor(s.dhash, r.sig))::BIGINT * 1000 + r.ref_id)
-               AS match_post
-           FROM sigs s JOIN rh r ON bit_count(xor(s.dhash, r.sig)) <= 6
-             AND r.ref_id NOT IN (1, 3)
-           WHERE s.dhash IS NOT NULL
-           GROUP BY s.media_id)
-         SELECT s.media_id, s.dhash,
-           bp.match_pre IS NULL AS admitted_pre, bp.match_pre,
-           bq.match_post IS NULL AS admitted_post, bq.match_post
-         FROM sigs s
-           LEFT JOIN best_pre bp ON bp.media_id = s.media_id
-           LEFT JOIN best_post bq ON bq.media_id = s.media_id
-         ORDER BY s.media_id"""),
-
-    // the whole temporal chain replayed: planted pixel formulas →
-    // 9×8 grid lumas per frame → every dHash gradient comparison →
-    // per-bit majority vote over the frame sequence → the packed
-    // 64-bit video signature → exhaustive pairwise Hamming truth;
-    // corrupt payloads are explicit null-signature rows
-    "q133_video_temporal_neardup" ->
-      """WITH media AS (
-           SELECT i AS media_id, i AS src, 0 AS bright, 0 AS dropfirst,
-             0 AS tweak FROM range(1, 7) t(i)
-           UNION ALL SELECT 500 + i, i, 4, 0, 0 FROM range(1, 4) t(i)
-           UNION ALL SELECT 510 + i, i, 0, 1, 0 FROM range(1, 4) t(i)
-           UNION ALL SELECT 521, 1, 0, 0, 1
-           UNION ALL SELECT 510 + i, i, 0, 0, 0 FROM range(21, 23) t(i)),
-         frames AS (
-           SELECT m.*, f.f FROM media m, range(0, 8) f(f)
-           WHERE NOT (m.dropfirst = 1 AND f.f = 0)),
-         grid AS (
-           SELECT gx.gx, gy.gy, (gx.gx * 16) // 9 AS sx,
-             (gy.gy * 12) // 8 AS sy
-           FROM range(0, 9) gx(gx), range(0, 8) gy(gy)),
-         lumas AS (
-           SELECT fr.media_id, fr.f, g.gx, g.gy,
-             CASE WHEN fr.tweak = 1 AND g.sx = 3 AND g.sy = 0 THEN 255
-               ELSE (CASE WHEN fr.f < 6
-                 THEN (fr.src*37 + g.sx*(11 + fr.src % 7) + g.sy*23
-                   + g.sx*g.sy*(1 + fr.src % 3)) % 200
-                 ELSE (fr.src*53 + g.sx*29 + g.sy*7
-                   + g.sx*g.sy*2 + 101) % 200 END) + fr.bright
-             END AS v
-           FROM frames fr CROSS JOIN grid g),
-         comps AS (
-           SELECT a.media_id, a.f, a.gy * 8 + a.gx AS bit,
-             CASE WHEN b.v > a.v THEN 1 ELSE 0 END AS vote
-           FROM lumas a JOIN lumas b
-             ON b.media_id = a.media_id AND b.f = a.f
-               AND b.gy = a.gy AND b.gx = a.gx + 1
-           WHERE a.gx < 8),
-         votes AS (
-           SELECT media_id, bit, sum(vote) AS nv, count(*) AS nf
-           FROM comps GROUP BY 1, 2),
-         vsigs AS (
-           SELECT media_id,
-             bit_or(CASE WHEN nv * 2 > nf THEN
-                 CASE WHEN bit = 63 THEN -9223372036854775807 - 1
-                   ELSE 1::BIGINT << bit END
-               ELSE 0::BIGINT END) AS vsig,
-             max(nf)::BIGINT AS n_frames
-           FROM votes GROUP BY media_id),
-         pairs AS (
-           SELECT a.media_id AS a, b.media_id AS b,
-             bit_count(xor(a.vsig, b.vsig)) AS hamming
-           FROM vsigs a JOIN vsigs b ON a.media_id < b.media_id
-           WHERE bit_count(xor(a.vsig, b.vsig)) <= 6),
-         partnered AS (
-           SELECT a AS media_id, b AS partner, hamming FROM pairs
-           UNION ALL SELECT b, a, hamming FROM pairs),
-         stats AS (
-           SELECT media_id, count(*)::BIGINT AS n_pairs,
-             min(hamming) AS mh
-           FROM partnered GROUP BY media_id),
-         top AS (
-           SELECT p.media_id, min(p.partner) AS top_partner,
-             s.mh AS top_hamming
-           FROM partnered p JOIN stats s
-             ON s.media_id = p.media_id AND p.hamming = s.mh
-           GROUP BY p.media_id, s.mh),
-         allm AS (
-           SELECT media_id FROM media
-           UNION ALL SELECT media_id
-           FROM (VALUES (9001), (9002), (9003)) t(media_id))
-         SELECT m.media_id, v.n_frames, v.vsig,
-           coalesce(s.n_pairs, 0)::BIGINT AS n_pairs, t.top_partner,
-           t.top_hamming::INTEGER AS top_hamming
-         FROM allm m LEFT JOIN vsigs v USING (media_id)
-           LEFT JOIN stats s USING (media_id)
-           LEFT JOIN top t USING (media_id)
-         ORDER BY m.media_id""",
-
-    // both sides of the streamed audio admission replayed: the sample
-    // formula (refs AND arrivals — re-encodes and gain copies share a
-    // src, novel clips bring their own), stereo mixdown, window
-    // energies, bit packing, and the exhaustive (hamming, ref) argmin
-    // decision at the threshold; corrupt/short arrivals are explicit
-    // null-fingerprint admit rows
-    "q132_stream_audio_admission" ->
-      """WITH refs AS (
-           SELECT i AS ref_id, i AS src,
-             CASE WHEN i <= 4 THEN 1 ELSE 2 END AS ch, 1 AS scale
-           FROM range(1, 9) t(i)),
-         arrivals AS (
-           SELECT 500 + i AS media_id, i AS src, 1 AS ch, 1 AS scale
-             FROM range(1, 5) t(i)
-           UNION ALL SELECT 510 + i, i, 1, 3 FROM range(1, 5) t(i)
-           UNION ALL SELECT 500 + i, i, 1, 1 FROM range(21, 25) t(i)
-           UNION ALL SELECT 525 + i, i, 2, 1 FROM range(5, 7) t(i)),
-         clips AS (
-           SELECT ref_id AS media_id, src, ch, scale, 1 AS is_ref FROM refs
-           UNION ALL SELECT media_id, src, ch, scale, 0 FROM arrivals),
-         mixes AS (
-           SELECT c.media_id, c.is_ref, f.i AS frame,
-             c.scale * CASE WHEN c.ch = 1
-               THEN (c.src*2654435761 + f.i*f.i*40503 + f.i*977) % 4096 - 2048
-               ELSE ((c.src*2654435761 + f.i*f.i*40503 + f.i*977) % 4096 - 2048)
-                  + ((c.src*2654435761 + f.i*f.i*40503 + f.i*977 + 997) % 4096 - 2048)
-               END AS mix
-           FROM clips c, range(0, 200) f(i)),
-         energies AS (
-           SELECT media_id, is_ref, k.k AS k, sum(mix * mix) AS e
-           FROM range(0, 65) k(k) JOIN mixes
-             ON frame >= k.k * 200 // 65 AND frame < (k.k + 1) * 200 // 65
-           GROUP BY media_id, is_ref, k.k),
-         fps AS (
-           SELECT a.media_id, a.is_ref,
-             bit_or(CASE WHEN b.e > a.e THEN
-                 CASE WHEN a.k = 63 THEN -9223372036854775807 - 1
-                   ELSE 1::BIGINT << a.k END
-               ELSE 0::BIGINT END) AS afp
-           FROM energies a JOIN energies b
-             ON a.media_id = b.media_id AND a.is_ref = b.is_ref
-               AND b.k = a.k + 1
-           WHERE a.k < 64
-           GROUP BY a.media_id, a.is_ref),
-         best AS (
-           SELECT s.media_id, r.media_id AS match_id,
-             bit_count(xor(s.afp, r.afp)) AS hamming,
-             row_number() OVER (PARTITION BY s.media_id
-               ORDER BY bit_count(xor(s.afp, r.afp)), r.media_id) AS rn
-           FROM fps s JOIN fps r ON s.is_ref = 0 AND r.is_ref = 1
-           WHERE bit_count(xor(s.afp, r.afp)) <= 6),
-         decided AS (
-           SELECT f.media_id, f.afp,
-             b.media_id IS NULL AS admitted, b.match_id,
-             b.hamming AS match_hamming
-           FROM fps f LEFT JOIN (SELECT * FROM best WHERE rn = 1) b
-             ON b.media_id = f.media_id
-           WHERE f.is_ref = 0
-           UNION ALL
-           SELECT media_id, NULL, TRUE, NULL, NULL
-           FROM (VALUES (9001), (9002), (9003), (9004)) t(media_id))
-         SELECT media_id, afp, admitted, match_id,
-           match_hamming::INTEGER AS match_hamming
-         FROM decided
-         ORDER BY media_id""",
-
-    // the sample formula, stereo mixdown, all 65 window energies, the
-    // gradient-sign bit packing and the exhaustive pairwise Hamming
-    // truth replayed in SQL (16-bit PCM is lossless, so the decoded
-    // samples ARE the formula); the short clip and the corrupt
-    // payloads come back as explicit null-fingerprint rows
-    "q125_audio_fp_dedup" ->
-      """WITH clips AS (
-           SELECT i AS media_id, i AS src, CASE WHEN i <= 6 THEN 1 ELSE 2 END AS ch,
-             1 AS scale FROM range(1, 11) t(i)
-           UNION ALL SELECT 100 + i, i, CASE WHEN i <= 6 THEN 1 ELSE 2 END, 1
-             FROM range(1, 11) t(i)
-           UNION ALL SELECT 200 + i, i, CASE WHEN i <= 6 THEN 1 ELSE 2 END, 1
-             FROM range(1, 11) t(i)
-           UNION ALL SELECT 300 + i, i, 1, 2 FROM range(1, 5) t(i)),
-         mixes AS (
-           SELECT c.media_id, f.i AS frame,
-             c.scale * CASE WHEN c.ch = 1
-               THEN (c.src*2654435761 + f.i*f.i*40503 + f.i*977) % 4096 - 2048
-               ELSE ((c.src*2654435761 + f.i*f.i*40503 + f.i*977) % 4096 - 2048)
-                  + ((c.src*2654435761 + f.i*f.i*40503 + f.i*977 + 997) % 4096 - 2048)
-               END AS mix
-           FROM clips c, range(0, 200) f(i)),
-         energies AS (
-           SELECT media_id, k.k AS k, coalesce(sum(mix * mix), 0) AS e
-           FROM range(0, 65) k(k) LEFT JOIN mixes
-             ON frame >= k.k * 200 // 65 AND frame < (k.k + 1) * 200 // 65
-           GROUP BY media_id, k.k),
-         fps AS (
-           SELECT a.media_id,
-             bit_or(CASE WHEN b.e > a.e THEN
-                 CASE WHEN a.k = 63 THEN -9223372036854775807 - 1
-                   ELSE 1::BIGINT << a.k END
-               ELSE 0::BIGINT END) AS afp
-           FROM energies a JOIN energies b
-             ON a.media_id = b.media_id AND b.k = a.k + 1
-           WHERE a.k < 64
-           GROUP BY a.media_id),
-         sigs AS (
-           SELECT media_id, afp FROM fps WHERE media_id IS NOT NULL
-           UNION ALL
-           SELECT media_id, NULL
-           FROM (VALUES (50), (9001), (9002), (9003)) t(media_id)),
-         pairs AS (
-           SELECT a.media_id AS a, b.media_id AS b,
-             bit_count(xor(a.afp, b.afp)) AS hamming
-           FROM sigs a JOIN sigs b ON a.media_id < b.media_id
-           WHERE a.afp IS NOT NULL AND b.afp IS NOT NULL
-             AND bit_count(xor(a.afp, b.afp)) <= 6),
-         partnered AS (
-           SELECT a AS media_id, b AS partner FROM pairs
-           UNION ALL SELECT b, a FROM pairs),
-         stats AS (
-           SELECT media_id, count(*) AS n_pairs, min(partner) AS top_partner
-           FROM partnered GROUP BY media_id)
-         SELECT s.media_id, s.afp, coalesce(st.n_pairs, 0)::BIGINT AS n_pairs,
-           st.top_partner
-         FROM sigs s LEFT JOIN stats st ON st.media_id = s.media_id
-         ORDER BY s.media_id""",
-
-    // the q107 brute-force argmax over the FULL corpus (both build
-    // and appended halves — a query whose true top-1 is an appended
-    // odd-id vector only matches if the in-place append indexed it),
-    // plus the all-hit probe/decision constants the planted regime
-    // must produce exactly
-    "q116_ivfpq_append_recall" ->
-      ("""WITH c AS (SELECT vec_id, embedding::DOUBLE[] v FROM embeddings),
-         """ + bruteCosineSql + """
-           FROM s)
-         SELECT query_id, neighbor_id AS top1, 1.0::DOUBLE AS recall,
-           1.0::DOUBLE AS mean_recall, FALSE AS retrain
-         FROM r WHERE rank = 1
-         ORDER BY query_id"""),
-
-    // the complete drift-retrain arithmetic replayed: build seeds +
-    // Lloyd mean, frozen append assignment, probe/top1 on the stale
-    // geometry, the id%2-sampled warm refit (keep-empty-cell
-    // coalesce), re-assignment, probe/top1 on the new geometry,
-    // brute-force truth, per-query recalls and both drift decisions
-    "q123_ivf_drift_retrain" ->
-      (ivfDriftReplaySql + """
-         rec AS (
-           SELECT t.query_id, pr.pre_top1, po.post_top1,
-             round(CASE WHEN pr.pre_top1 = t.true_top1 THEN 1.0
-               ELSE 0.0 END, 6)::DOUBLE AS pre_recall,
-             round(CASE WHEN po.post_top1 = t.true_top1 THEN 1.0
-               ELSE 0.0 END, 6)::DOUBLE AS post_recall
-           FROM truth t JOIN pre_top pr USING (query_id)
-             JOIN post_top po USING (query_id)),
-         dec AS (
-           SELECT round(avg(pre_recall), 6)::DOUBLE AS pre_mean,
-             round(avg(post_recall), 6)::DOUBLE AS post_mean,
-             avg(pre_recall) < 0.9 AS retrain_fired,
-             avg(post_recall) < 0.9 AS post_retrain
-           FROM rec)
-         SELECT r.query_id, r.pre_top1, r.post_top1, r.pre_recall,
-           r.post_recall, d.pre_mean, d.post_mean, d.retrain_fired,
-           d.post_retrain
-         FROM rec r CROSS JOIN dec d
-         ORDER BY r.query_id"""),
-
-    // the q123 arithmetic driven through the one-call maintenance
-    // window: same build/append/refit replay (the PQ layer is
-    // outcome-neutral under the gate's oversample, so the coarse
-    // probe + exact argmax decide every value), plus the two
-    // maintenance reports — the HEAL call's decision and recovery,
-    // and the NO-OP call's quiet decision with the epoch untouched
-    // (epoch_changed must equal the fired flag on both calls)
-    "q131_ivfpq_maintain" ->
-      ivfMaintainOracleSql,
-
-    // q145: the q131 replay verbatim — the planted geometry and the
-    // maintenance-report semantics are IDENTICAL for the IVF×SQ rung
-    // (the int8 layer is outcome-neutral under the gate's oversample:
-    // every probed cell's members reach the exact float rerank, so
-    // coarse probe + exact argmax decide every value; the quantizer
-    // arithmetic itself is value-pinned by q60/q66)
-    "q145_ivfsq_maintain" ->
-      ivfMaintainOracleSql,
-
-    // the engine's entire translate+regexp normalization chain,
-    // replayed stage-for-stage (chr() codes stand in for the planted
-    // typographic/control characters); the trailing key_md5 replays
-    // the CCNet lowercase/digit-fold/punct-strip key on top
-    "q106_normalize_text" ->
-      ("""WITH m AS (SELECT doc_id,
-           CASE WHEN doc_id % 3 = 0 THEN
-               chr(8220) || 'Q' || chr(8221) || ' ' || chr(8211) || ' x' ||
-               chr(8230) || ' ' || chr(160) || ' ' || text ||
-               chr(8203) || 'z' || chr(7) || 'w  '
-             WHEN doc_id % 3 = 1 THEN
-               'l1  ' || chr(9) || ' l2' || chr(13) || chr(10) || 'l3 ' ||
-               chr(13) || text || chr(9) || chr(9) || ' 123 '
-             ELSE text || ' ' || chr(8212) || ' fin' || chr(65279)
-           END AS t
-         FROM documents),
-         n AS (SELECT doc_id,
-           """ + normalizeTextSql + """
-           ' ?\n ?', chr(10), 'g'), '^\n+|\n+$', '', 'g')) AS norm
-         FROM m)
-         SELECT doc_id, md5(norm) AS norm_md5,
-           length(norm) AS norm_len,
-           md5(trim(regexp_replace(regexp_replace(regexp_replace(lower(norm),
-             '[0-9]', '0', 'g'),
-             '[^\p{L}\p{N} \t\n\f\r]', '', 'g'),
-             '[ \t\n\f\r]+', ' ', 'g'))) AS key_md5
-         FROM n ORDER BY doc_id"""),
-
-    "q100_ccnet_buckets" ->
-      """WITH toks AS (SELECT doc_id,
-             unnest(regexp_split_to_array(trim(lower(text)), '\s+')) AS tok
-           FROM documents),
-         tf AS (SELECT doc_id, tok, count(*) tf FROM toks
-           WHERE tok <> '' GROUP BY 1, 2),
-         c AS (SELECT tok, CAST(sum(tf) AS BIGINT) c FROM tf GROUP BY 1),
-         t AS (SELECT CAST(sum(c) AS BIGINT) T FROM c),
-         terms AS (SELECT doc_id, tok, tf,
-             tf * ln((c::DOUBLE) / (T::DOUBLE)) AS term
-           FROM tf JOIN c USING (tok) CROSS JOIN t),
-         s AS (SELECT doc_id,
-             round(list_reduce(list(term ORDER BY tok), (a, b) -> a + b)
-               / CAST(sum(tf) AS DOUBLE), 6) AS score
-           FROM terms GROUP BY 1),
-         sl AS (SELECT s.doc_id, d.lang, s.score
-           FROM s JOIN documents d USING (doc_id)),
-         th AS (SELECT lang,
-             quantile_cont(score, CAST(1 AS DOUBLE)/3) AS q0,
-             quantile_cont(score, CAST(2 AS DOUBLE)/3) AS q1
-           FROM sl GROUP BY 1)
-         SELECT sl.doc_id, sl.lang, sl.score,
-           CASE WHEN sl.score IS NULL THEN NULL
-                WHEN sl.score <= th.q0 THEN 'tail'
-                WHEN sl.score <= th.q1 THEN 'middle'
-                ELSE 'head' END AS bucket
-         FROM sl JOIN th ON sl.lang IS NOT DISTINCT FROM th.lang
-         ORDER BY sl.doc_id""",
-
-    // the pruned-LM replay: top-K vocab by (count DESC, token), the
-    // UNPRUNED total, per-position floor-1 OOV terms folded
-    // token-sorted, then q100's threshold + labeling machinery over
-    // the batch-scored corpus
-    "q115_stream_lm_buckets" ->
-      """WITH toks AS (SELECT doc_id,
-             unnest(regexp_split_to_array(trim(lower(text)), '\s+')) AS tok
-           FROM documents),
-         nz AS (SELECT doc_id, tok FROM toks WHERE tok <> ''),
-         c AS (SELECT tok, count(*) c FROM nz GROUP BY 1),
-         t AS (SELECT CAST(sum(c) AS BIGINT) T FROM c),
-         vocab AS (SELECT tok, c FROM c ORDER BY c DESC, tok LIMIT 64),
-         terms AS (SELECT nz.doc_id, nz.tok,
-             ln(CAST(COALESCE(v.c, 1) AS DOUBLE) / (T::DOUBLE)) AS term
-           FROM nz LEFT JOIN vocab v USING (tok) CROSS JOIN t),
-         s AS (SELECT doc_id,
-             round(list_reduce(list(term ORDER BY tok), (a, b) -> a + b)
-               / CAST(count(*) AS DOUBLE), 6) AS lm_score
-           FROM terms GROUP BY 1),
-         sl AS (SELECT d.doc_id, d.lang, s.lm_score
-           FROM documents d LEFT JOIN s USING (doc_id)),
-         th AS (SELECT lang,
-             quantile_cont(lm_score, CAST(1 AS DOUBLE)/3) AS q0,
-             quantile_cont(lm_score, CAST(2 AS DOUBLE)/3) AS q1
-           FROM sl GROUP BY 1)
-         SELECT sl.doc_id, sl.lang, sl.lm_score,
-           CASE WHEN sl.lm_score IS NULL THEN NULL
-                WHEN sl.lm_score <= th.q0 THEN 'tail'
-                WHEN sl.lm_score <= th.q1 THEN 'middle'
-                ELSE 'head' END AS bucket
-         FROM sl JOIN th ON sl.lang IS NOT DISTINCT FROM th.lang
-         ORDER BY sl.doc_id""",
-
-    // the full trigram refit (q113's count structure) at per-POSITION
-    // fold granularity, then the q115 bucket shape on top: per-lang
-    // quantile_cont thresholds over the batch-scored corpus and the
-    // ties-down labeling the stream must reproduce
-    "q117_stream_trigram_buckets" ->
-      ("""WITH toks AS (SELECT doc_id,
-           [t for t in regexp_split_to_array(trim(lower(text)), '\s+')
-            if t <> ''] AS tk
-         FROM documents),
-         tg0 AS (SELECT doc_id,
-             unnest([{'w1': tk[i], 'w2': tk[i + 1], 'w3': tk[i + 2]}
-                     for i in generate_series(1, len(tk) - 2)]) AS g
-           FROM toks WHERE len(tk) >= 3),
-         tg AS (SELECT doc_id, g.w1 AS w1, g.w2 AS w2, g.w3 AS w3 FROM tg0),
-         c3all AS (SELECT w1, w2, w3, count(*) c3 FROM tg GROUP BY 1, 2, 3),
-         """ + trigramBackoffCountsSql + """
-         terms AS (SELECT doc_id, w1, w2, w3,
-             ln(0.75::DOUBLE * (COALESCE(c3, 0)::DOUBLE / (c12::DOUBLE)) +
-                0.25::DOUBLE * (0.75::DOUBLE * ((cb::DOUBLE) / (cw::DOUBLE)) +
-                                0.25::DOUBLE * ((cu::DOUBLE) / (T::DOUBLE))))
-               AS term
-           FROM tg JOIN c12 USING (w1, w2)
-             LEFT JOIN c3 USING (w1, w2, w3)
-             JOIN cb USING (w2, w3) JOIN cw USING (w2)
-             JOIN uni USING (w3) CROSS JOIN tot),
-         s AS (SELECT doc_id,
-             round(list_reduce(list(term ORDER BY w1, w2, w3),
-               (a, b) -> a + b) / CAST(count(*) AS DOUBLE), 6) AS lm3_score
-           FROM terms GROUP BY 1),
-         sl AS (SELECT d.doc_id, d.lang, s.lm3_score
-           FROM documents d JOIN s USING (doc_id)),
-         th AS (SELECT lang,
-             quantile_cont(lm3_score, CAST(1 AS DOUBLE)/3) AS q0,
-             quantile_cont(lm3_score, CAST(2 AS DOUBLE)/3) AS q1
-           FROM sl GROUP BY 1)
-         SELECT sl.doc_id, sl.lang, sl.lm3_score,
-           CASE WHEN sl.lm3_score IS NULL THEN NULL
-                WHEN sl.lm3_score <= th.q0 THEN 'tail'
-                WHEN sl.lm3_score <= th.q1 THEN 'middle'
-                ELSE 'head' END AS bucket
-         FROM sl JOIN th ON sl.lang IS NOT DISTINCT FROM th.lang
-         ORDER BY sl.doc_id"""),
-
-    "q99_perplexity_buckets" ->
-      """WITH s AS (SELECT doc_id,
-           CASE WHEN doc_id % 7 = 0 THEN NULL ELSE lang END AS lang,
-           CAST(length(text) AS DOUBLE) AS score FROM documents),
-         th AS (SELECT lang,
-             quantile_cont(score, CAST(1 AS DOUBLE)/3) AS q0,
-             quantile_cont(score, CAST(2 AS DOUBLE)/3) AS q1
-           FROM s GROUP BY 1)
-         SELECT s.doc_id, s.lang, s.score,
-           CASE WHEN s.score IS NULL THEN NULL
-                WHEN s.score <= th.q0 THEN 'tail'
-                WHEN s.score <= th.q1 THEN 'middle'
-                ELSE 'head' END AS bucket
-         FROM s JOIN th ON s.lang IS NOT DISTINCT FROM th.lang
-         ORDER BY s.doc_id""",
-
-    "q09_sessionize" -> sessionizeOracleSql,
-
-    // q80 runs the SAME gap sessionization as a stateful stream
-    // (flatMapGroupsWithState across four micro-batches); its session
-    // assignment must equal the batch window SQL
-    "q80_stream_sessionize" -> sessionizeOracleSql,
-
-    // the stream fixture regenerated in SQL (the disguised-re-crawl
-    // CASE), then the full normalize chain + CCNet key fold on BOTH
-    // sides and the anti-join membership decision the stream must
-    // reproduce across micro-batches
-    "q114_stream_ccnet_admission" ->
-      ("""WITH src AS (
-           SELECT d.doc_id,
-             CASE WHEN d.doc_id % 3 = 1 AND b.text IS NOT NULL
-                  THEN '  ' || upper(translate(b.text, '0123456789', '5555555555'))
-                       || ' !!! '
-                  ELSE d.text END AS t,
-             'stream' AS side
-           FROM documents d LEFT JOIN documents b ON b.doc_id = d.doc_id - 1
-           WHERE d.doc_id % 3 <> 0
-           UNION ALL
-           SELECT doc_id, text AS t, 'acc' AS side
-           FROM documents WHERE doc_id % 3 = 0),
-         k AS (SELECT doc_id, side,
-           trim(regexp_replace(regexp_replace(regexp_replace(lower(
-             """ + normalizeTextSql + """
-             ' ?\n ?', chr(10), 'g'), '^\n+|\n+$', '', 'g'))),
-             '[0-9]', '0', 'g'),
-             '[^\p{L}\p{N} \t\n\f\r]', '', 'g'),
-             '[ \t\n\f\r]+', ' ', 'g')) AS k
-           FROM src),
-         akey AS (SELECT DISTINCT k FROM k WHERE side = 'acc'),
-         skey AS (SELECT doc_id, k FROM k WHERE side = 'stream')
-         SELECT doc_id, md5(k) AS key_md5
-         FROM skey ANTI JOIN akey USING (k)
-         ORDER BY doc_id"""),
-
-    // the candidate stream regenerated from `embeddings`, then the
-    // exhaustive brute-force decision the IVF probe must reproduce:
-    // max cosine + argmax (ties to the smaller id) vs the accepted
-    // set, admit strictly below tau — planted re-embeds sit at
-    // cos ≈ 0.99999 and the novel tail below 0.6, so both regimes
-    // bind with margin
-    // q152: identical decisions through the batched (foreachBatch
-    // searchIvf) route against the durable index — same fixture,
-    // same brute-force rule
-    "q152_stream_ann_batched" ->
-      annAdmissionOracleSql,
-
-    "q120_stream_ann_admission" ->
-      annAdmissionOracleSql,
-
-    // q144: the q120 brute-force decision replayed TWICE — once vs
-    // the full accepted set (pre) and once vs the tombstone-excluded
-    // set (live), with the post-retrain decisions pinned EQUAL to the
-    // live ones (physical purge must be observationally identical to
-    // the logical delete). Re-embeds of %15==0 sources flip
-    // reject → admit across the takedown; everything else holds.
-    "q144_stream_ann_takedown" ->
-      """WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-         acc AS (SELECT * FROM e WHERE vec_id % 3 = 0),
-         liveacc AS (SELECT * FROM acc WHERE vec_id % 15 <> 0),
-         cand AS (SELECT c.vec_id,
-             CASE WHEN c.vec_id % 3 = 1 AND src.v IS NOT NULL
-               THEN list_transform(src.v, x -> x * 1.001 + 0.0005)
-               ELSE c.v END AS v
-           FROM e c LEFT JOIN e src ON src.vec_id = c.vec_id - 1
-           WHERE c.vec_id % 3 <> 0),
-         s1 AS (SELECT cand.vec_id, acc.vec_id AS aid,
-             list_dot_product(cand.v, acc.v) /
-               (sqrt(list_dot_product(cand.v, cand.v)) *
-                sqrt(list_dot_product(acc.v, acc.v))) AS cos_raw
-           FROM cand CROSS JOIN acc),
-         r1 AS (SELECT vec_id, aid, cos_raw, row_number() OVER
-             (PARTITION BY vec_id ORDER BY cos_raw DESC, aid) AS rk
-           FROM s1),
-         s2 AS (SELECT cand.vec_id, liveacc.vec_id AS aid,
-             list_dot_product(cand.v, liveacc.v) /
-               (sqrt(list_dot_product(cand.v, cand.v)) *
-                sqrt(list_dot_product(liveacc.v, liveacc.v))) AS cos_raw
-           FROM cand CROSS JOIN liveacc),
-         r2 AS (SELECT vec_id, aid, cos_raw, row_number() OVER
-             (PARTITION BY vec_id ORDER BY cos_raw DESC, aid) AS rk
-           FROM s2)
-         SELECT a.vec_id,
-           a.cos_raw < 0.9 AS admitted_pre,
-           CASE WHEN a.cos_raw >= 0.9 THEN a.aid END AS match_pre,
-           b.cos_raw < 0.9 AS admitted_live,
-           CASE WHEN b.cos_raw >= 0.9 THEN b.aid END AS match_live,
-           b.cos_raw < 0.9 AS admitted_post,
-           CASE WHEN b.cos_raw >= 0.9 THEN b.aid END AS match_post
-         FROM (SELECT * FROM r1 WHERE rk = 1) a
-         JOIN (SELECT * FROM r2 WHERE rk = 1) b ON a.vec_id = b.vec_id
-         ORDER BY a.vec_id""",
-
-    "q10_asof" ->
-      """WITH r AS (SELECT user_id, ts, arg_max(value, event_id) AS rv
-           FROM events WHERE event_type = 'click' GROUP BY 1, 2)
-         SELECT p.event_id, p.user_id, round(r.rv,2) AS asof_value
-         FROM (SELECT * FROM events WHERE event_type = 'purchase') p
-         ASOF LEFT JOIN r ON p.user_id = r.user_id AND p.ts >= r.ts
-         ORDER BY p.event_id""",
-
-    "q11_interpolate" ->
-      """WITH b AS (SELECT user_id,
-             make_timestamp(CAST(floor(epoch(ts)/3600)*3600 AS BIGINT)*1000000) AS bucket_ts,
-             round(sum(value),2)/count(*) AS mv
-           FROM events GROUP BY 1,2),
-         bounds AS (SELECT min(bucket_ts) lo, max(bucket_ts) hi FROM b),
-         grid AS (SELECT u.user_id, g.bucket_ts
-           FROM (SELECT DISTINCT user_id FROM events) u
-           CROSS JOIN (SELECT unnest(generate_series(
-             (SELECT lo FROM bounds),(SELECT hi FROM bounds),
-             INTERVAL 1 HOUR)) AS bucket_ts) g),
-         j AS (SELECT grid.user_id, grid.bucket_ts, b.mv
-           FROM grid LEFT JOIN b USING (user_id, bucket_ts)),
-         sel AS (SELECT user_id, bucket_ts, mv,
-           last_value(mv IGNORE NULLS) OVER wp AS pv,
-           first_value(mv IGNORE NULLS) OVER wn AS nv,
-           last_value(CASE WHEN mv IS NOT NULL THEN bucket_ts END IGNORE NULLS)
-             OVER wp AS pt,
-           first_value(CASE WHEN mv IS NOT NULL THEN bucket_ts END IGNORE NULLS)
-             OVER wn AS nt
-         FROM j WINDOW
-           wp AS (PARTITION BY user_id ORDER BY bucket_ts
-                  ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW),
-           wn AS (PARTITION BY user_id ORDER BY bucket_ts
-                  ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING))
-         SELECT user_id, bucket_ts,
-           CASE WHEN mv IS NOT NULL THEN mv
-             WHEN pv IS NOT NULL AND nv IS NOT NULL THEN
-               pv + (nv-pv) * ((epoch(bucket_ts)-epoch(pt)) / (epoch(nt)-epoch(pt)))
-             END AS interp_value
-         FROM sel ORDER BY user_id, bucket_ts""",
-
-    "q12_iqr" ->
-      """WITH q AS (SELECT event_type,
-             quantile_cont(value, 0.25) AS q1, quantile_cont(value, 0.75) AS q3
-           FROM events GROUP BY 1),
-         f AS (SELECT event_type, q1 - 1.5*(q3-q1) AS lo, q3 + 1.5*(q3-q1) AS hi
-           FROM q)
-         SELECT e.event_type, round(f.lo,6) AS lo_fence, round(f.hi,6) AS hi_fence,
-           count(*) FILTER (WHERE e.value < f.lo OR e.value > f.hi) AS n_out,
-           round(sum(e.value) FILTER (WHERE e.value >= f.lo AND e.value <= f.hi),2) AS sum_in
-         FROM events e JOIN f USING (event_type)
-         GROUP BY 1, f.lo, f.hi ORDER BY 1""",
-
-    "q13_cumtrapz" ->
-      """WITH d AS (SELECT user_id, event_id, ts, value,
-           lag(value) OVER w AS pv, lag(ts) OVER w AS pt
-         FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id))
-         SELECT user_id, event_id, round(coalesce(sum(
-             (value+pv)/2 * ((epoch_us(ts)-epoch_us(pt))/3600000000.0)) OVER
-           (PARTITION BY user_id ORDER BY ts, event_id
-            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW), 0), 6) AS energy
-         FROM d ORDER BY user_id, event_id""",
-
-    "q14_pivot" ->
-      """SELECT date_trunc('day', ts) AS day,
-         round(sum(CASE WHEN event_type='click' THEN value END),2) AS click,
-         round(sum(CASE WHEN event_type='error' THEN value END),2) AS error,
-         round(sum(CASE WHEN event_type='purchase' THEN value END),2) AS purchase,
-         round(sum(CASE WHEN event_type='signup' THEN value END),2) AS signup,
-         round(sum(CASE WHEN event_type='view' THEN value END),2) AS view
-         FROM events GROUP BY 1 ORDER BY 1""",
-
-    "q15_dedup_exact" ->
-      """SELECT min(doc_id) AS doc_id, count(*) AS n_copies
-         FROM documents GROUP BY text ORDER BY doc_id""",
-
-    "q16_text_stats" ->
-      """SELECT doc_id, length(text) AS len,
-         length(text) - length(regexp_replace(text, ' ', '', 'g')) + 1 AS n_tokens,
-         length(text) - length(regexp_replace(text, '[aeiou]', '', 'g')) AS n_vowels
-         FROM documents ORDER BY doc_id""",
-
-    "q17_fingerprint" ->
-      """SELECT doc_id, md5(lower(text)) AS fp FROM documents ORDER BY doc_id""",
-
-    "q18_grid_asfreq" ->
-      """WITH b AS (SELECT
-             make_timestamp(CAST(floor(epoch(ts)/3600)*3600 AS BIGINT)*1000000) AS bucket_ts,
-             count(*) AS n
-           FROM events GROUP BY 1),
-         bounds AS (SELECT min(bucket_ts) lo, max(bucket_ts) hi FROM b)
-         SELECT g.bucket_ts, coalesce(b.n, 0) AS n
-         FROM (SELECT unnest(generate_series((SELECT lo FROM bounds),
-               (SELECT hi FROM bounds), INTERVAL 1 HOUR)) AS bucket_ts) g
-         LEFT JOIN b USING (bucket_ts) ORDER BY bucket_ts""",
-
-    "q19_unify_merge" ->
-      """WITH bounds AS (SELECT min(ts) lo, max(ts) hi FROM events
-           WHERE event_type = 'error')
-         SELECT event_id, user_id, value FROM (
-           SELECT ts, event_id, user_id, value FROM events WHERE event_type='error'
-           UNION ALL
-           SELECT ts, event_id, user_id, value FROM events WHERE event_type='click'
-             AND ts BETWEEN (SELECT lo FROM bounds) AND (SELECT hi FROM bounds))
-         ORDER BY ts, event_id""",
-
-    "q24_minhash_neardup" ->
-      """WITH corpus AS (
-           SELECT doc_id, lower(text) tx FROM documents
-           UNION ALL
-           SELECT doc_id + 1000000, lower(text || ' xyzzy qbf')
-           FROM documents WHERE doc_id % 7 = 0),
-         toks AS (SELECT doc_id, regexp_split_to_array(trim(tx), '\s+') t
-           FROM corpus),
-         sh AS (SELECT DISTINCT doc_id, array_to_string(t[i:i+2], ' ') AS s
-           FROM toks, LATERAL (SELECT unnest(generate_series(1,
-             greatest(len(t)-2, 1))) AS i)),
-         sizes AS (SELECT doc_id, count(*) sz FROM sh GROUP BY 1),
-         inter AS (SELECT a.doc_id a, b.doc_id b, count(*) i FROM sh a
-           JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id GROUP BY 1,2)
-         SELECT a, b FROM inter
-         JOIN sizes sa ON sa.doc_id = a JOIN sizes sb ON sb.doc_id = b
-         WHERE i*1.0/(sa.sz+sb.sz-i) >= 0.8 ORDER BY a, b""",
-
-    "q28_multimodal" ->
-      """SELECT doc_id AS media_id,
-         CASE WHEN strlen(text) = 0 THEN 0 ELSE 16 END AS feat_dim,
-         strlen(text)::BIGINT AS payload_len,
-         (greatest(strlen(text)//64 - 1, 0)//2 + 1)::BIGINT AS n_frames
-         FROM documents ORDER BY media_id""",
-
-    "q29_ngram_jaccard" ->
-      """WITH corpus AS (
-           SELECT doc_id, lower(text) tx FROM documents
-           UNION ALL
-           SELECT doc_id + 1000000, lower(text || ' xyzzy qbf')
-           FROM documents WHERE doc_id % 7 = 0),
-         toks AS (SELECT doc_id, regexp_split_to_array(trim(tx), '\s+') t
-           FROM corpus),
-         sh AS (SELECT DISTINCT doc_id, array_to_string(t[i:i+3], ' ') AS s
-           FROM toks, LATERAL (SELECT unnest(generate_series(1,
-             greatest(len(t)-3, 1))) AS i)),
-         sizes AS (SELECT doc_id, count(*) sz FROM sh GROUP BY 1),
-         inter AS (SELECT a.doc_id a, b.doc_id b, count(*) i FROM sh a
-           JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id GROUP BY 1,2)
-         SELECT a, b FROM inter
-         JOIN sizes sa ON sa.doc_id = a JOIN sizes sb ON sb.doc_id = b
-         WHERE i*1.0/(sa.sz+sb.sz-i) >= 0.5 ORDER BY a, b""",
-
-    "q40_trailing_window" ->
-      """SELECT event_id, user_id, ts,
-           round(avg(value) OVER w, 6) AS trail_mean_30s,
-           count(*) OVER w AS n_in_window
-         FROM events
-         WINDOW w AS (PARTITION BY user_id ORDER BY ts
-           RANGE BETWEEN INTERVAL 30 SECONDS PRECEDING AND CURRENT ROW)
-         ORDER BY event_id""",
-
-    "q39_rollup_stats" ->
-      """WITH p AS (SELECT text,
-           len(regexp_extract_all(lower(text), '\bthe\b|\band\b|\bof\b|\bto\b|\bis\b')) AS s_en,
-           len(regexp_extract_all(lower(text), '\bder\b|\bdie\b|\bund\b|\bist\b|\bnicht\b')) AS s_de,
-           len(regexp_extract_all(lower(text), '\ble\b|\bla\b|\bet\b|\best\b|\bles\b')) AS s_fr,
-           len(regexp_extract_all(lower(text), '\bel\b|\bla\b|\by\b|\bes\b|\blos\b')) AS s_es,
-           length(regexp_replace(text, '[^一-鿿]', '', 'g')) AS cjk
-         FROM documents),
-         q AS (SELECT text,
-           CASE WHEN cjk > 0 THEN 'zh'
-                WHEN greatest(s_en, s_de, s_fr, s_es) = 0 THEN 'und'
-                WHEN s_en = greatest(s_en, s_de, s_fr, s_es) THEN 'en'
-                WHEN s_de = greatest(s_en, s_de, s_fr, s_es) THEN 'de'
-                WHEN s_fr = greatest(s_en, s_de, s_fr, s_es) THEN 'fr'
-                ELSE 'es' END AS pred_lang
-         FROM p)
-         SELECT coalesce(pred_lang, 'ALL') AS lang, count(*) AS n_docs,
-           CAST(sum(length(text)) AS BIGINT) AS total_chars,
-           round(avg(len(regexp_split_to_array(trim(text), '\s+'))), 4)
-             AS avg_tokens
-         FROM q GROUP BY ROLLUP(pred_lang) ORDER BY lang""",
-
-    "q38_decontaminate" ->
-      """WITH fp AS (SELECT doc_id,
-           list_reduce(
-             list_prepend(0::BIGINT,
-               list_transform(regexp_split_to_array(lower(trim(text)), '\s+'),
-                 t -> ('0x' || substring(md5(t),1,15))::BIGINT
-                      % 100000000000000003)),
-             (acc, h) -> (acc*31 + h) % 100000000000000003) AS fingerprint
-           FROM documents)
-         SELECT doc_id, fingerprint FROM fp d
-         WHERE NOT EXISTS (SELECT 1 FROM fp b
-           WHERE b.doc_id % 13 = 0 AND b.fingerprint = d.fingerprint)
-         ORDER BY doc_id""",
-
-    "q36_hash_split" ->
-      """WITH b AS (SELECT doc_id,
-           ('0x' || substring(md5(CAST(doc_id AS VARCHAR)), 1, 15))::BIGINT
-             % 1000000 AS bkt
-         FROM documents)
-         SELECT doc_id,
-           CASE WHEN bkt < 800000 THEN 'train'
-                WHEN bkt < 900000 THEN 'val'
-                ELSE 'test' END AS split
-         FROM b ORDER BY doc_id""",
-
-    "q37_vocab_topk" ->
-      """WITH toks AS (SELECT unnest(regexp_split_to_array(
-             lower(trim(text)), '\s+')) AS token FROM documents)
-         SELECT token, count(*) AS cnt FROM toks WHERE token != ''
-         GROUP BY token ORDER BY cnt DESC, token LIMIT 50""",
-
-    "q35_star_join" ->
-      """SELECT r_name, n_name,
-           round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue,
-           count(*) AS n_rows
-         FROM lineitem
-         JOIN orders ON l_orderkey = o_orderkey
-         JOIN customer ON o_custkey = c_custkey
-         JOIN supplier ON l_suppkey = s_suppkey
-         JOIN nation ON s_nationkey = n_nationkey
-         JOIN region ON n_regionkey = r_regionkey
-         JOIN part ON l_partkey = p_partkey AND p_size < 25
-         GROUP BY r_name, n_name
-         ORDER BY r_name, n_name""",
-
-    "q34_dedup_components" ->
-      ("""WITH corpus AS (
-           SELECT doc_id, lower(text) tx FROM documents
-           UNION ALL
-           SELECT doc_id + 1000000, lower(text || ' xyzzy qbf')
-           FROM documents WHERE doc_id % 7 = 0),
-         toks AS (SELECT doc_id, regexp_split_to_array(trim(tx), '\s+') t
-           FROM corpus),
-         sh AS (SELECT DISTINCT doc_id, array_to_string(t[i:i+3], ' ') AS s
-           FROM toks, LATERAL (SELECT unnest(generate_series(1,
-             greatest(len(t)-3, 1))) AS i)),
-         """ + shingleClosureSql + """
-         SELECT x AS doc_id, least(x, min(y)) AS component
-         FROM reach GROUP BY x ORDER BY doc_id"""),
-
-    "q25_simhash_neardup" -> simhashOracleSql,
-
-    "q26_ann_topk" ->
-      """WITH c AS (SELECT vec_id, embedding::DOUBLE[] v FROM embeddings),
-         q AS (SELECT vec_id, v FROM c WHERE vec_id < 10),
-         s AS (SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-             list_dot_product(q.v, c.v) /
-               (sqrt(list_dot_product(q.v, q.v)) * sqrt(list_dot_product(c.v, c.v)))
-               AS cos_raw
-           FROM q CROSS JOIN c WHERE q.vec_id != c.vec_id),
-         r AS (SELECT query_id, neighbor_id, cos_raw, row_number() OVER
-             (PARTITION BY query_id ORDER BY cos_raw DESC, neighbor_id) AS rank
-           FROM s)
-         SELECT query_id, neighbor_id, rank, round(cos_raw, 6) AS cosine
-         FROM r WHERE rank <= 3 ORDER BY query_id, rank""",
-
-    "q85_semantic_sample" ->
-      """WITH c AS (SELECT vec_id, embedding::DOUBLE[] v FROM embeddings),
-         a AS (SELECT vec_id AS stratum, v AS av FROM c
-           ORDER BY vec_id LIMIT 16),
-         s AS (SELECT c.vec_id, a.stratum,
-             list_dot_product(c.v, a.av) /
-               (sqrt(list_dot_product(c.v, c.v)) *
-                sqrt(list_dot_product(a.av, a.av))) AS sim
-           FROM c CROSS JOIN a),
-         asg AS (SELECT vec_id, stratum FROM (
-             SELECT vec_id, stratum, row_number() OVER
-               (PARTITION BY vec_id ORDER BY sim DESC, stratum) AS rn
-             FROM s) t WHERE rn = 1),
-         h AS (SELECT vec_id, stratum,
-             ('0x' || substring(md5(vec_id::VARCHAR), 1, 15))::BIGINT AS hh
-           FROM asg),
-         r AS (SELECT vec_id, stratum, row_number() OVER
-             (PARTITION BY stratum ORDER BY hh, vec_id) AS rank FROM h)
-         SELECT vec_id, stratum, rank FROM r WHERE rank <= 5
-         ORDER BY stratum, rank""",
-
-    "q31_ann_recall" ->
-      ("""WITH c AS (SELECT vec_id, embedding::DOUBLE[] v FROM embeddings),
-         """ + bruteCosineSql + """
-           FROM s)
-         SELECT method, query_id, neighbor_id AS top1 FROM
-           (SELECT 'ivf' AS method, query_id, neighbor_id FROM r WHERE rank = 1
-            UNION ALL
-            SELECT 'lsh', query_id, neighbor_id FROM r WHERE rank = 1)
-         ORDER BY method, query_id"""),
-
-    "q60_sq_ann_recall" ->
-      ("""WITH c AS (SELECT vec_id, embedding::DOUBLE[] v FROM embeddings),
-         """ + bruteCosineSql + """
-           FROM s)
-         SELECT query_id, neighbor_id AS top1 FROM r WHERE rank = 1
-         ORDER BY query_id"""),
-
-    "q66_ivfsq_ann_recall" ->
-      ("""WITH c AS (SELECT vec_id, embedding::DOUBLE[] v FROM embeddings),
-         """ + bruteCosineSql + """
-           FROM s)
-         SELECT query_id, neighbor_id AS top1 FROM r WHERE rank = 1
-         ORDER BY query_id"""),
-
-    "q33_cosine_neardup" ->
-      """WITH c0 AS (SELECT vec_id, embedding::DOUBLE[] v FROM embeddings),
-         c AS (SELECT vec_id, v FROM c0
-           UNION ALL
-           SELECT vec_id + 1000000, list_transform(v, x -> x * 1.001 + 0.0005)
-           FROM c0 WHERE vec_id % 7 = 0),
-         s AS (SELECT a.vec_id a, b.vec_id b,
-             list_dot_product(a.v, b.v) /
-               (sqrt(list_dot_product(a.v, a.v)) * sqrt(list_dot_product(b.v, b.v)))
-               AS cos_raw
-           FROM c a JOIN c b ON a.vec_id < b.vec_id)
-         SELECT a, b, round(cos_raw, 6) AS cosine FROM s
-         WHERE cos_raw >= 0.9 ORDER BY a, b""",
-
-    "q52_semantic_dedup" ->
-      ("""WITH c0 AS (SELECT vec_id, embedding::DOUBLE[] v FROM embeddings),
-         c AS (SELECT vec_id, v FROM c0
-           UNION ALL
-           SELECT vec_id + 1000000, list_transform(v, x -> x * 1.001 + 0.0005)
-           FROM c0 WHERE vec_id % 7 = 0),
-         """ + vectorComponentsSql + """
-         comp AS (SELECT x AS vec_id, least(x, min(y)) AS comp
-           FROM reach GROUP BY x)
-         SELECT c.vec_id FROM c LEFT JOIN comp USING (vec_id)
-         WHERE comp.comp IS NULL OR comp.comp = c.vec_id
-         ORDER BY c.vec_id"""),
-
-    "q57_gopher_rules" ->
-      """WITH d AS (SELECT doc_id,
-           CASE WHEN doc_id % 5 = 0
-                THEN '- item one' || chr(10) || '- item two' || chr(10)
-                     || '- ' || text
-                WHEN doc_id % 7 = 0
-                THEN text || ' trailing...' || chr(10) || 'short line...'
-                     || chr(10) || '# # # #'
-                WHEN doc_id % 3 = 0
-                THEN 'the point of that note have to be read with care '
-                     || text
-                ELSE text END AS text
-           FROM documents),
-         m AS (SELECT doc_id, text,
-           len(regexp_split_to_array(trim(text), '\s+')) AS n_words,
-           greatest(len(regexp_split_to_array(trim(text), '\s+')), 1)::DOUBLE
-             AS wd,
-           len(string_split(text, chr(10)))::DOUBLE AS lines
-           FROM d),
-         f AS (SELECT doc_id, n_words,
-           length(regexp_replace(text, '\s', '', 'g'))::DOUBLE / wd
-             AS mean_word_len,
-           len(regexp_extract_all(text, '#|\.\.\.|\x{2026}'))::DOUBLE / wd
-             AS symbol_word_ratio,
-           len(regexp_extract_all(chr(10) || text,
-             '\n\s*[-*\x{2022}]'))::DOUBLE / lines AS bullet_line_ratio,
-           len(regexp_extract_all(text || chr(10),
-             '(\.\.\.|\x{2026})\n'))::DOUBLE / lines AS ellipsis_line_ratio,
-           len(regexp_extract_all(' ' || text, '\s\S*[A-Za-z]'))::DOUBLE / wd
-             AS alpha_word_ratio,
-           (regexp_matches(lower(text), '\bthe\b')::INT +
-            regexp_matches(lower(text), '\bbe\b')::INT +
-            regexp_matches(lower(text), '\bto\b')::INT +
-            regexp_matches(lower(text), '\bof\b')::INT +
-            regexp_matches(lower(text), '\band\b')::INT +
-            regexp_matches(lower(text), '\bthat\b')::INT +
-            regexp_matches(lower(text), '\bhave\b')::INT +
-            regexp_matches(lower(text), '\bwith\b')::INT)
-             AS req_stopword_hits
-           FROM m)
-         SELECT doc_id, n_words, mean_word_len, symbol_word_ratio,
-           bullet_line_ratio, ellipsis_line_ratio, alpha_word_ratio,
-           req_stopword_hits,
-           (n_words BETWEEN 20 AND 100000
-            AND mean_word_len BETWEEN 3.0 AND 10.0
-            AND symbol_word_ratio <= 0.1
-            AND bullet_line_ratio <= 0.9
-            AND ellipsis_line_ratio <= 0.3
-            AND alpha_word_ratio >= 0.8
-            AND req_stopword_hits >= 2) AS gopher_pass
-         FROM f ORDER BY doc_id""",
-
-    "q58_gopher_repetition" ->
-      """WITH d AS (SELECT doc_id,
-           CASE WHEN doc_id % 7 = 0
-                THEN 'alpha beta gamma' || chr(10) || 'delta line two'
-                     || chr(10) || 'alpha beta gamma' || chr(10) || chr(10)
-                     || text || chr(10) || chr(10) || 'alpha beta gamma'
-                     || chr(10) || chr(10) || 'alpha beta gamma'
-                WHEN doc_id % 5 = 0
-                THEN substr(text,1,60) || ' ' || substr(text,1,60) || ' '
-                     || substr(text,1,60) || ' ' || text
-                ELSE text END AS text
-           FROM documents),
-         lu AS (SELECT doc_id, unnest(string_split(text, chr(10))) AS unit
-           FROM d),
-         pu AS (SELECT doc_id,
-             unnest(string_split(text, chr(10) || chr(10))) AS unit
-           FROM d),
-         lcnt AS (SELECT doc_id, unit, count(*) cnt FROM lu GROUP BY 1,2),
-         pcnt AS (SELECT doc_id, unit, count(*) cnt FROM pu GROUP BY 1,2),
-         lstat AS (SELECT doc_id,
-             (sum(cnt)-count(*))*1.0/greatest(sum(cnt),1) AS dlf,
-             sum((cnt-1)*length(unit))*1.0
-               /greatest(sum(cnt*length(unit)),1) AS dlcf
-           FROM lcnt GROUP BY 1),
-         pstat AS (SELECT doc_id,
-             (sum(cnt)-count(*))*1.0/greatest(sum(cnt),1) AS dpf,
-             sum((cnt-1)*length(unit))*1.0
-               /greatest(sum(cnt*length(unit)),1) AS dpcf
-           FROM pcnt GROUP BY 1),
-         toks AS (SELECT doc_id,
-             regexp_split_to_array(trim(lower(text)), '\s+') tk,
-             greatest(length(text),1) AS L FROM d),
-         grams AS (SELECT doc_id, n, array_to_string(tk[i:i+n-1], ' ')
-               AS gram, L
-           FROM (SELECT doc_id, tk, L, n,
-                   unnest(generate_series(1, len(tk)-n+1)) AS i
-                 FROM toks,
-                   (VALUES (2),(3),(4),(5),(6),(7),(8),(9),(10)) ns(n))),
-         gcnt AS (SELECT doc_id, n, gram, count(*) cnt, max(L) L
-           FROM grams GROUP BY 1,2,3),
-         gstat AS (SELECT doc_id, n,
-             max(cnt*length(gram))*1.0/max(L) AS topf,
-             sum(CASE WHEN cnt>1 THEN cnt*length(gram) ELSE 0 END)*1.0/max(L)
-               AS dupf
-           FROM gcnt GROUP BY 1,2),
-         gp AS (SELECT doc_id,
-             coalesce(max(CASE WHEN n=2 THEN topf END),0) t2,
-             coalesce(max(CASE WHEN n=3 THEN topf END),0) t3,
-             coalesce(max(CASE WHEN n=4 THEN topf END),0) t4,
-             coalesce(max(CASE WHEN n=5 THEN dupf END),0) d5,
-             coalesce(max(CASE WHEN n=6 THEN dupf END),0) d6,
-             coalesce(max(CASE WHEN n=7 THEN dupf END),0) d7,
-             coalesce(max(CASE WHEN n=8 THEN dupf END),0) d8,
-             coalesce(max(CASE WHEN n=9 THEN dupf END),0) d9,
-             coalesce(max(CASE WHEN n=10 THEN dupf END),0) d10
-           FROM gstat GROUP BY 1)
-         SELECT d.doc_id,
-           lstat.dlf AS dup_line_frac, lstat.dlcf AS dup_line_char_frac,
-           pstat.dpf AS dup_para_frac, pstat.dpcf AS dup_para_char_frac,
-           gp.t2 AS top_2gram_char_frac, gp.t3 AS top_3gram_char_frac,
-           gp.t4 AS top_4gram_char_frac, gp.d5 AS dup_5gram_char_frac,
-           gp.d6 AS dup_6gram_char_frac, gp.d7 AS dup_7gram_char_frac,
-           gp.d8 AS dup_8gram_char_frac, gp.d9 AS dup_9gram_char_frac,
-           gp.d10 AS dup_10gram_char_frac,
-           (lstat.dlf <= 0.30 AND pstat.dpf <= 0.30
-            AND lstat.dlcf <= 0.20 AND pstat.dpcf <= 0.20
-            AND gp.t2 <= 0.20 AND gp.t3 <= 0.18 AND gp.t4 <= 0.16
-            AND gp.d5 <= 0.15 AND gp.d6 <= 0.14 AND gp.d7 <= 0.13
-            AND gp.d8 <= 0.12 AND gp.d9 <= 0.11 AND gp.d10 <= 0.10)
-             AS repetition_pass
-         FROM d JOIN lstat USING (doc_id) JOIN pstat USING (doc_id)
-           JOIN gp USING (doc_id)
-         ORDER BY doc_id""",
-
-    "q63_split_leakage" ->
-      """WITH train AS (SELECT doc_id, lower(trim(text)) tx FROM documents),
-         ev AS (SELECT doc_id + 3000000 AS doc_id, 'val' AS sp,
-             lower(trim(text || ' shifted tail words')) tx
-           FROM documents WHERE doc_id % 11 = 0
-           UNION ALL
-           SELECT doc_id + 4000000, 'test',
-             lower('qq' || doc_id || ' ww ee rr tt yy uu')
-           FROM documents WHERE doc_id < 8),
-         tl AS (SELECT doc_id, regexp_split_to_array(trim(tx), '\s+') t
-           FROM train),
-         tr AS (SELECT doc_id, sp, regexp_split_to_array(trim(tx), '\s+') t
-           FROM ev),
-         shl AS (SELECT DISTINCT doc_id, array_to_string(t[i:i+3], ' ') s
-           FROM tl, LATERAL (SELECT unnest(generate_series(1,
-             greatest(len(t)-3, 1))) AS i)),
-         shr AS (SELECT DISTINCT doc_id, array_to_string(t[i:i+3], ' ') s
-           FROM tr, LATERAL (SELECT unnest(generate_series(1,
-             greatest(len(t)-3, 1))) AS i)),
-         szl AS (SELECT doc_id, count(*) sz FROM shl GROUP BY 1),
-         szr AS (SELECT doc_id, count(*) sz FROM shr GROUP BY 1),
-         inter AS (SELECT l.doc_id a, r.doc_id b, count(*) i
-           FROM shl l JOIN shr r ON l.s = r.s GROUP BY 1, 2),
-         sc AS (SELECT a, b, i*1.0/(szl.sz + szr.sz - i) AS score
-           FROM inter JOIN szl ON szl.doc_id = a JOIN szr ON szr.doc_id = b)
-         SELECT b AS eval_id, ev.sp AS eval_split, a AS train_id,
-           round(score, 6) AS score
-         FROM sc JOIN ev ON ev.doc_id = b
-         WHERE score >= 0.5 ORDER BY eval_id, train_id""",
-
-    "q62_contamination_report" ->
-      """WITH corpus AS (SELECT doc_id, lower(trim(text)) tx FROM documents),
-         bench AS (SELECT doc_id + 1000000 AS doc_id,
-             lower(trim(text || ' extra trailing token')) tx
-           FROM documents WHERE doc_id % 13 = 0
-           UNION ALL
-           SELECT doc_id + 2000000,
-             lower('zz' || doc_id || ' yy qq ww ee rr tt')
-           FROM documents WHERE doc_id < 5),
-         tl AS (SELECT doc_id, regexp_split_to_array(trim(tx), '\s+') t
-           FROM corpus),
-         tr AS (SELECT doc_id, regexp_split_to_array(trim(tx), '\s+') t
-           FROM bench),
-         shl AS (SELECT DISTINCT doc_id, array_to_string(t[i:i+3], ' ') s
-           FROM tl, LATERAL (SELECT unnest(generate_series(1,
-             greatest(len(t)-3, 1))) AS i)),
-         shr AS (SELECT DISTINCT doc_id, array_to_string(t[i:i+3], ' ') s
-           FROM tr, LATERAL (SELECT unnest(generate_series(1,
-             greatest(len(t)-3, 1))) AS i)),
-         szr AS (SELECT doc_id, count(*) sz FROM shr GROUP BY 1),
-         inter AS (SELECT l.doc_id a, r.doc_id b, count(*) i
-           FROM shl l JOIN shr r ON l.s = r.s GROUP BY 1, 2),
-         sc AS (SELECT a, b, i*1.0/sz AS score FROM inter
-           JOIN szr ON szr.doc_id = b),
-         rep AS (SELECT b, max(score) ms, count(*) nc,
-             sum(CASE WHEN score >= 0.5 THEN 1 ELSE 0 END) nh
-           FROM sc GROUP BY 1),
-         top AS (SELECT b, a FROM (SELECT b, a, row_number() OVER
-             (PARTITION BY b ORDER BY score DESC, a DESC) rn FROM sc)
-           WHERE rn = 1)
-         SELECT bench.doc_id AS bench_id,
-           round(coalesce(rep.ms, 0), 6) AS max_score,
-           top.a AS top_match,
-           CAST(coalesce(rep.nh, 0) AS BIGINT) AS n_hits,
-           CAST(coalesce(rep.nc, 0) AS BIGINT) AS n_candidates
-         FROM bench LEFT JOIN rep ON rep.b = bench.doc_id
-           LEFT JOIN top ON top.b = bench.doc_id
-         ORDER BY bench_id""",
-
-    "q64_dsir_select" ->
-      """WITH src AS (SELECT doc_id,
-           CASE WHEN doc_id % 31 = 0 THEN text || ' zz qq zz qq'
-                ELSE text END AS text
-         FROM documents),
-         tgt AS (SELECT doc_id, text || ' zz qq zz qq' AS text
-           FROM documents WHERE doc_id % 17 = 0),
-         stoks AS (SELECT doc_id,
-             regexp_split_to_array(trim(lower(text)), '\s+') t FROM src),
-         ttoks AS (SELECT doc_id,
-             regexp_split_to_array(trim(lower(text)), '\s+') t FROM tgt),
-         sfeat AS (
-           SELECT doc_id, unnest(t) AS feat FROM stoks
-           UNION ALL
-           SELECT doc_id, array_to_string(t[i:i+1], ' ') FROM stoks,
-             LATERAL (SELECT unnest(generate_series(1, len(t)-1)) AS i)),
-         tfeat AS (
-           SELECT doc_id, unnest(t) AS feat FROM ttoks
-           UNION ALL
-           SELECT doc_id, array_to_string(t[i:i+1], ' ') FROM ttoks,
-             LATERAL (SELECT unnest(generate_series(1, len(t)-1)) AS i)),
-         sbk AS (SELECT doc_id,
-             ('0x' || substring(md5(feat), 1, 15))::BIGINT % 512 AS bucket
-           FROM sfeat WHERE feat <> ''),
-         tbk AS (SELECT
-             ('0x' || substring(md5(feat), 1, 15))::BIGINT % 512 AS bucket
-           FROM tfeat WHERE feat <> ''),
-         srcdoc AS (SELECT doc_id, bucket, count(*) c FROM sbk GROUP BY 1, 2),
-         srcb AS (SELECT bucket, CAST(sum(c) AS BIGINT) cs
-           FROM srcdoc GROUP BY 1),
-         tgtb AS (SELECT bucket, count(*) ct FROM tbk GROUP BY 1),
-         tot AS (SELECT (SELECT CAST(sum(cs) AS BIGINT) FROM srcb) ns,
-                        (SELECT CAST(sum(ct) AS BIGINT) FROM tgtb) nt),
-         ratio AS (SELECT bucket,
-             ln((coalesce(ct, 0)::DOUBLE + 1.0) / (nt::DOUBLE + 512.0)) -
-             ln((cs::DOUBLE + 1.0) / (ns::DOUBLE + 512.0)) AS lr
-           FROM srcb LEFT JOIN tgtb USING (bucket) CROSS JOIN tot),
-         terms AS (SELECT doc_id, bucket, c, c::DOUBLE * lr AS term
-           FROM srcdoc JOIN ratio USING (bucket)),
-         wts AS (SELECT doc_id, CAST(sum(c) AS BIGINT) AS n_feats,
-             round(list_reduce(list(term ORDER BY bucket), (a, b) -> a + b),
-               6) AS logw
-           FROM terms GROUP BY 1),
-         keyed AS (SELECT doc_id, n_feats, logw,
-             round(logw - ln(-ln(
-               ((('0x' || substring(md5(doc_id::VARCHAR || ':dsir'), 1, 15))
-                  ::BIGINT % 1048576)::DOUBLE + 0.5) / 1048576.0)),
-               6) AS sel_key
-           FROM wts)
-         SELECT doc_id, n_feats, logw, sel_key FROM keyed
-         ORDER BY sel_key DESC, doc_id LIMIT 100""",
-
-    "q67_dsir_fitted_score" ->
-      """WITH src AS (SELECT doc_id, text FROM documents WHERE doc_id % 3 = 0),
-         tgt AS (SELECT doc_id, text || ' zz qq zz qq' AS text
-           FROM documents WHERE doc_id % 17 = 0),
-         fresh AS (SELECT doc_id, text FROM documents
-             WHERE doc_id % 3 = 1 AND doc_id % 17 <> 0
-           UNION ALL SELECT 9000001, 'zz qq zz qq'
-           UNION ALL SELECT 9000002, 'kxqv wzzyx vvqk jjxw qqzv'
-           UNION ALL SELECT 9000003, ''),
-         stoks AS (SELECT doc_id,
-             regexp_split_to_array(trim(lower(text)), '\s+') t FROM src),
-         ttoks AS (SELECT doc_id,
-             regexp_split_to_array(trim(lower(text)), '\s+') t FROM tgt),
-         ftoks AS (SELECT doc_id,
-             regexp_split_to_array(trim(lower(text)), '\s+') t FROM fresh),
-         sfeat AS (
-           SELECT doc_id, unnest(t) AS feat FROM stoks
-           UNION ALL
-           SELECT doc_id, array_to_string(t[i:i+1], ' ') FROM stoks,
-             LATERAL (SELECT unnest(generate_series(1, len(t)-1)) AS i)),
-         tfeat AS (
-           SELECT doc_id, unnest(t) AS feat FROM ttoks
-           UNION ALL
-           SELECT doc_id, array_to_string(t[i:i+1], ' ') FROM ttoks,
-             LATERAL (SELECT unnest(generate_series(1, len(t)-1)) AS i)),
-         ffeat AS (
-           SELECT doc_id, unnest(t) AS feat FROM ftoks
-           UNION ALL
-           SELECT doc_id, array_to_string(t[i:i+1], ' ') FROM ftoks,
-             LATERAL (SELECT unnest(generate_series(1, len(t)-1)) AS i)),
-         sbk AS (SELECT
-             ('0x' || substring(md5(feat), 1, 15))::BIGINT % 512 AS bucket,
-             count(*) cs
-           FROM sfeat WHERE feat <> '' GROUP BY 1),
-         tbk AS (SELECT
-             ('0x' || substring(md5(feat), 1, 15))::BIGINT % 512 AS bucket,
-             count(*) ct
-           FROM tfeat WHERE feat <> '' GROUP BY 1),
-         tot AS (SELECT (SELECT CAST(sum(cs) AS BIGINT) FROM sbk) ns,
-                        (SELECT CAST(sum(ct) AS BIGINT) FROM tbk) nt),
-         ratio AS (SELECT coalesce(s.bucket, tb.bucket) AS bucket,
-             ln((coalesce(tb.ct, 0)::DOUBLE + 1.0) / (nt::DOUBLE + 512.0)) -
-             ln((coalesce(s.cs, 0)::DOUBLE + 1.0) / (ns::DOUBLE + 512.0)) AS lr
-           FROM sbk s FULL OUTER JOIN tbk tb ON s.bucket = tb.bucket
-           CROSS JOIN tot),
-         fbk AS (SELECT doc_id,
-             ('0x' || substring(md5(feat), 1, 15))::BIGINT % 512 AS bucket
-           FROM ffeat WHERE feat <> ''),
-         terms AS (SELECT doc_id, f.bucket,
-             coalesce(lr, ln(1.0 / (nt::DOUBLE + 512.0)) -
-                          ln(1.0 / (ns::DOUBLE + 512.0))) AS lr
-           FROM fbk f LEFT JOIN ratio r ON f.bucket = r.bucket
-           CROSS JOIN tot),
-         scored AS (SELECT doc_id,
-             round(list_reduce(list(lr ORDER BY bucket), (a, b) -> a + b),
-               6) AS dsir_score
-           FROM terms GROUP BY doc_id)
-         SELECT f.doc_id, s.dsir_score
-         FROM fresh f LEFT JOIN scored s ON f.doc_id = s.doc_id
-         ORDER BY f.doc_id""",
-
-    // q68 and q71 share this oracle: the survivor closure is over TRUE
-    // word-trigram Jaccard pairs, independent of whether the engine's
-    // candidate generator was minhash banding or gram buckets
-    "q68_hot_bucket_rescue" -> floodClosureOracleSql,
-    "q71_ngram_rescue" -> floodClosureOracleSql,
-    "q93_ngram_rescue_hashed" -> floodClosureOracleSql,
-    "q72_simhash_rescue" -> simhashRescueOracleSql,
-
-    "q70_semantic_rescue" ->
-      ("""WITH c0 AS (SELECT vec_id, embedding::DOUBLE[] v FROM embeddings),
-         cb AS (SELECT vec_id, v FROM c0
-           UNION ALL
-           SELECT vec_id + 1000000, list_transform(v, x -> x * 1.001 + 0.0005)
-           FROM c0 WHERE vec_id % 7 = 0),
-         c AS (SELECT vec_id, v FROM cb
-           UNION ALL
-           SELECT 2000000 + r.range AS vec_id,
-             (SELECT v FROM cb WHERE vec_id = 0) AS v
-           FROM range(0, 300) r),
-         """ + vectorComponentsSql + """
-         comp AS (SELECT x AS vec_id, least(x, min(y)) AS comp
-           FROM reach GROUP BY x)
-         SELECT c.vec_id FROM c LEFT JOIN comp USING (vec_id)
-         WHERE comp.comp IS NULL OR comp.comp = c.vec_id
-         ORDER BY c.vec_id"""),
-
-    "q69_cosine_rescue" ->
-      """WITH c0 AS (SELECT vec_id, embedding::DOUBLE[] v FROM embeddings),
-         c AS (SELECT vec_id, v FROM c0
-           UNION ALL
-           SELECT 2000000 + r.range AS vec_id,
-             (SELECT v FROM c0 WHERE vec_id = 0) AS v
-           FROM range(0, 300) r),
-         s AS (SELECT a.vec_id a, b.vec_id b FROM c a JOIN c b
-           ON a.vec_id < b.vec_id
-           AND list_dot_product(a.v, b.v) /
-             (sqrt(list_dot_product(a.v, a.v)) *
-              sqrt(list_dot_product(b.v, b.v))) >= 0.9),
-         edges AS (SELECT a x, b y FROM s UNION SELECT b, a FROM s),
-         reach AS (
-           WITH RECURSIVE r(x, y) AS (
-             SELECT x, y FROM edges
-             UNION
-             SELECT r.x, e.y FROM r JOIN edges e ON r.y = e.x)
-           SELECT x, y FROM r),
-         comp AS (SELECT x, least(x, min(y)) cm FROM reach GROUP BY x)
-         SELECT c.vec_id FROM c
-         LEFT JOIN comp ON comp.x = c.vec_id
-         WHERE comp.x IS NULL OR comp.cm = c.vec_id
-         ORDER BY vec_id""",
-
-    "q61_unigram_logprob" ->
-      """WITH toks AS (SELECT doc_id,
-             unnest(regexp_split_to_array(trim(lower(text)), '\s+')) AS tok
-           FROM documents),
-         tf AS (SELECT doc_id, tok, count(*) tf FROM toks
-           WHERE tok <> '' GROUP BY 1, 2),
-         c AS (SELECT tok, CAST(sum(tf) AS BIGINT) c FROM tf GROUP BY 1),
-         t AS (SELECT CAST(sum(c) AS BIGINT) T FROM c),
-         terms AS (SELECT doc_id, tok, tf,
-             tf * ln((c::DOUBLE) / (T::DOUBLE)) AS term
-           FROM tf JOIN c USING (tok) CROSS JOIN t)
-         SELECT doc_id, CAST(sum(tf) AS BIGINT) AS n_tokens,
-           round(list_reduce(list(term ORDER BY tok), (a, b) -> a + b)
-             / CAST(sum(tf) AS DOUBLE), 6) AS logprob_per_token
-         FROM terms GROUP BY 1 ORDER BY doc_id""",
-
-    // char split + </w>, then the three merge folds unrolled as
-    // list_reduce stages (seed = first symbol's singleton list, each
-    // further element either glues onto the accumulator tail or
-    // appends — the left-to-right non-overlapping BPE rule)
-    "q110_bpe_encode" ->
-      """WITH words AS (SELECT DISTINCT w FROM (
-           SELECT unnest(regexp_split_to_array(trim(lower(text)), '\s+')) AS w
-           FROM documents) WHERE w <> ''),
-         s0 AS (SELECT w,
-           [[c] for c in
-            [substring(w, i, 1) for i in generate_series(1, length(w))]
-            || ['</w>']] AS s
-         FROM words),
-         m1 AS (SELECT w, list_reduce(s, (acc, x) ->
-           CASE WHEN acc[len(acc)] = 'e' AND x[1] = '</w>'
-                THEN list_slice(acc, 1, len(acc) - 1) || ['e</w>']
-                ELSE acc || x END) AS p FROM s0),
-         m2 AS (SELECT w, list_reduce([[c] for c in p], (acc, x) ->
-           CASE WHEN acc[len(acc)] = 't' AND x[1] = 'h'
-                THEN list_slice(acc, 1, len(acc) - 1) || ['th']
-                ELSE acc || x END) AS p FROM m1),
-         m3 AS (SELECT w, list_reduce([[c] for c in p], (acc, x) ->
-           CASE WHEN acc[len(acc)] = 'th' AND x[1] = 'e</w>'
-                THEN list_slice(acc, 1, len(acc) - 1) || ['the</w>']
-                ELSE acc || x END) AS p FROM m2)
-         SELECT w, len(p) AS n_pieces,
-           md5(array_to_string(p, chr(1))) AS pieces_md5
-         FROM m3 ORDER BY w""",
-
-    // the fit LOOP replayed from scratch: per round the oracle
-    // recounts weighted pair frequencies (weight = word count,
-    // overlapping positions per occurrence), takes the
-    // (count DESC, a, b) argmax with the ≥2 floor itself, and folds
-    // that data-derived pair through the word table — three rounds,
-    // then md5 of every word's final piece boundaries
-    "q112_bpe_fit_replay" ->
-      """WITH words AS (SELECT w, count(*) AS n FROM (
-           SELECT unnest(regexp_split_to_array(trim(lower(text)), '\s+'))
-             AS w
-           FROM documents) WHERE w <> '' GROUP BY w),
-         s0 AS (SELECT w, n,
-           [substring(w, i, 1) for i in generate_series(1, length(w))]
-             || ['</w>'] AS p
-         FROM words),
-         c1 AS (SELECT pr.a AS a, pr.b AS b, sum(n) AS c FROM (
-             SELECT n, unnest([{'a': p[i], 'b': p[i + 1]}
-               for i in generate_series(1, len(p) - 1)]) AS pr
-             FROM s0 WHERE len(p) >= 2) GROUP BY 1, 2 HAVING sum(n) >= 2),
-         t1 AS (SELECT a, b FROM c1 ORDER BY c DESC, a, b LIMIT 1),
-         m1 AS (SELECT w, n, list_reduce([[c] for c in p], (acc, x) ->
-             CASE WHEN acc[len(acc)] = t1.a AND x[1] = t1.b
-                  THEN list_slice(acc, 1, len(acc) - 1) || [t1.a || t1.b]
-                  ELSE acc || x END) AS p
-           FROM s0 CROSS JOIN t1),
-         c2 AS (SELECT pr.a AS a, pr.b AS b, sum(n) AS c FROM (
-             SELECT n, unnest([{'a': p[i], 'b': p[i + 1]}
-               for i in generate_series(1, len(p) - 1)]) AS pr
-             FROM m1 WHERE len(p) >= 2) GROUP BY 1, 2 HAVING sum(n) >= 2),
-         t2 AS (SELECT a, b FROM c2 ORDER BY c DESC, a, b LIMIT 1),
-         m2 AS (SELECT w, n, list_reduce([[c] for c in p], (acc, x) ->
-             CASE WHEN acc[len(acc)] = t2.a AND x[1] = t2.b
-                  THEN list_slice(acc, 1, len(acc) - 1) || [t2.a || t2.b]
-                  ELSE acc || x END) AS p
-           FROM m1 CROSS JOIN t2),
-         c3 AS (SELECT pr.a AS a, pr.b AS b, sum(n) AS c FROM (
-             SELECT n, unnest([{'a': p[i], 'b': p[i + 1]}
-               for i in generate_series(1, len(p) - 1)]) AS pr
-             FROM m2 WHERE len(p) >= 2) GROUP BY 1, 2 HAVING sum(n) >= 2),
-         t3 AS (SELECT a, b FROM c3 ORDER BY c DESC, a, b LIMIT 1),
-         m3 AS (SELECT w, n, list_reduce([[c] for c in p], (acc, x) ->
-             CASE WHEN acc[len(acc)] = t3.a AND x[1] = t3.b
-                  THEN list_slice(acc, 1, len(acc) - 1) || [t3.a || t3.b]
-                  ELSE acc || x END) AS p
-           FROM m2 CROSS JOIN t3)
-         SELECT w, n, len(p) AS n_pieces,
-           md5(array_to_string(p, chr(1))) AS pieces_md5
-         FROM m3 ORDER BY w""",
-
-    // the full bigram chain: pair extraction, corpus counts, context
-    // totals, unigram backoff, the exact-binary 0.75/0.25 mixture,
-    // and the bigram-sorted fold
-    "q109_bigram_logprob" ->
-      """WITH toks AS (SELECT doc_id,
-           [t for t in regexp_split_to_array(trim(lower(text)), '\s+')
-            if t <> ''] AS tk
-         FROM documents),
-         bg0 AS (SELECT doc_id,
-           unnest([{'w1': tk[i], 'w2': tk[i + 1]}
-                   for i in generate_series(1, len(tk) - 1)]) AS b
-           FROM toks WHERE len(tk) >= 2),
-         bg AS (SELECT doc_id, b.w1 AS w1, b.w2 AS w2 FROM bg0),
-         tf AS (SELECT doc_id, w1, w2, count(*) tf FROM bg GROUP BY 1, 2, 3),
-         cb AS (SELECT w1, w2, CAST(sum(tf) AS BIGINT) cb FROM tf GROUP BY 1, 2),
-         cw AS (SELECT w1, CAST(sum(cb) AS BIGINT) cw FROM cb GROUP BY 1),
-         uni AS (SELECT t AS w2, count(*) cu
-           FROM (SELECT unnest(tk) AS t FROM toks) GROUP BY 1),
-         tot AS (SELECT CAST(sum(cu) AS BIGINT) T FROM uni),
-         terms AS (SELECT doc_id, w1, w2, tf,
-             tf * ln(0.75::DOUBLE * ((cb::DOUBLE) / (cw::DOUBLE)) +
-                     0.25::DOUBLE * ((cu::DOUBLE) / (T::DOUBLE))) AS term
-           FROM tf JOIN cb USING (w1, w2) JOIN cw USING (w1)
-             JOIN uni USING (w2) CROSS JOIN tot)
-         SELECT doc_id, CAST(sum(tf) AS BIGINT) AS n_bigrams,
-           round(list_reduce(list(term ORDER BY w1, w2), (a, b) -> a + b)
-             / CAST(sum(tf) AS DOUBLE), 6) AS logprob_per_bigram
-         FROM terms GROUP BY 1 ORDER BY doc_id""",
-
-    // the trigram chain: position extraction, pruned c3 vs unpruned
-    // c12 contexts, the full bigram backoff tier, unigram floor, the
-    // nested exact-binary mixture and the trigram-sorted fold
-    "q113_trigram_logprob" ->
-      ("""WITH toks AS (SELECT doc_id,
-           [t for t in regexp_split_to_array(trim(lower(text)), '\s+')
-            if t <> ''] AS tk
-         FROM documents),
-         tg0 AS (SELECT doc_id,
-             unnest([{'w1': tk[i], 'w2': tk[i + 1], 'w3': tk[i + 2]}
-                     for i in generate_series(1, len(tk) - 2)]) AS g
-           FROM toks WHERE len(tk) >= 3),
-         tg AS (SELECT doc_id, g.w1 AS w1, g.w2 AS w2, g.w3 AS w3 FROM tg0),
-         tf AS (SELECT doc_id, w1, w2, w3, count(*) tf FROM tg
-           GROUP BY 1, 2, 3, 4),
-         c3all AS (SELECT w1, w2, w3, CAST(sum(tf) AS BIGINT) c3 FROM tf
-           GROUP BY 1, 2, 3),
-         """ + trigramBackoffCountsSql + """
-         terms AS (SELECT doc_id, w1, w2, w3, tf,
-             tf * ln(0.75::DOUBLE * (COALESCE(c3, 0)::DOUBLE / (c12::DOUBLE)) +
-                     0.25::DOUBLE * (0.75::DOUBLE * ((cb::DOUBLE) / (cw::DOUBLE)) +
-                                     0.25::DOUBLE * ((cu::DOUBLE) / (T::DOUBLE))))
-               AS term
-           FROM tf JOIN c12 USING (w1, w2)
-             LEFT JOIN c3 USING (w1, w2, w3)
-             JOIN cb USING (w2, w3) JOIN cw USING (w2)
-             JOIN uni USING (w3) CROSS JOIN tot)
-         SELECT doc_id, CAST(sum(tf) AS BIGINT) AS n_trigrams,
-           round(list_reduce(list(term ORDER BY w1, w2, w3), (a, b) -> a + b)
-             / CAST(sum(tf) AS DOUBLE), 6) AS logprob_per_trigram
-         FROM terms GROUP BY 1 ORDER BY doc_id"""),
-
-    "q59_paragraph_dedup" ->
-      """WITH d AS (SELECT doc_id,
-           CASE WHEN doc_id % 6 = 0
-                THEN 'shared banner paragraph' || chr(10) || chr(10) || text
-                     || chr(10) || chr(10) || 'shared footer paragraph'
-                WHEN doc_id % 9 = 0
-                THEN text || chr(10) || chr(10) || 'shared banner paragraph'
-                WHEN doc_id % 8 = 0
-                THEN text || chr(10) || chr(10) || text
-                ELSE text END AS text
-           FROM documents),
-         sp AS (SELECT doc_id, string_split(text, chr(10) || chr(10)) AS ps
-           FROM d),
-         p AS (SELECT doc_id, unnest(ps) AS para,
-             unnest(generate_series(0, len(ps) - 1)) AS pos
-           FROM sp),
-         k AS (SELECT doc_id, pos, para,
-             row_number() OVER (PARTITION BY para ORDER BY doc_id, pos)
-               AS rn
-           FROM p),
-         rebuilt AS (SELECT doc_id,
-             string_agg(para, chr(10) || chr(10) ORDER BY pos) AS clean_text,
-             count(*) AS n_kept_paras
-           FROM k WHERE rn = 1 GROUP BY 1)
-         SELECT d.doc_id, len(sp.ps) AS n_paras,
-           coalesce(rebuilt.n_kept_paras, 0) AS n_kept_paras,
-           md5(coalesce(rebuilt.clean_text, '')) AS clean_md5
-         FROM d JOIN sp USING (doc_id)
-           LEFT JOIN rebuilt USING (doc_id)
-         ORDER BY d.doc_id""",
-
-    "q91_corpus_datasheet" ->
-      """WITH d AS (SELECT doc_id,
-           CASE WHEN doc_id % 41 = 0 THEN ''
-                WHEN doc_id % 10 = 0 THEN 'the repeated corpus text'
-                ELSE text END AS text, lang
-           FROM documents),
-         b AS (SELECT text,
-             len(regexp_split_to_array(trim(text), '\s+'))::DOUBLE AS n
-           FROM d),
-         g AS (SELECT count(*)::DOUBLE AS n_docs,
-             sum(n) AS n_tokens_total,
-             quantile_cont(n, 0.5) AS tokens_p50,
-             avg(n) AS tokens_mean,
-             1.0 - count(DISTINCT lower(trim(text)))::DOUBLE
-               / count(*)::DOUBLE AS exact_dup_frac,
-             avg(CASE WHEN trim(text) = '' THEN 1.0 ELSE 0.0 END)
-               AS empty_frac
-           FROM b),
-         long AS (
-           SELECT 'n_docs' AS metric, n_docs AS value FROM g
-           UNION ALL SELECT 'n_tokens_total', n_tokens_total FROM g
-           UNION ALL SELECT 'tokens_p50', tokens_p50 FROM g
-           UNION ALL SELECT 'tokens_mean', tokens_mean FROM g
-           UNION ALL SELECT 'exact_dup_frac', exact_dup_frac FROM g
-           UNION ALL SELECT 'empty_frac', empty_frac FROM g
-           UNION ALL
-           SELECT 'lang_frac:' || lang,
-             count(*)::DOUBLE / (SELECT n_docs FROM g)
-           FROM d GROUP BY lang)
-         SELECT metric, round(value, 6) AS value FROM long
-         ORDER BY metric""",
-
-    "q89_winnow_containment" ->
-      ("""WITH tk AS (SELECT doc_id,
-           regexp_split_to_array(trim(lower(text)), '\s+') t,
-           regexp_split_to_array(trim(text), '\s+') traw
-         FROM documents),
-         """ + winnowSql("tk", "doc_id", "hs", "sel") + """
-         tfp AS (SELECT DISTINCT s.doc_id, hs.h[s.pos] AS fp
-           FROM sel s JOIN hs USING (doc_id)),
-         btk AS (SELECT doc_id, [lower(x) for x in traw[3:14]] AS t
-           FROM tk WHERE doc_id % 13 = 0),
-         """ + winnowSql("btk", "doc_id", "bhs", "bsel") + """
-         bfp AS (SELECT DISTINCT bhs.h[s.pos] AS fp
-           FROM bsel s JOIN bhs USING (doc_id)),
-         agg AS (SELECT t.doc_id, count(*) AS n_fp, count(b.fp) AS n_hits
-           FROM tfp t LEFT JOIN bfp b ON t.fp = b.fp GROUP BY 1)
-         SELECT doc_id, n_fp, n_hits,
-           round(n_hits::DOUBLE / n_fp::DOUBLE, 6) AS containment
-         FROM agg ORDER BY doc_id"""),
-
-    "q88_winnow_fingerprints" ->
-      """WITH tk AS (SELECT doc_id,
-           regexp_split_to_array(trim(lower(text)), '\s+') t
-         FROM documents),
-         hs AS (SELECT doc_id,
-             [('0x' || substring(md5(array_to_string(t[p : p + 3], ' ')),
-                 1, 15))::BIGINT
-               for p in generate_series(1, greatest(len(t) - 3, 1))] AS h
-           FROM tk),
-         sel AS (SELECT DISTINCT doc_id,
-             s - 1 + list_max([i for i in generate_series(1, len(sl))
-               if sl[i] = list_min(sl)]) AS pos
-           FROM (SELECT doc_id, h, least(4, len(h)) AS win FROM hs) x,
-             LATERAL (SELECT unnest(generate_series(1, len(h) - win + 1))
-               AS s),
-             LATERAL (SELECT h[s : s + win - 1] AS sl))
-         SELECT sel.doc_id, sel.pos, hs.h[sel.pos] AS fingerprint
-         FROM sel JOIN hs USING (doc_id)
-         ORDER BY doc_id, pos""",
-
-    "q86_span_decontam" ->
-      """WITH tk AS (SELECT doc_id, regexp_split_to_array(trim(text), '\s+')
-             AS t FROM documents),
-         bg AS (SELECT DISTINCT array_to_string(bt[p : p + 7], ' ') AS g
-           FROM (SELECT t[3:14] AS bt FROM tk WHERE doc_id % 13 = 0) b,
-             LATERAL (SELECT unnest(generate_series(1, len(bt) - 7)) AS p)
-           WHERE len(bt) >= 8),
-         tg AS (SELECT doc_id, p, array_to_string(t[p : p + 7], ' ') AS g
-           FROM tk, LATERAL (SELECT unnest(generate_series(1, len(t) - 7))
-             AS p)
-           WHERE len(t) >= 8),
-         hit AS (SELECT doc_id, p FROM tg WHERE g IN (SELECT g FROM bg)),
-         cov AS (SELECT DISTINCT doc_id, w FROM hit,
-           LATERAL (SELECT unnest(generate_series(p, p + 7)) AS w)),
-         w AS (SELECT doc_id, unnest(t) AS word,
-             unnest(generate_series(1, len(t))) AS wp FROM tk),
-         kept AS (SELECT w.doc_id, w.wp, w.word FROM w
-           LEFT JOIN cov ON w.doc_id = cov.doc_id AND w.wp = cov.w
-           WHERE cov.w IS NULL),
-         rb AS (SELECT doc_id, count(*) AS n_kept_words,
-             md5(string_agg(word, ' ' ORDER BY wp)) AS clean_md5
-           FROM kept GROUP BY doc_id)
-         SELECT tk.doc_id, len(tk.t) AS n_words,
-           coalesce(rb.n_kept_words, 0) AS n_kept_words,
-           len(tk.t) - coalesce(rb.n_kept_words, 0) AS n_removed_words,
-           coalesce(rb.clean_md5, md5('')) AS clean_md5
-         FROM tk LEFT JOIN rb USING (doc_id) ORDER BY doc_id""",
-
-    "q84_quality_lr" ->
-      """WITH d AS (SELECT doc_id,
-           (CASE WHEN lang = 'en' THEN 1.0 ELSE 0.0 END)::DOUBLE AS y,
-           regexp_split_to_array(trim(lower(text)), '\s+') t
-         FROM documents),
-         feat AS (
-           SELECT doc_id, unnest(t) AS feat FROM d
-           UNION ALL
-           SELECT doc_id, array_to_string(t[i:i+1], ' ') FROM d,
-             LATERAL (SELECT unnest(generate_series(1, len(t)-1)) AS i)),
-         xb0 AS (SELECT doc_id,
-             ('0x' || substring(md5(feat), 1, 15))::BIGINT % 512 AS bucket,
-             count(*)::DOUBLE AS c
-           FROM feat WHERE feat <> '' GROUP BY 1, 2),
-         tot AS (SELECT doc_id, sqrt(sum(c)) AS sc FROM xb0 GROUP BY 1),
-         xb AS (SELECT doc_id, bucket, c, c / sc AS x
-           FROM xb0 JOIN tot USING (doc_id)),
-         n AS (SELECT count(DISTINCT doc_id)::DOUBLE AS n FROM xb),
-         e0 AS (SELECT doc_id, 0.5 - y AS e FROM d
-           WHERE doc_id IN (SELECT doc_id FROM xb)),
-         w1 AS (SELECT bucket,
-             -0.5 * list_reduce(list(e * x ORDER BY doc_id),
-               (a, b) -> a + b) / (SELECT n FROM n) AS w
-           FROM xb JOIN e0 USING (doc_id) GROUP BY bucket),
-         b1 AS (SELECT -0.5 * list_reduce(list(e ORDER BY doc_id),
-             (a, b) -> a + b) / (SELECT n FROM n) AS b FROM e0),
-         z1 AS (SELECT xb.doc_id,
-             list_reduce(list(xb.x * w1.w ORDER BY xb.bucket),
-               (a, b) -> a + b) AS z
-           FROM xb JOIN w1 USING (bucket) GROUP BY xb.doc_id),
-         e1 AS (SELECT z1.doc_id,
-             1.0 / (1.0 + exp(-(b1.b + z1.z))) - d.y AS e
-           FROM z1 JOIN d USING (doc_id) CROSS JOIN b1),
-         w2 AS (SELECT bucket, w1w - 0.5 *
-             list_reduce(list(gt ORDER BY doc_id), (a, b) -> a + b)
-               / (SELECT n FROM n) AS w
-           FROM (SELECT xb.bucket, w1.w AS w1w, xb.doc_id,
-                   e1.e * xb.x AS gt
-                 FROM xb JOIN e1 USING (doc_id) JOIN w1 USING (bucket)) s
-           GROUP BY bucket, w1w),
-         b2 AS (SELECT b1.b - 0.5 * list_reduce(list(e ORDER BY doc_id),
-             (a, b) -> a + b) / (SELECT n FROM n) AS b
-           FROM e1 CROSS JOIN b1 GROUP BY b1.b),
-         sc AS (SELECT xb.doc_id, CAST(sum(xb.c) AS BIGINT) AS n_feats,
-             list_reduce(list(xb.x * w2.w ORDER BY xb.bucket),
-               (a, b) -> a + b) AS z
-           FROM xb JOIN w2 USING (bucket) GROUP BY xb.doc_id)
-         SELECT doc_id, n_feats,
-           round(1.0 / (1.0 + exp(-(b2.b + sc.z))), 6) AS score
-         FROM sc CROSS JOIN b2 ORDER BY doc_id""",
-
-    "q83_substring_dedup" -> substringDedupOracleSql,
-
-    // identical DECISION contract: the Spark side keys grams by the
-    // 128-bit double hash instead of the string (the scale path)
-    "q87_substring_dedup_hashed" -> substringDedupOracleSql,
-
-    "q56_incremental_dedup" -> incrementalDedupOracleSql,
-
-    // identical DECISION contract: the only difference on the Spark
-    // side is that the index is round-tripped through a bucketed
-    // parquet table (build-once/search-many) before probing
-    "q74_bucketed_incremental" -> incrementalDedupOracleSql,
-
-    // Bloom-guarded exact tier: survivors = batch docs whose text is
-    // not in the accepted (even-doc) set AND that are min-id within
-    // their batch identical-text group — the Bloom on the Spark side
-    // is a pure admission prefilter and must not change decisions
-    "q94_bloom_incremental_exact" ->
-      """WITH idx AS (SELECT DISTINCT text FROM documents WHERE doc_id % 2 = 0),
-         b AS (
-           SELECT doc_id, text FROM documents WHERE doc_id % 2 = 1
-           UNION ALL
-           SELECT doc_id + 1000000 AS doc_id, text FROM documents
-             WHERE doc_id % 14 = 0
-           UNION ALL
-           SELECT doc_id + 2000000 AS doc_id, text FROM documents
-             WHERE doc_id % 10 = 1
-         )
-         SELECT b.doc_id AS doc_id
-         FROM b
-         JOIN (SELECT text, min(doc_id) AS keep_id FROM b GROUP BY text) f
-           ON b.text = f.text AND b.doc_id = f.keep_id
-         WHERE NOT EXISTS (SELECT 1 FROM idx i WHERE i.text = b.text)
-         ORDER BY doc_id""",
-
-    // both generations' decisions re-derived from scratch: a batch doc
-    // survives iff it is the min-id of its identical-text group within
-    // its batch AND its text is absent from the accepted union AS OF
-    // that batch (base for batch 1; base + batch-1 survivors for
-    // batch 2)
-    "q101_bloom_index_growth" ->
-      """WITH base AS (SELECT doc_id, text FROM documents WHERE doc_id % 3 = 0),
-         b1 AS (
-           SELECT doc_id, text FROM documents WHERE doc_id % 3 = 1
-           UNION ALL
-           SELECT doc_id + 1000000 AS doc_id, text FROM documents
-             WHERE doc_id % 9 = 0
-         ),
-         k1 AS (
-           SELECT b1.doc_id, b1.text FROM b1
-           JOIN (SELECT text, min(doc_id) AS keep_id FROM b1 GROUP BY text) f
-             ON b1.text = f.text AND b1.doc_id = f.keep_id
-           WHERE NOT EXISTS (SELECT 1 FROM base i WHERE i.text = b1.text)
-         ),
-         acc1 AS (SELECT text FROM base UNION SELECT text FROM k1),
-         b2 AS (
-           SELECT doc_id, text FROM documents WHERE doc_id % 3 = 2
-           UNION ALL
-           SELECT doc_id + 2000000 AS doc_id, text FROM documents
-             WHERE doc_id % 6 = 1
-           UNION ALL
-           SELECT doc_id + 3000000 AS doc_id, text FROM documents
-             WHERE doc_id % 12 = 0
-         ),
-         k2 AS (
-           SELECT b2.doc_id FROM b2
-           JOIN (SELECT text, min(doc_id) AS keep_id FROM b2 GROUP BY text) f
-             ON b2.text = f.text AND b2.doc_id = f.keep_id
-           WHERE NOT EXISTS (SELECT 1 FROM acc1 i WHERE i.text = b2.text)
-         )
-         SELECT doc_id, CAST(1 AS BIGINT) AS batch FROM k1
-         UNION ALL
-         SELECT doc_id, CAST(2 AS BIGINT) AS batch FROM k2
-         ORDER BY doc_id, batch""",
-
-    "q75_multi_period" ->
-      (q75PeriodSql("1min", 60000000L) + " UNION ALL " +
-        q75PeriodSql("2min", 120000000L) + " ORDER BY period, timestamp"),
-
-
-    "q54_boilerplate_lines" ->
-      """WITH d0 AS (SELECT doc_id,
-           'subscribe to our newsletter' || chr(10) || text ||
-             CASE WHEN doc_id % 3 = 0
-                  THEN chr(10) || 'cookie policy applies' ELSE '' END AS text
-           FROM documents),
-         d AS (SELECT doc_id, string_split(text, chr(10)) AS t FROM d0),
-         l AS (SELECT doc_id, t[i] AS line, i AS pos, len(t) AS n_lines
-           FROM d, LATERAL (SELECT unnest(generate_series(1, len(t))) AS i)),
-         nd AS (SELECT count(DISTINCT doc_id) AS n FROM d0),
-         bo AS (SELECT line FROM l, nd GROUP BY line, nd.n
-           HAVING count(DISTINCT doc_id) > 0.5 * nd.n),
-         rb AS (SELECT doc_id, count(*) AS n_kept_lines,
-             md5(string_agg(line, chr(10) ORDER BY pos)) AS clean_md5
-           FROM l WHERE line NOT IN (SELECT line FROM bo)
-           GROUP BY doc_id)
-         SELECT d.doc_id, len(d.t) AS n_lines,
-           coalesce(rb.n_kept_lines, 0) AS n_kept_lines,
-           coalesce(rb.clean_md5, md5('')) AS clean_md5
-         FROM d LEFT JOIN rb USING (doc_id) ORDER BY doc_id""",
-
-    "q55_token_budget" ->
-      """WITH tok AS (SELECT doc_id,
-           len(regexp_split_to_array(trim(text), '\s+'))::BIGINT AS n_tokens,
-           ('0x' || substring(md5(CAST(doc_id AS VARCHAR)), 1, 15))::BIGINT
-             AS h
-           FROM documents),
-         c AS (SELECT doc_id, n_tokens,
-             coalesce(sum(n_tokens) OVER (PARTITION BY h % 8
-               ORDER BY h, doc_id
-               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS prior
-           FROM tok)
-         SELECT doc_id, n_tokens FROM c WHERE prior < 2500
-         ORDER BY doc_id""",
-
-    "q53_length_quantiles" ->
-      """WITH s AS (SELECT length(text)::DOUBLE AS c,
-           len(regexp_split_to_array(trim(text), '\s+'))::DOUBLE AS tk
-           FROM documents),
-         a AS (SELECT quantile_cont(c, [0.25, 0.5, 0.75, 0.9, 0.99]) cp,
-                      quantile_cont(tk, [0.25, 0.5, 0.75, 0.9, 0.99]) tp
-           FROM s)
-         SELECT unnest([0.25, 0.5, 0.75, 0.9, 0.99]) AS p,
-                unnest(cp) AS chars_p, unnest(tp) AS tokens_p
-         FROM a ORDER BY p""",
-
-    "q27_text_profile" ->
-      """WITH p AS (SELECT doc_id, text,
-           len(regexp_split_to_array(trim(text), '\s+')) AS n_tokens,
-           len(regexp_extract_all(text, '[A-Za-z]{1,4}|[0-9]|[^A-Za-z0-9\s]'))
-             AS n_tokens_bpeish,
-           length(text) - length(regexp_replace(text,
-             '[.,!?;:''"()\[\]{}-]', '', 'g')) AS n_punct,
-           (length(text) - length(regexp_replace(text, '[A-Z]', '', 'g')))*1.0
-             / greatest(length(text), 1) AS upper_ratio,
-           len(regexp_extract_all(lower(text), '\bthe\b|\band\b|\bof\b|\bto\b|\bis\b')) AS s_en,
-           len(regexp_extract_all(lower(text), '\bder\b|\bdie\b|\bund\b|\bist\b|\bnicht\b')) AS s_de,
-           len(regexp_extract_all(lower(text), '\ble\b|\bla\b|\bet\b|\best\b|\bles\b')) AS s_fr,
-           len(regexp_extract_all(lower(text), '\bel\b|\bla\b|\by\b|\bes\b|\blos\b')) AS s_es,
-           length(regexp_replace(text, '[^一-鿿]', '', 'g')) AS cjk
-         FROM documents),
-         q AS (SELECT *, greatest(s_en, s_de, s_fr, s_es) AS best,
-           length(text)*1.0 AS l,
-           len(regexp_split_to_array(trim(text), '\s+'))*1.0 AS tk
-         FROM p)
-         SELECT doc_id, n_tokens, n_tokens_bpeish, n_punct,
-           round(upper_ratio, 6) AS upper_ratio,
-           CASE WHEN cjk > 0 THEN 'zh' WHEN best = 0 THEN 'und'
-                WHEN s_en = best THEN 'en' WHEN s_de = best THEN 'de'
-                WHEN s_fr = best THEN 'fr' ELSE 'es' END AS pred_lang,
-           round(
-             (CASE WHEN l >= 100 AND l <= 10000 THEN 1.0
-                   WHEN l < 100 THEN l/100.0 ELSE 10000.0/l END) * 0.4 +
-             (CASE WHEN (l-(tk-1))/greatest(tk,1.0) >= 3
-                    AND (l-(tk-1))/greatest(tk,1.0) <= 10
-                   THEN 1.0 ELSE 0.5 END) * 0.3 +
-             (CASE WHEN (length(text) - length(regexp_replace(text,
-                     '[.,!?;:''"()\[\]{}-]', '', 'g')))*1.0/greatest(l,1.0) <= 0.1
-                   THEN 1.0 ELSE greatest(0.0, 1.0 -
-                     (length(text) - length(regexp_replace(text,
-                       '[.,!?;:''"()\[\]{}-]', '', 'g')))*1.0/greatest(l,1.0)*2)
-              END) * 0.3, 6) AS quality
-         FROM q ORDER BY doc_id""",
-
-    "q23_solar" ->
-      """WITH s AS (SELECT event_id, ts, value,
-           CAST(event_id % 60 + 30 AS DOUBLE) AS zen,
-           CAST((event_id * 7) % 360 AS DOUBLE) AS az
-         FROM events)
-         SELECT event_id,
-           round(value * greatest(
-               cos(radians(15.0))*cos(radians(zen)) +
-               sin(radians(15.0))*sin(radians(zen))*cos(radians(az - 180.0)),
-               0.0)
-             + (value*0.3) * (1.0 + cos(radians(15.0))) / 2.0
-             + (value*0.8) * 0.08 * (1.0 - cos(radians(15.0))) / 2.0, 6) AS poa,
-           round(1.0 / (cos(radians(zen)) +
-             0.50572 * pow(96.07995 - zen, -1.6364)), 6) AS airmass,
-           round(1366.1 * (1.00011
-             + 0.034221 * cos(2*pi()/365.0 * (dayofyear(ts) - 1))
-             + 0.00128  * sin(2*pi()/365.0 * (dayofyear(ts) - 1))
-             + 0.000719 * cos(2 * (2*pi()/365.0 * (dayofyear(ts) - 1)))
-             + 0.000077 * sin(2 * (2*pi()/365.0 * (dayofyear(ts) - 1)))), 6)
-             AS dni_extra
-         FROM s ORDER BY event_id""",
-
-    "q21_can_decode" -> canDecodeOracleSql,
-
-    // q79 streams the SAME fixture lines through decodedStream; the
-    // stateless decode must reproduce the batch oracle verbatim
-    "q79_stream_decode" -> canDecodeOracleSql,
-
-    "q22_can_pivot" ->
-      """SELECT ts AS timestamp,
-           avg(17.0) AS "MOD17__SENSOR__SIGNATURE",
-           avg(CAST(user_id AS DOUBLE)*(1.0/100)) AS "MOD17__SENSOR__CURR",
-           avg(CAST(event_id % 256 AS DOUBLE)*(1.0/100)) AS "MOD17__SENSOR__DUTY",
-           avg(CAST((event_id % 4) & 1 AS DOUBLE)*(1.0/255)) AS "MOD17__SENSOR__FLAG1",
-           avg(CAST(((event_id % 4) >> 1) & 1 AS DOUBLE)) AS "MOD17__SENSOR__FLAG2"
-         FROM events WHERE event_id % 101 != 0 AND event_id % 103 != 0
-         GROUP BY ts ORDER BY timestamp""",
-
-    // The season end-to-end oracle recomputes every stage: decode
-    // (q21/q22 semantics incl. Q1 ordinal scaling), the reference-DB
-    // time-range clip, 1-min bucket means, the dense grid, the
-    // gap-limited (1 row) interior interpolation, the −3h-shifted
-    // forecast alignment (exact at ticks, linear between, flat-filled
-    // after the last tick, null before the first and beyond the shift
-    // horizon), the PSA solar position (Blanco-Muriel 2001 — identical
-    // operation order to functions/Solar.scala so IEEE doubles agree),
-    // cumtrapz energy, GPS speed/heading/distance with quirk Q7, and
-    // the as-of ffill join.
-    "q65_season_e2e" ->
-      ("""WITH
-         mainE AS (SELECT ts, user_id, event_id FROM events
-           WHERE ts BETWEEN TIMESTAMP '2024-01-08 09:00:00'
-                        AND TIMESTAMP '2024-01-11 21:00:00'
-             AND event_id % 3 != 0 AND event_id % 101 != 0
-             AND event_id % 103 != 0),
-         dbE AS (SELECT ts, user_id, event_id FROM events
-           WHERE ts BETWEEN TIMESTAMP '2024-01-08 00:00:00'
-                        AND TIMESTAMP '2024-01-12 00:00:00'
-             AND event_id % 3 = 0),
-         mwide AS (SELECT ts,
-             avg(17.0) v_sig,
-             avg(CAST(user_id AS DOUBLE)*(1.0/100)) v_curr,
-             avg(CAST(event_id % 256 AS DOUBLE)*(1.0/100)) v_duty,
-             avg(CAST((event_id % 4) & 1 AS DOUBLE)*(1.0/255)) v_f1,
-             avg(CAST(((event_id % 4) >> 1) & 1 AS DOUBLE)) v_f2
-           FROM mainE GROUP BY ts),
-         dwide AS (SELECT ts,
-             avg(17.0) v_sig,
-             avg(CAST(user_id AS DOUBLE)*(1.0/100)) v_curr,
-             avg(CAST(event_id % 256 AS DOUBLE)*(1.0/100)) v_duty,
-             avg(CAST((event_id % 4) & 1 AS DOUBLE)*(1.0/255)) v_f1,
-             avg(CAST(((event_id % 4) >> 1) & 1 AS DOUBLE)) v_f2
-           FROM dbE GROUP BY ts),
-         mb AS (SELECT min(ts) lo, max(ts) hi FROM mwide),
-         uni AS (SELECT * FROM mwide
-           UNION ALL SELECT * FROM dwide
-             WHERE ts BETWEEN (SELECT lo FROM mb) AND (SELECT hi FROM mb)),
-         lf AS (
-           SELECT make_timestamp(epoch_us(ts) - epoch_us(ts) % 60000000) b,
-             'MOD17__SENSOR__SIGNATURE' signal, v_sig vv FROM uni
-           UNION ALL SELECT make_timestamp(epoch_us(ts) - epoch_us(ts) % 60000000),
-             'MOD17__SENSOR__CURR', v_curr FROM uni
-           UNION ALL SELECT make_timestamp(epoch_us(ts) - epoch_us(ts) % 60000000),
-             'MOD17__SENSOR__DUTY', v_duty FROM uni
-           UNION ALL SELECT make_timestamp(epoch_us(ts) - epoch_us(ts) % 60000000),
-             'MOD17__SENSOR__FLAG1', v_f1 FROM uni
-           UNION ALL SELECT make_timestamp(epoch_us(ts) - epoch_us(ts) % 60000000),
-             'MOD17__SENSOR__FLAG2', v_f2 FROM uni),
-         binned AS (SELECT signal, b, avg(vv) v FROM lf GROUP BY 1, 2),
-         bnds AS (SELECT min(b) lo, max(b) hi FROM binned),
-         grid AS (SELECT s.signal, g.b
-           FROM (SELECT unnest(['MOD17__SENSOR__SIGNATURE',
-             'MOD17__SENSOR__CURR', 'MOD17__SENSOR__DUTY',
-             'MOD17__SENSOR__FLAG1', 'MOD17__SENSOR__FLAG2']) signal) s
-           CROSS JOIN (SELECT unnest(generate_series((SELECT lo FROM bnds),
-             (SELECT hi FROM bnds), INTERVAL 1 MINUTE)) b) g),
-         """ + seasonInterpSql(60000000L) + """,
-         rs AS (SELECT b ts,
-             max(CASE WHEN signal = 'MOD17__SENSOR__SIGNATURE' THEN val END) s_signature,
-             max(CASE WHEN signal = 'MOD17__SENSOR__CURR' THEN val END) s_curr,
-             max(CASE WHEN signal = 'MOD17__SENSOR__DUTY' THEN val END) s_duty,
-             max(CASE WHEN signal = 'MOD17__SENSOR__FLAG1' THEN val END) s_flag1,
-             max(CASE WHEN signal = 'MOD17__SENSOR__FLAG2' THEN val END) s_flag2
-           FROM resam GROUP BY b),
-         """ + seasonForecastSql + """
-         """ + seasonSolarSql(
-           Seq("dni", "ghi", "dhi", "airmass", "albedo")) + """
-         """ + seasonTrackSql + """
-         gpsj AS (SELECT g.ts, k.lat, k.lon, k.ele, k.speed, k.heading,
-             k.distance
-           FROM (SELECT ts FROM rs WHERE ts <= (SELECT c FROM cutoff)) g
-           ASOF LEFT JOIN trkf k ON g.ts >= k.g_ts)
-         SELECT r.ts AS timestamp,
-           round(r.s_signature, 6) AS s_signature,
-           round(r.s_curr, 6) AS s_curr,
-           round(r.s_duty, 6) AS s_duty,
-           round(r.s_flag1, 6) AS s_flag1,
-           round(r.s_flag2, 6) AS s_flag2,
-           round(s.dni, 6) AS solcast_dni,
-           round(s.ghi, 6) AS solcast_ghi,
-           round(s.dhi, 6) AS solcast_dhi,
-           round(s.airmass, 6) AS solcast_airmass,
-           round(s.albedo, 6) AS solcast_albedo,
-           round(s.poa, 6) AS solcast_poa,
-           round(s.energy, 6) AS solcast_energy,
-           round(j.lat, 6) AS gps_latitude,
-           round(j.lon, 6) AS gps_longitude,
-           round(j.ele, 6) AS gps_altitude,
-           round(j.speed, 6) AS gps_speed,
-           round(j.heading, 6) AS gps_heading,
-           round(j.distance, 6) AS gps_distance
-         FROM rs r LEFT JOIN sol s ON s.ts = r.ts
-         LEFT JOIN gpsj j ON j.ts = r.ts
-         ORDER BY timestamp"""),
-
-    // q65's machinery with (a) every main timestamp shifted by the
-    // clock fix +2,730,123,456 µs BEFORE bucketing (the reference
-    // applies `to − from` to parsed timestamps, lib/canparser.py:205),
-    // (b) the reference-DB rows UNSHIFTED and clipped against the
-    // shifted main bounds, and (c) the mab20-forced MAB19 decode:
-    // topic-65 frames contribute PUMPS (payload truncated to 2 bytes —
-    // junk tail ignored), topic-64 frames STATE/ERROR; MOD17 rejects
-    // (%101 unknown topic, %103 short frame) still drop while the SAME
-    // events' MAB19 frames survive.
-    "q73_season_mab20" ->
-      ("""WITH
-         mainE AS (SELECT make_timestamp(epoch_us(ts) + 2730123456) ts,
-             user_id, event_id FROM events
-           WHERE ts BETWEEN TIMESTAMP '2024-01-08 09:00:00'
-                        AND TIMESTAMP '2024-01-11 21:00:00'
-             AND event_id % 3 != 0
-             AND ((event_id % 101 != 0 AND event_id % 103 != 0)
-                  OR event_id % 5 IN (1, 2))),
-         dbE AS (SELECT ts, user_id, event_id FROM events
-           WHERE ts BETWEEN TIMESTAMP '2024-01-08 00:00:00'
-                        AND TIMESTAMP '2024-01-12 00:00:00'
-             AND event_id % 3 = 0),
-         mwide AS (SELECT ts,
-             avg(CASE WHEN event_id % 101 != 0 AND event_id % 103 != 0
-                 THEN CAST(user_id AS DOUBLE)*(1.0/100) END) v_curr,
-             avg(CASE WHEN event_id % 5 = 2
-                 THEN CAST(user_id % 256 AS DOUBLE) END) v_state,
-             avg(CASE WHEN event_id % 5 = 2
-                 THEN CAST(event_id % 7 AS DOUBLE) END) v_error,
-             avg(CASE WHEN event_id % 5 = 1
-                 THEN CAST(event_id % 256 AS DOUBLE) END) v_pumps
-           FROM mainE GROUP BY ts),
-         dwide AS (SELECT ts,
-             avg(CAST(user_id AS DOUBLE)*(1.0/100)) v_curr,
-             CAST(NULL AS DOUBLE) v_state, CAST(NULL AS DOUBLE) v_error,
-             CAST(NULL AS DOUBLE) v_pumps
-           FROM dbE GROUP BY ts),
-         mb AS (SELECT min(ts) lo, max(ts) hi FROM mwide),
-         uni AS (SELECT * FROM mwide
-           UNION ALL SELECT * FROM dwide
-             WHERE ts BETWEEN (SELECT lo FROM mb) AND (SELECT hi FROM mb)),
-         lf AS (
-           SELECT make_timestamp(epoch_us(ts) - epoch_us(ts) % 60000000) b,
-             'MOD17__SENSOR__CURR' signal, v_curr vv FROM uni
-           UNION ALL SELECT make_timestamp(epoch_us(ts) - epoch_us(ts) % 60000000),
-             'MAB19__STATE__STATE', v_state FROM uni
-           UNION ALL SELECT make_timestamp(epoch_us(ts) - epoch_us(ts) % 60000000),
-             'MAB19__STATE__ERROR', v_error FROM uni
-           UNION ALL SELECT make_timestamp(epoch_us(ts) - epoch_us(ts) % 60000000),
-             'MAB19__PUMPS__PUMPS', v_pumps FROM uni),
-         binned AS (SELECT signal, b, avg(vv) v FROM lf GROUP BY 1, 2),
-         bnds AS (SELECT min(b) lo, max(b) hi FROM binned WHERE v IS NOT NULL),
-         grid AS (SELECT s.signal, g.b
-           FROM (SELECT unnest(['MOD17__SENSOR__CURR',
-             'MAB19__STATE__STATE', 'MAB19__STATE__ERROR',
-             'MAB19__PUMPS__PUMPS']) signal) s
-           CROSS JOIN (SELECT unnest(generate_series((SELECT lo FROM bnds),
-             (SELECT hi FROM bnds), INTERVAL 1 MINUTE)) b) g),
-         """ + seasonInterpSql(60000000L) + """,
-         rs AS (SELECT b ts,
-             max(CASE WHEN signal = 'MOD17__SENSOR__CURR' THEN val END) s_curr,
-             max(CASE WHEN signal = 'MAB19__STATE__STATE' THEN val END) m_state,
-             max(CASE WHEN signal = 'MAB19__STATE__ERROR' THEN val END) m_error,
-             max(CASE WHEN signal = 'MAB19__PUMPS__PUMPS' THEN val END) m_pumps
-           FROM resam GROUP BY b),
-         """ + seasonForecastSql + """
-         """ + seasonSolarSql(Nil) + """
-         """ + seasonTrackSql + """
-         gpsj AS (SELECT g.ts, k.speed, k.distance
-           FROM (SELECT ts FROM rs WHERE ts <= (SELECT c FROM cutoff)) g
-           ASOF LEFT JOIN trkf k ON g.ts >= k.g_ts)
-         SELECT r.ts AS timestamp,
-           round(r.s_curr, 6) AS s_curr,
-           round(r.m_state, 6) AS mab_state,
-           round(r.m_error, 6) AS mab_error,
-           round(r.m_pumps, 6) AS mab_pumps,
-           round(s.poa, 6) AS solcast_poa,
-           round(s.energy, 6) AS solcast_energy,
-           round(j.speed, 6) AS gps_speed,
-           round(j.distance, 6) AS gps_distance
-         FROM rs r LEFT JOIN sol s ON s.ts = r.ts
-         LEFT JOIN gpsj j ON j.ts = r.ts
-         ORDER BY timestamp"""),
-
-    "q30_resample_ms" ->
-      """SELECT event_type,
-         make_timestamp(epoch_us(ts) - (epoch_us(ts) % 500000)) AS bucket_ts,
-         round(sum(value),2) AS sum_value, count(*) AS n,
-         round(sum(value),2)/count(*) AS mean_value
-         FROM events GROUP BY 1,2 ORDER BY 1,2""",
-
-    "q32_rolling_fingerprint" ->
-      """SELECT doc_id,
-         list_reduce(
-           list_prepend(0::BIGINT,
-             list_transform(regexp_split_to_array(lower(trim(text)), '\s+'),
-               t -> ('0x' || substring(md5(t),1,15))::BIGINT
-                    % 100000000000000003)),
-           (acc, h) -> (acc*31 + h) % 100000000000000003) AS fingerprint
-         FROM documents ORDER BY doc_id""",
-
-    "q41_sequence_pack" ->
-      """WITH d AS (SELECT doc_id, doc_id % 8 AS shard,
-           len(regexp_split_to_array(trim(text), '\s+')) AS n_tokens
-         FROM documents),
-         p AS (SELECT doc_id, shard, coalesce(sum(n_tokens) OVER
-             (PARTITION BY shard ORDER BY doc_id
-              ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)::BIGINT
-             AS prior
-           FROM d)
-         SELECT doc_id, shard, prior // 2048 AS seq_id,
-           prior % 2048 AS seq_offset
-         FROM p ORDER BY doc_id""",
-
-    "q42_pii_redact" ->
-      """WITH d AS (SELECT doc_id,
-           text || ' contact user' || CAST(doc_id AS VARCHAR)
-                || '@example.com from 10.0.'
-                || CAST(doc_id % 256 AS VARCHAR) || '.7' AS text
-         FROM documents)
-         SELECT doc_id,
-           len(regexp_extract_all(text,
-             '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}')) AS n_emails,
-           len(regexp_extract_all(text,
-             '\b[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}\b')) AS n_ips,
-           md5(regexp_replace(regexp_replace(text,
-             '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '<EMAIL>', 'g'),
-             '\b[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}\b', '<IP>', 'g'))
-             AS red_md5
-         FROM d ORDER BY doc_id""",
-
-    "q43_stratified_sample" ->
-      """WITH b AS (SELECT event_id, event_type,
-           ('0x' || substring(md5(CAST(event_id AS VARCHAR)), 1, 15))::BIGINT
-             % 1000000 AS bkt
-         FROM events)
-         SELECT event_id, event_type FROM b
-         WHERE bkt < CASE event_type WHEN 'click' THEN 200000
-                       WHEN 'view' THEN 100000 WHEN 'purchase' THEN 1000000
-                       ELSE 50000 END
-         ORDER BY event_id""",
-
-    "q44_repeat_lines" ->
-      """WITH d AS (SELECT doc_id, string_split(
-           text || chr(10) || text || chr(10) || 'tail '
-                || CAST(doc_id AS VARCHAR) || chr(10) || text,
-           chr(10)) AS t FROM documents),
-         l AS (SELECT doc_id, t[i] AS line, i AS pos, len(t) AS n_lines
-           FROM d, LATERAL (SELECT unnest(generate_series(1, len(t))) AS i)),
-         f AS (SELECT doc_id, any_value(n_lines) AS n_lines, line,
-             min(pos) AS pos
-           FROM l GROUP BY doc_id, line)
-         SELECT doc_id, any_value(n_lines) AS n_lines,
-           count(*) AS n_unique_lines,
-           md5(string_agg(line, chr(10) ORDER BY pos)) AS dedup_md5
-         FROM f GROUP BY doc_id ORDER BY doc_id""",
-
-    "q45_upsample_mix" ->
-      """WITH b AS (SELECT event_id, event_type,
-           ('0x' || substring(md5(CAST(event_id AS VARCHAR)), 1, 15))::BIGINT
-             % 1000000 AS bkt
-         FROM events),
-         w AS (SELECT event_id, event_type,
-           CASE event_type WHEN 'purchase' THEN 2
-                           WHEN 'click' THEN 0 ELSE 1 END
-           + CASE WHEN bkt < (CASE event_type WHEN 'purchase' THEN 500000
-                                WHEN 'click' THEN 500000 ELSE 0 END)
-                  THEN 1 ELSE 0 END AS copies
-         FROM b)
-         SELECT event_id, event_type,
-           unnest(generate_series(0, copies - 1)) AS copy
-         FROM w WHERE copies > 0 ORDER BY event_id, copy""",
-
-    "q46_tfidf" ->
-      """WITH tok AS (SELECT doc_id, unnest(regexp_split_to_array(
-             lower(trim(text)), '\s+')) AS token FROM documents),
-         tf AS (SELECT doc_id, token, count(*) AS tf FROM tok
-           WHERE token != '' GROUP BY 1, 2),
-         dfq AS (SELECT token, count(*) AS df FROM tf GROUP BY 1),
-         n AS (SELECT count(DISTINCT doc_id) AS n FROM documents),
-         s AS (SELECT doc_id, token,
-             round(tf * ln((SELECT n FROM n) * 1.0 / df), 6) AS tfidf
-           FROM tf JOIN dfq USING (token)),
-         r AS (SELECT doc_id, token, tfidf, row_number() OVER
-             (PARTITION BY doc_id ORDER BY tfidf DESC, token) AS rank
-           FROM s)
-         SELECT doc_id, rank, token, tfidf FROM r WHERE rank <= 3
-         ORDER BY doc_id, rank""",
-
-    "q47_chunk_overlap" ->
-      """WITH d AS (SELECT doc_id, regexp_split_to_array(
-             lower(trim(text)), '\s+') AS t FROM documents),
-         e AS (SELECT doc_id, t,
-             greatest(0, (len(t) - 50 + 40 - 1) // 40) AS extra FROM d),
-         c AS (SELECT doc_id, t,
-             unnest(generate_series(0, extra)) AS chunk_id FROM e)
-         SELECT doc_id, chunk_id,
-           len(t[chunk_id*40 + 1 : chunk_id*40 + 50]) AS chunk_tokens,
-           md5(array_to_string(t[chunk_id*40 + 1 : chunk_id*40 + 50], ' '))
-             AS chunk_md5
-         FROM c ORDER BY doc_id, chunk_id""",
-
-    "q48_salted_agg" ->
-      """SELECT event_type, round(sum(value), 2) AS sum_value,
-           count(value) AS n, min(value) AS min_value,
-           max(value) AS max_value
-         FROM events GROUP BY 1 ORDER BY 1""",
-
-    "q49_cross_contamination" ->
-      """WITH lt AS (SELECT doc_id, lower(text) tx FROM documents),
-         rt AS (SELECT doc_id + 1000000 AS doc_id,
-             lower(text || ' extra trailing token') tx
-           FROM documents WHERE doc_id % 13 = 0),
-         ltoks AS (SELECT doc_id, regexp_split_to_array(trim(tx), '\s+') t
-           FROM lt),
-         rtoks AS (SELECT doc_id, regexp_split_to_array(trim(tx), '\s+') t
-           FROM rt),
-         lsh AS (SELECT DISTINCT doc_id, array_to_string(t[i:i+3], ' ') AS s
-           FROM ltoks, LATERAL (SELECT unnest(generate_series(1,
-             greatest(len(t)-3, 1))) AS i)),
-         rsh AS (SELECT DISTINCT doc_id, array_to_string(t[i:i+3], ' ') AS s
-           FROM rtoks, LATERAL (SELECT unnest(generate_series(1,
-             greatest(len(t)-3, 1))) AS i)),
-         lsz AS (SELECT doc_id, count(*) sz FROM lsh GROUP BY 1),
-         rsz AS (SELECT doc_id, count(*) sz FROM rsh GROUP BY 1),
-         inter AS (SELECT a.doc_id a, b.doc_id b, count(*) i FROM lsh a
-           JOIN rsh b ON a.s = b.s GROUP BY 1,2)
-         SELECT a, b FROM inter
-         JOIN lsz ON lsz.doc_id = a JOIN rsz ON rsz.doc_id = b
-         WHERE i*1.0/(lsz.sz+rsz.sz-i) >= 0.5 ORDER BY a, b""",
-
-    // curate() end-to-end: every stage recomposed in SQL. Stage
-    // provenance: quality = q27's formula, exact dedup = q15's
-    // keep-min, near-dup closure = q34's recursive CTE, containment =
-    // q51's scoring, buckets = q36's md5 hash, packing = q41's window.
-    "q50_curate" ->
-      ("""WITH corpus AS (
-           SELECT doc_id, text FROM documents
-           UNION ALL
-           SELECT doc_id + 1000000, text || ' xyzzy qbf'
-           FROM documents WHERE doc_id % 7 = 0),
-         qual AS (SELECT doc_id, text,
-           round(
-             (CASE WHEN length(text)*1.0 >= 100 AND length(text)*1.0 <= 10000
-                   THEN 1.0
-                   WHEN length(text)*1.0 < 100 THEN length(text)/100.0
-                   ELSE 10000.0/length(text) END) * 0.4 +
-             (CASE WHEN (length(text)*1.0 -
-                     (len(regexp_split_to_array(trim(text), '\s+'))*1.0 - 1))
-                     / greatest(len(regexp_split_to_array(trim(text), '\s+'))*1.0, 1.0)
-                     >= 3
-                    AND (length(text)*1.0 -
-                     (len(regexp_split_to_array(trim(text), '\s+'))*1.0 - 1))
-                     / greatest(len(regexp_split_to_array(trim(text), '\s+'))*1.0, 1.0)
-                     <= 10
-                   THEN 1.0 ELSE 0.5 END) * 0.3 +
-             (CASE WHEN (length(text) - length(regexp_replace(text,
-                     '[.,!?;:''"()\[\]{}-]', '', 'g')))*1.0
-                     / greatest(length(text)*1.0, 1.0) <= 0.1
-                   THEN 1.0 ELSE greatest(0.0, 1.0 -
-                     (length(text) - length(regexp_replace(text,
-                       '[.,!?;:''"()\[\]{}-]', '', 'g')))*1.0
-                       / greatest(length(text)*1.0, 1.0)*2)
-              END) * 0.3, 6) AS quality
-           FROM corpus),
-         filt AS (SELECT doc_id, text FROM qual WHERE quality >= 0.3),
-         ex AS (SELECT min(doc_id) AS doc_id, text FROM filt GROUP BY text),
-         toks AS (SELECT doc_id, regexp_split_to_array(lower(trim(text)), '\s+') t
-           FROM ex),
-         sh AS (SELECT DISTINCT doc_id, array_to_string(t[i:i+3], ' ') s
-           FROM toks, LATERAL (SELECT unnest(generate_series(1,
-             greatest(len(t)-3, 1))) AS i)),
-         """ + shingleClosureSql + """,
-         comp AS (SELECT x AS doc_id, least(x, min(y)) AS component
-           FROM reach GROUP BY x),
-         kept AS (SELECT e.doc_id, e.text FROM ex e
-           LEFT JOIN comp c ON e.doc_id = c.doc_id
-           WHERE c.doc_id IS NULL OR c.component = e.doc_id),
-         bench AS (SELECT doc_id + 3000000 AS doc_id,
-             array_to_string((regexp_split_to_array(trim(text), '\s+'))[2:21], ' ')
-               AS text
-           FROM documents WHERE doc_id % 23 = 0),
-         btoks AS (SELECT doc_id,
-             regexp_split_to_array(lower(trim(text)), '\s+') t FROM bench),
-         bsh AS (SELECT DISTINCT doc_id, array_to_string(t[i:i+3], ' ') s
-           FROM btoks, LATERAL (SELECT unnest(generate_series(1,
-             greatest(len(t)-3, 1))) AS i)),
-         bsz AS (SELECT doc_id, count(*) sz FROM bsh GROUP BY 1),
-         ksh AS (SELECT sh.doc_id, sh.s FROM sh JOIN kept USING (doc_id)),
-         xinter AS (SELECT k.doc_id a, b.doc_id b, count(*) i FROM ksh k
-           JOIN bsh b ON k.s = b.s GROUP BY 1,2),
-         hits AS (SELECT DISTINCT a FROM xinter
-           JOIN bsz ON bsz.doc_id = b WHERE i*1.0/bsz.sz >= 0.8),
-         clean AS (SELECT doc_id, text FROM kept
-           WHERE doc_id NOT IN (SELECT a FROM hits)),
-         lab AS (SELECT doc_id, text,
-             ('0x' || substring(md5(CAST(doc_id AS VARCHAR)), 1, 15))::BIGINT
-               % 1000000 AS bkt,
-             ('0x' || substring(md5(CAST(doc_id AS VARCHAR)), 1, 15))::BIGINT
-               % 8 AS shard
-           FROM clean),
-         sp AS (SELECT doc_id, shard,
-             CASE WHEN bkt < 800000 THEN 'train'
-                  WHEN bkt < 900000 THEN 'val' ELSE 'test' END AS split,
-             len(regexp_split_to_array(trim(text), '\s+')) AS n_tokens
-           FROM lab),
-         pk AS (SELECT doc_id, split, shard, coalesce(sum(n_tokens) OVER
-             (PARTITION BY split, shard ORDER BY doc_id
-              ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)::BIGINT
-             AS prior
-           FROM sp)
-         SELECT doc_id, split, shard, prior // 2048 AS seq_id,
-           prior % 2048 AS seq_offset
-         FROM pk ORDER BY doc_id"""),
-
-    "q51_containment_decontam" ->
-      """WITH lt AS (SELECT doc_id, lower(trim(text)) tx FROM documents),
-         bench AS (SELECT doc_id + 2000000 AS doc_id,
-             lower(trim(array_to_string(
-               (regexp_split_to_array(trim(text), '\s+'))[3:22], ' '))) tx
-           FROM documents WHERE doc_id % 17 = 0),
-         ltoks AS (SELECT doc_id, regexp_split_to_array(tx, '\s+') t FROM lt),
-         rtoks AS (SELECT doc_id, regexp_split_to_array(tx, '\s+') t FROM bench),
-         lsh AS (SELECT DISTINCT doc_id, array_to_string(t[i:i+3], ' ') AS s
-           FROM ltoks, LATERAL (SELECT unnest(generate_series(1,
-             greatest(len(t)-3, 1))) AS i)),
-         rsh AS (SELECT DISTINCT doc_id, array_to_string(t[i:i+3], ' ') AS s
-           FROM rtoks, LATERAL (SELECT unnest(generate_series(1,
-             greatest(len(t)-3, 1))) AS i)),
-         rsz AS (SELECT doc_id, count(*) sz FROM rsh GROUP BY 1),
-         inter AS (SELECT a.doc_id a, b.doc_id b, count(*) i FROM lsh a
-           JOIN rsh b ON a.s = b.s GROUP BY 1,2),
-         hits AS (SELECT DISTINCT a FROM inter
-           JOIN rsz ON rsz.doc_id = b WHERE i*1.0/rsz.sz >= 0.8)
-         SELECT doc_id FROM documents
-         WHERE doc_id NOT IN (SELECT a FROM hits) ORDER BY doc_id""",
-
-    "q20_haversine" ->
-      """WITH p AS (SELECT user_id, event_id,
-           -26.0 + value/100.0 AS lat, -48.0 + (event_id % 100)/100.0 AS lon,
-           lag(-26.0 + value/100.0) OVER w AS plat,
-           lag(-48.0 + (event_id % 100)/100.0) OVER w AS plon
-         FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id))
-         SELECT user_id, event_id, round(
-           6371.0 * 2 * asin(sqrt(
-             pow(sin(radians(lat - plat)/2), 2) +
-             cos(radians(plat)) * cos(radians(lat)) *
-             pow(sin(radians(lon - plon)/2), 2))), 6) AS dist_km
-         FROM p ORDER BY user_id, event_id"""
-  )
-
-  /** q25's exhaustive DuckDB oracle, generated (64 per-bit vote sums +
-    * the 60-bit packing Dedup.md5Hash60 can set). Recomputes every
-    * doc's simhash from scratch and scores ALL O(n²) pairs — the gate
-    * therefore asserts the banding misses nothing. */
-  /** One period's slice of the q75 oracle: the q65 decode + unify-clip
-    * + resample + gap-limited interpolation machinery parameterized by
-    * the bucket width (µs). The interpolation gap limit replicates
-    * lib/resampler.py:66 — max(1, 60 s / period) ticks. */
-  // ---- shared oracle fragments -------------------------------------
-  // Each CTE or clause that several oracles replay lives here once;
-  // the oracles splice it into their SQL.
-
-  /** The trigram LM oracles' backoff counts over toks' token lists:
-    * bigram context totals (c12), kept trigrams (c3 >= 2), bigram
-    * counts and their contexts (cb, cw), unigram counts and the token
-    * total. */
-  private def trigramBackoffCountsSql: String =
-    """c12 AS (SELECT w1, w2, CAST(sum(c3) AS BIGINT) c12 FROM c3all
-           GROUP BY 1, 2),
-         c3 AS (SELECT * FROM c3all WHERE c3 >= 2),
-         bg0 AS (SELECT unnest([{'u': tk[i], 'v': tk[i + 1]}
-               for i in generate_series(1, len(tk) - 1)]) AS b
-           FROM toks WHERE len(tk) >= 2),
-         cb AS (SELECT b.u AS w2, b.v AS w3, count(*) cb FROM bg0
-           GROUP BY 1, 2),
-         cw AS (SELECT w2, CAST(sum(cb) AS BIGINT) cw FROM cb GROUP BY 1),
-         uni AS (SELECT t AS w3, count(*) cu
-           FROM (SELECT unnest(tk) AS t FROM toks) GROUP BY 1),
-         tot AS (SELECT CAST(sum(cu) AS BIGINT) T FROM uni),"""
-
-  /** The exact-tier takedown oracles' inputs (q128, q139): every third
-    * doc accepted, a batch of accepted copies, novel docs and their
-    * repeats, each text's first arrival, and the accepted and
-    * taken-down text sets. */
-  private def exactTakedownBatchSql: String =
-    """WITH accepted AS (SELECT doc_id, text FROM documents WHERE doc_id % 3 = 0),
-         batch AS (
-           SELECT doc_id + 1000000 AS doc_id, text FROM accepted WHERE doc_id % 6 = 0
-           UNION ALL SELECT doc_id + 2000000, text FROM accepted WHERE doc_id % 6 = 3
-           UNION ALL SELECT doc_id + 3000000, text FROM documents WHERE doc_id % 3 = 1
-           UNION ALL SELECT doc_id + 3500000, text FROM documents
-             WHERE doc_id % 3 = 1 AND doc_id % 5 = 1),
-         firsts AS (
-           SELECT doc_id, text,
-             doc_id = min(doc_id) OVER (PARTITION BY text) AS is_first
-           FROM batch),
-         acc_texts AS (SELECT DISTINCT text FROM accepted),
-         tomb_texts AS (SELECT DISTINCT text FROM accepted WHERE doc_id % 6 = 0),"""
-
-  /** Shingle Jaccard closure over sh: set sizes, pair intersections,
-    * pairs at Jaccard >= 0.5, and their transitive closure (reach). */
-  private def shingleClosureSql: String =
-    """sizes AS (SELECT doc_id, count(*) sz FROM sh GROUP BY 1),
-         inter AS (SELECT a.doc_id a, b.doc_id b, count(*) i FROM sh a
-           JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id GROUP BY 1,2),
-         pairs AS (SELECT a, b FROM inter
-           JOIN sizes sa ON sa.doc_id = a JOIN sizes sb ON sb.doc_id = b
-           WHERE i*1.0/(sa.sz+sb.sz-i) >= 0.5),
-         edges AS (SELECT a x, b y FROM pairs UNION SELECT b, a FROM pairs),
-         reach AS (
-           WITH RECURSIVE r(x, y) AS (
-             SELECT x, y FROM edges
-             UNION
-             SELECT r.x, e.y FROM r JOIN edges e ON r.y = e.x)
-           SELECT x, y FROM r)"""
-
-  /** The engine's text normalization chain over column t (q106 and its
-    * reuse): typographic quotes, dashes and spaces folded, ellipses
-    * expanded, line endings unified, control and zero-width characters
-    * dropped, blank runs squeezed, and edge newlines trimmed. */
-  private def normalizeTextSql: String =
-    """trim(regexp_replace(regexp_replace(
-           regexp_replace(
-             regexp_replace(
-               regexp_replace(
-                 regexp_replace(
-                   translate(t,
-                     chr(8216) || chr(8217) || chr(8218) || chr(8220) ||
-                     chr(8221) || chr(8222) || chr(8211) || chr(8212) ||
-                     chr(8722) || chr(160),
-                     chr(39) || chr(39) || chr(39) || chr(34) ||
-                     chr(34) || chr(34) || '--- '),
-                 chr(8230), '...', 'g'),
-               '\r\n?', chr(10), 'g'),
-             '[\x00-\x08\x0B\x0C\x0E-\x1F\x7F\x{200B}\x{200C}\x{200D}\x{FEFF}]',
-             '', 'g'),
-           '[ \t]+', ' ', 'g'),"""
-
-  /** The release gate's metric rows (q102, q103): the diff counts and
-    * fractions of f, the three max-fraction thresholds and the pass
-    * decision. */
-  private def releaseGateRowsSql: String =
-    """SELECT 'diff:n_prev' AS metric, np AS value FROM f
-           UNION ALL SELECT 'diff:n_next', nn FROM f
-           UNION ALL SELECT 'diff:n_added', na FROM f
-           UNION ALL SELECT 'diff:n_removed', nr FROM f
-           UNION ALL SELECT 'diff:n_changed', nc FROM f
-           UNION ALL SELECT 'diff:n_unchanged', nu FROM f
-           UNION ALL SELECT 'diff:added_frac', af FROM f
-           UNION ALL SELECT 'diff:removed_frac', rf FROM f
-           UNION ALL SELECT 'diff:changed_frac', cf FROM f
-           UNION ALL SELECT 'gate:max_added_frac', 0.15 FROM f
-           UNION ALL SELECT 'gate:max_removed_frac', 0.15 FROM f
-           UNION ALL SELECT 'gate:max_changed_frac', 0.10 FROM f
-           UNION ALL SELECT 'gate:pass',
-             CASE WHEN af <= 0.15 AND rf <= 0.15 AND cf <= 0.10
-                  THEN 1.0 ELSE 0.0 END FROM f"""
-
-  /** Winnowing over `src`'s token lists `t` (4-gram md5 hashes, window
-    * 4, rightmost minimum): each `id`'s hash list in `hs` and its
-    * selected fingerprint positions in `sel`. */
-  private def winnowSql(src: String, id: String, hs: String,
-                        sel: String): String =
-    s"""$hs AS (SELECT $id,
-             [('0x' || substring(md5(array_to_string(t[p : p + 3], ' ')),
-                 1, 15))::BIGINT
-               for p in generate_series(1, greatest(len(t) - 3, 1))] AS h
-           FROM $src),
-         $sel AS (SELECT DISTINCT $id,
-             s - 1 + list_max([i for i in generate_series(1, len(sl))
-               if sl[i] = list_min(sl)]) AS pos
-           FROM (SELECT $id, h, least(4, len(h)) AS win FROM $hs) x,
-             LATERAL (SELECT unnest(generate_series(1, len(h) - win + 1))
-               AS s),
-             LATERAL (SELECT h[s : s + win - 1] AS sl)),"""
-
-  /** The incremental-dedup batch: odd docs plus two appended-tail
-    * strata of every 14th doc, tokenized into 3-word shingles (bsh). */
-  private def decontamBatchSql: String =
-    """batch AS (
-           SELECT doc_id, lower(trim(text)) tx
-           FROM documents WHERE doc_id % 2 = 1
-           UNION ALL
-           SELECT doc_id + 1000000, lower(trim(text || ' xyzzy qbf'))
-           FROM documents WHERE doc_id % 14 = 0
-           UNION ALL
-           SELECT doc_id + 2000000, lower(trim(text || ' plugh tail'))
-           FROM documents WHERE doc_id % 14 = 7),
-         bt AS (SELECT doc_id, regexp_split_to_array(tx, '\s+') t FROM batch),
-         bsh AS (SELECT DISTINCT doc_id, array_to_string(t[i:i+3], ' ') s
-           FROM bt, LATERAL (SELECT unnest(generate_series(1,
-             greatest(len(t)-3, 1))) AS i)),
-         ot AS (SELECT doc_id, regexp_split_to_array(tx, '\s+') t FROM olds),"""
-
-  /** The ANN takedown oracles' brute force: perturbed first-10 queries
-    * against the corpus (s) and each query's top-1 before any
-    * takedown (pre). */
-  private def annTakedownSql: String =
-    """s AS (SELECT query_id, c.vec_id AS neighbor_id,
-             list_dot_product(qv, c.v) /
-               (sqrt(list_dot_product(qv, qv)) * sqrt(list_dot_product(c.v, c.v)))
-               AS cos_raw
-           FROM q CROSS JOIN corpus c),
-         pre AS (SELECT query_id, neighbor_id AS pre_top1 FROM (
-             SELECT query_id, neighbor_id, row_number() OVER (PARTITION BY query_id
-               ORDER BY cos_raw DESC, neighbor_id) AS rn FROM s) WHERE rn = 1),"""
-
-  /** Brute-force cosine of the ANN recall oracles: the first 10
-    * embeddings, perturbed (x * 1.001 + 0.0005), as queries against
-    * every corpus vector. */
-  private def bruteCosineSql: String =
-    """q AS (SELECT vec_id + 10000 AS query_id,
-             list_transform(v, x -> x * 1.001 + 0.0005) AS qv
-           FROM c WHERE vec_id < 10),
-         s AS (SELECT query_id, c.vec_id AS neighbor_id,
-             list_dot_product(qv, c.v) /
-               (sqrt(list_dot_product(qv, qv)) * sqrt(list_dot_product(c.v, c.v)))
-               AS cos_raw
-           FROM q CROSS JOIN c),
-         r AS (SELECT query_id, neighbor_id, row_number() OVER
-             (PARTITION BY query_id ORDER BY cos_raw DESC, neighbor_id) AS rank"""
-
-  /** The cosine near-duplicate pairs of the vector dedup oracles
-    * (pairs of c at cosine >= 0.9) and their transitive closure. */
-  private def vectorComponentsSql: String =
-    """s AS (SELECT a.vec_id a, b.vec_id b FROM c a
-           JOIN c b ON a.vec_id < b.vec_id
-           WHERE list_dot_product(a.v, b.v) /
-             (sqrt(list_dot_product(a.v, a.v)) *
-              sqrt(list_dot_product(b.v, b.v))) >= 0.9),
-         edges AS (SELECT a x, b y FROM s UNION SELECT b, a FROM s),
-         reach AS (
-           WITH RECURSIVE r(x, y) AS (
-             SELECT x, y FROM edges
-             UNION
-             SELECT r.x, e.y FROM r JOIN edges e ON r.y = e.x)
-           SELECT x, y FROM r),"""
-
-  /** The text cascades' arrival strata (the four- and five-tier
-    * cascade oracles): exact copies, appended-tail edits,
-    * word-reversed copies, novel base docs, and the empty, null and
-    * too-short payloads, with each arrival's quality flag. */
-  private def cascadeArrivalsSql: String =
-    """arr AS (
-           SELECT doc_id + 400000 AS doc_id, text FROM acc
-           WHERE doc_id % 20 = 0
-           UNION ALL SELECT doc_id + 500000, text || ' xyzzy qbf'
-           FROM acc WHERE doc_id % 20 = 4
-           UNION ALL SELECT doc_id + 600000,
-             array_to_string(list_reverse(list_filter(
-               regexp_split_to_array(trim(text), '\s+'), t -> t != '')), ' ')
-           FROM acc WHERE doc_id % 20 = 8
-           UNION ALL SELECT doc_id + 700000, text FROM base
-           WHERE doc_id % 20 = 1
-           UNION ALL SELECT doc_id, text FROM (VALUES (900001, ''),
-             (900002, NULL), (900003, 'too short')) t(doc_id, text)),
-         qual AS (SELECT doc_id,
-           coalesce(length(trim(text)) >= 20 AND
-             length(regexp_replace(text, '[A-Za-z0-9\s]', '', 'g'))
-               <= 0.3 * length(text), FALSE) AS qok
-           FROM arr),"""
-
-  /** The streamed ANN admission oracle (q120 broadcast probe, q152
-    * batched durable-index search): near-copies of every third vector
-    * against the accepted thirds, brute-force cosine argmax and tau
-    * 0.9. */
-  private def annAdmissionOracleSql: String =
-    """WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-         acc AS (SELECT * FROM e WHERE vec_id % 3 = 0),
-         cand AS (SELECT c.vec_id,
-             CASE WHEN c.vec_id % 3 = 1 AND src.v IS NOT NULL
-               THEN list_transform(src.v, x -> x * 1.001 + 0.0005)
-               ELSE c.v END AS v
-           FROM e c LEFT JOIN e src ON src.vec_id = c.vec_id - 1
-           WHERE c.vec_id % 3 <> 0),
-         s AS (SELECT cand.vec_id, acc.vec_id AS aid,
-             list_dot_product(cand.v, acc.v) /
-               (sqrt(list_dot_product(cand.v, cand.v)) *
-                sqrt(list_dot_product(acc.v, acc.v))) AS cos_raw
-           FROM cand CROSS JOIN acc),
-         r AS (SELECT vec_id, aid, cos_raw, row_number() OVER
-             (PARTITION BY vec_id ORDER BY cos_raw DESC, aid) AS rk
-           FROM s)
-         SELECT vec_id, cos_raw < 0.9 AS admitted,
-           CASE WHEN cos_raw >= 0.9 THEN aid END AS match_id
-         FROM r WHERE rk = 1
-         ORDER BY vec_id"""
-
-  /** The dead-letter ingest oracle (q142 appends, q146 idempotent
-    * sink): argmin dHash admission for the healthy route and the
-    * deterministic reason rows for the quarantined one. */
-  private def quarantineOracleSql: String =
-    """WITH refs AS (
-           SELECT i AS ref_id, i AS src, 0 AS shift FROM range(1, 9) t(i)),
-         arrivals AS (
-           SELECT 500 + i AS media_id, i AS src, 0 AS shift FROM range(1, 4) t(i)
-           UNION ALL SELECT 500 + i, i, 0 FROM range(21, 23) t(i)),
-         """ + refDhashSql + """
-         best AS (
-           SELECT s.media_id,
-             min_by(r.ref_id,
-               bit_count(xor(s.dhash, r.sig))::BIGINT * 1000 + r.ref_id)
-               AS match_id
-           FROM ah s JOIN rh r ON bit_count(xor(s.dhash, r.sig)) <= 6
-           GROUP BY s.media_id)
-         SELECT a.media_id, 'main' AS routed, a.dhash,
-           b.match_id IS NULL AS admitted, b.match_id,
-           NULL::VARCHAR AS reason
-         FROM ah a LEFT JOIN best b USING (media_id)
-         UNION ALL
-         SELECT media_id, 'quarantine', NULL::BIGINT, NULL::BOOLEAN,
-           NULL::BIGINT, reason
-         FROM (VALUES (9001, 'undecodable'), (9002, 'empty_payload'),
-           (9003, 'null_payload')) t(media_id, reason)
-         ORDER BY media_id"""
-
-  /** The season oracles' solar join (q65 with the forecast columns
-    * `cols`, q73 with POA only): the cumulative POA energy, the 3-hour
-    * cutoff, each telemetry minute's 5-minute forecast slot, and the
-    * linear interpolation of `cols`, POA and energy inside it. */
-  private def seasonSolarSql(cols: Seq[String]): String = {
-    val lerp = (cols :+ "poa" :+ "energy").map(c =>
-      s"a.$c + (coalesce(b.$c, a.$c) - a.$c) * p.frac $c")
-    s"""fen AS (SELECT t, ${cols.map(_ + ", ").mkString}poa,
-             coalesce(sum((poa + ppoa) / 2.0 *
-               (CAST(epoch_us(t) - epoch_us(plt) AS DOUBLE)
-                 / 3600000000.0)) OVER
-               (ORDER BY t ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW),
-             0.0) energy
-           FROM fen0),
-         cutoff AS (SELECT max(ts) - INTERVAL 3 HOUR c FROM rs),
-         solp AS (SELECT r.ts,
-             CASE WHEN r.ts >= TIMESTAMP '2024-01-10 16:00:00'
-               THEN TIMESTAMP '2024-01-10 16:00:00'
-               ELSE make_timestamp(epoch_us(TIMESTAMP '2024-01-10 11:00:00')
-                 + ((epoch_us(r.ts) - epoch_us(TIMESTAMP '2024-01-10 11:00:00'))
-                    // 300000000) * 300000000) END pt
-           FROM rs r
-           WHERE r.ts >= TIMESTAMP '2024-01-10 11:00:00'
-             AND r.ts <= (SELECT c FROM cutoff)),
-         soli AS (SELECT p.ts, p.pt,
-             CASE WHEN p.ts >= TIMESTAMP '2024-01-10 16:00:00' THEN 0.0
-               ELSE CAST(epoch_us(p.ts) - epoch_us(p.pt) AS DOUBLE)
-                 / 300000000.0 END frac
-           FROM solp p),
-         sol AS (SELECT p.ts,
-             ${lerp.mkString(",\n             ")}
-           FROM soli p JOIN fen a ON a.t = p.pt
-           LEFT JOIN fen b ON b.t = p.pt + INTERVAL 300 SECOND),"""
-  }
-
-  /** The release-diff counts of q102/q103: each doc's
-    * added/removed/changed/unchanged status of the next corpus n
-    * against the previous one p, and the status totals. */
-  private def releaseDiffSql: String =
-    """d AS (
-           SELECT CASE WHEN p.doc_id IS NULL THEN 'added'
-                       WHEN n.doc_id IS NULL THEN 'removed'
-                       WHEN p.text IS NOT DISTINCT FROM n.text THEN 'unchanged'
-                       ELSE 'changed' END AS status
-           FROM p FULL OUTER JOIN n ON p.doc_id = n.doc_id
-         ),
-         c AS (SELECT
-           CAST(sum(CASE WHEN status = 'added' THEN 1 ELSE 0 END) AS DOUBLE) AS na,
-           CAST(sum(CASE WHEN status = 'removed' THEN 1 ELSE 0 END) AS DOUBLE) AS nr,
-           CAST(sum(CASE WHEN status = 'changed' THEN 1 ELSE 0 END) AS DOUBLE) AS nc,
-           CAST(sum(CASE WHEN status = 'unchanged' THEN 1 ELSE 0 END) AS DOUBLE) AS nu
-           FROM d),
-         w AS (SELECT na, nr, nc, nu,
-           nr + nc + nu AS np, na + nc + nu AS nn FROM c),"""
-
-  /** The 3-word shingle overlap of the decontamination oracles: the
-    * accepted docs' shingle set (osh) beside the batch's (bsh), both
-    * set sizes, and every batch/accepted pair's intersection (hx). */
-  private def shingleOverlapSql: String =
-    """osh AS (SELECT DISTINCT doc_id, array_to_string(t[i:i+3], ' ') s
-           FROM ot, LATERAL (SELECT unnest(generate_series(1,
-             greatest(len(t)-3, 1))) AS i)),
-         bsz AS (SELECT doc_id, count(*) sz FROM bsh GROUP BY 1),
-         osz AS (SELECT doc_id, count(*) sz FROM osh GROUP BY 1),
-         hx AS (SELECT b.doc_id bid, o.doc_id oid, count(*) i
-           FROM bsh b JOIN osh o ON b.s = o.s GROUP BY 1, 2),"""
-
-  /** The batch's own near-duplicate components: batch pairs at shingle
-    * Jaccard >= 0.5, their transitive closure, and each doc's
-    * component (the smallest doc id reachable). */
-  private def batchComponentsSql: String =
-    """wx AS (SELECT a.doc_id a, b.doc_id b, count(*) i FROM bsh a
-           JOIN bsh b ON a.s = b.s AND a.doc_id < b.doc_id GROUP BY 1, 2),
-         wpairs AS (SELECT a, b FROM wx
-           JOIN bsz sa ON sa.doc_id = a JOIN bsz sb ON sb.doc_id = b
-           WHERE i*1.0/(sa.sz + sb.sz - i) >= 0.5),
-         edges AS (SELECT a x, b y FROM wpairs UNION SELECT b, a FROM wpairs),
-         reach AS (
-           WITH RECURSIVE r(x, y) AS (
-             SELECT x, y FROM edges
-             UNION
-             SELECT r.x, e.y FROM r JOIN edges e ON r.y = e.x)
-           SELECT x, y FROM r),
-         comp AS (SELECT x AS doc_id, least(x, min(y)) AS comp
-           FROM reach GROUP BY x),"""
-
-  /** The signed-feature cosine of the semantic text tiers: lower-cased
-    * whitespace tokens hashed into 64 signed md5 buckets per doc (zero
-    * buckets dropped), doc norms, and the cosine of every arrival
-    * against every accepted doc sharing a bucket (cosr). */
-  private def simhashCosineSql: String =
-    """toks AS (SELECT is_acc, doc_id,
-           unnest(list_filter(regexp_split_to_array(lower(trim(text)), '\s+'),
-             t -> t != '')) AS t
-           FROM alltexts),
-         vecs AS (SELECT is_acc, doc_id,
-           ('0x' || substring(md5(t), 1, 15))::BIGINT % 64 AS b,
-           sum(CASE WHEN (('0x' || substring(md5(t), 1, 15))::BIGINT // 64) % 2 = 0
-             THEN 1.0 ELSE -1.0 END) AS v
-           FROM toks GROUP BY 1, 2, 3
-           HAVING sum(CASE WHEN (('0x' || substring(md5(t), 1, 15))::BIGINT // 64) % 2 = 0
-             THEN 1.0 ELSE -1.0 END) != 0),
-         norms AS (SELECT is_acc, doc_id, sqrt(sum(v * v)) AS n
-           FROM vecs GROUP BY 1, 2),
-         dots AS (SELECT q.doc_id AS doc_id, c.doc_id AS acc_id,
-             sum(q.v * c.v) AS dp
-           FROM vecs q JOIN vecs c
-             ON q.b = c.b AND q.is_acc = 0 AND c.is_acc = 1
-           GROUP BY 1, 2),
-         cosr AS (SELECT d.doc_id, d.acc_id,
-             d.dp / (qn.n * cn.n) AS cosv
-           FROM dots d
-             JOIN norms qn ON qn.doc_id = d.doc_id AND qn.is_acc = 0
-             JOIN norms cn ON cn.doc_id = d.acc_id AND cn.is_acc = 1),"""
-
-  /** The blind-rate window of the LR/DSIR fitted-table oracles: each
-    * scored feature's bucket against the known buckets before
-    * (`known_a`) and after (`known_b`) a refit, and the two chained
-    * window decisions at the 0.2 threshold. */
-  private def blindWindowSql: String =
-    """soccs AS (SELECT
-             ('0x' || substring(md5(feat), 1, 15))::BIGINT % 65536 AS b
-           FROM fdr WHERE feat <> ''),
-         pre AS (SELECT count(*) AS n,
-             sum(CASE WHEN k.b IS NULL THEN 1 ELSE 0 END)::BIGINT
-               AS blind
-           FROM soccs s LEFT JOIN known_a k ON k.b = s.b),
-         post AS (SELECT
-             sum(CASE WHEN k.b IS NULL THEN 1 ELSE 0 END)::BIGINT
-               AS blind
-           FROM soccs s LEFT JOIN known_b k ON k.b = s.b),
-         c1 AS (SELECT pre.n, pre.blind AS pre_blind,
-             pre.blind > 0.2 * pre.n AS f1,
-             CASE WHEN pre.blind > 0.2 * pre.n THEN post.blind
-               ELSE pre.blind END AS post1
-           FROM pre CROSS JOIN post),
-         c2 AS (SELECT c1.n, c1.post1 AS pre_blind,
-             c1.post1 > 0.2 * c1.n AS f2,
-             CASE WHEN c1.post1 > 0.2 * c1.n THEN post.blind
-               ELSE c1.post1 END AS post2
-           FROM c1 CROSS JOIN post)
-         SELECT 1::BIGINT AS step, n AS n_sample_feats,
-           pre_blind AS pre_blind_feats, f1 AS refit_fired,
-           post1 AS post_blind_feats, f1 AS epoch_changed
-         FROM c1
-         UNION ALL
-         SELECT 2::BIGINT, n, pre_blind, f2, post2, f2 FROM c2"""
-
-  /** The media cascades' perceptual inputs (q159, q167, q168): the
-    * planted refs and arrival strata, the refs-1..6 dHash window (rh)
-    * and the arrivals' dHash (ah), both pixel formulas on the 9x8
-    * gradient grid. */
-  private def mediaCascadeDhashSql: String =
-    """WITH refs AS (SELECT i AS ref_id, i AS src, 0 AS shift
-           FROM range(1, 11) t(i)),
-         arr AS (
-           SELECT 500 + i AS media_id, i AS src, 0 AS shift,
-             'sig' AS kind FROM range(1, 4) t(i)
-           UNION ALL SELECT 510 + i, i, 4, 'sig' FROM range(1, 4) t(i)
-           UNION ALL SELECT 520 + i, i, 0, 'sig' FROM range(7, 10) t(i)
-           UNION ALL SELECT 530 + i, i, 0, 'novel' FROM range(1, 4) t(i)),
-         rg AS (SELECT ref_id, gy, gx,
-             (src*31 + (gx*16//9)*(11 + src % 7) + (gy*12//8)*29
-               + (gx*16//9)*(gy*12//8)*(1 + src % 3) + shift) % 256 AS v
-           FROM refs, range(0, 8) t1(gy), range(0, 9) t2(gx)
-           WHERE ref_id <= 6),
-         rh AS (SELECT a.ref_id,
-             bit_or(CASE WHEN b.v > a.v THEN
-                 CASE WHEN a.gy*8 + a.gx = 63 THEN -9223372036854775807 - 1
-                   ELSE 1::BIGINT << (a.gy*8 + a.gx) END
-               ELSE 0::BIGINT END) AS sig
-           FROM rg a JOIN rg b ON a.ref_id = b.ref_id
-             AND b.gy = a.gy AND b.gx = a.gx + 1
-           WHERE a.gx < 8 GROUP BY a.ref_id),
-         ag AS (SELECT media_id, gy, gx,
-             CASE WHEN kind = 'novel' THEN
-               (src*53 + (gx*16//9)*29 + (gy*12//8)*7
-                 + (gx*16//9)*(gy*12//8)*2 + 101) % 256
-             ELSE
-               (src*31 + (gx*16//9)*(11 + src % 7) + (gy*12//8)*29
-                 + (gx*16//9)*(gy*12//8)*(1 + src % 3) + shift) % 256
-             END AS v
-           FROM arr, range(0, 8) t1(gy), range(0, 9) t2(gx)),
-         ah AS (SELECT a.media_id,
-             bit_or(CASE WHEN b.v > a.v THEN
-                 CASE WHEN a.gy*8 + a.gx = 63 THEN -9223372036854775807 - 1
-                   ELSE 1::BIGINT << (a.gy*8 + a.gx) END
-               ELSE 0::BIGINT END) AS dhash"""
-
-  /** The media cascades' vector tier (q159, q167, q168): both pixel
-    * formulas on the 8x8 embed lattice, integer-exact dots and cosine
-    * norms (the caller ranks cosr). */
-  private def mediaCascadeEmbedSql: String =
-    """re AS (SELECT ref_id, gy*8 + gx AS i,
-             (src*31 + (gx*16//8)*(11 + src % 7) + (gy*12//8)*29
-               + (gx*16//8)*(gy*12//8)*(1 + src % 3) + shift) % 256 AS v
-           FROM refs, range(0, 8) a(gy), range(0, 8) b(gx)),
-         ae AS (SELECT media_id, gy*8 + gx AS i,
-             CASE WHEN kind = 'novel' THEN
-               (src*53 + (gx*16//8)*29 + (gy*12//8)*7
-                 + (gx*16//8)*(gy*12//8)*2 + 101) % 256
-             ELSE
-               (src*31 + (gx*16//8)*(11 + src % 7) + (gy*12//8)*29
-                 + (gx*16//8)*(gy*12//8)*(1 + src % 3) + shift) % 256
-             END AS v
-           FROM arr, range(0, 8) a(gy), range(0, 8) b(gx)),
-         dots AS (SELECT a.media_id, r.ref_id, sum(a.v * r.v) AS dp
-           FROM ae a JOIN re r ON a.i = r.i GROUP BY 1, 2),
-         an AS (SELECT media_id, sqrt(sum(v*v)) AS n FROM ae GROUP BY 1),
-         rn2 AS (SELECT ref_id, sqrt(sum(v*v)) AS n FROM re GROUP BY 1),
-         cosr AS (SELECT d.media_id, d.ref_id, d.dp / (an.n * rn2.n) AS cosv
-           FROM dots d JOIN an USING (media_id) JOIN rn2 USING (ref_id)),"""
-
-  /** Both sides of the dHash admission oracles (q126, q134, q137,
-    * q142, q146): the planted pixel formula on the 9x8 gradient grid
-    * and the packed row-gradient bits of every ref (`rh.sig`) and every
-    * arrival (`ah.dhash`). */
-  private def refDhashSql: String =
-    """rg AS (
-           SELECT ref_id, gy, gx,
-             (src*31 + (gx*16//9)*(11 + src % 7) + (gy*12//8)*29
-               + (gx*16//9)*(gy*12//8)*(1 + src % 3) + shift) % 256 AS v
-           FROM refs, range(0, 8) t1(gy), range(0, 9) t2(gx)),
-         rh AS (
-           SELECT a.ref_id,
-             bit_or(CASE WHEN b.v > a.v THEN
-                 CASE WHEN a.gy*8 + a.gx = 63 THEN -9223372036854775807 - 1
-                   ELSE 1::BIGINT << (a.gy*8 + a.gx) END
-               ELSE 0::BIGINT END) AS sig
-           FROM rg a JOIN rg b ON a.ref_id = b.ref_id
-             AND b.gy = a.gy AND b.gx = a.gx + 1
-           WHERE a.gx < 8 GROUP BY a.ref_id),
-         ag AS (
-           SELECT media_id, gy, gx,
-             (src*31 + (gx*16//9)*(11 + src % 7) + (gy*12//8)*29
-               + (gx*16//9)*(gy*12//8)*(1 + src % 3) + shift) % 256 AS v
-           FROM arrivals, range(0, 8) t1(gy), range(0, 9) t2(gx)),
-         ah AS (
-           SELECT a.media_id,
-             bit_or(CASE WHEN b.v > a.v THEN
-                 CASE WHEN a.gy*8 + a.gx = 63 THEN -9223372036854775807 - 1
-                   ELSE 1::BIGINT << (a.gy*8 + a.gx) END
-               ELSE 0::BIGINT END) AS dhash
-           FROM ag a JOIN ag b ON a.media_id = b.media_id
-             AND b.gy = a.gy AND b.gx = a.gx + 1
-           WHERE a.gx < 8 GROUP BY a.media_id),"""
-
-  /** The audio-embedding oracle (q150 batch, q151 streamed): PCM
-    * formula, channel mix, k*frames div 64 window energies, cosine
-    * argmax and tau 0.95; corrupt and short clips admit. */
-  private def audioEmbedOracleSql: String =
-    """WITH refs AS (SELECT i AS ref_id, i AS src,
-             CASE WHEN i <= 4 THEN 1 ELSE 2 END AS ch, 1 AS scale
-           FROM range(1, 9) t(i)),
-         arr AS (
-           SELECT 500 + i AS media_id, i AS src,
-             CASE WHEN i <= 4 THEN 1 ELSE 2 END AS ch, 1 AS scale
-           FROM range(1, 5) t(i)
-           UNION ALL SELECT 510 + i, i, 2, 2 FROM range(5, 9) t(i)
-           UNION ALL SELECT 520 + i, 20 + i, 1, 1 FROM range(1, 4) t(i)),
-         rmix AS (SELECT ref_id, i,
-             sum((((src*2654435761 + i*i*40503 + i*977 + c*997) % 128)
-               - 64) * scale) AS m
-           FROM refs, range(0, 200) s(i), range(0, 2) cc(c)
-           WHERE c < ch GROUP BY 1, 2),
-         re AS (SELECT ref_id, k, sum(m*m) AS e
-           FROM rmix, range(0, 64) w(k)
-           WHERE i >= k*200//64 AND i < (k+1)*200//64 GROUP BY 1, 2),
-         amix AS (SELECT media_id, i,
-             sum((((src*2654435761 + i*i*40503 + i*977 + c*997) % 128)
-               - 64) * scale) AS m
-           FROM arr, range(0, 200) s(i), range(0, 2) cc(c)
-           WHERE c < ch GROUP BY 1, 2),
-         ae AS (SELECT media_id, k, sum(m*m) AS e
-           FROM amix, range(0, 64) w(k)
-           WHERE i >= k*200//64 AND i < (k+1)*200//64 GROUP BY 1, 2),
-         dots AS (SELECT a.media_id, r.ref_id, sum(a.e * r.e) AS dp
-           FROM ae a JOIN re r ON a.k = r.k GROUP BY 1, 2),
-         an AS (SELECT media_id, sqrt(sum(e*e)) AS n FROM ae GROUP BY 1),
-         rn AS (SELECT ref_id, sqrt(sum(e*e)) AS n FROM re GROUP BY 1),
-         cosr AS (SELECT d.media_id, d.ref_id, d.dp / (an.n * rn.n) AS cosv
-           FROM dots d JOIN an USING (media_id) JOIN rn USING (ref_id)),
-         best AS (SELECT media_id, ref_id, cosv FROM (
-           SELECT media_id, ref_id, cosv, row_number() OVER
-             (PARTITION BY media_id ORDER BY cosv DESC, ref_id) AS rk
-           FROM cosr) WHERE rk = 1)
-         SELECT m.media_id,
-           coalesce(b.cosv < 0.95, TRUE) AS admitted,
-           CASE WHEN b.cosv >= 0.95 THEN b.ref_id END AS match_id
-         FROM (SELECT media_id FROM arr UNION ALL SELECT 9001
-               UNION ALL SELECT 9002 UNION ALL SELECT 9003) m
-         LEFT JOIN best b USING (media_id)
-         ORDER BY media_id"""
-
-  /** The image-embedding oracle (q148 batch, q149 streamed): pixel
-    * formulas, gray luma (= v), the 8x8 embed lattice, integer-exact
-    * dots, cosine argmax (ties to the smaller ref) and tau 0.9; corrupt
-    * and null payloads admit. */
-  private def imageEmbedOracleSql: String =
-    """WITH refs AS (SELECT i AS ref_id, i AS src FROM range(1, 11) t(i)),
-         arr AS (
-           SELECT 500 + i AS media_id, i AS src, 'copy' AS kind
-           FROM range(1, 6) t(i)
-           UNION ALL SELECT 510 + i, i, 'gain' FROM range(1, 6) t(i)
-           UNION ALL SELECT 520 + i, i, 'novel' FROM range(1, 4) t(i)),
-         rg AS (SELECT ref_id, gy*8 + gx AS i,
-             (src*31 + (gx*16//8)*(11 + src % 7) + (gy*12//8)*29
-               + (gx*16//8)*(gy*12//8)*(1 + src % 3)) % 256 AS v
-           FROM refs, range(0, 8) a(gy), range(0, 8) b(gx)),
-         ag AS (SELECT media_id, gy*8 + gx AS i,
-             CASE kind
-               WHEN 'novel' THEN (src*53 + (gx*16//8)*29 + (gy*12//8)*7
-                 + (gx*16//8)*(gy*12//8)*2 + 101) % 256
-               WHEN 'gain' THEN (9 * ((src*31 + (gx*16//8)*(11 + src % 7)
-                 + (gy*12//8)*29
-                 + (gx*16//8)*(gy*12//8)*(1 + src % 3)) % 256)) // 10
-               ELSE (src*31 + (gx*16//8)*(11 + src % 7) + (gy*12//8)*29
-                 + (gx*16//8)*(gy*12//8)*(1 + src % 3)) % 256
-             END AS v
-           FROM arr, range(0, 8) a(gy), range(0, 8) b(gx)),
-         dots AS (SELECT a.media_id, r.ref_id, sum(a.v * r.v) AS dp
-           FROM ag a JOIN rg r ON a.i = r.i GROUP BY 1, 2),
-         an AS (SELECT media_id, sqrt(sum(v*v)) AS n FROM ag GROUP BY 1),
-         rn AS (SELECT ref_id, sqrt(sum(v*v)) AS n FROM rg GROUP BY 1),
-         cosr AS (SELECT d.media_id, d.ref_id, d.dp / (an.n * rn.n) AS cosv
-           FROM dots d JOIN an USING (media_id) JOIN rn USING (ref_id)),
-         best AS (SELECT media_id, ref_id, cosv FROM (
-           SELECT media_id, ref_id, cosv, row_number() OVER
-             (PARTITION BY media_id ORDER BY cosv DESC, ref_id) AS rk
-           FROM cosr) WHERE rk = 1)
-         SELECT m.media_id,
-           coalesce(b.cosv < 0.9, TRUE) AS admitted,
-           CASE WHEN b.cosv >= 0.9 THEN b.ref_id END AS match_id
-         FROM (SELECT media_id FROM arr
-               UNION ALL SELECT 9001 UNION ALL SELECT 9002) m
-         LEFT JOIN best b USING (media_id)
-         ORDER BY media_id"""
-
-  /** The video-embedding oracle (q153 batch, q154 streamed): per-frame
-    * pixel formulas into the 8x8 lattice, sum-pooled across frames (the
-    * dropped-first-frame stratum skips f = 0), cosine argmax and tau
-    * 0.98; torn, garbage and empty payloads admit. */
-  private def videoEmbedOracleSql: String =
-    """WITH refs AS (SELECT i AS ref_id, i AS src, 0 AS bright,
-             0 AS drop0 FROM range(1, 7) t(i)),
-         arr AS (
-           SELECT 500 + i AS media_id, i AS src, 4 AS bright, 0 AS drop0
-           FROM range(1, 4) t(i)
-           UNION ALL SELECT 510 + i, i, 0, 1 FROM range(1, 4) t(i)
-           UNION ALL SELECT 520 + i, 20 + i, 0, 0 FROM range(1, 4) t(i)),
-         rcell AS (SELECT ref_id, gy*8 + gx AS i, sum(
-             CASE WHEN f < 6 THEN
-               (src*37 + (gx*16//8)*(11 + src % 7) + (gy*12//8)*23
-                 + (gx*16//8)*(gy*12//8)*(1 + src % 3)) % 200
-             ELSE
-               (src*53 + (gx*16//8)*29 + (gy*12//8)*7
-                 + (gx*16//8)*(gy*12//8)*2 + 101) % 200
-             END + bright) AS v
-           FROM refs, range(0, 8) ff(f), range(0, 8) a(gy),
-             range(0, 8) b(gx)
-           GROUP BY 1, 2),
-         acell AS (SELECT media_id, gy*8 + gx AS i, sum(
-             CASE WHEN f < 6 THEN
-               (src*37 + (gx*16//8)*(11 + src % 7) + (gy*12//8)*23
-                 + (gx*16//8)*(gy*12//8)*(1 + src % 3)) % 200
-             ELSE
-               (src*53 + (gx*16//8)*29 + (gy*12//8)*7
-                 + (gx*16//8)*(gy*12//8)*2 + 101) % 200
-             END + bright) AS v
-           FROM arr, range(0, 8) ff(f), range(0, 8) a(gy),
-             range(0, 8) b(gx)
-           WHERE f >= drop0
-           GROUP BY 1, 2),
-         dots AS (SELECT a.media_id, r.ref_id, sum(a.v * r.v) AS dp
-           FROM acell a JOIN rcell r ON a.i = r.i GROUP BY 1, 2),
-         an AS (SELECT media_id, sqrt(sum(v*v)) AS n FROM acell
-           GROUP BY 1),
-         rn AS (SELECT ref_id, sqrt(sum(v*v)) AS n FROM rcell
-           GROUP BY 1),
-         cosr AS (SELECT d.media_id, d.ref_id, d.dp / (an.n * rn.n) AS cosv
-           FROM dots d JOIN an USING (media_id) JOIN rn USING (ref_id)),
-         best AS (SELECT media_id, ref_id, cosv FROM (
-           SELECT media_id, ref_id, cosv, row_number() OVER
-             (PARTITION BY media_id ORDER BY cosv DESC, ref_id) AS rk
-           FROM cosr) WHERE rk = 1)
-         SELECT m.media_id,
-           coalesce(b.cosv < 0.98, TRUE) AS admitted,
-           CASE WHEN b.cosv >= 0.98 THEN b.ref_id END AS match_id
-         FROM (SELECT media_id FROM arr UNION ALL SELECT 9001
-               UNION ALL SELECT 9002 UNION ALL SELECT 9003) m
-         LEFT JOIN best b USING (media_id)
-         ORDER BY media_id"""
-
-  /** The season oracles' resample (q65, q73, q75): the dense (signal,
-    * bin) grid left-joined to the bins and the interior
-    * time-interpolation across gaps up to `gapUs`. */
-  private def seasonInterpSql(gapUs: Long): String =
-    s"""dense AS (SELECT grid.signal, grid.b, binned.v
-           FROM grid LEFT JOIN binned USING (signal, b)),
-         selx AS (SELECT signal, b, v,
-             last_value(v IGNORE NULLS) OVER wp pv,
-             first_value(v IGNORE NULLS) OVER wn nv,
-             last_value(CASE WHEN v IS NOT NULL THEN b END IGNORE NULLS)
-               OVER wp pt,
-             first_value(CASE WHEN v IS NOT NULL THEN b END IGNORE NULLS)
-               OVER wn nt
-           FROM dense WINDOW
-             wp AS (PARTITION BY signal ORDER BY b
-                    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW),
-             wn AS (PARTITION BY signal ORDER BY b
-                    ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING)),
-         resam AS (SELECT signal, b, CASE WHEN v IS NOT NULL THEN v
-             WHEN pv IS NOT NULL AND nv IS NOT NULL
-               AND epoch_us(b) - epoch_us(pt) <= $gapUs THEN
-               pv + (nv - pv) * (CAST(epoch_us(b) - epoch_us(pt) AS DOUBLE)
-                 / CAST(epoch_us(nt) - epoch_us(pt) AS DOUBLE))
-             END val FROM selx)"""
-
-  /** The season oracles' forecast (q65, q73): the 5-minute irradiance
-    * grid, the NREL solar-position chain with refraction,
-    * plane-of-array irradiance, the race-window slice and the lagged
-    * POA for the energy integral. */
-  private def seasonForecastSql: String =
-    """fc AS (SELECT t, (epoch_us(t) -
-             epoch_us(TIMESTAMP '2024-01-10 10:00:00')) // 300000000 i
-           FROM (SELECT unnest(generate_series(
-             TIMESTAMP '2024-01-10 10:00:00', TIMESTAMP '2024-01-10 17:00:00',
-             INTERVAL 300 SECOND)) t)),
-         fcv AS (SELECT t,
-             500.0 + (i % 7) * 20.0 dni, 300.0 + (i % 5) * 10.0 ghi,
-             100.0 + (i % 3) * 5.0 dhi, 1.5 + (i % 4) * 0.125 airmass,
-             0.06 albedo FROM fc),
-         sp1 AS (SELECT *,
-             CAST(epoch_us(t + INTERVAL 150 SECOND) AS DOUBLE)
-               / 86400000000.0 + 2440587.5 - 2451545.0 AS n,
-             (CAST(epoch_us(t + INTERVAL 150 SECOND) AS DOUBLE)
-               / 3600000000.0) % 24.0 AS hr
-           FROM fcv),
-         sp2 AS (SELECT *,
-             2.1429 - 0.0010394594 * n AS omega,
-             4.8950630 + 0.017202791698 * n AS mlon,
-             6.2400600 + 0.0172019699 * n AS manom FROM sp1),
-         sp3 AS (SELECT *,
-             mlon + 0.03341607 * sin(manom) + 0.00034894 * sin(2.0 * manom)
-               - 0.0001134 - 0.0000203 * sin(omega) AS elon,
-             0.4090928 - 6.2140e-9 * n + 0.0000396 * cos(omega) AS eobl
-           FROM sp2),
-         sp4 AS (SELECT *,
-             CASE WHEN atan2(cos(eobl) * sin(elon), cos(elon)) < 0
-                  THEN atan2(cos(eobl) * sin(elon), cos(elon)) + 2 * pi()
-                  ELSE atan2(cos(eobl) * sin(elon), cos(elon)) END AS ra,
-             asin(sin(eobl) * sin(elon)) AS sdec FROM sp3),
-         sp5 AS (SELECT *,
-             ((6.6974243242 + 0.0657098283 * n + hr) * 15.0
-               + (-48.6417668)) * (pi() / 180.0) - ra AS ha FROM sp4),
-         sp6 AS (SELECT *,
-             acos(cos((-26.243602) * (pi() / 180.0)) * cos(ha) * cos(sdec)
-               + sin(sdec) * sin((-26.243602) * (pi() / 180.0))) AS zen0
-           FROM sp5),
-         sp7 AS (SELECT *,
-             90.0 - ((zen0 + (6371.01 / 149597890.0) * sin(zen0))
-               * 180.0 / pi()) AS elev FROM sp6),
-         sp8 AS (SELECT *,
-             CASE WHEN elev >= -1.0 * (0.26667 + 0.5667) THEN
-               ((101325.0 / 100.0) / 1010.0) * (283.0 / (273.0 + 12.0)) * 1.02
-                 / (60.0 * tan((elev + 10.3 / (elev + 5.11)) / 180.0 * pi()))
-             ELSE 0.0 END AS refr FROM sp7),
-         spz AS (SELECT t, dni, ghi, dhi, airmass, albedo,
-             dni * greatest(cos((90.0 - (elev + refr)) / 180.0 * pi()), 0.0)
-               + dhi AS poa
-           FROM sp8),
-         fsl AS (SELECT * FROM spz
-           WHERE t BETWEEN TIMESTAMP '2024-01-10 11:00:00'
-                       AND TIMESTAMP '2024-01-10 16:00:00'),
-         fen0 AS (SELECT *, lag(poa) OVER w ppoa, lag(t) OVER w plt
-           FROM fsl WINDOW w AS (ORDER BY t)),"""
-
-  /** The season oracles' GPS track (q65, q73): the planted fixes,
-    * haversine leg distance, bearing, day-wrapped leg seconds, speed
-    * and cumulative distance, keeping fixes with a speed and a heading. */
-  private def seasonTrackSql: String =
-    """trkraw AS (SELECT * FROM (VALUES
-             (TIMESTAMP '2024-01-10 09:30:00', -26.240, -48.640, 5.0),
-             (TIMESTAMP '2024-01-10 09:55:00', -26.237, -48.638, 6.0),
-             (TIMESTAMP '2024-01-10 10:20:00', -26.234, -48.636, 7.0),
-             (TIMESTAMP '2024-01-10 10:45:00', -26.231, -48.634, 8.0),
-             (TIMESTAMP '2024-01-10 11:10:00', -26.228, -48.632, 9.0),
-             (TIMESTAMP '2024-01-10 11:35:00', -26.225, -48.630, 10.0),
-             (TIMESTAMP '2024-01-10 12:00:00', -26.222, -48.628, 11.0),
-             (TIMESTAMP '2024-01-10 12:25:00', -26.219, -48.626, 12.0),
-             (TIMESTAMP '2024-01-10 12:50:00', -26.216, -48.624, 13.0),
-             (TIMESTAMP '2024-01-10 13:15:00', -26.213, -48.622, 14.0)
-           ) v(g_ts, lat, lon, ele)),
-         trk1 AS (SELECT *, lag(lat) OVER w plat, lag(lon) OVER w plon,
-             lag(g_ts) OVER w ptt
-           FROM trkraw WINDOW w AS (ORDER BY g_ts)),
-         trk2 AS (SELECT *,
-             6371.0 * 2 * asin(sqrt(
-               pow(sin(((lat - plat) / 180.0 * pi()) / 2), 2)
-               + cos(plat / 180.0 * pi()) * cos(lat / 180.0 * pi())
-                 * pow(sin(((lon - plon) / 180.0 * pi()) / 2), 2))) dist,
-             (atan2(cos(plat / 180.0 * pi()) * sin((lon - plon) / 180.0 * pi()),
-                sin(plat / 180.0 * pi()) * (cos(plat / 180.0 * pi())
-                  - cos(lat / 180.0 * pi()) * cos((lon - plon) / 180.0 * pi())))
-               * 180.0 / pi()) + 180.0 heading,
-             ((epoch_us(g_ts) - epoch_us(ptt)) // 1000000) % 86400 dts
-           FROM trk1),
-         trk3 AS (SELECT g_ts, lat, lon, ele, heading,
-             CASE WHEN dts = 0 THEN NULL
-                  ELSE dist / (CAST(dts AS DOUBLE) / 3600.0) END speed,
-             sum(coalesce(dist, 0.0)) OVER (ORDER BY g_ts
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) distance
-           FROM trk2),
-         trkf AS (SELECT * FROM trk3
-           WHERE speed IS NOT NULL AND heading IS NOT NULL),"""
-
-  /** The IVF drift replay (q131, q145) through the maintenance window:
-    * per-query recalls, both window decisions and both epoch-change
-    * flags. */
-  private def ivfMaintainOracleSql: String =
-    ivfDriftReplaySql + """
-         rec AS (
-           SELECT t.query_id, pr.pre_top1, po.post_top1,
-             CASE WHEN pr.pre_top1 = t.true_top1 THEN 1.0 ELSE 0.0 END
-               AS pre_recall,
-             CASE WHEN po.post_top1 = t.true_top1 THEN 1.0 ELSE 0.0 END
-               AS post_recall
-           FROM truth t JOIN pre_top pr USING (query_id)
-             JOIN post_top po USING (query_id)),
-         dec AS (
-           SELECT round(avg(pre_recall), 6)::DOUBLE AS pre_mean,
-             round(avg(post_recall), 6)::DOUBLE AS post_mean,
-             avg(pre_recall) < 0.9 AS retrain_fired,
-             avg(pre_recall) < 0.9 AS heal_epoch_changed,
-             avg(post_recall) < 0.9 AS noop_fired,
-             round(avg(post_recall), 6)::DOUBLE AS noop_mean,
-             avg(post_recall) < 0.9 AS noop_epoch_changed
-           FROM rec)
-         SELECT r.query_id, r.pre_top1, r.post_top1, d.pre_mean,
-           d.retrain_fired, d.post_mean, d.heal_epoch_changed,
-           d.noop_fired, d.noop_mean, d.noop_epoch_changed
-         FROM rec r CROSS JOIN dec d
-         ORDER BY r.query_id"""
-
-  /** The IVF drift replay (q123, q131, q145): the planted two-axis
-    * corpus, the drift batch and queries on a third axis, the build
-    * seeds and Lloyd mean, frozen append assignment, stale probe/top1,
-    * the id%2-sampled warm refit (keep-empty-cell coalesce),
-    * re-assignment, healed probe/top1 and brute-force truth. */
-  private def ivfDriftReplaySql: String =
-    """WITH corpus_base AS (
-           SELECT i AS vec_id,
-             CASE WHEN i % 2 = 1
-               THEN [1.0, 0.0, 0.0, 0.1 * ((i + 1) // 2)]
-               ELSE [0.0, 1.0, 0.0, 0.1 * (i // 2)] END::DOUBLE[] AS v
-           FROM range(1, 21) t(i)),
-         drift AS (
-           SELECT 100 + i AS vec_id,
-             [0.05, 0.0, 1.0, 0.1 * i]::DOUBLE[] AS v
-           FROM range(1, 11) t(i)),
-         queries AS (
-           SELECT 1000 + i AS query_id,
-             [0.0, 0.05, 1.0, 0.1 * i]::DOUBLE[] AS qv
-           FROM range(1, 11) t(i)),
-         seeds AS (SELECT vec_id AS cell, v AS cvec FROM corpus_base
-           WHERE vec_id <= 2),
-         assign0 AS (
-           SELECT vec_id, cell FROM (
-             SELECT b.vec_id, s.cell, row_number() OVER
-               (PARTITION BY b.vec_id
-                ORDER BY list_dot_product(b.v, s.cvec) /
-                  (sqrt(list_dot_product(b.v, b.v)) *
-                   sqrt(list_dot_product(s.cvec, s.cvec))) DESC,
-                  s.cell) AS rn
-             FROM corpus_base b CROSS JOIN seeds s) WHERE rn = 1),
-         cents AS (
-           SELECT a.cell, [avg(b.v[1]), avg(b.v[2]), avg(b.v[3]),
-             avg(b.v[4])]::DOUBLE[] AS cvec
-           FROM corpus_base b JOIN assign0 a USING (vec_id)
-           GROUP BY a.cell),
-         corpus AS (SELECT * FROM corpus_base UNION ALL
-           SELECT * FROM drift),
-         pre_assign AS (
-           SELECT vec_id, cell FROM (
-             SELECT c.vec_id, ct.cell, row_number() OVER
-               (PARTITION BY c.vec_id
-                ORDER BY list_dot_product(c.v, ct.cvec) /
-                  (sqrt(list_dot_product(c.v, c.v)) *
-                   sqrt(list_dot_product(ct.cvec, ct.cvec))) DESC,
-                  ct.cell) AS rn
-             FROM corpus c CROSS JOIN cents ct) WHERE rn = 1),
-         pre_probe AS (
-           SELECT query_id, cell FROM (
-             SELECT q.query_id, ct.cell, row_number() OVER
-               (PARTITION BY q.query_id
-                ORDER BY list_dot_product(q.qv, ct.cvec) /
-                  (sqrt(list_dot_product(q.qv, q.qv)) *
-                   sqrt(list_dot_product(ct.cvec, ct.cvec))) DESC,
-                  ct.cell) AS rn
-             FROM queries q CROSS JOIN cents ct) WHERE rn = 1),
-         pre_top AS (
-           SELECT query_id, vec_id AS pre_top1 FROM (
-             SELECT q.query_id, c.vec_id, row_number() OVER
-               (PARTITION BY q.query_id
-                ORDER BY list_dot_product(q.qv, c.v) /
-                  (sqrt(list_dot_product(q.qv, q.qv)) *
-                   sqrt(list_dot_product(c.v, c.v))) DESC,
-                  c.vec_id) AS rn
-             FROM queries q JOIN pre_probe p USING (query_id)
-               JOIN pre_assign a ON a.cell = p.cell
-               JOIN corpus c ON c.vec_id = a.vec_id) WHERE rn = 1),
-         sample_assign AS (
-           SELECT vec_id, cell FROM pre_assign WHERE vec_id % 2 = 1),
-         refit AS (
-           SELECT sa.cell, [avg(c.v[1]), avg(c.v[2]), avg(c.v[3]),
-             avg(c.v[4])]::DOUBLE[] AS cvec
-           FROM corpus c JOIN sample_assign sa USING (vec_id)
-           GROUP BY sa.cell),
-         new_cents AS (
-           SELECT ct.cell, coalesce(r.cvec, ct.cvec) AS cvec
-           FROM cents ct LEFT JOIN refit r ON r.cell = ct.cell),
-         post_assign AS (
-           SELECT vec_id, cell FROM (
-             SELECT c.vec_id, ct.cell, row_number() OVER
-               (PARTITION BY c.vec_id
-                ORDER BY list_dot_product(c.v, ct.cvec) /
-                  (sqrt(list_dot_product(c.v, c.v)) *
-                   sqrt(list_dot_product(ct.cvec, ct.cvec))) DESC,
-                  ct.cell) AS rn
-             FROM corpus c CROSS JOIN new_cents ct) WHERE rn = 1),
-         post_probe AS (
-           SELECT query_id, cell FROM (
-             SELECT q.query_id, ct.cell, row_number() OVER
-               (PARTITION BY q.query_id
-                ORDER BY list_dot_product(q.qv, ct.cvec) /
-                  (sqrt(list_dot_product(q.qv, q.qv)) *
-                   sqrt(list_dot_product(ct.cvec, ct.cvec))) DESC,
-                  ct.cell) AS rn
-             FROM queries q CROSS JOIN new_cents ct) WHERE rn = 1),
-         post_top AS (
-           SELECT query_id, vec_id AS post_top1 FROM (
-             SELECT q.query_id, c.vec_id, row_number() OVER
-               (PARTITION BY q.query_id
-                ORDER BY list_dot_product(q.qv, c.v) /
-                  (sqrt(list_dot_product(q.qv, q.qv)) *
-                   sqrt(list_dot_product(c.v, c.v))) DESC,
-                  c.vec_id) AS rn
-             FROM queries q JOIN post_probe p USING (query_id)
-               JOIN post_assign a ON a.cell = p.cell
-               JOIN corpus c ON c.vec_id = a.vec_id) WHERE rn = 1),
-         truth AS (
-           SELECT query_id, vec_id AS true_top1 FROM (
-             SELECT q.query_id, c.vec_id, row_number() OVER
-               (PARTITION BY q.query_id
-                ORDER BY list_dot_product(q.qv, c.v) /
-                  (sqrt(list_dot_product(q.qv, q.qv)) *
-                   sqrt(list_dot_product(c.v, c.v))) DESC,
-                  c.vec_id) AS rn
-             FROM queries q CROSS JOIN corpus c) WHERE rn = 1),"""
-
-  private def q75PeriodSql(label: String, periodUs: Long): String = {
-    val gapUs = math.max(1L, 60000000L / periodUs) * periodUs
-    s"""SELECT * FROM (WITH
-       mainE AS (SELECT ts, user_id, event_id FROM events
-         WHERE ts BETWEEN TIMESTAMP '2024-01-08 09:00:00'
-                      AND TIMESTAMP '2024-01-11 21:00:00'
-           AND event_id % 3 != 0 AND event_id % 101 != 0
-           AND event_id % 103 != 0),
-       dbE AS (SELECT ts, user_id, event_id FROM events
-         WHERE ts BETWEEN TIMESTAMP '2024-01-08 00:00:00'
-                      AND TIMESTAMP '2024-01-12 00:00:00'
-           AND event_id % 3 = 0),
-       mwide AS (SELECT ts,
-           avg(CAST(user_id AS DOUBLE)*(1.0/100)) v_curr,
-           avg(CAST(event_id % 256 AS DOUBLE)*(1.0/100)) v_duty,
-           avg(CAST((event_id % 4) & 1 AS DOUBLE)*(1.0/255)) v_f1
-         FROM mainE GROUP BY ts),
-       dwide AS (SELECT ts,
-           avg(CAST(user_id AS DOUBLE)*(1.0/100)) v_curr,
-           avg(CAST(event_id % 256 AS DOUBLE)*(1.0/100)) v_duty,
-           avg(CAST((event_id % 4) & 1 AS DOUBLE)*(1.0/255)) v_f1
-         FROM dbE GROUP BY ts),
-       mb AS (SELECT min(ts) lo, max(ts) hi FROM mwide),
-       uni AS (SELECT * FROM mwide
-         UNION ALL SELECT * FROM dwide
-           WHERE ts BETWEEN (SELECT lo FROM mb) AND (SELECT hi FROM mb)),
-       lf AS (
-         SELECT make_timestamp(epoch_us(ts) - epoch_us(ts) % $periodUs) b,
-           'MOD17__SENSOR__CURR' signal, v_curr vv FROM uni
-         UNION ALL SELECT make_timestamp(epoch_us(ts) - epoch_us(ts) % $periodUs),
-           'MOD17__SENSOR__DUTY', v_duty FROM uni
-         UNION ALL SELECT make_timestamp(epoch_us(ts) - epoch_us(ts) % $periodUs),
-           'MOD17__SENSOR__FLAG1', v_f1 FROM uni),
-       binned AS (SELECT signal, b, avg(vv) v FROM lf GROUP BY 1, 2),
-       bnds AS (SELECT min(b) lo, max(b) hi FROM binned),
-       grid AS (SELECT s.signal, g.b
-         FROM (SELECT unnest(['MOD17__SENSOR__CURR',
-           'MOD17__SENSOR__DUTY', 'MOD17__SENSOR__FLAG1']) signal) s
-         CROSS JOIN (SELECT unnest(generate_series((SELECT lo FROM bnds),
-           (SELECT hi FROM bnds), to_microseconds($periodUs))) b) g),
-       ${seasonInterpSql(gapUs)}
-       SELECT '$label' AS period, b AS timestamp,
-         round(max(CASE WHEN signal = 'MOD17__SENSOR__CURR' THEN val END), 6)
-           AS s_curr,
-         round(max(CASE WHEN signal = 'MOD17__SENSOR__DUTY' THEN val END), 6)
-           AS s_duty,
-         round(max(CASE WHEN signal = 'MOD17__SENSOR__FLAG1' THEN val END), 6)
-           AS s_flag1
-       FROM resam GROUP BY b)"""
-  }
-
-  /** The q158 four-tier cascade oracle, parameterized on the LIVE
-    * exact-tier view: the caller-frame path (q158) removes a text
-    * only when NO surviving accepted doc holds it (doc-keyed), while
-    * the durable-index path (q166) removes by CONTENT via the
-    * takedown ledger. Everything else -- the shingle/closure fuzzy
-    * contract, the md5 hashEmbed cosine, quality thresholds and the
-    * precedence fold -- is byte-identical between the two gates,
-    * which is the point: swapping the exact tier's face must not
-    * move any other tier's decision. Plain concatenation (no
-    * interpolator) keeps the SQL's regex backslashes raw. */
-  private def cascadeFourTierOracleSql(accxLive: String): String =
-    """WITH base AS (SELECT doc_id, text FROM documents
-           WHERE length(trim(text)) > 0 AND doc_id < 150),
-         acc AS (SELECT doc_id, text FROM base WHERE doc_id % 2 = 0),
-         accx_pre AS (SELECT text, min(doc_id) AS exact_id FROM acc
-           GROUP BY text),
-         accx_live AS (""" + accxLive + """),
-         """ + cascadeArrivalsSql + """
-         batchn AS (SELECT doc_id, lower(trim(text)) tx FROM arr
-           WHERE text IS NOT NULL),
-         bt AS (SELECT doc_id, regexp_split_to_array(tx, '\s+') t
-           FROM batchn),
-         bsh AS (SELECT DISTINCT doc_id, array_to_string(t[i:i+3], ' ') s
-           FROM bt, LATERAL (SELECT unnest(generate_series(1,
-             greatest(len(t)-3, 1))) AS i)),
-         ot AS (SELECT doc_id,
-           regexp_split_to_array(lower(trim(text)), '\s+') t FROM acc),
-         """ + shingleOverlapSql + """
-         hitsx AS (SELECT hx.bid, hx.oid FROM hx
-           JOIN bsz ON bsz.doc_id = hx.bid
-           JOIN osz ON osz.doc_id = hx.oid
-           WHERE hx.i*1.0/(bsz.sz + osz.sz - hx.i) >= 0.5),
-         hits_pre AS (SELECT DISTINCT bid AS doc_id FROM hitsx),
-         hits_live AS (SELECT DISTINCT bid AS doc_id FROM hitsx
-           WHERE oid % 40 NOT IN (0, 4, 8)),
-         """ + batchComponentsSql + """
-         labeled AS (SELECT b.doc_id, coalesce(comp.comp, b.doc_id) AS comp
-           FROM batchn b LEFT JOIN comp USING (doc_id)),
-         tainted_pre AS (SELECT DISTINCT l.comp FROM labeled l
-           JOIN hits_pre h ON l.doc_id = h.doc_id),
-         tainted_live AS (SELECT DISTINCT l.comp FROM labeled l
-           JOIN hits_live h ON l.doc_id = h.doc_id),
-         fz AS (SELECT l.doc_id,
-             l.comp = l.doc_id AND
-               l.comp NOT IN (SELECT comp FROM tainted_pre) AS fz_pre,
-             l.comp = l.doc_id AND
-               l.comp NOT IN (SELECT comp FROM tainted_live) AS fz_live
-           FROM labeled l),
-         alltexts AS (
-           SELECT 1 AS is_acc, doc_id, text FROM acc
-           UNION ALL SELECT 0, doc_id, text FROM arr
-           WHERE length(trim(coalesce(text, ''))) > 0),
-         """ + simhashCosineSql + """
-         sem AS (SELECT doc_id, max(cosv) AS best_pre,
-             max(CASE WHEN acc_id % 40 NOT IN (0, 4, 8) THEN cosv END)
-               AS best_live
-           FROM cosr GROUP BY doc_id),
-         decided AS (
-           SELECT a.doc_id,
-             CASE WHEN xp.exact_id IS NOT NULL THEN 'exact'
-                  WHEN NOT q.qok THEN 'quality'
-                  WHEN NOT coalesce(f.fz_pre, FALSE) THEN 'fuzzy'
-                  WHEN s.best_pre >= 0.92 THEN 'semantic' END AS reason_pre,
-             CASE WHEN xl.exact_id IS NOT NULL THEN 'exact'
-                  WHEN NOT q.qok THEN 'quality'
-                  WHEN NOT coalesce(f.fz_live, FALSE) THEN 'fuzzy'
-                  WHEN s.best_live >= 0.92 THEN 'semantic' END AS reason_live
-           FROM arr a
-           LEFT JOIN accx_pre xp ON xp.text = a.text
-           LEFT JOIN accx_live xl ON xl.text = a.text
-           JOIN qual q ON q.doc_id = a.doc_id
-           LEFT JOIN fz f ON f.doc_id = a.doc_id
-           LEFT JOIN sem s ON s.doc_id = a.doc_id)
-         SELECT doc_id,
-           reason_pre IS NULL AS admitted_pre, reason_pre,
-           reason_live IS NULL AS admitted_live, reason_live
-         FROM decided ORDER BY doc_id"""
-
-  /** q171's five-tier oracle: the q166 fixture and set algebra with a
-    * SINGLE world for exact/quality/fuzzy/semantic (no ledger but the
-    * winnow ledger is touched between the passes — isolating the new
-    * rung) and TWO worlds for the CONTAMINATION tier (the q89
-    * winnowing chains over the arrivals and the benchmark slices,
-    * pre = full suite, live = suite minus the retired bench_id % 40 =
-    * 21 half), folded under first-reject precedence exact → quality →
-    * contaminated → fuzzy → semantic. */
-  private def cascadeFiveTierOracleSql: String =
-    """WITH base AS (SELECT doc_id, text FROM documents
-           WHERE length(trim(text)) > 0 AND doc_id < 150),
-         acc AS (SELECT doc_id, text FROM base WHERE doc_id % 2 = 0),
-         accx AS (SELECT text, min(doc_id) AS exact_id FROM acc
-           GROUP BY text),
-         """ + cascadeArrivalsSql + """
-         wtk AS (SELECT doc_id,
-             regexp_split_to_array(lower(trim(text)), '\s+') t
-           FROM arr WHERE text IS NOT NULL),
-         """ + winnowSql("wtk", "doc_id", "whs", "wsel") + """
-         wfp AS (SELECT DISTINCT s.doc_id, whs.h[s.pos] AS fp
-           FROM wsel s JOIN whs USING (doc_id)),
-         wbt AS (SELECT * FROM (SELECT doc_id AS bench_id,
-             [lower(x) for x in
-               regexp_split_to_array(trim(text), '\s+')[3:14]] AS t
-           FROM base WHERE doc_id % 20 = 1) WHERE len(t) > 0),
-         """ + winnowSql("wbt", "bench_id", "wbh", "wbsel") + """
-         wbfp AS (SELECT DISTINCT s.bench_id, wbh.h[s.pos] AS fp
-           FROM wbsel s JOIN wbh USING (bench_id)),
-         wpre AS (SELECT DISTINCT f.doc_id FROM wfp f
-           JOIN (SELECT DISTINCT fp FROM wbfp) b ON f.fp = b.fp),
-         wlive AS (SELECT DISTINCT f.doc_id FROM wfp f
-           JOIN (SELECT DISTINCT fp FROM wbfp
-             WHERE bench_id % 40 <> 21) b ON f.fp = b.fp),
-         batchn AS (SELECT doc_id, lower(trim(text)) tx FROM arr
-           WHERE text IS NOT NULL),
-         bt AS (SELECT doc_id, regexp_split_to_array(tx, '\s+') t
-           FROM batchn),
-         bsh AS (SELECT DISTINCT doc_id, array_to_string(t[i:i+3], ' ') s
-           FROM bt, LATERAL (SELECT unnest(generate_series(1,
-             greatest(len(t)-3, 1))) AS i)),
-         ot AS (SELECT doc_id,
-           regexp_split_to_array(lower(trim(text)), '\s+') t FROM acc),
-         """ + shingleOverlapSql + """
-         hits AS (SELECT DISTINCT hx.bid AS doc_id FROM hx
-           JOIN bsz ON bsz.doc_id = hx.bid
-           JOIN osz ON osz.doc_id = hx.oid
-           WHERE hx.i*1.0/(bsz.sz + osz.sz - hx.i) >= 0.5),
-         """ + batchComponentsSql + """
-         labeled AS (SELECT b.doc_id, coalesce(comp.comp, b.doc_id) AS comp
-           FROM batchn b LEFT JOIN comp USING (doc_id)),
-         tainted AS (SELECT DISTINCT l.comp FROM labeled l
-           JOIN hits h ON l.doc_id = h.doc_id),
-         fz AS (SELECT l.doc_id,
-             l.comp = l.doc_id AND
-               l.comp NOT IN (SELECT comp FROM tainted) AS fzok
-           FROM labeled l),
-         alltexts AS (
-           SELECT 1 AS is_acc, doc_id, text FROM acc
-           UNION ALL SELECT 0, doc_id, text FROM arr
-           WHERE length(trim(coalesce(text, ''))) > 0),
-         """ + simhashCosineSql + """
-         sem AS (SELECT doc_id, max(cosv) AS best FROM cosr GROUP BY 1),
-         decided AS (
-           SELECT a.doc_id,
-             CASE WHEN x.exact_id IS NOT NULL THEN 'exact'
-                  WHEN NOT q.qok THEN 'quality'
-                  WHEN wp.doc_id IS NOT NULL THEN 'contaminated'
-                  WHEN NOT coalesce(f.fzok, FALSE) THEN 'fuzzy'
-                  WHEN s.best >= 0.92 THEN 'semantic' END AS reason_pre,
-             CASE WHEN x.exact_id IS NOT NULL THEN 'exact'
-                  WHEN NOT q.qok THEN 'quality'
-                  WHEN wl.doc_id IS NOT NULL THEN 'contaminated'
-                  WHEN NOT coalesce(f.fzok, FALSE) THEN 'fuzzy'
-                  WHEN s.best >= 0.92 THEN 'semantic' END AS reason_live
-           FROM arr a
-           LEFT JOIN accx x ON x.text = a.text
-           JOIN qual q ON q.doc_id = a.doc_id
-           LEFT JOIN wpre wp ON wp.doc_id = a.doc_id
-           LEFT JOIN wlive wl ON wl.doc_id = a.doc_id
-           LEFT JOIN fz f ON f.doc_id = a.doc_id
-           LEFT JOIN sem s ON s.doc_id = a.doc_id)
-         SELECT doc_id,
-           reason_pre IS NULL AS admitted_pre, reason_pre,
-           reason_live IS NULL AS admitted_live, reason_live
-         FROM decided ORDER BY doc_id"""
-
-  /** q167/q168's shared two-world media-cascade oracle (the q74
-    * identical-decision-contract discipline): both gates run the same
-    * fixture and thresholds; only the perceptual tier's FACE differs
-    * (broadcast members vs relational banded index), and both faces
-    * are pigeonhole recall-exact with the same (hamming, id) argmin —
-    * so one oracle pins that the swap moves no decision. */
-  private def mediaCascadeTwoWorldOracleSql: String =
-      mediaCascadeDhashSql + """
-           FROM ag a JOIN ag b ON a.media_id = b.media_id
-             AND b.gy = a.gy AND b.gx = a.gx + 1
-           WHERE a.gx < 8 GROUP BY a.media_id),
-         per_pre AS (SELECT s.media_id,
-             min_by(r.ref_id,
-               bit_count(xor(s.dhash, r.sig))::BIGINT * 1000 + r.ref_id)
-               AS pmid,
-             min(bit_count(xor(s.dhash, r.sig))) AS pham
-           FROM ah s JOIN rh r ON bit_count(xor(s.dhash, r.sig)) <= 6
-           GROUP BY s.media_id),
-         per_live AS (SELECT s.media_id,
-             min_by(r.ref_id,
-               bit_count(xor(s.dhash, r.sig))::BIGINT * 1000 + r.ref_id)
-               AS pmid,
-             min(bit_count(xor(s.dhash, r.sig))) AS pham
-           FROM ah s JOIN rh r ON bit_count(xor(s.dhash, r.sig)) <= 6
-             AND r.ref_id NOT IN (2, 8)
-           GROUP BY s.media_id),
-         """ + mediaCascadeEmbedSql + """
-         sem_pre AS (SELECT media_id, ref_id AS smid, cosv FROM (
-             SELECT media_id, ref_id, cosv, row_number() OVER
-               (PARTITION BY media_id ORDER BY cosv DESC, ref_id) AS rk
-             FROM cosr) WHERE rk = 1),
-         sem_live AS (SELECT media_id, ref_id AS smid, cosv FROM (
-             SELECT media_id, ref_id, cosv, row_number() OVER
-               (PARTITION BY media_id ORDER BY cosv DESC, ref_id) AS rk
-             FROM cosr WHERE ref_id NOT IN (2, 8)) WHERE rk = 1),
-         allm AS (
-           SELECT media_id, 'ok' AS status FROM arr
-           UNION ALL SELECT media_id, status
-           FROM (VALUES (9001, 'undecodable'), (9002, 'null_payload'),
-             (9003, 'empty_payload')) t(media_id, status)),
-         decided AS (SELECT m.media_id,
-             CASE WHEN m.status != 'ok' THEN 'dead_letter'
-                  WHEN pp.media_id IS NOT NULL THEN 'perceptual'
-                  WHEN sp.cosv >= 0.9 THEN 'semantic' END AS reason_pre,
-             pp.pmid AS pmid_pre, pp.pham AS pham_pre,
-             sp.smid AS smid_pre,
-             CASE WHEN m.status != 'ok' THEN 'dead_letter'
-                  WHEN pl.media_id IS NOT NULL THEN 'perceptual'
-                  WHEN sl.cosv >= 0.9 THEN 'semantic' END AS reason_live,
-             pl.pmid AS pmid_live, pl.pham AS pham_live,
-             sl.smid AS smid_live
-           FROM allm m
-           LEFT JOIN per_pre pp ON pp.media_id = m.media_id
-           LEFT JOIN per_live pl ON pl.media_id = m.media_id
-           LEFT JOIN sem_pre sp ON sp.media_id = m.media_id
-           LEFT JOIN sem_live sl ON sl.media_id = m.media_id)
-         SELECT media_id,
-           reason_pre IS NULL AS admitted_pre, reason_pre,
-           CASE WHEN reason_pre = 'perceptual' THEN pmid_pre END
-             AS pmid_pre,
-           (CASE WHEN reason_pre = 'perceptual' THEN pham_pre
-             END)::INTEGER AS pham_pre,
-           CASE WHEN reason_pre = 'semantic' THEN smid_pre END
-             AS smid_pre,
-           reason_live IS NULL AS admitted_live, reason_live,
-           CASE WHEN reason_live = 'perceptual' THEN pmid_live END
-             AS pmid_live,
-           (CASE WHEN reason_live = 'perceptual' THEN pham_live
-             END)::INTEGER AS pham_live,
-           CASE WHEN reason_live = 'semantic' THEN smid_live END
-             AS smid_live
-         FROM decided ORDER BY media_id"""
-
-  private def substringDedupOracleSql: String =
-    """WITH d AS (SELECT doc_id,
-           CASE WHEN doc_id % 5 = 0
-                THEN text || ' every duplicated span longer than eight words must survive exactly once corpus wide'
-                WHEN doc_id % 7 = 0
-                THEN 'this shared preamble sentence has more than eight words of pure boilerplate ' || text
-                WHEN doc_id % 11 = 0
-                THEN text || ' ' || text
-                ELSE text END AS text
-           FROM documents),
-         tk AS (SELECT doc_id, regexp_split_to_array(trim(text), '\s+')
-             AS t FROM d),
-         g AS (SELECT doc_id, p, array_to_string(t[p : p + 7], ' ') AS k
-           FROM tk, LATERAL (SELECT unnest(generate_series(1, len(t) - 7))
-             AS p)
-           WHERE len(t) >= 8),
-         m AS (SELECT doc_id, p,
-             count(*) OVER (PARTITION BY k) AS c,
-             row_number() OVER (PARTITION BY k ORDER BY doc_id, p) AS rn
-           FROM g),
-         del AS (SELECT doc_id, p FROM m WHERE c > 1 AND rn > 1),
-         cov AS (SELECT DISTINCT doc_id, w FROM del,
-           LATERAL (SELECT unnest(generate_series(p, p + 7)) AS w)),
-         w AS (SELECT doc_id, unnest(t) AS word,
-             unnest(generate_series(1, len(t))) AS wp FROM tk),
-         kept AS (SELECT w.doc_id, w.wp, w.word FROM w
-           LEFT JOIN cov ON w.doc_id = cov.doc_id AND w.wp = cov.w
-           WHERE cov.w IS NULL),
-         rb AS (SELECT doc_id, count(*) AS n_kept_words,
-             md5(string_agg(word, ' ' ORDER BY wp)) AS clean_md5
-           FROM kept GROUP BY doc_id)
-         SELECT tk.doc_id, len(tk.t) AS n_words,
-           coalesce(rb.n_kept_words, 0) AS n_kept_words,
-           coalesce(rb.clean_md5, md5('')) AS clean_md5
-         FROM tk LEFT JOIN rb USING (doc_id) ORDER BY doc_id"""
-
-  /** Shared q56/q74 oracle: exhaustive batch-vs-index 4-gram Jaccard
-    * hits + within-batch recursive closure; survivors are untainted
-    * min-id representatives. q74 runs the SAME decision over an index
-    * round-tripped through a bucketed parquet table. */
-  private def incrementalDedupOracleSql: String =
-    """WITH olds AS (SELECT doc_id, lower(trim(text)) tx
-           FROM documents WHERE doc_id % 2 = 0),
-         """ + decontamBatchSql + """
-         """ + shingleOverlapSql + """
-         hits AS (SELECT DISTINCT hx.bid AS doc_id FROM hx
-           JOIN bsz ON bsz.doc_id = hx.bid
-           JOIN osz ON osz.doc_id = hx.oid
-           WHERE hx.i*1.0/(bsz.sz + osz.sz - hx.i) >= 0.5),
-         """ + batchComponentsSql + """
-         labeled AS (SELECT b.doc_id, coalesce(comp.comp, b.doc_id) AS comp
-           FROM batch b LEFT JOIN comp USING (doc_id)),
-         tainted AS (SELECT DISTINCT l.comp FROM labeled l
-           JOIN hits h ON l.doc_id = h.doc_id)
-         SELECT l.doc_id FROM labeled l
-         WHERE l.comp NOT IN (SELECT comp FROM tainted)
-           AND l.comp = l.doc_id
-         ORDER BY l.doc_id"""
-
-  /** Shared by q09 (batch gap sessionization) and q80 (its stateful
-    * streaming face): identical session assignment. */
-  private def sessionizeOracleSql: String =
-    """WITH s AS (SELECT user_id, event_id, ts,
-         CASE WHEN lag(ts) OVER w IS NULL
-                OR ts - lag(ts) OVER w > INTERVAL 30 MINUTE
-              THEN 1 ELSE 0 END AS nw
-       FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id))
-       SELECT user_id, event_id, CAST(sum(nw) OVER
-         (PARTITION BY user_id ORDER BY ts, event_id
-          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS session_id
-       FROM s ORDER BY user_id, event_id"""
-
-  /** Shared by q08 (batch tumbling resample) and q77 (its streaming
-    * face): the stream's flushed bins must equal the batch SQL. */
-  private def resampleOracleSql: String =
-    """SELECT event_type,
-       make_timestamp(CAST(floor(epoch(ts)/3600)*3600 AS BIGINT)*1000000) AS bucket_ts,
-       round(sum(value),2) AS sum_value, count(*) AS n,
-       round(sum(value),2)/count(*) AS mean_value
-       FROM events GROUP BY 1,2 ORDER BY 1,2"""
-
-  /** Shared by q21 (batch candump decode) and q79 (its streaming
-    * face over the same fixture lines). */
-  private def canDecodeOracleSql: String =
-    """WITH base AS (SELECT * FROM events
-         WHERE event_id % 101 != 0 AND event_id % 103 != 0),
-       fields AS (
-         SELECT ts AS timestamp, 'MOD17' AS module_name,
-                'SENSOR' AS topic_name, 'SIGNATURE' AS byte_name,
-                17.0 AS value, '' AS unit FROM base
-         UNION ALL SELECT ts, 'MOD17', 'SENSOR', 'CURR',
-           CAST(user_id AS DOUBLE)*(1.0/100), 'A' FROM base
-         UNION ALL SELECT ts, 'MOD17', 'SENSOR', 'DUTY',
-           CAST(event_id % 256 AS DOUBLE)*(1.0/100), 'V' FROM base
-         UNION ALL SELECT ts, 'MOD17', 'SENSOR', 'FLAG1',
-           CAST((event_id % 4) & 1 AS DOUBLE)*(1.0/255), '%' FROM base
-         UNION ALL SELECT ts, 'MOD17', 'SENSOR', 'FLAG2',
-           CAST(((event_id % 4) >> 1) & 1 AS DOUBLE), '' FROM base)
-       SELECT * FROM fields ORDER BY timestamp, byte_name, value"""
-
-  /** Shared q68/q71/q93 oracle: 100 planted copies of doc 0, exhaustive
-    * word-trigram Jaccard pairs at 0.8, recursive closure, min-id
-    * survivors. */
-  private def floodClosureOracleSql: String =
-    """WITH corpus AS (
-         SELECT doc_id, lower(text) tx FROM documents
-         UNION ALL
-         SELECT 2000000 + r.range AS doc_id,
-           (SELECT lower(text) FROM documents WHERE doc_id = 0) AS tx
-         FROM range(0, 100) r),
-       toks AS (SELECT doc_id, regexp_split_to_array(trim(tx), '\s+') t
-         FROM corpus),
-       sh AS (SELECT DISTINCT doc_id, array_to_string(t[i:i+2], ' ') AS s
-         FROM toks, LATERAL (SELECT unnest(generate_series(1,
-           greatest(len(t)-2, 1))) AS i)),
-       sizes AS (SELECT doc_id, count(*) sz FROM sh GROUP BY 1),
-       inter AS (SELECT a.doc_id a, b.doc_id b, count(*) i FROM sh a
-         JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id GROUP BY 1,2),
-       pairs AS (SELECT a, b FROM inter
-         JOIN sizes sa ON sa.doc_id = a JOIN sizes sb ON sb.doc_id = b
-         WHERE i*1.0/(sa.sz+sb.sz-i) >= 0.8),
-       edges AS (SELECT a x, b y FROM pairs UNION SELECT b, a FROM pairs),
-       reach AS (
-         WITH RECURSIVE r(x, y) AS (
-           SELECT x, y FROM edges
-           UNION
-           SELECT r.x, e.y FROM r JOIN edges e ON r.y = e.x)
-         SELECT x, y FROM r),
-       comp AS (SELECT x, least(x, min(y)) c FROM reach GROUP BY x)
-       SELECT c.doc_id FROM corpus c
-       LEFT JOIN comp ON comp.x = c.doc_id
-       WHERE comp.x IS NULL OR comp.c = c.doc_id
-       ORDER BY doc_id"""
-
-  /** q72 oracle: the q25 md5-hash simhash recomputation over the
-    * flood corpus, hamming ≤ 3 pairs, closure, min-id survivors. */
-  private def simhashRescueOracleSql: String = {
-    val votes = (0 until 64).map(b =>
-      s"sum(CASE WHEN (h >> $b) & 1 = 1 THEN 1 ELSE -1 END) AS b$b")
-      .mkString(", ")
-    val pack = (0 until 60).map(b =>
-      s"CASE WHEN b$b > 0 THEN ${1L << b} ELSE 0 END").mkString(" + ")
-    s"""WITH corpus AS (
-         SELECT doc_id, lower(text) tx FROM documents
-         UNION ALL
-         SELECT 2000000 + r.range AS doc_id,
-           (SELECT lower(text) FROM documents WHERE doc_id = 0) AS tx
-         FROM range(0, 100) r),
-       toks AS (SELECT doc_id, unnest(regexp_split_to_array(tx, '\\s+')) AS tok
-         FROM corpus),
-       hs AS (SELECT doc_id, ('0x' || substring(md5(tok), 1, 15))::BIGINT AS h
-         FROM toks),
-       votes AS (SELECT doc_id, $votes FROM hs GROUP BY 1),
-       sh AS (SELECT doc_id, $pack AS simhash FROM votes),
-       pairs AS (SELECT a.doc_id a, b.doc_id b
-         FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-         WHERE bit_count(xor(a.simhash, b.simhash)) <= 3),
-       edges AS (SELECT a x, b y FROM pairs UNION SELECT b, a FROM pairs),
-       reach AS (
-         WITH RECURSIVE r(x, y) AS (
-           SELECT x, y FROM edges
-           UNION
-           SELECT r.x, e.y FROM r JOIN edges e ON r.y = e.x)
-         SELECT x, y FROM r),
-       comp AS (SELECT x, least(x, min(y)) cm FROM reach GROUP BY x)
-       SELECT c.doc_id FROM corpus c
-       LEFT JOIN comp ON comp.x = c.doc_id
-       WHERE comp.x IS NULL OR comp.cm = c.doc_id
-       ORDER BY doc_id"""
-  }
-
-  private def simhashOracleSql: String = {
-    val votes = (0 until 64).map(b =>
-      s"sum(CASE WHEN (h >> $b) & 1 = 1 THEN 1 ELSE -1 END) AS b$b")
-      .mkString(", ")
-    val pack = (0 until 60).map(b =>
-      s"CASE WHEN b$b > 0 THEN ${1L << b} ELSE 0 END").mkString(" + ")
-    s"""WITH corpus AS (
-         SELECT doc_id, lower(text) tx FROM documents
-         UNION ALL
-         SELECT doc_id + 1000000, lower(text || ' xyzzy qbf')
-         FROM documents WHERE doc_id % 7 = 0),
-       toks AS (SELECT doc_id, unnest(regexp_split_to_array(tx, '\\s+')) AS tok
-         FROM corpus),
-       hs AS (SELECT doc_id, ('0x' || substring(md5(tok), 1, 15))::BIGINT AS h
-         FROM toks),
-       votes AS (SELECT doc_id, $votes FROM hs GROUP BY 1),
-       sh AS (SELECT doc_id, $pack AS simhash FROM votes)
-       SELECT a.doc_id AS a, b.doc_id AS b,
-         CAST(bit_count(xor(a.simhash, b.simhash)) AS BIGINT) AS hamming
-       FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-       WHERE bit_count(xor(a.simhash, b.simhash)) <= 3
-       ORDER BY a, b"""
-  }
-
-  // $"..." interpolator without importing a session's implicits
-  private implicit class Dollar(val sc: StringContext) {
-    def $(args: Any*): Column = col(sc.s(args: _*))
-  }
 }
