@@ -6,7 +6,8 @@ import org.apache.spark.sql.functions._
 
 import Fixtures._
 
-/** Audio and video gates: decode, fingerprint and embedding dedup, and their admission streams. */
+/** Audio and video gates: decode, fingerprint and embedding dedup,
+  * and their admission streams. */
 object AudioVideoQueries {
 
   val entries: Seq[CatalogEntry] = Seq(
@@ -61,12 +62,11 @@ object AudioVideoQueries {
           when($"au_channels" === 2, element_at($"sample_sums", 2))
             .as("s1_sum"))
         .orderBy($"media_id")
-    },
-    // the sample-ramp arithmetic and signed channel sums replayed in
-    // SQL — a lossless PCM container means the decoded samples ARE
-    // the formula; mono rows carry a null second-channel sum and the
-    // three corrupt ids must come back as explicit null rows
-    Some(
+    }, Some(
+      // the sample-ramp arithmetic and signed channel sums replayed in
+      // SQL — a lossless PCM container means the decoded samples ARE
+      // the formula; mono rows carry a null second-channel sum and the
+      // three corrupt ids must come back as explicit null rows
       """WITH m AS (SELECT doc_id AS media_id,
            CAST(8000 + (doc_id % 3) * 4000 AS INT) AS rate,
            CAST(1 + doc_id % 2 AS INT) AS channels,
@@ -145,14 +145,13 @@ object AudioVideoQueries {
           element_at($"ch_sums", 2).as("g_sum"),
           element_at($"ch_sums", 3).as("b_sum"))
         .orderBy($"media_id", $"frame_no")
-    },
-    // the per-frame grayscale ramp and its (equal by construction)
-    // R/G/B channel sums replayed in SQL — the explicit 256-gray
-    // palette makes the GIF codec lossless, so the decoded bytes ARE
-    // the formula; all four corrupt ids (mid-frame cut, clean cut
-    // missing the trailer, non-video bytes, empty) must come back as
-    // single explicit null rows
-    Some(
+    }, Some(
+      // the per-frame grayscale ramp and its (equal by construction)
+      // R/G/B channel sums replayed in SQL — the explicit 256-gray
+      // palette makes the GIF codec lossless, so the decoded bytes ARE
+      // the formula; all four corrupt ids (mid-frame cut, clean cut
+      // missing the trailer, non-video bytes, empty) must come back as
+      // single explicit null rows
       """WITH m AS (SELECT doc_id AS media_id,
            CAST(6 + doc_id % 4 AS INT) AS w,
            CAST(5 + doc_id % 3 AS INT) AS h,
@@ -267,15 +266,14 @@ object AudioVideoQueries {
         .orderBy($"media_id")
       members.unpersist()
       out
-    },
-    // q153: per-frame pixel formulas → the 8×8 lattice → sum-pool
-    // across frames (all integer sums) → cosine argmax + tau 0.98;
-    // the first-frame-dropped stratum drops f = 0 from its sum, the
-    // brightness stratum adds the shift inside every frame's term;
-    // torn/garbage/empty payloads are explicit admit rows
-    // q154: identical decisions through the streamed IVF route
-    // (nProbe = nCells — the probe IS the brute-force rule)
-    Some(
+    }, Some(
+      // q153: per-frame pixel formulas → the 8×8 lattice → sum-pool
+      // across frames (all integer sums) → cosine argmax + tau 0.98;
+      // the first-frame-dropped stratum drops f = 0 from its sum, the
+      // brightness stratum adds the shift inside every frame's term;
+      // torn/garbage/empty payloads are explicit admit rows
+      // q154: identical decisions through the streamed IVF route
+      // (nProbe = nCells — the probe IS the brute-force rule)
       videoEmbedOracleSql)),
 
     // The AUDIO bytes→vector bridge (audioEmbed — the 64-window
@@ -387,15 +385,14 @@ object AudioVideoQueries {
         .orderBy($"media_id")
       members.unpersist()
       out
-    },
-    // q150: PCM formula → channel mix → k·frames div 64 window
-    // energies (all integer-exact in doubles — the fixture bounds
-    // samples at ±128 so dots stay far under 2^53) → cosine argmax +
-    // tau; gained copies land at cosine exactly 1, corrupt/short
-    // clips are explicit admit rows
-    // q151: identical decisions through the streamed IVF route
-    // (nProbe = nCells — the probe IS the brute-force rule)
-    Some(
+    }, Some(
+      // q150: PCM formula → channel mix → k·frames div 64 window
+      // energies (all integer-exact in doubles — the fixture bounds
+      // samples at ±128 so dots stay far under 2^53) → cosine argmax +
+      // tau; gained copies land at cosine exactly 1, corrupt/short
+      // clips are explicit admit rows
+      // q151: identical decisions through the streamed IVF route
+      // (nProbe = nCells — the probe IS the brute-force rule)
       audioEmbedOracleSql)),
 
     // The VIDEO rung of the streaming multimodal admission ladder —
@@ -459,11 +456,10 @@ object AudioVideoQueries {
         .orderBy($"media_id")
       members.unpersist()
       out
-    },
-    // the q133 temporal replay split into reference and arrival
-    // sides, then the exhaustive argmin admission decision at the
-    // threshold; corrupt arrivals are admitted null-signature rows
-    Some(
+    }, Some(
+      // the q133 temporal replay split into reference and arrival
+      // sides, then the exhaustive argmin admission decision at the
+      // threshold; corrupt arrivals are admitted null-signature rows
       """WITH media AS (
            SELECT i AS media_id, i AS src, 0 AS bright, 0 AS dropfirst,
              0 AS tweak, 1 AS is_ref FROM range(1, 7) t(i)
@@ -582,13 +578,12 @@ object AudioVideoQueries {
           col("__best").getField("hamming").cast("int")
             .as("top_hamming"))
         .orderBy($"media_id")
-    },
-    // the whole temporal chain replayed: planted pixel formulas →
-    // 9×8 grid lumas per frame → every dHash gradient comparison →
-    // per-bit majority vote over the frame sequence → the packed
-    // 64-bit video signature → exhaustive pairwise Hamming truth;
-    // corrupt payloads are explicit null-signature rows
-    Some(
+    }, Some(
+      // the whole temporal chain replayed: planted pixel formulas →
+      // 9×8 grid lumas per frame → every dHash gradient comparison →
+      // per-bit majority vote over the frame sequence → the packed
+      // 64-bit video signature → exhaustive pairwise Hamming truth;
+      // corrupt payloads are explicit null-signature rows
       """WITH media AS (
            SELECT i AS media_id, i AS src, 0 AS bright, 0 AS dropfirst,
              0 AS tweak FROM range(1, 7) t(i)
@@ -724,14 +719,13 @@ object AudioVideoQueries {
         .orderBy($"media_id")
       members.unpersist()
       out
-    },
-    // both sides of the streamed audio admission replayed: the sample
-    // formula (refs AND arrivals — re-encodes and gain copies share a
-    // src, novel clips bring their own), stereo mixdown, window
-    // energies, bit packing, and the exhaustive (hamming, ref) argmin
-    // decision at the threshold; corrupt/short arrivals are explicit
-    // null-fingerprint admit rows
-    Some(
+    }, Some(
+      // both sides of the streamed audio admission replayed: the sample
+      // formula (refs AND arrivals — re-encodes and gain copies share a
+      // src, novel clips bring their own), stereo mixdown, window
+      // energies, bit packing, and the exhaustive (hamming, ref) argmin
+      // decision at the threshold; corrupt/short arrivals are explicit
+      // null-fingerprint admit rows
       """WITH refs AS (
            SELECT i AS ref_id, i AS src,
              CASE WHEN i <= 4 THEN 1 ELSE 2 END AS ch, 1 AS scale
@@ -826,13 +820,12 @@ object AudioVideoQueries {
         .select($"media_id", $"afp",
           coalesce($"n_pairs", lit(0L)).as("n_pairs"), $"top_partner")
         .orderBy($"media_id")
-    },
-    // the sample formula, stereo mixdown, all 65 window energies, the
-    // gradient-sign bit packing and the exhaustive pairwise Hamming
-    // truth replayed in SQL (16-bit PCM is lossless, so the decoded
-    // samples ARE the formula); the short clip and the corrupt
-    // payloads come back as explicit null-fingerprint rows
-    Some(
+    }, Some(
+      // the sample formula, stereo mixdown, all 65 window energies, the
+      // gradient-sign bit packing and the exhaustive pairwise Hamming
+      // truth replayed in SQL (16-bit PCM is lossless, so the decoded
+      // samples ARE the formula); the short clip and the corrupt
+      // payloads come back as explicit null-fingerprint rows
       """WITH clips AS (
            SELECT i AS media_id, i AS src, CASE WHEN i <= 6 THEN 1 ELSE 2 END AS ch,
              1 AS scale FROM range(1, 11) t(i)

@@ -1,12 +1,13 @@
 package graft
 package catalog
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import Fixtures._
 
-/** Admission cascades: text admission and takedown streams, the fuzzy four-tier and five-tier cascades and the ANN takedown stream. */
+/** Admission cascades: text admission and takedown streams, the fuzzy
+  * four-tier and five-tier cascades and the ANN takedown stream. */
 object CascadeQueries {
 
   val entries: Seq[CatalogEntry] = Seq(
@@ -23,12 +24,7 @@ object CascadeQueries {
     // hold bit-for-bit. The oracle replays the whole cascade TWICE
     // (full accepted set, then minus the tombstoned docs).
     CatalogEntry("q156_cascade_takedown", (s, d) => {
-      val docs = t(s, d, "documents").select($"doc_id", $"text")
-        .filter(length(trim($"text")) > 0)
-      val accepted = docs.filter($"doc_id" < 40)
-      val emb = operators.TextAnalysis.hashEmbed(accepted, "text",
-          dim = 64)
-        .select($"doc_id", $"embedding")
+      val (docs, accepted, emb) = cascadeCorpus(s, d)
       // gate hygiene: the ledger survives re-runs (the index tables
       // rewrite below but appendLedger accumulates) — reset so the
       // PRE pass always sees a clean slate
@@ -85,13 +81,12 @@ object CascadeQueries {
         .select($"doc_id", $"admitted_pre", $"reason_pre",
           $"admitted_live", $"reason_live")
         .orderBy($"doc_id")
-    },
-    // q156: the q147 cascade replayed in TWO decision worlds — the
-    // full accepted set (pre) and the set minus the tombstoned docs
-    // (live): exact via the live text view, semantic via the argmax
-    // over surviving accepted vectors; quality and precedence
-    // unchanged
-    Some(
+    }, Some(
+      // q156: the q147 cascade replayed in TWO decision worlds — the
+      // full accepted set (pre) and the set minus the tombstoned docs
+      // (live): exact via the live text view, semantic via the argmax
+      // over surviving accepted vectors; quality and precedence
+      // unchanged
       ("""WITH base AS (
            SELECT doc_id, text FROM documents
            WHERE length(trim(text)) > 0),
@@ -231,15 +226,14 @@ object CascadeQueries {
         .select($"doc_id", $"admitted_pre", $"reason_pre",
           $"admitted_live", $"reason_live")
         .orderBy($"doc_id")
-    },
-    // q158: all four cascade tiers replayed in SQL, each in two
-    // decision worlds — exact via the min-id text views, quality via
-    // the length/ratio formula, FUZZY via the full q129 contract
-    // (shingles, cross-Jaccard vs full/live accepted grams,
-    // within-batch pairs, recursive closure, taint), semantic via the
-    // q156 md5 hashEmbed cosine max vs full/surviving vectors —
-    // folded under first-reject precedence
-    Some(
+    }, Some(
+      // q158: all four cascade tiers replayed in SQL, each in two
+      // decision worlds — exact via the min-id text views, quality via
+      // the length/ratio formula, FUZZY via the full q129 contract
+      // (shingles, cross-Jaccard vs full/live accepted grams,
+      // within-batch pairs, recursive closure, taint), semantic via the
+      // q156 md5 hashEmbed cosine max vs full/surviving vectors —
+      // folded under first-reject precedence
       cascadeFourTierOracleSql(
       // caller-frame exact tier: doc-keyed takedown — a text survives
       // the live view if ANY non-tombstoned accepted doc holds it
@@ -329,14 +323,13 @@ object CascadeQueries {
         .select($"doc_id", $"admitted_pre", $"reason_pre",
           $"admitted_live", $"reason_live")
         .orderBy($"doc_id")
-    },
-    // q166: the SAME four-tier decision contract with the exact tier
-    // served by the durable rooted exact index — one semantic
-    // difference, deliberate: the index's takedown ledger keys on
-    // CONTENT (hash, text), so a tombstoned text vanishes even if a
-    // surviving accepted doc holds an identical copy (the compliance
-    // semantics a content takedown actually wants)
-    Some(
+    }, Some(
+      // q166: the SAME four-tier decision contract with the exact tier
+      // served by the durable rooted exact index — one semantic
+      // difference, deliberate: the index's takedown ledger keys on
+      // CONTENT (hash, text), so a tombstoned text vanishes even if a
+      // surviving accepted doc holds an identical copy (the compliance
+      // semantics a content takedown actually wants)
       cascadeFourTierOracleSql(
       """SELECT text, min(doc_id) AS exact_id FROM acc
            WHERE text NOT IN (SELECT text FROM acc
@@ -385,12 +378,11 @@ object CascadeQueries {
         .select($"doc_id", $"n_fp", $"n_hits_pre", $"admitted_pre",
           $"n_hits_live", $"admitted_live")
         .orderBy($"doc_id")
-    },
-    // q170: two worlds of the same set algebra over the even-id
-    // arrival slice — world 1 vs suite A, world 2 vs A ∪ B after the
-    // mid-stream append; admitted ⇔ zero hits (containment ≤ 0 with
-    // n_fp ≥ 1 by the winnowing short-doc floor)
-    Some(
+    }, Some(
+      // q170: two worlds of the same set algebra over the even-id
+      // arrival slice — world 1 vs suite A, world 2 vs A ∪ B after the
+      // mid-stream append; admitted ⇔ zero hits (containment ≤ 0 with
+      // n_fp ≥ 1 by the winnowing short-doc floor)
       ("""WITH tk AS (SELECT doc_id,
            regexp_split_to_array(trim(lower(text)), '\s+') t,
            regexp_split_to_array(trim(text), '\s+') traw
@@ -502,11 +494,10 @@ object CascadeQueries {
         .select($"doc_id", $"admitted_pre", $"reason_pre",
           $"admitted_live", $"reason_live")
         .orderBy($"doc_id")
-    },
-    // q171: the five-tier front door — the q166 algebra with the
-    // contamination rung's two winnowing worlds folded into the
-    // precedence chain
-    Some(
+    }, Some(
+      // q171: the five-tier front door — the q166 algebra with the
+      // contamination rung's two winnowing worlds folded into the
+      // precedence chain
       cascadeFiveTierOracleSql)),
 
     // The TEXT modality's semantic admission rung made end-to-end —
@@ -526,17 +517,8 @@ object CascadeQueries {
     // selection is q120's planted-geometry gate; this one pins the
     // text composition.
     CatalogEntry("q138_stream_text_admission", (s, d) => {
-      val docs = t(s, d, "documents").select($"doc_id", $"text")
-        .filter(length(trim($"text")) > 0)
-      val accepted = docs.filter($"doc_id" < 40)
-      val emb = operators.TextAnalysis.hashEmbed(accepted, "text",
-          dim = 64)
-        .select($"doc_id", $"embedding")
-      val index = operators.Similarity.buildIvf(emb, "doc_id",
-        "embedding", nCells = 2, lloydIters = 1)
-      val members = operators.Similarity.cellMembers(index)
-      members.persist(org.apache.spark.storage.StorageLevel
-        .MEMORY_AND_DISK).count()
+      val (docs, accepted, emb) = cascadeCorpus(s, d)
+      val (index, members) = cascadeIndex(emb)
       val arrivals = accepted.filter($"doc_id" < 10)
         .select(($"doc_id" + 500000L).as("doc_id"),
           concat($"text", lit(" zq zq qz")).as("text"))
@@ -606,17 +588,8 @@ object CascadeQueries {
     // the argmax tie rule, both cheap tiers' exact predicates and the
     // precedence fold.
     CatalogEntry("q147_stream_admission_cascade", (s, d) => {
-      val docs = t(s, d, "documents").select($"doc_id", $"text")
-        .filter(length(trim($"text")) > 0)
-      val accepted = docs.filter($"doc_id" < 40)
-      val emb = operators.TextAnalysis.hashEmbed(accepted, "text",
-          dim = 64)
-        .select($"doc_id", $"embedding")
-      val index = operators.Similarity.buildIvf(emb, "doc_id",
-        "embedding", nCells = 2, lloydIters = 1)
-      val members = operators.Similarity.cellMembers(index)
-      members.persist(org.apache.spark.storage.StorageLevel
-        .MEMORY_AND_DISK).count()
+      val (docs, accepted, emb) = cascadeCorpus(s, d)
+      val (index, members) = cascadeIndex(emb)
       val acceptedTexts = accepted.groupBy($"text")
         .agg(min($"doc_id").as("exact_id"))
       acceptedTexts.persist(org.apache.spark.storage.StorageLevel
@@ -651,12 +624,11 @@ object CascadeQueries {
         .orderBy($"doc_id")
       members.unpersist(); acceptedTexts.unpersist()
       out
-    },
-    // q147: the whole cascade replayed — exact text match (with the
-    // min-id audit pointer), the multiplicative quality rule, the
-    // q138 md5-bucket/sign embedding + cosine argmax for the semantic
-    // tier, and the first-reject precedence fold on top
-    Some(
+    }, Some(
+      // q147: the whole cascade replayed — exact text match (with the
+      // min-id audit pointer), the multiplicative quality rule, the
+      // q138 md5-bucket/sign embedding + cosine argmax for the semantic
+      // tier, and the first-reject precedence fold on top
       ("""WITH base AS (
            SELECT doc_id, text FROM documents
            WHERE length(trim(text)) > 0),
@@ -796,14 +768,13 @@ object CascadeQueries {
           $"admitted_live", $"match_live", $"admitted_post",
           $"match_post")
         .orderBy($"vec_id")
-    },
-    // q144: the q120 brute-force decision replayed TWICE — once vs
-    // the full accepted set (pre) and once vs the tombstone-excluded
-    // set (live), with the post-retrain decisions pinned EQUAL to the
-    // live ones (physical purge must be observationally identical to
-    // the logical delete). Re-embeds of %15==0 sources flip
-    // reject → admit across the takedown; everything else holds.
-    Some(
+    }, Some(
+      // q144: the q120 brute-force decision replayed TWICE — once vs
+      // the full accepted set (pre) and once vs the tombstone-excluded
+      // set (live), with the post-retrain decisions pinned EQUAL to the
+      // live ones (physical purge must be observationally identical to
+      // the logical delete). Re-embeds of %15==0 sources flip
+      // reject → admit across the takedown; everything else holds.
       """WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
          acc AS (SELECT * FROM e WHERE vec_id % 3 = 0),
          liveacc AS (SELECT * FROM acc WHERE vec_id % 15 <> 0),
@@ -1080,4 +1051,27 @@ object CascadeQueries {
            reason_pre IS NULL AS admitted_pre, reason_pre,
            reason_live IS NULL AS admitted_live, reason_live
          FROM decided ORDER BY doc_id"""
+
+  /** The text cascades' corpus: the non-blank documents, the accepted
+    * docs (ids < 40) and their 64-dim hash embeddings. */
+  private def cascadeCorpus(s: SparkSession,
+                            d: String): (DataFrame, DataFrame, DataFrame) = {
+    val docs = t(s, d, "documents").select($"doc_id", $"text")
+      .filter(length(trim($"text")) > 0)
+    val accepted = docs.filter($"doc_id" < 40)
+    val emb = operators.TextAnalysis.hashEmbed(accepted, "text", dim = 64)
+      .select($"doc_id", $"embedding")
+    (docs, accepted, emb)
+  }
+
+  /** A 2-cell IVF over the accepted embeddings and its cell members,
+    * persisted (nCells = nProbe: the probe is the brute-force rule). */
+  private def cascadeIndex(emb: DataFrame) = {
+    val index = operators.Similarity.buildIvf(emb, "doc_id", "embedding",
+      nCells = 2, lloydIters = 1)
+    val members = operators.Similarity.cellMembers(index)
+    members.persist(org.apache.spark.storage.StorageLevel
+      .MEMORY_AND_DISK).count()
+    (index, members)
+  }
 }

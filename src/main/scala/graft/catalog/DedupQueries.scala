@@ -6,7 +6,8 @@ import org.apache.spark.sql.functions._
 
 import Fixtures._
 
-/** Exact, near-duplicate, substring, winnowing and incremental deduplication gates, with their flood and rescue variants. */
+/** Exact, near-duplicate, substring, winnowing and incremental
+  * deduplication gates, with their flood and rescue variants. */
 object DedupQueries {
 
   val entries: Seq[CatalogEntry] = Seq(
@@ -45,13 +46,7 @@ object DedupQueries {
         .select($"a", $"b")
         .orderBy($"a", $"b")
     }, Some(
-      """WITH corpus AS (
-           SELECT doc_id, lower(text) tx FROM documents
-           UNION ALL
-           SELECT doc_id + 1000000, lower(text || ' xyzzy qbf')
-           FROM documents WHERE doc_id % 7 = 0),
-         toks AS (SELECT doc_id, regexp_split_to_array(trim(tx), '\s+') t
-           FROM corpus),
+      "WITH " + dupCorpusToksSql + """
          sh AS (SELECT DISTINCT doc_id, array_to_string(t[i:i+2], ' ') AS s
            FROM toks, LATERAL (SELECT unnest(generate_series(1,
              greatest(len(t)-2, 1))) AS i)),
@@ -97,11 +92,10 @@ object DedupQueries {
         maxBucket = 50, rescueHot = true)
       operators.Dedup.dropNearDups(corpus, pairs, "doc_id")
         .select($"doc_id").orderBy($"doc_id")
-    },
-    // q68 and q71 share this oracle: the survivor closure is over TRUE
-    // word-trigram Jaccard pairs, independent of whether the engine's
-    // candidate generator was minhash banding or gram buckets
-    Some(
+    }, Some(
+      // q68 and q71 share this oracle: the survivor closure is over TRUE
+      // word-trigram Jaccard pairs, independent of whether the engine's
+      // candidate generator was minhash banding or gram buckets
       floodClosureOracleSql)),
 
     // n-gram-path rescue gate: q68's corpus and oracle (the closure is
@@ -345,16 +339,7 @@ object DedupQueries {
              AS p)
            WHERE len(t) >= 8),
          hit AS (SELECT doc_id, p FROM tg WHERE g IN (SELECT g FROM bg)),
-         cov AS (SELECT DISTINCT doc_id, w FROM hit,
-           LATERAL (SELECT unnest(generate_series(p, p + 7)) AS w)),
-         w AS (SELECT doc_id, unnest(t) AS word,
-             unnest(generate_series(1, len(t))) AS wp FROM tk),
-         kept AS (SELECT w.doc_id, w.wp, w.word FROM w
-           LEFT JOIN cov ON w.doc_id = cov.doc_id AND w.wp = cov.w
-           WHERE cov.w IS NULL),
-         rb AS (SELECT doc_id, count(*) AS n_kept_words,
-             md5(string_agg(word, ' ' ORDER BY wp)) AS clean_md5
-           FROM kept GROUP BY doc_id)
+         """ + keptWordsSql("hit") + """
          SELECT tk.doc_id, len(tk.t) AS n_words,
            coalesce(rb.n_kept_words, 0) AS n_kept_words,
            len(tk.t) - coalesce(rb.n_kept_words, 0) AS n_removed_words,
@@ -391,10 +376,9 @@ object DedupQueries {
         .select($"doc_id", $"n_words", $"n_kept_words",
           md5($"clean_text".cast("binary")).as("clean_md5"))
         .orderBy($"doc_id")
-    },
-    // identical DECISION contract: the Spark side keys grams by the
-    // 128-bit double hash instead of the string (the scale path)
-    Some(
+    }, Some(
+      // identical DECISION contract: the Spark side keys grams by the
+      // 128-bit double hash instead of the string (the scale path)
       substringDedupOracleSql)),
 
     // Incremental dedup: a new batch (odd docs + perturbed copies of
@@ -407,13 +391,7 @@ object DedupQueries {
     // representative picked on the wrong side.
     CatalogEntry("q56_incremental_dedup", (s, d) => {
       val docs = t(s, d, "documents").select($"doc_id", $"text")
-      val batch = docs.filter($"doc_id" % 2 === 1)
-        .unionByName(docs.filter($"doc_id" % 14 === 0)
-          .select(($"doc_id" + 1000000L).as("doc_id"),
-            concat($"text", lit(" xyzzy qbf")).as("text")))
-        .unionByName(docs.filter($"doc_id" % 14 === 7)
-          .select(($"doc_id" + 2000000L).as("doc_id"),
-            concat($"text", lit(" plugh tail")).as("text")))
+      val batch = incrementalBatch(docs)
       val idx = operators.Dedup.buildNgramIndex(
         docs.filter($"doc_id" % 2 === 0), "doc_id", "text", n = 4)
       idx.grams.persist()
@@ -437,17 +415,12 @@ object DedupQueries {
     // actually costs.
     CatalogEntry("q74_bucketed_incremental", (s, d) => {
       val docs = t(s, d, "documents").select($"doc_id", $"text")
-      val batch = docs.filter($"doc_id" % 2 === 1)
-        .unionByName(docs.filter($"doc_id" % 14 === 0)
-          .select(($"doc_id" + 1000000L).as("doc_id"),
-            concat($"text", lit(" xyzzy qbf")).as("text")))
-        .unionByName(docs.filter($"doc_id" % 14 === 7)
-          .select(($"doc_id" + 2000000L).as("doc_id"),
-            concat($"text", lit(" plugh tail")).as("text")))
-      val table = q74IndexTables.computeIfAbsent(d, _ => {
-        // name embeds the sanitized dir itself — collision-free by
-        // construction (a 32-bit hash could alias two dirs onto one
-        // table; map size could race)
+      val batch = incrementalBatch(docs)
+      // the bucketed index table, built once per sfDir; its name
+      // embeds the SANITIZED dir — not a 32-bit hash, whose collisions
+      // would alias two dirs onto one table and silently serve the
+      // wrong corpus's index
+      val table = memo(s"q74 $d") {
         val name = "graft_q74_ngram_idx_" +
           d.replaceAll("[^A-Za-z0-9]", "_").takeRight(64)
         val built = operators.Dedup.buildNgramIndex(
@@ -455,17 +428,16 @@ object DedupQueries {
         operators.Dedup.writeNgramIndexBucketed(built, name,
           numBuckets = 32)
         name
-      })
+      }
       val idx = operators.Dedup.readNgramIndex(s, table, "doc_id", 4)
       operators.Dedup.incrementalDropNearDups(idx, batch, "text",
           threshold = 0.5)
         .select($"doc_id")
         .orderBy($"doc_id")
-    },
-    // identical DECISION contract: the only difference on the Spark
-    // side is that the index is round-tripped through a bucketed
-    // parquet table (build-once/search-many) before probing
-    Some(
+    }, Some(
+      // identical DECISION contract: the only difference on the Spark
+      // side is that the index is round-tripped through a bucketed
+      // parquet table (build-once/search-many) before probing
       incrementalDedupOracleSql)),
 
     // Bloom-guarded incremental EXACT dedup: q56's daily-increment
@@ -497,12 +469,11 @@ object DedupQueries {
         expectedItems = 1L << 14, numBits = 1L << 17, shards = 4)
       operators.Dedup.incrementalDropExactDups(idx, batch, "doc_id", "text")
         .select($"doc_id").orderBy($"doc_id")
-    },
-    // Bloom-guarded exact tier: survivors = batch docs whose text is
-    // not in the accepted (even-doc) set AND that are min-id within
-    // their batch identical-text group — the Bloom on the Spark side
-    // is a pure admission prefilter and must not change decisions
-    Some(
+    }, Some(
+      // Bloom-guarded exact tier: survivors = batch docs whose text is
+      // not in the accepted (even-doc) set AND that are min-id within
+      // their batch identical-text group — the Bloom on the Spark side
+      // is a pure admission prefilter and must not change decisions
       """WITH idx AS (SELECT DISTINCT text FROM documents WHERE doc_id % 2 = 0),
          b AS (
            SELECT doc_id, text FROM documents WHERE doc_id % 2 = 1
@@ -563,13 +534,12 @@ object DedupQueries {
       kept1.select($"doc_id", lit(1L).as("batch"))
         .unionByName(kept2.select($"doc_id", lit(2L).as("batch")))
         .orderBy($"doc_id", $"batch")
-    },
-    // both generations' decisions re-derived from scratch: a batch doc
-    // survives iff it is the min-id of its identical-text group within
-    // its batch AND its text is absent from the accepted union AS OF
-    // that batch (base for batch 1; base + batch-1 survivors for
-    // batch 2)
-    Some(
+    }, Some(
+      // both generations' decisions re-derived from scratch: a batch doc
+      // survives iff it is the min-id of its identical-text group within
+      // its batch AND its text is absent from the accepted union AS OF
+      // that batch (base for batch 1; base + batch-1 survivors for
+      // batch 2)
       """WITH base AS (SELECT doc_id, text FROM documents WHERE doc_id % 3 = 0),
          b1 AS (
            SELECT doc_id, text FROM documents WHERE doc_id % 3 = 1
@@ -614,13 +584,7 @@ object DedupQueries {
         .select($"a", $"b")
         .orderBy($"a", $"b")
     }, Some(
-      """WITH corpus AS (
-           SELECT doc_id, lower(text) tx FROM documents
-           UNION ALL
-           SELECT doc_id + 1000000, lower(text || ' xyzzy qbf')
-           FROM documents WHERE doc_id % 7 = 0),
-         toks AS (SELECT doc_id, regexp_split_to_array(trim(tx), '\s+') t
-           FROM corpus),
+      "WITH " + dupCorpusToksSql + """
          sh AS (SELECT DISTINCT doc_id, array_to_string(t[i:i+3], ' ') AS s
            FROM toks, LATERAL (SELECT unnest(generate_series(1,
              greatest(len(t)-3, 1))) AS i)),
@@ -644,13 +608,7 @@ object DedupQueries {
         .select($"node".as("doc_id"), $"comp".as("component"))
         .orderBy($"doc_id")
     }, Some(
-      ("""WITH corpus AS (
-           SELECT doc_id, lower(text) tx FROM documents
-           UNION ALL
-           SELECT doc_id + 1000000, lower(text || ' xyzzy qbf')
-           FROM documents WHERE doc_id % 7 = 0),
-         toks AS (SELECT doc_id, regexp_split_to_array(trim(tx), '\s+') t
-           FROM corpus),
+      ("WITH " + dupCorpusToksSql + """
          sh AS (SELECT DISTINCT doc_id, array_to_string(t[i:i+3], ' ') AS s
            FROM toks, LATERAL (SELECT unnest(generate_series(1,
              greatest(len(t)-3, 1))) AS i)),
@@ -774,12 +732,11 @@ object DedupQueries {
             hashFn = operators.Dedup.md5Hash60))
         .select($"doc_id", $"split", $"shard", $"seq_id", $"seq_offset")
         .orderBy($"doc_id")
-    },
-    // curate() end-to-end: every stage recomposed in SQL. Stage
-    // provenance: quality = q27's formula, exact dedup = q15's
-    // keep-min, near-dup closure = q34's recursive CTE, containment =
-    // q51's scoring, buckets = q36's md5 hash, packing = q41's window.
-    Some(
+    }, Some(
+      // curate() end-to-end: every stage recomposed in SQL. Stage
+      // provenance: quality = q27's formula, exact dedup = q15's
+      // keep-min, near-dup closure = q34's recursive CTE, containment =
+      // q51's scoring, buckets = q36's md5 hash, packing = q41's window.
       ("""WITH corpus AS (
            SELECT doc_id, text FROM documents
            UNION ALL
@@ -914,24 +871,6 @@ object DedupQueries {
           concat($"text", lit(" "), $"text"))
         .otherwise($"text").as("text"))
 
-  /** Run a streaming frame to completion (Trigger.AvailableNow) into a
-    * memory sink and return the materialized table — the harness that
-    * lets a `queries` entry gate a STREAMING operator against the
-    * batch DuckDB oracle. The sink name is deterministic per gate
-    * (`tag`) and the previous run's temp view is dropped first:
-    * memory-sink rows live on the driver heap, so unique-per-
-    * invocation names would accumulate a full output copy per bench
-    * warm/timed/retry run (q79 holds ~half a million decoded rows at
-    * sf0.1 — four stranded copies is real GC pressure for every
-    * query benched after it). */
-  /** q74's bucketed index table, built once per sfDir (table name
-    * embeds the SANITIZED dir — not a 32-bit hash, whose collisions
-    * would alias two dirs onto one table and silently serve the wrong
-    * corpus's index — so specs at sf0.001 and a bench at sf0.1 never
-    * share one). */
-  private val q74IndexTables =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** documents ∪ perturbed copies of every 7th doc (ids +1,000,000) —
     * the near-dup test corpus shared by q24/q25. */
   private def dupCorpus(docs: DataFrame): DataFrame =
@@ -978,16 +917,7 @@ object DedupQueries {
              row_number() OVER (PARTITION BY k ORDER BY doc_id, p) AS rn
            FROM g),
          del AS (SELECT doc_id, p FROM m WHERE c > 1 AND rn > 1),
-         cov AS (SELECT DISTINCT doc_id, w FROM del,
-           LATERAL (SELECT unnest(generate_series(p, p + 7)) AS w)),
-         w AS (SELECT doc_id, unnest(t) AS word,
-             unnest(generate_series(1, len(t))) AS wp FROM tk),
-         kept AS (SELECT w.doc_id, w.wp, w.word FROM w
-           LEFT JOIN cov ON w.doc_id = cov.doc_id AND w.wp = cov.w
-           WHERE cov.w IS NULL),
-         rb AS (SELECT doc_id, count(*) AS n_kept_words,
-             md5(string_agg(word, ' ' ORDER BY wp)) AS clean_md5
-           FROM kept GROUP BY doc_id)
+         """ + keptWordsSql("del") + """
          SELECT tk.doc_id, len(tk.t) AS n_words,
            coalesce(rb.n_kept_words, 0) AS n_kept_words,
            coalesce(rb.clean_md5, md5('')) AS clean_md5
@@ -1114,4 +1044,29 @@ object DedupQueries {
        WHERE bit_count(xor(a.simhash, b.simhash)) <= 3
        ORDER BY a, b"""
   }
+
+  /** The span-dedup oracles' rebuilt documents: every word covered by
+    * an 8-word span of `spans` (doc_id, p) is removed, and rb holds
+    * each doc's kept-word count and the md5 of its kept words. */
+  private def keptWordsSql(spans: String): String =
+    s"""cov AS (SELECT DISTINCT doc_id, w FROM $spans,
+           LATERAL (SELECT unnest(generate_series(p, p + 7)) AS w)),
+         w AS (SELECT doc_id, unnest(t) AS word,
+             unnest(generate_series(1, len(t))) AS wp FROM tk),
+         kept AS (SELECT w.doc_id, w.wp, w.word FROM w
+           LEFT JOIN cov ON w.doc_id = cov.doc_id AND w.wp = cov.w
+           WHERE cov.w IS NULL),
+         rb AS (SELECT doc_id, count(*) AS n_kept_words,
+             md5(string_agg(word, ' ' ORDER BY wp)) AS clean_md5
+           FROM kept GROUP BY doc_id)"""
+
+  /** [[dupCorpus]] in SQL, lowercased, and its whitespace tokens. */
+  private def dupCorpusToksSql: String =
+    """corpus AS (
+           SELECT doc_id, lower(text) tx FROM documents
+           UNION ALL
+           SELECT doc_id + 1000000, lower(text || ' xyzzy qbf')
+           FROM documents WHERE doc_id % 7 = 0),
+         toks AS (SELECT doc_id, regexp_split_to_array(trim(tx), '\s+') t
+           FROM corpus),"""
 }

@@ -1,6 +1,9 @@
 package graft
 package catalog
 
+import java.nio.file.{Files, Path, Paths}
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -80,38 +83,53 @@ private[catalog] object Fixtures {
     lines.unionByName(garbage)
   }
 
-  /** Reusable season-pipeline output dir, one per query tag: created
-    * once per JVM, WIPED on every call (so the S9 skip-if-exists never
-    * short-circuits a timed re-run) and deleted on JVM exit — repeated
-    * bench/verify runs must not accumulate season parquet in /tmp. */
-  private[catalog] val seasonOutDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, java.nio.file.Path]()
+  /** The one per-JVM fixture memo. `memo(key)(build)` runs `build`
+    * once per key and hands back its result (a path or a table name)
+    * ever after: fixtures are INPUT data, a deterministic function of
+    * the sf tables, so rebuilding them on every invocation would bill
+    * their Spark jobs to each timed run of the gate itself. Keys carry
+    * the sf dir, so specs at sf0.001 and a bench at sf0.1 never share
+    * an entry. */
+  private val memos =
+    new java.util.concurrent.ConcurrentHashMap[String, String]()
 
-  private[catalog] def seasonOutDir(tag: String): String = {
-    val p = seasonOutDirs.computeIfAbsent(tag, t => {
-      val dir = java.nio.file.Files.createTempDirectory(s"graft_${t}_out")
-      Runtime.getRuntime.addShutdownHook(new Thread(() => deleteTree(dir)))
-      dir
-    })
-    // wipe contents, keep the dir itself
-    if (java.nio.file.Files.exists(p)) {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(p).sorted(java.util.Comparator.reverseOrder())
-        .iterator().asScala.filterNot(_ == p)
-        .foreach(java.nio.file.Files.deleteIfExists(_))
+  private[catalog] def memo(key: String)(build: => String): String =
+    memos.computeIfAbsent(key, _ => build)
+
+  /** All fixture dirs sit under one temp root, deleted at JVM exit. */
+  private lazy val fixtureRoot: Path = {
+    val root = Files.createTempDirectory("graft_fixtures")
+    Runtime.getRuntime.addShutdownHook(new Thread(() => deleteTree(root)))
+    root
+  }
+
+  /** A memoized fixture dir: created and filled once per key. */
+  private[catalog] def fixtureDir(key: String)(fill: Path => Unit): String =
+    memo(key) {
+      val dir = Files.createTempDirectory(fixtureRoot, "fix")
+      fill(dir)
+      dir.toString
     }
+
+  /** Reusable season-pipeline output dir, one per query tag, WIPED on
+    * every call (so the S9 skip-if-exists never short-circuits a timed
+    * re-run); repeated bench/verify runs must not accumulate season
+    * parquet in /tmp. */
+  private[catalog] def seasonOutDir(tag: String): String = {
+    val p = Paths.get(fixtureDir(s"out $tag")(_ => ()))
+    if (Files.exists(p)) Files.walk(p).sorted(java.util.Comparator.reverseOrder())
+      .iterator().asScala.filterNot(_ == p).foreach(Files.deleteIfExists(_))
     p.toString
   }
 
-  private[catalog] def deleteTree(p: java.nio.file.Path): Unit =
-    if (java.nio.file.Files.exists(p)) {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(p).sorted(java.util.Comparator.reverseOrder())
-        .iterator().asScala.foreach(java.nio.file.Files.deleteIfExists(_))
+  private def deleteTree(p: Path): Unit =
+    if (Files.exists(p)) {
+      Files.walk(p).sorted(java.util.Comparator.reverseOrder())
+        .iterator().asScala.foreach(Files.deleteIfExists(_))
     }
 
-  /** Streaming-gate fixtures (q77–q79), memoized per sfDir like
-    * [[q65Fixtures]]: `events/` holds the events table as several
+  /** Streaming-gate fixtures (q77–q79), memoized per sfDir:
+    * `events/` holds the events table as several
     * parquet files (so `maxFilesPerTrigger` yields several
     * micro-batches and cross-batch watermark/state is actually
     * exercised) PLUS one sentinel row 400 days past the real range,
@@ -124,14 +142,8 @@ private[catalog] object Fixtures {
     * all, while the sentinel's own bin stays in state and never
     * emits). `candump/` holds the q21 fixture lines as text files
     * for the streaming decode gate. */
-  private[catalog] val streamFixtureCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private[catalog] def streamFixtures(s: SparkSession, d: String): String =
-    streamFixtureCache.computeIfAbsent(d, _ => {
-      import java.nio.file.{Files, Path}
-      val dir = Files.createTempDirectory("graft_stream_fix")
-      Runtime.getRuntime.addShutdownHook(new Thread(() => deleteTree(dir)))
+    fixtureDir(s"stream $d") { dir =>
       val ev = t(s, d, "events")
         .select(col("ts"), col("user_id"), col("event_id"), col("value"),
           col("event_type"))
@@ -147,7 +159,6 @@ private[catalog] object Fixtures {
         lit(0.0).as("value"), lit("__sentinel").as("event_type"))
       val stage = dir.resolve("sentinel_stage")
       sentinel.coalesce(1).write.parquet(stage.toString)
-      import scala.jdk.CollectionConverters._
       val part = Files.list(stage).iterator().asScala
         .find(_.getFileName.toString.startsWith("part-")).get
       val dst = evDir.resolve("part-99999-sentinel.snappy.parquet")
@@ -214,9 +225,18 @@ private[catalog] object Fixtures {
           Files.setLastModifiedTime(p, java.nio.file.attribute.FileTime
             .fromMillis(System.currentTimeMillis() + i * 1000L))
         }
-      dir.toString
-    })
+    }
 
+  /** Run a streaming frame to completion (Trigger.AvailableNow) into a
+    * memory sink and return the materialized table — the harness that
+    * lets a `queries` entry gate a STREAMING operator against the
+    * batch DuckDB oracle. The sink name is deterministic per gate
+    * (`tag`) and the previous run's temp view is dropped first:
+    * memory-sink rows live on the driver heap, so unique-per-
+    * invocation names would accumulate a full output copy per bench
+    * warm/timed/retry run (q79 holds ~half a million decoded rows at
+    * sf0.1 — four stranded copies is real GC pressure for every
+    * query benched after it). */
   private[catalog] def runStreamToTable(s: SparkSession, df: DataFrame,
                                mode: String, tag: String): DataFrame = {
     val name = s"graft_stream_$tag"
@@ -246,6 +266,18 @@ private[catalog] object Fixtures {
              LATERAL (SELECT unnest(generate_series(1, len(h) - win + 1))
                AS s),
              LATERAL (SELECT h[s : s + win - 1] AS sl)),"""
+
+  /** The incremental-dedup batch (q56's fixture): odd docs plus
+    * perturbed copies of every 14th doc (ids +1,000,000) and of every
+    * 14th-plus-7 doc (ids +2,000,000); [[decontamBatchSql]] is its SQL. */
+  private[catalog] def incrementalBatch(docs: DataFrame): DataFrame =
+    docs.filter($"doc_id" % 2 === 1)
+      .unionByName(docs.filter($"doc_id" % 14 === 0)
+        .select(($"doc_id" + 1000000L).as("doc_id"),
+          concat($"text", lit(" xyzzy qbf")).as("text")))
+      .unionByName(docs.filter($"doc_id" % 14 === 7)
+        .select(($"doc_id" + 2000000L).as("doc_id"),
+          concat($"text", lit(" plugh tail")).as("text")))
 
   /** The incremental-dedup batch: odd docs plus two appended-tail
     * strata of every 14th doc, tokenized into 3-word shingles (bsh). */

@@ -6,7 +6,9 @@ import org.apache.spark.sql.functions._
 
 import Fixtures._
 
-/** Image gates: decode, perceptual-hash and embedding dedup, admission streams, quarantine, resize, datasheets and the media cascade. */
+/** Image gates: decode, perceptual-hash and embedding dedup,
+  * admission streams, quarantine, resize, datasheets and the media
+  * cascade. */
 object ImageQueries {
 
   val entries: Seq[CatalogEntry] = Seq(
@@ -51,11 +53,10 @@ object ImageQueries {
           element_at($"ch_sums", 2).as("g_sum"),
           element_at($"ch_sums", 3).as("b_sum"))
         .orderBy($"media_id")
-    },
-    // the pixel-ramp arithmetic and channel sums replayed in SQL —
-    // a lossless codec means the decoded bytes ARE the formula; the
-    // three corrupt ids must come back as explicit null rows
-    Some(
+    }, Some(
+      // the pixel-ramp arithmetic and channel sums replayed in SQL —
+      // a lossless codec means the decoded bytes ARE the formula; the
+      // three corrupt ids must come back as explicit null rows
       """WITH m AS (SELECT doc_id AS media_id,
            CAST(8 + doc_id % 5 AS INT) AS w,
            CAST(6 + doc_id % 4 AS INT) AS h
@@ -152,14 +153,13 @@ object ImageQueries {
         .select($"media_id", $"dhash", $"ahash",
           coalesce($"n_pairs", lit(0L)).as("n_pairs"), $"top_partner")
         .orderBy($"media_id")
-    },
-    // pixels from the planted formula, both perceptual-hash
-    // constructions (luma grids, integer div index math, gradient /
-    // mean bit packing — bit 63 spelled as the signed MIN to dodge
-    // DuckDB's shift-overflow guard), and the exhaustive pairwise
-    // Hamming truth with per-image pair stats — replayed entirely in
-    // SQL against the lossless decode contract
-    Some(
+    }, Some(
+      // pixels from the planted formula, both perceptual-hash
+      // constructions (luma grids, integer div index math, gradient /
+      // mean bit packing — bit 63 spelled as the signed MIN to dodge
+      // DuckDB's shift-overflow guard), and the exhaustive pairwise
+      // Hamming truth with per-image pair stats — replayed entirely in
+      // SQL against the lossless decode contract
       """WITH imgs AS (
            SELECT i AS media_id, i AS src, 0 AS shift FROM range(1, 11) t(i)
            UNION ALL SELECT 100 + i, i, 0 FROM range(1, 11) t(i)
@@ -234,13 +234,7 @@ object ImageQueries {
     // unprovable). The oracle replays both sides' pixel formulas,
     // the dHash construction and the exhaustive argmin decision.
     CatalogEntry("q126_stream_image_admission", (s, d) => {
-      val refMedia = s.createDataFrame(
-          (1L to 10L).map(i => (i, refImage(i, 0, "png"))))
-        .toDF("media_id", "payload")
-      val refSigs = operators.Multimodal.perceptualHashes(
-          operators.Multimodal.decodeImages(refMedia, "payload"),
-          "pixels", "img_width", "img_height")
-        .select($"media_id", $"dhash")
+      val refSigs = refSignatures(s, 10)
       val members = operators.Dedup.hammingBandMembers(refSigs,
         "media_id", "dhash", maxHamming = 6)
       members.persist(org.apache.spark.storage.StorageLevel
@@ -271,12 +265,11 @@ object ImageQueries {
         .orderBy($"media_id")
       members.unpersist()
       out
-    },
-    // both sides' planted pixel formulas, the dHash construction and
-    // the exhaustive argmin (hamming, ref_id) admission decision
-    // replayed in SQL; corrupt arrivals come back as admitted
-    // null-signature rows
-    Some(
+    }, Some(
+      // both sides' planted pixel formulas, the dHash construction and
+      // the exhaustive argmin (hamming, ref_id) admission decision
+      // replayed in SQL; corrupt arrivals come back as admitted
+      // null-signature rows
       ("""WITH refs AS (
            SELECT i AS ref_id, i AS src, 0 AS shift FROM range(1, 11) t(i)),
          arrivals AS (
@@ -345,11 +338,10 @@ object ImageQueries {
             lit(null).cast("long").as("match_id"),
             $"decode_status".as("reason")))
         .orderBy($"media_id")
-    },
-    // pixel formulas → dHash grid → argmin admission for the healthy
-    // route; explicit VALUES rows with the deterministic reason
-    // classification for the quarantined route
-    Some(
+    }, Some(
+      // pixel formulas → dHash grid → argmin admission for the healthy
+      // route; explicit VALUES rows with the deterministic reason
+      // classification for the quarantined route
       quarantineOracleSql)),
 
     // EXACTLY-ONCE output for the dead-letter ingest — q142's routing
@@ -408,12 +400,11 @@ object ImageQueries {
             lit(null).cast("long").as("match_id"),
             $"decode_status".as("reason")))
         .orderBy($"media_id")
-    },
-    // q146: q142's replay verbatim — the idempotent sink under a
-    // simulated crash-redelivery must produce EXACTLY the no-crash
-    // output (an append sink would duplicate the replayed batch's
-    // rows, breaking the oracle's row counts)
-    Some(
+    }, Some(
+      // q146: q142's replay verbatim — the idempotent sink under a
+      // simulated crash-redelivery must produce EXACTLY the no-crash
+      // output (an append sink would duplicate the replayed batch's
+      // rows, breaking the oracle's row counts)
       quarantineOracleSql)),
 
     // Image RESIZE as a VALUE gate — the feature-prep verb between
@@ -442,18 +433,17 @@ object ImageQueries {
           expr("aggregate(sequence(1, length(resized)), 0L, " +
             s"(a, i) -> a + $byteAt)").as("total"))
         .orderBy($"media_id")
-    },
-    // the full text→vector→admission chain replayed with
-    // integer-exact sparse dots: tokenize → md5 bucket/sign → sparse
-    // vectors for BOTH corpora → cosine vs every accepted doc →
-    // max-(cosine, smaller-id) decision at tau (nProbe = nCells, so
-    // the streamed probe equals the brute-force rule); empty/null
-    // arrivals are explicit admit rows
-    // the planted pixel formula sampled through the SAME integer
-    // floor rule ((x*16)//7, (y*12)//5), every byte position-weighted
-    // — one disagreeing output byte anywhere in the resized buffer
-    // breaks the checksum
-    Some(
+    }, Some(
+      // the full text→vector→admission chain replayed with
+      // integer-exact sparse dots: tokenize → md5 bucket/sign → sparse
+      // vectors for BOTH corpora → cosine vs every accepted doc →
+      // max-(cosine, smaller-id) decision at tau (nProbe = nCells, so
+      // the streamed probe equals the brute-force rule); empty/null
+      // arrivals are explicit admit rows
+      // the planted pixel formula sampled through the SAME integer
+      // floor rule ((x*16)//7, (y*12)//5), every byte position-weighted
+      // — one disagreeing output byte anywhere in the resized buffer
+      // breaks the checksum
       """WITH media AS (SELECT i AS media_id, i AS src FROM range(1, 7) t(i)),
          px AS (
            SELECT media_id,
@@ -516,12 +506,11 @@ object ImageQueries {
           coalesce($"cosine" < 0.9, lit(true)).as("admitted"),
           when($"cosine" >= 0.9, $"neighbor_id").as("match_id"))
         .orderBy($"media_id")
-    },
-    // q148: pixel formulas → gray luma (= v) → the 8×8 embed lattice
-    // → integer-exact dots → cosine argmax (ties to the smaller ref)
-    // → the tau decision; corrupt/null payloads are explicit admit
-    // rows. q149 runs the SAME oracle against the streamed IVF route.
-    Some(
+    }, Some(
+      // q148: pixel formulas → gray luma (= v) → the 8×8 embed lattice
+      // → integer-exact dots → cosine argmax (ties to the smaller ref)
+      // → the tau decision; corrupt/null payloads are explicit admit
+      // rows. q149 runs the SAME oracle against the streamed IVF route.
       imageEmbedOracleSql)),
 
     // The IMAGE modality's semantic admission rung IN FLIGHT — q138's
@@ -574,10 +563,9 @@ object ImageQueries {
         .orderBy($"media_id")
       members.unpersist()
       out
-    },
-    // q149: identical decisions through the streamed IVF route
-    // (nProbe = nCells — the probe IS the brute-force rule)
-    Some(
+    }, Some(
+      // q149: identical decisions through the streamed IVF route
+      // (nProbe = nCells — the probe IS the brute-force rule)
       imageEmbedOracleSql)),
 
     // The composed MEDIA admission cascade — q147's multimodal twin,
@@ -630,14 +618,13 @@ object ImageQueries {
         .orderBy($"media_id")
       hamMembers.unpersist(); members.unpersist()
       res
-    },
-    // q159: the media cascade replayed tier by tier — both planted
-    // pixel formulas, the 9×8 gradient dHash construction, the
-    // pigeonhole argmin vs the refs-1..6 perceptual window, the 8×8
-    // embed lattice cosine argmax vs the refs-1..10 vector corpus,
-    // the deterministic dead-letter statuses, and the first-reject
-    // precedence with per-tier pointers
-    Some(
+    }, Some(
+      // q159: the media cascade replayed tier by tier — both planted
+      // pixel formulas, the 9×8 gradient dHash construction, the
+      // pigeonhole argmin vs the refs-1..6 perceptual window, the 8×8
+      // embed lattice cosine argmax vs the refs-1..10 vector corpus,
+      // the deterministic dead-letter statuses, and the first-reject
+      // precedence with per-tier pointers
       (mediaCascadeDhashSql + """
            FROM ag a JOIN ag b ON a.media_id = b.media_id
              AND b.gy = a.gy AND b.gx = a.gx + 1
@@ -735,13 +722,12 @@ object ImageQueries {
           $"admitted_live", $"reason_live",
           $"pmid_live", $"pham_live", $"smid_live")
         .orderBy($"media_id")
-    },
-    // q167: q159's pixel math replayed in TWO decision worlds — the
-    // pre world ≡ q159's reference sets, the live world with refs 2
-    // (both faces) and 8 (vector corpus) taken down; per-world argmin
-    // (hamming, id) and argmax (cosine, id) tie-breaks and the
-    // dead_letter → perceptual → semantic precedence
-    Some(
+    }, Some(
+      // q167: q159's pixel math replayed in TWO decision worlds — the
+      // pre world ≡ q159's reference sets, the live world with refs 2
+      // (both faces) and 8 (vector corpus) taken down; per-world argmin
+      // (hamming, id) and argmax (cosine, id) tie-breaks and the
+      // dead_letter → perceptual → semantic precedence
       mediaCascadeTwoWorldOracleSql)),
 
     // q167's decision contract with the perceptual tier on the
@@ -802,13 +788,12 @@ object ImageQueries {
           $"admitted_live", $"reason_live",
           $"pmid_live", $"pham_live", $"smid_live")
         .orderBy($"media_id")
-    },
-    // q168: the SAME two-world decision contract with the perceptual
-    // tier served by the RELATIONAL banded index — identical oracle
-    // by design (pigeonhole recall-exact on both faces, identical
-    // argmin/argmax tie-breaks): swapping the perceptual tier's face
-    // must move no decision
-    Some(
+    }, Some(
+      // q168: the SAME two-world decision contract with the perceptual
+      // tier served by the RELATIONAL banded index — identical oracle
+      // by design (pigeonhole recall-exact on both faces, identical
+      // argmin/argmax tie-breaks): swapping the perceptual tier's face
+      // must move no decision
       mediaCascadeTwoWorldOracleSql)),
 
     // The DURABLE face of the perceptual admission reference set —
@@ -826,13 +811,7 @@ object ImageQueries {
     // last two must agree decision-for-decision (logical ≡ physical),
     // and the oracle replays both argmin worlds.
     CatalogEntry("q137_durable_members_lifecycle", (s, d) => {
-      val refMedia = s.createDataFrame(
-          (1L to 10L).map(i => (i, refImage(i, 0, "png"))))
-        .toDF("media_id", "payload")
-      val refSigs = operators.Multimodal.perceptualHashes(
-          operators.Multimodal.decodeImages(refMedia, "payload"),
-          "pixels", "img_width", "img_height")
-        .select($"media_id", $"dhash")
+      val refSigs = refSignatures(s, 10)
       operators.Dedup.writeHammingMembers(s,
         operators.Dedup.hammingBandMembers(refSigs, "media_id", "dhash",
           maxHamming = 6),
@@ -885,12 +864,11 @@ object ImageQueries {
           $"admitted_live", $"match_live", $"admitted_post",
           $"match_post")
         .orderBy($"media_id")
-    },
-    // the q134 replay with THREE decision worlds: the full reference
-    // set (pre), and the set minus the tombstoned ids twice — the
-    // ledger-applied live table and the post-compaction table must
-    // produce the SAME argmin decisions (logical ≡ physical delete)
-    Some(
+    }, Some(
+      // the q134 replay with THREE decision worlds: the full reference
+      // set (pre), and the set minus the tombstoned ids twice — the
+      // ledger-applied live table and the post-compaction table must
+      // produce the SAME argmin decisions (logical ≡ physical delete)
       ("""WITH refs AS (
            SELECT i AS ref_id, i AS src, 0 AS shift FROM range(1, 11) t(i)),
          arrivals AS (
@@ -965,12 +943,11 @@ object ImageQueries {
         .select($"media_id", $"format", $"decode_status", $"n_px",
           $"dup_of")
         .orderBy($"media_id")
-    },
-    // q155: magic-byte format table + dead-letter classification from
-    // planted knowledge; dims from the fixture; dup pointers from the
-    // q142 dHash construction over the planted formulas (re-encodes
-    // share a src → share a signature; the min-id member is canonical)
-    Some(
+    }, Some(
+      // q155: magic-byte format table + dead-letter classification from
+      // planted knowledge; dims from the fixture; dup pointers from the
+      // q142 dHash construction over the planted formulas (re-encodes
+      // share a src → share a signature; the min-id member is canonical)
       """WITH ok AS (
            SELECT media_id, src, fmt FROM (VALUES
              (1, 1, 'png'), (2, 2, 'png'), (3, 3, 'png'),
@@ -1027,13 +1004,7 @@ object ImageQueries {
     // formulas, the dHash construction and BOTH exhaustive argmin
     // decisions (vs refs, and vs refs minus the tombstones).
     CatalogEntry("q134_phash_takedown_stream", (s, d) => {
-      val refMedia = s.createDataFrame(
-          (1L to 10L).map(i => (i, refImage(i, 0, "png"))))
-        .toDF("media_id", "payload")
-      val refSigs = operators.Multimodal.perceptualHashes(
-          operators.Multimodal.decodeImages(refMedia, "payload"),
-          "pixels", "img_width", "img_height")
-        .select($"media_id", $"dhash")
+      val refSigs = refSignatures(s, 10)
       val members = operators.Dedup.hammingBandMembers(refSigs,
         "media_id", "dhash", maxHamming = 6)
       members.persist(org.apache.spark.storage.StorageLevel
@@ -1077,13 +1048,12 @@ object ImageQueries {
         java.util.Arrays.asList(out.collect(): _*), out.schema)
       members.unpersist(); live.unpersist()
       materialized
-    },
-    // both sides' pixel formulas and dHash constructions replayed,
-    // then BOTH exhaustive argmin admission decisions — against the
-    // full reference set (pre) and against the set minus the
-    // tombstoned ids (post); corrupt arrivals are admitted
-    // null-signature rows in both worlds
-    Some(
+    }, Some(
+      // both sides' pixel formulas and dHash constructions replayed,
+      // then BOTH exhaustive argmin admission decisions — against the
+      // full reference set (pre) and against the set minus the
+      // tombstoned ids (post); corrupt arrivals are admitted
+      // null-signature rows in both worlds
       ("""WITH refs AS (
            SELECT i AS ref_id, i AS src, 0 AS shift FROM range(1, 11) t(i)),
          arrivals AS (
@@ -1157,20 +1127,23 @@ object ImageQueries {
       .withColumn("decode_status",
         operators.Multimodal.decodeStatus($"payload", $"img_width"))
 
+  /** The dHash signatures of planted reference PNGs 1..`n`, through
+    * the real decode path ([[refDhashSql]] replays them). */
+  private def refSignatures(s: SparkSession, n: Long): DataFrame =
+    operators.Multimodal.perceptualHashes(
+        operators.Multimodal.decodeImages(s.createDataFrame(
+            (1L to n).map(i => (i, refImage(i, 0, "png"))))
+          .toDF("media_id", "payload"), "payload"),
+        "pixels", "img_width", "img_height")
+      .select($"media_id", $"dhash")
+
   /** The dead-letter ingests' fixture (q142, q146): Hamming members of
     * 8 reference PNGs (persisted), and a fresh `tag` directory whose
     * `in` holds BMP re-encodes of refs 1-3, novel PNGs 21-22 and the
     * garbage / empty / null payloads in 3 files. */
   private def quarantineFixture(
       s: SparkSession, tag: String): (DataFrame, java.nio.file.Path) = {
-    val refMedia = s.createDataFrame(
-        (1L to 8L).map(i => (i, refImage(i, 0, "png"))))
-      .toDF("media_id", "payload")
-    val members = operators.Dedup.hammingBandMembers(
-      operators.Multimodal.perceptualHashes(
-          operators.Multimodal.decodeImages(refMedia, "payload"),
-          "pixels", "img_width", "img_height")
-        .select($"media_id", $"dhash"),
+    val members = operators.Dedup.hammingBandMembers(refSignatures(s, 8),
       "media_id", "dhash", maxHamming = 6)
     members.persist(org.apache.spark.storage.StorageLevel
       .MEMORY_AND_DISK).count()

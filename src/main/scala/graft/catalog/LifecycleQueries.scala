@@ -6,7 +6,9 @@ import org.apache.spark.sql.functions._
 
 import Fixtures._
 
-/** Durable index lifecycles: takedown, append, maintenance and retrain of the exact, n-gram, members, LSH, IVF×PQ, LM, BPE, LR, DSIR and winnow indexes. */
+/** Durable index lifecycles: takedown, append, maintenance and
+  * retrain of the exact, n-gram, members, LSH, IVF×PQ, LM, BPE, LR,
+  * DSIR and winnow indexes. */
 object LifecycleQueries {
 
   val entries: Seq[CatalogEntry] = Seq(
@@ -23,13 +25,7 @@ object LifecycleQueries {
     // the recursive component closure and both taint decisions.
     CatalogEntry("q129_ngram_takedown", (s, d) => {
       val docs = t(s, d, "documents").select($"doc_id", $"text")
-      val batch = docs.filter($"doc_id" % 2 === 1)
-        .unionByName(docs.filter($"doc_id" % 14 === 0)
-          .select(($"doc_id" + 1000000L).as("doc_id"),
-            concat($"text", lit(" xyzzy qbf")).as("text")))
-        .unionByName(docs.filter($"doc_id" % 14 === 7)
-          .select(($"doc_id" + 2000000L).as("doc_id"),
-            concat($"text", lit(" plugh tail")).as("text")))
+      val batch = incrementalBatch(docs)
       val idx = operators.Dedup.buildNgramIndex(
         docs.filter($"doc_id" % 2 === 0), "doc_id", "text", n = 4)
       idx.grams.persist()
@@ -55,12 +51,11 @@ object LifecycleQueries {
         java.util.Arrays.asList(out.collect(): _*), out.schema)
       idx.grams.unpersist()
       materialized
-    },
-    // the full incremental near-dup contract replayed twice (pre /
-    // post takedown): shingles, cross Jaccard against both accepted
-    // sets, within-batch pairs, the recursive closure and both taint
-    // decisions — set algebra over the q56 oracle
-    Some(
+    }, Some(
+      // the full incremental near-dup contract replayed twice (pre /
+      // post takedown): shingles, cross Jaccard against both accepted
+      // sets, within-batch pairs, the recursive closure and both taint
+      // decisions — set algebra over the q56 oracle
       ("""WITH olds AS (SELECT doc_id, lower(trim(text)) tx
              FROM documents WHERE doc_id % 2 = 0),
           live_olds AS (SELECT * FROM olds WHERE doc_id % 6 != 0),
@@ -130,12 +125,11 @@ object LifecycleQueries {
         .join(flags(live, "admitted_live"), Seq("doc_id"))
         .join(flags(purged, "admitted_post"), Seq("doc_id"))
         .orderBy($"doc_id")
-    },
-    // set-level replay of all three admission decisions: accepted
-    // texts, accepted EXCEPT the tombstoned texts, and the per-text
-    // min-id collapse — identical live/post columns pin that the
-    // Bloom purge moves cost, never decisions
-    Some(
+    }, Some(
+      // set-level replay of all three admission decisions: accepted
+      // texts, accepted EXCEPT the tombstoned texts, and the per-text
+      // min-id collapse — identical live/post columns pin that the
+      // Bloom purge moves cost, never decisions
       (exactTakedownBatchSql + """
          live_texts AS (SELECT text FROM acc_texts
            EXCEPT SELECT text FROM tomb_texts)
@@ -192,11 +186,10 @@ object LifecycleQueries {
       pre.join(live, Seq("query_id")).join(post, Seq("query_id"))
         .select($"query_id", $"pre_top1", $"live_top1", $"post_top1")
         .orderBy($"query_id")
-    },
-    // three brute-force argmax replays: the full corpus (pre), and
-    // the corpus minus the tombstoned sources (the logical-delete
-    // answer and the post-purge answer, which must agree)
-    Some(
+    }, Some(
+      // three brute-force argmax replays: the full corpus (pre), and
+      // the corpus minus the tombstoned sources (the logical-delete
+      // answer and the post-purge answer, which must agree)
       ("""WITH c0 AS (SELECT vec_id, list_transform(embedding::DOUBLE[], x -> x) AS v
              FROM embeddings),
          twins AS (SELECT vec_id + 20000 AS vec_id,
@@ -275,12 +268,11 @@ object LifecycleQueries {
           $"purge_fired".as("fired_2"),
           $"gen_changed".as("gen_changed_2"))))
         .orderBy($"doc_id")
-    },
-    // the q128 decision algebra (admission vs accepted-minus-
-    // tombstoned texts, per-text min-id rule) + the window's
-    // lifecycle flags: fired = pending ledger rows exist, the
-    // generation flips iff fired, the ledger clears
-    Some(
+    }, Some(
+      // the q128 decision algebra (admission vs accepted-minus-
+      // tombstoned texts, per-text min-id rule) + the window's
+      // lifecycle flags: fired = pending ledger rows exist, the
+      // generation flips iff fired, the ledger clears
       (exactTakedownBatchSql + """
          live_texts AS (SELECT text FROM acc_texts
            EXCEPT SELECT text FROM tomb_texts),
@@ -320,13 +312,7 @@ object LifecycleQueries {
       // keep pinning the contract itself at full width
       val docs = t(s, d, "documents").select($"doc_id", $"text")
         .filter($"doc_id" < 250)
-      val batch = docs.filter($"doc_id" % 2 === 1)
-        .unionByName(docs.filter($"doc_id" % 14 === 0)
-          .select(($"doc_id" + 1000000L).as("doc_id"),
-            concat($"text", lit(" xyzzy qbf")).as("text")))
-        .unionByName(docs.filter($"doc_id" % 14 === 7)
-          .select(($"doc_id" + 2000000L).as("doc_id"),
-            concat($"text", lit(" plugh tail")).as("text")))
+      val batch = incrementalBatch(docs)
       operators.Dedup.writeNgramIndexRooted(s, "q140_idx",
         operators.Dedup.buildNgramIndex(
           docs.filter($"doc_id" % 2 === 0), "doc_id", "text", n = 4))
@@ -358,12 +344,11 @@ object LifecycleQueries {
           $"fired".as("fired_2"),
           $"gen_changed".as("gen_changed_2"))))
         .orderBy($"doc_id")
-    },
-    // the q129 incremental contract replayed ONCE against
-    // accepted-minus-tombstoned (the window's pre and post decisions
-    // are both ledger-applied, so they replay identically) + the
-    // lifecycle flags
-    Some(
+    }, Some(
+      // the q129 incremental contract replayed ONCE against
+      // accepted-minus-tombstoned (the window's pre and post decisions
+      // are both ledger-applied, so they replay identically) + the
+      // lifecycle flags
       ("""WITH olds AS (SELECT doc_id, lower(trim(text)) tx
              FROM documents WHERE doc_id % 2 = 0 AND doc_id < 250),
           batch AS (
@@ -470,12 +455,11 @@ object LifecycleQueries {
           $"fired".as("fired_2"),
           $"gen_changed".as("gen_changed_2"))))
         .orderBy($"media_id")
-    },
-    // md5-derived signatures, XOR bit flips and the exhaustive
-    // argmin admission decision vs refs-minus-tombstoned (the
-    // window's pre and post are both ledger-applied), + lifecycle
-    // flags
-    Some(
+    }, Some(
+      // md5-derived signatures, XOR bit flips and the exhaustive
+      // argmin admission decision vs refs-minus-tombstoned (the
+      // window's pre and post are both ledger-applied), + lifecycle
+      // flags
       """WITH refs AS (SELECT id AS media_id,
             ('0x' || substring(md5('q141:' || id), 1, 15))::BIGINT AS sig
            FROM range(1, 41) t(id)),
@@ -555,14 +539,13 @@ object LifecycleQueries {
       pre.join(live, Seq("query_id")).join(post, Seq("query_id"))
         .select($"query_id", $"pre_top1", $"live_top1", $"post_top1")
         .orderBy($"query_id")
-    },
-    // q157: brute-force cosine argmax replayed over both decision
-    // worlds. EXACT twins make every rank deterministic: the query's
-    // own vector appears twice (original id < 10, twin id + 20000),
-    // both tie at cosine 1.0 and the id tie-break picks the original
-    // pre-takedown and the twin after; post ≡ live pins that the
-    // physical purge moves cost, never answers
-    Some(
+    }, Some(
+      // q157: brute-force cosine argmax replayed over both decision
+      // worlds. EXACT twins make every rank deterministic: the query's
+      // own vector appears twice (original id < 10, twin id + 20000),
+      // both tie at cosine 1.0 and the id tie-break picks the original
+      // pre-takedown and the twin after; post ≡ live pins that the
+      // physical purge moves cost, never answers
       ("""WITH c0 AS (SELECT vec_id, embedding::DOUBLE[] AS v
              FROM embeddings),
          twins AS (SELECT vec_id + 20000 AS vec_id, v
@@ -613,11 +596,10 @@ object LifecycleQueries {
       operators.TextAnalysis.corpusDatasheetFromStats(s, path)
         .filter($"metric" =!= "distinct_texts_est")
         .orderBy($"metric")
-    },
-    // q163: every gated metric is an integer fold over the union of
-    // both batches — doc/token/char/empty counts and per-language
-    // composition, replayed directly
-    Some(
+    }, Some(
+      // q163: every gated metric is an integer fold over the union of
+      // both batches — doc/token/char/empty counts and per-language
+      // composition, replayed directly
       """WITH docs AS (SELECT doc_id, text,
            CASE WHEN doc_id % 3 = 0 THEN 'en'
                 WHEN doc_id % 3 = 1 THEN 'pt' END AS lang
@@ -675,12 +657,11 @@ object LifecycleQueries {
       pre.join(post, Seq("query_id"))
         .select($"query_id", $"pre_top1", $"post_top1")
         .orderBy($"query_id")
-    },
-    // q162: brute-force cosine argmax replayed over the built corpus
-    // (pre: the +30000 exact twin is the only cosine-1.0 row) and the
-    // post-append corpus (the appended original's smaller id wins the
-    // 1.0 tie)
-    Some(
+    }, Some(
+      // q162: brute-force cosine argmax replayed over the built corpus
+      // (pre: the +30000 exact twin is the only cosine-1.0 row) and the
+      // post-append corpus (the appended original's smaller id wins the
+      // 1.0 tie)
       """WITH c0 AS (SELECT vec_id, embedding::DOUBLE[] AS v
              FROM embeddings),
          twins AS (SELECT vec_id + 30000 AS vec_id, v
@@ -746,13 +727,12 @@ object LifecycleQueries {
         .select($"step", $"n_sample_tokens", $"pre_oov_tokens",
           $"refit_fired", $"post_oov_tokens", $"epoch_changed")
         .orderBy($"step")
-    },
-    // q160: the token set algebra    // q160: the token set algebra of both maintenance calls — OOV of
-    // the drifted sample vs the original fit vocabulary (call 1's
-    // probe), the fire threshold, OOV vs the refit vocabulary
-    // (call 1's re-probe = call 2's probe), and call 2's quiet-no-op
-    // mechanics — all integer counts
-    Some(
+    }, Some(
+      // q160: the token set algebra    // q160: the token set algebra of both maintenance calls — OOV of
+      // the drifted sample vs the original fit vocabulary (call 1's
+      // probe), the fire threshold, OOV vs the refit vocabulary
+      // (call 1's re-probe = call 2's probe), and call 2's quiet-no-op
+      // mechanics — all integer counts
       """WITH base AS (SELECT doc_id, text FROM documents
            WHERE length(trim(text)) > 0 AND doc_id < 1000),
          ev AS (SELECT lower(trim(text)) AS tx FROM base
@@ -836,10 +816,9 @@ object LifecycleQueries {
         .select($"step", $"n_sample_words", $"pre_oov_words",
           $"refit_fired", $"post_oov_words", $"gen_changed")
         .orderBy($"step")
-    },
-    // q161: the same two-call replay over WORD occurrences vs the
-    // fitted word-pieces vocabularies (original and refit)
-    Some(
+    }, Some(
+      // q161: the same two-call replay over WORD occurrences vs the
+      // fitted word-pieces vocabularies (original and refit)
       """WITH base AS (SELECT doc_id, text FROM documents
            WHERE length(trim(text)) > 0 AND doc_id < 1000),
          ev AS (SELECT lower(trim(text)) AS tx FROM base
@@ -922,23 +901,16 @@ object LifecycleQueries {
       val refit = evens.unionByName(drifted
         .select($"doc_id", $"text",
           ($"doc_id" % 4 === 0).cast("int").as("y")))
-      def call(i: Int): DataFrame =
-        operators.Curation.maintainQualityLr(s, "q164_lr", drifted,
-            "text", refit, "doc_id", "y", maxBlindRate = 0.2,
-            iters = 1, stepSize = 0.5,
-            hashFn = operators.Dedup.md5Hash60, exactFold = false)
-          .withColumn("step", lit(i.toLong))
-      call(1).unionByName(call(2))
-        .select($"step", $"n_sample_feats", $"pre_blind_feats",
-          $"refit_fired", $"post_blind_feats", $"epoch_changed")
-        .orderBy($"step")
-    },
-    // q164: the two-call window replayed as md5-bucket SET ALGEBRA
-    // over the shared unigram+bigram feature space (q84's feature
-    // construction verbatim) — known_a = fit-time coverage of the
-    // evens, known_b = coverage of the refit corpus, blind counts are
-    // occurrence-weighted anti-join sums, all counts BIGINT-cast
-    Some(
+      twoWindowCalls(operators.Curation.maintainQualityLr(s, "q164_lr",
+        drifted, "text", refit, "doc_id", "y", maxBlindRate = 0.2,
+        iters = 1, stepSize = 0.5,
+        hashFn = operators.Dedup.md5Hash60, exactFold = false))
+    }, Some(
+      // q164: the two-call window replayed as md5-bucket SET ALGEBRA
+      // over the shared unigram+bigram feature space (q84's feature
+      // construction verbatim) — known_a = fit-time coverage of the
+      // evens, known_b = coverage of the refit corpus, blind counts are
+      // occurrence-weighted anti-join sums, all counts BIGINT-cast
       ("""WITH base AS (SELECT doc_id, text FROM documents
            WHERE length(trim(text)) > 0 AND doc_id < 1000),
          ev AS (SELECT regexp_split_to_array(trim(lower(text)),
@@ -997,20 +969,13 @@ object LifecycleQueries {
           hashFn = operators.Dedup.md5Hash60),
         evens, target, "text", operators.Dedup.md5Hash60)
       val refitSource = evens.unionByName(drifted)
-      def call(i: Int): DataFrame =
-        operators.Curation.maintainDsirRatios(s, "q165_dsir", drifted,
-            "text", refitSource, target, maxBlindRate = 0.2,
-            smoothing = 1.0, hashFn = operators.Dedup.md5Hash60)
-          .withColumn("step", lit(i.toLong))
-      call(1).unionByName(call(2))
-        .select($"step", $"n_sample_feats", $"pre_blind_feats",
-          $"refit_fired", $"post_blind_feats", $"epoch_changed")
-        .orderBy($"step")
-    },
-    // q165: identical chain, but the fit-time coverage is source ∪
-    // TARGET (the evens plus the zz-qq-suffixed target slice) and the
-    // refit coverage adds the drifted sample to the source side
-    Some(
+      twoWindowCalls(operators.Curation.maintainDsirRatios(s, "q165_dsir",
+        drifted, "text", refitSource, target, maxBlindRate = 0.2,
+        smoothing = 1.0, hashFn = operators.Dedup.md5Hash60))
+    }, Some(
+      // q165: identical chain, but the fit-time coverage is source ∪
+      // TARGET (the evens plus the zz-qq-suffixed target slice) and the
+      // refit coverage adds the drifted sample to the source side
       ("""WITH base AS (SELECT doc_id, text FROM documents
            WHERE length(trim(text)) > 0 AND doc_id < 1000),
          ev AS (SELECT regexp_split_to_array(trim(lower(text)),
@@ -1097,15 +1062,14 @@ object LifecycleQueries {
         benchA.filter($"doc_id" % 26 === 0).select($"doc_id"))
       val w3 = probe(3L)
       w1.union(w2).union(w3).orderBy($"world", $"doc_id")
-    },
-    // q169: the q89 winnowing CTE machinery replayed for the train
-    // corpus and BOTH benchmark suites, then the three worlds as
-    // pure fingerprint set algebra — world 1 joins suite A's
-    // distinct fingerprints, world 2 the union after the append,
-    // world 3 the union minus the retired A-half (bench_id % 26 = 0).
-    // Integer counts only (count(*) / count(fp) — BIGINT native, the
-    // q160 HUGEINT lesson), world literals BIGINT-cast.
-    Some(
+    }, Some(
+      // q169: the q89 winnowing CTE machinery replayed for the train
+      // corpus and BOTH benchmark suites, then the three worlds as
+      // pure fingerprint set algebra — world 1 joins suite A's
+      // distinct fingerprints, world 2 the union after the append,
+      // world 3 the union minus the retired A-half (bench_id % 26 = 0).
+      // Integer counts only (count(*) / count(fp) — BIGINT native, the
+      // q160 HUGEINT lesson), world literals BIGINT-cast.
       ("""WITH tk AS (SELECT doc_id,
            regexp_split_to_array(trim(lower(text)), '\s+') t,
            regexp_split_to_array(trim(text), '\s+') traw
@@ -1209,4 +1173,13 @@ object LifecycleQueries {
          FROM c1
          UNION ALL
          SELECT 2::BIGINT, n, pre_blind, f2, post2, f2 FROM c2"""
+
+  /** q164/q165's window, called twice (the drifted first call fires
+    * the refit, the second finds it healed), one row per `step`. */
+  private def twoWindowCalls(call: => DataFrame): DataFrame =
+    call.withColumn("step", lit(1L))
+      .unionByName(call.withColumn("step", lit(2L)))
+      .select($"step", $"n_sample_feats", $"pre_blind_feats",
+        $"refit_fired", $"post_blind_feats", $"epoch_changed")
+      .orderBy($"step")
 }

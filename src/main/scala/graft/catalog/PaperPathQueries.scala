@@ -7,7 +7,9 @@ import org.apache.spark.sql.functions._
 import graft.operators.TimeSeries
 import Fixtures._
 
-/** The paper path: candump decode and pivot, the season runs (q65/q73/q75), the streaming resample/dedup/decode/sessionize gates, conversion, jump filter and the parse report. */
+/** The paper path: candump decode and pivot, the season runs
+  * (q65/q73/q75), the streaming resample/dedup/decode/sessionize
+  * gates, conversion, jump filter and the parse report. */
 object PaperPathQueries {
 
   val entries: Seq[CatalogEntry] = Seq(
@@ -64,11 +66,10 @@ object PaperPathQueries {
         .select($"event_type", $"bucket_ts", $"sum_value", $"n",
           $"mean_value")
         .orderBy($"event_type", $"bucket_ts")
-    },
-    // q77 streams the SAME tumbling resample through a watermarked
-    // append-mode aggregation (sentinel-flushed); the oracle is the
-    // batch SQL verbatim — stream ≡ batch is the whole claim
-    Some(
+    }, Some(
+      // q77 streams the SAME tumbling resample through a watermarked
+      // append-mode aggregation (sentinel-flushed); the oracle is the
+      // batch SQL verbatim — stream ≡ batch is the whole claim
       resampleOracleSql)),
 
     // Streaming exact dedup (bounded state via
@@ -89,10 +90,9 @@ object PaperPathQueries {
       runStreamToTable(s, dd, "append", "dedup")
         .select($"user_id", $"event_type")
         .orderBy($"user_id", $"event_type")
-    },
-    // q78: streaming dedup admits exactly one row per key; projected
-    // to keys, that is the batch DISTINCT
-    Some(
+    }, Some(
+      // q78: streaming dedup admits exactly one row per key; projected
+      // to keys, that is the batch DISTINCT
       """SELECT DISTINCT user_id, event_type FROM events
          ORDER BY user_id, event_type""")),
 
@@ -108,10 +108,9 @@ object PaperPathQueries {
         .select($"timestamp", $"module_name", $"topic_name", $"byte_name",
           $"value", $"unit")
         .orderBy($"timestamp", $"byte_name", $"value")
-    },
-    // q79 streams the SAME fixture lines through decodedStream; the
-    // stateless decode must reproduce the batch oracle verbatim
-    Some(
+    }, Some(
+      // q79 streams the SAME fixture lines through decodedStream; the
+      // stateless decode must reproduce the batch oracle verbatim
       canDecodeOracleSql)),
 
     // Stateful streaming sessionization: per-user (lastTs, counter)
@@ -129,11 +128,10 @@ object PaperPathQueries {
       runStreamToTable(s, sess.toDF(), "append", "sessionize")
         .select($"user_id", $"event_id", $"session_id")
         .orderBy($"user_id", $"event_id")
-    },
-    // q80 runs the SAME gap sessionization as a stateful stream
-    // (flatMapGroupsWithState across four micro-batches); its session
-    // assignment must equal the batch window SQL
-    Some(
+    }, Some(
+      // q80 runs the SAME gap sessionization as a stateful stream
+      // (flatMapGroupsWithState across four micro-batches); its session
+      // assignment must equal the batch window SQL
       sessionizeOracleSql)),
 
     // §2.7 per-file parse report as a VALUE gate (was spec-only): the
@@ -182,13 +180,12 @@ object PaperPathQueries {
         .map { case (p, rs) => (p, rs.map(_._2).sum, rs.map(_._3).sum) }
       s.createDataFrame(perDir)
         .toDF("pfile", "input_lines", "output_rows").orderBy(col("pfile"))
-    },
-    // per-file report gate: input_lines = every generated frame line
-    // of the partition, output_rows = one wide row per decodable
-    // frame ts (the q21 reject rules: unknown topic every 101st,
-    // short payload every 103rd; ts is globally unique so frames ≡
-    // wide rows)
-    Some(
+    }, Some(
+      // per-file report gate: input_lines = every generated frame line
+      // of the partition, output_rows = one wide row per decodable
+      // frame ts (the q21 reject rules: unknown topic every 101st,
+      // short payload every 103rd; ts is globally unique so frames ≡
+      // wide rows)
       """SELECT CAST(event_id % 3 AS VARCHAR) AS pfile,
            COUNT(*) AS input_lines,
            CAST(SUM(CASE WHEN event_id % 101 <> 0 AND event_id % 103 <> 0
@@ -249,18 +246,17 @@ object PaperPathQueries {
         round(col("gps_heading"), 6).as("gps_heading"),
         round(col("gps_distance"), 6).as("gps_distance"))
         .orderBy($"timestamp")
-    },
-    // The season end-to-end oracle recomputes every stage: decode
-    // (q21/q22 semantics incl. Q1 ordinal scaling), the reference-DB
-    // time-range clip, 1-min bucket means, the dense grid, the
-    // gap-limited (1 row) interior interpolation, the −3h-shifted
-    // forecast alignment (exact at ticks, linear between, flat-filled
-    // after the last tick, null before the first and beyond the shift
-    // horizon), the PSA solar position (Blanco-Muriel 2001 — identical
-    // operation order to functions/Solar.scala so IEEE doubles agree),
-    // cumtrapz energy, GPS speed/heading/distance with quirk Q7, and
-    // the as-of ffill join.
-    Some(
+    }, Some(
+      // The season end-to-end oracle recomputes every stage: decode
+      // (q21/q22 semantics incl. Q1 ordinal scaling), the reference-DB
+      // time-range clip, 1-min bucket means, the dense grid, the
+      // gap-limited (1 row) interior interpolation, the −3h-shifted
+      // forecast alignment (exact at ticks, linear between, flat-filled
+      // after the last tick, null before the first and beyond the shift
+      // horizon), the PSA solar position (Blanco-Muriel 2001 — identical
+      // operation order to functions/Solar.scala so IEEE doubles agree),
+      // cumtrapz energy, GPS speed/heading/distance with quirk Q7, and
+      // the as-of ffill join.
       ("""WITH
          mainE AS (SELECT ts, user_id, event_id FROM events
            WHERE ts BETWEEN TIMESTAMP '2024-01-08 09:00:00'
@@ -392,17 +388,16 @@ object PaperPathQueries {
         round(col("gps_speed"), 6).as("gps_speed"),
         round(col("gps_distance"), 6).as("gps_distance"))
         .orderBy($"timestamp")
-    },
-    // q65's machinery with (a) every main timestamp shifted by the
-    // clock fix +2,730,123,456 µs BEFORE bucketing (the reference
-    // applies `to − from` to parsed timestamps, lib/canparser.py:205),
-    // (b) the reference-DB rows UNSHIFTED and clipped against the
-    // shifted main bounds, and (c) the mab20-forced MAB19 decode:
-    // topic-65 frames contribute PUMPS (payload truncated to 2 bytes —
-    // junk tail ignored), topic-64 frames STATE/ERROR; MOD17 rejects
-    // (%101 unknown topic, %103 short frame) still drop while the SAME
-    // events' MAB19 frames survive.
-    Some(
+    }, Some(
+      // q65's machinery with (a) every main timestamp shifted by the
+      // clock fix +2,730,123,456 µs BEFORE bucketing (the reference
+      // applies `to − from` to parsed timestamps, lib/canparser.py:205),
+      // (b) the reference-DB rows UNSHIFTED and clipped against the
+      // shifted main bounds, and (c) the mab20-forced MAB19 decode:
+      // topic-65 frames contribute PUMPS (payload truncated to 2 bytes —
+      // junk tail ignored), topic-64 frames STATE/ERROR; MOD17 rejects
+      // (%101 unknown topic, %103 short frame) still drop while the SAME
+      // events' MAB19 frames survive.
       ("""WITH
          mainE AS (SELECT make_timestamp(epoch_us(ts) + 2730123456) ts,
              user_id, event_id FROM events
@@ -527,10 +522,9 @@ object PaperPathQueries {
           .otherwise(array(($"event_id" % 256).cast("string"),
             ($"user_id" % 256).cast("string"), lit("7"))).as("bytes"))
       sources.CandumpConverter.toCandumpLines(recs)
-    },
-    // q81: the converter's epoch arithmetic and hex formatting
-    // recomputed with printf; WHERE mirrors the empty-bytes skip
-    Some(
+    }, Some(
+      // q81: the converter's epoch arithmetic and hex formatting
+      // recomputed with printf; WHERE mirrors the empty-bytes skip
       """SELECT printf('(%d.%06d) can0 %s#%s',
            epoch_us(ts)//1000000, epoch_us(ts)%1000000,
            printf('%03x', event_id % 1024),
@@ -559,9 +553,8 @@ object PaperPathQueries {
           exempt = $"event_type" === "click")
         .select($"k", $"event_id")
         .orderBy($"k", $"event_id")
-    },
-    // q82: the jump filter's lag-50 window and ns band recomputed
-    Some(
+    }, Some(
+      // q82: the jump filter's lag-50 window and ns band recomputed
       """WITH f AS (SELECT user_id % 4 AS k, event_id, event_type,
            make_timestamp(1704067200000000 + event_id *
              (CASE WHEN user_id % 2 = 0 THEN 3000000 ELSE 30000000 END)) AS tsx
@@ -583,31 +576,21 @@ object PaperPathQueries {
 
   /** q65 mini-season fixtures (can_ids JSON, sorted main/reference-DB
     * candump logs derived from `events`, a 300 s Solcast CSV, a
-    * 10-point GPX track) written into a fresh temp dir; returns its
-    * path (registered for deletion at JVM exit). Every value is a
+    * 10-point GPX track) written into a fixture dir; returns its
+    * path. Every value is a
     * literal or a deterministic function of
     * `events` columns so the DuckDB oracle regenerates it exactly.
     * The main log injects the q21 rejects (unknown topic 0x22 every
     * 101st event, short 4-byte frame every 103rd); the reference-DB
     * log spans a WIDER time range than the main log so the unify
-    * stage's clip-to-[min,max] (J1) actually removes rows. */
-  private val q65FixtureCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** Memoized per sfDir for the JVM's lifetime: the fixtures are
-    * INPUT data (a deterministic function of `events`), so
-    * regenerating them on every invocation would bill two Spark
-    * sort+write jobs to each timed bench run of the season pipeline
-    * itself. Verify calls once either way; Bench's warm-up pays the
-    * build and the timed runs measure parse→unify→forecast→gps. */
+    * stage's clip-to-[min,max] (J1) actually removes rows. Memoized
+    * per sfDir: Bench's warm-up pays the build and the timed runs
+    * measure parse→unify→forecast→gps. */
   private def q65Fixtures(s: SparkSession, d: String): String =
-    q65FixtureCache.computeIfAbsent(d, dir => buildQ65Fixtures(s, dir))
+    fixtureDir(s"season $d")(dir => buildQ65Fixtures(s, d, dir.toString))
 
-  private def buildQ65Fixtures(s: SparkSession, d: String): String = {
+  private def buildQ65Fixtures(s: SparkSession, d: String, tmp: String): Unit = {
     import java.nio.file.{Files, Paths}
-    val tmp = Files.createTempDirectory("graft_q65").toString
-    Runtime.getRuntime.addShutdownHook(new Thread(() =>
-      deleteTree(Paths.get(tmp))))
     Files.writeString(Paths.get(s"$tmp/can_ids.json"),
       graft.sources.CanFixtures.json)
     val ev = t(s, d, "events")
@@ -686,7 +669,6 @@ object PaperPathQueries {
     Files.writeString(Paths.get(s"$tmp/track.gpx"),
       "<?xml version=\"1.0\"?><gpx><trk><trkseg>" + pts.mkString +
         "</trkseg></trk></gpx>")
-    tmp
   }
 
   /** The season oracles' solar join (q65 with the forecast columns

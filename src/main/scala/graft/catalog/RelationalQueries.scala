@@ -7,7 +7,8 @@ import org.apache.spark.sql.functions._
 import graft.operators.TimeSeries
 import Fixtures._
 
-/** Relational and time-series gates: aggregates, joins, windows, resample, interpolation, solar and GPS maths, CSV and layout. */
+/** Relational and time-series gates: aggregates, joins, windows,
+  * resample, interpolation, solar and GPS maths, CSV and layout. */
 object RelationalQueries {
 
   val entries: Seq[CatalogEntry] = Seq(
@@ -342,12 +343,11 @@ object RelationalQueries {
           "value DOUBLE, event_type STRING")
         .csv(s"$out/csv")
         .orderBy($"ts_str")
-    },
-    // S6 gate: the oracle is the same projection straight from
-    // parquet — the Spark side must lose nothing through its CSV
-    // write → read round trip (µs-exact ts strings, shortest-
-    // round-trip doubles)
-    Some(
+    }, Some(
+      // S6 gate: the oracle is the same projection straight from
+      // parquet — the Spark side must lose nothing through its CSV
+      // write → read round trip (µs-exact ts strings, shortest-
+      // round-trip doubles)
       """SELECT strftime(ts, '%Y-%m-%d %H:%M:%S.%f') AS ts_str,
            CAST(user_id AS BIGINT) AS user_id,
            CAST(event_id AS BIGINT) AS event_id,
@@ -371,10 +371,9 @@ object RelationalQueries {
         .select($"event_id", $"value", $"event_type",
           date_format($"ts", "yyyy-MM-dd HH:mm:ss.SSSSSS").as("ts_str"))
         .orderBy($"ts_str")
-    },
-    // P9 gate: recompute the planted-null masking, then IS NOT NULL
-    // on both subset columns (robust to natural nulls in the source)
-    Some(
+    }, Some(
+      // P9 gate: recompute the planted-null masking, then IS NOT NULL
+      // on both subset columns (robust to natural nulls in the source)
       """WITH e AS (SELECT CAST(event_id AS BIGINT) AS event_id, ts,
            CASE WHEN event_id % 5 = 0 THEN NULL
                 ELSE CAST(value AS DOUBLE) END AS value,
@@ -397,9 +396,8 @@ object RelationalQueries {
       operators.Curation.capPerKey(docs, "source", "doc_id",
           maxPerKey = 10, hashFn = operators.Dedup.md5Hash60)
         .orderBy($"doc_id")
-    },
-    // the md5-hash-ordered per-source window, replayed exactly
-    Some(
+    }, Some(
+      // the md5-hash-ordered per-source window, replayed exactly
       """WITH h AS (SELECT doc_id, source,
            ('0x' || substring(md5(CAST(doc_id AS VARCHAR)), 1, 15))::BIGINT
              AS hh
@@ -426,11 +424,10 @@ object RelationalQueries {
       operators.Layout.withZValue(docs, Seq("dx", "dy"), bits = 8)
         .select($"doc_id", $"dx", $"dy", $"zvalue")
         .orderBy($"doc_id")
-    },
-    // min/max, integer-div equi-width buckets and the Morton
-    // interleave replayed term-for-term: bit i of dx lands at 2i, of
-    // dy at 2i+1 (dimension 0 on the low bit)
-    Some(
+    }, Some(
+      // min/max, integer-div equi-width buckets and the Morton
+      // interleave replayed term-for-term: bit i of dx lands at 2i, of
+      // dy at 2i+1 (dimension 0 on the low bit)
       """WITH m AS (SELECT doc_id, CAST(length(text) AS BIGINT) AS dx,
            doc_id % 97 AS dy FROM documents),
          st AS (SELECT min(dx) mnx, max(dx) mxx, min(dy) mny, max(dy) mxy

@@ -5,7 +5,9 @@ import org.apache.spark.sql.functions._
 
 import Fixtures._
 
-/** Text curation gates: profiles, quality rules and classifiers, language models, BPE, release diffs and the text admission streams. */
+/** Text curation gates: profiles, quality rules and classifiers,
+  * language models, BPE, release diffs and the text admission
+  * streams. */
 object TextQueries {
 
   val entries: Seq[CatalogEntry] = Seq(
@@ -226,16 +228,8 @@ object TextQueries {
              regexp_split_to_array(trim(lower(text)), '\s+') t FROM src),
          ttoks AS (SELECT doc_id,
              regexp_split_to_array(trim(lower(text)), '\s+') t FROM tgt),
-         sfeat AS (
-           SELECT doc_id, unnest(t) AS feat FROM stoks
-           UNION ALL
-           SELECT doc_id, array_to_string(t[i:i+1], ' ') FROM stoks,
-             LATERAL (SELECT unnest(generate_series(1, len(t)-1)) AS i)),
-         tfeat AS (
-           SELECT doc_id, unnest(t) AS feat FROM ttoks
-           UNION ALL
-           SELECT doc_id, array_to_string(t[i:i+1], ' ') FROM ttoks,
-             LATERAL (SELECT unnest(generate_series(1, len(t)-1)) AS i)),
+         """ + featSql("sfeat", "stoks") + """,
+         """ + featSql("tfeat", "ttoks") + """,
          sbk AS (SELECT doc_id,
              ('0x' || substring(md5(feat), 1, 15))::BIGINT % 512 AS bucket
            FROM sfeat WHERE feat <> ''),
@@ -309,21 +303,9 @@ object TextQueries {
              regexp_split_to_array(trim(lower(text)), '\s+') t FROM tgt),
          ftoks AS (SELECT doc_id,
              regexp_split_to_array(trim(lower(text)), '\s+') t FROM fresh),
-         sfeat AS (
-           SELECT doc_id, unnest(t) AS feat FROM stoks
-           UNION ALL
-           SELECT doc_id, array_to_string(t[i:i+1], ' ') FROM stoks,
-             LATERAL (SELECT unnest(generate_series(1, len(t)-1)) AS i)),
-         tfeat AS (
-           SELECT doc_id, unnest(t) AS feat FROM ttoks
-           UNION ALL
-           SELECT doc_id, array_to_string(t[i:i+1], ' ') FROM ttoks,
-             LATERAL (SELECT unnest(generate_series(1, len(t)-1)) AS i)),
-         ffeat AS (
-           SELECT doc_id, unnest(t) AS feat FROM ftoks
-           UNION ALL
-           SELECT doc_id, array_to_string(t[i:i+1], ' ') FROM ftoks,
-             LATERAL (SELECT unnest(generate_series(1, len(t)-1)) AS i)),
+         """ + featSql("sfeat", "stoks") + """,
+         """ + featSql("tfeat", "ttoks") + """,
+         """ + featSql("ffeat", "ftoks") + """,
          sbk AS (SELECT
              ('0x' || substring(md5(feat), 1, 15))::BIGINT % 512 AS bucket,
              count(*) cs
@@ -392,12 +374,11 @@ object TextQueries {
       runStreamToTable(s, admitted, "append", "ccnet_admission")
         .select($"doc_id", md5($"ccnet_key").as("key_md5"))
         .orderBy($"doc_id")
-    },
-    // the stream fixture regenerated in SQL (the disguised-re-crawl
-    // CASE), then the full normalize chain + CCNet key fold on BOTH
-    // sides and the anti-join membership decision the stream must
-    // reproduce across micro-batches
-    Some(
+    }, Some(
+      // the stream fixture regenerated in SQL (the disguised-re-crawl
+      // CASE), then the full normalize chain + CCNet key fold on BOTH
+      // sides and the anti-join membership decision the stream must
+      // reproduce across micro-batches
       ("""WITH src AS (
            SELECT d.doc_id,
              CASE WHEN d.doc_id % 3 = 1 AND b.text IS NOT NULL
@@ -450,12 +431,11 @@ object TextQueries {
       runStreamToTable(s, labeled, "append", "lm_buckets")
         .select($"doc_id", $"lang", $"lm_score", $"bucket")
         .orderBy($"doc_id")
-    },
-    // the pruned-LM replay: top-K vocab by (count DESC, token), the
-    // UNPRUNED total, per-position floor-1 OOV terms folded
-    // token-sorted, then q100's threshold + labeling machinery over
-    // the batch-scored corpus
-    Some(
+    }, Some(
+      // the pruned-LM replay: top-K vocab by (count DESC, token), the
+      // UNPRUNED total, per-position floor-1 OOV terms folded
+      // token-sorted, then q100's threshold + labeling machinery over
+      // the batch-scored corpus
       """WITH toks AS (SELECT doc_id,
              unnest(regexp_split_to_array(trim(lower(text)), '\s+')) AS tok
            FROM documents),
@@ -523,21 +503,12 @@ object TextQueries {
       runStreamToTable(s, labeled, "complete", "trigram_buckets")
         .select($"doc_id", $"lang", $"lm3_score", $"bucket")
         .orderBy($"doc_id")
-    },
-    // the full trigram refit (q113's count structure) at per-POSITION
-    // fold granularity, then the q115 bucket shape on top: per-lang
-    // quantile_cont thresholds over the batch-scored corpus and the
-    // ties-down labeling the stream must reproduce
-    Some(
-      ("""WITH toks AS (SELECT doc_id,
-           [t for t in regexp_split_to_array(trim(lower(text)), '\s+')
-            if t <> ''] AS tk
-         FROM documents),
-         tg0 AS (SELECT doc_id,
-             unnest([{'w1': tk[i], 'w2': tk[i + 1], 'w3': tk[i + 2]}
-                     for i in generate_series(1, len(tk) - 2)]) AS g
-           FROM toks WHERE len(tk) >= 3),
-         tg AS (SELECT doc_id, g.w1 AS w1, g.w2 AS w2, g.w3 AS w3 FROM tg0),
+    }, Some(
+      // the full trigram refit (q113's count structure) at per-POSITION
+      // fold granularity, then the q115 bucket shape on top: per-lang
+      // quantile_cont thresholds over the batch-scored corpus and the
+      // ties-down labeling the stream must reproduce
+      (trigramTokensSql + """
          c3all AS (SELECT w1, w2, w3, count(*) c3 FROM tg GROUP BY 1, 2, 3),
          """ + trigramBackoffCountsSql + """
          terms AS (SELECT doc_id, w1, w2, w3,
@@ -685,16 +656,7 @@ object TextQueries {
       operators.TextAnalysis.unigramLogProb(docs, "doc_id", "text")
         .orderBy($"doc_id")
     }, Some(
-      """WITH toks AS (SELECT doc_id,
-             unnest(regexp_split_to_array(trim(lower(text)), '\s+')) AS tok
-           FROM documents),
-         tf AS (SELECT doc_id, tok, count(*) tf FROM toks
-           WHERE tok <> '' GROUP BY 1, 2),
-         c AS (SELECT tok, CAST(sum(tf) AS BIGINT) c FROM tf GROUP BY 1),
-         t AS (SELECT CAST(sum(c) AS BIGINT) T FROM c),
-         terms AS (SELECT doc_id, tok, tf,
-             tf * ln((c::DOUBLE) / (T::DOUBLE)) AS term
-           FROM tf JOIN c USING (tok) CROSS JOIN t)
+      unigramTermsSql + """
          SELECT doc_id, CAST(sum(tf) AS BIGINT) AS n_tokens,
            round(list_reduce(list(term ORDER BY tok), (a, b) -> a + b)
              / CAST(sum(tf) AS DOUBLE), 6) AS logprob_per_token
@@ -720,12 +682,11 @@ object TextQueries {
         .select($"w", size($"pieces").cast("long").as("n_pieces"),
           md5(concat_ws("\u0001", $"pieces")).as("pieces_md5"))
         .orderBy($"w")
-    },
-    // char split + </w>, then the three merge folds unrolled as
-    // list_reduce stages (seed = first symbol's singleton list, each
-    // further element either glues onto the accumulator tail or
-    // appends — the left-to-right non-overlapping BPE rule)
-    Some(
+    }, Some(
+      // char split + </w>, then the three merge folds unrolled as
+      // list_reduce stages (seed = first symbol's singleton list, each
+      // further element either glues onto the accumulator tail or
+      // appends — the left-to-right non-overlapping BPE rule)
       """WITH words AS (SELECT DISTINCT w FROM (
            SELECT unnest(regexp_split_to_array(trim(lower(text)), '\s+')) AS w
            FROM documents) WHERE w <> ''),
@@ -781,14 +742,13 @@ object TextQueries {
         .select($"w", $"n", size($"s").cast("long").as("n_pieces"),
           md5(concat_ws("\u0001", $"s")).as("pieces_md5"))
         .orderBy($"w")
-    },
-    // the fit LOOP replayed from scratch: per round the oracle
-    // recounts weighted pair frequencies (weight = word count,
-    // overlapping positions per occurrence), takes the
-    // (count DESC, a, b) argmax with the ≥2 floor itself, and folds
-    // that data-derived pair through the word table — three rounds,
-    // then md5 of every word's final piece boundaries
-    Some(
+    }, Some(
+      // the fit LOOP replayed from scratch: per round the oracle
+      // recounts weighted pair frequencies (weight = word count,
+      // overlapping positions per occurrence), takes the
+      // (count DESC, a, b) argmax with the ≥2 floor itself, and folds
+      // that data-derived pair through the word table — three rounds,
+      // then md5 of every word's final piece boundaries
       """WITH words AS (SELECT w, count(*) AS n FROM (
            SELECT unnest(regexp_split_to_array(trim(lower(text)), '\s+'))
              AS w
@@ -841,11 +801,10 @@ object TextQueries {
       val docs = t(s, d, "documents").select($"doc_id", $"text")
       operators.TextAnalysis.bigramLogProb(docs, "doc_id", "text")
         .orderBy($"doc_id")
-    },
-    // the full bigram chain: pair extraction, corpus counts, context
-    // totals, unigram backoff, the exact-binary 0.75/0.25 mixture,
-    // and the bigram-sorted fold
-    Some(
+    }, Some(
+      // the full bigram chain: pair extraction, corpus counts, context
+      // totals, unigram backoff, the exact-binary 0.75/0.25 mixture,
+      // and the bigram-sorted fold
       """WITH toks AS (SELECT doc_id,
            [t for t in regexp_split_to_array(trim(lower(text)), '\s+')
             if t <> ''] AS tk
@@ -884,20 +843,11 @@ object TextQueries {
       val docs = t(s, d, "documents").select($"doc_id", $"text")
       operators.TextAnalysis.trigramLogProb(docs, "doc_id", "text")
         .orderBy($"doc_id")
-    },
-    // the trigram chain: position extraction, pruned c3 vs unpruned
-    // c12 contexts, the full bigram backoff tier, unigram floor, the
-    // nested exact-binary mixture and the trigram-sorted fold
-    Some(
-      ("""WITH toks AS (SELECT doc_id,
-           [t for t in regexp_split_to_array(trim(lower(text)), '\s+')
-            if t <> ''] AS tk
-         FROM documents),
-         tg0 AS (SELECT doc_id,
-             unnest([{'w1': tk[i], 'w2': tk[i + 1], 'w3': tk[i + 2]}
-                     for i in generate_series(1, len(tk) - 2)]) AS g
-           FROM toks WHERE len(tk) >= 3),
-         tg AS (SELECT doc_id, g.w1 AS w1, g.w2 AS w2, g.w3 AS w3 FROM tg0),
+    }, Some(
+      // the trigram chain: position extraction, pruned c3 vs unpruned
+      // c12 contexts, the full bigram backoff tier, unigram floor, the
+      // nested exact-binary mixture and the trigram-sorted fold
+      (trigramTokensSql + """
          tf AS (SELECT doc_id, w1, w2, w3, count(*) tf FROM tg
            GROUP BY 1, 2, 3, 4),
          c3all AS (SELECT w1, w2, w3, CAST(sum(tf) AS BIGINT) c3 FROM tf
@@ -982,11 +932,7 @@ object TextQueries {
            (CASE WHEN lang = 'en' THEN 1.0 ELSE 0.0 END)::DOUBLE AS y,
            regexp_split_to_array(trim(lower(text)), '\s+') t
          FROM documents),
-         feat AS (
-           SELECT doc_id, unnest(t) AS feat FROM d
-           UNION ALL
-           SELECT doc_id, array_to_string(t[i:i+1], ' ') FROM d,
-             LATERAL (SELECT unnest(generate_series(1, len(t)-1)) AS i)),
+         """ + featSql("feat", "d") + """,
          xb0 AS (SELECT doc_id,
              ('0x' || substring(md5(feat), 1, 15))::BIGINT % 512 AS bucket,
              count(*)::DOUBLE AS c
@@ -1213,12 +1159,11 @@ object TextQueries {
           length($"norm").cast("long").as("norm_len"),
           md5(operators.Curation.ccnetHashKey($"norm")).as("key_md5"))
         .orderBy($"doc_id")
-    },
-    // the engine's entire translate+regexp normalization chain,
-    // replayed stage-for-stage (chr() codes stand in for the planted
-    // typographic/control characters); the trailing key_md5 replays
-    // the CCNet lowercase/digit-fold/punct-strip key on top
-    Some(
+    }, Some(
+      // the engine's entire translate+regexp normalization chain,
+      // replayed stage-for-stage (chr() codes stand in for the planted
+      // typographic/control characters); the trailing key_md5 replays
+      // the CCNet lowercase/digit-fold/punct-strip key on top
       ("""WITH m AS (SELECT doc_id,
            CASE WHEN doc_id % 3 = 0 THEN
                chr(8220) || 'Q' || chr(8221) || ' ' || chr(8211) || ' x' ||
@@ -1295,16 +1240,7 @@ object TextQueries {
         .select($"doc_id", $"lang", $"score", $"bucket")
         .orderBy($"doc_id")
     }, Some(
-      """WITH toks AS (SELECT doc_id,
-             unnest(regexp_split_to_array(trim(lower(text)), '\s+')) AS tok
-           FROM documents),
-         tf AS (SELECT doc_id, tok, count(*) tf FROM toks
-           WHERE tok <> '' GROUP BY 1, 2),
-         c AS (SELECT tok, CAST(sum(tf) AS BIGINT) c FROM tf GROUP BY 1),
-         t AS (SELECT CAST(sum(c) AS BIGINT) T FROM c),
-         terms AS (SELECT doc_id, tok, tf,
-             tf * ln((c::DOUBLE) / (T::DOUBLE)) AS term
-           FROM tf JOIN c USING (tok) CROSS JOIN t),
+      unigramTermsSql + """,
          s AS (SELECT doc_id,
              round(list_reduce(list(term ORDER BY tok), (a, b) -> a + b)
                / CAST(sum(tf) AS DOUBLE), 6) AS score
@@ -1625,4 +1561,41 @@ object TextQueries {
            FROM d),
          w AS (SELECT na, nr, nc, nu,
            nr + nc + nu AS np, na + nc + nu AS nn FROM c),"""
+
+  /** The unigram LM oracles' per-document terms: lowercased
+    * whitespace tokens, per-doc term frequencies, corpus counts
+    * and total, and each (doc, token) log-probability term. */
+  private def unigramTermsSql: String =
+    """WITH toks AS (SELECT doc_id,
+          unnest(regexp_split_to_array(trim(lower(text)), '\s+')) AS tok
+        FROM documents),
+      tf AS (SELECT doc_id, tok, count(*) tf FROM toks
+        WHERE tok <> '' GROUP BY 1, 2),
+      c AS (SELECT tok, CAST(sum(tf) AS BIGINT) c FROM tf GROUP BY 1),
+      t AS (SELECT CAST(sum(c) AS BIGINT) T FROM c),
+      terms AS (SELECT doc_id, tok, tf,
+          tf * ln((c::DOUBLE) / (T::DOUBLE)) AS term
+        FROM tf JOIN c USING (tok) CROSS JOIN t)"""
+
+  /** The trigram LM oracles' token lists (toks) and every
+    * position's trigram (tg). */
+  private def trigramTokensSql: String =
+    """WITH toks AS (SELECT doc_id,
+        [t for t in regexp_split_to_array(trim(lower(text)), '\s+')
+         if t <> ''] AS tk
+      FROM documents),
+      tg0 AS (SELECT doc_id,
+          unnest([{'w1': tk[i], 'w2': tk[i + 1], 'w3': tk[i + 2]}
+                  for i in generate_series(1, len(tk) - 2)]) AS g
+        FROM toks WHERE len(tk) >= 3),
+      tg AS (SELECT doc_id, g.w1 AS w1, g.w2 AS w2, g.w3 AS w3 FROM tg0),"""
+
+  /** A unigram+bigram feature CTE (q84's feature construction): every
+    * token of `toks`' lists, then every adjacent token pair. */
+  private def featSql(feat: String, toks: String): String =
+    s"""$feat AS (
+           SELECT doc_id, unnest(t) AS feat FROM $toks
+           UNION ALL
+           SELECT doc_id, array_to_string(t[i:i+1], ' ') FROM $toks,
+             LATERAL (SELECT unnest(generate_series(1, len(t)-1)) AS i))"""
 }

@@ -6,7 +6,9 @@ import org.apache.spark.sql.functions._
 
 import Fixtures._
 
-/** Embedding gates: exact and approximate nearest neighbours (IVF, SQ, PQ and their products), semantic dedup, and the IVF drift and maintenance lifecycles. */
+/** Embedding gates: exact and approximate nearest neighbours (IVF,
+  * SQ, PQ and their products), semantic dedup, and the IVF drift and
+  * maintenance lifecycles. */
 object VectorQueries {
 
   val entries: Seq[CatalogEntry] = Seq(
@@ -355,11 +357,10 @@ object VectorQueries {
         .select($"vec_id", $"pos".cast("long").as("dim"),
           round($"col", 6).as("value"))
         .orderBy($"vec_id", $"dim")
-    },
-    // the projection matrix is rebuilt sign-by-sign from md5 — the
-    // scale 1/sqrt(16) is the exact binary 0.25, so `dot * 0.25` in
-    // the engine and `dot / 4.0` here are bit-identical
-    Some(
+    }, Some(
+      // the projection matrix is rebuilt sign-by-sign from md5 — the
+      // scale 1/sqrt(16) is the exact binary 0.25, so `dot * 0.25` in
+      // the engine and `dot / 4.0` here are bit-identical
       """WITH e AS (SELECT vec_id,
            [CAST(x AS DOUBLE) for x in embedding] AS emb
          FROM embeddings)
@@ -392,10 +393,9 @@ object VectorQueries {
         .filter($"rank" === 1)
         .select($"query_id", $"neighbor_id".as("top1"))
         .orderBy($"query_id")
-    },
-    // brute-force argmax, verbatim the q60/q66 discipline: the PQ
-    // path's rank-1 answer must be quantization-invisible
-    Some(
+    }, Some(
+      // brute-force argmax, verbatim the q60/q66 discipline: the PQ
+      // path's rank-1 answer must be quantization-invisible
       ("""WITH c AS (SELECT vec_id, embedding::DOUBLE[] v FROM embeddings),
          """ + bruteCosineSql + """
            FROM s)
@@ -420,10 +420,9 @@ object VectorQueries {
         .filter($"rank" === 1)
         .select($"query_id", $"neighbor_id".as("top1"))
         .orderBy($"query_id")
-    },
-    // brute-force argmax again: IVFADC must be end-to-end invisible
-    // at rank 1 (coarse routing + ADC + rerank)
-    Some(
+    }, Some(
+      // brute-force argmax again: IVFADC must be end-to-end invisible
+      // at rank 1 (coarse routing + ADC + rerank)
       ("""WITH c AS (SELECT vec_id, embedding::DOUBLE[] v FROM embeddings),
          """ + bruteCosineSql + """
            FROM s)
@@ -476,11 +475,10 @@ object VectorQueries {
         .join(stats, Seq("top1"))
         .select($"query_id", $"top1", $"nnz", $"ssq")
         .orderBy($"query_id")
-    },
-    // the full text→vector chain replayed: tokenize, md5 bucket +
-    // sign-hash fold, per-doc nonzero/sum-of-squares stats (exact
-    // integers), brute-force cosine argmax with ties to the smaller id
-    Some(
+    }, Some(
+      // the full text→vector chain replayed: tokenize, md5 bucket +
+      // sign-hash fold, per-doc nonzero/sum-of-squares stats (exact
+      // integers), brute-force cosine argmax with ties to the smaller id
       """WITH base AS (SELECT doc_id, text, 0 AS is_q FROM documents),
           qd AS (SELECT doc_id + 500000 AS doc_id, text || ' zq zq qz' AS text,
             1 AS is_q FROM documents WHERE doc_id < 15),
@@ -538,10 +536,9 @@ object VectorQueries {
           "sequence(1, 1024), (v, i) -> v * CAST(i AS DOUBLE)), " +
           "0.0D, (a, x) -> a + x) AS BIGINT)").as("wsum"))
         .orderBy($"doc_id")
-    },
-    // the q130 chain at dim 1024: tokenize, md5 bucket + sign, per-doc
-    // scatter — nnz/ssq/position-weighted checksum, all exact integers
-    Some(
+    }, Some(
+      // the q130 chain at dim 1024: tokenize, md5 bucket + sign, per-doc
+      // scatter — nnz/ssq/position-weighted checksum, all exact integers
       """WITH toks AS (SELECT doc_id,
             unnest(list_filter(regexp_split_to_array(lower(trim(text)), '\s+'),
               t -> t != '')) AS t
@@ -608,17 +605,16 @@ object VectorQueries {
       s.read.parquet(outPath)
         .select($"vec_id", $"admitted", $"match_id")
         .orderBy($"vec_id")
-    },
-    // the candidate stream regenerated from `embeddings`, then the
-    // exhaustive brute-force decision the IVF probe must reproduce:
-    // max cosine + argmax (ties to the smaller id) vs the accepted
-    // set, admit strictly below tau — planted re-embeds sit at
-    // cos ≈ 0.99999 and the novel tail below 0.6, so both regimes
-    // bind with margin
-    // q152: identical decisions through the batched (foreachBatch
-    // searchIvf) route against the durable index — same fixture,
-    // same brute-force rule
-    Some(
+    }, Some(
+      // the candidate stream regenerated from `embeddings`, then the
+      // exhaustive brute-force decision the IVF probe must reproduce:
+      // max cosine + argmax (ties to the smaller id) vs the accepted
+      // set, admit strictly below tau — planted re-embeds sit at
+      // cos ≈ 0.99999 and the novel tail below 0.6, so both regimes
+      // bind with margin
+      // q152: identical decisions through the batched (foreachBatch
+      // searchIvf) route against the durable index — same fixture,
+      // same brute-force rule
       annAdmissionOracleSql)),
 
     // Vector-index growth loop end-to-end (the q101 discipline for
@@ -657,13 +653,12 @@ object VectorQueries {
         .join(probe.select($"query_id", $"recall"), Seq("query_id"))
         .crossJoin(broadcast(decision.select($"mean_recall", $"retrain")))
         .orderBy($"query_id")
-    },
-    // the q107 brute-force argmax over the FULL corpus (both build
-    // and appended halves — a query whose true top-1 is an appended
-    // odd-id vector only matches if the in-place append indexed it),
-    // plus the all-hit probe/decision constants the planted regime
-    // must produce exactly
-    Some(
+    }, Some(
+      // the q107 brute-force argmax over the FULL corpus (both build
+      // and appended halves — a query whose true top-1 is an appended
+      // odd-id vector only matches if the in-place append indexed it),
+      // plus the all-hit probe/decision constants the planted regime
+      // must produce exactly
       ("""WITH c AS (SELECT vec_id, embedding::DOUBLE[] v FROM embeddings),
          """ + bruteCosineSql + """
            FROM s)
@@ -732,13 +727,12 @@ object VectorQueries {
           $"post_recall", $"pre_mean", $"post_mean", $"retrain_fired",
           $"post_retrain")
         .orderBy($"query_id")
-    },
-    // the complete drift-retrain arithmetic replayed: build seeds +
-    // Lloyd mean, frozen append assignment, probe/top1 on the stale
-    // geometry, the id%2-sampled warm refit (keep-empty-cell
-    // coalesce), re-assignment, probe/top1 on the new geometry,
-    // brute-force truth, per-query recalls and both drift decisions
-    Some(
+    }, Some(
+      // the complete drift-retrain arithmetic replayed: build seeds +
+      // Lloyd mean, frozen append assignment, probe/top1 on the stale
+      // geometry, the id%2-sampled warm refit (keep-empty-cell
+      // coalesce), re-assignment, probe/top1 on the new geometry,
+      // brute-force truth, per-query recalls and both drift decisions
       (ivfDriftReplaySql + """
          rec AS (
            SELECT t.query_id, pr.pre_top1, po.post_top1,
@@ -796,15 +790,14 @@ object VectorQueries {
           sample = corpus.filter($"vec_id" % 2 === 1), lloydIters = 1,
           nProbe = 1, oversample = 32, numBuckets = 2))
       ivfMaintainReport(top1, () => maintain())
-    },
-    // the q123 arithmetic driven through the one-call maintenance
-    // window: same build/append/refit replay (the PQ layer is
-    // outcome-neutral under the gate's oversample, so the coarse
-    // probe + exact argmax decide every value), plus the two
-    // maintenance reports — the HEAL call's decision and recovery,
-    // and the NO-OP call's quiet decision with the epoch untouched
-    // (epoch_changed must equal the fired flag on both calls)
-    Some(
+    }, Some(
+      // the q123 arithmetic driven through the one-call maintenance
+      // window: same build/append/refit replay (the PQ layer is
+      // outcome-neutral under the gate's oversample, so the coarse
+      // probe + exact argmax decide every value), plus the two
+      // maintenance reports — the HEAL call's decision and recovery,
+      // and the NO-OP call's quiet decision with the epoch untouched
+      // (epoch_changed must equal the fired flag on both calls)
       ivfMaintainOracleSql)),
 
     // The IVF×SQ rung of the one-call maintenance matrix — with q131
@@ -840,14 +833,13 @@ object VectorQueries {
           sample = corpus.filter($"vec_id" % 2 === 1), lloydIters = 1,
           nProbe = 1, oversample = 32, numBuckets = 2))
       ivfMaintainReport(top1, () => maintain())
-    },
-    // q145: the q131 replay verbatim — the planted geometry and the
-    // maintenance-report semantics are IDENTICAL for the IVF×SQ rung
-    // (the int8 layer is outcome-neutral under the gate's oversample:
-    // every probed cell's members reach the exact float rerank, so
-    // coarse probe + exact argmax decide every value; the quantizer
-    // arithmetic itself is value-pinned by q60/q66)
-    Some(
+    }, Some(
+      // q145: the q131 replay verbatim — the planted geometry and the
+      // maintenance-report semantics are IDENTICAL for the IVF×SQ rung
+      // (the int8 layer is outcome-neutral under the gate's oversample:
+      // every probed cell's members reach the exact float rerank, so
+      // coarse probe + exact argmax decide every value; the quantizer
+      // arithmetic itself is value-pinned by q60/q66)
       ivfMaintainOracleSql))
   )
 
