@@ -249,6 +249,19 @@ private[catalog] object Fixtures {
     s.table(name)
   }
 
+  /** `embedding` as doubles, scaled by 1.001 and shifted by 0.0005:
+    * the same direction, so a planted copy's nearest neighbour is its
+    * source. */
+  private[catalog] def perturbedEmbedding: Column =
+    expr("transform(embedding, x -> CAST(x AS DOUBLE) * 1.001 + 0.0005)")
+
+  /** The ANN gates' planted queries: perturbed copies of the first ten
+    * vectors, ids +10,000. */
+  private[catalog] def plantedQueries(emb: DataFrame): DataFrame =
+    emb.filter($"vec_id" < 10)
+      .select(($"vec_id" + 10000L).as("vec_id"),
+        perturbedEmbedding.as("embedding"))
+
   /** Winnowing over `src`'s token lists `t` (4-gram md5 hashes, window
     * 4, rightmost minimum): each `id`'s hash list in `hs` and its
     * selected fingerprint positions in `sel`. */

@@ -163,10 +163,7 @@ object LifecycleQueries {
           expr("transform(embedding, x -> CAST(x AS DOUBLE))")
             .as("embedding"))
         .unionByName(twins)
-      val queries = emb.filter($"vec_id" < 10)
-        .select(($"vec_id" + 10000L).as("vec_id"),
-          expr("transform(embedding, x -> CAST(x AS DOUBLE) * 1.001 + 0.0005)")
-            .as("embedding"))
+      val queries = plantedQueries(emb)
       val base = operators.Similarity.buildIvfPq(corpus, "vec_id",
         "embedding", lloydIters = 3)
       operators.Similarity.writeIvfPqIndexBucketed(base, "q127_idx")

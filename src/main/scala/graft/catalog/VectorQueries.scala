@@ -80,10 +80,7 @@ object VectorQueries {
     // seeded hashes, lowest-id IVF seeding, double arithmetic.
     CatalogEntry("q31_ann_recall", (s, d) => {
       val emb = t(s, d, "embeddings")
-      val qs = emb.filter($"vec_id" < 10)
-        .select(($"vec_id" + 10000L).as("vec_id"),
-          expr("transform(embedding, x -> CAST(x AS DOUBLE) * 1.001 + 0.0005)")
-            .as("embedding"))
+      val qs = plantedQueries(emb)
       def top1(approx: DataFrame, m: String): DataFrame =
         approx.filter($"rank" === 1)
           .select(lit(m).as("method"), $"query_id", $"neighbor_id".as("top1"))
@@ -107,22 +104,9 @@ object VectorQueries {
     // the exact float rerank must put it at rank 1. The oracle is the
     // per-query brute-force argmax — quantization is invisible at
     // rank 1 or the gate fails.
-    CatalogEntry("q60_sq_ann_recall", (s, d) => {
-      val emb = t(s, d, "embeddings")
-      val qs = emb.filter($"vec_id" < 10)
-        .select(($"vec_id" + 10000L).as("vec_id"),
-          expr("transform(embedding, x -> CAST(x AS DOUBLE) * 1.001 + 0.0005)")
-            .as("embedding"))
-      operators.Similarity.sqTopK(emb, qs, "vec_id", "embedding", k = 3)
-        .filter($"rank" === 1)
-        .select($"query_id", $"neighbor_id".as("top1"))
-        .orderBy($"query_id")
-    }, Some(
-      ("""WITH c AS (SELECT vec_id, embedding::DOUBLE[] v FROM embeddings),
-         """ + bruteCosineSql + """
-           FROM s)
-         SELECT query_id, neighbor_id AS top1 FROM r WHERE rank = 1
-         ORDER BY query_id"""))),
+    CatalogEntry("q60_sq_ann_recall", (s, d) => plantedTop1(s, d)(
+      operators.Similarity.sqTopK(_, _, "vec_id", "embedding", k = 3)),
+      Some(plantedTop1Sql)),
 
     // Composed IVF × SQ ANN gate — the 100 TB production shape: the
     // approximate pass is cell-pruned (nProbe of nCells cells) AND
@@ -132,22 +116,9 @@ object VectorQueries {
     // query to its source's cell, quantization must keep the true
     // neighbor inside the oversampled candidate set, and the rerank
     // must put it at rank 1.
-    CatalogEntry("q66_ivfsq_ann_recall", (s, d) => {
-      val emb = t(s, d, "embeddings")
-      val qs = emb.filter($"vec_id" < 10)
-        .select(($"vec_id" + 10000L).as("vec_id"),
-          expr("transform(embedding, x -> CAST(x AS DOUBLE) * 1.001 + 0.0005)")
-            .as("embedding"))
-      operators.Similarity.ivfSqTopK(emb, qs, "vec_id", "embedding", k = 3)
-        .filter($"rank" === 1)
-        .select($"query_id", $"neighbor_id".as("top1"))
-        .orderBy($"query_id")
-    }, Some(
-      ("""WITH c AS (SELECT vec_id, embedding::DOUBLE[] v FROM embeddings),
-         """ + bruteCosineSql + """
-           FROM s)
-         SELECT query_id, neighbor_id AS top1 FROM r WHERE rank = 1
-         ORDER BY query_id"""))),
+    CatalogEntry("q66_ivfsq_ann_recall", (s, d) => plantedTop1(s, d)(
+      operators.Similarity.ivfSqTopK(_, _, "vec_id", "embedding", k = 3)),
+      Some(plantedTop1Sql)),
 
     // Embedding-cosine near-dup: corpus ∪ perturbed copies of every 7th
     // vector, candidates from multi-probe hyperplane-LSH buckets, exact
@@ -157,12 +128,7 @@ object VectorQueries {
     // admits exactly the planted near-identical pairs.
     CatalogEntry("q33_cosine_neardup", (s, d) => {
       val emb = t(s, d, "embeddings")
-      val corpus = emb.select($"vec_id", expr(
-          "transform(embedding, x -> CAST(x AS DOUBLE))").as("embedding"))
-        .unionByName(emb.filter($"vec_id" % 7 === 0)
-          .select(($"vec_id" + 1000000L).as("vec_id"),
-            expr("transform(embedding, x -> CAST(x AS DOUBLE) * 1.001 + 0.0005)")
-              .as("embedding")))
+      val corpus = vectorDupCorpus(emb)
       operators.Similarity.cosineNearDups(corpus, "vec_id", "embedding",
           threshold = 0.9)
         .select($"a", $"b", round($"cosine", 6).as("cosine"))
@@ -193,12 +159,7 @@ object VectorQueries {
     // that the dedup decision keeps exactly the right rows.
     CatalogEntry("q52_semantic_dedup", (s, d) => {
       val emb = t(s, d, "embeddings")
-      val corpus = emb.select($"vec_id", expr(
-          "transform(embedding, x -> CAST(x AS DOUBLE))").as("embedding"))
-        .unionByName(emb.filter($"vec_id" % 7 === 0)
-          .select(($"vec_id" + 1000000L).as("vec_id"),
-            expr("transform(embedding, x -> CAST(x AS DOUBLE) * 1.001 + 0.0005)")
-              .as("embedding")))
+      val corpus = vectorDupCorpus(emb)
       operators.Similarity.semanticDropNearDups(corpus, "vec_id",
           "embedding", threshold = 0.9)
         .select($"vec_id")
@@ -225,12 +186,7 @@ object VectorQueries {
     // survivor set.
     CatalogEntry("q70_semantic_rescue", (s, d) => {
       val emb = t(s, d, "embeddings")
-      val base = emb.select($"vec_id", expr(
-          "transform(embedding, x -> CAST(x AS DOUBLE))").as("embedding"))
-        .unionByName(emb.filter($"vec_id" % 7 === 0)
-          .select(($"vec_id" + 1000000L).as("vec_id"),
-            expr("transform(embedding, x -> CAST(x AS DOUBLE) * 1.001 + 0.0005)")
-              .as("embedding")))
+      val base = vectorDupCorpus(emb)
       val copies = base.filter($"vec_id" === 0L)
         .select(explode(sequence(lit(0L), lit(299L))).as("i"), $"embedding")
         .select(($"i" + 2000000L).as("vec_id"), $"embedding")
@@ -382,25 +338,12 @@ object VectorQueries {
     // the true neighbor inside the oversampled ADC candidate set, and
     // the exact float rerank must put it at rank 1 — quantization is
     // invisible at rank 1 or the gate fails.
-    CatalogEntry("q105_pq_ann_recall", (s, d) => {
-      val emb = t(s, d, "embeddings")
-      val qs = emb.filter($"vec_id" < 10)
-        .select(($"vec_id" + 10000L).as("vec_id"),
-          expr("transform(embedding, x -> CAST(x AS DOUBLE) * 1.001 + 0.0005)")
-            .as("embedding"))
-      operators.Similarity.pqTopK(emb, qs, "vec_id", "embedding", k = 3,
-          lloydIters = 3)
-        .filter($"rank" === 1)
-        .select($"query_id", $"neighbor_id".as("top1"))
-        .orderBy($"query_id")
-    }, Some(
+    CatalogEntry("q105_pq_ann_recall", (s, d) => plantedTop1(s, d)(
+      operators.Similarity.pqTopK(_, _, "vec_id", "embedding", k = 3,
+        lloydIters = 3)),
       // brute-force argmax, verbatim the q60/q66 discipline: the PQ
       // path's rank-1 answer must be quantization-invisible
-      ("""WITH c AS (SELECT vec_id, embedding::DOUBLE[] v FROM embeddings),
-         """ + bruteCosineSql + """
-           FROM s)
-         SELECT query_id, neighbor_id AS top1 FROM r WHERE rank = 1
-         ORDER BY query_id"""))),
+      Some(plantedTop1Sql)),
 
     // Composed IVF × PQ ANN gate — IVFADC (Jégou et al. 2011), the
     // classic billion-scale layout: the approximate pass is
@@ -409,25 +352,12 @@ object VectorQueries {
     // 8× smaller codes). Same planted-query discipline, same
     // brute-force argmax oracle: coarse routing, in-cell ADC recall
     // and the exact rerank must all hold for rank 1 to survive.
-    CatalogEntry("q107_ivfpq_ann_recall", (s, d) => {
-      val emb = t(s, d, "embeddings")
-      val qs = emb.filter($"vec_id" < 10)
-        .select(($"vec_id" + 10000L).as("vec_id"),
-          expr("transform(embedding, x -> CAST(x AS DOUBLE) * 1.001 + 0.0005)")
-            .as("embedding"))
-      operators.Similarity.ivfPqTopK(emb, qs, "vec_id", "embedding", k = 3,
-          lloydIters = 3)
-        .filter($"rank" === 1)
-        .select($"query_id", $"neighbor_id".as("top1"))
-        .orderBy($"query_id")
-    }, Some(
+    CatalogEntry("q107_ivfpq_ann_recall", (s, d) => plantedTop1(s, d)(
+      operators.Similarity.ivfPqTopK(_, _, "vec_id", "embedding", k = 3,
+        lloydIters = 3)),
       // brute-force argmax again: IVFADC must be end-to-end invisible
       // at rank 1 (coarse routing + ADC + rerank)
-      ("""WITH c AS (SELECT vec_id, embedding::DOUBLE[] v FROM embeddings),
-         """ + bruteCosineSql + """
-           FROM s)
-         SELECT query_id, neighbor_id AS top1 FROM r WHERE rank = 1
-         ORDER BY query_id"""))),
+      Some(plantedTop1Sql)),
 
     // Audio near-dup END TO END from real bytes — q124's discipline
     // for the sound tier: pseudo-random planted PCM clips
@@ -639,10 +569,7 @@ object VectorQueries {
       operators.Similarity.appendToIvfPqIndexBucketed(s, "q116_idx", b2,
         "vec_id", "embedding")
       val disk = operators.Similarity.readIvfPqIndex(s, "q116_idx")
-      val qs = emb.filter($"vec_id" < 10)
-        .select(($"vec_id" + 10000L).as("vec_id"),
-          expr("transform(embedding, x -> CAST(x AS DOUBLE) * 1.001 + 0.0005)")
-            .as("embedding"))
+      val qs = plantedQueries(emb)
       val ann = operators.Similarity.searchIvfPq(disk, emb, qs, "vec_id",
         "embedding", k = 3).filter($"rank" === 1)
       val probe = operators.Similarity.recallProbe(ann, emb, qs, "vec_id",
@@ -993,14 +920,8 @@ object VectorQueries {
          seeds AS (SELECT vec_id AS cell, v AS cvec FROM corpus_base
            WHERE vec_id <= 2),
          assign0 AS (
-           SELECT vec_id, cell FROM (
-             SELECT b.vec_id, s.cell, row_number() OVER
-               (PARTITION BY b.vec_id
-                ORDER BY list_dot_product(b.v, s.cvec) /
-                  (sqrt(list_dot_product(b.v, b.v)) *
-                   sqrt(list_dot_product(s.cvec, s.cvec))) DESC,
-                  s.cell) AS rn
-             FROM corpus_base b CROSS JOIN seeds s) WHERE rn = 1),
+           """ + cosineArgmaxSql("vec_id", "cell", "", "b.v", "s.cvec",
+             "corpus_base b CROSS JOIN seeds s") + """),
          cents AS (
            SELECT a.cell, [avg(b.v[1]), avg(b.v[2]), avg(b.v[3]),
              avg(b.v[4])]::DOUBLE[] AS cvec
@@ -1009,34 +930,16 @@ object VectorQueries {
          corpus AS (SELECT * FROM corpus_base UNION ALL
            SELECT * FROM drift),
          pre_assign AS (
-           SELECT vec_id, cell FROM (
-             SELECT c.vec_id, ct.cell, row_number() OVER
-               (PARTITION BY c.vec_id
-                ORDER BY list_dot_product(c.v, ct.cvec) /
-                  (sqrt(list_dot_product(c.v, c.v)) *
-                   sqrt(list_dot_product(ct.cvec, ct.cvec))) DESC,
-                  ct.cell) AS rn
-             FROM corpus c CROSS JOIN cents ct) WHERE rn = 1),
+           """ + cosineArgmaxSql("vec_id", "cell", "", "c.v", "ct.cvec",
+             "corpus c CROSS JOIN cents ct") + """),
          pre_probe AS (
-           SELECT query_id, cell FROM (
-             SELECT q.query_id, ct.cell, row_number() OVER
-               (PARTITION BY q.query_id
-                ORDER BY list_dot_product(q.qv, ct.cvec) /
-                  (sqrt(list_dot_product(q.qv, q.qv)) *
-                   sqrt(list_dot_product(ct.cvec, ct.cvec))) DESC,
-                  ct.cell) AS rn
-             FROM queries q CROSS JOIN cents ct) WHERE rn = 1),
+           """ + cosineArgmaxSql("query_id", "cell", "", "q.qv", "ct.cvec",
+             "queries q CROSS JOIN cents ct") + """),
          pre_top AS (
-           SELECT query_id, vec_id AS pre_top1 FROM (
-             SELECT q.query_id, c.vec_id, row_number() OVER
-               (PARTITION BY q.query_id
-                ORDER BY list_dot_product(q.qv, c.v) /
-                  (sqrt(list_dot_product(q.qv, q.qv)) *
-                   sqrt(list_dot_product(c.v, c.v))) DESC,
-                  c.vec_id) AS rn
-             FROM queries q JOIN pre_probe p USING (query_id)
+           """ + cosineArgmaxSql("query_id", "vec_id", " AS pre_top1",
+             "q.qv", "c.v", """queries q JOIN pre_probe p USING (query_id)
                JOIN pre_assign a ON a.cell = p.cell
-               JOIN corpus c ON c.vec_id = a.vec_id) WHERE rn = 1),
+               JOIN corpus c ON c.vec_id = a.vec_id""") + """),
          sample_assign AS (
            SELECT vec_id, cell FROM pre_assign WHERE vec_id % 2 = 1),
          refit AS (
@@ -1048,41 +951,63 @@ object VectorQueries {
            SELECT ct.cell, coalesce(r.cvec, ct.cvec) AS cvec
            FROM cents ct LEFT JOIN refit r ON r.cell = ct.cell),
          post_assign AS (
-           SELECT vec_id, cell FROM (
-             SELECT c.vec_id, ct.cell, row_number() OVER
-               (PARTITION BY c.vec_id
-                ORDER BY list_dot_product(c.v, ct.cvec) /
-                  (sqrt(list_dot_product(c.v, c.v)) *
-                   sqrt(list_dot_product(ct.cvec, ct.cvec))) DESC,
-                  ct.cell) AS rn
-             FROM corpus c CROSS JOIN new_cents ct) WHERE rn = 1),
+           """ + cosineArgmaxSql("vec_id", "cell", "", "c.v", "ct.cvec",
+             "corpus c CROSS JOIN new_cents ct") + """),
          post_probe AS (
-           SELECT query_id, cell FROM (
-             SELECT q.query_id, ct.cell, row_number() OVER
-               (PARTITION BY q.query_id
-                ORDER BY list_dot_product(q.qv, ct.cvec) /
-                  (sqrt(list_dot_product(q.qv, q.qv)) *
-                   sqrt(list_dot_product(ct.cvec, ct.cvec))) DESC,
-                  ct.cell) AS rn
-             FROM queries q CROSS JOIN new_cents ct) WHERE rn = 1),
+           """ + cosineArgmaxSql("query_id", "cell", "", "q.qv", "ct.cvec",
+             "queries q CROSS JOIN new_cents ct") + """),
          post_top AS (
-           SELECT query_id, vec_id AS post_top1 FROM (
-             SELECT q.query_id, c.vec_id, row_number() OVER
-               (PARTITION BY q.query_id
-                ORDER BY list_dot_product(q.qv, c.v) /
-                  (sqrt(list_dot_product(q.qv, q.qv)) *
-                   sqrt(list_dot_product(c.v, c.v))) DESC,
-                  c.vec_id) AS rn
-             FROM queries q JOIN post_probe p USING (query_id)
+           """ + cosineArgmaxSql("query_id", "vec_id", " AS post_top1",
+             "q.qv", "c.v", """queries q JOIN post_probe p USING (query_id)
                JOIN post_assign a ON a.cell = p.cell
-               JOIN corpus c ON c.vec_id = a.vec_id) WHERE rn = 1),
+               JOIN corpus c ON c.vec_id = a.vec_id""") + """),
          truth AS (
-           SELECT query_id, vec_id AS true_top1 FROM (
-             SELECT q.query_id, c.vec_id, row_number() OVER
-               (PARTITION BY q.query_id
-                ORDER BY list_dot_product(q.qv, c.v) /
-                  (sqrt(list_dot_product(q.qv, q.qv)) *
-                   sqrt(list_dot_product(c.v, c.v))) DESC,
-                  c.vec_id) AS rn
-             FROM queries q CROSS JOIN corpus c) WHERE rn = 1),"""
+           """ + cosineArgmaxSql("query_id", "vec_id", " AS true_top1",
+             "q.qv", "c.v", "queries q CROSS JOIN corpus c") + """),"""
+
+  /** The vector near-dup corpus (q33, q52, q70): every embedding as
+    * doubles plus perturbed copies of every 7th vector (ids +1,000,000). */
+  private def vectorDupCorpus(emb: DataFrame): DataFrame =
+    emb.select($"vec_id", expr(
+        "transform(embedding, x -> CAST(x AS DOUBLE))").as("embedding"))
+      .unionByName(emb.filter($"vec_id" % 7 === 0)
+        .select(($"vec_id" + 1000000L).as("vec_id"),
+          perturbedEmbedding.as("embedding")))
+
+  /** A planted-query recall gate (q60, q66, q105, q107): `topK` of the
+    * planted queries over the embeddings, rank 1 only. */
+  private def plantedTop1(s: SparkSession, d: String)(
+      topK: (DataFrame, DataFrame) => DataFrame): DataFrame = {
+    val emb = t(s, d, "embeddings")
+    topK(emb, plantedQueries(emb))
+      .filter($"rank" === 1)
+      .select($"query_id", $"neighbor_id".as("top1"))
+      .orderBy($"query_id")
+  }
+
+  /** [[plantedTop1]]'s oracle: each planted query's brute-force argmax,
+    * so the approximate path's rank-1 answer must be
+    * quantization-invisible. */
+  private def plantedTop1Sql: String =
+    """WITH c AS (SELECT vec_id, embedding::DOUBLE[] v FROM embeddings),
+         """ + bruteCosineSql + """
+           FROM s)
+         SELECT query_id, neighbor_id AS top1 FROM r WHERE rank = 1
+         ORDER BY query_id"""
+
+  /** Each `id` row's cosine argmax: the `pick` of the best row joined
+    * in `from`, by the cosine of `kv` and `ov` (alias.column), ties to
+    * the lower `pick`; `as` renames the picked column. */
+  private def cosineArgmaxSql(id: String, pick: String, as: String,
+                              kv: String, ov: String, from: String): String = {
+    val (k, o) = (kv.takeWhile(_ != '.'), ov.takeWhile(_ != '.'))
+    s"""SELECT $id, $pick$as FROM (
+             SELECT $k.$id, $o.$pick, row_number() OVER
+               (PARTITION BY $k.$id
+                ORDER BY list_dot_product($kv, $ov) /
+                  (sqrt(list_dot_product($kv, $kv)) *
+                   sqrt(list_dot_product($ov, $ov))) DESC,
+                  $o.$pick) AS rn
+             FROM $from) WHERE rn = 1"""
+  }
 }
