@@ -52,6 +52,18 @@ private[catalog] object Fixtures {
     df.sparkSession.createDataFrame(
       java.util.Arrays.asList(df.collect(): _*), df.schema)
 
+  /** A q21 fixture frame's payload hex from `events` columns: sig 0x11,
+    * CURR = user_id (u16le), DUTY = event_id % 256, flags byte =
+    * event_id % 4 and one pad byte; a `short` payload stops after DUTY
+    * (4 bytes, a length reject). */
+  private[catalog] def canPayload(short: Boolean): Column = {
+    val b = (c: Column) => lpad(hex(c), 2, "0")
+    val head = Seq(lit("11"), b(expr("user_id % 256")),
+      b(expr("user_id div 256")), b(expr("event_id % 256")))
+    concat((if (short) head
+      else head ++ Seq(b(expr("event_id % 4")), lit("00"))): _*)
+  }
+
   /** The q21 candump fixture LINES — a synthetic candump corpus
     * derived from `events`. Payload layout mirrors
     * [[graft.sources.CanFixtures]]: sig 0x11, CURR=user_id (u16le),
@@ -63,13 +75,8 @@ private[catalog] object Fixtures {
     * which writes these lines as text files and parses them through
     * [[graft.streaming.StreamingParse.decodedStream]]). */
   private[catalog] def canLines(events: DataFrame): DataFrame = {
-    val b = (c: Column) => lpad(hex(c), 2, "0")
-    val payloadOk = concat(lit("11"),
-      b(expr("user_id % 256")), b(expr("user_id div 256")),
-      b(expr("event_id % 256")), b(expr("event_id % 4")), lit("00"))
-    val payloadShort = concat(lit("11"),
-      b(expr("user_id % 256")), b(expr("user_id div 256")),
-      b(expr("event_id % 256")))
+    val (payloadOk, payloadShort) = (canPayload(short = false),
+      canPayload(short = true))
     val topicStr = when(expr("event_id % 101 = 0"), lit("022")).otherwise(lit("021"))
     val payload = when(expr("event_id % 103 = 0"), payloadShort).otherwise(payloadOk)
     val lines = events.select(

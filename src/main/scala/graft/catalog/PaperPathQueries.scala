@@ -148,13 +148,8 @@ object PaperPathQueries {
     // contract.
     CatalogEntry("q97_parse_report", (s, d) => {
       val out = seasonOutDir("q97")
-      val b = (c: Column) => lpad(hex(c), 2, "0")
-      val payloadOk = concat(lit("11"),
-        b(expr("user_id % 256")), b(expr("user_id div 256")),
-        b(expr("event_id % 256")), b(expr("event_id % 4")), lit("00"))
-      val payloadShort = concat(lit("11"),
-        b(expr("user_id % 256")), b(expr("user_id div 256")),
-        b(expr("event_id % 256")))
+      val (payloadOk, payloadShort) = (canPayload(short = false),
+        canPayload(short = true))
       val lines = t(s, d, "events").select(
         format_string("(%d.%06d) can0 %s#%s",
           expr("unix_micros(ts) div 1000000"), expr("unix_micros(ts) % 1000000"),
@@ -594,13 +589,9 @@ object PaperPathQueries {
     Files.writeString(Paths.get(s"$tmp/can_ids.json"),
       graft.sources.CanFixtures.json)
     val ev = t(s, d, "events")
+    val (payloadOk, payloadShort) = (canPayload(short = false),
+      canPayload(short = true))
     val b = (c: Column) => lpad(hex(c), 2, "0")
-    val payloadOk = concat(lit("11"),
-      b(expr("user_id % 256")), b(expr("user_id div 256")),
-      b(expr("event_id % 256")), b(expr("event_id % 4")), lit("00"))
-    val payloadShort = concat(lit("11"),
-      b(expr("user_id % 256")), b(expr("user_id div 256")),
-      b(expr("event_id % 256")))
     // file-order-dependent semantics (crop Q2) need a deterministic
     // file: one sorted part per log
     def dump(df: DataFrame, topic: Column, payload: Column, path: String): Unit =

@@ -525,7 +525,14 @@ object Similarity {
 
   private def ivfTables(prefix: String)(m: Map[String, String])
       : Seq[String] =
-    Seq(m("cells_table"), s"${prefix}_centroids")
+    ivfGen(prefix, m("cells_table"))
+
+  /** The tables of the IVF generation whose cells table is `cells`. */
+  private def ivfGen(prefix: String, cells: String): Seq[String] =
+    Seq(cells, ivfCentroids(prefix, cells))
+
+  private def ivfCentroids(prefix: String, cells: String): String =
+    Generations.companion(s"${prefix}_centroids", s"${prefix}_cells", cells)
 
   private def ivfRow(cells: String)(epoch: String): Seq[(String, Any)] =
     Seq("epoch" -> epoch, "cells_table" -> cells)
@@ -534,7 +541,7 @@ object Similarity {
     * the cells side. */
   private def ivfFrom(spark: org.apache.spark.sql.SparkSession,
                       prefix: String, live: Generations.Live): IvfIndex =
-    IvfIndex(spark.table(s"${prefix}_centroids"),
+    IvfIndex(spark.table(ivfCentroids(prefix, live("cells_table"))),
       withoutIds(spark.table(live("cells_table")), live.ledger))
 
   /** Retrain a DURABLE IVF index in place after its [[driftDecision]]
@@ -545,10 +552,9 @@ object Similarity {
     * durable cells rows re-shaped as (`__rid`, `__rvec`) and must
     * return the bounded fit sample (a hash-mod or per-cell-capped
     * slice; the retrain scans ONLY what it returns during the Lloyd
-    * steps). The re-assigned cells write to the ALTERNATE table of
-    * the A/B pair; the centroids table rewrites in place from the
-    * driver-local fitted frame (its Overwrite wipes the old token, so
-    * a crash from there until the commit refuses loudly). */
+    * steps). The re-assigned cells and the driver-local fitted
+    * centroids write to the ALTERNATE generation of the A/B pair, so a
+    * crash before the commit leaves the old generation serving. */
   def retrainIvfIndexBucketed(spark: org.apache.spark.sql.SparkSession,
                               prefix: String,
                               sampleFilter: DataFrame => DataFrame,
@@ -576,9 +582,9 @@ object Similarity {
     Sinks.writeBucketed(cellRows(vecs, "__rid", "__rvec",
       assignCells(vecs, "__rid", "__rvec", newCents)), other, Seq("cell"),
       numBuckets)
-    Sinks.writeTable(newCents, s"${prefix}_centroids")
-    val meta = Generations.commit(spark, prefix,
-      Seq(other, s"${prefix}_centroids"), Seq(cells))(ivfRow(other))
+    Sinks.writeTable(newCents, ivfCentroids(prefix, other))
+    val meta = Generations.commit(spark, prefix, ivfGen(prefix, other),
+      ivfGen(prefix, cells))(ivfRow(other))
     // a crash between commit and clear re-purges harmlessly
     Generations.clearLedger(spark, s"${prefix}_tombstones")
     meta
@@ -670,12 +676,11 @@ object Similarity {
   def writeIvfIndexBucketed(index: IvfIndex, prefix: String,
                             numBuckets: Int = 64): Unit = {
     Generations.writeSlot(index.centroids.sparkSession, prefix,
-        s"${prefix}_cells", "cells_table",
-        Seq(_, s"${prefix}_centroids")) { cells =>
+        s"${prefix}_cells", "cells_table", ivfGen(prefix, _)) { cells =>
       Sinks.inParallel(
         () => Sinks.writeBucketed(index.corpusCells, cells, Seq("cell"),
           numBuckets),
-        () => Sinks.writeTable(index.centroids, s"${prefix}_centroids"))
+        () => Sinks.writeTable(index.centroids, ivfCentroids(prefix, cells)))
     }(ivfRow(_)(_))
   }
 
@@ -1168,15 +1173,23 @@ object Similarity {
         s"${prefix}_cell_codes", "codes_table",
         ivfSqTables(prefix, _)) { codes =>
       Sinks.inParallel(
-        () => Sinks.writeTable(index.centroids, s"${prefix}_centroids"),
-        () => Sinks.writeTable(index.stats, s"${prefix}_stats"),
+        () => Sinks.writeTable(index.centroids,
+          ivfSqCompanion(prefix, "centroids", codes)),
+        () => Sinks.writeTable(index.stats,
+          ivfSqCompanion(prefix, "stats", codes)),
         () => Sinks.writeBucketed(index.cellCodes, codes, Seq("cell"),
           numBuckets))
     }(ivfSqRow(_)(_))
   }
 
   private def ivfSqTables(prefix: String, codes: String): Seq[String] =
-    Seq(s"${prefix}_centroids", s"${prefix}_stats", codes)
+    Seq(ivfSqCompanion(prefix, "centroids", codes),
+      ivfSqCompanion(prefix, "stats", codes), codes)
+
+  /** The `name` table of the IVF×SQ generation whose codes are `codes`. */
+  private def ivfSqCompanion(prefix: String, name: String,
+                             codes: String): String =
+    Generations.companion(s"${prefix}_$name", s"${prefix}_cell_codes", codes)
 
   private def ivfSqRow(codes: String)(epoch: String): Seq[(String, Any)] =
     Seq("epoch" -> epoch, "codes_table" -> codes)
@@ -1192,8 +1205,9 @@ object Similarity {
   private def ivfSqFrom(spark: org.apache.spark.sql.SparkSession,
                         prefix: String,
                         live: Generations.Live): IvfSqIndex =
-    IvfSqIndex(spark.table(s"${prefix}_centroids"),
-      spark.table(s"${prefix}_stats"),
+    IvfSqIndex(
+      spark.table(ivfSqCompanion(prefix, "centroids", live("codes_table"))),
+      spark.table(ivfSqCompanion(prefix, "stats", live("codes_table"))),
       withoutIds(spark.table(live("codes_table")), live.ledger))
 
   /** Reopen the live generation of a durable IVF×SQ index (raw —
@@ -1210,10 +1224,9 @@ object Similarity {
     * re-encode pass every retrain already pays (min/max stats are a
     * scan, not an iterative fit — see [[retrainIvfSq]]). The corpus
     * is EXTERNAL by necessity: the durable index stores int8 codes
-    * only, and re-quantizing needs the floats. The re-encoded codes
-    * write to the ALTERNATE table of the A/B pair; the
-    * centroids/stats Overwrites wipe the old tokens, so a crash from
-    * there until the commit refuses loudly at [[readIvfSqIndex]]. */
+    * only, and re-quantizing needs the floats. The re-encoded codes,
+    * centroids and stats write to the ALTERNATE generation of the A/B
+    * pair, so a crash before the commit leaves the old one serving. */
   def retrainIvfSqIndexBucketed(spark: org.apache.spark.sql.SparkSession,
                                 prefix: String, corpus: DataFrame,
                                 idCol: String, vecCol: String,
@@ -1236,10 +1249,13 @@ object Similarity {
       purge(sample), lloydIters)
     Sinks.writeBucketed(retrained.cellCodes, otherCodes, Seq("cell"),
       numBuckets)
-    Sinks.writeTable(retrained.centroids, s"${prefix}_centroids")
-    Sinks.writeTable(retrained.stats, s"${prefix}_stats")
+    Sinks.writeTable(retrained.centroids,
+      ivfSqCompanion(prefix, "centroids", otherCodes))
+    Sinks.writeTable(retrained.stats,
+      ivfSqCompanion(prefix, "stats", otherCodes))
     val meta = Generations.commit(spark, prefix,
-      ivfSqTables(prefix, otherCodes), Seq(liveCodes))(ivfSqRow(otherCodes))
+      ivfSqTables(prefix, otherCodes), ivfSqTables(prefix, liveCodes))(
+      ivfSqRow(otherCodes))
     if (hasTombstones)
       Generations.clearLedger(spark, s"${prefix}_tombstones")
     meta
@@ -1724,10 +1740,12 @@ object Similarity {
       Sinks.inParallel(
         () => Sinks.writeBucketed(index.cellCodes, codes, Seq("cell"),
           numBuckets),
-        () => Sinks.writeTable(index.codebooks, s"${prefix}_codebooks"),
-        () => Sinks.writeTable(index.centroids, s"${prefix}_centroids"),
+        () => Sinks.writeTable(index.codebooks,
+          ivfPqCompanion(prefix, "codebooks", codes)),
+        () => Sinks.writeTable(index.centroids,
+          ivfPqCompanion(prefix, "centroids", codes)),
         () => Sinks.writeTable(builtCellStats(index.cellCodes),
-          s"${prefix}_cell_stats"))
+          ivfPqCompanion(prefix, "cell_stats", codes)))
     }(ivfPqRow(index, _)(_))
   }
 
@@ -1748,8 +1766,13 @@ object Similarity {
     * together on read); `codesTable` is the live A/B generation of
     * the scan side. */
   private def ivfPqTables(prefix: String, codesTable: String): Seq[String] =
-    Seq(codesTable, s"${prefix}_codebooks",
-      s"${prefix}_centroids", s"${prefix}_cell_stats")
+    codesTable +: Seq("codebooks", "centroids", "cell_stats")
+      .map(ivfPqCompanion(prefix, _, codesTable))
+
+  /** The `name` table of the IVF×PQ generation whose codes are `codes`. */
+  private def ivfPqCompanion(prefix: String, name: String,
+                             codes: String): String =
+    Generations.companion(s"${prefix}_$name", s"${prefix}_cell_codes", codes)
 
   private def ivfPqRow(index: IvfPqIndex, codes: String)(
       epoch: String): Seq[(String, Any)] =
@@ -1767,8 +1790,8 @@ object Similarity {
                         prefix: String,
                         live: Generations.Live): IvfPqIndex =
     IvfPqIndex(live("n_sub").toInt, live("n_centroids").toInt,
-      spark.table(s"${prefix}_centroids"),
-      spark.table(s"${prefix}_codebooks"),
+      spark.table(ivfPqCompanion(prefix, "centroids", live("codes_table"))),
+      spark.table(ivfPqCompanion(prefix, "codebooks", live("codes_table"))),
       spark.table(live("codes_table")))
 
   /** Reopen the live generation of a durable IVF×PQ index (raw —
@@ -1782,7 +1805,8 @@ object Similarity {
     * by [[appendToIvfPqIndexBucketed]]. */
   def readIvfPqCellStats(spark: org.apache.spark.sql.SparkSession,
                          prefix: String): DataFrame =
-    spark.table(s"${prefix}_cell_stats")
+    spark.table(ivfPqCompanion(prefix, "cell_stats",
+      openIvfPq(spark, prefix, ledger = false)("codes_table")))
 
   /** Grow a DURABLE IVF×PQ index in place — O(new) compute AND
     * O(new) I/O per batch: the new vectors are encoded against the
@@ -1803,6 +1827,7 @@ object Similarity {
     val live = openIvfPq(spark, prefix, ledger = false)
     val index = ivfPqFrom(spark, prefix, live)
     val codesTable = live("codes_table")
+    val cellStats = ivfPqCompanion(prefix, "cell_stats", codesTable)
     val cells = assignCells(newVecs, idCol, vecCol, index.centroids)
       .select(col(idCol).as("neighbor_id"), col("cell"))
     val newCodes = pqEncode(newVecs, idCol, vecCol, index.codebooks,
@@ -1817,7 +1842,7 @@ object Similarity {
       .agg(count(lit(1)).as("n_new"))
       .select(lit("b").as("__src"), col("cell"),
         col("n_new"), lit(null).cast("long").as("n_appended"))
-      .unionAll(spark.table(s"${prefix}_cell_stats")
+      .unionAll(spark.table(cellStats)
         .select(lit("o").as("__src"), col("cell"),
           col("n_built"), col("n_appended")))
       .collect()
@@ -1837,8 +1862,8 @@ object Similarity {
       spark.createDataFrame(java.util.Arrays.asList(
         grown.map { case (c, b, a) =>
           org.apache.spark.sql.Row(c, b, a) }: _*),
-        spark.table(s"${prefix}_cell_stats").schema),
-      s"${prefix}_cell_stats")
+        spark.table(cellStats).schema),
+      cellStats)
     Generations.commit(spark, prefix, ivfPqTables(prefix, codesTable))(
       ivfPqRow(index, codesTable))
   }
@@ -2026,12 +2051,14 @@ object Similarity {
     // ledger from driver-local fitted frames
     Sinks.writeBucketed(retrained.cellCodes, otherCodes, Seq("cell"),
       numBuckets)
-    Sinks.writeTable(retrained.codebooks, s"${prefix}_codebooks")
-    Sinks.writeTable(retrained.centroids, s"${prefix}_centroids")
+    Sinks.writeTable(retrained.codebooks,
+      ivfPqCompanion(prefix, "codebooks", otherCodes))
+    Sinks.writeTable(retrained.centroids,
+      ivfPqCompanion(prefix, "centroids", otherCodes))
     Sinks.writeTable(builtCellStats(spark.table(otherCodes)),
-      s"${prefix}_cell_stats")
+      ivfPqCompanion(prefix, "cell_stats", otherCodes))
     val meta = Generations.commit(spark, prefix,
-      ivfPqTables(prefix, otherCodes), Seq(liveCodes))(
+      ivfPqTables(prefix, otherCodes), ivfPqTables(prefix, liveCodes))(
       ivfPqRow(index, otherCodes))
     // a crash before the clear leaves already-purged tombstones that
     // re-filter harmlessly, never a wrong read

@@ -39,10 +39,6 @@ object TextAnalysis {
   def punctCount(text: Column): Column =
     patternCounts(text, Seq(PunctPattern)).getItem(0)
 
-  def upperRatio(text: Column): Column =
-    patternCounts(text, Seq("[A-Z]")).getItem(0)
-      .cast("double") / greatest(length(text), lit(1)).cast("double")
-
   /** per-language stopword hit counts — the classic n-gram/stopword
     * heuristic. Counts word-boundary occurrences of a few
     * high-frequency function words per language. */

@@ -24,7 +24,7 @@ import org.apache.spark.sql.functions._
 object Candump {
 
   /** Fixed widths shared by [[frameRegex]] and the substring-arithmetic
-    * field extraction in [[framesFromLines]] — change them TOGETHER
+    * field extraction in [[frameFields]] — change them TOGETHER
     * (CandumpSpec locks the assembled pattern so a drive-by regex edit
     * fails a test instead of silently mis-parsing). */
   val TsSecondsWidth = 10
@@ -81,28 +81,35 @@ object Candump {
       .withColumn("chunk", spark_partition_id())
       .withColumn("line_id", monotonically_increasing_id())
     // pandas extractall: every non-overlapping match in the line.
-    val matches = lines
+    lines
       .select(col("file"), col("chunk"), col("line_id"),
         posexplode(regexp_extract_all(col("line"), lit(frameRegex), lit(0)))
           .as(Seq("match_no", "frame")))
-    // A matched frame has a fixed-width timestamp prefix
-    // "(ssssssssss.uuuuuu) " and exactly one '#', so the remaining
-    // fields are substring arithmetic — the regex runs ONCE per line
-    // instead of once per extracted group (5x fewer regex executions
-    // on the hot path).
+      .select(Seq(col("file"), col("chunk"), col("line_id"),
+        col("match_no")) ++ frameFields(offsetMicros): _*)
+      .withColumn("ts", timestamp_micros(col("ts_micros")))
+  }
+
+  /** The fields of a matched `frame` column — interface, payload_hex,
+    * ts_micros (plus `offsetMicros`) and topic — for the batch scan
+    * above and the streaming one
+    * ([[graft.streaming.StreamingParse.framesStream]]) alike. A
+    * matched frame has a fixed-width timestamp prefix
+    * "(ssssssssss.uuuuuu) " and exactly one '#', so the fields are
+    * substring arithmetic: the regex runs ONCE per line instead of
+    * once per extracted group (5x fewer regex executions on the hot
+    * path). */
+  def frameFields(offsetMicros: Long = 0L): Seq[Column] = {
     val head = substring_index(col("frame"), "#", 1) // "(…) iface 011"
     val secStart = 2                                 // after '('
     val usStart = secStart + TsSecondsWidth + 1      // after "ssssssssss."
-    matches.select(
-        col("file"), col("chunk"), col("line_id"), col("match_no"),
-        element_at(split(head, "\\s+"), 2).as("interface"),
-        upper(substring_index(col("frame"), "#", -1)).as("payload_hex"),
-        (expr(s"CAST(substring(frame, $secStart, $TsSecondsWidth) AS BIGINT)" +
-              s" * 1000000L + CAST(substring(frame, $usStart, $TsMicrosWidth) AS BIGINT)")
-          + lit(offsetMicros)).as("ts_micros"),
-        conv(substring(head, -TopicWidth, TopicWidth), 16, 10)
-          .cast("int").as("topic"))
-      .withColumn("ts", timestamp_micros(col("ts_micros")))
+    Seq(element_at(split(head, "\\s+"), 2).as("interface"),
+      upper(substring_index(col("frame"), "#", -1)).as("payload_hex"),
+      (expr(s"CAST(substring(frame, $secStart, $TsSecondsWidth) AS BIGINT)" +
+            s" * 1000000L + CAST(substring(frame, $usStart, $TsMicrosWidth) AS BIGINT)")
+        + lit(offsetMicros)).as("ts_micros"),
+      conv(substring(head, -TopicWidth, TopicWidth), 16, 10)
+        .cast("int").as("topic"))
   }
 
   /** P2/Q2 — timestamp crop: keep rows between the FIRST and LAST

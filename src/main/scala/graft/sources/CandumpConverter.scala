@@ -42,9 +42,12 @@ object CandumpConverter {
 
   /** CSV variant (columns date, top, mod, bytes-as-JSON-string):
     * parse `bytes` with from_json, drop incomplete rows
-    * (convert_json_to_candump.py:121-134). */
+    * (convert_json_to_candump.py:121-134). Quotes inside a quoted
+    * field are doubled, as RFC 4180 writers (mongoexport, pandas)
+    * emit them. */
   def fromCsv(spark: SparkSession, path: String): DataFrame = {
-    val raw = spark.read.option("header", "true").csv(path)
+    val raw = spark.read.option("header", "true").option("escape", "\"")
+      .csv(path)
     toCandumpLines(raw
       .withColumn("bytes", from_json(col("bytes"), ArrayType(StringType)))
       .withColumn("mod", col("mod").cast("int"))

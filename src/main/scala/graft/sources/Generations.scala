@@ -55,13 +55,21 @@ object Generations {
   def otherSlot(live: String, base: String): String =
     if (live == base) s"${base}_b" else base
 
+  /** The companion `table` of the generation whose pointer table is
+    * `slot` (one of the `base` / `base_b` pair): `table` beside `base`,
+    * `table_b` beside `base_b`. Every table of a generation alternates
+    * with its pointer, so a retrain or a rewrite over a served prefix
+    * never touches a table the committed meta still names. */
+  def companion(table: String, base: String, slot: String): String =
+    table + slot.stripPrefix(base)
+
   /** A fresh whole write of a table-pointer family: `write` the slot
     * that `prefix`'s committed `pointer` column does NOT name (`base`
-    * before the first commit), then [[commit]] it with `row(slot,
-    * epoch)`, superseding the slot that served. A write over a served
-    * prefix thus never rewrites the serving table in place, and a
-    * generation a purge or retrain moved to `base_b` is dropped at the
-    * commit instead of left behind. */
+    * before the first commit), then [[commit]] its `stamp` tables with
+    * `row(slot, epoch)`, superseding the served slot's `stamp` tables.
+    * A write over a served prefix thus never rewrites a serving table
+    * in place, and a generation a purge or retrain moved to `base_b`
+    * is dropped at the commit instead of left behind. */
   def writeSlot(spark: SparkSession, prefix: String, base: String,
                 pointer: String, stamp: String => Seq[String])(
       write: String => Unit)(
@@ -73,7 +81,8 @@ object Generations {
         .getString(0))
     val slot = live.fold(base)(otherSlot(_, base))
     write(slot)
-    commit(spark, prefix, stamp(slot), live.toSeq)(row(slot, _))
+    commit(spark, prefix, stamp(slot), live.toSeq.flatMap(stamp))(
+      row(slot, _))
   }
 
   /** The serving `gen` of `${prefix}_meta`, or None before the first

@@ -2,8 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.streaming.Trigger
 
 import graft.operators.CanDecode
 import graft.sources.{Candump, CanSchema}
@@ -25,29 +24,26 @@ object StreamingParse {
   /** Incremental candump → decoded long rows. */
   def decodedStream(spark: SparkSession, inputDir: String,
                     schema: CanSchema.Schema,
-                    mab20Workaround: Boolean = false): DataFrame = {
-    val lines = spark.readStream
+                    mab20Workaround: Boolean = false): DataFrame =
+    CanDecode.decodeLong(framesStream(spark, inputDir), schema,
+      mab20Workaround, carryCols = Seq("file"))
+
+  /** Incremental candump → frames (file, topic, payload_hex, ts): the
+    * batch scan's regex and [[Candump.frameFields]] minus its chunk,
+    * line and match ids (streaming sources forbid
+    * `monotonically_increasing_id`; order-dependent ops stay in the
+    * batch path). */
+  def framesStream(spark: SparkSession, inputDir: String): DataFrame =
+    spark.readStream
       .option("maxFilesPerTrigger", 16)
       .text(inputDir)
-      .withColumn("file", input_file_name())
-      .withColumnRenamed("value", "line")
-    // framesFromLines minus the batch-only monotonic id (streaming
-    // sources forbid it; order-dependent ops stay in the batch path)
-    val frames = lines
+      .select(col("value").as("line"), input_file_name().as("file"))
       .select(col("file"),
         explode(regexp_extract_all(col("line"), lit(Candump.frameRegex), lit(0)))
           .as("frame"))
-      .select(col("file"),
-        regexp_extract(col("frame"), Candump.frameRegex, 1).as("ts_str"),
-        conv(regexp_extract(col("frame"), Candump.frameRegex, 3), 16, 10)
-          .cast("int").as("topic"),
-        upper(regexp_extract(col("frame"), Candump.frameRegex, 4)).as("payload_hex"))
-      .withColumn("ts", timestamp_micros(
-        expr("CAST(substring(ts_str, 1, 10) AS BIGINT) * 1000000L" +
-             " + CAST(substring(ts_str, 12, 6) AS BIGINT)")))
-      .drop("ts_str")
-    CanDecode.decodeLong(frames, schema, mab20Workaround, carryCols = Seq("file"))
-  }
+      .select(col("file") +: Candump.frameFields(): _*)
+      .select(col("file"), col("topic"), col("payload_hex"),
+        timestamp_micros(col("ts_micros")).as("ts"))
 
   /** Watermarked tumbling-window mean per signal — the streaming
     * resample (append mode emits a bin once the watermark passes it). */
@@ -1408,14 +1404,4 @@ object StreamingParse {
   private def expr_fps(hashes: Column, w: Int): Column =
     transform(graft.operators.TextAnalysis.winnowCol(hashes, w),
       p => element_at(hashes, p))
-
-  /** Wire a decoded stream to a parquet sink with checkpointing. */
-  def sinkParquet(df: DataFrame, outPath: String,
-                  checkpoint: String): DataStreamWriter[Row] =
-    df.writeStream
-      .format("parquet")
-      .option("path", outPath)
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.ProcessingTime("10 seconds"))
-      .outputMode("append")
 }

@@ -41,7 +41,7 @@ class CanDecodeSpec extends SparkSpec {
   }
 
   test("2020 schema: corpus frame decodes with reference quirk scales") {
-    val s20 = CanSchema.load("/root/reference/can_ids_2020.json")
+    val s20 = CanSchema.load(SeasonSchemas.path("2020"))
     val long = CanDecode.decodeLong(
       framesOf("(1580415599.609366) can0 011#E4360F0000780216"), s20)
     val got = long.select("module_name", "topic_name", "byte_name", "value")
@@ -56,7 +56,7 @@ class CanDecodeSpec extends SparkSpec {
   }
 
   test("mab20 workaround (Q5): topic 65 resigned to MAB19 + truncated") {
-    val s20 = CanSchema.load("/root/reference/can_ids_2020.json")
+    val s20 = CanSchema.load(SeasonSchemas.path("2020"))
     val lines = framesOf("(1580415599.605882) can0 041#000400")
     // without the workaround: signature 0 has no topic 65 → dropped
     assert(CanDecode.decodeLong(lines, s20).count() == 0)

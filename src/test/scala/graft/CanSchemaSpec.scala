@@ -32,7 +32,7 @@ class CanSchemaSpec extends AnyFunSuite {
   }
 
   test("2020 schema: MCS19.START_STAGES over-counted size (Q3)") {
-    val s = CanSchema.load("/root/reference/can_ids_2020.json")
+    val s = CanSchema.load(SeasonSchemas.path("2020"))
     val t = s.modules(200).topics(516)
     assert(t.declaredSize == 3) // real frames are 2 bytes → always rejected
     assert(t.fields.map(f => (f.name, f.byteOffset, f.kind)) == Vector(
@@ -40,7 +40,7 @@ class CanSchemaSpec extends AnyFunSuite {
   }
 
   test("2020 schema: MCC19 MEASUREMENTS DT mis-scaled by Q1 ordinal lookup") {
-    val s = CanSchema.load("/root/reference/can_ids_2020.json")
+    val s = CanSchema.load(SeasonSchemas.path("2020"))
     val t = s.modules(228).topics(17) // MCC19_4.MEASUREMENTS
     val dt = t.fields.find(_.name == "DT").get
     // declared "%/255" but ordinal lookup reads slot 4 (INPUT_CURRENT_H
@@ -51,9 +51,9 @@ class CanSchemaSpec extends AnyFunSuite {
   }
 
   test("2020/2022/lic schemas load completely") {
-    val s20 = CanSchema.load("/root/reference/can_ids_2020.json")
-    val s22 = CanSchema.load("/root/reference/can_ids_2022.json")
-    val lic = CanSchema.load("/root/reference/can_ids_lic_01072023.json")
+    val s20 = CanSchema.load(SeasonSchemas.path("2020"))
+    val s22 = CanSchema.load(SeasonSchemas.path("2022"))
+    val lic = CanSchema.load(SeasonSchemas.path("lic"))
     assert(s20.modules.nonEmpty && s22.modules.nonEmpty && lic.modules.nonEmpty)
     // every topic's layout derives without error, wide columns distinct
     Seq(s20, s22, lic).foreach { s =>

@@ -101,6 +101,32 @@ class CandumpSpec extends SparkSpec {
     assert(e.getMessage.contains(s"$dir/*.none"), e.getMessage)
   }
 
+  test("batch and stream extract the same frames from the same lines") {
+    val dir = Files.createTempDirectory("frames_parity")
+    // several frames per line, mixed-case hex in topics and payloads,
+    // a rejected frame between accepted ones, two files
+    Files.writeString(dir.resolve("a.log"), Seq(
+      "(1580415599.609366) can0 01a#e4360f0000780216(1580415599.609370) can0 01B#Aa00",
+      "(1580415599.609525) can0 011#E33C0F00002C0D4C junk (1580415599.700001) vcan1 7fF#0102030405060708",
+      "(1580415599.800000) can0 011#E4360F0000780216A (1580415599.800001) can0 041#000400",
+      "not a frame at all").mkString("\n"))
+    Files.writeString(dir.resolve("b.log"),
+      "(1580415600.000001) can0 0aB#c0FfEe(1580415600.000002) can0 021#11e803110300\n")
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.select("file", "ts", "topic", "payload_hex").collect()
+        .map(_.toString).sorted.toSeq
+    val batch = rows(Candump.frames(spark, s"$dir/*.log"))
+    val q = graft.streaming.StreamingParse.framesStream(spark, dir.toString)
+      .writeStream.format("memory").queryName("frames_parity")
+      .outputMode("append").start()
+    val stream = try {
+      q.processAllAvailable()
+      rows(spark.table("frames_parity"))
+    } finally q.stop()
+    assert(batch.size == 7, batch.mkString("\n"))
+    assert(stream == batch)
+  }
+
   test("frameRegex lock: substring field extraction assumes this exact pattern") {
     // framesFromLines slices fields by offsets derived from the widths
     // below; if this assertion fires you changed the pattern — revisit

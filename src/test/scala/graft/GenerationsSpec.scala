@@ -103,6 +103,56 @@ class GenerationsSpec extends SparkSpec {
     assert(Dedup.readHammingMembers(spark, t).count() == last.count())
   }
 
+  test("every table of an IVF, IVF×SQ and IVF×PQ generation alternates: a retrain and a rewrite never touch the served tables") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(5)
+    val corpus = (1L to 60L).map(i => (i, Array.fill(6)(rnd.nextDouble())))
+      .toDF("vec_id", "embedding")
+    // the data tables of `prefix`'s generation: everything but the meta
+    // and the takedown ledger
+    def tables(prefix: String): Set[String] =
+      spark.catalog.listTables().collect().map(_.name)
+        .filter(n => n.startsWith(s"${prefix}_") && !n.endsWith("_meta") &&
+          !n.contains("_tombstones")).toSet
+    def swaps(prefix: String, write: () => Unit, retrain: () => Unit,
+              read: () => Long): Unit = {
+      write()
+      val built = tables(prefix)
+      retrain()
+      val retrained = tables(prefix)
+      assert(retrained.nonEmpty && (retrained & built).isEmpty,
+        s"$prefix retrain rewrote served tables in place: $built -> $retrained")
+      assert(read() > 0L)
+      write() // a fresh write over the served prefix
+      val rewritten = tables(prefix)
+      assert(rewritten.nonEmpty && (rewritten & retrained).isEmpty,
+        s"$prefix rewrite touched served tables: $retrained -> $rewritten")
+      assert(read() > 0L)
+    }
+    val sample = corpus.filter($"vec_id" % 2 === 1)
+    swaps("gs_ivf",
+      () => Similarity.writeIvfIndexBucketed(Similarity.buildIvf(corpus,
+        "vec_id", "embedding", nCells = 2, lloydIters = 1), "gs_ivf",
+        numBuckets = 2),
+      () => Similarity.retrainIvfIndexBucketed(spark, "gs_ivf",
+        _.filter($"__rid" % 2 === 1), numBuckets = 2),
+      () => Similarity.readIvfIndex(spark, "gs_ivf").centroids.count())
+    swaps("gs_ivfsq",
+      () => Similarity.writeIvfSqIndexBucketed(Similarity.buildIvfSq(corpus,
+        "vec_id", "embedding", nCells = 2, lloydIters = 1), "gs_ivfsq",
+        numBuckets = 2),
+      () => Similarity.retrainIvfSqIndexBucketed(spark, "gs_ivfsq", corpus,
+        "vec_id", "embedding", sample, numBuckets = 2),
+      () => Similarity.readIvfSqIndex(spark, "gs_ivfsq").stats.count())
+    swaps("gs_ivfpq",
+      () => Similarity.writeIvfPqIndexBucketed(Similarity.buildIvfPq(corpus,
+        "vec_id", "embedding", nCells = 2, nSub = 2, nCentroids = 2,
+        lloydIters = 1), "gs_ivfpq", numBuckets = 2),
+      () => Similarity.retrainIvfPqIndexBucketed(spark, "gs_ivfpq", corpus,
+        "vec_id", "embedding", sample, numBuckets = 2),
+      () => Similarity.readIvfPqCellStats(spark, "gs_ivfpq").count())
+  }
+
   test("the commit protocol lives only in the generation store") {
     val protocol = """stampEpoch|requireEpoch|clearEpochTokens|_graft_epoch_""".r
     val s = Files.walk(Paths.get("src/main/scala"))

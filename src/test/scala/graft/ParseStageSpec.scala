@@ -121,7 +121,7 @@ class ParseStageSpec extends SparkSpec {
     // schema (20 modules x 46 topics -> ~300 wide columns) must stay
     // plannable and executable in reasonable time.
     val t0 = System.nanoTime()
-    val s20 = graft.sources.CanSchema.load("/root/reference/can_ids_2020.json")
+    val s20 = graft.sources.CanSchema.load(SeasonSchemas.path("2020"))
     val dir = Files.createTempDirectory("stress")
     // frames for two real topics + noise
     Files.write(dir.resolve("s.log"), (0 until 200).map { i =>
@@ -157,7 +157,7 @@ class ParseStageSpec extends SparkSpec {
     // (which silently de-fuses the whole scan→generate→decode stage to
     // interpreted-ish eval — the round-9 find). Pinned by capturing
     // the CodeGenerator logger's ERROR events during a real action.
-    val s20 = graft.sources.CanSchema.load("/root/reference/can_ids_2020.json")
+    val s20 = graft.sources.CanSchema.load(SeasonSchemas.path("2020"))
     val dir = Files.createTempDirectory("cgprobe")
     Files.write(dir.resolve("s.log"), (0 until 50).map { i =>
       f"(${1580515200L + i}%d.000000) can0 011#E4360F0000780216"
@@ -180,7 +180,7 @@ class ParseStageSpec extends SparkSpec {
     // barriers, InferFiltersFromGenerate cloning — both round-9
     // finds) shows up as a disabled plan containing a Generate node.
     import org.apache.spark.sql.functions.{col, input_file_name}
-    val s20 = graft.sources.CanSchema.load("/root/reference/can_ids_2020.json")
+    val s20 = graft.sources.CanSchema.load(SeasonSchemas.path("2020"))
     val dir = Files.createTempDirectory("cgprobe_long")
     Files.write(dir.resolve("s.log"), (0 until 50).map { i =>
       f"(${1580515200L + i}%d.000000) can0 011#E4360F0000780216"
@@ -212,7 +212,7 @@ class ParseStageSpec extends SparkSpec {
     // wide 2020 schema — zero CodeGenerator compile errors AND the
     // regex-generate stage stays fused.
     import org.apache.spark.sql.functions.{col, input_file_name, lit}
-    val s20 = graft.sources.CanSchema.load("/root/reference/can_ids_2020.json")
+    val s20 = graft.sources.CanSchema.load(SeasonSchemas.path("2020"))
     val dir = Files.createTempDirectory("cgprobe_mab20")
     Files.write(dir.resolve("s.log"), ((0 until 40).map { i =>
       f"(${1580515200L + i}%d.000000) can0 011#E4360F0000780216"

@@ -40,7 +40,7 @@ class StreamingSeasonSpec extends SparkSpec {
     // generate stage. Same real 2020 schema, same execution-time
     // appender probe: no janino 64 KB CodeGenerator ERROR, and the
     // regex-generate stage must not appear in a disabled plan.
-    val s20 = graft.sources.CanSchema.load("/root/reference/can_ids_2020.json")
+    val s20 = graft.sources.CanSchema.load(SeasonSchemas.path("2020"))
     val dir = Files.createTempDirectory("stream_cg")
     Files.write(dir.resolve("s.log"), (0 until 50).map { i =>
       f"(${1580515200L + i}%d.000000) can0 011#E4360F0000780216"
@@ -1128,25 +1128,24 @@ class StreamingSeasonSpec extends SparkSpec {
       }
       Files.write(dataDir.resolve(name), lines.mkString("\n").getBytes)
     }
-    val ref = "/root/reference"
     for (n <- Seq("candump-2020-01-29_115602.log", "candump-2020-01-30_054738.log",
         "candump-2020-01-30_172000.log", "candump-2020-02-01_064223.log",
         "candump-2020-02-01_064222.log", "candump-from_db0.log"))
-      writeLog(n, s"$ref/can_ids_2020.json")
+      writeLog(n, SeasonSchemas.path("2020"))
     for (n <- Seq("candump-2022-10-15_234814.log", "candump-2023-07-02_104810.log"))
-      writeLog(n, if (n.contains("2023")) s"$ref/can_ids_lic_01072023.json"
-                  else s"$ref/can_ids_2022.json")
-    // configs point at $dataDir; schema paths redirected to the real files
+      writeLog(n, if (n.contains("2023")) SeasonSchemas.path("lic")
+                  else SeasonSchemas.path("2022"))
+    // configs point at $dataDir; schema paths redirected to the stand-ins
     val cfgs = Seq(
       Seasons.season2020(dir.toString).copy(
-        canIdsPath = s"$ref/can_ids_2020.json",
+        canIdsPath = SeasonSchemas.path("2020"),
         resamplePeriods = Seq("1s", "100ms")), // sub-second period live
       Seasons.season2022(dir.toString).copy(
-        canIdsPath = s"$ref/can_ids_2022.json", resamplePeriods = Seq("1s")),
+        canIdsPath = SeasonSchemas.path("2022"), resamplePeriods = Seq("1s")),
       Seasons.season2022Ita(dir.toString).copy(
-        canIdsPath = s"$ref/can_ids_2022.json"),
+        canIdsPath = SeasonSchemas.path("2022")),
       Seasons.season2023Lic(dir.toString).copy(
-        canIdsPath = s"$ref/can_ids_lic_01072023.json"))
+        canIdsPath = SeasonSchemas.path("lic")))
     for (cfg <- cfgs) {
       val byPeriod = Seasons.runAll(spark, cfg,
         dir.resolve(s"out_${cfg.name}").toString)

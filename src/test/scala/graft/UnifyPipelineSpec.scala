@@ -112,6 +112,28 @@ class UnifyPipelineSpec extends SparkSpec {
     assert(r.getInt(0) == 33 && r.getString(1) == "FA9F04F600F600")
   }
 
+  test("CandumpConverter.fromCsv: the golden row from a CSV dump; incomplete rows dropped") {
+    val dir = java.nio.file.Files.createTempDirectory("conv_csv")
+    java.nio.file.Files.writeString(dir.resolve("dump.csv"), Seq(
+      "date,top,mod,bytes",
+      "2020-02-14 15:44:54.944,33,250,\"[\"\"159\"\",\"\"4\"\",\"\"246\"\",\"\"0\"\",\"\"246\"\",\"\"0\"\"]\"",
+      "2020-02-14 15:44:55.000,33,,\"[\"\"1\"\"]\"").mkString("\n"))
+    val lines = CandumpConverter.fromCsv(spark, dir.resolve("dump.csv").toString)
+      .collect().map(_.getString(0)).toSeq
+    assert(lines == Seq("(1581695094.944000) can0 021#fa9f04f600f600"))
+  }
+
+  test("CandumpConverter.fromJson: the golden row from a JSON records dump") {
+    val dir = java.nio.file.Files.createTempDirectory("conv_json")
+    java.nio.file.Files.writeString(dir.resolve("dump.json"),
+      """[{"bytes": ["159", "4", "246", "0", "246", "0"],
+        |  "date": "2020-02-14 15:44:54.944", "mod": 250, "top": 33}]"""
+        .stripMargin)
+    val lines = CandumpConverter.fromJson(spark, dir.resolve("dump.json").toString)
+      .collect().map(_.getString(0)).toSeq
+    assert(lines == Seq("(1581695094.944000) can0 021#fa9f04f600f600"))
+  }
+
   test("Gpx source: StAX parse of a track file (S7)") {
     val gpx =
       """<?xml version="1.0"?>
