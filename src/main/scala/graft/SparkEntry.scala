@@ -14,9 +14,10 @@ import graft.catalog._
   */
 object SparkEntry {
 
-  lazy val catalog: Seq[CatalogEntry] = Seq(RelationalQueries.entries,
-    PaperPathQueries.entries, DedupQueries.entries, VectorQueries.entries,
-    TextQueries.entries, ImageQueries.entries, AudioVideoQueries.entries,
+  private lazy val catalog: Seq[CatalogEntry] = Seq(
+    RelationalQueries.entries, PaperPathQueries.entries,
+    DedupQueries.entries, VectorQueries.entries, TextQueries.entries,
+    ImageQueries.entries, AudioVideoQueries.entries,
     LifecycleQueries.entries, CascadeQueries.entries).flatten
 
   lazy val queries: Map[String, (SparkSession, String) => DataFrame] =

@@ -251,13 +251,7 @@ object AudioVideoQueries {
         Seq((9001L, whole.take(whole.length * 3 / 5)),
           (9002L, "not a video".getBytes("UTF-8")),
           (9003L, Array.empty[Byte]))
-      val dir = java.nio.file.Files.createTempDirectory("q154_stream")
-      dir.toFile.deleteOnExit()
-      s.createDataFrame(arrivals).toDF("media_id", "payload")
-        .repartition(4).write.parquet(s"$dir/in")
-      val sch = s.read.parquet(s"$dir/in").schema
-      val stream = s.readStream.schema(sch)
-        .option("maxFilesPerTrigger", 1).parquet(s"$dir/in")
+      val stream = mediaStream(s, arrivals, "q154_stream")
       val admitted = streaming.StreamingParse.annAdmissionStream(
         operators.Multimodal.videoEmbed(stream, "payload"), "media_id",
         "video_embedding", index, members, tau = 0.98, nProbe = 2)
@@ -370,13 +364,7 @@ object AudioVideoQueries {
         Seq((9001L, whole.take(whole.length - 3)),
           (9002L, "not audio at all".getBytes("UTF-8")),
           (9003L, pcmClip(128L, 1L, 1, 40, 1, WAVE, bigEndian = false)))
-      val dir = java.nio.file.Files.createTempDirectory("q151_stream")
-      dir.toFile.deleteOnExit()
-      s.createDataFrame(arrivals).toDF("media_id", "payload")
-        .repartition(4).write.parquet(s"$dir/in")
-      val sch = s.read.parquet(s"$dir/in").schema
-      val stream = s.readStream.schema(sch)
-        .option("maxFilesPerTrigger", 1).parquet(s"$dir/in")
+      val stream = mediaStream(s, arrivals, "q151_stream")
       val admitted = streaming.StreamingParse.annAdmissionStream(
         embed(stream), "media_id", "audio_embedding", index, members,
         tau = 0.95, nProbe = 2)
@@ -440,13 +428,7 @@ object AudioVideoQueries {
         Seq((9001L, whole.take(whole.length * 3 / 5)),
           (9002L, "not a video".getBytes("UTF-8")),
           (9003L, Array.empty[Byte]))
-      val dir = java.nio.file.Files.createTempDirectory("q136_stream")
-      dir.toFile.deleteOnExit()
-      s.createDataFrame(rows).toDF("media_id", "payload")
-        .repartition(4).write.parquet(s"$dir/in")
-      val sch = s.read.parquet(s"$dir/in").schema
-      val stream = s.readStream.schema(sch)
-        .option("maxFilesPerTrigger", 1).parquet(s"$dir/in")
+      val stream = mediaStream(s, rows, "q136_stream")
       val signed = operators.Multimodal.videoSignatures(stream, "payload")
       val admitted = streaming.StreamingParse.hammingAdmissionStream(
         signed, "media_id", "vsig", members, maxHamming = 6)
@@ -701,13 +683,7 @@ object AudioVideoQueries {
           (9002L, "not audio at all".getBytes("UTF-8")),
           (9003L, Array.empty[Byte]),
           (9004L, pcmClip(4096L, 1L, 1, 40, 1, WAVE, bigEndian = false)))
-      val dir = java.nio.file.Files.createTempDirectory("q132_stream")
-      dir.toFile.deleteOnExit()
-      s.createDataFrame(rows).toDF("media_id", "payload")
-        .repartition(4).write.parquet(s"$dir/in")
-      val sch = s.read.parquet(s"$dir/in").schema
-      val stream = s.readStream.schema(sch)
-        .option("maxFilesPerTrigger", 1).parquet(s"$dir/in")
+      val stream = mediaStream(s, rows, "q132_stream")
       val fped = operators.Multimodal.audioFingerprint(
         operators.Multimodal.decodeWav(stream, "payload"),
         "pcm", "au_channels")

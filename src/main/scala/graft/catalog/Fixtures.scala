@@ -234,6 +234,21 @@ private[catalog] object Fixtures {
         }
     }
 
+  /** `rows` (media_id, payload) written as four parquet files under a
+    * fresh temp dir named by `tag` and read back as a file stream, one
+    * file per micro-batch: the media admission gates' arrival stream. */
+  private[catalog] def mediaStream(s: SparkSession,
+                                   rows: Seq[(Long, Array[Byte])],
+                                   tag: String): DataFrame = {
+    val dir = Files.createTempDirectory(tag)
+    dir.toFile.deleteOnExit()
+    s.createDataFrame(rows).toDF("media_id", "payload")
+      .repartition(4).write.parquet(s"$dir/in")
+    val sch = s.read.parquet(s"$dir/in").schema
+    s.readStream.schema(sch)
+      .option("maxFilesPerTrigger", 1).parquet(s"$dir/in")
+  }
+
   /** Run a streaming frame to completion (Trigger.AvailableNow) into a
     * memory sink and return the materialized table — the harness that
     * lets a `queries` entry gate a STREAMING operator against the

@@ -247,13 +247,7 @@ object ImageQueries {
         Seq((9001L, whole.take(20)),
           (9002L, "not an image".getBytes("UTF-8")),
           (9003L, Array.empty[Byte]))
-      val dir = java.nio.file.Files.createTempDirectory("q126_stream")
-      dir.toFile.deleteOnExit()
-      s.createDataFrame(rows).toDF("media_id", "payload")
-        .repartition(4).write.parquet(s"$dir/in")
-      val sch = s.read.parquet(s"$dir/in").schema
-      val stream = s.readStream.schema(sch)
-        .option("maxFilesPerTrigger", 1).parquet(s"$dir/in")
+      val stream = mediaStream(s, rows, "q126_stream")
       val hashed = operators.Multimodal.perceptualHashes(
         operators.Multimodal.decodeImages(stream, "payload"),
         "pixels", "img_width", "img_height")
@@ -270,15 +264,7 @@ object ImageQueries {
       // the exhaustive argmin (hamming, ref_id) admission decision
       // replayed in SQL; corrupt arrivals come back as admitted
       // null-signature rows
-      ("""WITH refs AS (
-           SELECT i AS ref_id, i AS src, 0 AS shift FROM range(1, 11) t(i)),
-         arrivals AS (
-           SELECT 500 + i AS media_id, i AS src, 0 AS shift FROM range(1, 6) t(i)
-           UNION ALL SELECT 510 + i, i, 4 FROM range(1, 6) t(i)
-           UNION ALL SELECT 500 + i, i, 0 FROM range(21, 26) t(i)),
-         """ + refDhashSql + """
-         sigs AS (
-           SELECT media_id, dhash FROM ah
+      ("WITH " + dhashArrivalsSql(26) + """
            UNION ALL SELECT media_id, NULL
            FROM (VALUES (9001), (9002), (9003)) t(media_id)),
          best AS (
@@ -548,13 +534,7 @@ object ImageQueries {
           grayImage(novelPixel(i, _, _), "png"))) ++
         Seq((9001L, "not an image".getBytes("UTF-8")),
           (9002L, null.asInstanceOf[Array[Byte]]))
-      val dir = java.nio.file.Files.createTempDirectory("q149_stream")
-      dir.toFile.deleteOnExit()
-      s.createDataFrame(arrivals).toDF("media_id", "payload")
-        .repartition(4).write.parquet(s"$dir/in")
-      val sch = s.read.parquet(s"$dir/in").schema
-      val stream = s.readStream.schema(sch)
-        .option("maxFilesPerTrigger", 1).parquet(s"$dir/in")
+      val stream = mediaStream(s, arrivals, "q149_stream")
       val admitted = streaming.StreamingParse.annAdmissionStream(
         embed(stream), "media_id", "img_embedding", index, members,
         tau = 0.9, nProbe = 2)
@@ -600,13 +580,7 @@ object ImageQueries {
       val members = operators.Similarity.cellMembers(index)
       members.persist(org.apache.spark.storage.StorageLevel
         .MEMORY_AND_DISK).count()
-      val dir = java.nio.file.Files.createTempDirectory("q159_stream")
-      dir.toFile.deleteOnExit()
-      s.createDataFrame(mediaCascadeArrivals).toDF("media_id", "payload")
-        .repartition(4).write.parquet(s"$dir/in")
-      val sch = s.read.parquet(s"$dir/in").schema
-      val stream = s.readStream.schema(sch)
-        .option("maxFilesPerTrigger", 1).parquet(s"$dir/in")
+      val stream = mediaStream(s, mediaCascadeArrivals, "q159_stream")
       val out = streaming.StreamingParse.mediaAdmissionCascadeStream(
         mediaPrep(stream), "media_id", "decode_status", "dhash", hamMembers,
         maxHamming = 6, "img_embedding", index, members, tau = 0.9,
@@ -869,33 +843,11 @@ object ImageQueries {
       // set (pre), and the set minus the tombstoned ids twice — the
       // ledger-applied live table and the post-compaction table must
       // produce the SAME argmin decisions (logical ≡ physical delete)
-      ("""WITH refs AS (
-           SELECT i AS ref_id, i AS src, 0 AS shift FROM range(1, 11) t(i)),
-         arrivals AS (
-           SELECT 500 + i AS media_id, i AS src, 0 AS shift FROM range(1, 6) t(i)
-           UNION ALL SELECT 510 + i, i, 4 FROM range(1, 6) t(i)
-           UNION ALL SELECT 500 + i, i, 0 FROM range(21, 24) t(i)),
-         """ + refDhashSql + """
-         sigs AS (
-           SELECT media_id, dhash FROM ah
+      ("WITH " + dhashArrivalsSql(24) + """
            UNION ALL SELECT 9001, NULL),
-         best_pre AS (
-           SELECT s.media_id,
-             min_by(r.ref_id,
-               bit_count(xor(s.dhash, r.sig))::BIGINT * 1000 + r.ref_id)
-               AS match_pre
-           FROM sigs s JOIN rh r ON bit_count(xor(s.dhash, r.sig)) <= 6
-           WHERE s.dhash IS NOT NULL
-           GROUP BY s.media_id),
-         best_live AS (
-           SELECT s.media_id,
-             min_by(r.ref_id,
-               bit_count(xor(s.dhash, r.sig))::BIGINT * 1000 + r.ref_id)
-               AS match_live
-           FROM sigs s JOIN rh r ON bit_count(xor(s.dhash, r.sig)) <= 6
-             AND r.ref_id NOT IN (1, 3)
-           WHERE s.dhash IS NOT NULL
-           GROUP BY s.media_id)
+         """ + dhashArgminSql("best_pre", "match_pre") + """,
+         """ + dhashArgminSql("best_live", "match_live",
+           " AND r.ref_id NOT IN (1, 3)") + """
          SELECT s.media_id, s.dhash,
            bp.match_pre IS NULL AS admitted_pre, bp.match_pre,
            bl.match_live IS NULL AS admitted_live, bl.match_live,
@@ -1054,34 +1006,12 @@ object ImageQueries {
       // full reference set (pre) and against the set minus the
       // tombstoned ids (post); corrupt arrivals are admitted
       // null-signature rows in both worlds
-      ("""WITH refs AS (
-           SELECT i AS ref_id, i AS src, 0 AS shift FROM range(1, 11) t(i)),
-         arrivals AS (
-           SELECT 500 + i AS media_id, i AS src, 0 AS shift FROM range(1, 6) t(i)
-           UNION ALL SELECT 510 + i, i, 4 FROM range(1, 6) t(i)
-           UNION ALL SELECT 500 + i, i, 0 FROM range(21, 24) t(i)),
-         """ + refDhashSql + """
-         sigs AS (
-           SELECT media_id, dhash FROM ah
+      ("WITH " + dhashArrivalsSql(24) + """
            UNION ALL SELECT media_id, NULL
            FROM (VALUES (9001), (9002)) t(media_id)),
-         best_pre AS (
-           SELECT s.media_id,
-             min_by(r.ref_id,
-               bit_count(xor(s.dhash, r.sig))::BIGINT * 1000 + r.ref_id)
-               AS match_pre
-           FROM sigs s JOIN rh r ON bit_count(xor(s.dhash, r.sig)) <= 6
-           WHERE s.dhash IS NOT NULL
-           GROUP BY s.media_id),
-         best_post AS (
-           SELECT s.media_id,
-             min_by(r.ref_id,
-               bit_count(xor(s.dhash, r.sig))::BIGINT * 1000 + r.ref_id)
-               AS match_post
-           FROM sigs s JOIN rh r ON bit_count(xor(s.dhash, r.sig)) <= 6
-             AND r.ref_id NOT IN (1, 3)
-           WHERE s.dhash IS NOT NULL
-           GROUP BY s.media_id)
+         """ + dhashArgminSql("best_pre", "match_pre") + """,
+         """ + dhashArgminSql("best_post", "match_post",
+           " AND r.ref_id NOT IN (1, 3)") + """
          SELECT s.media_id, s.dhash,
            bp.match_pre IS NULL AS admitted_pre, bp.match_pre,
            bq.match_post IS NULL AS admitted_post, bq.match_post
@@ -1437,4 +1367,33 @@ object ImageQueries {
            CASE WHEN reason_live = 'semantic' THEN smid_live END
              AS smid_live
          FROM decided ORDER BY media_id"""
+
+  /** The dHash admission argmin: each arrival signature's nearest
+    * reference within Hamming 6 (`rh`, optionally narrowed by `and`),
+    * ties to the lower ref_id, as CTE `name` with column `matched`. */
+  private def dhashArgminSql(name: String, matched: String,
+                             and: String = ""): String =
+    s"""$name AS (
+           SELECT s.media_id,
+             min_by(r.ref_id,
+               bit_count(xor(s.dhash, r.sig))::BIGINT * 1000 + r.ref_id)
+               AS $matched
+           FROM sigs s JOIN rh r ON bit_count(xor(s.dhash, r.sig)) <= 6$and
+           WHERE s.dhash IS NOT NULL
+           GROUP BY s.media_id)"""
+
+  /** The dHash admission replays' worlds: the ten planted PNG refs;
+    * arrivals 501-505 (their BMP re-encodes), 511-515 (brightness
+    * variants) and the novel images 21 until `novelEnd` (ids +500);
+    * their signatures ([[refDhashSql]]); then the opening of `sigs`. */
+  private def dhashArrivalsSql(novelEnd: Int): String =
+    s"""refs AS (
+           SELECT i AS ref_id, i AS src, 0 AS shift FROM range(1, 11) t(i)),
+         arrivals AS (
+           SELECT 500 + i AS media_id, i AS src, 0 AS shift FROM range(1, 6) t(i)
+           UNION ALL SELECT 510 + i, i, 4 FROM range(1, 6) t(i)
+           UNION ALL SELECT 500 + i, i, 0 FROM range(21, $novelEnd) t(i)),
+         """ + refDhashSql + """
+         sigs AS (
+           SELECT media_id, dhash FROM ah"""
 }

@@ -736,8 +736,8 @@ class SimilaritySpec extends SparkSpec {
       s => s.filter($"__rid" % 2 === 1), lloydIters = 1, numBuckets = 2)
     assert(spark.catalog.tableExists("ivf_retrain_cells"))
     assert(!spark.catalog.tableExists("ivf_retrain_cells_b"))
-    // crash inside the swap window (centroids rewritten, meta not yet
-    // flipped ≡ old epoch token wiped): reopen refuses loudly
+    // a served table whose epoch token is gone (a torn in-place
+    // append or rewrite): reopen refuses loudly
     graft.sources.Generations.clearEpochTokens(spark, "ivf_retrain_centroids")
     assert(intercept[IllegalArgumentException] {
       Similarity.readIvfIndex(spark, "ivf_retrain")
@@ -1025,8 +1025,8 @@ class SimilaritySpec extends SparkSpec {
       numBuckets = 2)
     assert(spark.catalog.tableExists("ivfsq_retrain_cell_codes"))
     assert(!spark.catalog.tableExists("ivfsq_retrain_cell_codes_b"))
-    // crash inside the swap window: stats rewritten, meta not flipped
-    // ≡ old epoch wiped → reopen refuses loudly
+    // a served table whose epoch token is gone (a torn in-place
+    // append or rewrite): reopen refuses loudly
     graft.sources.Generations.clearEpochTokens(spark, "ivfsq_retrain_stats")
     assert(intercept[IllegalArgumentException] {
       Similarity.readIvfSqIndex(spark, "ivfsq_retrain")
