@@ -284,7 +284,7 @@ object Bench {
     * parse-meaningful line count. Returns the line count. */
   def writeCandumpCorpus(spark: SparkSession, sfDir: String, path: String): Long = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    // tolerate both testdata timestamp layouts (see SparkEntry.t)
+    // tolerate both testdata timestamp layouts (see catalog.Fixtures.t)
     val raw = spark.read.parquet(s"$sfDir/events.parquet")
     val ev = raw.schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType =>

@@ -105,15 +105,20 @@ private[catalog] object Fixtures {
 
   /** All fixture dirs sit under one temp root, deleted at JVM exit. */
   private lazy val fixtureRoot: Path = {
-    val root = Files.createTempDirectory("graft_fixtures")
+    val root = Files.createTempDirectory("graft")
     Runtime.getRuntime.addShutdownHook(new Thread(() => deleteTree(root)))
     root
   }
+  private val fixtureDirs = new java.util.concurrent.atomic.AtomicInteger()
 
-  /** A memoized fixture dir: created and filled once per key. */
+  /** A memoized fixture dir: created and filled once per key. Numbered
+    * names keep the paths short: a plan's `Location` string truncates
+    * at `spark.sql.maxMetadataStringLength` (100), and PlanSpec pins
+    * q65's season stage path inside one. */
   private[catalog] def fixtureDir(key: String)(fill: Path => Unit): String =
     memo(key) {
-      val dir = Files.createTempDirectory(fixtureRoot, "fix")
+      val dir = Files.createDirectory(
+        fixtureRoot.resolve(fixtureDirs.incrementAndGet().toString))
       fill(dir)
       dir.toString
     }
