@@ -21,33 +21,14 @@ import graft.sources.CanSchema.{Bit, FieldSpec, Schema, U16LE, U8}
   */
 object CanDecode {
 
-  /** Field-count threshold above which the decode plans a
-    * whole-stage-codegen BARRIER between the frame generate and the
-    * decode expressions. Why: the frame table comes out of a
-    * `posexplode(regexp_extract_all(...))` Generate, and codegen
-    * inlines every downstream consumer into `generate_doConsume`,
-    * whose inputs are LOCAL VARIABLES — Spark cannot split an
-    * oversized method there (splitExpressions needs an INPUT_ROW the
-    * pieces can re-read), so a wide schema's decode blows janino's
-    * 64 KB method limit and the whole stage silently falls back to
-    * interpreted eval (ERROR CodeGenerator … "Code grows beyond
-    * 64 KB" — observed on the real 2020 schema, ~20× slower decode).
-    * A shuffle-free `coalesce` (CoalesceExec carries no
-    * CodegenSupport) ends the generate's stage, so the decode
-    * evaluates in a row-input stage where Spark DOES split it into
-    * many small methods. Narrow schemas (the hot p00 path) stay one
-    * fused stage. */
-  private val BarrierFieldCount = 64
+  /** Field-count threshold above which the decode takes its wide
+    * shapes: decodeLong's isolated decode Project and decodeWide's
+    * post-aggregation frame filter. Narrow schemas (the hot p00 path)
+    * keep the plain shapes. */
+  private val WideFieldCount = 64
 
   private def wideSchema(schema: Schema): Boolean =
-    schema.allTopics.map(_._2.fields.size).sum > BarrierFieldCount
-
-  /** The no-op-partitioning codegen barrier: `coalesce` to a huge
-    * target keeps the current partitioning exactly (RDD coalesce
-    * never increases partitions) while inserting the non-codegen
-    * CoalesceExec node that ends the generate's fused stage. */
-  private def codegenBarrier(df: DataFrame): DataFrame =
-    df.coalesce(Int.MaxValue)
+    schema.allTopics.map(_._2.fields.size).sum > WideFieldCount
 
   /** hex byte at 0-based offset `off` of the payload hex string. */
   private def byteAt(payloadHex: Column, off: Int): Column =
@@ -155,35 +136,31 @@ object CanDecode {
                  mab20Workaround: Boolean = false,
                  carryCols: Seq[String] = Nil): DataFrame = {
 
-    // Wide schemas (see BarrierFieldCount): isolate the giant decode
-    // expression in its OWN Project between two codegen barriers. A
-    // generator expression cannot be method-split, so explode(decoded)
-    // inlined anywhere blows janino's 64 KB limit and the whole fused
-    // stage degrades to INTERPRETED generator eval; a standalone
-    // ProjectExec, by contrast, compiles the same expression as many
-    // small methods. The lower barrier keeps the regex-generate stage
-    // fused and stops projection collapse from re-deriving
-    // topic/payload inline per branch; the upper barrier stops the
-    // explode from collapsing back onto the decode Project. The mab20
-    // payload/signature rewrite is SPECIALIZED per branch (see
-    // effectiveForTopic), so no CASE replicates across the ~400
-    // branches and the isolated Project stays under janino's limit
-    // in every schema-width x mab20 combination (probe-pinned).
+    // Wide schemas (see WideFieldCount): isolate the giant decode
+    // expression in its OWN Project, out of whole-stage codegen
+    // (noWscg). A generator expression cannot be method-split, so
+    // explode(decoded) inlined anywhere blows janino's 64 KB limit and
+    // the whole fused stage degrades to INTERPRETED generator eval; a
+    // standalone projection compiles the same expression as many
+    // small methods. The mab20 payload/signature rewrite is
+    // SPECIALIZED per branch (see effectiveForTopic), so no CASE
+    // replicates across the ~400 branches and the isolated Project
+    // stays under janino's limit in every schema-width x mab20
+    // combination (probe-pinned).
     // explode_outer + post-generate null filter, NOT explode: the
     // inner explode makes InferFiltersFromGenerate clone the whole
     // generator expression into a `size(...) > 0` filter, which
     // predicate pushdown then substitutes through the __dec alias and
-    // sinks below both barriers — re-inflating the generate stage the
-    // barriers exist to protect. The rule skips OUTER generates; the
-    // explicit isNotNull on the generator OUTPUT cannot sink below
-    // the generate, and undecodable frames drop exactly as before.
+    // sinks into the regex-generate stage. The rule skips OUTER
+    // generates; the explicit isNotNull on the generator OUTPUT
+    // cannot sink below the generate, and undecodable frames drop
+    // exactly as before.
     val decoded = coalesce(decodedBranches(schema, mab20Workaround): _*)
     val src =
       if (wideSchema(schema))
-        codegenBarrier(
-          codegenBarrier(frames)
-            .select((carryCols.map(col) :+ col("ts").as("timestamp") :+
-              noWscg(decoded).as("__dec")): _*))
+        frames
+          .select((carryCols.map(col) :+ col("ts").as("timestamp") :+
+            noWscg(decoded).as("__dec")): _*)
           .select((carryCols.map(col) :+ col("timestamp") :+
             explode_outer(col("__dec")).as("f")): _*)
           .filter(col("f").isNotNull)
@@ -245,12 +222,12 @@ object CanDecode {
         .agg(aggs.head, aggs.tail: _*)
     } else {
       // Wide schemas: P5/P6 as a POST-aggregation group filter, not a
-      // row pre-filter — a pre-filter predicate gets pushed below the
-      // codegen barrier into the regex-generate's fused stage, where
-      // projection collapse re-derives topic/payload inline in every
-      // branch and the expression blows janino's 64 KB method limit
-      // (observed: the whole scan→generate→decode stage then silently
-      // de-fuses). Counting OWNED frames per group is value-identical
+      // row pre-filter — a pre-filter predicate gets pushed into the
+      // regex-generate's fused stage, where projection collapse
+      // re-derives topic/payload inline in every branch and the
+      // expression blows janino's 64 KB method limit (observed: the
+      // whole scan→generate→decode stage then silently de-fuses).
+      // Counting OWNED frames per group is value-identical
       // to the pre-filter even when a schema carries duplicate
       // (sig, topic) claims with different declared sizes: the
       // predicate is the disjunction of the same per-claim owns tests
@@ -264,12 +241,10 @@ object CanDecode {
           length(pl) === t.declaredSize * 2
       }.reduce(_ || _)
       val withN = aggs :+ sum(when(anyOwns, 1L).otherwise(0L)).as("__n_frames")
-      // the hundreds of avg(when(...)) update expressions must not
-      // inline into the upstream regex-generate's fused stage (see
-      // BarrierFieldCount) — behind the barrier the partial aggregate
-      // reads rows, where aggregate-function splitting keeps every
-      // generated method under the 64 KB limit
-      codegenBarrier(prepped)
+      // aggregate-function splitting keeps every generated method of
+      // the fused partial aggregate under the 64 KB limit (measured up
+      // to ~1,600 signals)
+      prepped
         .groupBy((keys.map(col) :+ col("ts").as("timestamp")): _*)
         .agg(withN.head, withN.tail: _*)
         .filter(col("__n_frames") > 0)

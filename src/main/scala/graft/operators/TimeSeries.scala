@@ -157,22 +157,20 @@ object TimeSeries {
     val rTie =
       if (rightTieBreak.isEmpty) lit(0L)
       else struct(rightTieBreak.map(col): _*)
-    val l = rightVals.foldLeft(
-        left.withColumn("__side", lit(1)).withColumn("__tie", lTie)
-      )((d, c) => d.withColumn(s"__r_$c", lit(null).cast(right.schema(c).dataType)))
+    val l = left.select((col("*") +: lit(1).as("__side") +: lTie.as("__tie") +:
+      rightVals.map(c => lit(null).cast(right.schema(c).dataType).as(s"__r_$c"))): _*)
     val r0 = right.select(
       (keys.map(col) :+ col(tsCol) :+ lit(0).as("__side") :+ rTie.as("__tie")) ++
         rightVals.map(c => col(c).as(s"__r_$c")): _*)
-    val lCols = l.columns
-    val r = lCols.foldLeft(r0) { (d, c) =>
-      if (d.columns.contains(c)) d else d.withColumn(c, lit(null)) }
-      .select(lCols.toIndexedSeq.map(col): _*)
+    val r0Cols = r0.columns.toSet
+    val r = r0.select(l.columns.toIndexedSeq.map(c =>
+      if (r0Cols(c)) col(c) else lit(null).as(c)): _*)
     // __side=0 (right) sorts before __side=1 (left) at equal ts, so a
     // right row AT the left timestamp is visible (at-or-before).
     val win = w(keys, Seq(col(tsCol), col("__side"), col("__tie")))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val filled = rightVals.foldLeft(l.unionByName(r)) { (d, c) =>
-      d.withColumn(s"asof_$c", last(col(s"__r_$c"), ignoreNulls = true).over(win)) }
+    val filled = l.unionByName(r).select((col("*") +: rightVals.map(c =>
+      last(col(s"__r_$c"), ignoreNulls = true).over(win).as(s"asof_$c"))): _*)
     filled.filter(col("__side") === 1)
       .drop(("__side" +: "__tie" +: rightVals.map(c => s"__r_$c")): _*)
   }

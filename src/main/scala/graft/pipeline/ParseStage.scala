@@ -3,9 +3,10 @@ package graft.pipeline
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, StringType, StructField, StructType, TimestampType}
 
 import graft.operators.{CanDecode, TimeSeries}
-import graft.sources.{Candump, CanSchema}
+import graft.sources.{Candump, CanSchema, Sinks}
 
 /** E1 — the parse stage end-to-end (main_2020.parse →
   * lib/canparser.py:263-364): candump text → frames → decode → wide
@@ -37,14 +38,22 @@ object ParseStage {
         f"\toutput/input: $outputRows%d/$inputLines%d lines."
   }
 
-  /** Full parse of one dataset glob. Returns the wide matrix (also
-    * written to `outputPath` when set, skipping if already present —
-    * S9 incremental semantics). */
+  /** Full parse of one dataset glob. Without `outputPath`, returns the
+    * lazy wide matrix. With it, writes the matrix there (skipping the
+    * write when a complete output is already present — S9 incremental
+    * semantics) and returns a scan of the COMMITTED output, in the
+    * run's column order (`file, timestamp, <wideColumns>`): the
+    * reference's next stage reads the parse output file back
+    * (main_2020.py:209-213), so later stages plan against parquet, not
+    * against a re-run of the text scan, regex, crop, decode and jump
+    * filter. A held handle is bound to the files it scans: rewriting
+    * the output under it invalidates it. */
   def run(spark: SparkSession, inputGlob: String, schema: CanSchema.Schema,
           outputPath: Option[String] = None,
           offsetMicros: Long = 0L,
-          mab20Workaround: Boolean = false): DataFrame = {
-    outputPath.foreach { out =>
+          mab20Workaround: Boolean = false): DataFrame = outputPath match {
+    case None => parse(spark, inputGlob, schema, offsetMicros, mab20Workaround)
+    case Some(out) =>
       val p = new Path(out)
       val hconf = spark.sessionState.newHadoopConf()
       val fs = p.getFileSystem(hconf)
@@ -59,12 +68,29 @@ object ParseStage {
       // an Overwrite only replaces partitions present in the new data,
       // so a stale partition of a since-removed input file would
       // survive the rewrite and be adopted as complete forever after.
-      if (graft.sources.Sinks.isCompleteOutput(fs, p, hconf))
-        return spark.read.parquet(out)
-      else if (fs.exists(p) &&
-          graft.sources.Sinks.resolveTornOutput(spark, fs, p))
-        return spark.read.parquet(out)
-    }
+      val committed = Sinks.isCompleteOutput(fs, p, hconf) ||
+        (fs.exists(p) && Sinks.resolveTornOutput(spark, fs, p))
+      if (!committed)
+        parse(spark, inputGlob, schema, offsetMicros, mab20Workaround)
+          .write.mode(SaveMode.Overwrite).partitionBy("file").parquet(out)
+      // the pinned schema also reads an all-rejected input's output
+      // (only `_SUCCESS`, no part file to infer a schema from); the
+      // partition column `file` scans last, hence the select
+      val cols = outputSchema(schema)
+      spark.read.schema(cols).parquet(out)
+        .select(cols.fieldNames.toIndexedSeq.map(c => col(s"`$c`")): _*)
+  }
+
+  /** The wide matrix's schema: `file`, `timestamp`, then one double per
+    * schema signal. */
+  private def outputSchema(schema: CanSchema.Schema): StructType =
+    StructType(StructField("file", StringType) +:
+      StructField("timestamp", TimestampType) +:
+      schema.wideColumns.map(StructField(_, DoubleType)))
+
+  private def parse(spark: SparkSession, inputGlob: String,
+                    schema: CanSchema.Schema, offsetMicros: Long,
+                    mab20Workaround: Boolean): DataFrame = {
     val frames = Candump.cropToFileRange(
       Candump.frames(spark, inputGlob, offsetMicros))
     // per-(file, chunk) wide matrix in ONE hash aggregate (frame →
@@ -77,18 +103,15 @@ object ParseStage {
     // files whose BASENAME contains "db" (lib/canparser.py:335-336
     // tests the filename, not the directory path)
     val isDb = element_at(split(col("file"), "/"), -1).contains("db")
-    val wide = TimeSeries.timestampJumpFilter(
+    TimeSeries.timestampJumpFilter(
         wide0, "timestamp", Seq("file", "chunk"), exempt = isDb)
       .drop("chunk")
-    outputPath.foreach { out =>
-      wide.write.mode(SaveMode.Overwrite).partitionBy("file").parquet(out)
-    }
-    wide
   }
 
   /** Per-file report counters (console report operator, §2.7). TWO
     * passes total, independent of file count: one text scan for input
-    * lines, one pipeline run grouped by file for output rows (a
+    * lines, one pass over `wide` grouped by file for output rows — a
+    * parquet scan when `wide` is [[run]]'s committed output (a
     * per-file `filter(file === f).count()` loop would re-execute the
     * whole lineage per file — O(files × data)).
     *

@@ -198,9 +198,11 @@ object Seasons {
     val signals = schema.wideColumns.filter(wide.columns.contains)
     // STAGE BOUNDARY — the season-pipeline analogue of the reference
     // writing each stage's output to disk before the next reads it
-    // (sparse → resampled → unified files). The unify stages reference
-    // their telemetry input several times (grid bounds, dedup, the
-    // alignment select, the final join), and every lazy reference
+    // (sparse → resampled → unified files); the parse outputs above
+    // already are such scans (ParseStage.run returns its committed
+    // output). The unify stages reference their telemetry input
+    // several times (grid bounds, dedup, the alignment select, the
+    // final join), and every lazy reference
     // duplicates the ENTIRE upstream subtree in the plan: unbounded,
     // this 5-signal pipeline plans 300+ Exchange nodes (measured) and
     // Catalyst/AQE re-optimization of the duplicated tree dominates
@@ -259,8 +261,12 @@ object Seasons {
             SolarStage.withPoaEnergy(raw, site, start, end, periodSec)
           case None => SolarStage.withPoa(raw, site, periodSec)
         }
-        UnifyStages.unifyForecast(resampled, f, "timestamp",
-          resamplePeriod, cfg.shiftBackLocalize, keys = Seq("__dataset"))
+        // same stage boundary for the processed forecast (10³ rows):
+        // unbounded, every stage of the forecast-unify write re-plans
+        // the solar-position expression trees under AQE
+        UnifyStages.unifyForecast(resampled, stageBoundary(f, "solcast"),
+          "timestamp", resamplePeriod, cfg.shiftBackLocalize,
+          keys = Seq("__dataset"))
       case None => resampled
     }
     val withGps =

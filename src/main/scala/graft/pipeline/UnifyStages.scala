@@ -73,17 +73,17 @@ object UnifyStages {
       .withColumn("__src", lit(1))
     val f = if (keys.isEmpty) f0
       else f0.crossJoin(broadcast(gridTs.select(keys.map(col): _*).distinct()))
-    val g = valueCols.foldLeft(shifted.withColumn("__src", lit(0)))(
-      (d, c) => d.withColumn(c, lit(null).cast("double")))
+    val g = shifted.select((col("*") +: lit(0).as("__src") +:
+      valueCols.map(c => lit(null).cast("double").as(c))): _*)
     val merged = g.unionByName(f.select(g.columns.toIndexedSeq.map(col): _*))
     // at equal ts the forecast row must sort BEFORE the grid row so an
     // exact index match returns the exact value (pandas reindex)
     val interped0 = TimeSeries.interpolateMany(merged, tsCol, valueCols, keys,
       fillForward = true, orderTieBreak = Seq(-col("__src")))
-    val interped = valueCols.foldLeft(interped0)((d, c) =>
-      d.withColumn(c, col(s"interp__$c")).drop(s"interp__$c"))
     // keep only grid rows (the reindex result), at their shifted ts
-    interped.filter(col("__src") === 0).drop("__src")
+    interped0.filter(col("__src") === 0)
+      .select(g.columns.toIndexedSeq.filter(_ != "__src").map(c =>
+        if (valueCols.contains(c)) col(s"interp__$c").as(c) else col(c)): _*)
   }
 
   /** E3 — unify telemetry with the solar forecast. `forecast` columns
@@ -96,8 +96,8 @@ object UnifyStages {
     val valueCols = forecast.columns.filterNot(_ == tsCol).toSeq
     val aligned = alignForecast(grid.select((keys :+ tsCol).map(col): _*),
       forecast, tsCol, valueCols, shiftH, keys)
-    val prefixed = valueCols.foldLeft(aligned)(
-      (d, c) => d.withColumnRenamed(c, s"solcast_$c"))
+    val prefixed = aligned.withColumnsRenamed(
+      valueCols.map(c => c -> s"solcast_$c").toMap)
     // J2: plain equi left join — the interpolation already aligned
     // keys. No broadcast hint: `prefixed` is GRID-sized (one row per
     // telemetry tick), not forecast-sized; AQE broadcasts it only when
@@ -146,11 +146,9 @@ object UnifyStages {
     // the reference joins telemetry.ts against the SHIFTED gps index
     // (lib/process_gpx_data.py:162-180): telemetry row t matches the
     // gps row reindexed AT t (whose index is t'−3h = t for some t').
-    val prefixed = gpsCols.foldLeft(
-        aligned.select((keys ++ Seq("timestamp") ++
-          gpsCols.map(c => s"asof_$c")).map(col): _*)
-      )((d, c) => d.withColumnRenamed(s"asof_$c", s"gps_$c"))
-      .withColumnRenamed("timestamp", tsCol)
+    val prefixed = aligned.select((keys.map(col) ++
+        Seq(col("timestamp").as(tsCol)) ++
+        gpsCols.map(c => col(s"asof_$c").as(s"gps_$c"))): _*)
       .dropDuplicates(keys :+ tsCol)
     // no broadcast hint: `prefixed` has telemetry cardinality
     telemetry.join(prefixed, keys :+ tsCol, "left")

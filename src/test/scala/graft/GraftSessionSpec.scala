@@ -39,13 +39,14 @@ class GraftSessionSpec extends SparkSpec {
       (16 * 1024 * 1024).toString)
   }
 
+  private def scalaFiles(root: String): Seq[Path] = {
+    val s = Files.walk(Paths.get(root))
+    try s.iterator.asScala.filter(_.toString.endsWith(".scala")).toList
+    finally s.close()
+  }
+
   test("GraftSession is the only place a session builder is called") {
     val builderCall = """SparkSession\s*\.\s*builder""".r
-    def scalaFiles(root: String): Seq[Path] = {
-      val s = Files.walk(Paths.get(root))
-      try s.iterator.asScala.filter(_.toString.endsWith(".scala")).toList
-      finally s.close()
-    }
     val files = scalaFiles("src/main/scala") ++ scalaFiles("src/test/scala")
     assert(files.exists(_.getFileName.toString == "GraftSession.scala"))
     val offenders = files
@@ -54,5 +55,39 @@ class GraftSessionSpec extends SparkSpec {
     assert(offenders.isEmpty,
       s"build sessions through GraftSession.create, not in: " +
         offenders.mkString(", "))
+  }
+
+  test("no foldLeft adds or renames one column per step on the season path") {
+    // each withColumn/withColumnRenamed returns a new Dataset that
+    // re-analyzes the whole plan: a fold over n columns analyzes it n
+    // times, where one select/withColumns/withColumnsRenamed does once
+    val perColumn = """\bwithColumn(Renamed)?\s*\(""".r
+    // the text of the balanced (...) or {...} group opening at `from`
+    def group(src: String, from: Int): Option[(String, Int)] = {
+      val open = src.indexWhere(!_.isWhitespace, from)
+      if (open < 0 || !"({".contains(src(open))) None
+      else {
+        var depth = 0; var i = open
+        do {
+          if ("({".contains(src(i))) depth += 1
+          else if (")}".contains(src(i))) depth -= 1
+          i += 1
+        } while (depth > 0 && i < src.length)
+        Some((src.substring(open, i), i))
+      }
+    }
+    val files = scalaFiles("src/main/scala/graft/pipeline") :+
+      Paths.get("src/main/scala/graft/operators/TimeSeries.scala")
+    assert(files.size > 1)
+    val offenders = for {
+      f <- files
+      src = Files.readString(f)
+      m <- """\.foldLeft\b""".r.findAllMatchIn(src)
+      (_, afterInit) <- group(src, m.end)
+      (body, _) <- group(src, afterInit)
+      if perColumn.findFirstIn(body).isDefined
+    } yield s"${f.getFileName}:${src.take(m.start).count(_ == '\n') + 1}"
+    assert(offenders.isEmpty,
+      s"fold one projection per step instead: ${offenders.mkString(", ")}")
   }
 }

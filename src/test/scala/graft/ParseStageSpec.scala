@@ -43,11 +43,70 @@ class ParseStageSpec extends SparkSpec {
       CanFixtures.schema, Some(out))
     assert(restored.count() == 3)
     assert(spark.read.parquet(out).count() == 3)
-    val rep = ParseStage.report(spark, dir.toString + "/*.log", wide)
+    val rep = ParseStage.report(spark, dir.toString + "/*.log", restored)
     assert(rep.map(r => (r.inputLines, r.outputRows)) == Seq((4L, 3L)))
     // per-file elapsed attributed proportionally by input lines
     // (reference report shape; one pipeline pass, not one per file)
     assert(rep.forall(_.elapsedSec > 0))
+  }
+
+  test("an all-rejected input parses twice: both runs return 0 rows with the run's columns") {
+    // the first run commits an output holding only `_SUCCESS`; the
+    // second takes the skip path and must read it back rather than
+    // fail to infer a schema from no part file
+    val dir = Files.createTempDirectory("parse_rejected")
+    Files.write(dir.resolve("junk.log"),
+      Seq("garbage line", "(nope) can0 zz#", "").mkString("\n").getBytes)
+    val out = dir.resolve("out.parquet").toString
+    val glob = dir.toString + "/*.log"
+    val cols = Seq("file", "timestamp") ++ CanFixtures.schema.wideColumns
+    for (_ <- 1 to 2) {
+      val wide = ParseStage.run(spark, glob, CanFixtures.schema, Some(out))
+      assert(wide.columns.toSeq == cols)
+      assert(wide.count() == 0)
+    }
+  }
+
+  test("the committed scan is value-identical to the lazy pipeline") {
+    // one log with regex misses, unknown-topic and short-frame rejects,
+    // crop drops (frames stamped before the first frame) and a 300 s
+    // clock jump after 500 rows (the lag-10000 jump filter drops the
+    // 500 rows whose 10000th predecessor precedes it), beside a small
+    // second log
+    val dir = Files.createTempDirectory("parse_committed")
+    val t0 = 1580515200000000L // µs
+    def frame(us: Long, body: String) =
+      f"(${us / 1000000L}%d.${us % 1000000L}%06d) can0 $body"
+    Files.write(dir.resolve("a.log"), (0 until 12000).map { i =>
+      val us = t0 + i * 5000L + (if (i >= 500) 300000000L else 0L)
+      if (i % 997 == 5) "garbage line"
+      else if (i % 991 == 7) frame(us, "022#11E803110300")
+      else if (i % 983 == 9) frame(us, "021#11E803")
+      else if (i % 977 == 11) frame(t0 - 1000000L, "021#11D00733FF00")
+      else frame(us, f"021#11${i % 256}%02X0311${i % 7}%02X00")
+    }.mkString("\n").getBytes)
+    Files.write(dir.resolve("b.log"), (0 until 50).map { i =>
+      frame(t0 + i * 1000000L, "021#11D00733FF00")
+    }.mkString("\n").getBytes)
+    val glob = dir.toString + "/*.log"
+    val out = dir.resolve("out.parquet").toString
+    val fresh = ParseStage.run(spark, glob, CanFixtures.schema, Some(out))
+    val skipped = ParseStage.run(spark, glob, CanFixtures.schema, Some(out))
+    val lazyWide = ParseStage.run(spark, glob, CanFixtures.schema)
+    def shape(df: org.apache.spark.sql.DataFrame) =
+      df.schema.map(f => f.name -> f.dataType)
+    assert(shape(fresh) == shape(lazyWide))
+    assert(shape(skipped) == shape(lazyWide))
+    val n = lazyWide.count()
+    // 12,050 lines less 13 misses, 13 unknown topics, 13 short frames,
+    // 13 crop drops and the 500 jump drops (the misses and rejects
+    // that fall among those 500 rows drop once)
+    assert(n > 11000 && n < 11550, s"rows: $n")
+    for (df <- Seq(fresh, skipped)) {
+      assert(df.count() == n)
+      assert(df.exceptAll(lazyWide).isEmpty)
+      assert(lazyWide.exceptAll(df).isEmpty)
+    }
   }
 
   test("report: per-file elapsed measured independently when few files") {
@@ -151,8 +210,8 @@ class ParseStageSpec extends SparkSpec {
     CodegenProbe(body)
 
   test("wide-schema parse keeps whole-stage codegen: no 64 KB fallback") {
-    // the hot-path guarantee behind CanDecode's codegen barrier + the
-    // post-aggregation P6 filter: a real season schema's decodeWide
+    // the hot-path guarantee behind CanDecode's post-aggregation P6
+    // filter: a real season schema's decodeWide
     // must EXECUTE without janino's "Code grows beyond 64 KB" failure
     // (which silently de-fuses the whole scan→generate→decode stage to
     // interpreted-ish eval — the round-9 find). Pinned by capturing

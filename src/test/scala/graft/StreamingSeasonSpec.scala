@@ -1088,10 +1088,11 @@ class StreamingSeasonSpec extends SparkSpec {
         s"file:$out/parsed_reuse_db0"),
         s"expected one parse write per dataset, got $parseWrites")
       assert(finalWrites.size == 2, s"expected two final writes: $finalWrites")
-      // period 2 READ the parsed parquet: its resampled-stage write
-      // job scans the parse output path (period 1's same write runs
-      // the in-memory parse pipeline — parsed_reuse_d0 did not exist
-      // yet when its plan was built)
+      // both periods READ the parsed parquet: each resampled-stage
+      // write job scans the parse output path (ParseStage.run returns
+      // the committed output's scan, so period 1 plans against the
+      // parquet its own parse just wrote, period 2 against the
+      // skip path's)
       import scala.jdk.CollectionConverters._
       def stageScan(period: String): Option[Boolean] =
         writePlans.asScala.collectFirst {
@@ -1100,8 +1101,8 @@ class StreamingSeasonSpec extends SparkSpec {
             scans }
       assert(stageScan("20s").contains(true),
         "period 2's resample stage should scan period 1's parsed parquet")
-      assert(stageScan("10s").contains(false),
-        "period 1 parses in-pipeline, not from its own output")
+      assert(stageScan("10s").contains(true),
+        "period 1's resample stage should scan its committed parse output")
       // and the reuse loses nothing: period 2's table equals a fresh
       // single-period run that parses from scratch
       val fresh = Seasons.run(spark, cfg, dir.resolve("fresh").toString,

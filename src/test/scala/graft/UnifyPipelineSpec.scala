@@ -305,4 +305,100 @@ class UnifyPipelineSpec extends SparkSpec {
     assert(!graft.sources.Sinks.isCompleteOutput(fs, p,
       spark.sessionState.newHadoopConf()))
   }
+
+  test("each season stage plans against its committed input") {
+    import scala.jdk.CollectionConverters._
+    import graft.pipeline.Seasons
+    import org.apache.spark.sql.GraftExpressionBridge.waitListenerBusEmpty
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
+    val dir = Files.createTempDirectory("season_plans")
+    Files.write(dir.resolve("ids.json"), graft.sources.CanFixtures.json.getBytes)
+    val logs = Files.createDirectory(dir.resolve("candump"))
+    val t0 = 1580515200L // 2020-02-01T00:00:00Z
+    Files.write(logs.resolve("run.log"), (0 until 120).map { i =>
+      f"(${t0 + i}%d.000000) can0 021#11E803110300"
+    }.mkString("\n").getBytes)
+    Files.write(logs.resolve("run-from_db0.log"), (30 until 50).map { i =>
+      f"(${t0 + i}%d.500000) can0 021#11D00733FF00"
+    }.mkString("\n").getBytes)
+    val csv = dir.resolve("solcast.csv")
+    Files.write(csv, ("PeriodStart,PeriodEnd,Period,Dni,Ghi,Dhi,Airmass,AlbedoDaily" +:
+      (0 until 13).map { i =>
+        val t = java.time.Instant.ofEpochSecond(t0 - 60 + i * 30)
+        s"$t,$t,PT5M,800,600,100,1.2,0.08"
+      }).mkString("\n").getBytes)
+    val gpx = dir.resolve("track.gpx")
+    Files.write(gpx, ("""<?xml version="1.0"?><gpx version="1.1"><trk><trkseg>""" +:
+      (0 until 12).map { i =>
+        val t = java.time.Instant.ofEpochSecond(t0 + i * 10)
+        s"""<trkpt lat="${-26.24 - i * 0.001}" lon="-48.64"><ele>2.0</ele><time>$t</time></trkpt>"""
+      } :+ "</trkseg></trk></gpx>").mkString("\n").getBytes)
+    val cfg = Seasons.SeasonConfig(
+      name = "plans", canIdsPath = dir.resolve("ids.json").toString,
+      mab20Workaround = false, shiftBackLocalize = false,
+      site = Some(SolarStage.Site(-26.243602, -48.6417668)),
+      resamplePeriods = Seq("10s"),
+      datasets = Seq(Seasons.DatasetFiles(s"$logs/run.log"),
+        Seasons.DatasetFiles(s"$logs/run-from_db*.log", isReferenceDb = true)),
+      event = Some(("2020-02-01 00:00:00", "2020-02-01 00:10:00")))
+    // (output path when the query is a file write, executed plan), in
+    // completion order, and the job count of the whole run
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[(Option[String], String)]()
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val queries = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution,
+                             durationNs: Long): Unit =
+        plans.add((qe.analyzed match {
+          case c: InsertIntoHadoopFsRelationCommand => Some(c.outputPath.toString)
+          case _ => None
+        }, qe.executedPlan.toString))
+      override def onFailure(funcName: String, qe: QueryExecution,
+                             exception: Exception): Unit = ()
+    }
+    val jobStarts = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    }
+    assert(waitListenerBusEmpty(spark))
+    spark.listenerManager.register(queries)
+    spark.sparkContext.addSparkListener(jobStarts)
+    val rows = try {
+      val n = Seasons.run(spark, cfg, dir.resolve("out").toString,
+        forecastCsv = Some(csv.toString), gpxFiles = Seq(gpx.toString),
+        resamplePeriod = "10s").count()
+      assert(waitListenerBusEmpty(spark))
+      n
+    } finally {
+      spark.listenerManager.unregister(queries)
+      spark.sparkContext.removeSparkListener(jobStarts)
+    }
+    assert(rows == 12)
+    val evs = plans.asScala.toSeq
+    // only the per-dataset parse writes scan and regex-parse the
+    // candump text; every later stage reads their committed parquet
+    val textReaders = evs.filter { case (_, p) =>
+      p.contains("regexp_extract_all") ||
+        (p.contains("FileScan text") && p.contains("candump")) }
+    assert(textReaders.map(_._1.map(_.replaceAll(".*/", ""))).sortBy(_.toString) ==
+      Seq(Some("parsed_plans_d0"), Some("parsed_plans_db0")),
+      s"text-reading queries: ${textReaders.map(_._1)}")
+    // a coefficient of the solar-position closed form
+    // (graft.functions.Solar.solarPosition): only the processed-forecast
+    // boundary write evaluates it, no plan after it does
+    val solar = "0.0172019699"
+    val boundary = evs.indexWhere(_._1.exists(_.endsWith("stage_10s_solcast")))
+    assert(boundary >= 0, s"no forecast boundary write: ${evs.flatMap(_._1)}")
+    assert(evs(boundary)._2.contains(solar))
+    val after = evs.drop(boundary + 1)
+    assert(after.nonEmpty && after.forall(!_._2.contains(solar)),
+      s"solar expressions planned after the boundary: " +
+        after.filter(_._2.contains(solar)).map(_._1))
+    // with the parse lineage re-run by every later stage, this season
+    // ran 52 jobs (44 when each stage reads its committed input)
+    info(s"jobs: ${jobs.get}")
+    assert(jobs.get < 52, s"jobs: ${jobs.get}")
+  }
 }
