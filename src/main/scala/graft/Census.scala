@@ -35,7 +35,10 @@ import org.apache.spark.sql.util.QueryExecutionListener
   * a micro-batch job per its query name; concurrent jobs overlap, so
   * the sum can exceed `wall_sec`), `streams` (per streaming query:
   * `batches`, `input_rows` and each `StreamingQueryProgress.durationMs`
-  * component summed in ms — all but `addBatch` is per-trigger floor)
+  * component summed in ms — all but `addBatch` is per-trigger floor),
+  * `codegen_compiles` (generated classes compiled during the gate:
+  * the gate's growth of Spark's codegen compile-time histogram count;
+  * a codegen cache hit compiles nothing)
   * and `plan` (the path of its last action's formatted final plan,
   * written to `<out>_plans/<gate>.txt` beside the output JSON; null
   * for a failed gate).
@@ -161,6 +164,7 @@ object Census {
         case Some(fn) =>
           Seq(counts, jobs, streams).foreach(_.drain())
           openJobs.clear(); sqlDescs.clear(); lastQe.set(null)
+          val compiles0 = org.apache.spark.sql.GraftExpressionBridge.codegenCompiles
           val t0 = System.nanoTime()
           val ok = try {
             fn(spark, sfDir).write.mode("overwrite").format("noop").save()
@@ -178,6 +182,8 @@ object Census {
             System.err.println(s"[census] $name: listener bus drain " +
               "TIMED OUT — counts for this gate may be incomplete")
           val sec = (System.nanoTime() - t0) / 1e9
+          val compiles =
+            org.apache.spark.sql.GraftExpressionBridge.codegenCompiles - compiles0
           val plan = Option(lastQe.get()).filter(_ => ok).map { qe =>
             val f = plansDir.resolve(s"$name.txt")
             Files.writeString(f,
@@ -190,7 +196,8 @@ object Census {
           System.err.println(f"[census] $name $sec%.1f s " +
             s"exchanges=${o.getOrElse("ShuffleExchangeExec", 0L)} " +
             s"aggs=${o.getOrElse("HashAggregateExec", 0L)}")
-          Some(s""""$name":{"ok":$ok,"wall_sec":$sec,"ops":${jmap(o)},""" +
+          Some(s""""$name":{"ok":$ok,"wall_sec":$sec,""" +
+            s""""codegen_compiles":$compiles,"ops":${jmap(o)},""" +
             s""""actions":${jmap(c.getOrElse("actions", Map.empty))},""" +
             s""""jobs":${jnested(jobs.drain())},""" +
             s""""streams":${jnested(streams.drain())},""" +

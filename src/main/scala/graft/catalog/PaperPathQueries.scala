@@ -249,7 +249,8 @@ object PaperPathQueries {
       // forecast alignment (exact at ticks, linear between, flat-filled
       // after the last tick, null before the first and beyond the shift
       // horizon), the PSA solar position (Blanco-Muriel 2001 — identical
-      // operation order to functions/Solar.scala so IEEE doubles agree),
+      // operation order to the expressions/SolarPosition kernel so IEEE
+      // doubles agree),
       // cumtrapz energy, GPS speed/heading/distance with quirk Q7, and
       // the as-of ffill join.
       ("""WITH

@@ -1,11 +1,15 @@
 package graft.functions
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, GraftExpressionBridge}
 import org.apache.spark.sql.functions._
 
+import graft.expressions.SolarPosition
+
 /** Solar model F8-F11 (lib/process_solcast_historic_data.py:20-71) as
-  * pure Column expressions — fully codegen'd, no UDFs, distributable
-  * over any number of rows.
+  * Column expressions — fully codegen'd, no UDFs, distributable over
+  * any number of rows. The solar position is one native expression
+  * ([[graft.expressions.SolarPosition]]); the rest are Column
+  * arithmetic.
   *
   * The reference uses pvlib: NREL SPA solar position, Spencer
   * extraterrestrial radiation, Kasten-Young 1989 relative airmass,
@@ -19,66 +23,22 @@ import org.apache.spark.sql.functions._
   */
 object Solar {
 
-  private val DegToRad = math.Pi / 180.0
-  private val RadToDeg = 180.0 / math.Pi
-  /** earth mean radius / astronomical unit (parallax correction) */
-  private val EmrOverAu = 6371.01 / 149597890.0
-
-  /** Julian date from a timestamp column (UTC). */
-  def julianDate(ts: Column): Column =
-    unix_micros(ts).cast("double") / 86400.0e6 + lit(2440587.5)
-
-  /** elapsed days since J2000.0 */
-  private def j2000Days(ts: Column): Column = julianDate(ts) - lit(2451545.0)
-
   /** F8 — solar position (PSA ephemeris): returns a struct with
     * `zenith`, `apparent_zenith`, `elevation`, `azimuth` in degrees.
     * `lat`/`lon` in degrees (+N, +E). Refraction uses the reference
-    * defaults (1013.25 hPa scaled by `pressure` Pa, 12 °C).
+    * defaults (1013.25 hPa scaled by `pressure` Pa, 12 °C). One native
+    * expression per call ([[graft.expressions.SolarPosition]]), so the
+    * plan holds one node however often its fields are read.
     */
   def solarPosition(ts: Column, lat: Column, lon: Column,
                     pressurePa: Double = 101325.0,
-                    temperatureC: Double = 12.0): Column = {
-    val n = j2000Days(ts)
-    // decimal UT hour
-    val hour = (unix_micros(ts).cast("double") / 3.6e9) % 24.0
-    // ecliptic coordinates (radians)
-    val omega = lit(2.1429) - lit(0.0010394594) * n
-    val meanLon = lit(4.8950630) + lit(0.017202791698) * n
-    val meanAnom = lit(6.2400600) + lit(0.0172019699) * n
-    val eclLon = meanLon + lit(0.03341607) * sin(meanAnom) +
-      lit(0.00034894) * sin(lit(2.0) * meanAnom) - lit(0.0001134) -
-      lit(0.0000203) * sin(omega)
-    val eclObl = lit(0.4090928) - lit(6.2140e-9) * n +
-      lit(0.0000396) * cos(omega)
-    // celestial coordinates
-    val sinEclLon = sin(eclLon)
-    val ra0 = atan2(cos(eclObl) * sinEclLon, cos(eclLon))
-    val ra = when(ra0 < 0, ra0 + lit(2 * math.Pi)).otherwise(ra0)
-    val dec = asin(sin(eclObl) * sinEclLon)
-    // local hour angle
-    val gmst = lit(6.6974243242) + lit(0.0657098283) * n + hour
-    val lmst = (gmst * 15.0 + lon) * DegToRad
-    val ha = lmst - ra
-    val latR = lat * DegToRad
-    val cosLat = cos(latR); val sinLat = sin(latR)
-    val zen0 = acos(cosLat * cos(ha) * cos(dec) + sin(dec) * sinLat)
-    val az0 = atan2(-sin(ha), tan(dec) * cosLat - sinLat * cos(ha))
-    val azimuth = degrees(when(az0 < 0, az0 + lit(2 * math.Pi)).otherwise(az0))
-    // parallax correction
-    val zenith = degrees(zen0 + lit(EmrOverAu) * sin(zen0))
-    val elev = lit(90.0) - zenith
-    // Saemundsson refraction (as in NREL SPA / pvlib defaults):
-    // applied only when the sun is above the apparent horizon
-    val refrAt = lit((pressurePa / 100.0) / 1010.0) *
-      lit(283.0 / (273.0 + temperatureC)) * lit(1.02) /
-      (lit(60.0) * tan(radians(elev + lit(10.3) / (elev + lit(5.11)))))
-    val delta = when(elev >= lit(-1.0) * (lit(0.26667) + lit(0.5667)), refrAt)
-      .otherwise(lit(0.0))
-    val appZenith = lit(90.0) - (elev + delta)
-    struct(zenith.as("zenith"), appZenith.as("apparent_zenith"),
-      elev.as("elevation"), azimuth.as("azimuth"))
-  }
+                    temperatureC: Double = 12.0): Column =
+    GraftExpressionBridge.column(SolarPosition(
+      // each cast is a no-op (analyzer-removed) on the usual types
+      GraftExpressionBridge.expression(ts.cast("timestamp")),
+      GraftExpressionBridge.expression(lat.cast("double")),
+      GraftExpressionBridge.expression(lon.cast("double")),
+      pressurePa, temperatureC))
 
   /** F9 — extraterrestrial DNI, Spencer (1971) — pvlib
     * get_extra_radiation default (lib/process_solcast_historic_data.py:49). */

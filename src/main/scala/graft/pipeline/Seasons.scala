@@ -201,8 +201,8 @@ object Seasons {
     // (sparse → resampled → unified files); the parse outputs above
     // already are such scans (ParseStage.run returns its committed
     // output). The unify stages reference their telemetry input
-    // several times (grid bounds, dedup, the alignment select, the
-    // final join), and every lazy reference
+    // several times (the alignment select, the key-distinct
+    // broadcast, the final join), and every lazy reference
     // duplicates the ENTIRE upstream subtree in the plan: unbounded,
     // this 5-signal pipeline plans 300+ Exchange nodes (measured) and
     // Catalyst/AQE re-optimization of the duplicated tree dominates
@@ -261,12 +261,13 @@ object Seasons {
             SolarStage.withPoaEnergy(raw, site, start, end, periodSec)
           case None => SolarStage.withPoa(raw, site, periodSec)
         }
-        // same stage boundary for the processed forecast (10³ rows):
-        // unbounded, every stage of the forecast-unify write re-plans
-        // the solar-position expression trees under AQE
-        UnifyStages.unifyForecast(resampled, stageBoundary(f, "solcast"),
-          "timestamp", resamplePeriod, cfg.shiftBackLocalize,
-          keys = Seq("__dataset"))
+        // same stage boundary for the processed forecast (10³ rows),
+        // so every later plan reads it as one parquet scan. The
+        // resampled table already is its own telemetry grid (one row
+        // per dataset per tick, from its first bin to its last), so
+        // the forecast joins onto it without a re-grid.
+        UnifyStages.joinForecast(resampled, stageBoundary(f, "solcast"),
+          "timestamp", cfg.shiftBackLocalize, keys = Seq("__dataset"))
       case None => resampled
     }
     val withGps =

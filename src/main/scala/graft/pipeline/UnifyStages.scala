@@ -90,8 +90,18 @@ object UnifyStages {
     * (beyond ts) are joined back with a `solcast_` prefix. */
   def unifyForecast(telemetry: DataFrame, forecast: DataFrame, tsCol: String,
                     period: String, shiftBackLocalize: Boolean,
-                    keys: Seq[String] = Nil): DataFrame = {
-    val grid = telemetryGrid(telemetry, tsCol, period, keys)
+                    keys: Seq[String] = Nil): DataFrame =
+    joinForecast(telemetryGrid(telemetry, tsCol, period, keys), forecast,
+      tsCol, shiftBackLocalize, keys)
+
+  /** The join half of [[unifyForecast]], onto a telemetry table that
+    * already IS its [[telemetryGrid]]: one row per key per period tick
+    * from the key's first tick to its last. [[ResampleStage.run]]'s
+    * output is such a grid (its per-key dense bins), so the season
+    * driver joins the forecast onto it directly. */
+  def joinForecast(grid: DataFrame, forecast: DataFrame, tsCol: String,
+                   shiftBackLocalize: Boolean,
+                   keys: Seq[String] = Nil): DataFrame = {
     val shiftH = if (shiftBackLocalize) 3 else 0
     val valueCols = forecast.columns.filterNot(_ == tsCol).toSeq
     val aligned = alignForecast(grid.select((keys :+ tsCol).map(col): _*),

@@ -53,4 +53,11 @@ object GraftExpressionBridge {
     } catch {
       case _: java.util.concurrent.TimeoutException => false
     }
+
+  /** Generated classes Janino has compiled in this JVM so far (each
+    * compile records one sample of the codegen compile-time
+    * histogram; a codegen cache hit records none). `CodegenMetrics`
+    * is `private[spark]`, hence this bridge. */
+  def codegenCompiles: Long =
+    org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
 }

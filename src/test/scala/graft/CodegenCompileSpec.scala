@@ -2,10 +2,10 @@ package graft
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.CatalystTypeConverters
-import org.apache.spark.sql.catalyst.expressions.{BoundReference, Expression}
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, Expression, Literal}
 import org.apache.spark.sql.catalyst.expressions.codegen.GenerateUnsafeProjection
 import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.types.{ArrayType, DoubleType, LongType, StringType}
+import org.apache.spark.sql.types.{ArrayType, DoubleType, LongType, StringType, TimestampType}
 import org.apache.spark.unsafe.types.UTF8String
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -75,6 +75,11 @@ class CodegenCompileSpec extends AnyFunSuite {
       rowSArr(Array("ab", "ab", "ab", "cd", "cd", "ef"))),
     ("RollingFingerprint", RollingFingerprint(sarr),
       rowSArr(Array("fingerprint", "me"))),
+    // a null ts yields a non-null struct of null fields on both paths
+    ("SolarPosition", SolarPosition(
+      BoundReference(0, TimestampType, nullable = true),
+      Literal(-26.243602), Literal(-48.6417668), 101325.0, 12.0),
+      InternalRow(1580558400000000L)),
     ("SimhashSignature", SimhashSignature(sarr),
       rowSArr(Array("simhash", "this", "short", "text"))),
     ("WinnowSelect", WinnowSelect(

@@ -1,11 +1,14 @@
 package graft
 
 import java.sql.Timestamp
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import graft.functions.Solar
+import graft.pipeline.SolarStage
 
 class SolarSpec extends SparkSpec {
   import spark.implicits._
+  import SolarSpec.columnOracle
 
   def pos(utc: String, lat: Double, lon: Double,
           pressurePa: Double = 101325, tempC: Double = 12): (Double, Double, Double) = {
@@ -94,5 +97,130 @@ class SolarSpec extends SparkSpec {
     assert(energy > 6000 && energy < 11000, s"energy $energy")
     val maxPoa = poa.agg(max("poa")).collect()(0).getDouble(0)
     assert(maxPoa > 950 && maxPoa < 1010, s"max poa $maxPoa")
+  }
+
+  /** Runs `body` with every expression interpreted (no whole-stage
+    * or expression codegen); the session is shared across suites, so
+    * the previous settings come back afterwards. */
+  private def interpreted[A](body: => A): A = {
+    val keys = Seq("spark.sql.codegen.wholeStage" -> "false",
+      "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")
+    val saved = keys.map { case (k, _) => k -> spark.conf.getOption(k) }
+    keys.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  test("the native kernel equals the Column closed form bit for bit") {
+    // two years at a 7 min 1 s step (every second of the minute is
+    // hit), nights included, at the equator, 71°N, the 2020 site and
+    // the NREL Denver vector's site and atmosphere; plus a null ts
+    val sites = Seq(("equator", 0.0, 0.0, 101325.0, 12.0),
+      ("71N", 71.0, 25.8, 101325.0, 12.0),
+      ("2020 site", -26.243602, -48.6417668, 101325.0, 12.0),
+      ("Denver", 39.742476, -105.1786, 82000.0, 11.0))
+    val t0 = Timestamp.valueOf("2019-01-01 00:00:00").getTime * 1000L
+    val fields = Seq("zenith", "apparent_zenith", "elevation", "azimuth")
+    val dir = java.nio.file.Files.createTempDirectory("solar_oracle")
+    sites.zipWithIndex.foreach { case ((name, lat, lon, p, t), i) =>
+      val ts = spark.range(0L, 2L * 366 * 86400 / 421)
+        .select(timestamp_micros(lit(t0) + col("id") * 421000000L).as("ts"))
+        .union(Seq(Option.empty[Timestamp]).toDF("ts"))
+      // the oracle's tree outgrows the JVM's 64 KB method limit under
+      // codegen, so it runs interpreted, once, into parquet (doubles
+      // round-trip exactly); the kernel runs compiled beside it
+      val path = dir.resolve(s"site$i").toString
+      interpreted(ts.select(col("ts"),
+        columnOracle(col("ts"), lit(lat), lit(lon), p, t).as("o"))
+        .write.parquet(path))
+      val both = spark.read.parquet(path).select(col("o"),
+        Solar.solarPosition(col("ts"), lit(lat), lit(lon), p, t).as("k"))
+      val diff = both.filter(!fields.map(f =>
+        col(s"k.$f") <=> col(s"o.$f")).reduce(_ && _))
+      assert(diff.count() == 0, s"$name: ${diff.limit(3).collect().toSeq}")
+      val below = both.filter(col("k.elevation") < -0.83337).count()
+      assert(below > 0, s"$name: no row below the horizon")
+      val nulls = both.filter(col("k").isNotNull &&
+        fields.map(f => col(s"k.$f").isNull).reduce(_ && _)).count()
+      assert(nulls == 1, s"$name: the null-ts row")
+    }
+    // a site held in columns (no constant folding on either side)
+    val cols = Seq((Timestamp.valueOf("2020-02-01 12:34:56"), -26.24, -48.64),
+      (Timestamp.valueOf("2021-06-21 03:00:07"), 71.0, 25.8))
+      .toDF("ts", "lat", "lon")
+      .select(Solar.solarPosition(col("ts"), col("lat"), col("lon")).as("k"),
+        columnOracle(col("ts"), col("lat"), col("lon")).as("o"))
+    assert(cols.filter(!fields.map(f =>
+      col(s"k.$f") <=> col(s"o.$f")).reduce(_ && _)).count() == 0)
+  }
+
+  test("the processed forecast plans under 1,000 expression nodes") {
+    // the Column closed form copied every shared intermediate into
+    // the plan: 15,915 nodes for this stage
+    val dir = java.nio.file.Files.createTempDirectory("solar_plan")
+    val csv = dir.resolve("solcast.csv")
+    java.nio.file.Files.write(csv, ("PeriodEnd,PeriodStart,Period,Dni,Ghi,Dhi,Airmass,AlbedoDaily" +:
+      (0 until 4).map { i =>
+        val s = java.time.Instant.parse("2020-02-01T00:00:00Z").plusSeconds(i * 300L)
+        s"${s.plusSeconds(300)},$s,PT5M,${500 + i},${300 + i},${100 + i},1.5,0.06"
+      }).mkString("\n").getBytes)
+    val f = SolarStage.withPoaEnergy(
+      SolarStage.readSolcastCsv(spark, csv.toString),
+      SolarStage.Site(-26.243602, -48.6417668),
+      "2020-02-01 00:00:00Z", "2020-02-01 00:10:00Z", 300)
+    val nodes = f.queryExecution.optimizedPlan
+      .flatMap(_.expressions).map(_.collect { case e => e }.size).sum
+    info(s"expression nodes: $nodes")
+    assert(nodes < 1000, s"expression nodes: $nodes")
+    assert(f.count() == 3)
+  }
+}
+
+object SolarSpec {
+
+  /** The solar position as the Column closed form it was written in
+    * before the native kernel: the oracle
+    * [[graft.expressions.SolarPosition]] must equal bit for bit. */
+  def columnOracle(ts: Column, lat: Column, lon: Column,
+                   pressurePa: Double = 101325.0,
+                   temperatureC: Double = 12.0): Column = {
+    val DegToRad = math.Pi / 180.0
+    val EmrOverAu = 6371.01 / 149597890.0
+    val n = unix_micros(ts).cast("double") / 86400.0e6 + lit(2440587.5) -
+      lit(2451545.0)
+    val hour = (unix_micros(ts).cast("double") / 3.6e9) % 24.0
+    val omega = lit(2.1429) - lit(0.0010394594) * n
+    val meanLon = lit(4.8950630) + lit(0.017202791698) * n
+    val meanAnom = lit(6.2400600) + lit(0.0172019699) * n
+    val eclLon = meanLon + lit(0.03341607) * sin(meanAnom) +
+      lit(0.00034894) * sin(lit(2.0) * meanAnom) - lit(0.0001134) -
+      lit(0.0000203) * sin(omega)
+    val eclObl = lit(0.4090928) - lit(6.2140e-9) * n +
+      lit(0.0000396) * cos(omega)
+    val sinEclLon = sin(eclLon)
+    val ra0 = atan2(cos(eclObl) * sinEclLon, cos(eclLon))
+    val ra = when(ra0 < 0, ra0 + lit(2 * math.Pi)).otherwise(ra0)
+    val dec = asin(sin(eclObl) * sinEclLon)
+    val gmst = lit(6.6974243242) + lit(0.0657098283) * n + hour
+    val lmst = (gmst * 15.0 + lon) * DegToRad
+    val ha = lmst - ra
+    val latR = lat * DegToRad
+    val cosLat = cos(latR); val sinLat = sin(latR)
+    val zen0 = acos(cosLat * cos(ha) * cos(dec) + sin(dec) * sinLat)
+    val az0 = atan2(-sin(ha), tan(dec) * cosLat - sinLat * cos(ha))
+    val azimuth = degrees(when(az0 < 0, az0 + lit(2 * math.Pi)).otherwise(az0))
+    val zenith = degrees(zen0 + lit(EmrOverAu) * sin(zen0))
+    val elev = lit(90.0) - zenith
+    val refrAt = lit((pressurePa / 100.0) / 1010.0) *
+      lit(283.0 / (273.0 + temperatureC)) * lit(1.02) /
+      (lit(60.0) * tan(radians(elev + lit(10.3) / (elev + lit(5.11)))))
+    val delta = when(elev >= lit(-1.0) * (lit(0.26667) + lit(0.5667)), refrAt)
+      .otherwise(lit(0.0))
+    val appZenith = lit(90.0) - (elev + delta)
+    struct(zenith.as("zenith"), appZenith.as("apparent_zenith"),
+      elev.as("elevation"), azimuth.as("azimuth"))
   }
 }

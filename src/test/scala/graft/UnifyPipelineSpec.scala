@@ -21,6 +21,31 @@ class UnifyPipelineSpec extends SparkSpec {
     assert(grid.toSeq == Seq((0L, Some(1.0)), (1L, None), (2L, Some(3.0))))
   }
 
+  test("the resampled table is its own telemetry grid") {
+    // two datasets three days apart, each with gaps longer than the
+    // interpolation limit: the resample emits one row per dataset per
+    // tick from its first bin to its last, which is exactly the A4
+    // grid, so Seasons joins the forecast onto it without a re-grid
+    val day = 86400L
+    val rows: Seq[(Int, Timestamp, Option[Double], Option[Double])] =
+      Seq(0L, 1L, 2L, 95L, 96L, 300L).flatMap { s =>
+      Seq((0, ts(s), Some(s.toDouble), None),
+        (1, ts(3 * day + s + 7), None, Some(-s.toDouble)))
+    } ++ Seq((0, new Timestamp(2150), Some(9.5), Some(4.0)),
+      (1, new Timestamp((3 * day + 96) * 1000 + 420), Some(1.0), None))
+    val w = rows.toDF("__dataset", "timestamp", "a", "b")
+    Seq("100ms", "1s").foreach { period =>
+      val r = ResampleStage.run(w, Seq("a", "b"), period,
+        keys = Seq("__dataset"))
+      val g = UnifyStages.telemetryGrid(r, "timestamp", period,
+        keys = Seq("__dataset"))
+      assert(g.columns.toSeq == r.columns.toSeq, period)
+      assert(g.exceptAll(r).count() == 0 && r.exceptAll(g).count() == 0,
+        period)
+      assert(r.count() > 12, period)
+    }
+  }
+
   test("unifyForecast: interpolated onto grid, trailing ffill, solcast_ prefix (J5/J2)") {
     val tel = Seq((ts(0), 1.0), (ts(10), 2.0), (ts(20), 3.0), (ts(30), 4.0))
       .toDF("timestamp", "v")
@@ -385,10 +410,10 @@ class UnifyPipelineSpec extends SparkSpec {
     assert(textReaders.map(_._1.map(_.replaceAll(".*/", ""))).sortBy(_.toString) ==
       Seq(Some("parsed_plans_d0"), Some("parsed_plans_db0")),
       s"text-reading queries: ${textReaders.map(_._1)}")
-    // a coefficient of the solar-position closed form
-    // (graft.functions.Solar.solarPosition): only the processed-forecast
-    // boundary write evaluates it, no plan after it does
-    val solar = "0.0172019699"
+    // the solar-position kernel (graft.functions.Solar.solarPosition):
+    // only the processed-forecast boundary write evaluates it, no plan
+    // after it does
+    val solar = "graft_solar_position"
     val boundary = evs.indexWhere(_._1.exists(_.endsWith("stage_10s_solcast")))
     assert(boundary >= 0, s"no forecast boundary write: ${evs.flatMap(_._1)}")
     assert(evs(boundary)._2.contains(solar))
@@ -397,8 +422,9 @@ class UnifyPipelineSpec extends SparkSpec {
       s"solar expressions planned after the boundary: " +
         after.filter(_._2.contains(solar)).map(_._1))
     // with the parse lineage re-run by every later stage, this season
-    // ran 52 jobs (44 when each stage reads its committed input)
+    // ran 52 jobs, 44 when each stage reads its committed input, fewer
+    // once the forecast joins the resampled grid without a re-grid
     info(s"jobs: ${jobs.get}")
-    assert(jobs.get < 52, s"jobs: ${jobs.get}")
+    assert(jobs.get < 44, s"jobs: ${jobs.get}")
   }
 }
