@@ -21,10 +21,12 @@ import graft.sources.CanSchema.{Bit, FieldSpec, Schema, U16LE, U8}
   */
 object CanDecode {
 
-  /** Field-count threshold above which the decode takes its wide
-    * shapes: decodeLong's isolated decode Project and decodeWide's
-    * post-aggregation frame filter. Narrow schemas (the hot p00 path)
-    * keep the plain shapes. */
+  /** Field-count threshold that chooses decodeLong's shape: above it
+    * the decode expression sits in its own Project out of whole-stage
+    * codegen (the inline explode outgrows janino's 64 KB method limit
+    * at real season widths); at or below it the explode stays inline,
+    * which is faster on narrow schemas. decodeWide has one shape for
+    * every width. */
   private val WideFieldCount = 64
 
   private def wideSchema(schema: Schema): Boolean =
@@ -89,9 +91,8 @@ object CanDecode {
 
   /** One `when` branch per (module, topic), each over its
     * topic-specialized (payload, signature) — see
-    * [[effectiveForTopic]]. Callers fold these with `coalesce`
-    * (shallow codegen vs. a 136-deep CaseWhen chain); the wide path
-    * folds them in GROUPS first — see [[decodedGroupExprs]]. */
+    * [[effectiveForTopic]]. The caller folds these with one `coalesce`
+    * (shallow codegen vs. a 136-deep CaseWhen chain). */
   private def decodedBranches(schema: Schema,
                               mab20Workaround: Boolean): Seq[Column] =
     schema.allTopics.map { case (m, t) =>
@@ -194,62 +195,35 @@ object CanDecode {
       .withColumn("__pl", payloadE)
       .withColumn("__sig", sigE)
     val pl = col("__pl"); val sg = col("__sig")
-    // P5/P6: a frame survives iff some topic claims (sig, id) AND the
-    // payload length equals the Q3 declared size
-    val expectedLen = coalesce(schema.allTopics.map { case (m, t) =>
-      when(sg === m.signature && col("topic") === t.id,
-        lit(t.declaredSize * 2))
-    }: _*)
-    val aggs = schema.allTopics.flatMap { case (m, t) =>
-      // self-contained per-column predicate (includes the Q3 length
-      // check) so each branch is equivalent to decodeLong's by
-      // construction even if a schema carried duplicate (sig, topic)
-      // claims with different declared sizes
-      val owns = sg === m.signature && col("topic") === t.id &&
+    // P5/P6 with Q3: frame `owns` a topic's columns iff its (sig, id)
+    // names the topic and its payload length equals the declared size
+    val owns = schema.allTopics.map { case (m, t) =>
+      sg === m.signature && col("topic") === t.id &&
         length(pl) === t.declaredSize * 2
+    }
+    val aggs = schema.allTopics.zip(owns).flatMap { case ((m, t), o) =>
       t.fields.map { f =>
-        avg(when(owns, fieldValue(pl, f)))
+        avg(when(o, fieldValue(pl, f)))
           .as(s"${m.name}__${t.name}__${f.name}")
       }
     }
-    if (!wideSchema(schema)) {
-      // narrow schemas keep the original pushable row pre-filter —
-      // rejected frames never reach the aggregate, and the plan is
-      // exactly the pre-round-9 hot-path shape (p00)
-      prepped
-        .filter(length(pl) === expectedLen)
-        .groupBy((keys.map(col) :+ col("ts").as("timestamp")): _*)
-        .agg(aggs.head, aggs.tail: _*)
-    } else {
-      // Wide schemas: P5/P6 as a POST-aggregation group filter, not a
-      // row pre-filter — a pre-filter predicate gets pushed into the
-      // regex-generate's fused stage, where projection collapse
-      // re-derives topic/payload inline in every branch and the
-      // expression blows janino's 64 KB method limit (observed: the
-      // whole scan→generate→decode stage then silently de-fuses).
-      // Counting OWNED frames per group is value-identical
-      // to the pre-filter even when a schema carries duplicate
-      // (sig, topic) claims with different declared sizes: the
-      // predicate is the disjunction of the same per-claim owns tests
-      // the avg() columns use (NOT `length === expectedLen`, which
-      // would key survival to the first-listed claim's size), so a
-      // group survives iff ≥ 1 frame decodes under SOME claim, and
-      // avg() already ignores rejected frames' null contributions.
-      // The tiny count predicate cannot be pushed below the aggregate.
-      val anyOwns = schema.allTopics.map { case (m, t) =>
-        sg === m.signature && col("topic") === t.id &&
-          length(pl) === t.declaredSize * 2
-      }.reduce(_ || _)
-      val withN = aggs :+ sum(when(anyOwns, 1L).otherwise(0L)).as("__n_frames")
-      // aggregate-function splitting keeps every generated method of
-      // the fused partial aggregate under the 64 KB limit (measured up
-      // to ~1,600 signals)
-      prepped
-        .groupBy((keys.map(col) :+ col("ts").as("timestamp")): _*)
-        .agg(withN.head, withN.tail: _*)
-        .filter(col("__n_frames") > 0)
-        .drop("__n_frames")
-    }
+    // A group survives iff one of its frames decodes; avg() already
+    // ignores rejected frames' nulls. The filter sits AFTER the
+    // aggregate, not on the rows: a row pre-filter gets pushed into the
+    // regex-generate's fused stage, where projection collapse re-derives
+    // topic/payload inline per branch and, at season widths, blows
+    // janino's 64 KB method limit (the whole scan→generate→decode stage
+    // then silently de-fuses). The count predicate cannot be pushed
+    // below the aggregate. Aggregate-function splitting keeps every
+    // generated method of the fused partial aggregate under the 64 KB
+    // limit (measured up to ~1,600 signals).
+    val withN = aggs :+
+      sum(when(owns.reduce(_ || _), 1L).otherwise(0L)).as("__n_frames")
+    prepped
+      .groupBy((keys.map(col) :+ col("ts").as("timestamp")): _*)
+      .agg(withN.head, withN.tail: _*)
+      .filter(col("__n_frames") > 0)
+      .drop("__n_frames")
   }
 
   /** A1 (lib/canparser.py:222-239) — long → wide signal matrix:

@@ -1134,9 +1134,6 @@ object Dedup {
     // explicitly below once the final labels are materialized.
     val deepUpstream = pairs.queryExecution.optimizedPlan
       .collect { case p => p }.length > CheckpointUpstreamNodes
-    if (sys.env.contains("GRAFT_CC_LOG")) System.err.println(
-      s"[cc] upstream nodes = ${pairs.queryExecution.optimizedPlan
-        .collect { case p => p }.length}, checkpoint = $deepUpstream")
     val edgesPlan = pairs
       .select(explode(array(
         struct(col("a").as("x"), col("b").as("y")),
@@ -2101,13 +2098,5 @@ object Dedup {
     * checkpointing (md5-sketch collapse + banding + union) exceed 40
     * — and the per-round plan-string cost the checkpoint kills grows
     * with exactly this count. */
-  private[operators] val CheckpointUpstreamNodes =
-    sys.env.get("GRAFT_CC_NODES")
-      .flatMap(v => scala.util.Try(v.toInt).toOption.orElse {
-        // a malformed override must not become an
-        // ExceptionInInitializerError poisoning every Dedup call
-        System.err.println(s"[graft] ignoring malformed GRAFT_CC_NODES='$v'")
-        None
-      })
-      .getOrElse(32)
+  private[operators] val CheckpointUpstreamNodes = 32
 }

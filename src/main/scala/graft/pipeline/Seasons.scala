@@ -143,10 +143,10 @@ object Seasons {
           /** when set, receives the per-file parse reports — each file
             * timed with its OWN bounded run (canparser_sparse_report.txt
             * semantics, lib/canparser.py:346-356) while the dataset has
-            * ≤ `maxTimedFiles` files; [[writeParseReport]] is the
-            * file-writing sink matching the reference's report file */
-          reportSink: Option[Seq[ParseStage.Report] => Unit] = None,
-          maxTimedFiles: Int = 16): DataFrame = {
+            * at most 16 files ([[ParseStage.report]]'s default);
+            * [[writeParseReport]] is the file-writing sink matching the
+            * reference's report file */
+          reportSink: Option[Seq[ParseStage.Report] => Unit] = None): DataFrame = {
     val schema = CanSchema.load(cfg.canIdsPath)
     def parse(d: DatasetFiles, tag: String) =
       ParseStage.run(spark, d.candumpGlob, schema,
@@ -175,8 +175,7 @@ object Seasons {
           // the S9 skip-if-exists and time a parquet read instead)
           perFilePipeline = Some(f => ParseStage.run(spark, f, schema,
             offsetMicros = d.offsetMicros,
-            mab20Workaround = cfg.mab20Workaround)),
-          maxTimedFiles = maxTimedFiles)
+            mab20Workaround = cfg.mab20Workaround)))
       })
     }
     val wides = mainParsed.map(_._2)

@@ -57,6 +57,19 @@ class GraftSessionSpec extends SparkSpec {
         offenders.mkString(", "))
   }
 
+  test("environment variables are read only by the session factory and the two harness mains") {
+    val envRead = """\bsys\s*\.\s*env\b|\bSystem\s*\.\s*getenv\b""".r
+    val readers = Set("GraftSession.scala", "Bench.scala", "Census.scala")
+    val files = scalaFiles("src/main/scala")
+    assert(readers.forall(r => files.exists(_.getFileName.toString == r)))
+    val offenders = files
+      .filterNot(f => readers(f.getFileName.toString))
+      .filter(f => envRead.findFirstIn(Files.readString(f)).isDefined)
+    assert(offenders.isEmpty,
+      s"pass settings as parameters or constants, not env reads in: " +
+        offenders.mkString(", "))
+  }
+
   test("no foldLeft adds or renames one column per step on the season path") {
     // each withColumn/withColumnRenamed returns a new Dataset that
     // re-analyzes the whole plan: a fold over n columns analyzes it n

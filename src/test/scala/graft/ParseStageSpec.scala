@@ -257,6 +257,21 @@ class ParseStageSpec extends SparkSpec {
         s"leaked back into it:\n${defusedGenerate.headOption.map(_.take(800))}")
   }
 
+  /** Physical operator names of an executed plan in pre-order, through
+    * AQE's query stages; codegen stage wrappers are left out, since
+    * whole-stage codegen's field cap places them by schema width. */
+  private def operatorNames(df: org.apache.spark.sql.DataFrame): Seq[String] = {
+    import org.apache.spark.sql.execution.{InputAdapter, SparkPlan, WholeStageCodegenExec}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    def walk(p: SparkPlan): Seq[String] = p match {
+      case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
+      case q: QueryStageExec => walk(q.plan)
+      case _: WholeStageCodegenExec | _: InputAdapter => p.children.flatMap(walk)
+      case _ => p.nodeName +: p.children.flatMap(walk)
+    }
+    walk(df.queryExecution.executedPlan)
+  }
+
   test("schema-width x mab20 matrix: decodeLong/decodeWide never hit the 64 KB fallback") {
     // The round-14 found defect: with mab20Workaround=true, decodeLong's
     // wide path inlined effectivePayloadSig's CASE into every one of the
@@ -264,46 +279,68 @@ class ParseStageSpec extends SparkSpec {
     // CSE across `when` branches), so even the barrier-isolated decode
     // Project blew janino's 64 KB limit and ran INTERPRETED (~20x
     // slower) — hit by the streamed 2020-season decode
-    // (StreamingParse.parsedFrames). Fixed by materializing __pl/__sig
-    // ONCE in their own barrier-separated prep Project (the decodeWide
-    // discipline). Pinned here across the full matrix the prior probes
-    // missed: {decodeLong, decodeWide} x {mab20 on, off} on the real
-    // wide 2020 schema — zero CodeGenerator compile errors AND the
-    // regex-generate stage stays fused.
-    import org.apache.spark.sql.functions.{col, input_file_name, lit}
+    // (StreamingParse.parsedFrames). Fixed by specializing the mab20
+    // payload/signature per topic branch (CanDecode.effectiveForTopic),
+    // so no CASE replicates into the branches. Pinned here across the
+    // full matrix: {decodeLong, decodeWide} x {mab20 on, off} x {the
+    // 5-field fixture, its mab variant, the real wide 2020 schema} —
+    // zero CodeGenerator compile errors AND the regex-generate stage
+    // stays fused. decodeWide runs one plan shape at every width.
+    import org.apache.spark.sql.functions.{col, input_file_name}
     val s20 = graft.sources.CanSchema.load(SeasonSchemas.path("2020"))
-    val dir = Files.createTempDirectory("cgprobe_mab20")
-    Files.write(dir.resolve("s.log"), ((0 until 40).map { i =>
-      f"(${1580515200L + i}%d.000000) can0 011#E4360F0000780216"
-    } ++ (0 until 10).map { i =>
-      // topic 0x41=65: only decodable under the mab20 resignature+truncate
-      f"(${1580515240L + i}%d.000000) can0 041#000400"
-    }).mkString("\n").getBytes)
-    val lines = spark.read.text(dir.toString + "/*.log")
-      .select(col("value").as("line"), input_file_name().as("file"))
-    for (mab <- Seq(false, true)) {
+    // (name, schema, a frame that decodes under it, its field count);
+    // every schema also sees 10 topic-65 frames that only decode under
+    // the mab20 resignature+truncate, into a 2-field topic
+    val cases = Seq(
+      ("fixture", CanFixtures.schema, "021#11E803110300", 5, false),
+      ("fixtureMab", CanFixtures.schemaMab, "021#11E803110300", 5, true),
+      ("2020", s20, "011#E4360F0000780216", 5, true))
+    val wideOps = for ((name, schema, frame, nFields, hasPumps) <- cases;
+                       mab <- Seq(false, true)) yield {
+      val dir = Files.createTempDirectory(s"cgprobe_$name")
+      Files.write(dir.resolve("s.log"), ((0 until 40).map { i =>
+        f"(${1580515200L + i}%d.000000) can0 $frame"
+      } ++ (0 until 10).map { i =>
+        f"(${1580515240L + i}%d.000000) can0 041#000400"
+      }).mkString("\n").getBytes)
+      val lines = spark.read.text(dir.toString + "/*.log")
+        .select(col("value").as("line"), input_file_name().as("file"))
       val frames = graft.sources.Candump.framesFromLines(lines)
+      val pumps = mab && hasPumps
+      val tag = s"$name, mab20=$mab"
       val (errL, disL) = codegenProbe {
         val n = graft.operators.CanDecode
-          .decodeLong(frames, s20, mab20Workaround = mab).count()
-        assert(n == (if (mab) 40 * 5 + 10 * 2 else 40 * 5))
+          .decodeLong(frames, schema, mab20Workaround = mab).count()
+        assert(n == 40 * nFields + (if (pumps) 10 * 2 else 0), tag)
       }
       assert(errL.isEmpty,
-        s"decodeLong(mab20=$mab) hit codegen fallback:\n${errL.headOption.map(_.take(800))}")
+        s"decodeLong($tag) hit codegen fallback:\n${errL.headOption.map(_.take(800))}")
       val defusedL = disL.filter(_.contains("Generate "))
       assert(defusedL.isEmpty,
-        s"decodeLong(mab20=$mab) de-fused the generate stage:\n${defusedL.headOption.map(_.take(800))}")
+        s"decodeLong($tag) de-fused the generate stage:\n${defusedL.headOption.map(_.take(800))}")
+      val wide = graft.operators.CanDecode
+        .decodeWide(frames, schema, mab20Workaround = mab, keys = Seq("file"))
       val (errW, disW) = codegenProbe {
-        val n = graft.operators.CanDecode
-          .decodeWide(frames, s20, mab20Workaround = mab,
-            keys = Seq("file")).count()
-        assert(n == (if (mab) 50 else 40))
+        // collect, not count: count() prunes every signal column
+        assert(wide.collect().length == 40 + (if (pumps) 10 else 0), tag)
       }
       assert(errW.isEmpty,
-        s"decodeWide(mab20=$mab) hit codegen fallback:\n${errW.headOption.map(_.take(800))}")
+        s"decodeWide($tag) hit codegen fallback:\n${errW.headOption.map(_.take(800))}")
       val defusedW = disW.filter(_.contains("Generate "))
       assert(defusedW.isEmpty,
-        s"decodeWide(mab20=$mab) de-fused the generate stage:\n${defusedW.headOption.map(_.take(800))}")
+        s"decodeWide($tag) de-fused the generate stage:\n${defusedW.headOption.map(_.take(800))}")
+      (tag, operatorNames(wide))
+    }
+    // one decodeWide shape: the fixture width runs the operator sequence
+    // of the 2020 width (the post-aggregation frame filter, no row
+    // pre-filter below the aggregate)
+    val shapes = wideOps.toMap
+    for (mab <- Seq(false, true); name <- Seq("fixture", "fixtureMab")) {
+      val ref = shapes(s"2020, mab20=$mab")
+      assert(ref.nonEmpty)
+      assert(shapes(s"$name, mab20=$mab") == ref,
+        s"decodeWide($name, mab20=$mab) plan differs from the 2020 width's:\n" +
+          s"${shapes(s"$name, mab20=$mab").mkString(" > ")}\nvs\n${ref.mkString(" > ")}")
     }
   }
 }

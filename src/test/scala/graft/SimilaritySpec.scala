@@ -171,35 +171,6 @@ class SimilaritySpec extends SparkSpec {
     assert(edge.forall(r => r.getLong(0) == 0L))
   }
 
-  test("SQL surface: graft_dot / graft_hyperplane_sig registered functions") {
-    GraftFunctions.register(spark)
-    val d = spark.sql("SELECT graft_dot(array(1.0D, 2.0D), array(3.0D, 4.0D)) v")
-      .collect()(0).getDouble(0)
-    assert(d == 11.0)
-    // SQL and Column API agree on the signature
-    val vecs = emb.limit(50).select($"vec_id",
-      transform($"embedding", _.cast("double")).as("v"))
-    vecs.createOrReplaceTempView("hp_vecs")
-    val viaSql = spark.sql(
-        "SELECT vec_id, graft_hyperplane_sig(v, 12) s FROM hp_vecs")
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val viaCol = vecs.select($"vec_id",
-        Similarity.hyperplaneSignature($"v", 12).as("s"))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(viaSql == viaCol)
-    // non-literal plane count is rejected at analysis, not silently run
-    intercept[Exception] {
-      spark.sql("SELECT graft_hyperplane_sig(v, CAST(vec_id AS INT)) FROM hp_vecs")
-        .collect()
-    }
-    // winnow over a literal hash array: [5,3,3,7] w=2 → window mins
-    // at pos 2 ([5,3]), pos 3 ([3,3] rightmost tie), pos 3 ([3,7])
-    val wn = spark.sql(
-        "SELECT graft_winnow(array(5L, 3L, 3L, 7L), 2) v")
-      .collect()(0).getSeq[Int](0)
-    assert(wn == Seq(2, 3))
-  }
-
   test("semantic stratified sample: per-cell cap, cluster-true assignment") {
     // ids 1..3 are the anchors (basis vectors); 4..15 sit near one
     // basis each, so assignment is unambiguous; perStratum caps each
