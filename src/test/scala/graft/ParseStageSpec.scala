@@ -288,9 +288,10 @@ class ParseStageSpec extends SparkSpec {
     // stays fused. decodeWide runs one plan shape at every width.
     import org.apache.spark.sql.functions.{col, input_file_name}
     val s20 = graft.sources.CanSchema.load(SeasonSchemas.path("2020"))
-    // (name, schema, a frame that decodes under it, its field count);
-    // every schema also sees 10 topic-65 frames that only decode under
-    // the mab20 resignature+truncate, into a 2-field topic
+    // (name, schema, a frame that decodes under it, its field count,
+    // whether the schema has the 2-field topic that mab20's
+    // resignature+truncate maps topic 65 into); every schema also sees
+    // 10 topic-65 frames, which decode only under that workaround
     val cases = Seq(
       ("fixture", CanFixtures.schema, "021#11E803110300", 5, false),
       ("fixtureMab", CanFixtures.schemaMab, "021#11E803110300", 5, true),
